@@ -2,7 +2,7 @@
 """Run one benchmark workload against the engine checked out beside this
 directory, and print its result as the last line of standard output.
 
-    python3 perfbench/run.py --workload gmall_chain --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload gmall_chain --seed 1 --seconds 5 --trace 0
 
 The first run in a checkout builds the engine and the benchmark from
 source with sbt (offline) and caches the runtime classpath under

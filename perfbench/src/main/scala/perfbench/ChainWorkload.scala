@@ -69,24 +69,18 @@ object ChainWorkload extends Workload {
     ctx.setupDone()
     val span = ctx.closedLoop("chain")(op)
 
-    if (!ctx.traceRun) {
-      val ms = ctx.okMs("chain")
-      ctx.e2e += Metric("op_p50_ms", Stats.median(ms), "ms", ms.size)
-      ctx.e2e += Metric("cpu_ms_per_op", Stats.median(ctx.ok("chain").map(_.cpuMs)), "ms", ms.size)
-      ctx.e2e += Metric("rate_per_s", ms.size * days.head.truth.logLines.toDouble / span,
-        "1/s", ms.size)
-    } else {
+    if (!ctx.traceRun) ctx.closedLoopMetrics("chain", span)
+    else {
       val folds = Fold(ctx.trace)
-      val t = days.head.truth
       val raw = days.map(d => d.truth.logBytes + d.truth.dbBytes).sum.toDouble / Days
-      ctx.layer ++= gmallLayerMetrics(folds, t, raw)
+      ctx.layer ++= gmallLayerMetrics(folds, days.head.truth)
       ctx.layer ++= Layers.common(ctx, folds, "chain", raw)
     }
   }
 
   /** The gmall layer metrics; rows are counted from the write tasks'
     * output records under each layer's spans. */
-  def gmallLayerMetrics(folds: Seq[OpFold], t: DayTruth, rawBytes: Double): Seq[Metric] = {
+  def gmallLayerMetrics(folds: Seq[OpFold], t: DayTruth): Seq[Metric] = {
     def ms(s: String) = Fold.layerMs(folds, s)
     def rows(s: String) = Fold.layerSpark(folds, s)(_.outRecords.toDouble)
     val dirty = rows("BaseLog:dirty")
@@ -152,7 +146,14 @@ object ChainWorkload extends Workload {
       val facts = DbRouter.writeBatch(routed, dimRoot.getPath)
       tr.span("DbRouter:facts")(facts.write.mode("overwrite").partitionBy("topic").parquet(p("dwd_db")))
     }
-    def topic(t: String, schema: StructType) = typed(spark.read.parquet(p(s"dwd_db/topic=$t")), schema)
+    // a topic no row was routed to this day has no directory: read it empty
+    def values(t: String): DataFrame = {
+      val dir = new File(p(s"dwd_db/topic=$t"))
+      if (dir.isDirectory) spark.read.parquet(dir.getPath)
+      else spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        StructType(Seq(org.apache.spark.sql.types.StructField("value", StringType))))
+    }
+    def topic(t: String, schema: StructType) = typed(values(t), schema)
     def dim(t: String, schema: StructType) = {
       val df = spark.read.parquet(new File(dimRoot, t).getPath)
       df.select(schema.fields.toIndexedSeq.filter(f => df.columns.contains(f.name))
@@ -193,7 +194,7 @@ object ChainWorkload extends Workload {
         .select(col("page.item").cast("long").as("sku_id"), col("ts"))
       val displays = spark.read.parquet(p("dwd/dwd_display_log")).filter(col("item_type") === "sku_id")
         .select(col("item").cast("long").as("sku_id"), col("ts"))
-      val skuTs = (t: String) => spark.read.parquet(p(s"dwd_db/topic=$t"))
+      val skuTs = (t: String) => values(t)
         .select(from_json(col("value"), MapType(StringType, StringType)).as("m"))
         .select(col("m.sku_id").cast("long").as("sku_id"), ms("m.create_time").as("ts"),
           col("m.order_id").cast("long").as("order_id"),

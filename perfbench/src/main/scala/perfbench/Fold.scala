@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 /** Spark task/job totals over a set of jobs. */
 final class SparkTot {
-  var jobs = 0L; var jobMs = 0.0; var stages = 0L; var tasks = 0L
+  var jobs = 0L; var stages = 0L; var tasks = 0L
   var runMs = 0L; var cpuMs = 0.0; var gcMs = 0L; var schedMs = 0L
   var inBytes = 0L; var shufW = 0L; var shufR = 0L; var spill = 0L
   var outBytes = 0L; var outRecords = 0L
@@ -12,7 +12,6 @@ final class SparkTot {
 
   def add(j: JobRec, st: collection.Map[Int, StageAgg]): Unit = {
     jobs += 1
-    if (j.endMs >= j.startMs) jobMs += j.endMs - j.startMs
     j.stages.flatMap(st.get).foreach { a =>
       stages += 1; tasks += a.tasks; runMs += a.runMs; cpuMs += a.cpuNs / 1e6
       gcMs += a.gcMs; schedMs += a.schedDelayMs; inBytes += a.inBytes
@@ -29,7 +28,7 @@ final class SparkTot {
 
 /** Per-op breakdown folded from a [[Trace]]: layer span times, the Spark
   * work under each layer, driver gaps and planning time. */
-final case class OpFold(id: Int, name: String, ms: Double,
+final case class OpFold(ms: Double,
     layerMs: Map[String, Double], layerSpark: Map[String, SparkTot],
     spark: SparkTot, jobUnionMs: Double, planningMs: Double,
     attributedMs: Double)
@@ -77,7 +76,7 @@ object Fold {
         walk(c)
       }
       walk(op)
-      OpFold(op.op, op.name, op.ms, layerMs.toMap, perSpan.toMap, total,
+      OpFold(op.ms, layerMs.toMap, perSpan.toMap, total,
         unionMs(opJobs.map(j => (j.startMs.toDouble,
           if (j.endMs >= j.startMs) j.endMs.toDouble else o1)).toSeq),
         unionMs(t.plans.filter(p => p.startMs >= o0 - 1 && p.startMs <= o1 + 1)

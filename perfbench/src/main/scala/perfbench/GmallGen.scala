@@ -9,7 +9,10 @@ import scala.collection.mutable.ArrayBuffer
 final case class DayTruth(day: Int, yyyymmdd: Int, logLines: Int, logBytes: Long,
     dirty: Int, starts: Int, pages: Int, displays: Int, uv: Int,
     envelopes: Int, dbBytes: Long, routedFacts: Int, routedDims: Int,
-    details: Int, matchedDetails: Int, gmvCents: Long)
+    details: Int, matchedDetails: Int, gmvCents: Long) {
+  def json: String = productElementNames.zip(productIterator)
+    .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
+}
 
 /** Seeded generator of the reference's raw inputs: app-log JSON lines (the
   * `ods_base_log` topic) and Maxwell/Flink-CDC style envelopes (the
@@ -65,22 +68,23 @@ object GmallGen {
       .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.ofEpochMilli(ms))
 
   /** Counts over a batch of generated log lines. */
-  final class LogCounts {
+  private final class LogCounts {
     var dirty = 0; var starts = 0; var pages = 0; var displays = 0
     val pageMids = scala.collection.mutable.HashSet.empty[String]
   }
 
-  /** Log lines of `devices` devices with events in [t0, t0 + spanMs).
-    * `ts` of each event is its creation time. */
-  def logLines(rnd: SplittableRandom, devices: Int, midBase: Int, t0: Long,
+  /** Log lines of `devices` devices, each starting at a random time in
+    * [t0, t0 + spanMs) and logging `eventsPerDevice` events a few seconds
+    * apart. `ts` of each event is its creation time. */
+  private def logLines(rnd: SplittableRandom, devices: Int, t0: Long,
       spanMs: Long, eventsPerDevice: Int, c: LogCounts): ArrayBuffer[String] = {
     val out = ArrayBuffer.empty[String]
     var d = 0
     while (d < devices) {
-      val mid = s"mid_${midBase + d}"
+      val mid = s"mid_$d"
       val isNew = rnd.nextInt(10) < 3
       val common = s"""{"ar":"${areas(rnd.nextInt(areas.size))}","ba":"Xiaomi","ch":"${channels(rnd.nextInt(channels.size))}","is_new":"${if (isNew) 1 else 0}","md":"Xiaomi 9","mid":"$mid","os":"Android 11.0","uid":"${rnd.nextInt(Users) + 1}","vc":"${versions(rnd.nextInt(versions.size))}"}"""
-      var ts = t0 + (if (spanMs > 60000L) rnd.nextLong(spanMs - 60000L) else rnd.nextLong(math.max(1L, spanMs)))
+      var ts = t0 + rnd.nextLong(spanMs)
       var e = 0
       var last: String = null
       while (e < eventsPerDevice) {
@@ -120,7 +124,7 @@ object GmallGen {
   /** Replace one start line in six with a dirty one: cut mid-object (not
     * JSON) or well-formed JSON without `ts`. Only start lines are dirtied,
     * so the page truth stays exact. */
-  def dirty(rnd: SplittableRandom, lines: ArrayBuffer[String], c: LogCounts): Unit = {
+  private def dirty(rnd: SplittableRandom, lines: ArrayBuffer[String], c: LogCounts): Unit = {
     var i = 0
     while (i < lines.length) {
       val l = lines(i)
@@ -134,7 +138,7 @@ object GmallGen {
     }
   }
 
-  def shuffle[T](rnd: SplittableRandom, xs: ArrayBuffer[T]): Unit = {
+  private def shuffle[T](rnd: SplittableRandom, xs: ArrayBuffer[T]): Unit = {
     var i = xs.length - 1
     while (i > 0) {
       val j = rnd.nextInt(i + 1)
@@ -184,14 +188,14 @@ object GmallGen {
   }
 
   /** One day: `logDir` gets the log lines in `files` parts, `dbDir` the
-    * CDC envelopes. */
+    * CDC envelopes, and `truth.json` beside them the day's ground truth. */
   def writeDay(logDir: File, dbDir: File, seed: Long, day: Int, logLines: Int,
       files: Int = 4): DayTruth = {
     val rnd = new SplittableRandom(seed * 1000003L + day)
     val t0 = Epoch0 + day * DayMs
     val c = new LogCounts
     val perDevice = 20
-    val lines = this.logLines(rnd, logLines / perDevice, 0, t0, DayMs - 3600000L, perDevice, c)
+    val lines = this.logLines(rnd, logLines / perDevice, t0, DayMs - 3600000L, perDevice, c)
     dirty(rnd, lines, c)
     shuffle(rnd, lines)
     val per = (lines.length + files - 1) / files
@@ -272,8 +276,10 @@ object GmallGen {
       writeLines(new File(dbDir, f"part-$i%05d.json"), part)
     }.sum
 
-    DayTruth(day, yyyymmdd(day), lines.length, logBytes, c.dirty, c.starts, c.pages,
+    val truth = DayTruth(day, yyyymmdd(day), lines.length, logBytes, c.dirty, c.starts, c.pages,
       c.displays, c.pageMids.size, env.length, dbBytes, routedFacts, routedDims,
       details, matched, gmv)
+    writeLines(new File(logDir.getParentFile, "truth.json"), Seq(truth.json))
+    truth
   }
 }

@@ -12,22 +12,12 @@ object Layers {
     "DwsStats.visitor_ms" -> "ms", "DwsStats.product_ms" -> "ms", "DwsStats.keyword_ms" -> "ms",
     "DwsStats.province_ms" -> "ms", "DwsStats.rows_out" -> "count",
     "ServingApi.write_ms" -> "ms", "ServingApi.gmv_ms" -> "ms", "ServingApi.rows_out" -> "count",
-    "stream.batches" -> "count", "stream.trigger_ms" -> "ms", "stream.add_batch_ms" -> "ms",
-    "stream.query_planning_ms" -> "ms", "stream.latest_offset_ms" -> "ms",
-    "stream.wal_commit_ms" -> "ms", "stream.commit_offsets_ms" -> "ms",
-    "stream.state_commit_ms" -> "ms", "stream.state_rows" -> "count",
-    "stream.state_mem_bytes" -> "B", "stream.backlog_events_max" -> "count",
-    "stream.backlog_events_end" -> "count", "stream.gen_late_ms" -> "ms",
-    "stream.freshness_p90_ms" -> "ms", "stream.add_batch_us_per_event" -> "us",
     "Versioned.merge_ms" -> "ms", "Versioned.delete_ms" -> "ms", "Versioned.compact_ms" -> "ms",
     "Versioned.read_points_ms" -> "ms", "Versioned.read_as_of_ms" -> "ms",
     "Versioned.changes_ms" -> "ms", "Versioned.jobs_per_write" -> "count",
     "Versioned.jobs_per_read" -> "count", "Versioned.files_scanned_per_lookup" -> "count",
     "Versioned.files_live" -> "count", "Versioned.files_written_per_commit" -> "count",
     "Versioned.bytes_written_per_user_byte" -> "ratio",
-    "Dedup.ms" -> "ms", "Dedup.planted_recall" -> "ratio", "Bpe.train_ms" -> "ms",
-    "Bpe.encode_ms" -> "ms", "Bpe.jobs" -> "count", "Similarity.train_ms" -> "ms",
-    "Similarity.topk_ms" -> "ms", "Similarity.recall_at_k" -> "ratio",
     "spark.jobs" -> "count", "spark.job_ms" -> "ms", "spark.driver_gap_ms" -> "ms",
     "spark.planning_ms" -> "ms", "spark.stages" -> "count", "spark.tasks" -> "count",
     "spark.task_run_ms" -> "ms", "spark.task_cpu_ms" -> "ms", "spark.gc_ms" -> "ms",

@@ -18,15 +18,19 @@ trait Workload {
   def run(ctx: Ctx): Unit
 }
 
-/** One op sample: wall time, and the JVM's CPU time over the same span
-  * (all threads). `traced` ops run with the tracer's listeners attached. */
-final case class Sample(kind: String, ms: Double, cpuMs: Double, ok: Boolean, traced: Boolean)
+/** One op sample: wall time, CPU time of the Java threads, and CPU time of
+  * the whole process (adding the JVM's compiler and GC threads) over the
+  * same span. `traced` ops run with the tracer's listeners attached. */
+final case class Sample(kind: String, ms: Double, cpuMs: Double, procCpuMs: Double,
+    ok: Boolean, traced: Boolean)
 
 final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
     val seconds: Int, val traceRun: Boolean, val trace: Trace, jvmStartMs: Long) {
   val samples = ArrayBuffer.empty[Sample]
   val e2e = ArrayBuffer.empty[Metric]
   val layer = ArrayBuffer.empty[Metric]
+  /** Measured but not gated: printed and kept in the run record only. */
+  val info = ArrayBuffer.empty[Metric]
   val notes = ArrayBuffer.empty[String]
   var setupS: Double = Double.NaN
 
@@ -54,7 +58,8 @@ final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
     val deadline = t0 + seconds * 1000000000L
     var i = 0
     var end = t0
-    while (System.nanoTime() < deadline) {
+    // a traced run needs one traced and one untraced op for the overhead
+    while (System.nanoTime() < deadline || (traceRun && i < 2)) {
       samples += timedOp(kind, traceRun && i % 2 == 0)(body(i))
       end = System.nanoTime()
       i += 1
@@ -68,16 +73,19 @@ final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
     trace.setOn(traced)
     val t = System.nanoTime()
     val c = Machine.cpuMs()
+    val jc = Machine.threadCpu()
     try {
-      val (check, _) = trace.op(kind)(op)
+      val check = trace.op(kind)(op)
       val ms = (System.nanoTime() - t) / 1e6
       val cpu = Machine.cpuMs() - c
+      val jcpu = Machine.threadCpuMsSince(jc)
       val ok = try check() catch { case e: Exception => note(kind, e); false }
-      Sample(kind, ms, cpu, ok, traced)
+      Sample(kind, ms, jcpu, cpu, ok, traced)
     } catch {
       case e: Exception =>
         note(kind, e)
-        Sample(kind, (System.nanoTime() - t) / 1e6, Machine.cpuMs() - c, ok = false, traced)
+        Sample(kind, (System.nanoTime() - t) / 1e6, Machine.threadCpuMsSince(jc),
+          Machine.cpuMs() - c, ok = false, traced)
     }
   }
 
@@ -89,12 +97,24 @@ final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
 
   /** The untraced, successful samples of one op kind. */
   def ok(kind: String): Seq[Sample] = samples.filter(s => s.kind == kind && s.ok && !s.traced).toSeq
-  def okMs(kind: String): Seq[Double] = ok(kind).map(_.ms)
 
-  /** In a traced run: median traced over median untraced op time, -1. */
+  /** The end-to-end figures of a closed loop: the median CPU time per op
+    * (gated), and the median and quartiles of wall time per op and the ops
+    * per second (recorded). */
+  def closedLoopMetrics(kind: String, spanS: Double): Unit = {
+    val s = ok(kind)
+    val ms = s.map(_.ms)
+    e2e += Metric("cpu_ms_per_op", Stats.median(s.map(_.cpuMs)), "ms", s.size)
+    info += Metric("wall_p50_ms", Stats.median(ms), "ms", s.size)
+    info += Metric("wall_p25_ms", Stats.quantile(ms, 0.25), "ms", s.size)
+    info += Metric("wall_p75_ms", Stats.quantile(ms, 0.75), "ms", s.size)
+    info += Metric("ops_per_s", s.size / spanS, "1/s", s.size)
+  }
+
+  /** In a traced run: median CPU time of traced over untraced ops, -1. */
   def overhead(kind: String): Double = {
-    val tr = samples.filter(s => s.kind == kind && s.ok && s.traced).map(_.ms).toSeq
-    val un = okMs(kind)
+    val tr = samples.filter(s => s.kind == kind && s.ok && s.traced).map(_.cpuMs).toSeq
+    val un = ok(kind).map(_.cpuMs)
     if (tr.isEmpty || un.isEmpty) 0.0 else Stats.median(tr) / Stats.median(un) - 1.0
   }
 }
@@ -102,9 +122,7 @@ final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
 object Main {
   private val workloads: Map[String, Workload] = Map(
     "gmall_chain" -> ChainWorkload,
-    "gmall_stream" -> StreamWorkload,
-    "dim_store" -> StoreWorkload,
-    "corpus_prep" -> CorpusWorkload)
+    "dim_store" -> StoreWorkload)
 
   /** Spark leaves non-daemon threads behind, so the JVM exits explicitly:
     * 0 after a printed result, 1 when the run could not produce one. */
@@ -150,6 +168,7 @@ object Main {
       val n = if (traceRun) "" else s" (n=${m.samples})"
       println(f"metric ${m.name} = ${m.value}%.4f ${m.unit}$n")
     }
+    ctx.info.foreach(m => println(f"info ${m.name} = ${m.value}%.4f ${m.unit} (n=${m.samples})"))
     ctx.notes.foreach(n => println(s"note $n"))
     val stealShare = (after.steal - before.steal).toDouble / math.max(1L, after.total - before.total)
     val machine = s"""{"nproc": ${Runtime.getRuntime.availableProcessors}, """ +
@@ -166,8 +185,10 @@ object Main {
       "machine" -> machine, "setup_s" -> Json.num(ctx.setupS),
       "peak_rss_mb" -> Json.num(rssMb),
       "metrics" -> Json.metrics(metrics, withSamples = true),
+      "info" -> Json.metrics(ctx.info.toSeq, withSamples = true),
       "samples" -> ctx.samples.map(s =>
         Json.obj("kind" -> Json.str(s.kind), "ms" -> Json.num(s.ms), "cpu_ms" -> Json.num(s.cpuMs),
+          "process_cpu_ms" -> Json.num(s.procCpuMs),
           "ok" -> s.ok.toString, "traced" -> s.traced.toString)).mkString("[", ",", "]"),
       "spans" -> spanSummary(ctx.trace),
       "notes" -> ctx.notes.map(Json.str).mkString("[", ",", "]")).getBytes(UTF_8))
@@ -212,6 +233,21 @@ object Machine {
   /** CPU time of this JVM, all threads, in ms. */
   def cpuMs(): Double = os.getProcessCpuTime / 1e6
 
+  private val threads = ManagementFactory.getThreadMXBean
+
+  /** CPU time per live Java thread, in ns. */
+  def threadCpu(): Map[Long, Long] =
+    threads.getAllThreadIds.map(id => id -> threads.getThreadCpuTime(id))
+      .filter(_._2 >= 0).toMap
+
+  /** CPU ms the Java threads spent since `before` (threads that started
+    * since count from 0; the JVM's own compiler and GC threads are not
+    * Java threads and are excluded). */
+  def threadCpuMsSince(before: Map[Long, Long]): Double =
+    threadCpu().map { case (id, ns) => ns - before.getOrElse(id, 0L) }.sum / 1e6
+
+  @volatile private var sink = 0L
+
   /** Raw seconds of a fixed single-threaded integer kernel. */
   def kernelSeconds(): Double = {
     val t = System.nanoTime()
@@ -223,7 +259,7 @@ object Machine {
       acc += x & 0xff
       i += 1
     }
-    if (acc == 42) println("")
+    sink = acc
     (System.nanoTime() - t) / 1e9
   }
 

@@ -3,7 +3,6 @@ package perfbench
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.collection.mutable.ArrayBuffer
@@ -24,15 +23,12 @@ final class StageAgg {
 
 final case class JobRec(id: Int, startMs: Long, var endMs: Long, stages: Seq[Int])
 final case class PlanRec(startMs: Long, endMs: Long)
-final case class BatchRec(runId: String, batchId: Long, startMs: Long, durations: Map[String, Long],
-    inputRows: Long, stateRows: Long, stateMem: Long, stateCommitMs: Long)
 
 /** The benchmark's tracer: spans recorded from the benchmark's own code
   * around every call into an engine layer, plus Spark's public listeners
-  * (jobs/stages/tasks, streaming progress, query planning). Everything is
-  * kept in memory and folded once at exit. When `on` is false no span is
-  * recorded and the Spark listener and query-execution listener are
-  * detached, so untraced ops pay nothing. */
+  * (jobs/stages/tasks and query planning). Everything is kept in memory
+  * and folded once at exit. While tracing is off no span is recorded and
+  * both listeners are detached, so untraced ops pay nothing. */
 final class Trace(spark: SparkSession) {
   @volatile private var enabled = false
   private val lock = new Object
@@ -40,7 +36,6 @@ final class Trace(spark: SparkSession) {
   val jobs = ArrayBuffer.empty[JobRec]
   val stages = scala.collection.mutable.HashMap.empty[Int, StageAgg]
   val plans = ArrayBuffer.empty[PlanRec]
-  val batches = ArrayBuffer.empty[BatchRec]
   private val stack = new ThreadLocal[List[Span]] { override def initialValue = Nil }
   private var opCounter = 0
 
@@ -89,34 +84,6 @@ final class Trace(spark: SparkSession) {
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
   }
 
-  /** Streaming progress is always recorded: the stream workload's
-    * end-to-end freshness is computed from it, traced or not. */
-  val streamListener: StreamingQueryListener = new StreamingQueryListener {
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      val d = p.durationMs
-      val keys = d.keySet().toArray(Array.empty[String])
-      val ops = p.stateOperators
-      lock.synchronized {
-        batches += BatchRec(p.runId.toString, p.batchId, java.time.Instant.parse(p.timestamp).toEpochMilli,
-          keys.map(k => k -> d.get(k).longValue()).toMap, p.numInputRows,
-          ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum,
-          ops.map(_.commitTimeMs).sum)
-      }
-    }
-  }
-  spark.streams.addListener(streamListener)
-
-  def on: Boolean = enabled
-
-  /** Progress records of one streaming query run, in batch order. */
-  def batchesOf(runId: java.util.UUID): Vector[BatchRec] = {
-    waitForListeners()
-    lock.synchronized(batches.filter(_.runId == runId.toString).toVector.sortBy(_.batchId))
-  }
-
   /** Attach or detach the job/task and planning listeners. */
   def setOn(v: Boolean): Unit = if (v != enabled) {
     if (v) {
@@ -143,13 +110,13 @@ final class Trace(spark: SparkSession) {
     } catch { case _: ReflectiveOperationException => Thread.sleep(500) }
   }
 
-  /** Run one op. Returns the op id (or -1 when tracing is off). */
-  def op[T](name: String)(body: => T): (T, Int) =
-    if (!enabled) (body, -1)
+  /** Run one op: the root span its layer spans nest under. */
+  def op[T](name: String)(body: => T): T =
+    if (!enabled) body
     else {
       val id = lock.synchronized { opCounter += 1; opCounter }
       val s = open(name, id)
-      try (body, id) finally close(s)
+      try body finally close(s)
     }
 
   /** A call into layer `name`, nested under the calling thread's open span. */

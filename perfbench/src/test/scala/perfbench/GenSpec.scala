@@ -29,8 +29,12 @@ class GenSpec extends AnyFunSuite {
     val (c, _) = gen(8)
     assert(a.nonEmpty && a == b && ta == tb)
     assert(a != c)
-    assert(StreamWorkload.fileLines(7, 3, 1000L) == StreamWorkload.fileLines(7, 3, 1000L))
-    assert(StreamWorkload.fileLines(7, 3, 1000L) != StreamWorkload.fileLines(7, 4, 1000L))
+    def store(seed: Long) = {
+      val st = new StoreWorkload.State(seed)
+      val m = StoreWorkload.initial(st)
+      (m, st.pick(m, 50))
+    }
+    assert(store(7) == store(7) && store(7) != store(8))
     assert(ta.dirty > 0 && ta.matchedDetails < ta.details && ta.gmvCents > 0)
   }
 
