@@ -16,65 +16,71 @@ import java.io.File
   *   DWM  OrderWide.join -> enrich -> paymentWide
   *   DWS  DwsStats visitor / product / keyword / province
   *   ADS  ServingApi.writeStats -> gmvAt
-  * The day's GMV is the op's answer; it and the pv/uv totals are checked
-  * against the generator's truth. */
+  * then the same day's log replayed in event-time order through the
+  * streaming micro-batch path ([[StreamReplay]]). The day's GMV is the op's
+  * answer; it, the pv/uv totals and every streamed window count are checked
+  * against the generator's truth. Every op runs the same day into a fresh
+  * output directory (the dim upserts are idempotent). */
 object ChainWorkload extends Workload {
   val LogLines = 10000
-  val Days = 3
   val WarmLogLines = 1000
 
-  final case class Inputs(logDir: File, dbDir: File, config: File, truth: DayTruth)
+  final case class Inputs(logDir: File, dbDir: File, config: File, truth: DayTruth,
+      stream: StreamReplay.Feed)
+
+  /** One day's inputs under `base`: its log and CDC parts, and the log
+    * again in event-time order for the stream replay. */
+  def day(base: File, config: File, seed: Long, d: Int, lines: Int): Inputs = {
+    val logDir = new File(base, "ods_base_log")
+    val truth = GmallGen.writeDay(logDir, new File(base, "ods_base_db"), seed, d, lines)
+    Inputs(logDir, new File(base, "ods_base_db"), config, truth,
+      StreamReplay.feed(logDir, new File(base, "ods_stream")))
+  }
 
   def run(ctx: Ctx): Unit = {
     val spark = ctx.spark
-    val days = (0 until Days).map { d =>
-      val base = ctx.dir(s"ods/day$d")
-      Inputs(new File(base, "ods_base_log"), new File(base, "ods_base_db"),
-        new File(ctx.root, "table_process.json"),
-        GmallGen.writeDay(new File(base, "ods_base_log"), new File(base, "ods_base_db"),
-          ctx.seed, d, LogLines))
-    }
-    GmallGen.writeConfig(days.head.config)
+    val config = new File(ctx.root, "table_process.json")
+    GmallGen.writeConfig(config)
+    val timed = day(ctx.dir("ods/day"), config, ctx.seed, 0, LogLines)
     // the long-lived dim store: the warm-up pass routes its initial
-    // snapshot together with a small day of its own, and every timed day
-    // upserts its dim changes into it
+    // snapshot together with a small day of its own, and every timed op
+    // upserts the day's dim changes into it
     val dimRoot = ctx.dir("dim")
-    val warmBase = ctx.dir("ods/warm")
-    val warmTruth = GmallGen.writeDay(new File(warmBase, "ods_base_log"),
-      new File(warmBase, "ods_base_db"), ctx.seed, Days, WarmLogLines)
-    GmallGen.writeDimSnapshot(new File(warmBase, "ods_base_db/snapshot.json"), ctx.seed)
-    val warm = Inputs(new File(warmBase, "ods_base_log"), new File(warmBase, "ods_base_db"),
-      days.head.config, warmTruth)
-    def dayOf(i: Int) = if (i < 0) warm else days(i % Days)
-    val check = (i: Int, out: File, gmv: java.math.BigDecimal) => () => {
-      val t = dayOf(i).truth
-      val vs = spark.read.parquet(new File(out, "ads/visitor_stats").getPath)
-        .agg(sum("pv_ct"), sum("uv_ct")).head()
-      val ok = gmv.movePointRight(2).longValueExact() == t.gmvCents &&
-        vs.getLong(0) == t.pages && vs.getLong(1) == t.uv
-      if (!ok) ctx.note("gmall_chain", new IllegalStateException(
-        s"day ${t.day}: gmv $gmv vs ${t.gmvCents}c, pv ${vs.getLong(0)} vs ${t.pages}, " +
-          s"uv ${vs.getLong(1)} vs ${t.uv}"))
-      rm(out)
-      ok
-    }
-    def op(i: Int) = {
+    val warm = day(ctx.dir("ods/warm"), config, ctx.seed, 1, WarmLogLines)
+    GmallGen.writeDimSnapshot(new File(warm.dbDir, "snapshot.json"), ctx.seed)
+    def op(in: Inputs, i: Int): () => Boolean = {
       val out = ctx.dir(s"run/op$i")
-      val gmv = pass(spark, ctx.trace, dayOf(i), out, dimRoot)
-      check(i, out, gmv)
+      val gmv = pass(spark, ctx.trace, in, out, dimRoot)
+      val streamed = ctx.trace.span("stream.replay")(StreamReplay.run(spark, in.stream, ctx.dir(s"run/stream$i")))
+      () => {
+        val t = in.truth
+        val vs = spark.read.parquet(new File(out, "ads/visitor_stats").getPath)
+          .agg(sum("pv_ct"), sum("uv_ct")).head()
+        val batchOk = gmv.movePointRight(2).longValueExact() == t.gmvCents &&
+          vs.getLong(0) == t.pages && vs.getLong(1) == t.uv
+        if (!batchOk) ctx.note("gmall_chain", new IllegalStateException(
+          s"day ${t.day}: gmv $gmv vs ${t.gmvCents}c, pv ${vs.getLong(0)} vs ${t.pages}, " +
+            s"uv ${vs.getLong(1)} vs ${t.uv}"))
+        val streamOk = streamed == in.stream.counts
+        if (!streamOk) ctx.note("gmall_chain", new IllegalStateException(
+          s"day ${t.day}: stream window counts differ: " +
+            s"${(in.stream.counts.toSet diff streamed.toSet).take(3)} vs ${(streamed.toSet diff in.stream.counts.toSet).take(3)}"))
+        rm(out)
+        batchOk && streamOk
+      }
     }
     ctx.phase("inputs generated")
     // the untimed warm-up pass compiles every plan shape (the days share them)
-    if (!ctx.timedOp("warmup", traced = false)(op(-1)).ok) sys.error("gmall_chain warm-up failed")
+    if (!ctx.timedOp("warmup", traced = false)(op(warm, -1)).ok) sys.error("gmall_chain warm-up failed")
     ctx.setupDone()
-    val span = ctx.closedLoop("chain")(op)
+    ctx.closedLoop("chain")(i => op(timed, i))
 
-    if (!ctx.traceRun) ctx.closedLoopMetrics("chain", span)
+    if (!ctx.traceRun) ctx.closedLoopMetrics("chain")
     else {
       val folds = Fold(ctx.trace)
-      val raw = days.map(d => d.truth.logBytes + d.truth.dbBytes).sum.toDouble / Days
-      ctx.layer ++= gmallLayerMetrics(folds, days.head.truth)
-      ctx.layer ++= Layers.common(ctx, folds, "chain", raw)
+      ctx.layer ++= gmallLayerMetrics(folds, timed.truth)
+      ctx.layer ++= StreamReplay.layerMetrics(ctx.trace, folds, timed.stream)
+      ctx.layer ++= Layers.common(ctx, folds, "chain", timed.truth.logBytes + timed.truth.dbBytes)
     }
   }
 

@@ -18,11 +18,12 @@ trait Workload {
   def run(ctx: Ctx): Unit
 }
 
-/** One op sample: wall time, CPU time of the Java threads, and CPU time of
-  * the whole process (adding the JVM's compiler and GC threads) over the
-  * same span. `traced` ops run with the tracer's listeners attached. */
-final case class Sample(kind: String, ms: Double, cpuMs: Double, procCpuMs: Double,
-    ok: Boolean, traced: Boolean)
+/** One op sample: wall time, and the CPU time of the whole JVM process over
+  * the same span (every thread: driver, tasks, and the JVM's own compiler
+  * and GC threads), with the GC and JIT-compile time inside it. `traced`
+  * ops run with the tracer's listeners attached. */
+final case class Sample(kind: String, ms: Double, cpuMs: Double, gcMs: Double,
+    jitMs: Double, ok: Boolean, traced: Boolean)
 
 final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
     val seconds: Int, val traceRun: Boolean, val trace: Trace, jvmStartMs: Long) {
@@ -35,8 +36,11 @@ final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
   var setupS: Double = Double.NaN
 
   /** Setup ends here: from JVM start through session build, input
-    * generation and the untimed warm-up ops. */
+    * generation, the untimed warm-up ops, and the wait for the JIT
+    * compiler to drain the backlog they left. */
   def setupDone(): Unit = {
+    val jit = Machine.settleJit()
+    phase(f"JIT settled ($jit%.0f ms of compiling after the warm-up)")
     setupS = (System.currentTimeMillis() - jvmStartMs) / 1000.0
     phase("setup done")
   }
@@ -47,25 +51,20 @@ final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
 
   def dir(name: String): File = { val d = new File(root, name); d.mkdirs(); d }
 
-  /** Closed loop, one client: run `body(i)` back to back for `seconds`.
-    * `body` does the timed work and returns the untimed check; an op that
-    * throws or fails its check counts as failed and contributes no timing.
-    * In a traced run every other op is traced, so the untraced half gives
-    * the tracing overhead within the same run. Returns the measured span
-    * in seconds. */
-  def closedLoop(kind: String)(body: Int => (() => Boolean)): Double = {
-    val t0 = System.nanoTime()
-    val deadline = t0 + seconds * 1000000000L
+  /** Closed loop, one client: run `body(i)` back to back until `seconds`
+    * have passed, at least once. `body` does the timed work and returns
+    * the untimed check; an op that throws or fails its check counts as
+    * failed and contributes no timing. A traced run instead runs exactly
+    * two ops on the same input, traced then untraced, for the tracing
+    * overhead. */
+  def closedLoop(kind: String)(body: Int => (() => Boolean)): Unit = {
+    val deadline = System.nanoTime() + seconds * 1000000000L
     var i = 0
-    var end = t0
-    // a traced run needs one traced and one untraced op for the overhead
-    while (System.nanoTime() < deadline || (traceRun && i < 2)) {
-      samples += timedOp(kind, traceRun && i % 2 == 0)(body(i))
-      end = System.nanoTime()
+    while (if (traceRun) i < 2 else i == 0 || System.nanoTime() < deadline) {
+      samples += timedOp(kind, traceRun && i == 0)(body(i))
       i += 1
     }
     trace.setOn(false)
-    (end - t0) / 1e9
   }
 
   /** Time one op; an exception or a failed check makes it a failed op. */
@@ -73,19 +72,19 @@ final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
     trace.setOn(traced)
     val t = System.nanoTime()
     val c = Machine.cpuMs()
-    val jc = Machine.threadCpu()
+    val gc = Machine.gcMs()
+    val jit = Machine.jitMs()
+    def sample(ok: Boolean) = Sample(kind, (System.nanoTime() - t) / 1e6, Machine.cpuMs() - c,
+      Machine.gcMs() - gc, Machine.jitMs() - jit, ok, traced)
     try {
       val check = trace.op(kind)(op)
-      val ms = (System.nanoTime() - t) / 1e6
-      val cpu = Machine.cpuMs() - c
-      val jcpu = Machine.threadCpuMsSince(jc)
+      val s = sample(ok = true)
       val ok = try check() catch { case e: Exception => note(kind, e); false }
-      Sample(kind, ms, jcpu, cpu, ok, traced)
+      s.copy(ok = ok)
     } catch {
       case e: Exception =>
         note(kind, e)
-        Sample(kind, (System.nanoTime() - t) / 1e6, Machine.threadCpuMsSince(jc),
-          Machine.cpuMs() - c, ok = false, traced)
+        sample(ok = false)
     }
   }
 
@@ -98,31 +97,31 @@ final class Ctx(val spark: SparkSession, val root: File, val seed: Long,
   /** The untraced, successful samples of one op kind. */
   def ok(kind: String): Seq[Sample] = samples.filter(s => s.kind == kind && s.ok && !s.traced).toSeq
 
-  /** The end-to-end figures of a closed loop: the median CPU time per op
-    * (gated), and the median and quartiles of wall time per op and the ops
-    * per second (recorded). */
-  def closedLoopMetrics(kind: String, spanS: Double): Unit = {
+  /** The end-to-end figures of a closed loop: the median process CPU time
+    * per op (gated), and the wall time and the GC and JIT time per op
+    * (recorded). */
+  def closedLoopMetrics(kind: String): Unit = {
     val s = ok(kind)
-    val ms = s.map(_.ms)
     e2e += Metric("cpu_ms_per_op", Stats.median(s.map(_.cpuMs)), "ms", s.size)
-    info += Metric("wall_p50_ms", Stats.median(ms), "ms", s.size)
-    info += Metric("wall_p25_ms", Stats.quantile(ms, 0.25), "ms", s.size)
-    info += Metric("wall_p75_ms", Stats.quantile(ms, 0.75), "ms", s.size)
-    info += Metric("ops_per_s", s.size / spanS, "1/s", s.size)
+    info += Metric("wall_ms_per_op", Stats.median(s.map(_.ms)), "ms", s.size)
+    info += Metric("gc_ms_per_op", Stats.median(s.map(_.gcMs)), "ms", s.size)
+    info += Metric("jit_ms_per_op", Stats.median(s.map(_.jitMs)), "ms", s.size)
   }
 
-  /** In a traced run: median CPU time of traced over untraced ops, -1. */
-  def overhead(kind: String): Double = {
-    val tr = samples.filter(s => s.kind == kind && s.ok && s.traced).map(_.cpuMs).toSeq
-    val un = ok(kind).map(_.cpuMs)
-    if (tr.isEmpty || un.isEmpty) 0.0 else Stats.median(tr) / Stats.median(un) - 1.0
+  /** In a traced run: the traced op's figure over the untraced op's, -1.
+    * The untraced op runs second, on a JVM that has compiled more, so this
+    * is an upper bound on the tracing overhead. */
+  def overhead(kind: String, f: Sample => Double): Double = {
+    val tr = samples.filter(s => s.kind == kind && s.ok && s.traced).map(f)
+    val un = ok(kind).map(f)
+    if (tr.isEmpty || un.isEmpty) 0.0 else Stats.median(tr.toSeq) / Stats.median(un) - 1.0
   }
 }
 
 object Main {
   private val workloads: Map[String, Workload] = Map(
     "gmall_chain" -> ChainWorkload,
-    "dim_store" -> StoreWorkload)
+    "store_corpus" -> StoreWorkload)
 
   /** Spark leaves non-daemon threads behind, so the JVM exits explicitly:
     * 0 after a printed result, 1 when the run could not produce one. */
@@ -188,7 +187,7 @@ object Main {
       "info" -> Json.metrics(ctx.info.toSeq, withSamples = true),
       "samples" -> ctx.samples.map(s =>
         Json.obj("kind" -> Json.str(s.kind), "ms" -> Json.num(s.ms), "cpu_ms" -> Json.num(s.cpuMs),
-          "process_cpu_ms" -> Json.num(s.procCpuMs),
+          "gc_ms" -> Json.num(s.gcMs), "jit_ms" -> Json.num(s.jitMs),
           "ok" -> s.ok.toString, "traced" -> s.traced.toString)).mkString("[", ",", "]"),
       "spans" -> spanSummary(ctx.trace),
       "notes" -> ctx.notes.map(Json.str).mkString("[", ",", "]")).getBytes(UTF_8))
@@ -233,18 +232,32 @@ object Machine {
   /** CPU time of this JVM, all threads, in ms. */
   def cpuMs(): Double = os.getProcessCpuTime / 1e6
 
-  private val threads = ManagementFactory.getThreadMXBean
+  /** Time the JVM's collectors have spent, summed, in ms. */
+  def gcMs(): Double = {
+    import scala.jdk.CollectionConverters._
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum.toDouble
+  }
 
-  /** CPU time per live Java thread, in ns. */
-  def threadCpu(): Map[Long, Long] =
-    threads.getAllThreadIds.map(id => id -> threads.getThreadCpuTime(id))
-      .filter(_._2 >= 0).toMap
+  /** Time the JIT compiler has spent, in ms. */
+  def jitMs(): Double = ManagementFactory.getCompilationMXBean.getTotalCompilationTime.toDouble
 
-  /** CPU ms the Java threads spent since `before` (threads that started
-    * since count from 0; the JVM's own compiler and GC threads are not
-    * Java threads and are excluded). */
-  def threadCpuMsSince(before: Map[Long, Long]): Double =
-    threadCpu().map { case (id, ns) => ns - before.getOrElse(id, 0L) }.sum / 1e6
+  /** Wait, up to `maxMs`, until the JIT compiler has been idle for a
+    * quarter second, so compiles queued by earlier work do not spill into
+    * the next timed op. Returns the compile time spent while waiting. */
+  def settleJit(maxMs: Long = 20000L): Double = {
+    val t0 = System.currentTimeMillis()
+    val j0 = jitMs()
+    var last = j0
+    var quiet = false
+    while (!quiet && System.currentTimeMillis() - t0 < maxMs) {
+      Thread.sleep(250L)
+      val j = jitMs()
+      quiet = j - last < 1.0
+      last = j
+    }
+    last - j0
+  }
+
 
   @volatile private var sink = 0L
 

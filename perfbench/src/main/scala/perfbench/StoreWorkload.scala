@@ -7,16 +7,18 @@ import org.apache.spark.sql.functions._
 import java.io.File
 import java.util.SplittableRandom
 
-/** `dim_store`: closed loop, one client, writes beside reads. One op is one
-  * round of a dim-table client: a seeded changelog (updates, inserts,
-  * deletes; the key determines the partition) committed as a
-  * `Versioned.merge` plus a `Versioned.deleteKeysDv`, a `compact` of the
-  * files those commits left (every round, so every round does the same
-  * work), then the reads the reference's DimUtil and
-  * serving layer make: a `readPoints` key batch, a `readAsOf` an earlier
-  * commit time, and `changes(fromV, toV)`. Every read is checked against an
-  * in-memory model of the table at every version. The table grows as the
-  * run goes. */
+/** `store_corpus`: closed loop, one client. One op is one round of a
+  * dim-table client, writes beside reads, followed by one corpus-prep batch
+  * ([[CorpusOp]]); the two share a workload only to keep the benchmark's
+  * run count down, and their layer spans keep them apart. The round: a
+  * seeded changelog (updates, inserts, deletes; the key determines the
+  * partition) committed as a `Versioned.merge` plus a
+  * `Versioned.deleteKeysDv`, a `compact` of the files those commits left
+  * (every round, so every round does the same work), then the reads the
+  * reference's DimUtil and serving layer make: a `readPoints` key batch, a
+  * `readAsOf` an earlier commit time, and `changes(fromV, toV)`. Every read
+  * is checked against an in-memory model of the table at every version.
+  * The table grows by 20 rows a round. */
 object StoreWorkload extends Workload {
   val Rows0 = 20000
   val Parts = 16L
@@ -24,7 +26,6 @@ object StoreWorkload extends Workload {
   val Inserts = 30
   val Deletes = 10
   val LookupKeys = 40
-  val WarmupRounds = 2
 
   /** name, score per key; the partition is `id % Parts`. */
   type Model = Map[Long, (String, Long)]
@@ -60,6 +61,12 @@ object StoreWorkload extends Workload {
       frame(spark, base.toSeq.sortBy(_._1).map { case (k, (n, s)) => (k, n, s) }),
       statsCol = Some("id"))
     st.commit(1L, base)
+    ctx.phase("store initialised")
+    val corpus = CorpusOp.prepare(spark, ctx.seed)
+    GmallGen.writeLines(new java.io.File(ctx.root, "corpus_truth.json"), Seq(
+      corpus.corpus.planted.toSeq.sorted.map { case (a, b) => s"[$a, $b]" }.mkString("""{"planted": [""", ", ", "],"),
+      corpus.truth.toSeq.sorted.map { case (q, n) => s"[$q, $n]" }.mkString(""""top_k": [""", ", ", "]}")))
+    ctx.phase("corpus prepared")
     var filesScanned = 0L
     var lookups = 0L
     val tr = ctx.trace
@@ -120,26 +127,30 @@ object StoreWorkload extends Workload {
           }
         }
         val ok = pointsOk && asOfOk && feed == expFeed
-        if (!ok) ctx.note("dim_store", new IllegalStateException(
+        if (!ok) ctx.note("store_corpus", new IllegalStateException(
           s"round $i: points $pointsOk, asOf v$asOfV $asOfOk, changes v$fromV..v$latest ${feed == expFeed}"))
         ok
       }
     }
 
-    // untimed warm-up rounds: the store path's first rounds still run
-    // partly interpreted; after a single warm-up round the timed round's
-    // CPU time spread by 16% (IQR over median, five seeds, 4 vCPUs)
-    (1 to WarmupRounds).foreach { w =>
-      if (!ctx.timedOp("warmup", traced = false)(round(-w)).ok) sys.error("dim_store warm-up failed")
+    def op(i: Int): () => Boolean = {
+      val storeOk = round(i)
+      val corpusOk = CorpusOp.op(spark, tr, corpus)
+      () => storeOk() && corpusOk()
     }
+
+    // one untimed warm-up op: a second one steadied the timed op's CPU
+    // time (IQR over median 0.04 against 0.13, five seeds) but cost 10 s
+    // of setup per run, which the benchmark's time budget cannot spare
+    if (!ctx.timedOp("warmup", traced = false)(op(-1)).ok) sys.error("store_corpus warm-up failed")
     ctx.setupDone()
-    val span = ctx.closedLoop("round")(round)
+    ctx.closedLoop("op")(op)
 
     // the model's truth beside the table: rows and score sum per version
     GmallGen.writeLines(new File(ctx.root, "dim_user_truth.json"), st.versions.toSeq.sortBy(_._1).map {
       case (v, m) => s"""{"version": $v, "rows": ${m.size}, "score_sum": ${m.valuesIterator.map(_._2).sum}}"""
     })
-    if (!ctx.traceRun) ctx.closedLoopMetrics("round", span)
+    if (!ctx.traceRun) ctx.closedLoopMetrics("op")
     else {
       val folds = Fold(ctx.trace)
       val writes = Seq("Versioned.merge", "Versioned.delete", "Versioned.compact")
@@ -171,7 +182,8 @@ object StoreWorkload extends Workload {
         Metric("Versioned.bytes_written_per_user_byte",
           if (folds.isEmpty) 0.0 else writes.map(s => Fold.layerSpark(folds, s)(_.outBytes.toDouble)).sum /
             math.max(1.0, userBytes), "ratio"))
-      ctx.layer ++= Layers.common(ctx, folds, "round", userBytes)
+      ctx.layer ++= CorpusOp.layerMetrics(folds)
+      ctx.layer ++= Layers.common(ctx, folds, "op", userBytes)
     }
   }
 

@@ -3,6 +3,7 @@ package perfbench
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.collection.mutable.ArrayBuffer
@@ -23,12 +24,17 @@ final class StageAgg {
 
 final case class JobRec(id: Int, startMs: Long, var endMs: Long, stages: Seq[Int])
 final case class PlanRec(startMs: Long, endMs: Long)
+/** One micro-batch's progress: its phase durations, input rows, and the
+  * state store's rows, memory and commit time. */
+final case class BatchRec(batchId: Long, startMs: Long, durations: Map[String, Long],
+    inputRows: Long, stateRows: Long, stateMem: Long, stateCommitMs: Long)
 
 /** The benchmark's tracer: spans recorded from the benchmark's own code
   * around every call into an engine layer, plus Spark's public listeners
-  * (jobs/stages/tasks and query planning). Everything is kept in memory
-  * and folded once at exit. While tracing is off no span is recorded and
-  * both listeners are detached, so untraced ops pay nothing. */
+  * (jobs/stages/tasks, query planning and streaming progress). Everything
+  * is kept in memory and folded once at exit. While tracing is off no span
+  * is recorded and every listener is detached, so untraced ops pay
+  * nothing. */
 final class Trace(spark: SparkSession) {
   @volatile private var enabled = false
   private val lock = new Object
@@ -36,6 +42,7 @@ final class Trace(spark: SparkSession) {
   val jobs = ArrayBuffer.empty[JobRec]
   val stages = scala.collection.mutable.HashMap.empty[Int, StageAgg]
   val plans = ArrayBuffer.empty[PlanRec]
+  val batches = ArrayBuffer.empty[BatchRec]
   private val stack = new ThreadLocal[List[Span]] { override def initialValue = Nil }
   private var opCounter = 0
 
@@ -84,15 +91,33 @@ final class Trace(spark: SparkSession) {
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
   }
 
-  /** Attach or detach the job/task and planning listeners. */
+  private val streamListener = new StreamingQueryListener {
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val p = e.progress
+      val d = p.durationMs
+      val keys = d.keySet().toArray(Array.empty[String])
+      val ops = p.stateOperators
+      lock.synchronized {
+        batches += BatchRec(p.batchId, java.time.Instant.parse(p.timestamp).toEpochMilli,
+          keys.map(k => k -> d.get(k).longValue()).toMap, p.numInputRows,
+          ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum, ops.map(_.commitTimeMs).sum)
+      }
+    }
+  }
+
+  /** Attach or detach the job/task, planning and streaming listeners. */
   def setOn(v: Boolean): Unit = if (v != enabled) {
     if (v) {
       spark.sparkContext.addSparkListener(sparkListener)
       spark.listenerManager.register(qeListener)
+      spark.streams.addListener(streamListener)
     } else {
       waitForListeners()
       spark.sparkContext.removeSparkListener(sparkListener)
       spark.listenerManager.unregister(qeListener)
+      spark.streams.removeListener(streamListener)
     }
     enabled = v
   }

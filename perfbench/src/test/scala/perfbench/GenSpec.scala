@@ -35,10 +35,13 @@ class GenSpec extends AnyFunSuite {
       (m, st.pick(m, 50))
     }
     assert(store(7) == store(7) && store(7) != store(8))
+    val corpus = CorpusOp.generate(7)
+    assert(corpus == CorpusOp.generate(7) && corpus != CorpusOp.generate(8))
+    assert(corpus.planted.size == CorpusOp.ExactDups + CorpusOp.NearDups)
     assert(ta.dirty > 0 && ta.matchedDetails < ta.details && ta.gmvCents > 0)
   }
 
-  test("a tiny gmall_chain day reproduces its ground truth") {
+  test("a tiny gmall_chain day reproduces its ground truth, batch and streamed") {
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
@@ -49,13 +52,16 @@ class GenSpec extends AnyFunSuite {
       GmallGen.writeDimSnapshot(new File(d, "db/snapshot.json"), 11)
       val config = new File(d, "table_process.json")
       GmallGen.writeConfig(config)
-      val in = ChainWorkload.Inputs(new File(d, "log"), new File(d, "db"), config, truth)
+      val feed = StreamReplay.feed(new File(d, "log"), new File(d, "stream"))
+      val in = ChainWorkload.Inputs(new File(d, "log"), new File(d, "db"), config, truth, feed)
       val out = new File(d, "out")
       val gmv = ChainWorkload.pass(spark, new Trace(spark), in, out, new File(d, "dim"))
       assert(gmv.movePointRight(2).longValueExact() == truth.gmvCents)
       val vs = spark.read.parquet(new File(out, "ads/visitor_stats").getPath)
         .selectExpr("sum(pv_ct)", "sum(uv_ct)").head()
       assert(vs.getLong(0) == truth.pages && vs.getLong(1) == truth.uv)
+      assert(feed.counts.nonEmpty)
+      assert(StreamReplay.run(spark, feed, new File(d, "replay")) == feed.counts)
     } finally spark.stop()
   }
 }
