@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 object Bench {
@@ -14,6 +16,17 @@ object Bench {
   private final class JobAgg {
     var jobs = 0L
     var jobMs = 0L
+  }
+
+  /** Per-gate Janino accounting, summed over the gate's timed trials:
+    * generated classes compiled (`CodegenMetrics`) and the time spent
+    * compiling them (`CodeGenerator.compileTime`). After the warm-up a
+    * timed run should compile nothing; a nonzero count names a gate whose
+    * timing carries first-touch compile (and the JIT work that follows
+    * each new class). Artifact-only, like `JobAgg`. */
+  private final class CodegenAgg {
+    var compiles = 0L
+    var compileNs = 0L
   }
 
   /** Per-stream-gate micro-batch accounting, summed over every progress
@@ -49,11 +62,16 @@ object Bench {
     // touch on a 0.3s query — and WHICH query pays moved whenever the
     // iteration order changed (the r7 a3_keyword_stats 0.38→2.03 swing).
     // Running every batch query once on sf0.001 (tiny, untimed) compiles
-    // every plan up front, so timed numbers are steady-state per-query
-    // cost. stream_* gates are excluded: each timed run re-executes its
-    // full micro-batch + checkpoint lifecycle regardless, and running 15
-    // streaming queries here would double bench wall-clock for paths the
-    // batch twins already compile.
+    // its plan shapes, and `Sessions.tuned`'s generated-class cache is
+    // sized to keep all of them (Spark's default 100-class cache evicted
+    // them long before the timed pass over ~280 queries reached them).
+    // A shape that differs between sf0.001 and the timed sf — a literal
+    // baked from the data, a different join strategy — still compiles in
+    // its timed run; the artifact's `codegen` block shows where. stream_*
+    // gates are excluded: each timed run re-executes its full micro-batch
+    // + checkpoint lifecycle regardless, and running 15 streaming queries
+    // here would double bench wall-clock for paths the batch twins
+    // already compile.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory)
@@ -144,10 +162,13 @@ object Bench {
     // added, which silently moves shared-cost attribution (e.g. which
     // dedup gate warms the shared pair memo) between rounds — sorting
     // pins it
+    val codegenAgg = scala.collection.mutable.Map.empty[String, CodegenAgg]
     def timeGate(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Boolean) = {
       reset()
       current = name
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val cNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       // Sessions.force, NOT count(): a bare count lets the optimizer prune
       // unused aggregates/windows/projections/sorts out of the timed plan —
@@ -166,6 +187,9 @@ object Bench {
       // `current` moves on — attribution hygiene, not lifecycle cost
       org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
       current = null
+      val cg = codegenAgg.getOrElseUpdate(name, new CodegenAgg)
+      cg.compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      cg.compileNs += CodeGenerator.compileTime - cNs0
       (sec, ok)
     }
     val gateList0 = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -264,7 +288,7 @@ object Bench {
     val ambient = (calPre + calPost) / 2 / CalibrationRefSec
     println(f"[bench] calibration pre=$calPre%.3f post=$calPost%.3f " +
       f"ref=$CalibrationRefSec%.3f ambient_factor=$ambient%.2f")
-    writeFullArtifact(results, streamAgg, jobAgg, failed, total, sfShort,
+    writeFullArtifact(results, streamAgg, jobAgg, codegenAgg.toMap, failed, total, sfShort,
       calPre, calPost, ambient, trialPairs.toMap)
     // The driver records only the LAST ~2000 chars of stdout, and sbt
     // appends ~70 chars of its own after us — so the ONE metric line must
@@ -309,6 +333,7 @@ object Bench {
       results: Seq[(String, (Double, Boolean))],
       streamAgg: java.util.concurrent.ConcurrentHashMap[String, StreamAgg],
       jobAgg: java.util.concurrent.ConcurrentHashMap[String, JobAgg],
+      codegenAgg: Map[String, CodegenAgg],
       failed: String, total: Double, sfShort: String,
       calPre: Double, calPost: Double, ambient: Double,
       trialPairs: Map[String, (Double, Double)]): Unit = {
@@ -342,6 +367,9 @@ object Bench {
         s""""$k":{"n":${a.jobs},"job_ms":${a.jobMs}}"""
       }.mkString("{", ",", "}")
     }
+    val codegen = codegenAgg.toSeq.sortBy(_._1).map { case (k, a) =>
+      s""""$k":{"compiles":${a.compiles},"compile_ms":${a.compileNs / 1000000L}}"""
+    }.mkString("{", ",", "}")
     val json =
       s"""{"sf":"$sfShort","total_sec":${q3(total)},"failed":$failed,
          |"calibration_pre_sec":${q3(calPre)},"calibration_post_sec":${q3(calPost)},
@@ -349,6 +377,7 @@ object Bench {
          |"queries":$queries,
          |"trials":$trials,
          |"jobs":$jobs,
+         |"codegen":$codegen,
          |"streams":$streams}
          |""".stripMargin
     try {

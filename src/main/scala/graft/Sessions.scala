@@ -14,7 +14,21 @@ import org.apache.spark.sql.SparkSession
   *   - parquet nanos read as long (the `events` table carries
   *     TIMESTAMP(NANOS) which Spark's reader otherwise rejects),
   *   - UTC session timezone so date arithmetic is stable against the
-  *     DuckDB oracle.
+  *     DuckDB oracle,
+  *   - a generated-class cache that holds the engine's whole working set
+  *     (`spark.sql.codegen.cache.maxEntries`) and class names free of the
+  *     whole-stage id (`spark.sql.codegen.useIdInClassName=false`), so a
+  *     plan shape this session has already run is neither recompiled by
+  *     Janino nor JIT-compiled again by HotSpot. (Spark keys the cache by
+  *     the compiling thread's class loader too, and each streaming query
+  *     runs its tasks under a cloned session's loader, so a stream's
+  *     task-side classes still compile once per query.)
+  *
+  * Both codegen settings are STATIC confs: they take effect only when this
+  * call builds the JVM's first session, before anything has been
+  * code-generated. That holds for every entry point (`SparkSpec`, `Bench`,
+  * `Verify`, perfbench); a session created earlier by other code keeps its
+  * own values and `getOrCreate` silently returns it.
   */
 object Sessions {
   def tuned(master: String, cpus: String): SparkSession = {
@@ -36,6 +50,17 @@ object Sessions {
       // checkpoints (measured: see BASELINE.md r11 notes). A durable
       // production deployment on HDFS/S3 would re-enable it.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      // Spark's default generated-class cache keeps 100 classes; one
+      // gmall raw-log→GMV chain pass compiles 257-266 and one
+      // store+corpus pass 207-224 (counted with CodegenMetrics), so the
+      // LRU cycled and every pass recompiled every shape. 4096 holds the
+      // largest measured working set fifteen times over.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // The same operator subtree planned under a different whole-stage
+      // id then reuses its class: on top of the larger cache, warm-up
+      // compiles went 263 → 237-239 on the chain and 187 → 179 on
+      // store+corpus.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.ui.enabled", "false")
