@@ -13,10 +13,7 @@ object Bench {
     * scale with cores); one with few jobs and ratio ≈1 deserves a
     * closer look. Artifact-only (bench_full_r*.json) — the stdout
     * metric line is the driver contract and stays unchanged. */
-  private final class JobAgg {
-    var jobs = 0L
-    var jobMs = 0L
-  }
+  private final case class JobAgg(jobs: Long, jobMs: Long)
 
   /** Per-gate Janino accounting, summed over the gate's timed trials:
     * generated classes compiled (`CodegenMetrics`) and the time spent
@@ -134,27 +131,8 @@ object Bench {
     // per-gate job accounting (see JobAgg): jobs are attributed to the
     // gate current at job START; the bus is drained before attribution
     // moves on, so counts are exact per gate
-    val jobAgg = new java.util.concurrent.ConcurrentHashMap[String, JobAgg]()
-    val jobStarts =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val gate = current
-        if (gate != null) { jobStarts.put(e.jobId, (System.nanoTime(), gate)); () }
-      }
-      override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val s = jobStarts.remove(e.jobId)
-        if (s != null) {
-          val a = jobAgg.computeIfAbsent(s._2, _ => new JobAgg)
-          a.synchronized {
-            a.jobs += 1
-            a.jobMs += (System.nanoTime() - s._1) / 1000000L
-          }
-        }
-      }
-    }
+    val jobAgg = scala.collection.mutable.Map.empty[String, JobAgg]
+    val jobListener = new JobListener
     spark.sparkContext.addSparkListener(jobListener)
     // (sec, succeeded) per query — a throwing query must NOT masquerade as
     // a healthy timing
@@ -167,6 +145,7 @@ object Bench {
         : (Double, Boolean) = {
       reset()
       current = name
+      jobListener.tag = name
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val cNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
@@ -183,10 +162,17 @@ object Bench {
         org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
       val sec = (System.nanoTime() - t0) / 1e9
       // drain once more OUTSIDE the timed window so the job accounting
-      // (JobAgg) credits in-flight job-end events to this gate before
-      // `current` moves on — attribution hygiene, not lifecycle cost
+      // (JobAgg) sees in-flight job-end events before `current` moves
+      // on — attribution hygiene, not lifecycle cost. A retried gate's
+      // second trial replaces the first: the artifact keeps the LAST
+      // trial's job accounting, and a job-free run gets no entry.
       org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
       current = null
+      jobListener.tag = null
+      val ended = jobListener.jobs.filter(_.ended)
+      jobListener.clear()
+      if (ended.isEmpty) jobAgg.remove(name)
+      else jobAgg(name) = JobAgg(ended.size.toLong, ended.map(_.ms).sum)
       val cg = codegenAgg.getOrElseUpdate(name, new CodegenAgg)
       cg.compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
       cg.compileNs += CodeGenerator.compileTime - cNs0
@@ -263,7 +249,6 @@ object Bench {
       if (!slowest.contains(name)) name -> ((t1, ok1))
       else {
         streamAgg.remove(name)
-        jobAgg.remove(name) // keep the LAST trial's job accounting too
         val (t2, ok2) = timeGate(name,
           gateList.find(_._1 == name).get._2)
         trialPairs(name) = (t1, t2)
@@ -288,7 +273,7 @@ object Bench {
     val ambient = (calPre + calPost) / 2 / CalibrationRefSec
     println(f"[bench] calibration pre=$calPre%.3f post=$calPost%.3f " +
       f"ref=$CalibrationRefSec%.3f ambient_factor=$ambient%.2f")
-    writeFullArtifact(results, streamAgg, jobAgg, codegenAgg.toMap, failed, total, sfShort,
+    writeFullArtifact(results, streamAgg, jobAgg.toMap, codegenAgg.toMap, failed, total, sfShort,
       calPre, calPost, ambient, trialPairs.toMap)
     // The driver records only the LAST ~2000 chars of stdout, and sbt
     // appends ~70 chars of its own after us — so the ONE metric line must
@@ -332,7 +317,7 @@ object Bench {
   private def writeFullArtifact(
       results: Seq[(String, (Double, Boolean))],
       streamAgg: java.util.concurrent.ConcurrentHashMap[String, StreamAgg],
-      jobAgg: java.util.concurrent.ConcurrentHashMap[String, JobAgg],
+      jobAgg: Map[String, JobAgg],
       codegenAgg: Map[String, CodegenAgg],
       failed: String, total: Double, sfShort: String,
       calPre: Double, calPost: Double, ambient: Double,
@@ -361,12 +346,9 @@ object Bench {
     }
     val trials = trialPairs.toSeq.sortBy(_._1).map { case (k, (a, b)) =>
       s""""$k":[${q3(a)},${q3(b)}]""" }.mkString("{", ",", "}")
-    val jobs = {
-      import scala.jdk.CollectionConverters._
-      jobAgg.asScala.toSeq.sortBy(_._1).map { case (k, a) =>
-        s""""$k":{"n":${a.jobs},"job_ms":${a.jobMs}}"""
-      }.mkString("{", ",", "}")
-    }
+    val jobs = jobAgg.toSeq.sortBy(_._1).map { case (k, a) =>
+      s""""$k":{"n":${a.jobs},"job_ms":${a.jobMs}}"""
+    }.mkString("{", ",", "}")
     val codegen = codegenAgg.toSeq.sortBy(_._1).map { case (k, a) =>
       s""""$k":{"compiles":${a.compiles},"compile_ms":${a.compileNs / 1000000L}}"""
     }.mkString("{", ",", "}")

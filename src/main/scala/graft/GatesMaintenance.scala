@@ -719,21 +719,20 @@ private[graft] object GatesMaintenance {
     }),
 
 
-    // ── K35: BATCHED point probe (r18) — the amortizing lever the r18
-    // ManifestScale row flagged: at the 10⁵-file tier ONE distributed
-    // manifest scan costs seconds, so a key-LIST lookup through N
-    // readPoint calls pays N scans where readPoints pays one (plus one
-    // data read of the union file set; per manifest row, one sketch
-    // deserialization answers the whole batch). Same k22 fixture — 16
-    // range buckets + a churned low-key zone, two versions — probed
-    // with one 7-key batch per version mixing range hits, the updated
-    // key, the deleted key (v1-only), an inserted key (v2-only), and
-    // two misses. Pins per version: pruned_ok (planned files a strict
-    // subset of the snapshot's), equal_ok (batch answer == full-scan
-    // IN-filter), union_ok (the batch PLAN is file-for-file the union
-    // of the 7 per-key readPoint plans — sketches are deterministic, so
-    // amortization changes what a probe costs, never what it reads);
-    // the oracle replays both snapshots and aggregates over the batch.
+    // ── K35: BATCHED point probe (r18) — the amortizing lever SCALE.md
+    // §"Round-18: distributed manifest prune" flagged: at the 10⁵-file tier
+    // ONE distributed manifest scan costs seconds, so a key-LIST lookup
+    // through N readPoint calls pays N scans where readPoints pays one (plus
+    // one data read of the union file set; per manifest row, one sketch
+    // deserialization answers the whole batch). Same k22 fixture — 16 range
+    // buckets + a churned low-key zone, two versions — probed with one 7-key
+    // batch per version mixing range hits, the updated key, the deleted key
+    // (v1-only), an inserted key (v2-only), and two misses. Pins per version:
+    // pruned_ok (planned files a strict subset of the snapshot's), equal_ok
+    // (batch answer == full-scan IN-filter), union_ok (the batch PLAN is
+    // file-for-file the union of the 7 per-key readPoint plans — sketches are
+    // deterministic, so amortization changes what a probe costs, never what it
+    // reads); the oracle replays both snapshots and aggregates over the batch.
     "k35_multi_point" -> ((s, dir) => {
       import graft.operators.Versioned
       val path = s"$shmRoot/graft-vmulti-${System.nanoTime()}"

@@ -327,8 +327,9 @@ private[graft] object GatesPipeline {
 
 
     // ── Text: XL-DEPTH BPE induction — the ≥1024-merge regime (r16
-    // verdict task 4: the BpeRounds harness proved the tier at 1,105
-    // merges; this is the same regime DRIVER-CHECKED as an oracle gate).
+    // verdict task 4: a sf0.1 depth run proved the tier at 1,105 merges,
+    // SCALE.md §"Round-16: BPE at tokenizer depth"; this is the same
+    // regime DRIVER-CHECKED as an oracle gate).
     // Wider batches keep the driver-round count at the large tier's ~40
     // (the per-round scheduling floor is the scale cost, not the merge
     // count): 40 batches x up-to-64 triple-disjoint merges from
@@ -556,10 +557,11 @@ private[graft] object GatesPipeline {
     }),
 
 
-    // (4 batches, not 5: the fold tree grows ~4x per batch — BpeRounds
-    // measures 3.5 s at 4 batches vs 16.3 s at 5 at sf0.1 — and the
-    // large-table regime is text_bpe_encode_table's job; this gate pins
-    // the FOLD tier's semantics at its economic depth)
+    // (4 batches, not 5: the fold tree grows ~4x per batch — 3.5 s at 4
+    // batches vs 16.3 s at 5 at sf0.1, SCALE.md §"Round-14: encode tiers
+    // vs merge-table size" — and the large-table regime is
+    // text_bpe_encode_table's job; this gate pins the FOLD tier's
+    // semantics at its economic depth)
     "text_bpe_batch_encode" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val led = Bpe.mergesBatched(docs, batches = 4, batchSize = 8,

@@ -655,7 +655,8 @@ object ScaleGrowth {
       // batched BPE induction (4 rounds × ≤8 merges): the per-round work
       // is vocabulary-sized, so time should grow well under data ratio
       // at 10× corpus (vocab grows sub-linearly in tokens); the rounds
-      // dimension is measured separately by graft.BpeRounds
+      // dimension is banked in SCALE.md §"Round-14: BPE rounds-dimension
+      // scaling"
       val led = graft.operators.Bpe.mergesBatched(
         spark.read.parquet(s"$dir/documents.parquet"),
         batches = 4, batchSize = 8, window = 48)

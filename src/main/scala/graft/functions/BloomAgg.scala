@@ -64,9 +64,9 @@ object BloomAgg {
     * front (~9.6 KB at 8k/1%), which is the right ceiling for full-size
     * data files but oversized 10–100× for the small-file tail — and in a
     * file manifest the sketch bytes are the bulk of every probe's scan,
-    * so oversizing is priced per lookup, not once (SCALE.md r18
-    * ManifestScale: ~10 KB × files of irreducible sketch read per
-    * probe).
+    * so oversizing is priced per lookup, not once (SCALE.md
+    * §"Round-18: distributed manifest prune": ~10 KB × files of
+    * irreducible sketch read per probe).
     *
     * Mechanics: buffer EXACT distinct keys up to `maxItems`; a group
     * that overflows switches to a `maxItems`-expected Bloom (the fixed

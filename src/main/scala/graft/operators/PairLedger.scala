@@ -97,27 +97,20 @@ private[graft] object PairLedger {
     * thousand-literal array tree per round is measurable per-round
     * planning latency.
     * Returns (delta rows (a, b, dct, dmct), preTotal, postTotal). */
-  /** The deltaScan aggregation as a DataFrame (shared by [[deltaScan]]
-    * and the r19 plan-artifact dump). */
-  private[graft] def deltaScanPlan(vocab: DataFrame,
-      layers: Seq[Seq[(String, String)]],
-      batch: Seq[(String, String)]): DataFrame = {
+  def deltaScan(vocab: DataFrame, layers: Seq[Seq[(String, String)]],
+      batch: Seq[(String, String)])
+      : (Array[(String, String, Long, Long)], Long, Long) = {
     import org.apache.spark.sql.GraftColumnBridge
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     val kernel = GraftColumnBridge.column(graft.expressions.MergePairDeltas(
       UnresolvedAttribute("syms"), layers, batch))
-    vocab
-      .select(col("wct"), explode(kernel).as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum(col("wct") * col("p.dct")).as("dct"),
-        sum(col("wct") * col("p.dmct")).as("dmct"))
-  }
-
-  def deltaScan(vocab: DataFrame, layers: Seq[Seq[(String, String)]],
-      batch: Seq[(String, String)])
-      : (Array[(String, String, Long, Long)], Long, Long) = {
     val rows = withScanConf(vocab.sparkSession) {
-      deltaScanPlan(vocab, layers, batch).collect()
+      vocab
+        .select(col("wct"), explode(kernel).as("p"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(sum(col("wct") * col("p.dct")).as("dct"),
+          sum(col("wct") * col("p.dmct")).as("dmct"))
+        .collect()
     }
     var pre = 0L
     var post = 0L

@@ -300,7 +300,8 @@ object Versioned {
     * ~1.2·cap bytes at 1% fpp. In a manifest the sketch bytes are the
     * bulk of every probe's scan, so right-sizing the small-file tail
     * shrinks the per-lookup manifest read, not just storage
-    * (ManifestScale banks the curvature). */
+    * (curvature banked in SCALE.md §"Round-18: distributed manifest
+    * prune"). */
   private val StatsBloomExpected = 1L << 13
   private val StatsBloomFpp = 0.01
 
@@ -538,20 +539,13 @@ object Versioned {
         new String(java.nio.file.Files.readAllBytes(f.toPath),
           java.nio.charset.StandardCharsets.UTF_8))
         .asInstanceOf[org.apache.spark.sql.types.StructType]
-      (if (sys.props.contains("graft.manifest.nolocal")) None
-       else ManifestLocal.readRows(md, sch)) match {
+      ManifestLocal.readRows(md, sch) match {
         case Some(rows) => spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), sch)
         case None => spark.read.schema(sch).parquet(md)
       }
     }
   }
-
-  /** The (file, dv) resolution frame of the latest manifest — exposed
-    * only for the r19 plan-artifact dump (PlansR19). */
-  private[graft] def manifestFdPlan(spark: SparkSession,
-      dir: String): DataFrame =
-    readManifest(spark, dir, latest(dir)).select(col("file"), col("dv"))
 
   private def readSchema(dir: String,
       v: Long): Option[org.apache.spark.sql.types.StructType] = {
@@ -658,8 +652,9 @@ object Versioned {
     * collected every row's stats — including the ~10 KB Bloom sketch —
     * driver-side per probe: one row per (file, partition value) is
     * bounded metadata, but at 10⁵–10⁶ manifest rows that is GBs of
-    * sketch bytes per point lookup (measured: ManifestScale banked the
-    * curvature). Post-prune the driver holds file names only, sized by
+    * sketch bytes per point lookup (measured: 1.18 GB per probe at
+    * 120k manifest rows, SCALE.md §"Round-18: distributed manifest
+    * prune"). Post-prune the driver holds file names only, sized by
     * the ANSWER (the probe's true file set + fpp), not the table. */
   // takes the already-loaded manifest frame: the probe paths read the
   // manifest ONCE and share it between stats pruning and dv resolution
@@ -825,17 +820,18 @@ object Versioned {
   /** Batched point probe `keyCol IN keys` at snapshot `version` — N
     * keys amortized over ONE distributed manifest scan and ONE data
     * read of the union file set, where N [[readPoint]] calls pay N
-    * manifest scans (ManifestScale prices a scan at seconds per probe
-    * at the 10⁵-file tier, so the batch is the difference between a
-    * key-list lookup that costs one probe and one that costs N). Plan:
-    * per manifest row, the envelope rejects the whole batch span first,
-    * then ONE sketch deserialization answers the in-envelope keys
-    * ([[bloomAnyContain]]). Same guarantees as readPoint per key — no
-    * false negatives, fpp-bounded extra files — and the planned set is
-    * exactly the union of the per-key plans (sketches are
-    * deterministic). Keys ship into the scan as a literal array:
-    * thousands of keys, not millions — past that the probe stops being
-    * a point lookup and belongs to `read(...).join(keys)`. */
+    * manifest scans (a scan costs seconds per probe at the 10⁵-file
+    * tier — 2.8 s at 120k manifest rows, SCALE.md §"Round-18:
+    * distributed manifest prune" — so the batch is the difference
+    * between a key-list lookup that costs one probe and one that costs
+    * N). Plan: per manifest row, the envelope rejects the whole batch
+    * span first, then ONE sketch deserialization answers the
+    * in-envelope keys ([[bloomAnyContain]]). Same guarantees as
+    * readPoint per key — no false negatives, fpp-bounded extra files —
+    * and the planned set is exactly the union of the per-key plans
+    * (sketches are deterministic). Keys ship into the scan as a literal
+    * array: thousands of keys, not millions — past that the probe stops
+    * being a point lookup and belongs to `read(...).join(keys)`. */
   def readPoints(spark: SparkSession, dir: String, keyCol: String,
       keys: Seq[Long], version: Long = -1L): DataFrame = {
     require(keys.nonEmpty, "Versioned.readPoints: empty key batch")

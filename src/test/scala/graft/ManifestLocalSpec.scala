@@ -28,13 +28,17 @@ class ManifestLocalSpec extends SparkSpec {
     case other => other
   }
 
+  private def readSidecar(md: String)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(new String(
+      java.nio.file.Files.readAllBytes(
+        new java.io.File(md, "_manifest_schema.json").toPath),
+      java.nio.charset.StandardCharsets.UTF_8))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+
   private def assertAgree(dir: String, v: Long): Unit = {
     val md = Versioned.manifestDir(dir, v)
-    val schemaJson = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(md, "_manifest_schema.json").toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val sch = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val sch = readSidecar(md)
     val local = ManifestLocal.readRows(md, sch)
     assert(local.isDefined, s"local manifest decode fell back at v=$v")
     val dist = spark.read.schema(sch).parquet(md).collect()
@@ -90,5 +94,99 @@ class ManifestLocalSpec extends SparkSpec {
       val miss = Versioned.readPoint(spark, dir, "k", 10321L).collect()
       assert(miss.isEmpty)
     } finally rmTree(new java.io.File(dir))
+  }
+
+  private def rowKeys(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(r => r.toSeq.map(canon).toString).sorted
+
+  /** A three-version stats + dv store, and the answers `read`,
+    * `readPoint` and `changes` give on it. */
+  private def buildStore(dir: String): Unit = {
+    val base = spark.range(0, 400)
+      .select(col("id").as("k"), (col("id") % 7).as("bucket"),
+        (col("id") * 3).cast("long").as("x"))
+    Versioned.init(spark, dir, "bucket", base, statsCol = Some("k"))
+    Versioned.merge(spark, dir, "bucket", "k",
+      base.filter(col("k") % 50 === 0)
+        .withColumn("x", col("x") + 1000000L).withColumn("op", lit("U")),
+      statsCol = Some("k"))
+    Versioned.deleteKeysDv(spark, dir, "bucket", "k",
+      base.filter(col("k") % 97 === 0).select(col("k"), col("bucket")))
+    ()
+  }
+
+  private def answers(dir: String): Map[String, Seq[String]] =
+    (Versioned.versions(dir).flatMap { v =>
+      Seq(s"read v$v" -> Versioned.read(spark, dir, v)) ++
+        Seq(100L, 194L, 10321L).map(k =>
+          s"readPoint $k v$v" -> Versioned.readPoint(spark, dir, "k", k, v))
+    } ++ Seq((1L, 2L), (2L, 3L), (1L, 3L)).map { case (a, b) =>
+      s"changes $a..$b" -> Versioned.changes(spark, dir, a, b, "k")
+    }).map { case (label, df) => label -> rowKeys(df) }.toMap
+
+  test("a manifest without its _manifest_schema.json sidecar (pre-r18 " +
+    "commit) answers read, readPoint and changes like the same version " +
+    "with it") {
+    val dir = s"/tmp/graft-mlocal3-${System.nanoTime()}"
+    try {
+      buildStore(dir)
+      val vs = Versioned.versions(dir)
+      assert(vs === Seq(1L, 2L, 3L))
+      val withSidecar = answers(dir)
+      // non-trivial answers: probes hit (194 until its v3 dv delete), the
+      // feeds churn
+      assert(withSidecar.size === 15)
+      assert(withSidecar.filter(_._2.isEmpty).keySet === Set(
+        "readPoint 10321 v1", "readPoint 10321 v2", "readPoint 10321 v3",
+        "readPoint 194 v3"))
+      vs.foreach { v =>
+        val f = new java.io.File(Versioned.manifestDir(dir, v),
+          "_manifest_schema.json")
+        assert(f.isFile, s"v=$v committed without a sidecar")
+        assert(f.delete())
+      }
+      assert(answers(dir) === withSidecar)
+    } finally rmTree(new java.io.File(dir))
+  }
+
+  test("a sidecar field type the local decoder rejects (DateType) falls " +
+    "back to the distributed manifest read") {
+    val dir = s"/tmp/graft-mlocal4-${System.nanoTime()}"
+    val tmp = s"/tmp/graft-mlocal4-tmp-${System.nanoTime()}"
+    try {
+      buildStore(dir)
+      val before = answers(dir)
+      val md = Versioned.manifestDir(dir, Versioned.latest(dir))
+      val sch = readSidecar(md)
+      val rows = spark.read.schema(sch).parquet(md)
+      val nRows = rows.count()
+      assert(nRows > 0)
+      // rewrite the latest manifest with an extra DATE column, sidecar
+      // included, as a future commit format might
+      rows.withColumn("committed_on", lit(java.sql.Date.valueOf("2021-07-26")))
+        .coalesce(1).write.parquet(tmp)
+      val mdDir = new java.io.File(md)
+      mdDir.listFiles().filter(_.getName.contains("part-")).foreach(_.delete())
+      new java.io.File(tmp).listFiles()
+        .filter(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+        .foreach(f => java.nio.file.Files.copy(f.toPath,
+          new java.io.File(mdDir, f.getName).toPath))
+      val sch2 = sch.add("committed_on",
+        org.apache.spark.sql.types.DateType)
+      java.nio.file.Files.write(
+        new java.io.File(mdDir, "_manifest_schema.json").toPath,
+        sch2.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      assert(readSidecar(md) === sch2)
+      assert(ManifestLocal.readRows(md, sch2).isEmpty,
+        "the local decoder accepted a DateType manifest column")
+      val dist = spark.read.schema(sch2).parquet(md)
+      assert(dist.count() === nRows)
+      assert(dist.filter(col("committed_on").isNull).count() === 0L)
+      assert(answers(dir) === before)
+    } finally {
+      rmTree(new java.io.File(dir))
+      rmTree(new java.io.File(tmp))
+    }
   }
 }
