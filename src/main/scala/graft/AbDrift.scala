@@ -70,28 +70,17 @@ object AbDrift {
         .count()
     }
 
-    def withConf(key: String, value: String)(body: => Long): Long = {
-      val before = spark.conf.getOption(key)
-      spark.conf.set(key, value)
-      try body
-      finally before match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-
     def twsUv(statePartitions: Int, changelog: Boolean): Long =
-      withConf("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        withConf("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", changelog.toString) {
-          graft.streaming.StreamRunner.collect(
-            graft.streaming.TwsStreams.uvDedup(
-              graft.streaming.Sources.eventsStreamSplit(spark, sfDir)
-                .withWatermark("ts", "0 seconds")),
-            statePartitions = statePartitions)
-            .count()
-        }
+      Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb." +
+          "changelogCheckpointing.enabled" -> changelog.toString) {
+        graft.streaming.StreamRunner.collect(
+          graft.streaming.TwsStreams.uvDedup(
+            graft.streaming.Sources.eventsStreamSplit(spark, sfDir)
+              .withWatermark("ts", "0 seconds")),
+          statePartitions = statePartitions)
+          .count()
       }
 
     // session-6 arms: the 217-gate bench put text_bpe_encode at 10.12 s
@@ -121,11 +110,10 @@ object AbDrift {
           .agg(count(lit(1)).as("ct")),
         statePartitions = sp).count()
     def rocksCl(body: => Long): Long =
-      withConf("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        withConf("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")(body)
-      }
+      Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb." +
+          "changelogCheckpointing.enabled" -> "true")(body)
     // r13 as-of tier arms: the SAME as-of result (each lineitem → its
     // supplier's latest distinct ship date at-or-before the row's own
     // shipdate) computed by the composed union+window operator vs the
@@ -188,7 +176,7 @@ object AbDrift {
     lazy val asofBucketedTables: (String, String, String, String) = {
       val uniq = System.nanoTime()
       val (lt, rt) = (s"graft_ab_asof_l_$uniq", s"graft_ab_asof_r_$uniq")
-      val (lp, rp) = (s"${GateSupport.shmRoot}/$lt", s"${GateSupport.shmRoot}/$rt")
+      val (lp, rp) = (s"${TmpDirs.shmRoot}/$lt", s"${TmpDirs.shmRoot}/$rt")
       val li = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"),
           col("l_shipdate"))
@@ -216,7 +204,7 @@ object AbDrift {
     // docs) index rows, zero history re-shingling). Write is one-time,
     // outside the timed region.
     lazy val bandIndexPath: String = {
-      val p = s"${GateSupport.shmRoot}/graft_ab_bandidx_${System.nanoTime()}"
+      val p = s"${TmpDirs.shmRoot}/graft_ab_bandidx_${System.nanoTime()}"
       val docs = Tables.documents(spark, sfDir)
       graft.operators.Dedup.minhashBandIndex(
           docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L))
@@ -252,7 +240,7 @@ object AbDrift {
     // once, outside the timed thunks; each trial drains from a fresh
     // checkpoint (8 micro-batches, maxFilesPerTrigger=1).
     lazy val cdfStore: String = {
-      val path = s"${GateSupport.shmRoot}/graft-ab-cdf-${System.nanoTime()}"
+      val path = s"${TmpDirs.shmRoot}/graft-ab-cdf-${System.nanoTime()}"
       val base = Tables.orders(spark, sfDir)
         .select(col("o_orderkey").as("k"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -267,14 +255,14 @@ object AbDrift {
       path
     }
     def cdfArm(durable: Boolean): Long = {
-      val ckpt = s"${GateSupport.shmRoot}/graft-ab-cdfckpt-${System.nanoTime()}"
+      val ckpt = s"${TmpDirs.shmRoot}/graft-ab-cdfckpt-${System.nanoTime()}"
       try {
         val n = new java.util.concurrent.atomic.AtomicLong(0L)
         graft.streaming.ChangeFeed.run(spark, cdfStore, "k", ckpt,
           durableGuard = durable) { (cdf, _, _, _) =>
             n.addAndGet(cdf.count()); () }
         n.get() // correctness anchor: both arms fold identical row counts
-      } finally GateSupport.rmTree(ckpt)
+      } finally TmpDirs.rmTree(ckpt)
     }
 
     // r15: what does versioned-store FILE SKIPPING buy — the same 40
@@ -284,7 +272,7 @@ object AbDrift {
     // scan (vscan). The store builds once, outside the timed thunks;
     // per-arm cost is the 40 probes only, checksum-forced.
     lazy val vskipStore: String = {
-      val path = s"${GateSupport.shmRoot}/graft-ab-vskip-${System.nanoTime()}"
+      val path = s"${TmpDirs.shmRoot}/graft-ab-vskip-${System.nanoTime()}"
       val raw = Tables.orders(spark, sfDir)
         .select(col("o_orderkey").as("k"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -322,7 +310,7 @@ object AbDrift {
     // collection). Interleaved in one JVM so the deltas are the plan's.
     def vWriteArm(mode: String): Long = {
       import graft.operators.Versioned
-      val path = s"${GateSupport.shmRoot}/graft-ab-vwrite-${System.nanoTime()}"
+      val path = s"${TmpDirs.shmRoot}/graft-ab-vwrite-${System.nanoTime()}"
       try {
         val raw = Tables.orders(spark, sfDir)
           .select(col("o_orderkey").as("k"),
@@ -360,7 +348,7 @@ object AbDrift {
           Versioned.backfillStats(spark, path, "bucket",
             Seq("k", "c", "price"))
         Versioned.latest(path)
-      } finally GateSupport.rmTree(path)
+      } finally TmpDirs.rmTree(path)
     }
 
     // r17: price the DELETION-VECTOR tier against the COW rewrite on the
@@ -377,7 +365,7 @@ object AbDrift {
     // separately from the delete itself in the [ab-detail] lines).
     def vDeleteArm(dv: Boolean, materialize: Boolean = false): Long = {
       import graft.operators.Versioned
-      val path = s"${GateSupport.shmRoot}/graft-ab-vdel-${System.nanoTime()}"
+      val path = s"${TmpDirs.shmRoot}/graft-ab-vdel-${System.nanoTime()}"
       try {
         // a realistic row: ~1 KB payload. COW must read AND rewrite it
         // for every surviving row of every touched partition; the DV
@@ -414,7 +402,7 @@ object AbDrift {
         println(f"[ab-detail] $tag delete=$tDel%6.3f s mat=$tMat%6.3f s " +
           f"read=$tRead%6.3f s rows=$n")
         n
-      } finally GateSupport.rmTree(path)
+      } finally TmpDirs.rmTree(path)
     }
 
     // r17 layout-quality arms: the SAME store, probes and stats under the
@@ -427,7 +415,7 @@ object AbDrift {
     def layoutArm(hilb: Boolean): Long = {
       import graft.operators.Versioned
       import graft.functions.LayoutFns
-      val path = s"${GateSupport.shmRoot}/graft-ab-layout-${System.nanoTime()}"
+      val path = s"${TmpDirs.shmRoot}/graft-ab-layout-${System.nanoTime()}"
       try {
         val base = Tables.orders(spark, sfDir)
           .select(col("o_orderkey").as("k"),
@@ -453,7 +441,7 @@ object AbDrift {
         println(f"[ab-detail] ${if (hilb) "hilbert" else "zorder "} " +
           f"files_probed=$probed rows=$rows")
         probed
-      } finally GateSupport.rmTree(path)
+      } finally TmpDirs.rmTree(path)
     }
 
     val customArms: Map[String, () => Long] = Map(
@@ -508,11 +496,13 @@ object AbDrift {
       // (drop each store after commit, reload next batch); bounds how
       // much provider-cache retention is WORTH.
       "ch_join_maint" -> (() =>
-        withConf("spark.sql.streaming.stateStore.maintenanceInterval", "600s") {
+        Sessions.withConf(spark,
+            "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s") {
           SparkEntry.queries("stream_chained_join_agg")(spark, sfDir).count()
         }),
       "ch_join_unload" -> (() =>
-        withConf("spark.sql.streaming.stateStore.unloadOnCommit", "true") {
+        Sessions.withConf(spark,
+            "spark.sql.streaming.stateStore.unloadOnCommit" -> "true") {
           SparkEntry.queries("stream_chained_join_agg")(spark, sfDir).count()
         }),
       // r14 rate-limit tiers: array (collect_list + HOF fold) vs sorted
@@ -527,11 +517,13 @@ object AbDrift {
           SparkEntry.queries("t5_rate_limit_sorted")(spark, sfDir)); 0L
       }),
       "ch_agg_maint" -> (() =>
-        withConf("spark.sql.streaming.stateStore.maintenanceInterval", "600s") {
+        Sessions.withConf(spark,
+            "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s") {
           chainedAgg(2)
         }),
       "ch_agg_unload" -> (() =>
-        withConf("spark.sql.streaming.stateStore.unloadOnCommit", "true") {
+        Sessions.withConf(spark,
+            "spark.sql.streaming.stateStore.unloadOnCommit" -> "true") {
           chainedAgg(2)
         }))
 
@@ -565,17 +557,17 @@ object AbDrift {
       println(f"[ab] $name%-18s median $med%7.3f  min ${v.head}%7.3f  max ${v.last}%7.3f  n=${v.size}")
     }
     if (armNames.contains("dedup_inc_atrest"))
-      GateSupport.rmTree(bandIndexPath)
+      TmpDirs.rmTree(bandIndexPath)
     if (armNames.exists(_.startsWith("vskip")) ||
         armNames.exists(_.startsWith("vscan")))
-      GateSupport.rmTree(vskipStore)
+      TmpDirs.rmTree(vskipStore)
     if (armNames.exists(_.startsWith("cdf_")))
-      GateSupport.rmTree(cdfStore)
+      TmpDirs.rmTree(cdfStore)
     if (armNames.contains("asof_bucketed")) {
       val (lt, rt, lp, rp) = asofBucketedTables
       graft.operators.Bucketing.drop(spark, lt)
       graft.operators.Bucketing.drop(spark, rt)
-      GateSupport.rmTree(lp); GateSupport.rmTree(rp)
+      TmpDirs.rmTree(lp); TmpDirs.rmTree(rp)
     }
     spark.stop()
   }

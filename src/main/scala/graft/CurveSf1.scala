@@ -49,7 +49,6 @@ object CurveSf1 {
     * CONVERTED events ts and therefore cannot feed the gate closures). */
   private def synthRaw(spark: SparkSession, sfDir: String, outDir: String,
       r: Int): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def raw(t: String): DataFrame =
       spark.read.option("pathGlobFilter", s"$t.parquet").parquet(sfDir)
     def replicate(df: DataFrame, build: Int => DataFrame): DataFrame =

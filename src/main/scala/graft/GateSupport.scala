@@ -8,31 +8,14 @@ import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared helpers for the Gates* registry families: numeric casts,
-  * gate-scoped tmp dirs, the RocksDB-provider wrapper, memoized pair
-  * scans, CEP pattern definitions, and reusable oracle-SQL fragments.
+/** Shared helpers for the Gates* registry families: numeric casts, the
+  * RocksDB-provider wrapper, memoized pair scans, CEP pattern definitions,
+  * and reusable oracle-SQL fragments.
   */
 private[graft] object GateSupport {
 
   private[graft] def dec(c: String): org.apache.spark.sql.Column =
     col(c).cast("decimal(18,2)")
-
-  /** tmpfs root for gate-scoped throwaway stores (same /dev/shm-or-tmpdir
-    * rule as Sources.ensureEventsSplit). */
-  private[graft] def shmRoot: String =
-    if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-
-  /** Recursive delete for gate-scoped throwaway dirs (every gate that
-    * stages a fixture sweeps it here, success or failure). */
-  private[graft] def rmTree(p: String): Unit = {
-    def go(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(go)
-      f.delete(); ()
-    }
-    go(new java.io.File(p))
-  }
 
   /** Runs `body` with the RocksDB state-store provider set, restoring the
     * previous provider after. The big-state posture for the *_rocksdb /
@@ -40,32 +23,16 @@ private[graft] object GateSupport {
     * MATERIALIZE its result under the conf (`localCheckpoint(true)`) —
     * a lazy DataFrame would re-plan after the conf is restored. */
   private[graft] def withRocksDb(s: SparkSession)(
-      body: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // changelog checkpointing: each commit ships the batch's changelog
-    // instead of a full snapshot (snapshots move to background
-    // maintenance) — the production posture for frequent small commits,
-    // and measured faster here too (AbDrift r12: tws_uv_changelog 2.33 s
-    // vs 2.60 s median without)
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val before = s.conf.getOption(key)
-    val clBefore = s.conf.getOption(clKey)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    s.conf.set(clKey, "true")
-    try body.localCheckpoint(true)
-    finally {
-      (before match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      })
-      clBefore match {
-        case Some(v) => s.conf.set(clKey, v)
-        case None => s.conf.unset(clKey)
-      }
-    }
-  }
+      body: => DataFrame): DataFrame =
+    Sessions.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      // changelog checkpointing: each commit ships the batch's changelog
+      // instead of a full snapshot (snapshots move to background
+      // maintenance) — the production posture for frequent small commits,
+      // and measured faster here too (AbDrift r12: tws_uv_changelog 2.33 s
+      // vs 2.60 s median without)
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true")(body.localCheckpoint(true))
 
   /** The dedup_semantic* gates' shared verdict block: materializes the
     * dedup result once (three aggregations read it) and reduces it to the

@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object GatesJoins {
   import GateSupport._
+  import TmpDirs._
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object GatesStreaming {
   import GateSupport._
+  import TmpDirs._
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -853,9 +854,7 @@ private[graft] object GatesStreaming {
     "stream_state_reader" -> ((s, dir) => {
       val ckpt = s"$shmRoot/graft-srckpt-${System.nanoTime()}"
       val sink = s"graft_sr_${System.nanoTime()}"
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
+      try Sessions.withConf(s, "spark.sql.shuffle.partitions" -> "2") {
         val q = graft.streaming.StatefulStreams.uvDedup(
           graft.streaming.Sources.eventsStreamSplit(s, dir))
           .writeStream.format("memory").queryName(sink)
@@ -869,7 +868,6 @@ private[graft] object GatesStreaming {
           .orderBy(col("user_id"))
           .localCheckpoint(true)
       } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
         s.catalog.dropTempView(sink)
         rmTree(ckpt)
       }

@@ -68,14 +68,6 @@ object ScaleGrowth {
       .write.mode("overwrite").parquet(s"$outDir/events.parquet")
   }
 
-  /** Recursive delete for the throwaway disk stores the ops stage. */
-  private def rmAll(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(rmAll)
-    f.delete(); ()
-  }
-
   /** The measured suite: name -> (dir => (claimedSec, rows, note)). Each
     * op times its OWN claimed computation — for most that is the whole
     * closure, but ops with an untimed prep phase (e.g. the distributed
@@ -90,17 +82,9 @@ object ScaleGrowth {
     }
     // run an op with the RocksDB state-store provider, restoring the
     // session default (HDFSBackedStateStoreProvider) afterwards
-    def rocksDb(f: String => (Double, Long, String)): String => (Double, Long, String) = { dir =>
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val before = spark.conf.getOption(key)
-      spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try f(dir)
-      finally before match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    def rocksDb(f: String => (Double, Long, String)): String => (Double, Long, String) =
+      dir => Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f(dir))
     Seq(
     "ngram_pairs" -> whole { dir =>
       val n = Dedup.ngramJaccardPairs(Tables.documents(spark, dir)).count()
@@ -374,11 +358,6 @@ object ScaleGrowth {
       val ev = spark.read.parquet(s"$dir/events.parquet")
       def part(i: Int) = ev.filter(pmod(col("event_id"), lit(3L)) === i)
       val stage = s"$dir/replay-stage-${System.nanoTime()}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-        f.delete(); ()
-      }
       try {
         val stream = graft.streaming.Sources.stagedChunkStream(spark,
           Seq(part(0), part(1).unionByName(part(0)),
@@ -390,7 +369,7 @@ object ScaleGrowth {
         val sec = (System.nanoTime() - t0) / 1e9
         (sec, n, s"deduped=$n (claim: exactly the input rows = Rx; " +
           "state rows = distinct keys; time excl. fixture staging)")
-      } finally rm(new java.io.File(stage))
+      } finally TmpDirs.rmTree(stage)
     },
     "dpp_prune" -> { dir =>
       // dynamic partition pruning: a 5-day dim filter must read 5 of 30
@@ -412,19 +391,15 @@ object ScaleGrowth {
         val t0 = System.nanoTime()
         val n = run()
         val prunedSec = (System.nanoTime() - t0) / 1e9
-        val key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-        val beforeConf = spark.conf.getOption(key)
-        spark.conf.set(key, "false")
         val t1 = System.nanoTime()
-        val fullSec = try { run(); (System.nanoTime() - t1) / 1e9 }
-          finally beforeConf match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
+        val fullSec = Sessions.withConf(spark,
+            "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false") {
+          run(); (System.nanoTime() - t1) / 1e9
+        }
         (prunedSec, n,
           f"days=$n (flat: 5 at any R); dpp=$prunedSec%.2fs vs " +
             f"no-dpp=$fullSec%.2fs same scale")
-      } finally rmAll(new java.io.File(path))
+      } finally TmpDirs.rmTree(path)
     },
     "merge_cow" -> { dir =>
       // copy-on-write MERGE: timed span = the merge; the structural claim
@@ -451,7 +426,7 @@ object ScaleGrowth {
         val n = spark.read.parquet(path)
           .filter(col("bucket").isin(2L, 5L)).count()
         (sec, n, s"slice rows=$n (~Rx); churned 2/16 partitions at any R")
-      } finally rmAll(new java.io.File(path))
+      } finally TmpDirs.rmTree(path)
     },
     "incremental_refresh" -> { dir =>
       // refresh = O(delta + groups): the state table is GROUPS-sized
@@ -475,7 +450,7 @@ object ScaleGrowth {
         val n = merged.count()
         (sec, n, s"state rows=$n (flat: groups, not data); " +
           "refresh scans delta only")
-      } finally rmAll(new java.io.File(statePath))
+      } finally TmpDirs.rmTree(statePath)
     },
     "cms_build_probe" -> whole { dir =>
       // sketch size is <= d*w whatever R is — the counter IS the claim;
@@ -533,7 +508,7 @@ object ScaleGrowth {
         (sec, files.size.toLong,
           s"files read=${files.size}/$total (strict subset at any R); " +
             s"rows matched=$n")
-      } finally rmAll(new java.io.File(path))
+      } finally TmpDirs.rmTree(path)
     },
     "spatial_grid_join" -> whole { dir =>
       // grid candidates are density-bounded (9ε² window per point) where
@@ -631,7 +606,7 @@ object ScaleGrowth {
             f"(${rawProbe.toDouble / pqProbe}%.1fx smaller scan); full index " +
             f"pq=$pqFull B vs raw=$rawFull B (${rawFull.toDouble / pqFull}%.1fx); " +
             s"results=$n")
-      } finally { rmAll(new java.io.File(praw)); rmAll(new java.io.File(ppq)) }
+      } finally { TmpDirs.rmTree(praw); TmpDirs.rmTree(ppq) }
     },
     "asof_merge_join" -> whole { dir =>
       // engine-native as-of exec (j19 tier): each event → its user's
@@ -710,7 +685,7 @@ object ScaleGrowth {
         (sec, heavy,
           s"rewrote bucket-3 files only ($heavy fresh rows, ~Rx slice); " +
             s"$kept light (file,part) rows kept their DVs at any R")
-      } finally rmAll(new java.io.File(path))
+      } finally TmpDirs.rmTree(path)
     },
     "fuzzy_dist1_blocked" -> whole { dir =>
       // deletion-neighborhood blocking: candidates ~Rx (replicas are

@@ -69,6 +69,42 @@ object Sessions {
     spark
   }
 
+  /** One JVM-wide monitor for every [[withConf]] scope. */
+  private val confLock = new Object
+
+  /** Run `body` with each `key -> value` set on `spark`'s session conf,
+    * then put every key back as it was: its old value, or unset if it was
+    * not set. This is the engine's only way to change session conf; library
+    * code assumes the [[tuned]] settings hold everywhere else.
+    *
+    * Scopes are serialised by one JVM-wide monitor, so two threads never
+    * interleave their set/restore windows (a lock-free save/restore run
+    * on two threads can restore a neighbour's value and leave it behind).
+    * The monitor is reentrant: nested scopes on one thread work and
+    * restore level by level. The contract:
+    *   - a scope holds only settings that do not change results (widths,
+    *     AQE, state-store provider): concurrent UNSCOPED queries on other
+    *     threads plan under them while the scope is open;
+    *   - `body` materialises what it plans (an action, a
+    *     `localCheckpoint(true)`, a streaming query run to termination);
+    *     a lazy DataFrame returned from the scope re-plans later under the
+    *     restored conf;
+    *   - `body` never blocks on another thread that itself enters a scope
+    *     (that thread waits for the monitor this one holds: a deadlock). */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T =
+    confLock.synchronized {
+      // the explicitly set confs, not `getOption`: getOption reports a
+      // registered conf's default as a value, and restoring that would pin it
+      val set = spark.conf.getAll
+      val prev = kvs.map { case (k, _) => k -> set.get(k) }
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.reverse.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
   /** Force FULL computation of a DataFrame for timing harnesses.
     *
     * `.count()` is the wrong action for measurement: the optimizer prunes

@@ -66,14 +66,13 @@ object Tables {
     * generations (INT64 TIMESTAMP(NANOS,false) → INT64 TIMESTAMP_MICROS).
     * A real engine reads what the footer says, so we branch on the observed
     * Spark-visible type instead of hard-coding one generation's contract —
-    * see [[normalizeEventTs]]. `nanosAsLong` stays set: it only affects
-    * NANOS-annotated columns (read as raw longs instead of erroring) and is
-    * a no-op for every other physical type.
+    * see [[normalizeEventTs]]. Relies on `nanosAsLong`, which
+    * [[Sessions.tuned]] sets: it only affects NANOS-annotated columns (read
+    * as raw longs instead of erroring) and is a no-op for every other
+    * physical type.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, dir: String): DataFrame =
     normalizeEventTs(read(spark, dir, "events"))
-  }
 
   /** Canonicalize an events frame's `ts` to TimestampType (micros, UTC
     * instant) whatever the file's physical type surfaced as:

@@ -51,30 +51,6 @@ private[graft] object PairLedger {
         s"(got ${m.keys.mkString(", ")})")).asInstanceOf[Long]
   }
 
-  /** Run `body` with AQE off and a single shuffle partition, restoring
-    * the session confs after. The per-round delta scans are ONE tiny
-    * fixed-shape aggregation each; AQE turns every such query into two
-    * driver-scheduled jobs (one per materialized shuffle stage) plus a
-    * re-optimization pass, and at 36–40 rounds per induction gate the
-    * extra per-job scheduling latency is pure driver-gap overhead
-    * (guide §5 action count). One reducer is the right width at ANY
-    * scale, not a local[32] tuning: aggregation is partial map-side, so
-    * the lone reducer receives at most (distinct pairs touched this
-    * round) × (map partitions) pre-aggregated rows — bounded metadata,
-    * the same class as the collect that follows. */
-  private def withScanConf[T](spark: org.apache.spark.sql.SparkSession)
-      (body: => T): T = {
-    val keys = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "1")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** The per-round incremental scan both induction loops share: apply
     * the deferred `layers` then `batch` (this round's rules) over the
     * CHECKPOINTED symbols — all inside one kernel evaluation, over raw
@@ -87,7 +63,7 @@ private[graft] object PairLedger {
     * batch, riding the same aggregation as the deltas instead of an
     * `observe()` whose Observation completes on the async listener bus
     * (measured tens of ms post-job latency per round). ONE job (AQE
-    * off — see [[withScanConf]]), whose aggregate input is a few delta
+    * off — see below), whose aggregate input is a few delta
     * rows per CHANGED word instead of every adjacent pair of every
     * word; plain `explode` is safe (never drops a row) because every
     * row emits at least the sentinel. The kernel expression is
@@ -104,7 +80,19 @@ private[graft] object PairLedger {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     val kernel = GraftColumnBridge.column(graft.expressions.MergePairDeltas(
       UnresolvedAttribute("syms"), layers, batch))
-    val rows = withScanConf(vocab.sparkSession) {
+    // AQE off and a single shuffle partition. The per-round delta scans
+    // are ONE tiny fixed-shape aggregation each; AQE turns every such query
+    // into two driver-scheduled jobs (one per materialized shuffle stage)
+    // plus a re-optimization pass, and at 36–40 rounds per induction gate
+    // the extra per-job scheduling latency is pure driver-gap overhead
+    // (guide §5 action count). One reducer is the right width at ANY
+    // scale, not a local[32] tuning: aggregation is partial map-side, so
+    // the lone reducer receives at most (distinct pairs touched this
+    // round) × (map partitions) pre-aggregated rows — bounded metadata,
+    // the same class as the collect that follows.
+    val rows = graft.Sessions.withConf(vocab.sparkSession,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "1") {
       vocab
         .select(col("wct"), explode(kernel).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))

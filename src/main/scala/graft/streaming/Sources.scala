@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.TmpDirs.{rmTree, shmRoot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -146,7 +147,6 @@ object Sources {
     * as the batch reader (Tables.normalizeEventTs). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     graft.expressions.GraftExtensions.ensureRegistered(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.Tables.normalizeEventTs(
       spark.readStream
         .schema(probedSchema(spark, dir, "events.parquet"))
@@ -240,11 +240,8 @@ object Sources {
   private[graft] def stagedChunkStream(spark: SparkSession,
       chunks: Seq[DataFrame], stageDir: Option[String] = None): DataFrame = {
     require(chunks.nonEmpty, "stagedChunkStream needs at least one chunk")
-    val root =
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
     val stage = new java.io.File(stageDir.getOrElse(
-      s"$root/graft-envchunks-${System.nanoTime()}"))
+      s"$shmRoot/graft-envchunks-${System.nanoTime()}"))
     stage.mkdirs()
     val base = (System.currentTimeMillis() / 1000L) * 1000L
     chunks.zipWithIndex.foreach { case (df, i) =>
@@ -289,9 +286,6 @@ object Sources {
   private def ensureEventsSplit(spark: SparkSession, dir: String,
       parts: Int, tsContiguous: Boolean): String = splitLock.synchronized {
     require(parts >= 2, s"parts must be >= 2, got $parts")
-    val root =
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     val mode = if (tsContiguous) "" else "-rr"
     // key the cache on a fingerprint of the SOURCE file too: a driver-side
@@ -299,31 +293,26 @@ object Sources {
     // stale pre-regeneration data would silently survive on tmpfs
     val src = new java.io.File(dir, "events.parquet")
     val fp = s"${src.length()}-${src.lastModified()}"
-    val out = new java.io.File(s"$root/graft-events-split-$key-$parts$mode-$fp")
+    val out = new java.io.File(s"$shmRoot/graft-events-split-$key-$parts$mode-$fp")
     def chunkFiles(d: java.io.File): Array[java.io.File] =
       Option(d.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet"))
     if (out.isDirectory && chunkFiles(out).length == parts)
       return out.getPath
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete(); ()
-    }
     // sweep stale-fingerprint siblings: each driver-side regeneration
     // changes fp, and without this the tmpfs would keep a full events
     // copy per generation
     val stalePat = java.util.regex.Pattern.compile(
       java.util.regex.Pattern.quote(s"graft-events-split-$key-$parts$mode-") +
         "\\d+-\\d+(\\.build)?")
-    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+    Option(new java.io.File(shmRoot).listFiles()).getOrElse(Array.empty)
       .filter(f => stalePat.matcher(f.getName).matches() &&
         f.getName != out.getName && f.getName != out.getName + ".build")
-      .foreach(rmTree)
-    rmTree(out)
+      .foreach(f => rmTree(f.getPath))
+    rmTree(out.getPath)
     val build = new java.io.File(out.getPath + ".build")
-    rmTree(build)
+    rmTree(build.getPath)
     build.mkdirs()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // normalize ONCE here (type-driven, see Tables.normalizeEventTs), so
     // chunk files always carry the canonical TimestampType schema and the
     // split readers need no per-physical-type branch; cuts compare on
@@ -357,7 +346,7 @@ object Sources {
           "— empty chunk predicate?"))
       val dest = new java.io.File(build, f"chunk-$i%02d.parquet")
       java.nio.file.Files.move(part.toPath, dest.toPath)
-      rmTree(tmp)
+      rmTree(tmp.getPath)
       // file-source processing order = modification time; pin it
       dest.setLastModified(base + i * 2000L)
       ()

@@ -1,8 +1,11 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.Trigger
+import graft.Sessions.withConf
+import graft.TmpDirs.{rmTree, shmRoot}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Drives a streaming DataFrame to completion over its (finite) sources
   * with Trigger.AvailableNow into a memory sink, returning the result as a
@@ -24,29 +27,45 @@ object StreamRunner {
     * for the single-host harness (measured: the stream-stream join runs
     * 7.9s at 32 partitions, 2.4s at 4); a real cluster sizes this to
     * state volume / executor count instead. */
-  val StatePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "8").toInt
+  val StatePartitions: Int = 8
 
-  /** Checkpoint root: tmpfs when available — these are throwaway
-    * bounded-run checkpoints, and state-store commits are pure file-I/O
-    * overhead on them (a durable store is only right for a real
-    * long-running deployment, which goes through Sinks.* with an explicit
-    * checkpointLocation instead). */
-  private val ckptRoot: String =
-    if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
+  /** A fresh throwaway dir on tmpfs: these are bounded-run checkpoints,
+    * and state-store commits are pure file-I/O overhead on them (a durable
+    * store is only right for a real long-running deployment, which goes
+    * through Sinks.* with an explicit checkpointLocation instead). */
+  private def freshDir(kind: String): String =
+    s"$shmRoot/graft-$kind-${n.incrementAndGet()}-${System.nanoTime()}"
 
-  /** Sweep a bounded run's throwaway checkpoint/stage dir. Every entry
-    * point cleans up in a finally — before r15 only runForeachBatch did,
-    * and a long bench session left thousands of committed-offset dirs on
-    * tmpfs (a leak, and at 100 TB a checkpoint-store bill). */
-  private def sweep(path: String): Unit = {
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory)
-        Option(x.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      x.delete(); ()
-    }
-    rm(new java.io.File(path))
+  /** The one bounded-run loop every entry point shares: `sink` sets up
+    * the writer (memory sink or a `foreachBatch` body), the query runs
+    * with Trigger.AvailableNow to termination with `statePartitions` as
+    * its shuffle/state width, and a fresh checkpoint is swept on exit,
+    * success or failure (unswept, a long bench session leaves thousands
+    * of committed-offset dirs on tmpfs). A `sharedCkpt` is left in place
+    * for its owner to sweep. */
+  private def run(stream: DataFrame, statePartitions: Int = StatePartitions,
+      sharedCkpt: Option[String] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val ckpt = sharedCkpt.getOrElse(freshDir("ckpt"))
+    try withConf(stream.sparkSession,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
+      sink(stream.writeStream)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    } finally if (sharedCkpt.isEmpty) rmTree(ckpt)
+  }
+
+  /** Rows a foreachBatch sink accumulated on the driver, as one batch
+    * DataFrame (`schema` is null when the stream produced no batch). */
+  private def gathered(spark: org.apache.spark.sql.SparkSession,
+      acc: java.util.Queue[Array[Row]], schema: StructType,
+      who: String): DataFrame = {
+    require(schema != null, s"$who: the stream produced no batches")
+    val rows = new java.util.ArrayList[Row]()
+    acc.forEach(a => a.foreach(rows.add))
+    spark.createDataFrame(rows, schema)
   }
 
   /** @param statePartitions shuffle/state partition count for THIS query.
@@ -60,26 +79,11 @@ object StreamRunner {
     *   state volume / executor count, exactly like shuffle width. */
   def collect(stream: DataFrame, outputMode: String = "append",
       statePartitions: Int = StatePartitions): DataFrame = {
-    val spark = stream.sparkSession
-    val id = n.incrementAndGet()
-    val name = s"graft_stream_$id"
-    val ckpt = s"$ckptRoot/graft-ckpt-$id-${System.nanoTime()}"
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", before)
-      sweep(ckpt) // the memory-sink table outlives the checkpoint
-    }
-    spark.table(name)
+    val name = s"graft_stream_${n.incrementAndGet()}"
+    // the memory-sink table outlives the checkpoint
+    run(stream, statePartitions)(
+      _.format("memory").queryName(name).outputMode(outputMode))
+    stream.sparkSession.table(name)
   }
 
   /** Like [[collect]] but through `foreachBatch`, applying a BATCH
@@ -91,34 +95,15 @@ object StreamRunner {
     * uses — a bounded-run harness helper, not a production sink (live
     * deployments write each transformed batch through Sinks.* instead). */
   def collectBatches(stream: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
-    val spark = stream.sparkSession
-    val id = n.incrementAndGet()
-    val ckpt = s"$ckptRoot/graft-ckpt-$id-${System.nanoTime()}"
-    val acc = new java.util.concurrent.ConcurrentLinkedQueue[
-      Array[org.apache.spark.sql.Row]]()
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val r = f(b)
-          schema = r.schema
-          acc.add(r.collect())
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", before)
-      sweep(ckpt)
-    }
-    require(schema != null, "collectBatches: the stream produced no batches")
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    acc.forEach(a => a.foreach(rows.add))
-    spark.createDataFrame(rows, schema)
+    val acc = new java.util.concurrent.ConcurrentLinkedQueue[Array[Row]]()
+    @volatile var schema: StructType = null
+    run(stream)(_.foreachBatch { (b: DataFrame, _: Long) =>
+      val r = f(b)
+      schema = r.schema
+      acc.add(r.collect())
+      ()
+    })
+    gathered(stream.sparkSession, acc, schema, "collectBatches")
   }
 
   /** Run a bounded stream through `foreachBatch` purely for its side
@@ -126,24 +111,8 @@ object StreamRunner {
     * into a store (incremental state upkeep, MERGE-style writes) rather
     * than appending rows. The throwaway checkpoint is swept on exit —
     * a fold sink's durability lives in its own store, not here. */
-  def runForeachBatch(stream: DataFrame)(f: (DataFrame, Long) => Unit): Unit = {
-    val spark = stream.sparkSession
-    val id = n.incrementAndGet()
-    val ckpt = s"$ckptRoot/graft-ckpt-$id-${System.nanoTime()}"
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-    try {
-      val q = stream.writeStream
-        .foreachBatch(f)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", before)
-      sweep(ckpt)
-    }
-  }
+  def runForeachBatch(stream: DataFrame)(f: (DataFrame, Long) => Unit): Unit =
+    run(stream)(_.foreachBatch(f))
 
   /** T8 as an observable behavior: run the SAME query over TWO
     * lifecycles sharing ONE checkpoint. Lifecycle 1 processes the first
@@ -166,13 +135,11 @@ object StreamRunner {
       mkStream: String => DataFrame): DataFrame = {
     require(splitAt > 0 && splitAt < chunks.length,
       s"splitAt must split $chunks non-trivially, got $splitAt")
-    val id = n.incrementAndGet()
-    val stage = new java.io.File(s"$ckptRoot/graft-stage-$id-${System.nanoTime()}")
+    val stage = new java.io.File(freshDir("stage"))
     stage.mkdirs()
-    val ckpt = s"$ckptRoot/graft-ckpt-$id-${System.nanoTime()}"
-    val acc = new java.util.concurrent.ConcurrentLinkedQueue[
-      Array[org.apache.spark.sql.Row]]()
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
+    val ckpt = freshDir("ckpt")
+    val acc = new java.util.concurrent.ConcurrentLinkedQueue[Array[Row]]()
+    @volatile var schema: StructType = null
     @volatile var sparkRef: org.apache.spark.sql.SparkSession = null
     def stageUp(files: Seq[java.io.File]): Unit = files.foreach { f =>
       val dest = new java.io.File(stage, f.getName)
@@ -182,33 +149,21 @@ object StreamRunner {
     }
     def lifecycle(): Unit = {
       val stream = mkStream(stage.getPath)
-      val spark = stream.sparkSession
-      sparkRef = spark
-      val before = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      try {
-        val q = stream.writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            schema = b.schema
-            acc.add(b.collect())
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      sparkRef = stream.sparkSession
+      run(stream, statePartitions, Some(ckpt))(
+        _.foreachBatch { (b: DataFrame, _: Long) =>
+          schema = b.schema
+          acc.add(b.collect())
+          ()
+        })
     }
     try {
       stageUp(chunks.take(splitAt))
       lifecycle()
       stageUp(chunks.drop(splitAt))
       lifecycle() // the SHARED checkpoint must survive between lifecycles
-    } finally { sweep(ckpt); sweep(stage.getPath) }
-    require(schema != null, "collectResumed: the stream produced no batches")
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    acc.forEach(a => a.foreach(rows.add))
-    sparkRef.createDataFrame(rows, schema)
+    } finally { rmTree(ckpt); rmTree(stage.getPath) }
+    gathered(sparkRef, acc, schema, "collectResumed")
   }
 
   /** Fold the (finite) stream's micro-batches through `step`, returning
@@ -219,26 +174,11 @@ object StreamRunner {
     * the session; Bench's hygiene pass also sweeps them). */
   def foldBatches(stream: DataFrame)(
       step: (Option[DataFrame], DataFrame) => DataFrame): DataFrame = {
-    val spark = stream.sparkSession
-    val id = n.incrementAndGet()
-    val ckpt = s"$ckptRoot/graft-ckpt-$id-${System.nanoTime()}"
     val state = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          state.set(step(Option(state.get), b).localCheckpoint(true))
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", before)
-      sweep(ckpt)
-    }
+    run(stream)(_.foreachBatch { (b: DataFrame, _: Long) =>
+      state.set(step(Option(state.get), b).localCheckpoint(true))
+      ()
+    })
     require(state.get != null, "foldBatches: the stream produced no batches")
     state.get
   }

@@ -23,15 +23,12 @@ class BucketingSpec extends SparkSpec {
     right.write.bucketBy(8, "k").sortBy("k")
       .option("path", s"$root/br").saveAsTable("graft_br")
 
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("graft_bl").join(spark.table("graft_br"), "k")
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), plan.take(1500))
       assert(j.count() === left.join(right, "k").count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.sql("DROP TABLE IF EXISTS graft_bl")
       spark.sql("DROP TABLE IF EXISTS graft_br")
     }
@@ -71,17 +68,14 @@ class BucketingSpec extends SparkSpec {
     // the planner auto-disables bucketed scans when the query shape gains
     // nothing from the distribution (filter-only) — force it to observe
     // the pruning a join/agg query would get
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val before = spark.conf.get(autoKey)
-    spark.conf.set(autoKey, "false")
-    try {
+    try Sessions.withConf(spark,
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val q = spark.table("graft_bp").filter(col("k") === 42L)
       val scan = q.queryExecution.executedPlan.toString
       // file-source scan reports the selected-bucket count
       assert(scan.contains("SelectedBucketsCount: 1 out of 8"), scan.take(1500))
       assert(q.count() === 1L)
     } finally {
-      spark.conf.set(autoKey, before)
       spark.sql("DROP TABLE IF EXISTS graft_bp")
     }
   }

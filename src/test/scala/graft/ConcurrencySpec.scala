@@ -10,14 +10,15 @@ import scala.concurrent.duration._
   * neighbor's checkpoints, shared memo tables. Every gate runs serially
   * in Verify/Bench, so none of that is exercised there.
   *
-  * The fixture is the most expensive BATCH gates of the current bench
-  * (bench_full_r15: the r15 list now includes four versioned-store
+  * The first fixture is the most expensive BATCH gates of the current
+  * bench (bench_full_r15: the r15 list includes four versioned-store
   * gates, so the atomic-manifest commit protocol runs under concurrency
-  * too; streaming gates are excluded by design: StreamRunner scopes
-  * shuffle-partition width per query via a session-conf swap, which is
-  * documented single-driver — the batch surface is the concurrent one).
-  * Each gate runs once serially, then all 12 run simultaneously on the
-  * shared session; every concurrent result must match its serial run
+  * too). The second mixes the three kinds of session-conf user: the BPE
+  * induction gate (a `Sessions.withConf` scope per round), a StreamRunner
+  * gate (a scoped state width per query) and the concurrently-trained
+  * recall report (no scope, plans while the others hold theirs).
+  * Each gate runs once serially, then the fixture runs simultaneously on
+  * the shared session; every concurrent result must match its serial run
   * row-for-row. This spec is what drove two r15 fixes:
   * Sinks.overwritePartitions' session-conf flip became a per-write
   * option, and trainCentroids/decontaminateScoped's persistent-RDD
@@ -44,8 +45,9 @@ class ConcurrencySpec extends SparkSpec {
     df.collect().map(_.toString).sorted.toSeq
   }
 
-  test("the 12 most expensive batch gates return identical rows run " +
-    "concurrently on one session vs serially") {
+  /** Serial rows of each gate, then the same gates all at once on one
+    * session: every concurrent result must equal its serial run. */
+  private def serialVsConcurrent(gates: Seq[String]): Unit = {
     assert(gates.forall(SparkEntry.queries.contains),
       s"stale gate list: ${gates.filterNot(SparkEntry.queries.contains)}")
     val serial = gates.map(g => g -> canon(g)).toMap
@@ -63,5 +65,19 @@ class ConcurrencySpec extends SparkSpec {
           s"gate $g diverged under concurrency")
       }
     } finally { pool.shutdown(); () }
+  }
+
+  test("the 12 most expensive batch gates return identical rows run " +
+    "concurrently on one session vs serially") {
+    serialVsConcurrent(gates)
+  }
+
+  test("scoped-conf gates (BPE induction, a StreamRunner gate) and the " +
+    "threaded recall report return identical rows run concurrently, and " +
+    "the session conf afterwards equals the conf before") {
+    val before = spark.conf.getAll
+    serialVsConcurrent(Seq("text_bpe_merges_large", "stream_t2_uv_dedup",
+      "sim_recall_report"))
+    assert(spark.conf.getAll === before)
   }
 }

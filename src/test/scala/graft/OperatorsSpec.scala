@@ -98,9 +98,7 @@ class OperatorsSpec extends SparkSpec {
     // OUR decision: below the cap the forced hint still broadcasts; above
     // it the hint is withheld and the join falls back to shuffle — at
     // real scale that is Spark declining an executor-OOM-sized broadcast.
-    val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val below = Sampling.leakageSafeSplits(docs, labels, splits)
       assert(below.queryExecution.executedPlan.toString
         .contains("BroadcastHashJoin"))
@@ -111,7 +109,7 @@ class OperatorsSpec extends SparkSpec {
       // same assignments on either tier — the cap changes distribution only
       assert(above.select("doc_id", "split").as[(Long, String)].collect().sorted
         === below.select("doc_id", "split").as[(Long, String)].collect().sorted)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+    }
   }
 
   test("temperature mixture: rarest stratum keeps all, rates follow sqrt(n_min/n)") {

@@ -18,16 +18,13 @@ class PlanSpec extends SparkSpec {
     val p = plan("a27_frequent_pairs")
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin"), p.take(800))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"), p)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val before = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = SparkEntry.queries("a27_frequent_pairs")(spark, dir)
       df.collect() // AQE inserts exchange reuse at runtime — run, then read
       val big = df.queryExecution.executedPlan.toString
       assert(big.contains("SortMergeJoin") || big.contains("ShuffledHashJoin"), big.take(800))
       assert(big.contains("ReusedExchange"), big.take(2000))
-    } finally spark.conf.set(key, before)
+    }
   }
 
   test("a28_gapfill_locf: the spine is generated, not scanned — one Generate, " +
@@ -131,9 +128,7 @@ class PlanSpec extends SparkSpec {
 
   test("knnJoinIvf: candidates come from an equi join on cluster_id — " +
     "neither corpus broadcasts, no cartesian, even with broadcast off") {
-    val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val emb = Tables.embeddings(spark, dir)
       val centroids = graft.operators.Similarity
         .trainCentroids(emb, k = 4, iters = 1).localCheckpoint(true)
@@ -146,7 +141,7 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct"), p.take(1200))
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         p.take(1200))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+    }
   }
 
   test("j1_interval_join: equi key drives a real join, band is residual " +
@@ -244,9 +239,7 @@ class PlanSpec extends SparkSpec {
     // the anti side reads the checkpointed sliver, not the shingle scan
     assert(p.contains("Scan ExistingRDD"), p.take(1500))
     // above the cap the hint is withheld: no broadcast anti-join
-    val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val tiered = graft.operators.Pretrain
         .decontaminate(docs.filter(col("doc_id") % 2 === 0),
           docs.filter(col("doc_id") % 2 =!= 0), shingleLen = 8,
@@ -255,7 +248,7 @@ class PlanSpec extends SparkSpec {
       assert(!p2.contains("BroadcastHashJoin"), p2.take(1500))
       assert(tiered.select("doc_id").collect().map(_.getLong(0)).sorted
         === out.select("doc_id").collect().map(_.getLong(0)).sorted)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+    }
   }
 
   test("dedup_incremental: equi-joins only — the index probe and both " +

@@ -53,9 +53,7 @@ class SkewSpec extends SparkSpec {
   test("saltedJoin actually spreads the hot key over multiple reducers") {
     // AQE's partition coalescing would legitimately merge these small test
     // partitions back together; disable it to observe the raw spread
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val parts = Joins.saltedJoin(hotLeft, right, "k", buckets = 8)
         .filter(col("k") === 777L)
         .select(spark_partition_id().as("p"))
@@ -63,7 +61,7 @@ class SkewSpec extends SparkSpec {
       // 8 salts hash into 32 shuffle partitions; a straggler-free spread
       // puts the hot key in several distinct reducers instead of one
       assert(parts >= 4, s"hot key landed in only $parts partition(s)")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("j8b fixture: AQE skew-join fires on a plain shuffle join but NOT " +
@@ -87,9 +85,7 @@ class SkewSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    Sessions.withConf(spark, confs: _*) {
       // (a) both children are PLAIN shuffle reads → OptimizeSkewedJoin
       // splits the hot partition (skew=true in the final adaptive plan)
       val dimPlain = spark.range(10).select(col("id").as("skew_k"),
@@ -113,9 +109,6 @@ class SkewSpec extends SparkSpec {
       val salted = Joins.saltedJoinTargeted(li, dimAgg, "skew_k", buckets = 8,
         sampleFraction = 0.05, hotMinSampleCount = 10, maxHotKeys = 16)
       assert(salted.count().toInt === nPlain)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -129,18 +122,13 @@ class SkewSpec extends SparkSpec {
       // the organic median, and no coalescing to blur it
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    Sessions.withConf(spark, confs: _*) {
       val q = hotLeft.join(right, "k")
       // materialize THIS DataFrame so its adaptive plan is final (count()
       // would plan a separate, aggregated query)
       assert(q.collect().length === 10900)
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), plan.take(1200))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -171,17 +159,12 @@ class SkewSpec extends SparkSpec {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
         "spark.sql.shuffle.partitions" -> "32",
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      try {
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      Sessions.withConf(spark, confs: _*) {
         val q = Similarity.knnJoinIvf(queries, corpus, k = 3,
           centroids = centroids, nProbe = 1)
         val rows = q.collect().map(r => (r.getLong(0), r.getLong(1),
           r.getDouble(2), r.getInt(3))).toSeq.sorted
         (rows, q.queryExecution.executedPlan.toString)
-      } finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
       }
     }
     val (split, splitPlan) = run(skewOn = true)

@@ -106,19 +106,13 @@ class StreamingParitySpec extends SparkSpec {
   }
 
   test("stateful ops run under the RocksDB state store (the big-state path)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val out = runBatches(Seq(
         Seq(ev(1, 100, 10), ev(2, 100, 20)),
         Seq(ev(3, 100, 30), ev(4, 200, 40))))(StatefulStreams.newOldFlag)
         .collect().map(r => (r.getAs[Long]("event_id"), r.getAs[Int]("is_new"))).toMap
       assert(out === Map(1L -> 1, 2L -> 0, 3L -> 0, 4L -> 1))
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -23,17 +23,9 @@ class TwsSpec extends SparkSpec {
   private def ev(id: Long, user: Long, sec: Long, typ: String = "view"): Event =
     Event(id, ts(sec), user, typ, 1.0, "{}")
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body
-    finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDb[A](body: => A): A =
+    Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Feed `batches` through a MemoryStream one micro-batch each, with an
     * optional wall-clock pause between them (the TTL test's knob).

@@ -21,13 +21,10 @@ class MultiBatchSpec extends SparkSpec {
       Sources.eventsStreamSplit(spark, dir).select(col("event_id"))).count()
     val split = Sources.eventsStreamSplit(spark, dir)
     assert(split.isStreaming)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.option("pathGlobFilter", "events.parquet").parquet(dir)
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    // same root resolution as Sources.ensureEventsSplit — on hosts where
-    // /dev/shm is unwritable the cache lives under java.io.tmpdir
-    val root = if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
+    // the root Sources.ensureEventsSplit caches under
+    val root = graft.TmpDirs.shmRoot
     // cache dir name ends in a source-file fingerprint (size-mtime); the
     // ts-contiguous variant has no "-rr" mode segment
     val candidates = Option(new java.io.File(root).listFiles())
