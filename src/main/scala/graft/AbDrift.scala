@@ -226,45 +226,6 @@ object AbDrift {
         col("jaccard")), lit(1000000007L)))).head().getLong(0)
     }
 
-    // r18: attribute the streaming-CDF family drift (r17 verdict task 2).
-    // The suspect is de49438's durable guard sidecar in ChangeFeed.run
-    // (one tiny seed-read per run + one atomic tmp-write+rename per
-    // batch); the alternative is ambient (the r17 driver artifact ran at
-    // ambient_factor 1.09, and stream_k21 — which never touches
-    // ChangeFeed.run, it stages ticks and calls changesWithPreImages
-    // directly — drifted in the SAME proportion as k22/k25, which do).
-    // These two arms drain the SAME pre-built 9-version log through
-    // ChangeFeed.run with the sidecar on vs off (durableGuard — the
-    // ordering check itself runs in both); a ~zero median delta pins the
-    // drift on ambient, a real one prices the sidecar. Store builds
-    // once, outside the timed thunks; each trial drains from a fresh
-    // checkpoint (8 micro-batches, maxFilesPerTrigger=1).
-    lazy val cdfStore: String = {
-      val path = s"${TmpDirs.shmRoot}/graft-ab-cdf-${System.nanoTime()}"
-      val base = Tables.orders(spark, sfDir)
-        .select(col("o_orderkey").as("k"),
-          col("o_totalprice").cast("decimal(18,2)").as("price"))
-        .withColumn("bucket", pmod(col("k"), lit(8L)))
-      graft.operators.Versioned.init(spark, path, "bucket", base)
-      for (i <- 0 until 8) {
-        val b = base.filter(col("bucket") === i && col("k") % 5 === 0)
-          .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-          .withColumn("op", lit("U"))
-        graft.operators.Versioned.merge(spark, path, "bucket", "k", b)
-      }
-      path
-    }
-    def cdfArm(durable: Boolean): Long = {
-      val ckpt = s"${TmpDirs.shmRoot}/graft-ab-cdfckpt-${System.nanoTime()}"
-      try {
-        val n = new java.util.concurrent.atomic.AtomicLong(0L)
-        graft.streaming.ChangeFeed.run(spark, cdfStore, "k", ckpt,
-          durableGuard = durable) { (cdf, _, _, _) =>
-            n.addAndGet(cdf.count()); () }
-        n.get() // correctness anchor: both arms fold identical row counts
-      } finally TmpDirs.rmTree(ckpt)
-    }
-
     // r15: what does versioned-store FILE SKIPPING buy — the same 40
     // point lookups against one stats-carrying store (orders, 64
     // range-correlated buckets, min/max + Bloom manifests), planned
@@ -450,8 +411,6 @@ object AbDrift {
       "vdel_dv" -> (() => vDeleteArm(dv = true)),
       "vdel_cow" -> (() => vDeleteArm(dv = false)),
       "vdel_dv_mat" -> (() => vDeleteArm(dv = true, materialize = true)),
-      "cdf_sidecar" -> (() => cdfArm(durable = true)),
-      "cdf_memguard" -> (() => cdfArm(durable = false)),
       "vwrite_none" -> (() => vWriteArm("none")),
       "vwrite_single" -> (() => vWriteArm("single")),
       "vwrite_multi" -> (() => vWriteArm("multi")),
@@ -561,8 +520,6 @@ object AbDrift {
     if (armNames.exists(_.startsWith("vskip")) ||
         armNames.exists(_.startsWith("vscan")))
       TmpDirs.rmTree(vskipStore)
-    if (armNames.exists(_.startsWith("cdf_")))
-      TmpDirs.rmTree(cdfStore)
     if (armNames.contains("asof_bucketed")) {
       val (lt, rt, lp, rp) = asofBucketedTables
       graft.operators.Bucketing.drop(spark, lt)

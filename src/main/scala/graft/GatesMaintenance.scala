@@ -84,16 +84,10 @@ private[graft] object GatesMaintenance {
     "k10_targeted_delete" -> ((s, dir) => {
       val root = shmRoot
       val path = s"$root/graft-erase-${System.nanoTime()}"
-      def files(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(path))
+      def files(): Map[String, Long] =
+        leafFiles(path)
           .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
           .map(f => f.getPath -> f.length()).toMap
-      }
       try {
         val ev = Tables.events(s, dir)
           .withColumn("bucket", pmod(col("user_id"), lit(16L)))
@@ -169,16 +163,10 @@ private[graft] object GatesMaintenance {
     "k11_merge_upsert" -> ((s, dir) => {
       val root = shmRoot
       val path = s"$root/graft-merge-${System.nanoTime()}"
-      def files(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(path))
+      def files(): Map[String, Long] =
+        leafFiles(path)
           .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
           .map(f => f.getPath -> f.length()).toMap
-      }
       try {
         val ord = Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_custkey"),
@@ -300,16 +288,10 @@ private[graft] object GatesMaintenance {
     "k13_retention_expire" -> ((s, dir) => {
       val root = shmRoot
       val path = s"$root/graft-ttl-${System.nanoTime()}"
-      def files(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(path))
+      def files(): Map[String, Long] =
+        leafFiles(path)
           .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
           .map(f => f.getPath -> f.length()).toMap
-      }
       try {
         Tables.events(s, dir)
           .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
@@ -385,16 +367,10 @@ private[graft] object GatesMaintenance {
     "k17_time_travel" -> ((s, dir) => {
       import graft.operators.Versioned
       val path = s"$shmRoot/graft-ttravel-${System.nanoTime()}"
-      def files(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(s"$path/data"))
+      def files(): Map[String, Long] =
+        leafFiles(s"$path/data")
           .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
           .map(f => f.getPath -> f.length()).toMap
-      }
       try {
         val base = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
@@ -463,16 +439,10 @@ private[graft] object GatesMaintenance {
     "k18_vacuum" -> ((s, dir) => {
       import graft.operators.Versioned
       val path = s"$shmRoot/graft-vacuum-${System.nanoTime()}"
-      def dataFiles(): Set[String] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(s"$path/data"))
+      def dataFiles(): Set[String] =
+        leafFiles(s"$path/data")
           .filter(_.getName.endsWith(".parquet"))
           .map(_.getCanonicalPath).toSet
-      }
       try {
         val base = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
@@ -509,7 +479,7 @@ private[graft] object GatesMaintenance {
           .reduce(_ unionByName _)
         val preRows = pre.collect().toSet
         val reachable = Seq(2L, 3L).flatMap { v =>
-          s.read.parquet(s"$path/_log/v=$v")
+          s.read.parquet(Versioned.manifestDir(path, v))
             .select(col("file")).distinct().collect().map(r =>
               new java.io.File(new org.apache.hadoop.fs.Path(
                 new java.net.URI(r.getString(0))).toUri.getPath)
@@ -601,15 +571,9 @@ private[graft] object GatesMaintenance {
     "k20_erasure_vacuum" -> ((s, dir) => {
       import graft.operators.Versioned
       val path = s"$shmRoot/graft-erasure-${System.nanoTime()}"
-      def survivors(): Seq[String] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(s"$path/data"))
+      def survivors(): Seq[String] =
+        leafFiles(s"$path/data")
           .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-      }
       try {
         val base = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
@@ -865,16 +829,10 @@ private[graft] object GatesMaintenance {
     "k29_deletion_vectors" -> ((s, dir) => {
       import graft.operators.Versioned
       val path = s"$shmRoot/graft-dv-${System.nanoTime()}"
-      def files(): Set[String] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(s"$path/data"))
+      def files(): Set[String] =
+        leafFiles(s"$path/data")
           .filter(_.getName.endsWith(".parquet"))
           .map(_.getCanonicalPath).toSet
-      }
       try {
         val base = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
@@ -1042,16 +1000,10 @@ private[graft] object GatesMaintenance {
     "k23_versioned_compact" -> ((s, dir) => {
       import graft.operators.Versioned
       val path = s"$shmRoot/graft-vcompact-${System.nanoTime()}"
-      def dataFiles(): Set[String] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(s"$path/data"))
+      def dataFiles(): Set[String] =
+        leafFiles(s"$path/data")
           .filter(_.getName.endsWith(".parquet"))
           .map(_.getCanonicalPath).toSet
-      }
       try {
         val base = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
@@ -1073,7 +1025,7 @@ private[graft] object GatesMaintenance {
             sum(col("price")).cast("double").as("price_sum"),
             sum(col("k")).as("key_sum"))
         def manifestCount(v: Long): Long =
-          s.read.parquet(s"$path/_log/v=$v")
+          s.read.parquet(Versioned.manifestDir(path, v))
             .select(col("file")).distinct().count()
         val pre = snap(2L).localCheckpoint(true)
         val preRows = pre.collect().toSet
@@ -1083,7 +1035,7 @@ private[graft] object GatesMaintenance {
         val filesDrop = manifestCount(v3) < manifestCount(2L)
         val latestEqual = snap(v3).collect().toSet == preRows
         val preIntact = snap(2L).collect().toSet == preRows
-        val reachable = s.read.parquet(s"$path/_log/v=$v3")
+        val reachable = s.read.parquet(Versioned.manifestDir(path, v3))
           .select(col("file")).distinct().collect().map(r =>
             new java.io.File(new org.apache.hadoop.fs.Path(
               new java.net.URI(r.getString(0))).toUri.getPath)
@@ -1150,7 +1102,7 @@ private[graft] object GatesMaintenance {
         // of both logs has a 2-entry map keyed {c, k} (fresh AND
         // carried — no commit in this history is stats-less)
         val mapOk = Seq(1L, 2L).forall { v =>
-          val keyed = s.read.parquet(s"$path/_log/v=$v")
+          val keyed = s.read.parquet(Versioned.manifestDir(path, v))
             .select(sort_array(map_keys(col("stats"))).as("ks"))
           keyed.count() > 0 &&
             keyed.filter(col("ks") =!= array(lit("c"), lit("k"))).isEmpty
@@ -1397,16 +1349,10 @@ private[graft] object GatesMaintenance {
     "k24_column_rename" -> ((s, dir) => {
       import graft.operators.Versioned
       val path = s"$shmRoot/graft-vrename-${System.nanoTime()}"
-      def files(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(s"$path/data"))
+      def files(): Map[String, Long] =
+        leafFiles(s"$path/data")
           .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
           .map(f => f.getPath -> f.length()).toMap
-      }
       try {
         val base = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
@@ -1473,16 +1419,10 @@ private[graft] object GatesMaintenance {
     "k19_schema_evolution" -> ((s, dir) => {
       import graft.operators.Versioned
       val path = s"$shmRoot/graft-schevo-${System.nanoTime()}"
-      def files(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(s"$path/data"))
+      def files(): Map[String, Long] =
+        leafFiles(s"$path/data")
           .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
           .map(f => f.getPath -> f.length()).toMap
-      }
       try {
         val base = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),

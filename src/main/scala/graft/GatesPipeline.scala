@@ -1378,16 +1378,10 @@ private[graft] object GatesPipeline {
       val cb = Similarity.trainPqCodebooks(base, m = 8, k = 64, iters = 2,
         sampleRate = 0.5)
       val path = s"$shmRoot/graft-ivfpq-append-${System.nanoTime()}"
-      def files(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(path))
+      def files(): Map[String, Long] =
+        leafFiles(path)
           .filter(_.getName.endsWith(".parquet"))
           .map(f => f.getPath -> f.length()).toMap
-      }
       try {
         Similarity.buildIvfPqIndex(base, centroids, cb, path)
         val baseFiles = files()

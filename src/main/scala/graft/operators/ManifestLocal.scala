@@ -18,15 +18,15 @@ import org.apache.spark.sql.types._
   * downstream `.collect()`/`.filter()` over it then runs job-free
   * inside the optimizer, with zero call-site changes.
   *
-  * TRUST BOUNDARY: only manifests committed WITH the
-  * `_manifest_schema.json` sidecar are eligible (the same post-r18
-  * boundary the schema-inference skip uses) — the sidecar pins the
-  * exact Spark schema the rows must decode to. Any decode surprise
-  * (unsupported type, missing column, corrupt file) falls back to the
-  * distributed reader rather than failing the open: this is a fast
-  * path, never a second source of truth, and ManifestLocalSpec pins
-  * row-for-row agreement between the two paths on stats/dv/evolution
-  * manifests. */
+  * TRUST BOUNDARY: every commit writes the `_manifest_schema.json`
+  * sidecar ([[Versioned.ManifestSchema]]) and [[Versioned]] refuses a
+  * version without it, so the rows always decode against the exact
+  * Spark schema the commit pinned. Any decode surprise (unsupported
+  * type, missing column, corrupt file) falls back to the distributed
+  * reader under that same schema rather than failing the open: this is
+  * a fast path, never a second source of truth, and ManifestLocalSpec
+  * pins row-for-row agreement between the two paths on stats/dv/
+  * evolution manifests. */
 private[graft] object ManifestLocal {
 
   import org.apache.parquet.example.data.Group

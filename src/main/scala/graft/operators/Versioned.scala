@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.TmpDirs
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
+  LongType, MapType, Metadata, MetadataBuilder, StringType, StructField,
+  StructType}
 
 /** The ONE retryable failure of the versioned store: another writer
   * committed the version this attempt targeted. Subclasses
@@ -24,9 +28,16 @@ final class ConcurrentCommitException(msg: String, cause: Throwable)
   *     by later merges). The token is writer-unique, so concurrent
   *     attempts never mix files; manifests reference files by absolute
   *     path, so the dir name carries no read semantics.
-  *   - `_log/v=N/…parquet` — version N's manifest: (file, part, rows
-  *     [, mn, mx, bloom]), one row per (data file, partition value) it
-  *     serves, plus the committed `_schema.json` sidecar. A snapshot IS
+  *   - `_log/v=N/…parquet` — version N's manifest, one row per (data
+  *     file, partition value) it serves, in the ONE manifest schema
+  *     [[ManifestSchema]]: `file`, `part`, `rows`, `dv` (the file's
+  *     tombstone paths; NULL = none) and `stats` (physical column name
+  *     -> `struct<mn, mx, bloom>`; NULL = no stats). Beside it, three
+  *     sidecars every commit writes and every reader requires:
+  *     `_schema.json` (the snapshot's logical schema with its
+  *     physical-name mapping), `_manifest_schema.json` (the manifest
+  *     rows' schema) and `_commit.json` (version and commit wall-time);
+  *     an idempotent writer's commit adds `_txn.json`. A snapshot IS
   *     its manifest's file set; untouched files are carried into the
   *     next manifest BY REFERENCE, so a merge writes only churned
   *     partitions' rows plus one tiny manifest. The manifest dir is
@@ -56,24 +67,16 @@ object Versioned {
 
   private def logRoot(dir: String) = s"$dir/_log"
 
-  /** Recursive delete — the one shared copy (commit-race cleanup, no-op
-    * dv reclamation, vacuum drops, recover sweeps all use it). */
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(rmTree)
-    f.delete(); ()
-  }
+  /** Store-level commit-protocol marker under the log (a committed
+    * property of the store, written once by [[claimStore]]): absent =
+    * `rename` (atomic directory rename — POSIX/HDFS), present = `cas`
+    * (put-if-absent pointer commit — the object-store posture, where
+    * rename is a non-atomic copy and the Delta LogStore contract
+    * applies). */
+  private val CasMarker = "_commit_protocol.json"
 
-  /** Store-level commit-protocol marker (a committed property of the
-    * store, written once by [[init]]): absent = `rename` (atomic
-    * directory rename — POSIX/HDFS), present = `cas` (put-if-absent
-    * pointer commit — the object-store posture, where rename is a
-    * non-atomic copy and the Delta LogStore contract applies). */
-  private def casMarker(dir: String) =
-    new java.io.File(s"${logRoot(dir)}/_commit_protocol.json")
-
-  private[graft] def casMode(dir: String): Boolean = casMarker(dir).isFile
+  private[graft] def casMode(dir: String): Boolean =
+    new java.io.File(logRoot(dir), CasMarker).isFile
 
   /** Resolve version `v`'s committed manifest DIRECTORY. Rename-mode
     * stores commit the directory at `_log/v=N` itself; CAS-mode stores
@@ -116,8 +119,7 @@ object Versioned {
     * rename is atomic; an object-store deployment would slot a log-store
     * CAS here, exactly like Delta's LogStore abstraction. */
   private def commitManifest(spark: SparkSession, dir: String, v: Long,
-      manifest: DataFrame,
-      schema: Option[org.apache.spark.sql.types.StructType],
+      manifest: DataFrame, schema: StructType,
       txn: Option[(String, Long)] = None): Unit = {
     val cas = casMode(dir)
     // CAS staging dirs are FINAL locations (never renamed — on an object
@@ -128,24 +130,23 @@ object Versioned {
         java.util.UUID.randomUUID().toString.take(8)
       else s".tmp-v=$v-${System.nanoTime()}"
     val tmp = s"${logRoot(dir)}/$stagedName"
-    manifest.coalesce(1).write.mode("errorifexists").parquet(tmp)
-    schema.foreach(s0 => writeSchemaFile(new java.io.File(tmp), s0))
+    // every commit writes the ONE manifest schema, whatever produced the
+    // rows (a carried manifest, a stats scan, a dv rewrite)
+    manifest.select(ManifestSchema.fields.toSeq.map(f =>
+        col(f.name).cast(f.dataType)): _*)
+      .coalesce(1).write.mode("errorifexists").parquet(tmp)
+    writeSidecar(tmp, "_schema.json", schema.json)
     // the MANIFEST's own schema rides the commit too: every manifest
-    // read can then pass an explicit schema and skip the parquet
+    // read then passes an explicit schema and skips the parquet
     // schema-inference job — one fewer driver-coordinated job per
     // manifest open, on a path hit several times per commit and once
-    // per probe (r18; the data sidecar above serves the same role for
+    // per probe (the data sidecar above serves the same role for
     // snapshot scans)
-    java.nio.file.Files.write(
-      new java.io.File(tmp, "_manifest_schema.json").toPath,
-      manifest.schema.json
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeSidecar(tmp, "_manifest_schema.json", ManifestSchema.json)
     // commit wall-time rides the atomic rename with everything else —
     // the TIMESTAMP AS OF resolution source ([[readAsOf]])
-    java.nio.file.Files.write(
-      new java.io.File(tmp, "_commit.json").toPath,
-      s"""{"version": $v, "ts_millis": ${System.currentTimeMillis()}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeSidecar(tmp, "_commit.json",
+      s"""{"version": $v, "ts_millis": ${System.currentTimeMillis()}}""")
     // application-transaction sidecar (the Delta txnAppId/txnVersion
     // idea): the (app_id, txn_version) fact rides the SAME atomic commit
     // as the manifest, so "did batch N land?" is answerable from the log
@@ -161,10 +162,8 @@ object Versioned {
       require(app.nonEmpty && app.forall(c =>
         c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
         s"Versioned: txn appId must match [A-Za-z0-9._-]+: '$app'")
-      java.nio.file.Files.write(
-        new java.io.File(tmp, "_txn.json").toPath,
-        s"""{"app_id": "$app", "txn_version": $tv}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      writeSidecar(tmp, "_txn.json",
+        s"""{"app_id": "$app", "txn_version": $tv}""")
     }
     if (cas) { commitPointerCas(dir, v, stagedName); return }
     val src = java.nio.file.Paths.get(tmp)
@@ -185,7 +184,7 @@ object Versioned {
       // mergeRetry into five doomed retries masking the real cause.
       case e: java.nio.file.FileSystemException =>
         if (!lostRace(e, dst)) throw e
-        rmTree(new java.io.File(tmp))
+        TmpDirs.rmTree(tmp)
         throw new ConcurrentCommitException(
           s"Versioned: version $v was committed by a concurrent writer — " +
             "re-read latest() and retry the operation", e)
@@ -217,7 +216,7 @@ object Versioned {
       case e: java.nio.file.FileAlreadyExistsException =>
         // lost the race — reclaim this attempt's staging eagerly (the
         // data dir stays an orphan for recover, same as rename mode)
-        rmTree(new java.io.File(s"${logRoot(dir)}/$stagedName"))
+        TmpDirs.rmTree(s"${logRoot(dir)}/$stagedName")
         java.nio.file.Files.deleteIfExists(ptrTmp)
         throw new ConcurrentCommitException(
           s"Versioned: version $v was committed by a concurrent writer " +
@@ -248,50 +247,46 @@ object Versioned {
     * read at any version answers in that version's own logical names. */
   private val PhysKey = "graft.physical"
 
-  private def physName(f: org.apache.spark.sql.types.StructField): String =
+  private def physName(f: StructField): String =
     if (f.metadata.contains(PhysKey)) f.metadata.getString(PhysKey) else f.name
 
   /** logical name -> physical name (identity entries included). */
-  private def mapping(schema: Option[org.apache.spark.sql.types.StructType])
-      : Map[String, String] =
-    schema.map(_.fields.map(f => f.name -> physName(f)).toMap)
-      .getOrElse(Map.empty)
+  private def mapping(schema: StructType): Map[String, String] =
+    schema.fields.map(f => f.name -> physName(f)).toMap
 
-  private def physicalSchema(logical: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      logical.fields.map(f =>
-        org.apache.spark.sql.types.StructField(physName(f), f.dataType,
-          f.nullable)))
+  private def physicalSchema(logical: StructType): StructType =
+    StructType(logical.fields.map(f =>
+      StructField(physName(f), f.dataType, f.nullable)))
 
   /** Re-attach physical-name metadata onto a plain (post-projection)
     * logical schema before committing it — `select(... .as(name))` strips
     * field metadata, and losing the mapping would orphan every
     * renamed-column data file. */
-  private def withPhysMeta(logical: org.apache.spark.sql.types.StructType,
-      m: Map[String, String]): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(logical.fields.map { f =>
+  private def withPhysMeta(logical: StructType,
+      m: Map[String, String]): StructType =
+    StructType(logical.fields.map { f =>
       m.get(f.name).filter(_ != f.name) match {
-        case Some(p) => f.copy(metadata =
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata).putString(PhysKey, p).build())
+        case Some(p) => f.copy(metadata = new MetadataBuilder()
+          .withMetadata(f.metadata).putString(PhysKey, p).build())
         case None => f
       }
     })
 
-  /** Union two manifest frames whose stats columns may differ (a stats
-    * manifest carried into a stats-less commit or vice versa): missing
-    * columns fill with NULL — and a NULL envelope means "unknown, always
-    * read", so mixed manifests stay CORRECT, just less prunable. */
-  private def alignUnion(a: DataFrame, b: DataFrame): DataFrame = {
-    val aT = a.schema.map(f => f.name -> f.dataType)
-    val bT = b.schema.map(f => f.name -> f.dataType)
-    val a2 = bT.filterNot { case (n, _) => a.columns.contains(n) }
-      .foldLeft(a) { case (d, (n, t)) => d.withColumn(n, lit(null).cast(t)) }
-    val b2 = aT.filterNot { case (n, _) => b.columns.contains(n) }
-      .foldLeft(b) { case (d, (n, t)) => d.withColumn(n, lit(null).cast(t)) }
-    a2.unionByName(b2.select(a2.columns.map(col): _*))
-  }
+  /** The ONE manifest row schema: every commit, whichever operation
+    * makes it, writes exactly these columns. `dv` lists the file's
+    * tombstone paths (NULL = none, see [[applyDv]]); `stats` maps a
+    * PHYSICAL column name to that column's per-(file, part) min/max
+    * envelope and Bloom sketch (NULL, or a missing key, = no stats:
+    * unknown, always read — see [[pruneFiles]]). */
+  private[graft] val ManifestSchema: StructType = StructType(Seq(
+    StructField("file", StringType),
+    StructField("part", StringType),
+    StructField("rows", LongType),
+    StructField("dv", ArrayType(StringType)),
+    StructField("stats", MapType(StringType, StructType(Seq(
+      StructField("mn", LongType),
+      StructField("mx", LongType),
+      StructField("bloom", BinaryType)))))))
 
   /** Per-file Bloom sizing CEILING for stats-carrying manifests (the
     * k16 file-skipping tier): sketches size to each (file, part)
@@ -324,25 +319,36 @@ object Versioned {
     vs.last
   }
 
-  /** (file, part, rows[, mn, mx, bloom]) for every data file under
-    * `path` — the manifest rows for a freshly-written version. One
-    * narrow scan of the new files only (`partCol` is stored IN the data,
-    * so no directory inference is involved). With `statsCol` (PHYSICAL
-    * name) the same scan also collects the per-(file, part) min/max
-    * envelope and Bloom sketch of that column — the Iceberg/Delta
+  /** The committed version a read at `version` means (negative = the
+    * latest); an uncommitted one fails loudly. */
+  private def resolve(dir: String, version: Long): Long = {
+    val vs = versions(dir)
+    val v = if (version >= 0) version else {
+      require(vs.nonEmpty, s"Versioned: no committed versions under $dir")
+      vs.last
+    }
+    require(vs.contains(v), s"Versioned: version $v not in $vs")
+    v
+  }
+
+  /** The manifest rows ([[ManifestSchema]]) for every data file under
+    * `path` — a freshly-written version's. One narrow scan of the new
+    * files only (`partCol` is stored IN the data, so no directory
+    * inference is involved). With `statsCols` (PHYSICAL names) the same
+    * scan also collects each column's per-(file, part) min/max envelope
+    * and Bloom sketch into the `stats` map — the Iceberg/Delta
     * data-file-stats idea committed INTO the snapshot's manifest, so
     * point/range reads at `AS OF` can prune files before planning the
-    * scan ([[readPoint]]/[[readRange]]). Stats columns ride as longs
+    * scan ([[readPoints]]/[[readRange]]). Stats columns ride as longs
     * (the column must cast); collection cost is the same single narrow
-    * scan, widened by one column. */
+    * scan, widened by the stats columns. */
   // `dataSchema` (when the caller just WROTE the files and knows it)
   // skips the parquet schema-inference job — one fewer driver round per
   // commit; the directory-level PartDir column is appended by partition
   // discovery either way and dropped
   private def fileParts(spark: SparkSession, path: String,
       partCol: String, statsCols: Seq[String],
-      dataSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
+      dataSchema: Option[StructType] = None): DataFrame = {
     val rd = dataSchema.fold(spark.read)(s0 => spark.read.schema(s0))
     filePartsOf(rd.parquet(path).drop(PartDir), partCol, statsCols)
   }
@@ -350,22 +356,22 @@ object Versioned {
   /** The manifest-row aggregation of [[fileParts]] over an ALREADY-OPEN
     * frame (physical column names) — shared with [[backfillStats]],
     * which recomputes stats for files that already belong to a
-    * committed snapshot instead of freshly-written ones. */
+    * committed snapshot instead of freshly-written ones. Fresh rows
+    * carry no dv. */
   private def filePartsOf(df: DataFrame,
       partCol: String, statsCols: Seq[String]): DataFrame = {
     val base = df
       .groupBy(input_file_name().as("file"),
         col(partCol).cast("string").as("part"))
+    val noDv = lit(null).cast(ArrayType(StringType)).as("dv")
     statsCols match {
-      case Seq() => base.agg(count(lit(1)).as("rows"))
+      case Seq() => base.agg(count(lit(1)).as("rows")).select(col("file"),
+        col("part"), col("rows"), noDv,
+        lit(null).cast(ManifestSchema("stats").dataType).as("stats"))
       case cols =>
         // one agg per stats column, all riding the SAME single narrow
-        // scan. The head column also writes the legacy flat fields
-        // (mn/mx/bloom + stats_col naming WHICH physical column they
-        // describe — a probe on any OTHER column must not prune with
-        // them) so pre-r16 readers of single-column manifests keep
-        // working; the full set lands in the `stats` map, keyed by
-        // physical column name, which [[pruneFiles]] probes first.
+        // scan; the set lands in the `stats` map, keyed by physical
+        // column name, which [[pruneFiles]] probes
         val bloom = udaf(graft.functions.BloomAgg.adaptive(
           StatsBloomExpected, StatsBloomFpp))
         val aggs = cols.zipWithIndex.flatMap { case (c, j) =>
@@ -378,9 +384,7 @@ object Versioned {
           Seq(lit(c), struct(col(s"__mn_$j").as("mn"),
             col(s"__mx_$j").as("mx"), col(s"__bloom_$j").as("bloom")))
         }
-        agged.select(col("file"), col("part"), col("rows"),
-          col("__mn_0").as("mn"), col("__mx_0").as("mx"),
-          col("__bloom_0").as("bloom"), lit(cols.head).as("stats_col"),
+        agged.select(col("file"), col("part"), col("rows"), noDv,
           map(mapEntries: _*).as("stats"))
     }
   }
@@ -415,23 +419,52 @@ object Versioned {
       }.drop("__f")
     }
 
+  /** ONE narrow (file, dv) collect of manifest rows: the distinct files
+    * and the distinct dv paths they reference — sketches stay out of
+    * the projection. */
+  private def filesAndDvs(m: DataFrame): (IndexedSeq[String], Seq[String]) = {
+    val fd = m.select(col("file"), col("dv")).collect()
+    (fd.map(_.getString(0)).distinct.toIndexedSeq, dvsOf(fd, 1))
+  }
+
+  /** The distinct dv paths of collected manifest rows (dv at `dvIdx`). */
+  private def dvsOf(rows: Iterable[Row], dvIdx: Int): Seq[String] =
+    rows.iterator
+      .flatMap(r => Option(r.getSeq[String](dvIdx)).getOrElse(Seq.empty))
+      .toSeq.distinct
+
   /** The dv paths a manifest references for `files` (all files when
     * None) — empty for stores that never took a DV delete. */
   private def dvPathsOf(mDf: DataFrame,
       files: Option[Set[String]] = None): Seq[String] =
-    if (!mDf.columns.contains("dv")) Seq.empty
-    else {
-      val scoped = files.fold(mDf)(fs =>
-        if (fs.isEmpty) mDf.filter(lit(false))
-        else mDf.filter(col("file").isin(fs.toSeq: _*)))
-      scoped.select(explode(col("dv")).as("p")).distinct()
-        .collect().map(_.getString(0)).toIndexedSeq
-    }
+    filesAndDvs(files.fold(mDf)(fs =>
+      mDf.filter(col("file").isin(fs.toSeq: _*))))._2
+
+  /** The collected manifest rows `mRows` (of `mDf`) minus those of the
+    * `dropped` files, as a frame to union with a commit's fresh rows. */
+  private def carriedRows(spark: SparkSession, mDf: DataFrame,
+      mRows: Array[Row], dropped: Set[String]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(
+      mRows.filter(r => !dropped(r.getAs[String]("file"))).toIndexedSeq: _*),
+      mDf.schema)
+
+  /** Whether an attempt wrote any data file under `path` (an all-deletes
+    * rewrite writes none). */
+  private def hasParquet(path: String): Boolean =
+    TmpDirs.leafFiles(path).exists(_.getName.endsWith(".parquet"))
+
+  /** Normalized path form of a manifest file entry. Rewrites key their
+    * file → bin maps by BOTH the raw and this form: input_file_name()
+    * re-reports the manifest's own recorded string when scanning the
+    * same files, so the raw hash hit is the per-row hot path — the URI
+    * parse here only runs for a form drift that in practice never
+    * happens. */
+  private def norm(uri: String): String =
+    try new org.apache.hadoop.fs.Path(new java.net.URI(uri)).toString
+    catch { case _: java.net.URISyntaxException => uri }
 
   /** physical→logical translator for [[applyDv]] over readFiles output. */
-  private def logicalNameOf(
-      sch: Option[org.apache.spark.sql.types.StructType])
-      : String => String = {
+  private def logicalNameOf(sch: StructType): String => String = {
     val rev = mapping(sch).map(_.swap)
     pk => rev.getOrElse(pk, pk)
   }
@@ -454,18 +487,30 @@ object Versioned {
       .write.partitionBy(PartDir).mode("errorifexists")
       .parquet(path)
 
+  /** Claim `dir` for a new store's version 1 under `commitProtocol` — the
+    * one check-and-mark [[init]] and [[shallowClone]] share. The protocol
+    * is a committed property of the store: `rename` leaves no marker,
+    * `cas` writes [[CasMarker]] before the first commit. */
+  private def claimStore(dir: String, commitProtocol: String): Unit = {
+    require(versions(dir).isEmpty, s"Versioned: $dir already initialized")
+    require(commitProtocol == "rename" || commitProtocol == "cas",
+      s"Versioned: unknown commitProtocol '$commitProtocol'")
+    if (commitProtocol == "cas")
+      writeSidecar(logRoot(dir), CasMarker, """{"protocol": "cas"}""")
+  }
+
   /** Create version 1 from `df`. `statsCol` opts the store into
     * stats-carrying manifests: every commit's manifest rows then carry
     * the per-(file, part) min/max envelope + Bloom sketch of that column
-    * (cast to long), and [[readPoint]]/[[readRange]] prune files from the
-    * manifest BEFORE the scan. `statsCols` extends the same treatment to
-    * FURTHER columns (production predicates skip on several — order key
-    * AND customer key AND date): every named column gets its own
-    * envelope + Bloom in the manifest's `stats` map, collected by the
-    * SAME single narrow scan, and a probe on ANY of them prunes. Pass
-    * the SAME stats columns to every subsequent [[merge]]/[[compact]] —
-    * a commit without them carries NULL stats for its fresh files
-    * (correct, unprunable).
+    * (cast to long), and [[readPoints]]/[[readRange]] prune files from
+    * the manifest BEFORE the scan. `statsCols` extends the same
+    * treatment to FURTHER columns (production predicates skip on
+    * several — order key AND customer key AND date): every named column
+    * gets its own envelope + Bloom in the manifest's `stats` map,
+    * collected by the SAME single narrow scan, and a probe on ANY of
+    * them prunes. Pass the SAME stats columns to every subsequent
+    * [[merge]]/[[compact]] — a commit without them carries NULL stats
+    * for its fresh files (correct, unprunable).
     *
     * `commitProtocol` is a committed property of the store: `rename`
     * (default — atomic directory rename, POSIX/HDFS) or `cas`
@@ -477,110 +522,88 @@ object Versioned {
       df: DataFrame, statsCol: Option[String] = None,
       statsCols: Seq[String] = Nil,
       commitProtocol: String = "rename"): Long = {
-    require(versions(dir).isEmpty, s"Versioned: $dir already initialized")
-    require(partCol != PartDir && !df.columns.contains(PartDir),
+    require(!(partCol +: df.columns).contains(PartDir),
       s"Versioned: column name $PartDir is reserved")
-    require(commitProtocol == "rename" || commitProtocol == "cas",
-      s"Versioned: unknown commitProtocol '$commitProtocol'")
-    if (commitProtocol == "cas") {
-      val f = casMarker(dir)
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath,
-        """{"protocol": "cas"}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    claimStore(dir, commitProtocol)
     val dataPath = newDataDir(dir, 1L)
     writeData(df, dataPath, partCol)
     commitManifest(spark, dir, 1L,
       fileParts(spark, dataPath, partCol,
         (statsCol.toSeq ++ statsCols).distinct, Some(df.schema)),
-      Some(df.schema))
+      df.schema)
     1L
+  }
+
+  private def writeSidecar(dir: String, name: String, body: String): Unit = {
+    val f = new java.io.File(dir, name)
+    f.getParentFile.mkdirs()
+    java.nio.file.Files.write(f.toPath,
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    ()
+  }
+
+  /** A committed sidecar of the version whose manifest dir is `md`.
+    * Every commit writes `_schema.json`, `_manifest_schema.json` and
+    * `_commit.json`; a missing one means a damaged log, never an older
+    * format, and fails loudly naming the file and the version. */
+  private def readSidecar(md: String, v: Long, name: String): String = {
+    val f = new java.io.File(md, name)
+    if (!f.isFile) throw new IllegalStateException(
+      s"Versioned: version $v has no committed $name sidecar ($md) — " +
+        "the log is damaged")
+    new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  private def readStructSidecar(md: String, v: Long,
+      name: String): StructType =
+    DataType.fromJson(readSidecar(md, v, name)).asInstanceOf[StructType]
+
+  /** Open version `v`'s manifest under its committed
+    * `_manifest_schema.json`: the bounded-metadata rows are decoded
+    * DRIVER-LOCALLY ([[ManifestLocal]]) and answered as a LocalRelation
+    * — every downstream collect/filter/distinct over the manifest then
+    * runs job-free in the optimizer, deleting one driver-scheduled Spark
+    * job from every store open (a path hit hundreds of times per bench).
+    * Any decode surprise falls back to the distributed reader, with the
+    * explicit sidecar schema (no inference job). Underscore-prefixed
+    * sidecars are invisible to the parquet scan itself. */
+  private def readManifest(spark: SparkSession, dir: String,
+      v: Long): DataFrame = {
+    val md = manifestDir(dir, v)
+    val sch = readStructSidecar(md, v, "_manifest_schema.json")
+    ManifestLocal.readRows(md, sch) match {
+      case Some(rows) => spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), sch)
+      case None => spark.read.schema(sch).parquet(md)
+    }
   }
 
   /** The snapshot SCHEMA lives in the log, not in data-file footers —
     * the lakehouse contract: reading a 100 TB snapshot must not open N
     * footers to discover columns (parquet `mergeSchema` inference), and
     * a version's schema is a COMMITTED fact, not whatever the reader
-    * infers. Stored as an underscore-prefixed sidecar inside the
-    * version's manifest directory (Spark's file readers ignore `_`
-    * paths, so the manifest parquet scan is unaffected). Pre-evolution
-    * stores have no sidecar and fall back to inference. */
-  private def schemaFile(dir: String, v: Long) =
-    new java.io.File(manifestDir(dir, v), "_schema.json")
-
-  private def writeSchemaFile(manifestDir: java.io.File,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val f = new java.io.File(manifestDir, "_schema.json")
-    f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath,
-      schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
-  }
-
-  /** Open version `v`'s manifest. When the commit carried a
-    * `_manifest_schema.json` sidecar (every post-r18 commit does), the
-    * bounded-metadata rows are decoded DRIVER-LOCALLY
-    * ([[ManifestLocal]], r19) and answered as a LocalRelation — every
-    * downstream collect/filter/distinct over the manifest then runs
-    * job-free in the optimizer, deleting one driver-scheduled Spark job
-    * from every store open (a path hit hundreds of times per bench).
-    * Any decode surprise, and pre-sidecar manifests, fall back to the
-    * distributed reader (with the explicit sidecar schema when present,
-    * skipping the inference job). Underscore-prefixed sidecars are
-    * invisible to the parquet scan itself. */
-  private def readManifest(spark: SparkSession, dir: String,
-      v: Long): DataFrame = {
-    val md = manifestDir(dir, v)
-    val f = new java.io.File(md, "_manifest_schema.json")
-    if (!f.exists()) spark.read.parquet(md)
-    else {
-      val sch = org.apache.spark.sql.types.DataType.fromJson(
-        new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      ManifestLocal.readRows(md, sch) match {
-        case Some(rows) => spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), sch)
-        case None => spark.read.schema(sch).parquet(md)
-      }
-    }
-  }
-
-  private def readSchema(dir: String,
-      v: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val f = schemaFile(dir, v)
-    if (!f.exists()) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8))
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
+    * infers. Stored as the `_schema.json` sidecar inside the version's
+    * manifest directory (Spark's file readers ignore `_` paths, so the
+    * manifest parquet scan is unaffected). */
+  private def readSchema(dir: String, v: Long): StructType =
+    readStructSidecar(manifestDir(dir, v), v, "_schema.json")
 
   /** Read a set of manifest-listed data files, answering in the
     * committed schema's LOGICAL names: the scan runs under the PHYSICAL
     * schema (renamed columns keep their on-disk name — the column-mapping
     * contract, so renames never rewrite data), then projects physical →
-    * logical. Any inferred directory column is dropped defensively. */
-  private def readFiles(spark: SparkSession, dir: String,
-      files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    schema match {
-      case Some(sch) =>
-        spark.read.schema(physicalSchema(sch))
-          .parquet(files.map(Manifest.unglob): _*)
-          .select(sch.fields.map(f => col(physName(f)).as(f.name)).toSeq: _*)
-      case None =>
-        spark.read.parquet(files.map(Manifest.unglob): _*).drop(PartDir)
-    }
+    * logical. */
+  private def readFiles(spark: SparkSession, files: Seq[String],
+      sch: StructType): DataFrame =
+    spark.read.schema(physicalSchema(sch))
+      .parquet(files.map(Manifest.unglob): _*)
+      .select(sch.fields.map(f => col(physName(f)).as(f.name)).toSeq: _*)
 
   /** Schema-correct EMPTY frame for a snapshot (logical names). */
-  private def emptyFrame(spark: SparkSession,
-      sch: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(sch.fields.map(f =>
-        f.copy(metadata = org.apache.spark.sql.types.Metadata.empty))))
+  private def emptyFrame(spark: SparkSession, sch: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(sch.fields.map(f => f.copy(metadata = Metadata.empty))))
 
   /** Scan snapshot `version` (defaults to the latest): exactly the files
     * its manifest lists, nothing newer, nothing vacuumed-in-place —
@@ -589,40 +612,21 @@ object Versioned {
     * it with NULLs (by-name parquet resolution), and a read at an OLD
     * version answers in that version's own (narrower) schema. */
   def read(spark: SparkSession, dir: String, version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latest(dir) else version
-    require(versions(dir).contains(v),
-      s"Versioned: version $v not in ${versions(dir)}")
-    val mDf = readManifest(spark, dir, v)
-    // ONE narrow (file, dv) collect answers both the file list and the
-    // dv resolution — the second manifest scan (dvPathsOf) was one more
-    // job on every snapshot read; sketches stay out of the projection
-    val hasDv = mDf.columns.contains("dv")
-    val fd = (if (hasDv) mDf.select(col("file"), col("dv"))
-      else mDf.select(col("file"),
-        lit(null).cast("array<string>").as("dv"))).collect()
-    val files = fd.map(_.getString(0)).distinct
-    val dvPaths = fd.iterator
-      .flatMap(r => Option(r.getSeq[String](1)).getOrElse(Seq.empty))
-      .toSeq.distinct
+    val v = resolve(dir, version)
+    val (files, dvPaths) = filesAndDvs(readManifest(spark, dir, v))
     val sch = readSchema(dir, v)
-    applyDv(spark, readFiles(spark, dir, files.toIndexedSeq, sch),
-      dvPaths, logicalNameOf(sch))
+    applyDv(spark, readFiles(spark, files, sch), dvPaths, logicalNameOf(sch))
   }
 
-  /** Commit wall-time of version `v` in epoch millis (from the
-    * `_commit.json` committed atomically with the manifest; legacy
-    * pre-r15 versions fall back to the manifest dir's mtime). */
+  /** Commit wall-time of version `v` in epoch millis, from the
+    * `_commit.json` committed atomically with the manifest. */
   def commitTime(dir: String, v: Long): Long = {
     val md = manifestDir(dir, v)
-    val f = new java.io.File(md, "_commit.json")
-    if (!f.exists()) new java.io.File(md).lastModified()
-    else {
-      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      """"ts_millis"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong)
-        .getOrElse(new java.io.File(md).lastModified())
-    }
+    """"ts_millis"\s*:\s*(\d+)""".r
+      .findFirstMatchIn(readSidecar(md, v, "_commit.json"))
+      .map(_.group(1).toLong)
+      .getOrElse(throw new IllegalStateException(
+        s"Versioned: version $v has an unreadable _commit.json ($md)"))
   }
 
   /** TIMESTAMP AS OF: scan the snapshot that was CURRENT at `tsMillis` —
@@ -640,83 +644,36 @@ object Versioned {
     read(spark, dir, eligible.max)
   }
 
-  /** The files a probe on PHYSICAL column `probeCol` must scan: every
-    * (file, part) row whose stats PASS `keep(mn, mx, bloom)`, plus every
-    * row whose stats describe a DIFFERENT column or no column at all
-    * (stats-less commits, pre-stats_col manifests) — unknown = always
-    * read: mis-attributed envelopes would prune away true matches, a
-    * silent wrong answer.
+  /** The files a probe on PHYSICAL column `probeCol` must scan, with
+    * their dv paths: every (file, part) row whose `stats(probeCol)`
+    * PASSES `keep(mn, mx, bloom)`, plus every row with no stats for
+    * that column (stats-less commits, a different stats column) —
+    * unknown = always read: pruning without an envelope would drop true
+    * matches, a silent wrong answer.
     *
-    * The filter runs INSIDE the manifest scan (distributed), and only
-    * the SURVIVING file names collect to the driver. The pre-r18 shape
-    * collected every row's stats — including the ~10 KB Bloom sketch —
-    * driver-side per probe: one row per (file, partition value) is
-    * bounded metadata, but at 10⁵–10⁶ manifest rows that is GBs of
-    * sketch bytes per point lookup (measured: 1.18 GB per probe at
-    * 120k manifest rows, SCALE.md §"Round-18: distributed manifest
-    * prune"). Post-prune the driver holds file names only, sized by
-    * the ANSWER (the probe's true file set + fpp), not the table. */
-  // takes the already-loaded manifest frame: the probe paths read the
-  // manifest ONCE and share it between stats pruning and dv resolution
-  // (a second read+collect per probe doubled hot-path manifest I/O).
-  // Returns (surviving files, their dv paths): the surviving rows'
-  // narrow (file, dv) projection rides the SAME distributed scan, so
-  // the probe paths no longer pay a second manifest job (dvPathsOf) to
-  // resolve tombstones — r18, one job per probe instead of two.
+    * The filter runs INSIDE the manifest scan, and only the SURVIVING
+    * rows' narrow (file, dv) projection reaches the driver: at 10⁵–10⁶
+    * manifest rows, collecting every row's ~10 KB Bloom sketch costs GBs
+    * per point lookup (measured: 1.18 GB per probe at 120k manifest
+    * rows, SCALE.md §"Round-18: distributed manifest prune"). Post-prune
+    * the driver holds file names only, sized by the ANSWER (the probe's
+    * true file set + fpp), not the table. One manifest scan answers
+    * both the pruning and the dv resolution. */
   private def pruneFiles(m: DataFrame, probeCol: String,
       keep: (Column, Column, Column) => Column)
       : (IndexedSeq[String], Seq[String]) = {
-    val hasMap = m.columns.contains("stats")
-    val hasLegacy = m.columns.contains("mn") && m.columns.contains("stats_col")
-    val dvCol =
-      if (m.columns.contains("dv")) col("dv")
-      else lit(null).cast("array<string>").as("dv")
-    def collectFd(rows: DataFrame): (IndexedSeq[String], Seq[String]) = {
-      val fd = rows.collect()
-      (fd.map(_.getString(0)).distinct.toIndexedSeq,
-        fd.iterator
-          .flatMap(r => Option(r.getSeq[String](1)).getOrElse(Seq.empty))
-          .toSeq.distinct)
-    }
-    if (!hasMap && !hasLegacy)
-      collectFd(m.select(col("file"), dvCol))
-    else {
-      // per ROW, not per manifest: a long history unions multi-column
-      // rows, single-column rows, and stats-less rows (alignUnion
-      // NULL-fills) — each row answers from its richest available form:
-      // the stats map keyed by physical column first, then the legacy
-      // flat fields when they describe the probed column
-      val fromMap =
-        if (hasMap) element_at(col("stats"), lit(probeCol))
-        else lit(null).cast("struct<mn:bigint,mx:bigint,bloom:binary>")
-      def pick(mapField: String, legacyName: String): Column = {
-        val primary = when(fromMap.isNotNull, fromMap.getField(mapField))
-        if (hasLegacy)
-          primary.when(col("stats_col") === lit(probeCol), col(legacyName))
-        else primary
-      }
-      val pmn = pick("mn", "mn")
-      val pmx = pick("mx", "mx")
-      collectFd(m.filter(pmn.isNull || pmx.isNull ||
-          keep(pmn, pmx, pick("bloom", "bloom")))
-        .select(col("file"), dvCol))
-    }
+    val s = element_at(col("stats"), lit(probeCol))
+    val (mn, mx) = (s.getField("mn"), s.getField("mx"))
+    filesAndDvs(m.filter(mn.isNull || mx.isNull ||
+      keep(mn, mx, s.getField("bloom"))))
   }
-
-  /** Bloom might-contain over the manifest's serialized sketch column —
-    * the point-probe tier of [[pruneFiles]], evaluated executor-side so
-    * the sketch bytes never travel to the driver. A NULL sketch is
-    * "unknown = read". Deserialization is per surviving manifest row,
-    * once per probe — manifest-scale, not data-scale. */
-  private val bloomMightContain =
-    udf((bloom: Array[Byte], key: Long) =>
-      graft.functions.BloomAgg.readFrom(bloom).mightContainLong(key))
 
   /** Batched might-contain for [[readPoints]]: ONE sketch
     * deserialization per manifest row answers the whole key batch.
     * `keys` arrives sorted — binary search to the first key inside the
     * row's [mn, mx] envelope, then test only the in-envelope run (the
-    * envelope already rejected everything outside). */
+    * envelope already rejected everything outside). Evaluated where the
+    * manifest scan runs, so sketch bytes never travel to the driver. */
   private val bloomAnyContain =
     udf((bloom: Array[Byte], mn: Long, mx: Long,
         keys: scala.collection.Seq[Long]) => {
@@ -736,29 +693,27 @@ object Versioned {
       hit
     })
 
-  /** Schema-correct empty frame for snapshot `v` when a probe prunes
-    * EVERY file: straight from the committed sidecar when one exists;
-    * a pre-sidecar store derives it from any manifest-listed file — and
-    * a pre-sidecar store whose manifest is ALSO empty (an all-deletes
-    * merge retired every file before any sidecar committed) fails
-    * loudly instead of letting the zero-path parquet read throw its
-    * unhelpful inference error (the same guard [[changesImpl]] carries;
-    * these two probe paths previously lacked it). */
-  private def emptySnapshot(spark: SparkSession, dir: String, v: Long,
-      sch: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    sch match {
-      case Some(s0) => emptyFrame(spark, s0)
-      case None =>
-        val files = readManifest(spark, dir, v)
-          .select(col("file")).distinct()
-          .collect().map(_.getString(0))
-        require(files.nonEmpty,
-          s"Versioned: version $v has an empty manifest and no committed " +
-            "_schema.json sidecar to derive the snapshot schema from " +
-            "(pre-evolution store) — re-commit any version to " +
-            "materialize the sidecar")
-        readFiles(spark, dir, files.toIndexedSeq, None).filter(lit(false))
-    }
+  /** The one probe path behind [[readRange]] and [[readPoints]]: resolve
+    * `version`, map `keyCol` to its physical name, prune the manifest
+    * with `keep(mn, mx, bloom)` ([[pruneFiles]]), scan the surviving
+    * files under their tombstones (a schema-correct empty frame when
+    * every file prunes), and apply the exact residual `filter` to the
+    * key cast to long. */
+  private def probe(spark: SparkSession, dir: String, keyCol: String,
+      version: Long, keep: (Column, Column, Column) => Column,
+      filter: Column => Column): DataFrame = {
+    val v = resolve(dir, version)
+    val sch = readSchema(dir, v)
+    val probePhys = sch.fields.find(_.name == keyCol)
+      .map(physName).getOrElse(keyCol)
+    val (files, dvs) = pruneFiles(readManifest(spark, dir, v), probePhys,
+      keep)
+    val base =
+      if (files.isEmpty) emptyFrame(spark, sch)
+      else applyDv(spark, readFiles(spark, files, sch), dvs,
+        logicalNameOf(sch))
+    base.filter(filter(col(keyCol).cast("long")))
+  }
 
   /** Range read `lo <= keyCol <= hi` at snapshot `version`, planning its
     * file list FROM the manifest: a file is scanned only if SOME of its
@@ -770,89 +725,46 @@ object Versioned {
     * `select * where id = ?`) done at lakehouse scale, composed with
     * time travel. */
   def readRange(spark: SparkSession, dir: String, keyCol: String,
-      lo: Long, hi: Long, version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latest(dir) else version
-    require(versions(dir).contains(v),
-      s"Versioned: version $v not in ${versions(dir)}")
-    val sch = readSchema(dir, v)
-    val probePhys = sch.flatMap(_.fields.find(_.name == keyCol))
-      .map(physName).getOrElse(keyCol)
-    val mDf = readManifest(spark, dir, v)
-    val (files, dvs) = pruneFiles(mDf, probePhys,
-      (mn, mx, _) => mx >= lo && mn <= hi)
-    val base =
-      if (files.nonEmpty) applyDv(spark,
-        readFiles(spark, dir, files, sch),
-        dvs, logicalNameOf(sch))
-      else emptySnapshot(spark, dir, v, sch)
-    base.filter(col(keyCol).cast("long") >= lo &&
-      col(keyCol).cast("long") <= hi)
-  }
+      lo: Long, hi: Long, version: Long = -1L): DataFrame =
+    probe(spark, dir, keyCol, version,
+      (mn, mx, _) => mx >= lo && mn <= hi, k => k >= lo && k <= hi)
 
-  /** Point read `keyCol = key` at snapshot `version` — the envelope
-    * check first (free), then each surviving (file, part) row's Bloom
-    * sketch: a file is scanned only if it MIGHT contain the key. No
-    * false negatives (the Bloom guarantee), fpp bounds the extra files.
-    * Under a partition layout uncorrelated with the key (the common
-    * hash-bucket case) every envelope spans the key range and min/max
-    * pruning degenerates — the Bloom tier is what keeps a point lookup
-    * at `AS OF` from scanning the snapshot. */
+  /** Point read `keyCol = key` at snapshot `version` — the one-key
+    * [[readPoints]]: the envelope check first (free), then each
+    * surviving (file, part) row's Bloom sketch, so a file is scanned
+    * only if it MIGHT contain the key. No false negatives (the Bloom
+    * guarantee), fpp bounds the extra files. Under a partition layout
+    * uncorrelated with the key (the common hash-bucket case) every
+    * envelope spans the key range and min/max pruning degenerates — the
+    * Bloom tier is what keeps a point lookup at `AS OF` from scanning
+    * the snapshot. */
   def readPoint(spark: SparkSession, dir: String, keyCol: String,
-      key: Long, version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latest(dir) else version
-    require(versions(dir).contains(v),
-      s"Versioned: version $v not in ${versions(dir)}")
-    val sch = readSchema(dir, v)
-    val probePhys = sch.flatMap(_.fields.find(_.name == keyCol))
-      .map(physName).getOrElse(keyCol)
-    val mDf = readManifest(spark, dir, v)
-    val (files, dvs) = pruneFiles(mDf, probePhys,
-      (mn, mx, bloom) => mn <= key && mx >= key &&
-        (bloom.isNull || bloomMightContain(bloom, lit(key))))
-    val base =
-      if (files.nonEmpty) applyDv(spark,
-        readFiles(spark, dir, files, sch),
-        dvs, logicalNameOf(sch))
-      else emptySnapshot(spark, dir, v, sch)
-    base.filter(col(keyCol).cast("long") === key)
-  }
+      key: Long, version: Long = -1L): DataFrame =
+    readPoints(spark, dir, keyCol, Seq(key), version)
 
   /** Batched point probe `keyCol IN keys` at snapshot `version` — N
-    * keys amortized over ONE distributed manifest scan and ONE data
-    * read of the union file set, where N [[readPoint]] calls pay N
-    * manifest scans (a scan costs seconds per probe at the 10⁵-file
-    * tier — 2.8 s at 120k manifest rows, SCALE.md §"Round-18:
-    * distributed manifest prune" — so the batch is the difference
-    * between a key-list lookup that costs one probe and one that costs
-    * N). Plan: per manifest row, the envelope rejects the whole batch
-    * span first, then ONE sketch deserialization answers the
-    * in-envelope keys ([[bloomAnyContain]]). Same guarantees as
-    * readPoint per key — no false negatives, fpp-bounded extra files —
-    * and the planned set is exactly the union of the per-key plans
-    * (sketches are deterministic). Keys ship into the scan as a literal
-    * array: thousands of keys, not millions — past that the probe stops
-    * being a point lookup and belongs to `read(...).join(keys)`. */
+    * keys amortized over ONE manifest scan and ONE data read of the
+    * union file set, where N single-key probes pay N manifest scans (a
+    * scan costs seconds per probe at the 10⁵-file tier — 2.8 s at 120k
+    * manifest rows, SCALE.md §"Round-18: distributed manifest prune" —
+    * so the batch is the difference between a key-list lookup that
+    * costs one probe and one that costs N). Plan: per manifest row, the
+    * envelope rejects the whole batch span first, then ONE sketch
+    * deserialization answers the in-envelope keys ([[bloomAnyContain]]).
+    * No false negatives, fpp-bounded extra files, and the planned set is
+    * exactly the union of the per-key plans (sketches are
+    * deterministic). Keys ship into the scan as a literal array:
+    * thousands of keys, not millions — past that the probe stops being
+    * a point lookup and belongs to `read(...).join(keys)`. */
   def readPoints(spark: SparkSession, dir: String, keyCol: String,
       keys: Seq[Long], version: Long = -1L): DataFrame = {
     require(keys.nonEmpty, "Versioned.readPoints: empty key batch")
     val ks = keys.distinct.sorted
-    val v = if (version < 0) latest(dir) else version
-    require(versions(dir).contains(v),
-      s"Versioned: version $v not in ${versions(dir)}")
-    val sch = readSchema(dir, v)
-    val probePhys = sch.flatMap(_.fields.find(_.name == keyCol))
-      .map(physName).getOrElse(keyCol)
-    val mDf = readManifest(spark, dir, v)
     val kArr = typedlit(ks)
-    val (files, dvs) = pruneFiles(mDf, probePhys,
+    probe(spark, dir, keyCol, version,
       (mn, mx, bloom) => mn <= ks.last && mx >= ks.head &&
-        (bloom.isNull || bloomAnyContain(bloom, mn, mx, kArr)))
-    val base =
-      if (files.nonEmpty) applyDv(spark,
-        readFiles(spark, dir, files, sch),
-        dvs, logicalNameOf(sch))
-      else emptySnapshot(spark, dir, v, sch)
-    base.filter(col(keyCol).cast("long").isInCollection(ks))
+        (bloom.isNull || bloomAnyContain(bloom, mn, mx, kArr)),
+      _.isInCollection(ks))
   }
 
   /** MERGE `source` into the latest snapshot, committing a NEW version
@@ -888,6 +800,7 @@ object Versioned {
     require(versions(dir).contains(v),
       s"Versioned.merge: parentVersion $v is not a committed version")
     val next = v + 1
+    val sch = readSchema(dir, v)
     val mDf = readManifest(spark, dir, v)
     val mSchema = mDf.schema
     val mRows = mDf.collect()
@@ -895,17 +808,10 @@ object Versioned {
     val manifest = mRows.map(r => (r.getString(fIdx), r.getString(pIdx)))
     // the manifest rows are already on the driver — resolve dv paths from
     // them instead of re-scanning the manifest per file set (dvPathsOf's
-    // distinct+collect was one more job per merge on the commit hot path)
-    val dvIdx =
-      if (mSchema.fieldNames.contains("dv")) Some(mSchema.fieldIndex("dv"))
-      else None
-    def dvOf(fs: Set[String]): Seq[String] = dvIdx match {
-      case None => Seq.empty
-      case Some(i) => mRows.iterator
-        .filter(r => fs(r.getString(fIdx)))
-        .flatMap(r => Option(r.getSeq[String](i)).getOrElse(Seq.empty))
-        .toSeq.distinct
-    }
+    // collect was one more job per merge on the commit hot path)
+    val dvIdx = mSchema.fieldIndex("dv")
+    def dvOf(fs: Set[String]): Seq[String] =
+      dvsOf(mRows.filter(r => fs(r.getString(fIdx))), dvIdx)
     // ONE distinct-partition collect does double duty: the NULL-partition
     // guard and the affected set (the guard used to be its own full
     // source computation — one extra job per merge; a NULL partition
@@ -922,10 +828,8 @@ object Versioned {
       val untouched = manifest.filter { case (f, _) => !touched(f) }
         .map(_._1).distinct.toIndexedSeq
       if (untouched.nonEmpty) {
-        val uSch = readSchema(dir, v)
-        val moved = applyDv(spark,
-            readFiles(spark, dir, untouched, uSch),
-            dvOf(untouched.toSet), logicalNameOf(uSch))
+        val moved = applyDv(spark, readFiles(spark, untouched, sch),
+            dvOf(untouched.toSet), logicalNameOf(sch))
           .select(col(keyCol))
           .join(source.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi")
           .limit(5).collect()
@@ -949,12 +853,8 @@ object Versioned {
     // files, whose manifest rows carry no dv
     val slice =
       if (touched.isEmpty) read(spark, dir, v).filter(lit(false))
-      else {
-        val tSch = readSchema(dir, v)
-        applyDv(spark,
-          readFiles(spark, dir, touched.toIndexedSeq, tSch),
-          dvOf(touched), logicalNameOf(tSch))
-      }
+      else applyDv(spark, readFiles(spark, touched.toIndexedSeq, sch),
+        dvOf(touched), logicalNameOf(sch))
     val kept = slice.join(
       source.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
     val upserts = source.filter(col(opCol) =!= "D").drop(opCol)
@@ -971,10 +871,8 @@ object Versioned {
       else {
         val keptTypes = kept.schema.map(f => f.name -> f.dataType)
         val srcTypes = upserts.schema.map(f => f.name -> f.dataType)
-        val added = srcTypes.filterNot { case (n, _) =>
-          kept.columns.contains(n) }
-        val missing = keptTypes.filterNot { case (n, _) =>
-          upserts.columns.contains(n) }
+        val added = srcTypes.filterNot(t => keptTypes.exists(_._1 == t._1))
+        val missing = keptTypes.filterNot(t => srcTypes.exists(_._1 == t._1))
         val keptW = added.foldLeft(kept) { case (d, (n, t)) =>
           d.withColumn(n, lit(null).cast(t)) }
         val upsW = missing.foldLeft(upserts) { case (d, (n, t)) =>
@@ -985,44 +883,26 @@ object Versioned {
     // projected physical -> logical), but data files always carry the
     // physical namespace — the column-mapping contract that lets a rename
     // commit move zero bytes. Columns added by mergeSchema map identity.
-    val prevMap = mapping(readSchema(dir, v))
+    val prevMap = mapping(sch)
     val outPhys = out.select(out.columns.map(n =>
       col(n).as(prevMap.getOrElse(n, n))).toIndexedSeq: _*)
     val physPart = prevMap.getOrElse(partCol, partCol)
     val dataPath = newDataDir(dir, next)
     writeData(outPhys, dataPath, physPart)
     // an all-deletes merge writes no data files at all — the new
-    // manifest is then just the carryover (the schema is pinned so the
-    // empty case still commits a readable manifest)
-    val manifestSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("part",
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("rows",
-        org.apache.spark.sql.types.LongType, nullable = true)))
-    def anyParquet(f: java.io.File): Boolean =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .exists(anyParquet)
-      else f.getName.endsWith(".parquet")
+    // manifest is then just the carryover
     val fresh =
-      if (anyParquet(new java.io.File(dataPath)))
+      if (hasParquet(dataPath))
         fileParts(spark, dataPath, physPart,
           (statsCol.toSeq ++ statsCols).distinct
             .map(c => prevMap.getOrElse(c, c)), Some(outPhys.schema))
-      else spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        manifestSchema)
+      else emptyFrame(spark, ManifestSchema)
     // carry untouched files' manifest rows VERBATIM (stats included —
     // their files are byte-identical, so their envelopes/sketches stay
-    // exact forever); alignUnion NULL-fills when the two sides' stats
-    // columns differ (stats added or dropped mid-history)
-    val carried = mRows.filter(r => !touched(r.getString(fIdx)))
-    val carriedDf = spark.createDataFrame(
-      java.util.Arrays.asList(carried.toIndexedSeq: _*), mSchema)
-    commitManifest(spark, dir, next, alignUnion(carriedDf, fresh),
-      Some(withPhysMeta(out.schema, prevMap)), txn)
+    // exact forever)
+    commitManifest(spark, dir, next,
+      carriedRows(spark, mDf, mRows, touched).unionByName(fresh),
+      withPhysMeta(out.schema, prevMap), txn)
     next
   }
 
@@ -1070,8 +950,7 @@ object Versioned {
         .collect().map(_.getString(0)).toSet
       val untouched = (all -- touched).toIndexedSeq
       if (untouched.nonEmpty) {
-        val stray = applyDv(spark,
-            readFiles(spark, dir, untouched, sch),
+        val stray = applyDv(spark, readFiles(spark, untouched, sch),
             dvPathsOf(mDf, Some(untouched.toSet)), logicalNameOf(sch))
           .select(col(keyCol))
           .join(keys.select(col(keyCol)).distinct(), Seq(keyCol),
@@ -1096,7 +975,7 @@ object Versioned {
     // tag the source file SCAN-SIDE (input_file_name is single-source
     // only), then let prior tombstones apply above it — a re-delete on
     // an already-DV'd file attributes against its LIVE rows
-    val tagged = readFiles(spark, dir, touched.toIndexedSeq, sch)
+    val tagged = readFiles(spark, touched.toIndexedSeq, sch)
       .withColumn("__srcf", input_file_name())
     val live = applyDv(spark, tagged,
       dvPathsOf(mDf, Some(touched)), logicalNameOf(sch))
@@ -1109,14 +988,11 @@ object Versioned {
     val dvFiles = spark.read.parquet(dvPath)
       .select(col("file")).distinct().collect().map(_.getString(0)).toSet
     if (dvFiles.isEmpty) { // keys absent from the live rows: no-op
-      rmTree(new java.io.File(dvPath))
+      TmpDirs.rmTree(dvPath)
       commitManifest(spark, dir, next, mDf, sch)
       return next
     }
-    val withDv =
-      if (mDf.columns.contains("dv")) mDf
-      else mDf.withColumn("dv", lit(null).cast("array<string>"))
-    val updated = withDv.withColumn("dv",
+    val updated = mDf.withColumn("dv",
       when(col("file").isin(dvFiles.toSeq: _*),
         array_union(coalesce(col("dv"),
           array().cast("array<string>")), array(lit(dvPath))))
@@ -1164,7 +1040,6 @@ object Versioned {
     val sch = readSchema(dir, v)
     val prevMap = mapping(sch)
     val mDf = readManifest(spark, dir, v)
-    if (!mDf.columns.contains("dv")) return v
     val mSchema = mDf.schema
     val mRows = mDf.collect()
     val fIdx = mSchema.fieldIndex("file")
@@ -1196,17 +1071,14 @@ object Versioned {
     }.toIndexedSeq.sorted
     if (rewrite.isEmpty) return v
     val next = v + 1
-    val physSch = sch.map(physicalSchema)
-    require(!physSch.exists(_.fieldNames.contains("__bin")),
+    val physSch = physicalSchema(sch)
+    require(!physSch.fieldNames.contains("__bin"),
       "Versioned: column name __bin is reserved (materialization bin dirs)")
     val dataPath = newDataDir(dir, next)
-    def norm(uri: String): String =
-      try new org.apache.hadoop.fs.Path(new java.net.URI(uri)).toString
-      catch { case _: java.net.URISyntaxException => uri }
     val binOf: Map[String, Int] = rewrite.zipWithIndex
       .flatMap { case (f, i) => Seq(f -> i, norm(f) -> i) }.toMap
     val binUdf = udf((f: String) => binOf.get(f).orElse(binOf.get(norm(f))))
-    val reader = physSch.fold(spark.read)(spark.read.schema)
+    val reader = spark.read.schema(physSch)
     // physical scan of ONLY the qualifying files; the anti-join rides the
     // same scan (physical key_col — no translation), one output file per
     // source file so the existing layout survives
@@ -1221,25 +1093,15 @@ object Versioned {
     liveScan
       .repartition(rewrite.size, col("__bin"))
       .write.partitionBy("__bin").mode("errorifexists").parquet(dataPath)
-    val rewriteSet = rewrite.toSet
-    val carried = mRows.filter(r => !rewriteSet(r.getString(fIdx)))
-    val carriedDf = spark.createDataFrame(
-      java.util.Arrays.asList(carried.toIndexedSeq: _*), mSchema)
+    val carriedDf = carriedRows(spark, mDf, mRows, rewrite.toSet)
     // a fully-tombstoned rewrite set writes no parquet at all — the new
     // manifest is just the carried rows (the dead files vanish)
-    def hasParquet(f: java.io.File): Boolean =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).exists(hasParquet)
-      else f.getName.endsWith(".parquet")
     val manifest =
-      if (!hasParquet(new java.io.File(dataPath))) carriedDf
-      else {
-        val physPart = prevMap.getOrElse(partCol, partCol)
-        val fresh = fileParts(spark, dataPath, physPart,
-          (statsCol.toSeq ++ statsCols).distinct
-            .map(c => prevMap.getOrElse(c, c)))
-        alignUnion(carriedDf, fresh)
-      }
+      if (!hasParquet(dataPath)) carriedDf
+      else carriedDf.unionByName(fileParts(spark, dataPath,
+        prevMap.getOrElse(partCol, partCol),
+        (statsCol.toSeq ++ statsCols).distinct
+          .map(c => prevMap.getOrElse(c, c))))
     commitManifest(spark, dir, next, manifest, sch)
     next
   }
@@ -1286,23 +1148,25 @@ object Versioned {
     val mDf = readManifest(spark, dir, v)
     val mSchema = mDf.schema
     val mRows = mDf.collect()
-    val (fIdx, rIdx) = (mSchema.fieldIndex("file"), mSchema.fieldIndex("rows"))
-    val mnIdx =
-      if (mSchema.fieldNames.contains("mn")) Some(mSchema.fieldIndex("mn"))
-      else None
+    val (fIdx, rIdx, sIdx) = (mSchema.fieldIndex("file"),
+      mSchema.fieldIndex("rows"), mSchema.fieldIndex("stats"))
     // Pack order decides post-compact SKIPPING quality: packing by size
     // scrambles key ranges, so a packed file's envelope spans everything
-    // and readPoint/readRange degrade to scanning every bin. With stats
-    // present, pack by ascending key envelope instead — bins then hold
-    // CONTIGUOUS key ranges and the packed files stay as prunable as the
-    // fragments were (files with NULL stats sort last, packed together).
+    // and readPoints/readRange degrade to scanning every bin. With a
+    // stats column, pack by ascending envelope of the FIRST one instead
+    // — bins then hold CONTIGUOUS key ranges and the packed files stay
+    // as prunable as the fragments were (files with no stats for it
+    // sort last, packed together). Without one, pack by size.
+    val packCol = (statsCol.toSeq ++ statsCols).headOption
+      .map(c => prevMap.getOrElse(c, c))
+    def mnOf(r: Row): Option[Long] = for {
+      c <- packCol
+      m <- Option(r.getMap[String, Row](sIdx))
+      st <- m.get(c) if st != null && !st.isNullAt(0)
+    } yield st.getLong(0)
     val fileRows = mRows.groupBy(_.getString(fIdx)).view
-      .mapValues { rs =>
-        val n = rs.map(_.getLong(rIdx)).sum
-        val mn = mnIdx.flatMap(i => rs.flatMap(r =>
-          if (r.isNullAt(i)) None else Some(r.getLong(i))).minOption)
-        (n, mn)
-      }.toSeq
+      .mapValues(rs => (rs.map(_.getLong(rIdx)).sum, rs.flatMap(mnOf).minOption))
+      .toSeq
       .sortBy { case (f, (n, mn)) => (mn.getOrElse(Long.MaxValue), n, f) }
       .map { case (f, (n, _)) => (f, n) }
     val groups = Vector.newBuilder[Vector[String]]
@@ -1319,20 +1183,10 @@ object Versioned {
       s"Versioned.compact: nothing to compact under $dir — every bin " +
         s"holds a single file at maxGroupRows=$maxGroupRows (raise it, " +
         "or the store is already compact)")
-    val physSch = sch.map(physicalSchema)
-    require(!physSch.exists(_.fieldNames.contains("__bin")),
+    val physSch = physicalSchema(sch)
+    require(!physSch.fieldNames.contains("__bin"),
       "Versioned: column name __bin is reserved (compaction bin dirs)")
     val dataPath = newDataDir(dir, next)
-    // file → bin, keyed by the normalized path form input_file_name()
-    // reports (manifest entries were themselves recorded from
-    // input_file_name(), so both sides normalize identically)
-    def norm(uri: String): String =
-      try new org.apache.hadoop.fs.Path(new java.net.URI(uri)).toString
-      catch { case _: java.net.URISyntaxException => uri }
-    // both raw and normalized key forms: input_file_name() re-reports
-    // the manifest's own recorded string when scanning the same files,
-    // so the raw hash hit is the per-row hot path — the URI parse in
-    // norm() only runs for a form drift that in practice never happens
     val binOf: Map[String, Int] = rewrite.zipWithIndex
       .flatMap { case (g, i) => g.flatMap(f => Seq(f -> i, norm(f) -> i)) }
       .toMap
@@ -1341,7 +1195,7 @@ object Versioned {
     // files, never through the logical namespace — and reading under
     // the committed physical schema NULL-fills columns the oldest
     // fragments predate (schema evolution), exactly like any read
-    val reader = physSch.fold(spark.read)(spark.read.schema)
+    val reader = spark.read.schema(physSch)
     // DV'd fragments materialize their tombstones during the pack (the
     // anti-join rides the same scan — __bin and the dv file tag are both
     // computed scan-side, below the join); the packed files' fresh
@@ -1358,15 +1212,12 @@ object Versioned {
     packedScan
       .repartition(rewrite.size, col("__bin"))
       .write.partitionBy("__bin").mode("errorifexists").parquet(dataPath)
-    val physPart = prevMap.getOrElse(partCol, partCol)
-    val fresh = fileParts(spark, dataPath, physPart,
+    val fresh = fileParts(spark, dataPath,
+      prevMap.getOrElse(partCol, partCol),
       (statsCol.toSeq ++ statsCols).distinct
         .map(c => prevMap.getOrElse(c, c)))
-    val packed = rewrite.flatten.toSet
-    val carried = mRows.filter(r => !packed(r.getString(fIdx)))
-    val carriedDf = spark.createDataFrame(
-      java.util.Arrays.asList(carried.toIndexedSeq: _*), mSchema)
-    commitManifest(spark, dir, next, alignUnion(carriedDf, fresh), sch)
+    commitManifest(spark, dir, next, carriedRows(spark, mDf, mRows,
+      rewrite.flatten.toSet).unionByName(fresh), sch)
     next
   }
 
@@ -1412,16 +1263,15 @@ object Versioned {
       .collect().map(_.getString(0)).toIndexedSeq
     require(files.nonEmpty,
       s"Versioned.recluster: $dir has no data files at v$v")
-    val physSch = sch.map(physicalSchema)
-    require(!physSch.exists(s0 => s0.fieldNames.contains("__tile") ||
-      s0.fieldNames.contains("__cidx")),
+    val physSch = physicalSchema(sch)
+    require(!physSch.fieldNames.contains("__tile") &&
+      !physSch.fieldNames.contains("__cidx"),
       "Versioned: column names __tile/__cidx are reserved (recluster)")
     val physDims = dims.map(d => prevMap.getOrElse(d, d)).map(col)
     val fn = if (curve == "hilbert") "graft_hilbert" else "graft_zvalue"
     val idx = call_function(fn, (lit(bits) +: physDims): _*)
-    val reader = physSch.fold(spark.read)(spark.read.schema)
     val scan = applyDv(spark,
-      reader.parquet(files.map(Manifest.unglob): _*),
+      spark.read.schema(physSch).parquet(files.map(Manifest.unglob): _*),
       dvPathsOf(mDf, Some(files.toSet)), identity)
     val dataPath = newDataDir(dir, next)
     scan
@@ -1484,19 +1334,8 @@ object Versioned {
     * files. Returns the clone's committed version (1). */
   def shallowClone(spark: SparkSession, src: String, dst: String,
       version: Long = -1L, commitProtocol: String = "rename"): Long = {
-    require(versions(dst).isEmpty, s"Versioned: $dst already initialized")
-    require(commitProtocol == "rename" || commitProtocol == "cas",
-      s"Versioned: unknown commitProtocol '$commitProtocol'")
-    val v = if (version < 0) latest(src) else version
-    require(versions(src).contains(v),
-      s"Versioned: version $v not in ${versions(src)}")
-    if (commitProtocol == "cas") {
-      val f = casMarker(dst)
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath,
-        """{"protocol": "cas"}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    val v = resolve(src, version)
+    claimStore(dst, commitProtocol)
     commitManifest(spark, dst, 1L,
       readManifest(spark, src, v), readSchema(src, v))
     1L
@@ -1535,21 +1374,18 @@ object Versioned {
       else {
         // raw PHYSICAL read of the snapshot's files (stats describe
         // physical columns; [[pruneFiles]] probes by physical name)
-        val raw = sch match {
-          case Some(s0) => spark.read.schema(physicalSchema(s0))
-            .parquet(files.map(Manifest.unglob): _*)
-          case None =>
-            spark.read.parquet(files.map(Manifest.unglob): _*).drop(PartDir)
-        }
+        val raw = spark.read.schema(physicalSchema(sch))
+          .parquet(files.map(Manifest.unglob): _*)
         val stats = filePartsOf(raw, physPart,
           statsCols.map(c => m.getOrElse(c, c)).distinct)
         // deletion vectors MUST carry forward: a backfilled manifest
         // without the prior rows' dv arrays would resurrect tombstoned
         // rows (the recomputed envelopes still cover deleted keys — a
         // valid over-approximation; the dv is the correctness bit)
-        if (!mDf.columns.contains("dv")) stats
-        else stats.join(
-          mDf.select(col("file"), col("dv")).distinct(), Seq("file"), "left")
+        val dvd = mDf.filter(col("dv").isNotNull)
+          .select(col("file"), col("dv")).distinct()
+        if (dvd.isEmpty) stats
+        else stats.drop("dv").join(dvd, Seq("file"), "left")
       }
     commitManifest(spark, dir, next, fresh, sch)
     next
@@ -1567,27 +1403,23 @@ object Versioned {
       to: String): Long = {
     val v = latest(dir)
     val next = v + 1
-    val sch = readSchema(dir, v).getOrElse(throw new IllegalArgumentException(
-      s"Versioned.renameColumn: $dir has no committed _schema.json " +
-        "sidecar (pre-evolution store) — commit any merge first"))
+    val sch = readSchema(dir, v)
     require(sch.fieldNames.contains(from),
       s"Versioned.renameColumn: no column $from in ${sch.fieldNames.toSeq}")
     require(!sch.fieldNames.contains(to),
       s"Versioned.renameColumn: column $to already exists")
     require(to != PartDir, s"Versioned: column name $PartDir is reserved")
-    val newSch = org.apache.spark.sql.types.StructType(sch.fields.map { f =>
+    val newSch = StructType(sch.fields.map { f =>
       if (f.name != from) f
       else {
         val phys = physName(f)
-        val mb = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
+        val mb = new MetadataBuilder().withMetadata(f.metadata)
         val md = (if (phys != to) mb.putString(PhysKey, phys)
                   else mb.remove(PhysKey)).build()
-        org.apache.spark.sql.types.StructField(to, f.dataType, f.nullable, md)
+        StructField(to, f.dataType, f.nullable, md)
       }
     })
-    commitManifest(spark, dir, next,
-      readManifest(spark, dir, v), Some(newSch))
+    commitManifest(spark, dir, next, readManifest(spark, dir, v), newSch)
     next
   }
 
@@ -1600,8 +1432,7 @@ object Versioned {
   def dropColumn(spark: SparkSession, dir: String, name: String): Long = {
     val v = latest(dir)
     val next = v + 1
-    val sch = readSchema(dir, v).getOrElse(throw new IllegalArgumentException(
-      s"Versioned.dropColumn: $dir has no committed _schema.json sidecar"))
+    val sch = readSchema(dir, v)
     require(sch.fieldNames.contains(name),
       s"Versioned.dropColumn: no column $name in ${sch.fieldNames.toSeq}")
     require(sch.fields.length >= 2,
@@ -1629,8 +1460,7 @@ object Versioned {
           "(compact, or merge the affected partitions), then drop.")
     }
     commitManifest(spark, dir, next, mDf,
-      Some(org.apache.spark.sql.types.StructType(
-        sch.fields.filter(_.name != name))))
+      StructType(sch.fields.filter(_.name != name)))
     next
   }
 
@@ -1674,43 +1504,27 @@ object Versioned {
     // tombstones vs new, and the key diff emits exactly the newly
     // tombstoned rows as "D" (a compaction-style rewrite stays invisible
     // exactly as before: rewritten-but-unchanged rows drop out)
-    def manifestEntries(v: Long): Map[String, Seq[String]] = {
-      val m = readManifest(spark, dir, v)
-      val hasDv = m.columns.contains("dv")
-      val sel =
-        if (hasDv) m.select(col("file"), col("dv")).distinct()
-        else m.select(col("file"),
-          lit(null).cast("array<string>").as("dv")).distinct()
-      sel.collect().map { r =>
-        val dv = if (r.isNullAt(1)) Seq.empty[String]
-          else r.getSeq[String](1).toIndexedSeq
-        r.getString(0) -> dv
-      }.groupBy(_._1).view
+    def manifestEntries(v: Long): Map[String, Seq[String]] =
+      readManifest(spark, dir, v).select(col("file"), col("dv")).distinct()
+        .collect().map { r =>
+          val dv = if (r.isNullAt(1)) Seq.empty[String]
+            else r.getSeq[String](1).toIndexedSeq
+          r.getString(0) -> dv
+        }.groupBy(_._1).view
         .mapValues(_.flatMap(_._2).distinct.sorted.toIndexedSeq)
         .toMap
-    }
     val (e1, e2) = (manifestEntries(fromV), manifestEntries(toV))
-    val (m1, m2) = (e1.keySet, e2.keySet)
     val id1 = e1.toSet
     val id2 = e2.toSet
     val schema = readSchema(dir, toV)
+    // an empty side is a schema-correct empty frame straight from the
+    // committed sidecar — robust even when toV's own manifest is EMPTY
+    // (an all-deletes merge that retired every file), where a zero-path
+    // parquet read would throw instead of answering with an empty feed
     def slice(files: Set[String]): DataFrame =
-      if (files.isEmpty) schema match {
-        // schema-correct empty frame straight from the committed sidecar
-        // — robust even when toV's own manifest is EMPTY (an all-deletes
-        // merge that retired every file), where a zero-path parquet read
-        // would throw instead of answering with an empty feed
-        case Some(sch) => spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), sch)
-        case None =>
-          require(m2.nonEmpty,
-            s"Versioned.changes: version $toV has an empty manifest and " +
-              "no committed _schema.json sidecar to derive the change-feed " +
-              "schema from (pre-evolution store) — re-commit any version " +
-              "to materialize the sidecar")
-          readFiles(spark, dir, m2.toIndexedSeq, schema).filter(lit(false))
-      }
-      else readFiles(spark, dir, files.toIndexedSeq, schema)
+      if (files.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), schema)
+      else readFiles(spark, files.toIndexedSeq, schema)
     def dvSlice(churned: Set[String], dvs: Map[String, Seq[String]])
         : DataFrame =
       applyDv(spark, slice(churned),
@@ -1765,25 +1579,33 @@ object Versioned {
       keyCol: String, source: DataFrame, opCol: String = "op",
       checkKeyMoves: Boolean = false, mergeSchema: Boolean = false,
       statsCol: Option[String] = None, maxAttempts: Int = 5,
-      statsCols: Seq[String] = Nil): Long = {
+      statsCols: Seq[String] = Nil): Long =
+    retryRaces("mergeRetry", dir, maxAttempts)(merge(spark, dir, partCol,
+      keyCol, source, opCol, checkKeyMoves, mergeSchema, statsCol, statsCols))
+
+  /** The ONE optimistic-concurrency retry loop: run `attempt` up to
+    * `maxAttempts` times, backing off 10 ms × attempt after each lost
+    * commit race. Retries ONLY [[ConcurrentCommitException]] — any other
+    * failure (broken invariant, stopped context) propagates on attempt
+    * 1; exhaustion throws a race naming `op` with the last loss as
+    * cause. */
+  private def retryRaces[T](op: String, dir: String, maxAttempts: Int)(
+      attempt: => T): T = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    var attempt = 0
+    var n = 0
     var last: ConcurrentCommitException = null
-    while (attempt < maxAttempts) {
-      attempt += 1
-      // retry ONLY the commit race — any other IllegalStateException
-      // (broken invariant, stopped context) propagates on attempt 1
-      try return merge(spark, dir, partCol, keyCol, source, opCol,
-        checkKeyMoves, mergeSchema, statsCol, statsCols)
+    while (n < maxAttempts) {
+      n += 1
+      try return attempt
       catch {
         case e: ConcurrentCommitException =>
           last = e
-          Thread.sleep(10L * attempt)
+          Thread.sleep(10L * n)
       }
     }
     throw new ConcurrentCommitException(
-      s"Versioned.mergeRetry: lost the commit race $maxAttempts times " +
-        s"under $dir — contention exceeds the retry budget", last)
+      s"Versioned.$op: lost the commit race $maxAttempts times under " +
+        s"$dir — contention exceeds the retry budget", last)
   }
 
   /** The LAST txn_version application `appId` committed into this
@@ -1842,27 +1664,14 @@ object Versioned {
     require(appId.nonEmpty && appId.forall(c =>
       c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
       s"Versioned.mergeIdempotent: appId must match [A-Za-z0-9._-]+: '$appId'")
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    var attempt = 0
-    var last: ConcurrentCommitException = null
-    while (attempt < maxAttempts) {
-      attempt += 1
+    retryRaces("mergeIdempotent", dir, maxAttempts) {
       val parent = latest(dir)
-      if (txnVersion(dir, appId).exists(_ >= txnVer))
-        return (latest(dir), false)
-      try return (merge(spark, dir, partCol, keyCol, source, opCol,
+      if (txnVersion(dir, appId).exists(_ >= txnVer)) (latest(dir), false)
+      else (merge(spark, dir, partCol, keyCol, source, opCol,
         checkKeyMoves = false, mergeSchema = mergeSchema,
         statsCol = statsCol, statsCols = statsCols,
         txn = Some((appId, txnVer)), parentVersion = Some(parent)), true)
-      catch {
-        case e: ConcurrentCommitException =>
-          last = e
-          Thread.sleep(10L * attempt)
-      }
     }
-    throw new ConcurrentCommitException(
-      s"Versioned.mergeIdempotent: lost the commit race $maxAttempts " +
-        s"times under $dir — contention exceeds the retry budget", last)
   }
 
   /** A foreachBatch function that upserts each micro-batch into the
@@ -1896,23 +1705,9 @@ object Versioned {
     * key, or holds it in a fresh file the re-derived scan attributes
     * correctly). Retries ONLY the commit race. */
   def deleteKeysDvRetry(spark: SparkSession, dir: String, partCol: String,
-      keyCol: String, keys: DataFrame, maxAttempts: Int = 5): Long = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    var attempt = 0
-    var last: ConcurrentCommitException = null
-    while (attempt < maxAttempts) {
-      attempt += 1
-      try return deleteKeysDv(spark, dir, partCol, keyCol, keys)
-      catch {
-        case e: ConcurrentCommitException =>
-          last = e
-          Thread.sleep(10L * attempt)
-      }
-    }
-    throw new ConcurrentCommitException(
-      s"Versioned.deleteKeysDvRetry: lost the commit race $maxAttempts " +
-        s"times under $dir — contention exceeds the retry budget", last)
-  }
+      keyCol: String, keys: DataFrame, maxAttempts: Int = 5): Long =
+    retryRaces("deleteKeysDvRetry", dir, maxAttempts)(
+      deleteKeysDv(spark, dir, partCol, keyCol, keys))
 
   /** Reclaim CRASHED and LOST-RACE commit attempts: every attempt
     * writes its data under a token-unique dir and only the atomic
@@ -1926,25 +1721,14 @@ object Versioned {
     * quiesced; an IN-FLIGHT attempt looks exactly like a crash from
     * here. */
   def recover(spark: SparkSession, dir: String): Seq[String] = {
-    val referenced = versions(dir).flatMap { v =>
-      readManifest(spark, dir, v)
-        .select(col("file")).distinct()
-        .collect().map(r => new java.io.File(
-          new org.apache.hadoop.fs.Path(
-            new java.net.URI(r.getString(0))).toUri.getPath).getCanonicalPath)
-    }.toSet
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .toSeq.flatMap(files)
-      else Seq(f)
+    val referenced = referencedFiles(spark, dir, versions(dir))
     val orphaned = Option(new java.io.File(s"$dir/data").listFiles())
       .getOrElse(Array.empty)
       .filter(d => d.isDirectory &&
-        !files(d).exists(f => f.getName.endsWith(".parquet") &&
-          referenced(f.getCanonicalPath)))
+        !TmpDirs.leafFiles(d.getPath).exists(f =>
+          f.getName.endsWith(".parquet") && referenced(f.getCanonicalPath)))
       .map(_.getName).sorted.toIndexedSeq
-    orphaned.foreach(n => rmTree(new java.io.File(s"$dir/data/$n")))
+    orphaned.foreach(n => TmpDirs.rmTree(s"$dir/data/$n"))
     // stranded staging: rename-mode `.tmp-v=*` dirs, CAS-mode `.ptr-*`
     // temp files, and CAS staged manifest dirs no committed pointer
     // references (a lost race that crashed before its own cleanup)
@@ -1957,7 +1741,7 @@ object Versioned {
           (f.isFile && f.getName.startsWith(".ptr-")) ||
           (f.isDirectory && f.getName.startsWith("m-") && !pointed(f.getName))
       }
-      .foreach(rmTree)
+      .foreach(f => TmpDirs.rmTree(f.getPath))
     orphaned
   }
 
@@ -1971,19 +1755,8 @@ object Versioned {
     val (drop, keep) = versions(dir).partition(_ < retainFrom)
     require(keep.nonEmpty,
       s"Versioned.vacuum: retainFrom=$retainFrom would drop every version")
-    val referenced = keep.flatMap { v =>
-      readManifest(spark, dir, v)
-        .select(col("file")).distinct()
-        .collect().map(r => new java.io.File(
-          new org.apache.hadoop.fs.Path(
-            new java.net.URI(r.getString(0))).toUri.getPath).getCanonicalPath)
-    }.toSet
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .toSeq.flatMap(walk)
-      else Seq(f)
-    val orphans = walk(new java.io.File(s"$dir/data"))
+    val referenced = referencedFiles(spark, dir, keep)
+    val orphans = TmpDirs.leafFiles(s"$dir/data")
       .filter(f => f.getName.endsWith(".parquet") &&
         !referenced(f.getCanonicalPath))
     orphans.foreach(_.delete())
@@ -1998,7 +1771,7 @@ object Versioned {
       }.map(p => new java.io.File(p).getCanonicalPath).toSet
       Option(dvRoot.listFiles()).getOrElse(Array.empty)
         .filter(d => d.isDirectory && !keptDvs(d.getCanonicalPath))
-        .foreach(rmTree)
+        .foreach(d => TmpDirs.rmTree(d.getPath))
     }
     // carry dropped txn facts forward BEFORE any manifest dies: an
     // idempotent app idle longer than the retention window must still
@@ -2027,14 +1800,25 @@ object Versioned {
     drop.foreach { v =>
       // resolve BEFORE deleting the pointer: a CAS version is a pointer
       // file + its staged manifest dir, a rename version just the dir
-      val md = new java.io.File(manifestDir(dir, v))
-      rmTree(md)
+      TmpDirs.rmTree(manifestDir(dir, v))
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(s"${logRoot(dir)}/v=$v.ptr"))
       ()
     }
     orphans.size
   }
+
+  /** Canonical local paths of every data file the manifests of `vs`
+    * reference — the live set [[recover]] and [[vacuum]] keep. */
+  private def referencedFiles(spark: SparkSession, dir: String,
+      vs: Seq[Long]): Set[String] =
+    vs.flatMap { v =>
+      readManifest(spark, dir, v)
+        .select(col("file")).distinct()
+        .collect().map(r => new java.io.File(
+          new org.apache.hadoop.fs.Path(
+            new java.net.URI(r.getString(0))).toUri.getPath).getCanonicalPath)
+    }.toSet
 
   private def txnRollupFiles(dir: String): Seq[java.io.File] =
     Option(new java.io.File(logRoot(dir)).listFiles())

@@ -50,8 +50,7 @@ object ChangeFeed {
     * the caller: it is the resume token. */
   def run(spark: SparkSession, store: String, keyCol: String,
       checkpoint: String, startingVersion: Long = 1L,
-      withPreImages: Boolean = true, maxFilesPerTrigger: Int = 1,
-      durableGuard: Boolean = true)
+      withPreImages: Boolean = true, maxFilesPerTrigger: Int = 1)
       (fold: (DataFrame, Long, Long, Long) => Unit): Unit = {
     // A rename-protocol store's log is one manifest dir per version —
     // tail its parquet. A CAS-protocol store's commit point is the
@@ -95,16 +94,9 @@ object ChangeFeed {
     // the skipped-version batch a mere high-water mark would wave
     // through. Interval dedup on redelivery remains the caller's
     // documented contract (toV-keyed state).
-    // `durableGuard = false` is the MEASUREMENT seam (AbDrift arms
-    // cdf_sidecar vs cdf_memguard — pricing the sidecar read+write
-    // against the pre-r17 in-memory-only guard): the ordering check
-    // still runs per batch, but the mark neither seeds from nor writes
-    // the sidecar, so it resets on restart. Production callers keep the
-    // default — an in-memory-only guard converts an inversion into
-    // fail-once-then-succeed-corrupted across the restart (above).
     val hwmFile = new java.io.File(checkpoint, "_graft_cdf_hwm")
     var lastFolded: Option[(Long, Long)] =
-      if (durableGuard && hwmFile.isFile) {
+      if (hwmFile.isFile) {
         val txt = new String(
           java.nio.file.Files.readAllBytes(hwmFile.toPath),
           java.nio.charset.StandardCharsets.UTF_8).trim
@@ -163,7 +155,7 @@ object ChangeFeed {
             else Versioned.changes(spark, store, lo - 1, hi, keyCol)
           fold(cdf, lo - 1, hi, batchId)
           if (!lastFolded.contains((lo, hi))) {
-            if (durableGuard) writeHwm(lo, hi)
+            writeHwm(lo, hi)
             lastFolded = Some((lo, hi))
           }
         }

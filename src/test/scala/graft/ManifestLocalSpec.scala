@@ -55,7 +55,7 @@ class ManifestLocalSpec extends SparkSpec {
       val base = spark.range(0, 400)
         .select(col("id").as("k"), (col("id") % 7).as("bucket"),
           (col("id") * 3).cast("long").as("x"))
-      // v1: stats-carrying init (mn/mx/bloom + stats map on two columns)
+      // v1: stats-carrying init (stats map on two columns)
       Versioned.init(spark, dir, "bucket", base, statsCol = Some("k"),
         statsCols = Seq("x"))
       // v2: merge (carried rows ride createDataFrame; fresh rows ride
@@ -124,28 +124,45 @@ class ManifestLocalSpec extends SparkSpec {
       s"changes $a..$b" -> Versioned.changes(spark, dir, a, b, "k")
     }).map { case (label, df) => label -> rowKeys(df) }.toMap
 
-  test("a manifest without its _manifest_schema.json sidecar (pre-r18 " +
-    "commit) answers read, readPoint and changes like the same version " +
-    "with it") {
+  test("a missing _manifest_schema.json sidecar fails loudly, naming the " +
+    "version") {
     val dir = s"/tmp/graft-mlocal3-${System.nanoTime()}"
     try {
       buildStore(dir)
-      val vs = Versioned.versions(dir)
-      assert(vs === Seq(1L, 2L, 3L))
-      val withSidecar = answers(dir)
+      assert(Versioned.versions(dir) === Seq(1L, 2L, 3L))
+      val before = answers(dir)
       // non-trivial answers: probes hit (194 until its v3 dv delete), the
       // feeds churn
-      assert(withSidecar.size === 15)
-      assert(withSidecar.filter(_._2.isEmpty).keySet === Set(
+      assert(before.size === 15)
+      assert(before.filter(_._2.isEmpty).keySet === Set(
         "readPoint 10321 v1", "readPoint 10321 v2", "readPoint 10321 v3",
         "readPoint 194 v3"))
-      vs.foreach { v =>
-        val f = new java.io.File(Versioned.manifestDir(dir, v),
-          "_manifest_schema.json")
-        assert(f.isFile, s"v=$v committed without a sidecar")
-        assert(f.delete())
+      val f = new java.io.File(Versioned.manifestDir(dir, 2L),
+        "_manifest_schema.json")
+      assert(f.delete(), "v=2 committed without a sidecar")
+      // every reader of v2's manifest refuses, naming the file and v2 —
+      // the local decoder never guesses a schema the commit did not pin
+      def loud(body: => Any): Unit = {
+        val e = intercept[IllegalStateException](body)
+        assert(e.getMessage.contains("_manifest_schema.json") &&
+          e.getMessage.contains("version 2 "), e.getMessage)
       }
-      assert(answers(dir) === withSidecar)
+      loud(Versioned.read(spark, dir, 2L))
+      loud(Versioned.readPoint(spark, dir, "k", 100L, 2L))
+      loud(Versioned.changes(spark, dir, 1L, 2L, "k"))
+      loud(Versioned.changes(spark, dir, 2L, 3L, "k"))
+      // the versions around it answer exactly as before
+      val intact = before.filter { case (label, _) =>
+        !label.endsWith(" v2") && !label.startsWith("changes") }
+      assert(intact.size === 8)
+      intact.foreach { case (label, rows) =>
+        val v = label.split(" v").last.toLong
+        val got =
+          if (label.startsWith("read ")) Versioned.read(spark, dir, v)
+          else Versioned.readPoint(spark, dir, "k",
+            label.split(" ")(1).toLong, v)
+        assert(rowKeys(got) === rows, label)
+      }
     } finally rmTree(new java.io.File(dir))
   }
 

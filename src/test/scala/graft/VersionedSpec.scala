@@ -625,9 +625,8 @@ class VersionedSpec extends SparkSpec {
       assert(r6.count() === 795L)
       assert(r6.filter(col("k") === 707L).count() === 0L)
       val m6 = spark.read.parquet(Versioned.manifestDir(dir, v6))
-      if (m6.columns.contains("dv"))
-        assert(m6.filter(col("dv").isNotNull).count() === 0L,
-          "a full compact must materialize every deletion vector away")
+      assert(m6.filter(col("dv").isNotNull).count() === 0L,
+        "a full compact must materialize every deletion vector away")
       // vacuum to the materialized version: dv dirs are all unreferenced
       // now and must be reclaimed; the retained read is unchanged
       Versioned.vacuum(spark, dir, retainFrom = v6)
@@ -684,9 +683,8 @@ class VersionedSpec extends SparkSpec {
         statsCol = Some("k"))
       assert(v5 === v4 + 1)
       val m5 = spark.read.parquet(Versioned.manifestDir(dir, v5))
-      if (m5.columns.contains("dv"))
-        assert(m5.filter(size(col("dv")) > 0).count() === 0L,
-          "threshold 0 must materialize every deletion vector away")
+      assert(m5.filter(size(col("dv")) > 0).count() === 0L,
+        "threshold 0 must materialize every deletion vector away")
       assert(Versioned.read(spark, dir, v5).orderBy(col("k"))
         .collect().toSeq === before)
       // stats survive the rewrite: a point probe still prunes + answers
@@ -1123,16 +1121,16 @@ class VersionedSpec extends SparkSpec {
         .select(col("id").as("k"), (lit(399L) - col("id")).as("v"),
           (lit(399L) - col("id")).as("c"),
           floor(col("id") / 100L).as("bucket"))
-      // v1: LEGACY single-column manifests (k only)
+      // v1: single-column stats manifests (k only)
       Versioned.init(spark, dir, "bucket", base, statsCol = Some("k"))
       // v2: multi-column commit churns bucket 1 — its fresh files carry
-      // the {k, c} stats map, every carried file has legacy-k only
+      // the {k, c} stats map, every carried file a {k} map only
       val src = base.filter(col("bucket") === 1 && col("k") % 8 === 1)
         .withColumn("v", col("v") + 5).withColumn("op", lit("U"))
       Versioned.merge(spark, dir, "bucket", "k", src,
         statsCols = Seq("k", "c"))
       val full = Versioned.read(spark, dir, 2L)
-      // probe on k: EVERY file has k stats (legacy or map) — prunes
+      // probe on k: EVERY file has k stats — prunes
       val kProbe = Versioned.readRange(spark, dir, "k", 0L, 50L, 2L)
       assert(kProbe.inputFiles.length < full.inputFiles.length)
       assert(kProbe.orderBy("k").collect().toSeq ===
@@ -1157,35 +1155,42 @@ class VersionedSpec extends SparkSpec {
     } finally rm(dir)
   }
 
-  test("readRange/readPoint on a pre-sidecar store: all-files-pruned " +
-    "answers an EMPTY frame via the manifest; an empty manifest with no " +
-    "sidecar fails loudly (the changesImpl guard, now shared)") {
-    val dir = tmpDir("probe-guard")
+  test("a version missing a sidecar fails loudly, naming the file and the " +
+    "version") {
+    val dir = tmpDir("sidecars")
     try {
       val base = spark.range(0, 50)
         .select(col("id").as("k"), (col("id") * 2).as("v"),
           pmod(col("id"), lit(4L)).as("bucket"))
       Versioned.init(spark, dir, "bucket", base, statsCol = Some("k"))
-      // simulate a legacy pre-evolution store: strip the sidecar
-      val side = new java.io.File(s"$dir/_log/v=1/_schema.json")
-      assert(side.delete(), "fixture: sidecar must exist to strip")
-      // every envelope misses [900, 999] -> zero files -> empty frame
-      // derived FROM the manifest's files (no sidecar to answer from)
-      val pruned = Versioned.readRange(spark, dir, "k", 900L, 999L)
-      assert(pruned.count() === 0L)
-      assert(pruned.columns.toSeq === Seq("k", "v", "bucket"))
-      assert(Versioned.readPoint(spark, dir, "k", 901L).count() === 0L)
-      // an EMPTY manifest with no sidecar: loud failure, not a zero-path
-      // parquet inference error (mirror of the changes() guard)
-      val src = base.withColumn("op", lit("D"))
-      Versioned.merge(spark, dir, "bucket", "k", src, statsCol = Some("k"))
-      val side2 = new java.io.File(s"$dir/_log/v=2/_schema.json")
-      assert(side2.delete())
-      val e = intercept[IllegalArgumentException] {
-        Versioned.readRange(spark, dir, "k", 900L, 999L, version = 2L)
-          .count()
+      for (_ <- 1 to 2)
+        Versioned.merge(spark, dir, "bucket", "k",
+          base.filter(col("k") < 5).withColumn("op", lit("U")),
+          statsCol = Some("k"))
+      // every commit writes all three sidecars; strip one per version
+      def strip(v: Long, name: String): Unit =
+        assert(new java.io.File(Versioned.manifestDir(dir, v), name).delete(),
+          s"fixture: $name must exist at v=$v")
+      def loud(v: Long, name: String)(body: => Any): Unit = {
+        val e = intercept[IllegalStateException](body)
+        assert(e.getMessage.contains(name) &&
+          e.getMessage.contains(s"version $v "), e.getMessage)
       }
-      assert(e.getMessage.contains("empty manifest"))
+      strip(1L, "_schema.json")
+      loud(1L, "_schema.json")(Versioned.read(spark, dir, 1L))
+      loud(1L, "_schema.json")(
+        Versioned.readRange(spark, dir, "k", 900L, 999L, 1L))
+      loud(1L, "_schema.json")(Versioned.readPoint(spark, dir, "k", 9L, 1L))
+      strip(2L, "_manifest_schema.json")
+      loud(2L, "_manifest_schema.json")(Versioned.read(spark, dir, 2L))
+      loud(2L, "_manifest_schema.json")(
+        Versioned.changes(spark, dir, 2L, 3L, "k"))
+      strip(3L, "_commit.json")
+      loud(3L, "_commit.json")(Versioned.commitTime(dir, 3L))
+      loud(3L, "_commit.json")(Versioned.readAsOf(spark, dir, Long.MaxValue))
+      // a version whose own sidecars are intact still answers
+      assert(Versioned.read(spark, dir, 3L).count() === 50L)
+      assert(Versioned.readPoint(spark, dir, "k", 9L, 3L).count() === 1L)
     } finally rm(dir)
   }
 
