@@ -152,8 +152,8 @@ object Bpe {
     * latency (~1 s on a busy cluster) dominates the vocabulary-sized
     * work. This variant learns up to `batchSize` merges per round:
     *
-    *   1. one pair-count aggregate over the cached vocab (as before);
-    *   2. collect the top-`window` candidate pairs ordered by
+    *   1. count every adjacent pair of the current vocabulary;
+    *   2. take the top-`window` candidate pairs ordered by
     *      (ct DESC, a, b) — bounded driver metadata, `window` rows;
     *   3. greedily select candidates whose TRIPLE sets {lhs, rhs,
     *      lhs+rhs} are pairwise disjoint, stopping at `batchSize`.
@@ -187,7 +187,13 @@ object Bpe {
     * ct, syms_after), `syms_after` the running corpus symbol total
     * (strictly decreasing by each merge's ct; disjointness makes the
     * per-merge attribution exact, and the measured post-batch total is
-    * asserted equal to the derived one every round). */
+    * asserted equal to the derived one every round).
+    *
+    * The loop itself is [[PairLedger.induce]] (shared with
+    * [[WordPiece.learnVocabBatched]]) under the frequency ranking: the
+    * candidate window is ranked from a driver-maintained pair table and
+    * each round is one fused apply-and-delta scan (a per-round full
+    * rescan when the table is over budget). */
   def mergesBatched(documents: DataFrame, batches: Int, batchSize: Int,
       window: Int = 0): DataFrame =
     mergesBatchedUnits(
@@ -212,265 +218,12 @@ object Bpe {
     val win = if (window > 0) window else math.max(4 * batchSize, 16)
     require(win >= batchSize, s"window $win must be >= batchSize $batchSize")
     val spark = units.sparkSession
-
-    val vocab = units
-      .select(col("unit").as("word"))
-      // empty units carry no pairs and would trip sequence(1, 0)'s
-      // descending-step inference — drop them (tokensWs never emits any;
-      // sequence units may, e.g. chunking an empty document)
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("wct"))
-      // `word` is consumed here and never read again (the ledgers carry
-      // only pairs and counts) — carrying it through every per-round
-      // checkpoint generation would be dead weight in block storage
-      .select(col("wct"),
-        transform(sequence(lit(1), length(col("word"))),
-          i => col("word").substr(i, lit(1))).as("syms"))
-      // constant-depth plan per round (see merges); LAZY: the init
-      // scan's full-corpus aggregation is the materializing action, so
-      // the checkpoint write rides that job instead of owning one
-      .localCheckpoint(false)
-    // ONE init job: the complete aggregated pair table (driver-side,
-    // budget-guarded) plus the corpus word/symbol totals as observe
-    // metrics. The word count is constant across rounds — merges change
-    // symbols-per-word, never words — and total symbols at any round ==
-    // sum of ALL naive pair counts + W (each word of s symbols carries
-    // s−1 adjacent pairs): the conservation identity the whole run is
-    // checked against.
-    val (initPairs, wordTotal, total) = PairLedger.initScan(vocab)
-    val ledger =
-      if (initPairs.length > PairLedger.Budget)
-        // pair table over driver budget: per-round full-rescan shape
-        // (the pre-r19 loop) — fail-soft, never driver-OOM
-        mergesRescanLoop(vocab, total, wordTotal, batches, batchSize, win)
-      else
-        mergesIncrementalLoop(vocab, initPairs, total, wordTotal,
-          batches, batchSize, win)
     import spark.implicits._
-    ledger.toDF("merge_idx", "batch", "lhs", "rhs", "ct", "syms_after")
+    PairLedger.induce(units, "Bpe.mergesBatched", PairLedger.Frequency,
+      batches, batchSize, win).merges
+      .map(m => (m.idx, m.batch, m.lhs, m.rhs, m.ct, m.symsAfter))
+      .toDF("merge_idx", "batch", "lhs", "rhs", "ct", "syms_after")
   }
-
-  /** INCREMENTAL round shape (r19): candidates are ranked from a
-    * driver-maintained pair-count table ([[PairLedger.Table]], built by
-    * the init scan), and each round's ONE job is a [[PairLedger.deltaScan]]
-    * — merge application + pair-count-delta extraction fused into a
-    * single native-kernel pass whose aggregate input is a few rows per
-    * CHANGED word, not every adjacent pair of every word (the pre-r19
-    * rescan aggregated ~19 M exploded pair rows per round at sf0.1).
-    * Invariants are STRONGER than the rescan loop's: every round's scan
-    * re-measures the corpus symbol total both entering and leaving the
-    * batch (`pre_total`/`post_total` observe metrics vs the derived
-    * ledger), the maintained table re-proves the Σct + W == symbols
-    * identity after every update, and one final distributed recount
-    * must match the table ENTRY-FOR-ENTRY. */
-  private def mergesIncrementalLoop(vocab0: DataFrame,
-      initPairs: Array[(String, String, Long, Long)], total0: Long,
-      wordTotal: Long, batches: Int, batchSize: Int, win: Int)
-      : Seq[(Long, Long, String, String, Long, Long)] = {
-    var vocab = vocab0
-    var total = total0
-    val table = new PairLedger.Table
-    initPairs.foreach { case (a, b, ct, mct) => table.add(a, b, ct, mct) }
-    require(table.totalCt + wordTotal == total,
-      s"Bpe.mergesBatched: the init pair table sums to ${table.totalCt} " +
-        s"pairs but the corpus measures $total symbols over $wordTotal " +
-        "words — the Σct + W == symbols identity is broken at round 1")
-    var idx = 0L
-    val ledger = Seq.newBuilder[(Long, Long, String, String, Long, Long)]
-    var pending = Vector.empty[Seq[(String, String)]]
-    def foldedSyms: Column =
-      pending.foldLeft(col("syms"))((c, batch) => applyMergeSet(c, batch))
-    // LAZY flush (r19): the fold of the accumulated layers materializes
-    // as part of the NEXT scan's job (every scan aggregates over all
-    // partitions, so the marked RDD is fully cached by that job) instead
-    // of paying a separate driver-scheduled materialization job per
-    // flush. The superseded generation can only be freed AFTER that next
-    // action has materialized the new one — its blocks are the lineage
-    // the lazy checkpoint computes from — hence the free queue.
-    var toFree = List.empty[DataFrame]
-    def reap(): Unit = { toFree.foreach(freeCheckpoint); toFree = Nil }
-    def flush(): Unit = if (pending.nonEmpty) {
-      toFree ::= vocab
-      vocab = vocab
-        .select(col("wct"), foldedSyms.as("syms"))
-        .localCheckpoint(false)
-      pending = Vector.empty
-    }
-    for (b <- 1 to batches) {
-      // driver-side replica of the engine's orderBy(ct.desc, a, b)
-      // .limit(win) candidate window (binary string order — see
-      // PairLedger.utf8Compare), then the same greedy triple-disjoint
-      // selection as the rescan loop
-      val cands = table.top(win, PairLedger.byCount)
-      val sel = Seq.newBuilder[(String, String, Long)]
-      var taken = 0
-      var used = Set.empty[String]
-      for (e <- cands if taken < batchSize) {
-        val triple = Set(e.a, e.b, e.a + e.b)
-        if ((triple & used).isEmpty) {
-          sel += ((e.a, e.b, e.mct)); used ++= triple; taken += 1
-        }
-      }
-      val chosen = sel.result()
-      if (chosen.nonEmpty) {
-        val rules = chosen.map(c => (c._1, c._2))
-        val (deltaRows, pre, post) =
-          PairLedger.deltaScan(vocab, pending, rules)
-        reap() // the scan materialized any lazily flushed generation
-        // the scan re-measures the symbol total ENTERING the batch …
-        require(pre == total,
-          s"Bpe.mergesBatched: entering batch $b the corpus symbol total " +
-            s"measures $pre but the ledger derived $total — the " +
-            "triple-disjointness invariant is broken")
-        var running = total
-        for ((l, r, ct) <- chosen) {
-          idx += 1
-          running -= ct
-          ledger += ((idx, b.toLong, l, r, ct, running))
-        }
-        // … and LEAVING it: this batch's application, verified now
-        // (the rescan loop could only verify it one round later)
-        require(post == running,
-          s"Bpe.mergesBatched: batch $b derived a symbol total of " +
-            s"$running but the fold measures $post — the " +
-            "triple-disjointness invariant is broken")
-        deltaRows.foreach { case (a, bb, dct, dmct) =>
-          table.add(a, bb, dct, dmct) }
-        require(table.totalCt == post - wordTotal,
-          s"Bpe.mergesBatched: after batch $b the pair table sums to " +
-            s"${table.totalCt} but the corpus holds $post symbols over " +
-            s"$wordTotal words — the Σct + W == symbols identity is broken")
-        total = running
-        pending = pending :+ rules
-        if (pending.size >= FoldCheckpointEvery) flush()
-      }
-    }
-    // end-of-run exactness proof: a full distributed recount must match
-    // the incrementally maintained table entry-for-entry
-    val (finalPairs, finalMeasured) = PairLedger.recountScan(vocab, foldedSyms)
-    reap()
-    require(finalMeasured == total,
-      s"Bpe.mergesBatched: final corpus symbol total measures " +
-        s"$finalMeasured but the ledger derived $total — the " +
-        "triple-disjointness invariant is broken")
-    require(table.sameAs(finalPairs.toIndexedSeq),
-      "Bpe.mergesBatched: the driver-maintained pair table diverges from " +
-        s"the final distributed recount (maintained ${table.size} entries, " +
-        s"recounted ${finalPairs.length}) — the delta-update invariant is " +
-        "broken")
-    freeCheckpoint(vocab)
-    ledger.result()
-  }
-
-  /** The pre-r19 per-round full-rescan loop — kept as the fail-soft
-    * fallback for a corpus whose distinct-pair table exceeds
-    * [[PairLedger.Budget]] (where the incremental loop's driver-side
-    * table would be the wrong trade). Same semantics, same ledger. */
-  private def mergesRescanLoop(vocab0: DataFrame, total0: Long,
-      wordTotal: Long, batches: Int, batchSize: Int, win: Int)
-      : Seq[(Long, Long, String, String, Long, Long)] = {
-    var vocab = vocab0
-    var total = total0
-    var idx = 0L
-    val ledger = Seq.newBuilder[(Long, Long, String, String, Long, Long)]
-    // DEFERRED-FOLD round shape (r18): a round's merge application rides
-    // the NEXT round's pair scan as extra (cheap, native) MergeFold
-    // layers over the last checkpointed generation, instead of paying a
-    // materialization job per round — ONE driver-coordinated job per
-    // round instead of two. Every FoldCheckpointEvery rounds the
-    // accumulated layers materialize once (bounding plan depth; the r13
-    // quadratic-lineage trap needed the per-round checkpoint only
-    // because the Catalyst HOF fold made re-applied layers expensive —
-    // the native kernel re-applies a layer in O(symbols) hash probes).
-    var pending = Vector.empty[Seq[(String, String)]]
-    def foldedSyms: Column =
-      pending.foldLeft(col("syms"))((c, batch) => applyMergeSet(c, batch))
-    def flush(): Unit = if (pending.nonEmpty) {
-      val prev = vocab
-      vocab = vocab
-        .select(col("wct"), foldedSyms.as("syms"))
-        .localCheckpoint(true)
-      freeCheckpoint(prev) // hold 2 generations, not O(batches)
-      pending = Vector.empty
-    }
-    // RUN-AWARE pair scan (native expressions/RunPairs, one JVM walk per
-    // row): every candidate carries BOTH counting views — naive
-    // adjacent counts (within-run len-1 + one per run boundary — the
-    // conservation identity Σct + W = symbols, and the ranking key
-    // matching sequential BPE's argmax), and the greedy-mergeable count
-    // mct (⌊run/2⌋ per run for self-pairs; = naive for distinct pairs,
-    // which cannot self-overlap). A custom Expression, not HOFs: the
-    // equivalent starts/lengths/zip HOF pipeline evaluates interpreted
-    // per element and measured ~3.4× the old adjacent-only scan per
-    // round on 128-symbol chunk units.
-    for (b <- 1 to batches) {
-      val obs = new org.apache.spark.sql.Observation()
-      val cands = vocab
-        .select(col("wct"),
-          explode(call_function("graft_run_pairs", foldedSyms)).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("wct") * col("p.ct")).as("ct"),
-          sum(col("wct") * col("p.mct")).as("mct"))
-        .observe(obs, coalesce(sum(col("ct")), lit(0L)).cast("long")
-          .as("pair_total"))
-        .orderBy(col("ct").desc, col("a").asc, col("b").asc)
-        .limit(win).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-          r.getLong(3)))
-      // conservation REQUIRE, moved to the next scan: this round's pair
-      // snapshot measures the symbol total AFTER the previous batch
-      // applied — it must equal the previous round's derived total
-      val measured = obs.get("pair_total").asInstanceOf[Long] + wordTotal
-      require(measured == total,
-        s"Bpe.mergesBatched: entering batch $b the corpus symbol total " +
-          s"measures $measured but the ledger derived $total — the " +
-          "triple-disjointness invariant is broken")
-      val sel = Seq.newBuilder[(String, String, Long)]
-      var taken = 0
-      var used = Set.empty[String]
-      for ((a, bb, _, mct) <- cands if taken < batchSize) {
-        // self-pairs carry their run-aware mct (the fold's exact symbol
-        // removal); their triple degenerates to {a, aa}, so the same
-        // disjointness check keeps attribution exact in-batch
-        val triple = Set(a, bb, a + bb)
-        if ((triple & used).isEmpty) {
-          sel += ((a, bb, mct)); used ++= triple; taken += 1
-        }
-      }
-      val chosen = sel.result()
-      if (chosen.nonEmpty) {
-        pending = pending :+ chosen.map(c => (c._1, c._2))
-        if (pending.size >= FoldCheckpointEvery) flush()
-        var running = total
-        for ((l, r, ct) <- chosen) {
-          idx += 1
-          running -= ct
-          ledger += ((idx, b.toLong, l, r, ct, running))
-        }
-        total = running // verified by the NEXT round's observed scan
-      }
-    }
-    // the last applied batch has no next scan to verify it — one final
-    // vocab pass (applying any still-deferred layers) closes the
-    // conservation ledger
-    val finalMeasured = vocab
-      .agg(sum(col("wct") * size(foldedSyms)).cast("long"))
-      .head().getLong(0)
-    require(finalMeasured == total,
-      s"Bpe.mergesBatched: final corpus symbol total measures " +
-        s"$finalMeasured but the ledger derived $total — the " +
-        "triple-disjointness invariant is broken")
-    freeCheckpoint(vocab)
-    ledger.result()
-  }
-
-  /** Deferred-fold plan-depth bound: how many rounds' merge layers may
-    * stack over the last checkpointed vocabulary before materializing.
-    * Each layer is one [[graft.expressions.MergeFold]] call (cheap to
-    * re-apply, O(symbols) hash probes), but analyzer/optimizer passes
-    * walk the whole literal-bearing tree every round — 8 keeps that
-    * walk trivial while amortizing the materialization job 8×. */
-  private val FoldCheckpointEvery = 8
 
   /** Segment the corpus with an ordered merge list (the output of
     * [[merges]]): every document becomes its BPE symbol sequence, words

@@ -1101,7 +1101,7 @@ object Versioned {
       else carriedDf.unionByName(fileParts(spark, dataPath,
         prevMap.getOrElse(partCol, partCol),
         (statsCol.toSeq ++ statsCols).distinct
-          .map(c => prevMap.getOrElse(c, c))))
+          .map(c => prevMap.getOrElse(c, c)), Some(physSch)))
     commitManifest(spark, dir, next, manifest, sch)
     next
   }
@@ -1215,7 +1215,7 @@ object Versioned {
     val fresh = fileParts(spark, dataPath,
       prevMap.getOrElse(partCol, partCol),
       (statsCol.toSeq ++ statsCols).distinct
-        .map(c => prevMap.getOrElse(c, c)))
+        .map(c => prevMap.getOrElse(c, c)), Some(physSch))
     commitManifest(spark, dir, next, carriedRows(spark, mDf, mRows,
       rewrite.flatten.toSet).unionByName(fresh), sch)
     next
@@ -1284,7 +1284,8 @@ object Versioned {
       .write.partitionBy("__tile").mode("errorifexists").parquet(dataPath)
     val physPart = prevMap.getOrElse(partCol, partCol)
     val fresh = fileParts(spark, dataPath, physPart,
-      (dims ++ statsCols).distinct.map(c => prevMap.getOrElse(c, c)))
+      (dims ++ statsCols).distinct.map(c => prevMap.getOrElse(c, c)),
+      Some(physSch))
     commitManifest(spark, dir, next, fresh, sch)
     next
   }

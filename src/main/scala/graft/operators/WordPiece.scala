@@ -27,9 +27,10 @@ import org.apache.spark.sql.functions._
   * aggregate, and exactly replayable in SQL (the oracle derives the same
   * vocab from the same corpus, so gate equality pins derivation AND
   * encode). Likelihood-scored iterative training (true WordPiece
-  * induction) is the [[Bpe.mergesBatched]] loop with a different argmax;
-  * the closed-form vocab is the scale-honest default — a single pass
-  * where iterative training costs a driver round per merge. */
+  * induction, [[learnVocabBatched]]) is the [[Bpe.mergesBatched]] loop —
+  * [[PairLedger.induce]] — with a different argmax; the closed-form
+  * vocab is the scale-honest default — a single pass where iterative
+  * training costs a driver round per merge. */
 object WordPiece {
 
   private def distinctUnits(units: DataFrame): DataFrame =
@@ -106,9 +107,8 @@ object WordPiece {
     * Per round: one pair scan (native run-pairs kernel), one symbol
     * count, one broadcast-joined argmax — driver-coordinated like
     * [[Bpe.merges]]; [[learnVocabBatched]] is the rounds-dimension scale
-    * path (triple-disjoint batching, the [[Bpe.mergesBatched]] shape with
-    * the likelihood argmax). Ledger: (round, lhs, rhs, ct, score,
-    * syms_after). */
+    * path ([[PairLedger.induce]] with the likelihood argmax). Ledger:
+    * (round, lhs, rhs, ct, score, syms_after). */
   def learnVocab(units: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 64,
       s"WordPiece.learnVocab: rounds in [1, 64], got $rounds")
@@ -163,40 +163,27 @@ object WordPiece {
   }
 
   /** BATCHED likelihood-scored WordPiece training — the rounds-dimension
-    * scale path ([[Bpe.mergesBatchedUnits]]'s triple-disjoint batching
-    * ported to the likelihood argmax). [[learnVocab]] runs one
-    * driver-coordinated round per merge; real vocabularies need 10³–10⁵
-    * pieces, where per-round scheduling latency dominates. Per round:
-    *
-    *   1. ONE run-aware pair scan (native graft_run_pairs): each pair
-    *      carries its naive adjacent count `ct` (the ranking key's
-    *      numerator — sequential training's view) and its
-    *      greedy-mergeable count `mct` (= Σ wct·⌊run/2⌋ for self-pairs,
-    *      = ct for distinct pairs) — the symbols the fold actually
-    *      removes, which the ledger telescopes by;
-    *   2. one per-symbol occurrence count, broadcast-joined onto the
-    *      pair counts to score every candidate `ct / (ct_a · ct_b)` —
-    *      each long cast to double exactly (all < 2^53), one IEEE
-    *      multiply, one IEEE divide: bit-identical in any engine, ties
-    *      on (a, b) ascending;
-    *   3. collect the top-`window` candidates by (score DESC, a, b) —
-    *      bounded driver metadata — and greedily select those whose
-    *      TRIPLE sets {lhs, rhs, lhs+rhs} are pairwise disjoint, up to
-    *      `batchSize`. Disjointness keeps the snapshot scores exact at
-    *      application time: no selected merge changes another's pair
-    *      count (occurrences are disjoint) OR its denominator (no shared
-    *      symbol, so ct_a/ct_b of the others never move);
-    *   4. apply the whole batch in ONE fold pass ([[Bpe.applyMergeSet]])
-    *      and materialize once per round, not once per merge.
+    * scale path: [[PairLedger.induce]], the [[Bpe.mergesBatched]] loop,
+    * ranked by [[PairLedger.Likelihood]] instead of frequency.
+    * [[learnVocab]] runs one driver-coordinated round per merge; real
+    * vocabularies need 10³–10⁵ pieces, where per-round scheduling
+    * latency dominates. Per round, the top-`window` candidates by
+    * (`ct / (ct_a · ct_b)` DESC, a, b) are greedily selected whose
+    * TRIPLE sets {lhs, rhs, lhs+rhs} are pairwise disjoint, up to
+    * `batchSize`, and applied in ONE fold pass ([[Bpe.applyMergeSet]]).
+    * Disjointness keeps the snapshot scores exact at application time:
+    * no selected merge changes another's pair count (occurrences are
+    * disjoint) OR its denominator (no shared symbol, so ct_a/ct_b of the
+    * others never move). The ranking numerator is the naive adjacent
+    * count `ct` (sequential training's view); the ledger telescopes by
+    * the greedy-mergeable count `mct` (= Σ wct·⌊run/2⌋ for self-pairs,
+    * = ct for distinct pairs) — the symbols the fold actually removes.
     *
     * The first pick of every round is exactly sequential WordPiece's
     * argmax; later in-batch picks are the standard batched approximation.
     * `batchSize = 1` reduces to [[learnVocab]] exactly (modulo the
     * derived-vs-measured syms_after, asserted equal by the conservation
-    * checks). Symbol-total conservation rides the next round's pair scan
-    * as an observe() metric (Σ naive pair counts + word count = symbol
-    * total — each word of s symbols carries s−1 adjacent pairs), with
-    * one final vocab pass closing the ledger.
+    * checks).
     *
     * Ledger: one row per LEARNED MERGE — (merge_idx, batch, lhs, rhs,
     * ct, score, syms_after): `ct` the greedy-mergeable count the fold
@@ -213,286 +200,11 @@ object WordPiece {
     require(win >= batchSize,
       s"WordPiece.learnVocabBatched: window $win must be >= batchSize $batchSize")
     val spark = units.sparkSession
-
-    val vocab = units
-      .select(col("unit").as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("wct"))
-      // `word` is dead after this projection (ledger carries only pairs
-      // and counts); LAZY checkpoint: the init scan materializes it —
-      // see Bpe.mergesBatchedUnits
-      .select(col("wct"),
-        transform(sequence(lit(1), length(col("word"))),
-          i => col("word").substr(i, lit(1))).as("syms"))
-      .localCheckpoint(false)
-    // ONE init job: the complete aggregated pair table plus the corpus
-    // word/symbol totals as observe metrics (see Bpe.mergesBatchedUnits)
-    val (initPairs, wordTotal, total) = PairLedger.initScan(vocab)
-    // Corpus-weighted count per SYMBOL — the likelihood denominator —
-    // maintained DRIVER-SIDE (r18): the alphabet plus one entry per
-    // learned merge is bounded metadata, and under triple-disjointness
-    // the per-batch updates are exact (each applied merge removes
-    // exactly mct occurrences of lhs and of rhs — 2·mct of a self-pair's
-    // symbol — and creates mct of lhs+rhs; no selected merge touches
-    // another's operands). The pre-r18 shape recomputed this with a
-    // full explode+groupBy scan of the vocabulary EVERY round. A final
-    // distributed recount asserts the maintained map exactly.
-    val symCt = scala.collection.mutable.Map.empty[String, Long]
-    vocab.select(col("wct"), explode(col("syms")).as("sym"))
-      .groupBy(col("sym")).agg(sum(col("wct")).cast("long").as("c"))
-      .collect().foreach(r => symCt(r.getString(0)) = r.getLong(1))
-    val ledger =
-      if (initPairs.length > PairLedger.Budget)
-        // pair table over driver budget: per-round full-rescan shape
-        // (the pre-r19 loop) — fail-soft, never driver-OOM
-        learnRescanLoop(vocab, symCt, total, wordTotal, batches,
-          batchSize, win)
-      else
-        learnIncrementalLoop(vocab, initPairs, symCt, total, wordTotal,
-          batches, batchSize, win)
     import spark.implicits._
-    ledger.toDF("merge_idx", "batch", "lhs", "rhs", "ct", "score", "syms_after")
-  }
-
-  /** INCREMENTAL round shape (r19) — [[Bpe]]'s incremental loop with
-    * the likelihood argmax: candidates are ranked DRIVER-SIDE from the
-    * maintained pair table and symbol counts (`ct / (ct_a · ct_b)`,
-    * each long cast to double exactly, one IEEE multiply + divide —
-    * bit-identical to the engine's scoring; ties and the window cutoff
-    * replicate `orderBy(score.desc, a, b).limit(win)` with binary
-    * string order), so the two per-round broadcast joins of the rescan
-    * shape disappear entirely. Each round's ONE job is the shared
-    * [[PairLedger.deltaScan]]; the per-round conservation requires and
-    * the end-of-run entry-for-entry recounts (pair table AND symbol
-    * counts) make every driver-side number falsifiable. */
-  private def learnIncrementalLoop(vocab0: DataFrame,
-      initPairs: Array[(String, String, Long, Long)],
-      symCt: scala.collection.mutable.Map[String, Long], total0: Long,
-      wordTotal: Long, batches: Int, batchSize: Int, win: Int)
-      : Seq[(Long, Long, String, String, Long, Double, Long)] = {
-    var vocab = vocab0
-    var total = total0
-    val table = new PairLedger.Table
-    initPairs.foreach { case (a, b, ct, mct) => table.add(a, b, ct, mct) }
-    require(table.totalCt + wordTotal == total,
-      s"WordPiece.learnVocabBatched: the init pair table sums to " +
-        s"${table.totalCt} pairs but the corpus measures $total symbols " +
-        s"over $wordTotal words — the Σct + W == symbols identity is " +
-        "broken at round 1")
-    def scoreOf(e: PairLedger.Entry): Double = {
-      val ca = symCt.getOrElse(e.a, 0L)
-      val cb = symCt.getOrElse(e.b, 0L)
-      require(ca > 0L && cb > 0L,
-        s"WordPiece.learnVocabBatched: pair ('${e.a}','${e.b}') references " +
-          "a symbol with no maintained count — the exact-update invariant " +
-          "is broken")
-      e.ct.toDouble / (ca.toDouble * cb.toDouble)
-    }
-    var idx = 0L
-    val ledger = Seq.newBuilder[(Long, Long, String, String, Long, Double, Long)]
-    var pending = Vector.empty[Seq[(String, String)]]
-    def foldedSyms: Column =
-      pending.foldLeft(col("syms"))((c, batch) => Bpe.applyMergeSet(c, batch))
-    // LAZY flush + deferred free — see Bpe.mergesIncrementalLoop
-    var toFree = List.empty[DataFrame]
-    def reap(): Unit = { toFree.foreach(CheckpointUtil.free); toFree = Nil }
-    def flush(): Unit = if (pending.nonEmpty) {
-      toFree ::= vocab
-      vocab = vocab
-        .select(col("wct"), foldedSyms.as("syms"))
-        .localCheckpoint(false)
-      pending = Vector.empty
-    }
-    for (b <- 1 to batches) {
-      // the denominator counts move between rounds, so the score-ranked
-      // window is re-selected per round against the CURRENT symCt —
-      // exactly what the rescan shape's per-round broadcast join scored
-      val cands = table.top(win, PairLedger.byScore(scoreOf))
-      val sel = Seq.newBuilder[(String, String, Long, Double)]
-      var taken = 0
-      var used = Set.empty[String]
-      for (e <- cands if taken < batchSize) {
-        val triple = Set(e.a, e.b, e.a + e.b)
-        if ((triple & used).isEmpty) {
-          sel += ((e.a, e.b, e.mct, scoreOf(e))); used ++= triple; taken += 1
-        }
-      }
-      val chosen = sel.result()
-      if (chosen.nonEmpty) {
-        val rules = chosen.map(c => (c._1, c._2))
-        val (deltaRows, pre, post) =
-          PairLedger.deltaScan(vocab, pending, rules)
-        reap() // the scan materialized any lazily flushed generation
-        require(pre == total,
-          s"WordPiece.learnVocabBatched: entering batch $b the corpus " +
-            s"symbol total measures $pre but the ledger derived $total — " +
-            "the triple-disjointness invariant is broken")
-        var running = total
-        for ((l, r, mct, score) <- chosen) {
-          idx += 1
-          running -= mct
-          // exact denominator maintenance (see symCt above)
-          if (l == r) symCt(l) = symCt(l) - 2 * mct
-          else {
-            symCt(l) = symCt(l) - mct
-            symCt(r) = symCt(r) - mct
-          }
-          symCt(l + r) = symCt.getOrElse(l + r, 0L) + mct
-          ledger += ((idx, b.toLong, l, r, mct,
-            math.floor(score * 1e6) / 1e6, running))
-        }
-        require(post == running,
-          s"WordPiece.learnVocabBatched: batch $b derived a symbol total " +
-            s"of $running but the fold measures $post — the " +
-            "triple-disjointness invariant is broken")
-        deltaRows.foreach { case (a, bb, dct, dmct) =>
-          table.add(a, bb, dct, dmct) }
-        require(table.totalCt == post - wordTotal,
-          s"WordPiece.learnVocabBatched: after batch $b the pair table " +
-            s"sums to ${table.totalCt} but the corpus holds $post symbols " +
-            s"over $wordTotal words — the Σct + W == symbols identity is " +
-            "broken")
-        total = running
-        pending = pending :+ rules
-        if (pending.size >= 8) flush()
-      }
-    }
-    // end-of-run exactness proofs: the maintained PAIR table and the
-    // maintained SYMBOL counts must both match distributed recounts
-    val (finalPairs, finalMeasured) = PairLedger.recountScan(vocab, foldedSyms)
-    reap()
-    require(finalMeasured == total,
-      s"WordPiece.learnVocabBatched: final corpus symbol total measures " +
-        s"$finalMeasured but the ledger derived $total — the " +
-        "triple-disjointness invariant is broken")
-    require(table.sameAs(finalPairs.toIndexedSeq),
-      "WordPiece.learnVocabBatched: the driver-maintained pair table " +
-        s"diverges from the final distributed recount (maintained " +
-        s"${table.size} entries, recounted ${finalPairs.length}) — the " +
-        "delta-update invariant is broken")
-    val recount = vocab
-      .select(col("wct"), explode(foldedSyms).as("sym"))
-      .groupBy(col("sym")).agg(sum(col("wct")).cast("long").as("c"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val maintained = symCt.toMap.filter(_._2 != 0L)
-    require(recount == maintained,
-      "WordPiece.learnVocabBatched: driver-maintained symbol counts " +
-        s"diverge from the final recount (maintained ${maintained.size} " +
-        s"entries, recounted ${recount.size}) — the exact-update " +
-        "invariant is broken")
-    CheckpointUtil.free(vocab)
-    ledger.result()
-  }
-
-  /** The pre-r19 per-round full-rescan loop — the fail-soft fallback
-    * for a corpus whose distinct-pair table exceeds
-    * [[PairLedger.Budget]]. Same semantics, same ledger. */
-  private def learnRescanLoop(vocab0: DataFrame,
-      symCt: scala.collection.mutable.Map[String, Long], total0: Long,
-      wordTotal: Long, batches: Int, batchSize: Int, win: Int)
-      : Seq[(Long, Long, String, String, Long, Double, Long)] = {
-    var vocab = vocab0
-    var total = total0
-    val spark = vocab0.sparkSession
-    def symCtDf = {
-      import spark.implicits._
-      symCt.toSeq.toDF("sym", "c")
-    }
-    var idx = 0L
-    val ledger = Seq.newBuilder[(Long, Long, String, String, Long, Double, Long)]
-    // deferred-fold round shape, shared rationale with
-    // [[Bpe.mergesBatchedUnits]]: merge layers ride the next scan as
-    // native MergeFold calls; materialize every few rounds only
-    var pending = Vector.empty[Seq[(String, String)]]
-    def foldedSyms =
-      pending.foldLeft(col("syms"))((c, batch) => Bpe.applyMergeSet(c, batch))
-    def flush(): Unit = if (pending.nonEmpty) {
-      val prev = vocab
-      vocab = vocab
-        .select(col("wct"), foldedSyms.as("syms"))
-        .localCheckpoint(true)
-      CheckpointUtil.free(prev) // hold 2 generations, not O(batches)
-      pending = Vector.empty
-    }
-    for (b <- 1 to batches) {
-      val obs = new org.apache.spark.sql.Observation()
-      val pairs = vocab
-        .select(col("wct"),
-          explode(call_function("graft_run_pairs", foldedSyms)).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("wct") * col("p.ct")).as("ct"),
-          sum(col("wct") * col("p.mct")).as("mct"))
-        .observe(obs, coalesce(sum(col("ct")), lit(0L)).cast("long")
-          .as("pair_total"))
-      val cs = symCtDf
-      val cands = pairs
-        .join(broadcast(cs.select(col("sym").as("a"), col("c").as("ca"))),
-          Seq("a"))
-        .join(broadcast(cs.select(col("sym").as("b"), col("c").as("cb"))),
-          Seq("b"))
-        .withColumn("score",
-          col("ct").cast("double") /
-            (col("ca").cast("double") * col("cb").cast("double")))
-        .orderBy(col("score").desc, col("a").asc, col("b").asc)
-        .limit(win)
-        .select(col("a"), col("b"), col("mct"), col("score"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-          r.getDouble(3)))
-      val measured = obs.get("pair_total").asInstanceOf[Long] + wordTotal
-      require(measured == total,
-        s"WordPiece.learnVocabBatched: entering batch $b the corpus symbol " +
-          s"total measures $measured but the ledger derived $total — the " +
-          "triple-disjointness invariant is broken")
-      val sel = Seq.newBuilder[(String, String, Long, Double)]
-      var taken = 0
-      var used = Set.empty[String]
-      for ((a, bb, mct, score) <- cands if taken < batchSize) {
-        val triple = Set(a, bb, a + bb)
-        if ((triple & used).isEmpty) {
-          sel += ((a, bb, mct, score)); used ++= triple; taken += 1
-        }
-      }
-      val chosen = sel.result()
-      if (chosen.nonEmpty) {
-        pending = pending :+ chosen.map(c => (c._1, c._2))
-        if (pending.size >= 8) flush()
-        var running = total
-        for ((l, r, mct, score) <- chosen) {
-          idx += 1
-          running -= mct
-          // exact denominator maintenance (see symCt above)
-          if (l == r) symCt(l) = symCt(l) - 2 * mct
-          else {
-            symCt(l) = symCt(l) - mct
-            symCt(r) = symCt(r) - mct
-          }
-          symCt(l + r) = symCt.getOrElse(l + r, 0L) + mct
-          ledger += ((idx, b.toLong, l, r, mct,
-            math.floor(score * 1e6) / 1e6, running))
-        }
-        total = running // verified by the NEXT round's observed scan
-      }
-    }
-    val finalRows = vocab
-      .select(col("wct"), explode(foldedSyms).as("sym"))
-      .groupBy(col("sym")).agg(sum(col("wct")).cast("long").as("c"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val finalMeasured = finalRows.map(_._2).sum
-    require(finalMeasured == total,
-      s"WordPiece.learnVocabBatched: final corpus symbol total measures " +
-        s"$finalMeasured but the ledger derived $total — the " +
-        "triple-disjointness invariant is broken")
-    // the maintained denominator map must recount EXACTLY — any drift
-    // here means a selection scored against a wrong ca/cb
-    val recount = finalRows.toMap
-    val maintained = symCt.toMap.filter(_._2 != 0L)
-    require(recount == maintained,
-      "WordPiece.learnVocabBatched: driver-maintained symbol counts " +
-        s"diverge from the final recount (maintained ${maintained.size} " +
-        s"entries, recounted ${recount.size}) — the exact-update " +
-        "invariant is broken")
-    CheckpointUtil.free(vocab)
-    ledger.result()
+    PairLedger.induce(units, "WordPiece.learnVocabBatched",
+      new PairLedger.Likelihood, batches, batchSize, win).merges
+      .map(m => (m.idx, m.batch, m.lhs, m.rhs, m.ct,
+        math.floor(m.score * 1e6) / 1e6, m.symsAfter))
+      .toDF("merge_idx", "batch", "lhs", "rhs", "ct", "score", "syms_after")
   }
 }

@@ -184,7 +184,7 @@ object TwsStreams {
     * always behind the final watermark, so the emitted SET matches
     * session_window's whatever the emission batch. State is O(1) per key;
     * trailing open sessions stay pending — the live-stream contract. */
-  private case class OpenSession(sttUs: Long, lastUs: Long, n: Long)
+  case class OpenSession(sttUs: Long, lastUs: Long, n: Long)
 
   private class SessionProcessor(gapUs: Long)
       extends StatefulProcessor[Long, Event, (Long, Long, Long)] {

@@ -1,20 +1,39 @@
 package graft
 
-import graft.operators.{Bpe, PairLedger, WordPiece}
+import graft.functions.TextFns
+import graft.operators.{Bpe, CheckpointUtil, PairLedger, WordPiece}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The r19 incremental-pair-count induction machinery: the
   * MergePairDeltas kernel must equal a run-pairs diff exactly, the
   * driver-side candidate ranking must replicate the engine's orderBy,
-  * and the incremental loops must produce ledgers IDENTICAL to the
-  * full-rescan fallback they replace. */
+  * and the maintained-table path of `PairLedger.induce` must produce
+  * ledgers IDENTICAL to its full-rescan fallback, on both sides of the
+  * pair budget. */
 class PairLedgerSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Run `body` with the pair budget forced to `n` entries. */
-  private def withBudget[T](n: Int)(body: => T): T = {
-    sys.props("graft.pair.budget") = n.toString
-    try body finally { sys.props.remove("graft.pair.budget"); () }
+  /** `PairLedger.induce` at budget 0 and at n − 1, n and n + 1, n the
+    * distinct-pair count the init scan reports: the per-round rescan must
+    * supply the candidates below n and the maintained table from n up,
+    * with one identical, non-empty ledger. Returns the budget-0 ledger
+    * (the full-rescan fallback). */
+  private def atBudgets(units: DataFrame, caller: String,
+      ranking: () => PairLedger.Ranking, batches: Int, batchSize: Int,
+      window: Int): Seq[PairLedger.Merge] = {
+    val vocab = PairLedger.unitVocab(units)
+    val n = try PairLedger.initScan(vocab)._1.length
+      finally CheckpointUtil.free(vocab)
+    val runs = Seq(0, n - 1, n, n + 1).map(budget => budget ->
+      PairLedger.induce(units, caller, ranking(), batches, batchSize,
+        window, budget))
+    assert(runs.map(_._2.rescanned) === Seq(true, true, false, false))
+    val fb = runs.head._2.merges
+    assert(fb.nonEmpty)
+    runs.foreach { case (budget, r) =>
+      assert(r.merges === fb, s"budget $budget of $n distinct pairs") }
+    fb
   }
 
   /** Split a MergePairDeltas result array into (pre_n, post_n, deltas):
@@ -203,11 +222,11 @@ class PairLedgerSpec extends SparkSpec {
       (3L, "the quick brown fox jumps over the lazy dog"),
       (4L, "mississippi mississippi banana")).toDF("doc_id", "text")
     val inc = Bpe.mergesBatched(docs, batches = 5, batchSize = 4, window = 24)
-      .orderBy("merge_idx").collect().toSeq
-    val fb = withBudget(0) {
-      Bpe.mergesBatched(docs, batches = 5, batchSize = 4, window = 24)
-        .orderBy("merge_idx").collect().toSeq
-    }
+      .orderBy("merge_idx").collect().toSeq.map(_.toSeq)
+    val fb = atBudgets(
+      docs.select(explode(TextFns.tokensWs(col("text"))).as("unit")),
+      "Bpe.mergesBatched", () => PairLedger.Frequency, 5, 4, 24)
+      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.ct, m.symsAfter))
     assert(inc.nonEmpty && inc === fb)
   }
 
@@ -219,11 +238,10 @@ class PairLedgerSpec extends SparkSpec {
         sequence(lit(1), length(col("text")), lit(16)),
         i => col("text").substr(i, lit(16)))).as("unit"))
     val inc = Bpe.mergesBatchedUnits(units, batches = 6, batchSize = 3,
-      window = 16).orderBy("merge_idx").collect().toSeq
-    val fb = withBudget(0) {
-      Bpe.mergesBatchedUnits(units, batches = 6, batchSize = 3,
-        window = 16).orderBy("merge_idx").collect().toSeq
-    }
+      window = 16).orderBy("merge_idx").collect().toSeq.map(_.toSeq)
+    val fb = atBudgets(units, "Bpe.mergesBatched",
+      () => PairLedger.Frequency, 6, 3, 16)
+      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.ct, m.symsAfter))
     assert(inc.nonEmpty && inc === fb)
   }
 
@@ -234,11 +252,11 @@ class PairLedgerSpec extends SparkSpec {
       "banana", "bananas", "ananas", "aaaa", "aaa", "kindest", "unkindest")
       .toDF("unit")
     val inc = WordPiece.learnVocabBatched(units, batches = 5, batchSize = 3,
-      window = 16).orderBy("merge_idx").collect().toSeq
-    val fb = withBudget(0) {
-      WordPiece.learnVocabBatched(units, batches = 5, batchSize = 3,
-        window = 16).orderBy("merge_idx").collect().toSeq
-    }
+      window = 16).orderBy("merge_idx").collect().toSeq.map(_.toSeq)
+    val fb = atBudgets(units, "WordPiece.learnVocabBatched",
+      () => new PairLedger.Likelihood, 5, 3, 16)
+      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.ct,
+        math.floor(m.score * 1e6) / 1e6, m.symsAfter))
     assert(inc.nonEmpty && inc === fb)
   }
 }

@@ -135,7 +135,10 @@ class TwsSpec extends SparkSpec {
     // closed session's timer fires inside a DATA batch (end 190/310 <
     // wm 500 by batch 3, end 560 < wm 700 by batch 4) while no sentinel's
     // own deadline (760/765) is ever crossed — the same determinism
-    // argument as the bounce test.
+    // argument as the bounce test. The tws side runs CODEGEN_ONLY: a
+    // state encoder Janino cannot compile (e.g. a private case class)
+    // then fails here instead of silently falling back to interpreted
+    // evaluation.
     val b: Seq[Seq[Event]] = Seq(
       Seq(ev(1, 10, 100), ev(2, 10, 130)),
       Seq(ev(3, 10, 250), ev(4, 20, 500)),
@@ -143,9 +146,11 @@ class TwsSpec extends SparkSpec {
       Seq(ev(6, 98, 705)))
     withRocksDb {
       def wm(df: DataFrame) = df.withWatermark("ts", "0 seconds")
-      val tws = runBatches(b)(
-          d => TwsStreams.sessionStats(wm(d), gapSec = 60L))
-        .select("user_id", "stt_us", "n_events")
+      val tws = Sessions.withConf(spark,
+          "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+        runBatches(b)(d => TwsStreams.sessionStats(wm(d), gapSec = 60L))
+          .select("user_id", "stt_us", "n_events")
+      }
       val sw = runBatches(b)(
           d => graft.streaming.WindowedStreams.sessionStats(d, gapSec = 60L))
         .select("user_id", "stt_us", "n_events")
