@@ -857,12 +857,14 @@ private[graft] object GatesPipeline {
     }),
 
 
-    // ── Dedup: MinHash+LSH — the portable-hash twin (md5-lower-64 family,
-    // string band keys), so the DuckDB oracle recomputes the exact same
-    // candidate set. maxBucket lifted above any sf0.01 bucket so the gate
-    // compares full enumeration (the star-fallback guard has its own spec).
+    // ── Dedup: MinHash+LSH (md5-lower-64 family, string band keys), so the
+    // DuckDB oracle recomputes the exact same candidate set; 64 perms in
+    // 16 bands are the oracle's permValuesSql(64) and `i // 4`. maxBucket
+    // lifted above any sf0.01 bucket so the gate compares full enumeration
+    // (the star-fallback guard has its own spec).
     "dedup_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLshPortable(Tables.documents(s, dir), maxBucket = 1000000)
+      Dedup.minhashLsh(Tables.documents(s, dir), numPerms = 64, bands = 16,
+          maxBucket = 1000000)
         .orderBy(col("doc_a"), col("doc_b"))),
 
 
@@ -904,9 +906,9 @@ private[graft] object GatesPipeline {
     }),
 
 
-    // ── Dedup: SimHash — portable twin (md5-lower-64 bit votes)
+    // ── Dedup: SimHash (md5-lower-64 bit votes)
     "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairsPortable(Tables.documents(s, dir), maxHamming = 8,
+      Dedup.simhashPairs(Tables.documents(s, dir), maxHamming = 8,
           maxBucket = 1000000)
         .orderBy(col("doc_a"), col("doc_b"))),
 
@@ -1605,11 +1607,11 @@ private[graft] object GatesPipeline {
         .orderBy(col("doc_id"))),
 
 
-    // ── Text: document fingerprint — portable rolling hash (md5-primitive
-    // twin of the xxhash64 fast path), bit-for-bit oracle-checkable
+    // ── Text: document fingerprint — rolling hash over the md5 primitive,
+    // bit-for-bit oracle-checkable
     "text_fingerprint" -> ((s, dir) =>
       Tables.documents(s, dir)
-        .select(col("doc_id"), fingerprintPortable(col("text")).as("fp"))
+        .select(col("doc_id"), fingerprint(col("text")).as("fp"))
         .orderBy(col("doc_id"))),
 
 
@@ -3515,7 +3517,7 @@ private[graft] object GatesPipeline {
         |FROM documents ORDER BY doc_id""".stripMargin,
 
 
-    // same construction as TextFns.fingerprintPortable: two 31-bit
+    // same construction as TextFns.fingerprint: two 31-bit
     // polynomial tracks over md5_number_lower-per-token, packed into 62 bits
     "text_fingerprint" ->
       """WITH toks AS (SELECT doc_id,

@@ -126,7 +126,8 @@ object ScaleGrowth {
       (sec, n, s"path=${Dedup.lastClustersPath} (time excl. pair scan)")
     },
     "minhash_lsh" -> whole { dir =>
-      val n = Dedup.minhashLshPortable(Tables.documents(spark, dir)).count()
+      val n = Dedup.minhashLsh(Tables.documents(spark, dir),
+        numPerms = 64, bands = 16).count()
       (n, s"pairs=$n")
     },
     "simhash" -> whole { dir =>

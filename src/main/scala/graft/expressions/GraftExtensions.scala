@@ -57,14 +57,9 @@ object GraftExtensions {
     one("graft_nfc", NfcNormalize.apply),
     one("graft_text_profile", TextProfile.apply),
     one("graft_langid", LangId.apply),
-    ("graft_minhash_bands", new ExpressionInfo(classOf[MinHashBands].getName, "graft_minhash_bands"),
-      (args: Seq[Expression]) => MinHashBands(args(0),
-        intArg(args, 1, "shingleLen"), intArg(args, 2, "numPerms"), intArg(args, 3, "bands"))),
     ("graft_minhash_bands_p", new ExpressionInfo(classOf[MinHashBandsPortable].getName, "graft_minhash_bands_p"),
       (args: Seq[Expression]) => MinHashBandsPortable(args(0),
         intArg(args, 1, "shingleLen"), intArg(args, 2, "numPerms"), intArg(args, 3, "bands"))),
-    ("graft_simhash", new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (args: Seq[Expression]) => SimHash64(args(0), intArg(args, 1, "shingleLen"))),
     ("graft_simhash_p", new ExpressionInfo(classOf[SimHashPortable].getName, "graft_simhash_p"),
       (args: Seq[Expression]) => SimHashPortable(args(0), intArg(args, 1, "shingleLen"))),
     ("graft_shingles", new ExpressionInfo(classOf[ShingleArray].getName, "graft_shingles"),

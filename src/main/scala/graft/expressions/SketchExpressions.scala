@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.functions.HashFns
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
@@ -8,40 +9,31 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused single-pass sketch expressions for near-dup detection.
+/** Fused single-pass sketch expressions for near-dup detection: each one
+  * tokenizes, shingles, hashes and folds in one tight JVM loop per row —
+  * one virtual call per document, where a higher-order-function
+  * composition of the same sketch pays an interpreted lambda call per
+  * shingle×permutation.
   *
-  * The composable pipeline (TextFns.shingles → HashFns.minHash →
-  * HashFns.lshBands) is correct but every stage is an interpreted
-  * higher-order function: a 200-shingle document costs 200×k boxed lambda
-  * calls for a k-permutation signature. These expressions tokenize,
-  * shingle, hash and fold in one tight JVM loop per row — one virtual call
-  * per document instead of per token×permutation.
-  *
-  * Hashing matches the builtin xxhash64 (XxHash64Function, seed 42) folded
-  * to the 31-bit universal-hash domain, and the permutation family is
-  * HashFns.permutations — so sketches are interchangeable with the HOF
-  * pipeline's.
+  * The shingle hash is md5-lower-64 ([[PortableHash]]) and the MinHash
+  * permutation family is HashFns.permutations mod HashFns.P, so every
+  * signature, band key and fingerprint is recomputable verbatim by
+  * another engine (the DuckDB oracle recomputes them).
   */
 object Sketches {
-  val P: Long = 2147483647L // 2^31-1, see HashFns.P
-
   def tokenize(text: String): Array[String] =
     text.trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
 
-  /** Shingle strings, HOF-shingles parity: docs shorter than n collapse to
-    * one shingle (possibly ""). */
-  def shingleHashes(text: String, n: Int): Array[Long] = {
+  /** Word n-gram shingle strings, TextFns.shingles parity: docs shorter
+    * than n collapse to one joined shingle (possibly ""). */
+  def shingles(text: String, n: Int): Array[String] = {
     val toks = tokenize(text)
-    def h(s: String): Long = {
-      val x = XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)
-      ((x % P) + P) % P
-    }
-    if (toks.length < n) Array(h(toks.mkString(" ")))
+    if (toks.length < n) Array(toks.mkString(" "))
     else Array.tabulate(toks.length - n + 1) { i =>
       val sb = new java.lang.StringBuilder(toks(i))
       var j = 1
       while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-      h(sb.toString)
+      sb.toString
     }
   }
 }
@@ -77,6 +69,7 @@ object PortableHash {
   * graft_shingles(text, n). */
 case class ShingleArray(child: Expression, shingleLen: Int)
     extends UnaryExpression with CodegenFallback {
+  require(shingleLen >= 1, s"shingleLen must be >= 1, got $shingleLen")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_shingles"
@@ -86,19 +79,10 @@ case class ShingleArray(child: Expression, shingleLen: Int)
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val toks = Sketches.tokenize(input.asInstanceOf[UTF8String].toString)
-    val n = shingleLen
-    val out: Array[Any] =
-      if (toks.length < n) Array(UTF8String.fromString(toks.mkString(" ")))
-      else Array.tabulate[Any](toks.length - n + 1) { i =>
-        val sb = new java.lang.StringBuilder(toks(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        UTF8String.fromString(sb.toString)
-      }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(Sketches.shingles(
+      input.asInstanceOf[UTF8String].toString, shingleLen)
+      .map[Any](UTF8String.fromString))
 
   override protected def withNewChildInternal(newChild: Expression): ShingleArray =
     copy(child = newChild)
@@ -161,79 +145,23 @@ case class SpanHashes(child: Expression, spanLen: Int)
     copy(child = newChild)
 }
 
-/** MinHash signature + LSH band keys in one pass:
-  * array<struct<band:int, key:long>>, ready to explode into the
-  * (band, key) bucket table. SQL: graft_minhash_bands(text, n, k, bands). */
-case class MinHashBands(child: Expression, shingleLen: Int, numPerms: Int,
-    bands: Int) extends UnaryExpression with CodegenFallback {
-  require(numPerms % bands == 0, "numPerms must divide into bands")
-
-  private val rows = numPerms / bands
-  @transient private lazy val perms =
-    graft.functions.HashFns.permutations(numPerms).toArray
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("band", IntegerType, nullable = false),
-    StructField("key", LongType, nullable = false))))
-  override def prettyName: String = "graft_minhash_bands"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val hashes = Sketches.shingleHashes(input.asInstanceOf[UTF8String].toString, shingleLen)
-    val sig = Array.fill(numPerms)(Long.MaxValue)
-    var i = 0
-    while (i < hashes.length) {
-      val h = hashes(i)
-      var j = 0
-      while (j < numPerms) {
-        val v = (perms(j)._1 * h + perms(j)._2) % Sketches.P
-        if (v < sig(j)) sig(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    // band key: xxhash64 over the comma-joined signature slice — the same
-    // string the HOF lshBands hashes, so keys are interchangeable
-    val out = new Array[Any](bands)
-    var b = 0
-    while (b < bands) {
-      val sb = new java.lang.StringBuilder()
-      var r = 0
-      while (r < rows) {
-        if (r > 0) sb.append(',')
-        sb.append(sig(b * rows + r))
-        r += 1
-      }
-      val key = XxHash64Function.hash(
-        UTF8String.fromString(sb.toString), StringType, 42L)
-      out(b) = InternalRow(b, key)
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
-    copy(child = newChild)
-}
-
-/** Engine-portable MinHash + LSH bands in one pass. Differences from
-  * [[MinHashBands]] (the fast engine-internal twin): element hashes are
-  * md5-lower-64 mod P (PortableHash — recomputable as DuckDB
-  * `md5_number_lower(s) % P`), and the band key is the comma-joined
-  * signature slice ITSELF (a string needs no cross-engine hash contract).
+/** MinHash signature + LSH band keys in one pass, ready to explode into
+  * the (band, key) bucket table: element hashes are md5-lower-64 mod P
+  * (PortableHash — recomputable as DuckDB `md5_number_lower(s) % P`), and
+  * the band key is the comma-joined signature slice ITSELF (a string
+  * needs no cross-engine hash contract).
   * Output: array<struct<band:int, key:string>>.
   * SQL: graft_minhash_bands_p(text, n, k, bands). */
 case class MinHashBandsPortable(child: Expression, shingleLen: Int,
     numPerms: Int, bands: Int) extends UnaryExpression with CodegenFallback {
-  require(numPerms % bands == 0, "numPerms must divide into bands")
+  require(shingleLen >= 1, s"shingleLen must be >= 1, got $shingleLen")
+  require(numPerms >= 1, s"numPerms must be >= 1, got $numPerms")
+  require(bands >= 1, s"bands must be >= 1, got $bands")
+  require(numPerms % bands == 0,
+    s"numPerms ($numPerms) must divide into bands ($bands)")
 
   private val rows = numPerms / bands
-  @transient private lazy val perms =
-    graft.functions.HashFns.permutations(numPerms).toArray
+  @transient private lazy val perms = HashFns.permutations(numPerms).toArray
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("band", IntegerType, nullable = false),
@@ -246,23 +174,14 @@ case class MinHashBandsPortable(child: Expression, shingleLen: Int,
       s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(input: Any): Any = {
-    val toks = Sketches.tokenize(input.asInstanceOf[UTF8String].toString)
-    val n = shingleLen
-    val shingles: Array[String] =
-      if (toks.length < n) Array(toks.mkString(" "))
-      else Array.tabulate(toks.length - n + 1) { i =>
-        val sb = new java.lang.StringBuilder(toks(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        sb.toString
-      }
+    val shingles = Sketches.shingles(input.asInstanceOf[UTF8String].toString, shingleLen)
     val sig = Array.fill(numPerms)(Long.MaxValue)
     var i = 0
     while (i < shingles.length) {
-      val h = PortableHash.lower64Mod(shingles(i), Sketches.P)
+      val h = PortableHash.lower64Mod(shingles(i), HashFns.P)
       var j = 0
       while (j < numPerms) {
-        val v = (perms(j)._1 * h + perms(j)._2) % Sketches.P
+        val v = (perms(j)._1 * h + perms(j)._2) % HashFns.P
         if (v < sig(j)) sig(j) = v
         j += 1
       }
@@ -288,13 +207,15 @@ case class MinHashBandsPortable(child: Expression, shingleLen: Int,
     copy(child = newChild)
 }
 
-/** Engine-portable 64-bit SimHash, split into two unsigned 32-bit halves
-  * (struct<lo:long, hi:long>, each in [0, 2^32)) so any engine can rebuild
-  * it without signed-shift pitfalls. Votes come from the 64 bits of the
-  * md5-lower-64 shingle hash (DuckDB: `(md5_number_lower(s) >> b) & 1`).
+/** 64-bit SimHash over word shingles in one pass, split into two unsigned
+  * 32-bit halves (struct<lo:long, hi:long>, each in [0, 2^32)) so any
+  * engine can rebuild it without signed-shift pitfalls. Votes come from
+  * the 64 bits of the md5-lower-64 shingle hash (DuckDB:
+  * `(md5_number_lower(s) >> b) & 1`); repeated shingles vote again.
   * SQL: graft_simhash_p(text, n). */
 case class SimHashPortable(child: Expression, shingleLen: Int)
     extends UnaryExpression with CodegenFallback {
+  require(shingleLen >= 1, s"shingleLen must be >= 1, got $shingleLen")
 
   override def dataType: DataType = StructType(Seq(
     StructField("lo", LongType, nullable = false),
@@ -307,27 +228,17 @@ case class SimHashPortable(child: Expression, shingleLen: Int)
       s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(input: Any): Any = {
-    val toks = Sketches.tokenize(input.asInstanceOf[UTF8String].toString)
+    val shingles = Sketches.shingles(input.asInstanceOf[UTF8String].toString, shingleLen)
     val votes = new Array[Long](64)
-    def vote(s: String): Unit = {
-      val h = PortableHash.lower64(s)
+    var i = 0
+    while (i < shingles.length) {
+      val h = PortableHash.lower64(shingles(i))
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
         b += 1
       }
-    }
-    val n = shingleLen
-    if (toks.length < n) vote(toks.mkString(" "))
-    else {
-      var i = 0
-      while (i + n <= toks.length) {
-        val sb = new java.lang.StringBuilder(toks(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        vote(sb.toString)
-        i += 1
-      }
+      i += 1
     }
     var lo = 0L
     var hi = 0L
@@ -338,51 +249,5 @@ case class SimHashPortable(child: Expression, shingleLen: Int)
   }
 
   override protected def withNewChildInternal(newChild: Expression): SimHashPortable =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash over word shingles in one pass. SQL:
-  * graft_simhash(text, n). */
-case class SimHash64(child: Expression, shingleLen: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val toks = Sketches.tokenize(input.asInstanceOf[UTF8String].toString)
-    val votes = new Array[Long](64)
-    def vote(s: String): Unit = {
-      val h = XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-    }
-    val n = shingleLen
-    if (toks.length < n) vote(toks.mkString(" "))
-    else {
-      var i = 0
-      while (i + n <= toks.length) {
-        val sb = new java.lang.StringBuilder(toks(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        vote(sb.toString)
-        i += 1
-      }
-    }
-    var fp = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) fp |= (1L << b); b += 1 }
-    fp
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }

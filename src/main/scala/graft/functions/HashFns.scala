@@ -3,13 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Hash-sketch building blocks for near-duplicate detection: MinHash
-  * signatures and SimHash fingerprints, as pure built-in expression
-  * compositions (xxhash64 + higher-order array functions — all codegen'd,
-  * no UDF boundary).
+/** Hash primitives shared by the near-duplicate sketches and the
+  * oracle-checked hash gates: the affine MinHash permutation family over
+  * the Mersenne modulus P (the fused kernels in
+  * graft.expressions.SketchExpressions fold with it), the 64-bit Hamming
+  * distance, and the md5-lower-64 primitive every engine can recompute.
   *
-  * Scale note: signatures are computed per-row at scan time (narrow), the
-  * only shuffle in the dedup pipelines built on these is the band/bucket
+  * Scale note: sketches are computed per-row at scan time (narrow); the
+  * only shuffle in the dedup pipelines built on them is the band/bucket
   * groupBy — the minimum any LSH scheme needs.
   */
 object HashFns {
@@ -22,57 +23,6 @@ object HashFns {
   def permutations(k: Int, seed: Long = 7L): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(k)((rnd.nextInt((P - 2).toInt).toLong + 1, rnd.nextInt(P.toInt).toLong))
-  }
-
-  /** MinHash signature (array<long>, length k) of a string-array column.
-    * Elements are first hashed once with xxhash64 (folded to 31 bits); each
-    * permutation is a cheap affine transform over that single hash. The
-    * element-hash array is bind-bound so the k permutations iterate over a
-    * lambda variable instead of k re-inlined copies of the hash transform
-    * (and, transitively, of the upstream shingle construction). */
-  def minHash(elems: Column, perms: Seq[(Long, Long)]): Column = {
-    val permArr = array(perms.map { case (a, b) =>
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }: _*)
-    ExprUtil.bind(transform(elems, e => pmod(xxhash64(e), lit(P)))) { hashes =>
-      transform(permArr, p =>
-        array_min(transform(hashes, h =>
-          pmod(p.getField("a") * h + p.getField("b"), lit(P)))))
-    }
-  }
-
-  /** LSH band keys: split a k-long signature into `bands` bands of
-    * k/bands rows each and hash each band to one long. Result:
-    * array<struct<band:int, key:long>> ready to explode. */
-  def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    ExprUtil.bind(sig) { s =>
-      array((0 until bands).map { b =>
-        struct(
-          lit(b).as("band"),
-          xxhash64(concat_ws(",",
-            transform(slice(s, b * rowsPerBand + 1, rowsPerBand), _.cast("string"))))
-            .as("key"))
-      }: _*)
-    }
-
-  /** SimHash: 64-bit fingerprint. For each bit b, sum +1/-1 across token
-    * hashes; bit set iff the sum is positive. Bit positions are unrolled at
-    * plan-build time (Scala ints), keeping every op a codegen'd builtin. */
-  def simHash(elems: Column): Column = {
-    val bitVotes = aggregate(
-      elems,
-      array_repeat(lit(0L), 64),
-      (acc, e) => ExprUtil.bind(xxhash64(e)) { h =>
-        array((0 until 64).map { b =>
-          element_at(acc, b + 1) +
-            when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))
-        }: _*)
-      })
-    ExprUtil.bind(bitVotes) { votes =>
-      (0 until 64).map { b =>
-        when(element_at(votes, b + 1) > 0, lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ bitwiseOR _)
-    }
   }
 
   /** Hamming distance between two 64-bit fingerprints. */

@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   * and document fingerprinting.
   *
   * Everything is a built-in-function composition (no UDFs): `split`,
-  * `filter`, `transform`, `aggregate`, `xxhash64` are all codegen'd, so
-  * these run at full whole-stage-codegen speed and scale linearly with
-  * executors — no JVM<->interpreter boundary per row.
+  * `filter`, `transform`, `aggregate` are all codegen'd, so these run
+  * at full whole-stage-codegen speed and scale linearly with executors — no JVM<->interpreter boundary per row.
   */
 object TextFns {
 
@@ -125,27 +124,12 @@ object TextFns {
   /** Document fingerprint: order-sensitive 62-bit rolling hash over tokens
     * — two independent 31-bit polynomial tracks (mod 2^31-1, multipliers
     * coprime) packed into one long. Overflow-free under ANSI arithmetic;
-    * docs differing only in whitespace normalize equal. */
+    * docs differing only in whitespace normalize equal. The per-token
+    * primitive is the little-endian low 64 bits of md5 — a value any
+    * engine can compute (DuckDB: `md5_number_lower`), so the whole
+    * fingerprint is oracle-checkable bit-for-bit. */
   def fingerprint(c: Column): Column = {
-    val M = lit(2147483647L)
-    ExprUtil.bind(tokensWs(c)) { toks =>
-      def track(mult: Long): Column =
-        aggregate(
-          toks,
-          lit(17L),
-          (acc, t) => pmod(acc * lit(mult) + pmod(xxhash64(t), M), M))
-      shiftleft(track(1000003L), 31).bitwiseOR(track(998244353L % 2147483647L))
-    }
-  }
-
-  /** Portable twin of [[fingerprint]]: same two-track rolling hash, but the
-    * per-token primitive is the little-endian low 64 bits of md5 — a value
-    * any engine can compute (DuckDB: `md5_number_lower`), so the whole
-    * fingerprint is oracle-checkable bit-for-bit. [[fingerprint]]
-    * (xxhash64-based) stays the fast path: one codegen'd hash vs an md5 +
-    * hex-shuffle per token. */
-  def fingerprintPortable(c: Column): Column = {
-    val M = 2147483647L
+    val M = HashFns.P
     ExprUtil.bind(tokensWs(c)) { toks =>
       def track(mult: Long): Column =
         aggregate(toks, lit(17L), (acc, t) =>

@@ -119,53 +119,20 @@ object Dedup {
   /** MinHash + LSH near-dup candidate pairs, verified with exact shingle
     * Jaccard. Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
     *
-    * numPerms=128, bands=32 (rows=4) targets ~0.5 collision at J≈0.42 —
-    * standard (1/b)^(1/r) threshold tuning.
+    * Signatures are md5-lower-64 element hashes banded into plain-string
+    * keys ([[minhashBandIndex]]), so an external engine (the DuckDB
+    * oracle) can recompute the exact same candidate set from the same
+    * affine permutation family. numPerms=128, bands=32 (rows=4) targets
+    * ~0.5 collision at J≈0.42 — standard (1/b)^(1/r) threshold tuning.
     */
   def minhashLsh(
       documents: DataFrame,
       shingleLen: Int = 3,
       numPerms: Int = 128,
       bands: Int = 32,
-      minJaccard: Double = 0.5): DataFrame = {
-    require(numPerms % bands == 0)
-
-    // fused native sketch: tokenize→shingle→hash→fold in one pass per row
-    // (graft.expressions.MinHashBands); the HOF pipeline (shingles →
-    // minHash → lshBands) computes identical band keys but pays
-    // interpreted-lambda cost per shingle×permutation
-    val sigs = documents
-      .select(col("doc_id"),
-        explode(call_function("graft_minhash_bands",
-          col("text"), lit(shingleLen), lit(numPerms), lit(bands))).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
-
-    val candidates = bucketPairs(sigs, Seq("band", "key"), col("doc_id"))
-      .select(col("a").as("doc_a"), col("b").as("doc_b"))
-
-    verifyJaccard(documents, candidates, shingleLen)
-      .filter(col("jaccard") >= minJaccard)
-  }
-
-  /** Engine-portable MinHash+LSH twin of [[minhashLsh]]: md5-lower-64
-    * element hashes and plain-string band keys (graft_minhash_bands_p), so
-    * an external engine (the DuckDB oracle) can recompute the exact same
-    * candidate set from the same affine permutation family. Same plan
-    * shape and shuffle budget as the fast path; defaults tuned so the
-    * (1/b)^(1/r) collision threshold sits at minJaccard. */
-  def minhashLshPortable(
-      documents: DataFrame,
-      shingleLen: Int = 3,
-      numPerms: Int = 64,
-      bands: Int = 16,
       minJaccard: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    require(numPerms % bands == 0)
-    val sigs = documents
-      .select(col("doc_id"),
-        explode(call_function("graft_minhash_bands_p",
-          col("text"), lit(shingleLen), lit(numPerms), lit(bands))).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
+    val sigs = minhashBandIndex(documents, shingleLen, numPerms, bands)
     val candidates = bucketPairs(sigs, Seq("band", "key"), col("doc_id"), maxBucket)
       .select(col("a").as("doc_a"), col("b").as("doc_b"))
     verifyJaccard(documents, candidates, shingleLen)
@@ -178,14 +145,12 @@ object Dedup {
     * partitioned/bucketed by (band, key) and [[incrementalNearDups]]'s
     * probe join co-locates for free. */
   def minhashBandIndex(documents: DataFrame, shingleLen: Int = 3,
-      numPerms: Int = 64, bands: Int = 16): DataFrame = {
-    require(numPerms % bands == 0)
+      numPerms: Int = 64, bands: Int = 16): DataFrame =
     documents
       .select(col("doc_id"),
         explode(call_function("graft_minhash_bands_p",
           col("text"), lit(shingleLen), lit(numPerms), lit(bands))).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
-  }
 
   /** Incremental ingestion dedup: flag each INCOMING document whose band
     * signature collides with the persisted HISTORY index and whose exact
@@ -196,7 +161,7 @@ object Dedup {
     * the candidate history docs (a semi-join-pruned sliver) are re-read
     * for exact verification. Ingesting 1 TB into a 100 TB corpus costs
     * O(new batch) + O(index probe), not O(corpus). Intra-batch dups are
-    * the standard [[minhashLshPortable]] pass over the batch alone.
+    * the standard [[minhashLsh]] pass over the batch alone.
     * (ref behavior: gmall has no dedup; this is the LLM-pipeline suite.) */
   def incrementalNearDups(incoming: DataFrame, history: DataFrame,
       historyIndex: DataFrame, shingleLen: Int = 3, numPerms: Int = 64,
@@ -291,29 +256,11 @@ object Dedup {
   /** SimHash near-dup pairs: 64-bit fingerprints over word 3-gram shingles
     * (order-sensitive — token bags alone are too uniform on natural
     * corpora), candidates from 4x16-bit band collisions, verified by exact
-    * hamming <= maxHamming. */
+    * hamming <= maxHamming. The fingerprint is two unsigned 32-bit halves
+    * built from md5-lower-64 shingle-hash bit votes (graft_simhash_p), and
+    * hamming is the popcount of the half xors — every step recomputable
+    * verbatim in the DuckDB oracle. */
   def simhashPairs(documents: DataFrame, maxHamming: Int = 3,
-      shingleLen: Int = 3): DataFrame = {
-    val fp = documents.select(col("doc_id"),
-      call_function("graft_simhash", col("text"), lit(shingleLen)).as("fp"))
-    val banded = fp.select(
-      struct(col("doc_id"), col("fp")).as("m"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("fp"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))
-      }: _*)).as("b"))
-      .select(col("m"), col("b.band"), col("b.key"))
-    bucketPairs(banded, Seq("band", "key"), col("m"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        hamming64(col("a.fp"), col("b.fp")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** Engine-portable SimHash twin of [[simhashPairs]]: the fingerprint is
-    * two unsigned 32-bit halves built from md5-lower-64 shingle-hash bit
-    * votes (graft_simhash_p), banded 4×16-bit, hamming = popcount of the
-    * xors — every step recomputable verbatim in the DuckDB oracle. */
-  def simhashPairsPortable(documents: DataFrame, maxHamming: Int = 3,
       shingleLen: Int = 3, maxBucket: Int = 1000): DataFrame = {
     val fp = documents.select(col("doc_id"),
       call_function("graft_simhash_p", col("text"), lit(shingleLen)).as("fp"))

@@ -41,7 +41,8 @@ class DedupSpec extends SparkSpec {
     val inc = Dedup.incrementalNearDups(incoming, history,
         Dedup.minhashBandIndex(history))
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val full = Dedup.minhashLshPortable(documents, maxBucket = 1000000)
+    val full = Dedup.minhashLsh(documents, numPerms = 64, bands = 16,
+        maxBucket = 1000000)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val crossFromFull = full.collect {
       case (a, b) if a % 5 == 0 && b % 5 != 0 => (a, b)

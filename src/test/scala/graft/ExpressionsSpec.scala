@@ -56,20 +56,77 @@ class ExpressionsSpec extends SparkSpec {
     assert(r === Set((1L, "hello"), (1L, "world")))
   }
 
-  test("fused minhash bands produce identical keys to the HOF pipeline") {
+  test("sketch kernels equal a builtin-md5 reference bit-for-bit") {
+    // the reference is the oracle's formula built from Spark builtins:
+    // TextFns shingles, HashFns.md5Lower64 (builtin md5 -> unsigned
+    // decimal), the same affine family, folded driver-side on BigInts
     import graft.functions.{HashFns, TextFns}
-    val docs = Seq("the quick brown fox jumps over the lazy dog",
-      "one two", "", "solo").toDF("text")
-    val native = docs.select(
-      explode(call_function("graft_minhash_bands",
-        col("text"), lit(3), lit(16), lit(4))).as("b"))
-      .select(col("b.band"), col("b.key")).collect().map(_.toString).sorted
-    val hof = docs.select(
-      explode(HashFns.lshBands(
-        HashFns.minHash(TextFns.shingles(TextFns.tokensWs(col("text")), 3),
-          HashFns.permutations(16)), 4, 4)).as("b"))
-      .select(col("b.band"), col("b.key")).collect().map(_.toString).sorted
-    assert(native === hof)
+    val texts = Seq("", "   ", "one two", "a b a b a b a b",
+      "  The QUICK\tbrown  fox\nJumps over THE quick brown fox ")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text")
+    for (n <- Seq(1, 3)) {
+      val hashes: Map[Long, Seq[BigInt]] = docs
+        .select(col("id"),
+          posexplode(TextFns.shingles(TextFns.tokensWs(col("text")), n)))
+        .toDF("id", "pos", "sh")
+        .select(col("id"), col("pos"), HashFns.md5Lower64(col("sh")).as("h"))
+        .as[(Long, Int, java.math.BigDecimal)].collect().toSeq
+        .groupBy(_._1).view
+        .mapValues(_.sortBy(_._2).map(r => BigInt(r._3.toBigIntegerExact)))
+        .toMap
+      assert(hashes.keySet === texts.indices.map(_.toLong).toSet)
+
+      val (numPerms, bands) = (16, 4)
+      val perms = HashFns.permutations(numPerms)
+      val refBands = hashes.view.mapValues { hs =>
+        val sig = perms.map { case (a, b) =>
+          hs.map(h => (a * (h % HashFns.P).toLong + b) % HashFns.P).min }
+        sig.grouped(numPerms / bands).map(_.mkString(",")).zipWithIndex
+          .map { case (k, b) => (b, k) }.toSeq
+      }.toMap
+      val kernelBands = docs
+        .select(col("id"), explode(call_function("graft_minhash_bands_p",
+          col("text"), lit(n), lit(numPerms), lit(bands))).as("b"))
+        .select(col("id"), col("b.band"), col("b.key"))
+        .as[(Long, Int, String)].collect().toSeq
+        .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).sortBy(_._1))
+        .toMap
+      assert(kernelBands === refBands, s"minhash bands, n=$n")
+
+      val refSim = hashes.view.mapValues { hs =>
+        val votes = (0 until 64).map(b => hs.map(h => if (h.testBit(b)) 1 else -1).sum)
+        def half(from: Int) = (0 until 32)
+          .map(b => if (votes(from + b) > 0) 1L << b else 0L).sum
+        (half(0), half(32))
+      }.toMap
+      val kernelSim = docs
+        .select(col("id"),
+          call_function("graft_simhash_p", col("text"), lit(n)).as("s"))
+        .select(col("id"), col("s.lo"), col("s.hi"))
+        .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      assert(kernelSim === refSim, s"simhash, n=$n")
+    }
+  }
+
+  test("sketch kernels reject a non-positive shingleLen, numPerms or bands by name") {
+    val docs = Seq("a b c d").toDF("text")
+    def fn(name: String, args: Int*) =
+      call_function(name, (col("text") +: args.map(lit(_))): _*)
+    Seq(
+      "shingleLen" -> fn("graft_shingles", 0),
+      "shingleLen" -> fn("graft_minhash_bands_p", 0, 64, 16),
+      "bands" -> fn("graft_minhash_bands_p", 3, 64, 0),
+      "numPerms" -> fn("graft_minhash_bands_p", 3, 0, 16),
+      "shingleLen" -> fn("graft_simhash_p", 0)
+    ).foreach { case (arg, c) =>
+      val e = intercept[Exception](docs.select(c).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => (t.isInstanceOf[IllegalArgumentException] ||
+          t.isInstanceOf[org.apache.spark.sql.AnalysisException]) &&
+        String.valueOf(t.getMessage).contains(s"$arg must be >= 1")),
+        s"$c: ${chain.map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString(" <- ")}")
+    }
   }
 
   test("native langid matches the HOF langId including tie-breaks") {
@@ -96,18 +153,6 @@ class ExpressionsSpec extends SparkSpec {
       call_function("graft_shingles", col("text"), lit(3))).as[Seq[String]].collect()
     val hof = docs.select(
       TextFns.shingles(TextFns.tokensWs(col("text")), 3)).as[Seq[String]].collect()
-    assert(native === hof)
-  }
-
-  test("fused simhash matches the HOF simhash bit-for-bit") {
-    import graft.functions.{HashFns, TextFns}
-    val docs = Seq("the quick brown fox jumps over the lazy dog",
-      "alpha beta gamma delta", "xy").toDF("text")
-    val native = docs.select(
-      call_function("graft_simhash", col("text"), lit(3))).as[Long].collect()
-    val hof = docs.select(
-      HashFns.simHash(TextFns.shingles(TextFns.tokensWs(col("text")), 3)))
-      .as[Long].collect()
     assert(native === hof)
   }
 

@@ -123,12 +123,10 @@ class PropertySpec extends SparkSpec {
 
   test("minhash signature length and band count are stable") {
     forAll(docGen) { docs =>
-      import graft.functions.{HashFns, TextFns}
       val df = docs.toDF("doc_id", "text")
-      val sig = df.select(
-        HashFns.minHash(TextFns.shingles(TextFns.tokensWs(col("text")), 2),
-          HashFns.permutations(16)).as("sig"))
-      assert(sig.select(size(col("sig"))).as[Int].collect().forall(_ === 16))
+      val keys = df.select(call_function("graft_minhash_bands_p",
+          col("text"), lit(2), lit(32), lit(16)).as("b"))
+      assert(keys.select(size(col("b"))).as[Int].collect().forall(_ === 16))
     }
   }
 

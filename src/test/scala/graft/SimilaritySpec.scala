@@ -325,20 +325,30 @@ class SimilaritySpec extends SparkSpec {
       (a, w, t)
     }
     val planBaked = runAll()
-    sys.props("graft.plan.literal.budget") = "1"
-    val fallback = try runAll()
-    finally { sys.props.remove("graft.plan.literal.budget"); () }
-    assert(fallback._1 === planBaked._1)
-    assert(fallback._2 === planBaked._2)
-    assert(fallback._3 === planBaked._3)
     assert(planBaked._1.nonEmpty)
-    // and the fallback really took the join shape: its plan carries a
-    // broadcast exchange where the kernel shape has none
-    sys.props("graft.plan.literal.budget") = "1"
-    val plan = try Similarity.assign(emb, centroids)
+    def shape() = Similarity.assign(emb, centroids)
       .queryExecution.optimizedPlan.toString
+    def broadcastShape(plan: String) =
+      plan.contains("Join") || plan.toLowerCase.contains("broadcast")
+    assert(!broadcastShape(shape()))
+    // k x d doubles is the table's size: the fallback takes it strictly
+    // above the budget, so k·d−1 degrades and k·d, k·d+1 stay baked
+    val kd = centroids.select(size(col("centroid")).cast("long")).as[Long]
+      .collect().sum
+    for (budget <- Seq(1L, kd - 1, kd, kd + 1)) {
+      val (rows, plan) = withBudget(budget)((runAll(), shape()))
+      assert(rows._1 === planBaked._1, s"assign at budget $budget")
+      assert(rows._2 === planBaked._2, s"withCluster at budget $budget")
+      assert(rows._3 === planBaked._3, s"ivfTopK at budget $budget")
+      assert(broadcastShape(plan) === (budget < kd), s"plan at budget $budget: $plan")
+    }
+  }
+
+  /** Runs `body` with the plan-literal budget system property at `v`. */
+  private def withBudget[T](v: Long)(body: => T): T = {
+    sys.props("graft.plan.literal.budget") = v.toString
+    try body
     finally { sys.props.remove("graft.plan.literal.budget"); () }
-    assert(plan.contains("Join") || plan.toLowerCase.contains("broadcast"))
   }
 
   test("codebookRows rejects non-uniform and non-contiguous codebooks " +
@@ -356,5 +366,17 @@ class SimilaritySpec extends SparkSpec {
       Similarity.pqEncode(emb, gap).collect()
     }
     assert(e2.getMessage.contains("contiguous"))
+    // the budget bounds m·k·subDim doubles: one below fails naming it,
+    // exactly at it the codebook bakes and encodes
+    val cb = Similarity.trainPqCodebooks(emb, m = 2, k = 4, iters = 1,
+      sampleRate = 1.0).localCheckpoint(true)
+    val mkSub = cb.select(size(col("centroid")).cast("long")).as[Long]
+      .collect().sum
+    val e3 = intercept[IllegalArgumentException] {
+      withBudget(mkSub - 1)(Similarity.pqEncode(emb, cb).collect())
+    }
+    assert(e3.getMessage.contains("plan-literal budget"))
+    val codes = withBudget(mkSub)(Similarity.pqEncode(emb, cb).collect())
+    assert(codes.length.toLong === emb.count())
   }
 }
