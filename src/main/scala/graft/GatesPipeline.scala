@@ -502,15 +502,10 @@ private[graft] object GatesPipeline {
     }),
 
 
-    // ── Text: BATCHED BPE ENCODE — segment the corpus with the ~39
-    // learned merges, one fold pass per BATCH (constant expression depth
-    // in batch size; 5 nested folds instead of 39).
-    // ── Text: TABLE-DRIVEN BPE ENCODE — the 10³–10⁵-merge tier: same
-    // learned merges as text_bpe_batch_encode but segmented by
-    // Bpe.encodeTable (one mapPartitions JVM pass per distinct word,
-    // rule table broadcast) instead of nested Catalyst folds — plan
-    // depth is CONSTANT in the merge count, so this is the encode a
-    // real-vocabulary tokenizer runs. Exact-parity contract: shares
+    // ── Text: TABLE-DRIVEN BPE ENCODE — the 10³–10⁵-merge tier's API:
+    // the ~39 learned merges as a FLAT ordered table, one merge layer per
+    // rule inside one MergeFold node per distinct word (plan size is
+    // constant in the merge count). Exact-parity contract: shares
     // text_bpe_batch_encode's oracle verbatim.
     "text_bpe_encode_table" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
@@ -558,11 +553,10 @@ private[graft] object GatesPipeline {
     }),
 
 
-    // (4 batches, not 5: the fold tree grows ~4x per batch — 3.5 s at 4
-    // batches vs 16.3 s at 5 at sf0.1, SCALE.md §"Round-14: encode tiers
-    // vs merge-table size" — and the large-table regime is
-    // text_bpe_encode_table's job; this gate pins the FOLD tier's
-    // semantics at its economic depth)
+    // ── Text: BATCHED BPE ENCODE — segment the corpus with the merges of
+    // 4 learned batches, one merge layer per BATCH (exact under the
+    // batch selection's triple-disjointness); answers to the same
+    // generated fold replay as the flat table above.
     "text_bpe_batch_encode" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val led = Bpe.mergesBatched(docs, batches = 4, batchSize = 8,
@@ -2307,7 +2301,8 @@ private[graft] object GatesPipeline {
       bpeBatchSql(batches = 4, batchSize = 8, window = 48, encodeTail = true),
     // table-driven encode answers to the SAME replay: sequential
     // application of the flat learned list == batch-wise folds under the
-    // selection's triple-disjointness (BpeSpec pins all three tiers equal)
+    // selection's triple-disjointness (BpeSpec pins every encoder against
+    // a per-rule reference walk)
     "text_bpe_encode_table" ->
       bpeBatchSql(batches = 5, batchSize = 8, window = 48, encodeTail = true),
     // byte-fallback tier: the rule list must match the gate's literally
@@ -2579,7 +2574,7 @@ private[graft] object GatesPipeline {
 
     // 4 chained rounds: pair-count -> argmax (ct desc, then lexicographic)
     // -> greedy fold via list_reduce -- the same string fold, operand for
-    // operand, as Bpe.applyMerge. All counts exact ints.
+    // operand, as Bpe.applyMerges. All counts exact ints.
     "text_bpe_merges" ->
       """WITH v0 AS (
         |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wct FROM (

@@ -113,12 +113,13 @@ object GraftExtensions {
     ("graft_merge_fold", new ExpressionInfo(
       classOf[MergeFold].getName, "graft_merge_fold"),
       (args: Seq[Expression]) => {
-        // flat (lhs1, rhs1, lhs2, rhs2, ...) literal — plan-baked rules
+        // flat (lhs1, rhs1, lhs2, rhs2, ...) literal — plan-baked rules,
+        // one layer
         val flat = stringArrayArg(args, 1, "rules")
         require(flat.length % 2 == 0 && flat.forall(_ != null),
           "graft_merge_fold: rules must be a flat non-null " +
             "(lhs, rhs, lhs, rhs, ...) array")
-        MergeFold(args(0), flat.grouped(2).map(p => (p(0), p(1))).toSeq)
+        MergeFold(args(0), Seq(flat.grouped(2).map(p => (p(0), p(1))).toSeq))
       }),
     ("graft_merge_pair_deltas", new ExpressionInfo(
       classOf[MergePairDeltas].getName, "graft_merge_pair_deltas"),

@@ -23,17 +23,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * occurrences its batch actually merges; everything else cancels.
   *
   * This expression takes the CHECKPOINTED symbols plus the deferred
-  * layer stack (`layers`, applied in order — identical greedy fold
-  * semantics per layer as [[MergeFoldKernel]]) plus this round's batch
+  * layer stack (`layers`, applied in order) plus this round's batch
   * (`batch`), and in one evaluation:
-  *   1. folds the layers over raw `UTF8String` views — no intermediate
-  *      ArrayData boxing, no per-layer clones (views never escape the
-  *      row's evaluation);
-  *   2. folds the batch to get the post state;
+  *   1. folds the layers over raw `UTF8String` views with
+  *      [[MergeFoldKernel]]'s walk — the same walk every [[MergeFold]]
+  *      runs, no intermediate ArrayData boxing, no per-layer clones
+  *      (views never escape the row's evaluation);
+  *   2. walks the batch as one more layer, recording each output
+  *      symbol's input span, to get the post state;
   *   3. emits the row's pair-count deltas `runPairs(post) − runPairs(pre)`
   *      over both counting views (naive `ct`, greedy-mergeable `mct` —
   *      the [[RunPairs]] attribution walk-for-walk), or an empty array
   *      when the batch left the row untouched.
+  * Per row that is one hash probe per adjacent pair per layer (the
+  * [[MergeFold]] cost) plus hash-map work bounded by the merged
+  * neighbourhoods, not by the row.
   *
   * Returns array<struct<a, b, dct, dmct>> whose FIRST entry is always
   * the SENTINEL ("", "", pre_n, post_n) — the row's symbol counts
@@ -98,49 +102,20 @@ object MergePairDeltas {
     containsNull = false)
 }
 
-/** Per-task kernel behind [[MergePairDeltas]]: per layer an rhs-keyed
-  * rule map (the [[MergeFoldKernel]] probe order — next symbol first,
-  * then that rhs's lhs list), folds over plain `UTF8String[]` arrays of
-  * VIEWS (nothing escapes a row's evaluation except the delta keys,
-  * cloned on insertion). The pair accumulation mirrors
+/** Per-task kernel behind [[MergePairDeltas]]. Merge application is
+  * [[MergeFoldKernel]]'s walk — the one copy — over a stack of the
+  * deferred layers plus the batch as its LAST layer: the deferred layers
+  * fold in place over the scratch views, the batch walks once more with
+  * span tracking. Nothing escapes a row's evaluation except the delta
+  * keys, cloned on insertion. The pair accumulation mirrors
   * [[RunPairs.pairs]] walk-for-walk, so `Σ weighted deltas` equals
   * exactly what two full [[RunPairs]] scans would aggregate to, minus
   * everything that cancels. */
 class MergePairDeltaKernel(layers: Seq[Seq[(String, String)]],
     batch: Seq[(String, String)]) extends Serializable {
 
-  // serialization-friendly: rules as flat string arrays, maps built
-  // lazily per task
-  private val layerLhs: Array[Array[String]] =
-    layers.map(_.map(_._1).toArray).toArray
-  private val layerRhs: Array[Array[String]] =
-    layers.map(_.map(_._2).toArray).toArray
-  private val batchLhs: Array[String] = batch.map(_._1).toArray
-  private val batchRhs: Array[String] = batch.map(_._2).toArray
-
-  /** rhs → all lhs values that merge with it (see MergeFoldKernel). */
-  private def buildMap(lhs: Array[String], rhs: Array[String])
-      : java.util.HashMap[UTF8String, Array[UTF8String]] = {
-    val m = new java.util.HashMap[UTF8String, Array[UTF8String]](
-      rhs.length * 2)
-    var i = 0
-    while (i < rhs.length) {
-      val k = UTF8String.fromString(rhs(i))
-      val v = UTF8String.fromString(lhs(i))
-      val prev = m.get(k)
-      m.put(k, if (prev == null) Array(v) else prev :+ v)
-      i += 1
-    }
-    m
-  }
-
-  @transient private lazy val layerMaps
-      : Array[java.util.HashMap[UTF8String, Array[UTF8String]]] =
-    Array.tabulate(layerLhs.length)(i => buildMap(layerLhs(i), layerRhs(i)))
-
-  @transient private lazy val batchMap
-      : java.util.HashMap[UTF8String, Array[UTF8String]] =
-    buildMap(batchLhs, batchRhs)
+  private val merges = new MergeFoldKernel(layers :+ batch)
+  private val batchLayer = layers.length
 
   /** Pair key with a CACHED hash (UTF8String.hashCode re-walks the
     * bytes on every call — the accumulation path probes per adjacent
@@ -192,65 +167,6 @@ class MergePairDeltaKernel(layers: Seq[Seq[(String, String)]],
   @transient private lazy val scratch: ThreadLocal[Scratch] =
     ThreadLocal.withInitial(() => new Scratch)
 
-  /** The greedy left-to-right fold of [[MergeFoldKernel]], over a plain
-    * view array: returns the new length, writing results into `out`
-    * (sized >= n). No clones — concat results are fresh, views stay
-    * views. */
-  private def fold(in: Array[UTF8String], n: Int, out: Array[UTF8String],
-      lookup: java.util.HashMap[UTF8String, Array[UTF8String]]): Int = {
-    if (n == 0) return 0
-    var m = 0
-    var tail = in(0)
-    var i = 1
-    while (i < n) {
-      val x = in(i)
-      val cands = lookup.get(x)
-      var merged = false
-      if (cands != null) {
-        var j = 0
-        while (!merged && j < cands.length) {
-          if (cands(j).equals(tail)) merged = true
-          j += 1
-        }
-      }
-      if (merged) tail = UTF8String.concat(tail, x)
-      else { out(m) = tail; m += 1; tail = x }
-      i += 1
-    }
-    out(m) = tail
-    m + 1
-  }
-
-  /** [[fold]] plus span tracking: `spans(j)` records how many INPUT
-    * symbols output symbol `j` consumed (1 = untouched copy, >1 = a
-    * merge site) — the dirtiness map the windowed delta walk needs. */
-  private def foldSpans(in: Array[UTF8String], n: Int,
-      out: Array[UTF8String], spans: Array[Int],
-      lookup: java.util.HashMap[UTF8String, Array[UTF8String]]): Int = {
-    var m = 0
-    var tail = in(0)
-    var span = 1
-    var i = 1
-    while (i < n) {
-      val x = in(i)
-      val cands = lookup.get(x)
-      var merged = false
-      if (cands != null) {
-        var j = 0
-        while (!merged && j < cands.length) {
-          if (cands(j).equals(tail)) merged = true
-          j += 1
-        }
-      }
-      if (merged) { tail = UTF8String.concat(tail, x); span += 1 }
-      else { out(m) = tail; spans(m) = span; m += 1; tail = x; span = 1 }
-      i += 1
-    }
-    out(m) = tail
-    spans(m) = span
-    m + 1
-  }
-
   private def sentinelOnly(preN: Long, postN: Long): GenericArrayData =
     new GenericArrayData(Array[Any](InternalRow(
       UTF8String.EMPTY_UTF8, UTF8String.EMPTY_UTF8, preN, postN)))
@@ -261,34 +177,14 @@ class MergePairDeltaKernel(layers: Seq[Seq[(String, String)]],
     if (n0 < 2) return sentinelOnly(n0.toLong, n0.toLong)
     val sc = scratch.get()
     sc.ensure(n0)
-    var cur = sc.cur
-    var i = 0
-    while (i < n0) {
-      val s = syms.getUTF8String(i)
-      if (s == null) throw new IllegalArgumentException(
-        "graft_merge_pair_deltas: null symbol at index " + i +
-          " — symbol arrays must be null-free (substr/split-built)")
-      cur(i) = s
-      i += 1
-    }
-    var n = n0
-    if (layerLhs.length > 0) {
-      // deferred layers fold in place over a double buffer of views
-      var buf = sc.buf
-      var li = 0
-      val maps = layerMaps
-      while (li < maps.length) {
-        val m = fold(cur, n, buf, maps(li))
-        val t = cur; cur = buf; buf = t
-        n = m
-        li += 1
-      }
-    }
-    // the batch fold: pre state is (cur, n)
+    val cur = sc.cur
+    merges.views(syms, cur, "graft_merge_pair_deltas")
+    // the deferred layers fold in place; the pre state is (cur, n)
+    val n = merges.walkLayers(cur, sc.buf, n0, batchLayer)
     if (n < 2) return sentinelOnly(n.toLong, n.toLong)
     val post = sc.post
     val spans = sc.spans
-    val m = foldSpans(cur, n, post, spans, batchMap)
+    val m = merges.walk(batchLayer, cur, n, post, spans)
     if (m == n) // nothing merged: identical symbol stream, zero deltas
       return sentinelOnly(n.toLong, n.toLong)
 

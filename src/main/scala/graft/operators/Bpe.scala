@@ -29,15 +29,16 @@ import org.apache.spark.sql.functions._
   * (which '|'-joins its accumulator, hence the oracle-side no-'|'
   * corpus precondition below).
   *
-  * The merge-application tiers ([[applyMerge]], [[applyMergeSet]], hence
-  * [[merges]]/[[mergesBatched]]/[[encode]]/[[encodeBatches]]) run the
-  * native [[graft.expressions.MergeFold]] kernel since r18 — it compares
-  * WHOLE symbols (like [[encodeTable]]), so a literal '|' in a token no
-  * longer corrupts the engine side (BpeSpec pins kernel/encodeTable
-  * agreement on a constructed pipe word). The no-'|' corpus PRECONDITION
-  * survives only as an ORACLE-REPLAY contract: the DuckDB fold oracles
-  * still encode the accumulator as a '|'-joined string, so a pipe-bearing
-  * corpus would diverge engine-vs-oracle — asserted loudly gate-side.
+  * Every merge application — induction rounds, the deferred-fold stack
+  * of [[PairLedger]] and all four encoders — is ONE
+  * [[graft.expressions.MergeFold]] node ([[applyMerges]]) holding a
+  * stack of rule layers, applied in order by one native greedy walk. It
+  * compares WHOLE symbols, so a literal '|' in a token is just a symbol
+  * on the engine side (BpeSpec pins it on a constructed pipe word). The
+  * no-'|' corpus PRECONDITION survives only as an ORACLE-REPLAY
+  * contract: the DuckDB fold oracles still encode the accumulator as a
+  * '|'-joined string, so a pipe-bearing corpus would diverge
+  * engine-vs-oracle — asserted loudly gate-side.
   *
   * Durability: generations roll forward via `localCheckpoint` (blocks in
   * executor storage, NOT on reliable storage) — an executor loss during
@@ -60,37 +61,27 @@ object Bpe {
         i => struct(element_at(syms, i).as("a"),
           element_at(syms, i + 1).as("b"))))
 
-  /** Greedy left-to-right application of a SET of merge rules in one
-    * pass. Exact equivalent of applying the rules one-by-one when
-    * the rules are pairwise TRIPLE-DISJOINT ({lhs, rhs, lhs+rhs} sets
-    * share no symbol, the [[mergesBatched]] selection invariant): a
-    * merge's output symbol is then never an operand of another rule, so
-    * merges cannot cascade within the batch, and each adjacent pair in
-    * the pre-batch stream merges iff its rule is in the set — the same
-    * decision the per-rule sequential scans make.
-    *
-    * Since r18 this is the native [[graft.expressions.MergeFold]]
-    * kernel (one JVM walk per row, rules hashed once per task), not the
-    * Catalyst `aggregate` HOF fold: HOFs evaluate interpreted per
-    * element, and the fold's `batchSize` OR-terms of
-    * `endswith(concat("|", acc), …)` copied the whole accumulated
-    * string per element — O(batch × |unit|²) character traffic per row
-    * against the kernel's one hash probe per adjacent pair (measured
-    * 6.5× on text_bpe_merges_xl's 64-rule batches over 128-char units).
-    * The kernel compares whole symbols, so the '|'-in-symbol corruption
-    * of the string fold is gone; the no-'|' PRECONDITION remains for
-    * ORACLE REPLAY parity only (the DuckDB fold oracles still
-    * '|'-encode — BpeSpec pins the kernel/encodeTable agreement). */
-  private[graft] def applyMergeSet(syms: Column,
-      rules: Seq[(String, String)]): Column =
-    if (rules.isEmpty) syms
-    else call_function("graft_merge_fold", syms,
-      array(rules.flatMap { case (l, r) => Seq(lit(l), lit(r)) }: _*))
-
-  /** Greedy left-to-right application of one merge rule to a symbol
-    * array (the singleton [[applyMergeSet]]). */
-  private[graft] def applyMerge(syms: Column, lhs: String, rhs: String): Column =
-    applyMergeSet(syms, Seq((lhs, rhs)))
+  /** Apply a stack of merge-rule layers to a symbol array: layers in
+    * order, each one greedy left-to-right pass, all inside ONE
+    * [[graft.expressions.MergeFold]] node — one hash probe per adjacent
+    * pair per layer, whatever the depth of the stack. A one-rule layer is
+    * the sequential per-rule scan; a layer of pairwise TRIPLE-DISJOINT
+    * rules ({lhs, rhs, lhs+rhs} sets share no symbol, the
+    * [[mergesBatched]] selection invariant) equals applying its rules
+    * one by one in any order: a merge's output symbol is then never an
+    * operand of another rule of the layer, so merges cannot cascade
+    * within it. Empty layers are dropped; no layers at all is the
+    * identity. The node is built directly, with the rules as a field
+    * (not literal children), so a stack of thousands of layers plans
+    * like one. */
+  private[graft] def applyMerges(syms: Column,
+      layers: Seq[Seq[(String, String)]]): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    val stack = layers.filter(_.nonEmpty)
+    if (stack.isEmpty) syms
+    else GraftColumnBridge.column(graft.expressions.MergeFold(
+      GraftColumnBridge.expression(syms), stack))
+  }
 
   /** Learn `rounds` BPE merges over the corpus. Returns one row per
     * round: (round, lhs, rhs, ct, syms_after) where `ct` is the
@@ -101,7 +92,7 @@ object Bpe {
     * Eager (like trainCentroids): each round materializes the argmax
     * pair — one driver row per round. Each generation is
     * `localCheckpoint`ed (vocabulary-sized, eager): rolling the vocab
-    * forward under plain `persist` keeps the whole applyMerge lineage in
+    * forward under plain `persist` keeps the whole merge lineage in
     * the logical plan, and re-canonicalizing that growing tree for cache
     * substitution every round made induction QUADRATIC in rounds
     * (measured at sf0.1: 8 rounds 4 s, 16 rounds 55 s); the checkpoint
@@ -114,9 +105,7 @@ object Bpe {
     var vocab = documents
       .select(explode(TextFns.tokensWs(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("wct"))
-      .select(col("word"), col("wct"),
-        transform(sequence(lit(1), length(col("word"))),
-          i => col("word").substr(i, lit(1))).as("syms"))
+      .select(col("word"), col("wct"), codePoints(col("word")).as("syms"))
       .localCheckpoint(true)
 
     val ledger = Seq.newBuilder[(Long, String, String, Long, Long)]
@@ -133,7 +122,7 @@ object Bpe {
         val prev = vocab
         vocab = vocab
           .select(col("word"), col("wct"),
-            applyMerge(col("syms"), lhs, rhs).as("syms"))
+            applyMerges(col("syms"), Seq(Seq((lhs, rhs)))).as("syms"))
           .localCheckpoint(true)
         freeCheckpoint(prev) // next generation is materialized; hold 2, not O(rounds)
         val symsAfter = vocab
@@ -160,7 +149,7 @@ object Bpe {
     *      Disjointness makes the snapshot counts exact at application
     *      time (merging one selected pair can neither create nor
     *      destroy occurrences of another) and merges non-cascading, so
-    *      the batch applies in ONE fold pass ([[applyMergeSet]]) in any
+    *      the batch applies as ONE layer ([[applyMerges]]) in any
     *      order. SELF-PAIRS (lhs == rhs) select with RUN-AWARE
     *      attribution (r16): their naive snapshot count includes
     *      overlapping occurrences while the greedy fold merges exactly
@@ -227,156 +216,42 @@ object Bpe {
 
   /** Segment the corpus with an ordered merge list (the output of
     * [[merges]]): every document becomes its BPE symbol sequence, words
-    * in document order, symbols in word order.
+    * in document order, symbols in word order. Rules apply in learned
+    * order, one layer each — including the order-sensitive corner where
+    * a later rule materializes a symbol an earlier rule wanted (the
+    * earlier rule stays un-applied).
     *
-    * Scale shape: the merge chain applies once per DISTINCT word (a
-    * vocabulary-sized projection, each merge one per-row fold — no
-    * shuffle between rounds), then the segmented vocab joins back to
-    * the corpus words (AQE broadcasts it when it fits; hash join
-    * otherwise). Reassembly is a per-doc sort+flatten of that doc's own
-    * words — row-bounded, never wider than the document itself. */
+    * Scale shape (shared by all four encoders, see [[encodeLayers]]):
+    * the layered merge walk applies once per DISTINCT word (a
+    * vocabulary-sized projection, one [[graft.expressions.MergeFold]]
+    * node whatever the merge count — no shuffle between rules), then the
+    * segmented vocab joins back to the corpus words (AQE broadcasts it
+    * when it fits; hash join otherwise). Reassembly is a per-doc
+    * sort+flatten of that doc's own words — row-bounded, never wider than
+    * the document itself. Per distinct word the cost is one hash probe
+    * per adjacent symbol pair per rule. */
   def encode(documents: DataFrame, mergeList: Seq[(String, String)]): DataFrame =
-    encodeWith(documents, chars =>
-      mergeList.foldLeft(chars) { case (c, (l, r)) => applyMerge(c, l, r) })
+    encodeLayers(documents, mergeList.map(Seq(_)), codePoints)
 
   /** Segment the corpus with BATCHED merges (the output of
     * [[mergesBatched]], grouped by its `batch` column, batches in order,
     * merges within a batch in learned order): each batch applies as ONE
-    * fold pass ([[applyMergeSet]] — exact under the selection's
-    * triple-disjointness), so a 32-merge 4-batch chain is 4 nested
-    * folds, not 32. Same join-back/reassembly shape as [[encode]]. */
+    * layer — exact under the selection's triple-disjointness, so the
+    * result equals [[encode]] over the flattened list at one walk per
+    * batch instead of one per merge. */
   def encodeBatches(documents: DataFrame,
       batchedMerges: Seq[Seq[(String, String)]]): DataFrame =
-    encodeWith(documents, chars =>
-      batchedMerges.foldLeft(chars)((c, batch) => applyMergeSet(c, batch)))
-
-  private def encodeWith(documents: DataFrame,
-      foldSyms: Column => Column): DataFrame = {
-    val words = documents.select(col("doc_id"),
-      posexplode(TextFns.tokensWs(col("text"))))
-      .toDF("doc_id", "pos", "word")
-    val chars = transform(sequence(lit(1), length(col("word"))),
-      i => col("word").substr(i, lit(1)))
-    val vocab = words.select(col("word")).distinct()
-      .select(col("word"), foldSyms(chars).as("syms"))
-    reassemble(documents, words, vocab)
-  }
-
-  /** Join the segmented vocabulary back to the corpus words and
-    * reassemble per-doc symbol sequences (see [[encode]] scale shape). */
-  private def reassemble(documents: DataFrame, words: DataFrame,
-      vocab: DataFrame): DataFrame = {
-    val agg = words.join(vocab, "word")
-      .groupBy(col("doc_id"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("pos"), col("syms")))),
-        s => s.getField("syms"))).as("bpe"))
-    documents.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("bpe"), array().cast("array<string>")).as("bpe"))
-  }
+    encodeLayers(documents, batchedMerges, codePoints)
 
   /** Segment the corpus with a LARGE ordered merge table — the
-    * 10³–10⁵-merge encode tier real tokenizers need, where
-    * [[encode]]/[[encodeBatches]] can't go: each nested fold level
-    * re-references its input expression several times, so the expression
-    * TREE grows ~4× per merge (resp. per batch) — exponential, with a
-    * practical analyzer ceiling around 6 levels (measured: 8 nested
-    * applyMerge folds never leave analysis). This tier
-    * keeps the identical distributed shape (distinct-word projection →
-    * segment → join back → per-doc reassembly) but segments each word in
-    * ONE `mapPartitions` JVM pass with the rule table broadcast once per
-    * executor.
-    *
-    * Semantics are EXACTLY [[encode]]'s: rules apply in learned order,
-    * each as a greedy left-to-right non-overlapping scan — including the
-    * order-sensitive corner where a later rule materializes a symbol an
-    * earlier rule wanted (the earlier rule stays un-applied, same as the
-    * fold chain). A per-word symbol-set prefilter skips rules whose
-    * operands aren't both present, so a table of M rules costs ~O(M)
-    * hash probes per distinct word plus O(word) per APPLIED rule —
-    * independent of Catalyst plan depth, flat per merge as M scales. */
+    * 10³–10⁵-merge encode tier real tokenizers need. Exactly [[encode]]:
+    * rules apply in learned order, one layer each, in one
+    * [[graft.expressions.MergeFold]] node, so plan size is constant in
+    * the merge count and a table of M rules costs O(M) hash probes per
+    * adjacent pair of each distinct word. */
   def encodeTable(documents: DataFrame,
-      mergeList: Seq[(String, String)]): DataFrame = {
-    val spark = documents.sparkSession
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val rulesB = spark.sparkContext.broadcast(mergeList.toArray)
-    val words = documents.select(col("doc_id"),
-      posexplode(TextFns.tokensWs(col("text"))))
-      .toDF("doc_id", "pos", "word")
-    val outSchema = StructType(Seq(
-      StructField("word", StringType),
-      StructField("syms", ArrayType(StringType, containsNull = false))))
-    val vocab = words.select(col("word")).distinct()
-      .mapPartitions { it =>
-        val rules = rulesB.value
-        it.map { r =>
-          val w = r.getString(0)
-          var syms = Array.tabulate(w.length)(i => w.substring(i, i + 1))
-          if (syms.length >= 2) {
-            val present = scala.collection.mutable.HashSet.empty[String]
-            syms.foreach(present += _)
-            var k = 0
-            while (k < rules.length && syms.length >= 2) {
-              val (lhs, rhs) = rules(k)
-              if (present.contains(lhs) && present.contains(rhs)) {
-                // greedy left-to-right non-overlapping scan for THIS rule
-                var applied = false
-                val out = Array.newBuilder[String]
-                var j = 0
-                while (j < syms.length) {
-                  if (j < syms.length - 1 && syms(j) == lhs &&
-                      syms(j + 1) == rhs) {
-                    out += lhs + rhs; applied = true; j += 2
-                  } else { out += syms(j); j += 1 }
-                }
-                if (applied) {
-                  syms = out.result()
-                  present.clear(); syms.foreach(present += _)
-                }
-              }
-              k += 1
-            }
-          }
-          Row(w, syms.toSeq)
-        }
-      }(Encoders.row(outSchema))
-    reassemble(documents, words, vocab.toDF())
-  }
-
-  /** The greedy sequential rule chain of [[encodeTable]], factored for
-    * the fallback tier: rules in learned order, each a left-to-right
-    * non-overlapping scan, with the symbol-set prefilter. */
-  private def applyRuleTable(init: Array[String],
-      rules: Array[(String, String)]): Array[String] = {
-    var syms = init
-    if (syms.length >= 2) {
-      val present = scala.collection.mutable.HashSet.empty[String]
-      syms.foreach(present += _)
-      var k = 0
-      while (k < rules.length && syms.length >= 2) {
-        val (lhs, rhs) = rules(k)
-        if (present.contains(lhs) && present.contains(rhs)) {
-          var applied = false
-          val out = Array.newBuilder[String]
-          var j = 0
-          while (j < syms.length) {
-            if (j < syms.length - 1 && syms(j) == lhs &&
-                syms(j + 1) == rhs) {
-              out += lhs + rhs; applied = true; j += 2
-            } else { out += syms(j); j += 1 }
-          }
-          if (applied) {
-            syms = out.result()
-            present.clear(); syms.foreach(present += _)
-          }
-        }
-        k += 1
-      }
-    }
-    syms
-  }
+      mergeList: Seq[(String, String)]): DataFrame =
+    encode(documents, mergeList)
 
   /** [[encodeTable]] with BYTE-LEVEL OOV FALLBACK and SPECIAL TOKENS —
     * the two pieces a real tokenizer needs around the merge table
@@ -396,49 +271,46 @@ object Bpe {
     *     plane safe — a surrogate pair is ONE code point, four UTF-8
     *     bytes).
     *
-    * Same distributed shape as [[encodeTable]]: distinct-word projection
-    * → one mapPartitions pass with the rule table broadcast → join back
-    * → per-doc reassembly. */
+    * Only the symbol initialisation is its own; the merge walk, join back
+    * and reassembly are [[encodeTable]]'s. */
   def encodeTableBytes(documents: DataFrame,
       mergeList: Seq[(String, String)], alphabet: Set[String],
       specials: Set[String] = Set.empty): DataFrame = {
-    val spark = documents.sparkSession
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val rulesB = spark.sparkContext.broadcast(mergeList.toArray)
-    val alphaB = spark.sparkContext.broadcast(alphabet)
-    val specialB = spark.sparkContext.broadcast(specials)
+    // one code point's UTF-8 bytes as <0xAB> tokens (hex() of a string
+    // is the uppercase hex of its UTF-8 bytes)
+    def byteTokens(cp: Column): Column =
+      transform(sequence(lit(1), octet_length(cp)),
+        j => concat(lit("<0x"), hex(cp).substr(j * 2 - 1, lit(2)), lit(">")))
+    encodeLayers(documents, mergeList.map(Seq(_)), word =>
+      when(word.isin(specials.toSeq: _*), array(word)).otherwise(flatten(
+        transform(codePoints(word), cp =>
+          when(cp.isin(alphabet.toSeq: _*), array(cp)).otherwise(byteTokens(cp))))))
+  }
+
+  /** A word's initial symbols, shared by induction and encoding: its
+    * code points (astral-plane safe — Spark's `length`/`substr` count
+    * code points, not UTF-16 units). */
+  private[graft] def codePoints(word: Column): Column =
+    transform(sequence(lit(1), length(word)), i => word.substr(i, lit(1)))
+
+  /** The one encode path: distinct words → initial `symbols` → the
+    * layered merge walk ([[applyMerges]]) → join back to the corpus
+    * words → per-doc reassembly in word order. */
+  private def encodeLayers(documents: DataFrame,
+      layers: Seq[Seq[(String, String)]],
+      symbols: Column => Column): DataFrame = {
     val words = documents.select(col("doc_id"),
       posexplode(TextFns.tokensWs(col("text"))))
       .toDF("doc_id", "pos", "word")
-    val outSchema = StructType(Seq(
-      StructField("word", StringType),
-      StructField("syms", ArrayType(StringType, containsNull = false))))
     val vocab = words.select(col("word")).distinct()
-      .mapPartitions { it =>
-        val rules = rulesB.value
-        val alpha = alphaB.value
-        val special = specialB.value
-        it.map { r =>
-          val w = r.getString(0)
-          val syms =
-            if (special.contains(w)) Array(w)
-            else {
-              val init = Array.newBuilder[String]
-              var i = 0
-              while (i < w.length) {
-                val cp = w.codePointAt(i)
-                val s = new String(Character.toChars(cp))
-                if (alpha.contains(s)) init += s
-                else s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                  .foreach(b => init += f"<0x${b & 0xff}%02X>")
-                i += Character.charCount(cp)
-              }
-              applyRuleTable(init.result(), rules)
-            }
-          Row(w, syms.toSeq)
-        }
-      }(Encoders.row(outSchema))
-    reassemble(documents, words, vocab.toDF())
+      .select(col("word"), applyMerges(symbols(col("word")), layers).as("syms"))
+    val agg = words.join(vocab, "word")
+      .groupBy(col("doc_id"))
+      .agg(flatten(transform(
+        array_sort(collect_list(struct(col("pos"), col("syms")))),
+        s => s.getField("syms"))).as("bpe"))
+    documents.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("bpe"), array().cast("array<string>")).as("bpe"))
   }
 }

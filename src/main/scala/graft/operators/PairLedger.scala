@@ -177,12 +177,12 @@ private[graft] object PairLedger {
     * corpus over budget takes its candidates from a per-round rescan. */
   val DefaultBudget: Int = 4 * 1024 * 1024
 
-  /** Deferred-fold plan-depth bound: how many rounds' merge layers may
-    * stack over the last checkpointed vocabulary before materializing.
-    * Each layer is one [[graft.expressions.MergeFold]] call (cheap to
-    * re-apply, O(symbols) hash probes), but analyzer/optimizer passes
-    * walk the whole literal-bearing tree every round — 8 keeps that
-    * walk trivial while amortizing the materialization job 8×. */
+  /** Deferred-fold bound: how many rounds' merge layers may stack over
+    * the last checkpointed vocabulary before materializing. The pending
+    * layers ride ONE [[graft.expressions.MergeFold]] node (one hash
+    * probe per adjacent pair per layer, re-applied by every scan until
+    * the next flush) — 8 keeps that re-application small while
+    * amortizing the materialization job 8×. */
   private val FoldCheckpointEvery = 8
 
   /** Spark's string ordering is BINARY over UTF-8 bytes; JVM
@@ -425,9 +425,7 @@ private[graft] object PairLedger {
     // `word` is consumed here and never read again (the ledgers carry
     // only pairs and counts) — carrying it through every per-round
     // checkpoint generation would be dead weight in block storage
-    .select(col("wct"),
-      transform(sequence(lit(1), length(col("word"))),
-        i => col("word").substr(i, lit(1))).as("syms"))
+    .select(col("wct"), Bpe.codePoints(col("word")).as("syms"))
     // constant-depth plan per round (see Bpe.merges); LAZY: the init
     // scan's full-corpus aggregation is the materializing action, so
     // the checkpoint write rides that job instead of owning one
@@ -457,7 +455,7 @@ private[graft] object PairLedger {
     * final recount measures the total only. Same semantics, same ledger.
     *
     * DEFERRED-FOLD (r18): a round's merge application rides the NEXT
-    * round's scan as extra (cheap, native) MergeFold layers over the
+    * round's scan as extra layers of one native MergeFold over the
     * last checkpointed generation instead of paying a materialization
     * job per round; every [[FoldCheckpointEvery]] rounds the layers
     * materialize once (bounding plan depth; the r13 quadratic-lineage
@@ -494,8 +492,7 @@ private[graft] object PairLedger {
     var idx = 0L
     val merges = Vector.newBuilder[Merge]
     var pending = Vector.empty[Seq[(String, String)]]
-    def foldedSyms: Column =
-      pending.foldLeft(col("syms"))((c, batch) => Bpe.applyMergeSet(c, batch))
+    def foldedSyms: Column = Bpe.applyMerges(col("syms"), pending)
     // LAZY flush (r19): the fold of the accumulated layers materializes
     // as part of the NEXT scan's job (every scan — delta scan, rescan,
     // final recount — aggregates over all partitions, so the marked RDD

@@ -117,9 +117,7 @@ object WordPiece {
     var vocab = units
       .filter(length(col("unit")) > 0)
       .groupBy(col("unit").as("word")).agg(count(lit(1)).as("wct"))
-      .select(col("word"), col("wct"),
-        transform(sequence(lit(1), length(col("word"))),
-          i => col("word").substr(i, lit(1))).as("syms"))
+      .select(col("word"), col("wct"), Bpe.codePoints(col("word")).as("syms"))
       .localCheckpoint(true)
     val ledger = Seq.newBuilder[(Long, String, String, Long, Double, Long)]
     for (r <- 1 to rounds) {
@@ -148,7 +146,7 @@ object WordPiece {
         val prev = vocab
         vocab = vocab
           .select(col("word"), col("wct"),
-            Bpe.applyMerge(col("syms"), lhs, rhs).as("syms"))
+            Bpe.applyMerges(col("syms"), Seq(Seq((lhs, rhs)))).as("syms"))
           .localCheckpoint(true)
         CheckpointUtil.free(prev)
         val symsAfter = vocab
@@ -170,7 +168,7 @@ object WordPiece {
     * latency dominates. Per round, the top-`window` candidates by
     * (`ct / (ct_a · ct_b)` DESC, a, b) are greedily selected whose
     * TRIPLE sets {lhs, rhs, lhs+rhs} are pairwise disjoint, up to
-    * `batchSize`, and applied in ONE fold pass ([[Bpe.applyMergeSet]]).
+    * `batchSize`, and applied as ONE layer ([[Bpe.applyMerges]]).
     * Disjointness keeps the snapshot scores exact at application time:
     * no selected merge changes another's pair count (occurrences are
     * disjoint) OR its denominator (no shared symbol, so ct_a/ct_b of the

@@ -243,23 +243,32 @@ object Sources {
     val stage = new java.io.File(stageDir.getOrElse(
       s"$shmRoot/graft-envchunks-${System.nanoTime()}"))
     stage.mkdirs()
-    val base = (System.currentTimeMillis() / 1000L) * 1000L
-    chunks.zipWithIndex.foreach { case (df, i) =>
-      val tmp = new java.io.File(stage, s"b$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-      val part = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.endsWith(".parquet")).headOption.getOrElse(
-          throw new IllegalStateException(s"staged chunk $i produced no file"))
-      val dest = new java.io.File(stage, f"chunk-$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      Option(tmp.listFiles()).foreach(_.foreach(_.delete())); tmp.delete()
-      dest.setLastModified(base + i * 2000L)
-      ()
-    }
+    writeChunks(stage, chunks, "staged chunk")
     spark.readStream
       .schema(chunks.head.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stage.getPath)
+  }
+
+  /** Write each frame as ONE parquet file `dir/chunk-NN.parquet`
+    * (`coalesce(1)`, part file moved out of its temp dir, temp dir
+    * dropped), mtime pinned at `base + i·2 s`: the file source processes
+    * files in modification-time order, so chunk i is exactly
+    * micro-batch i. `what` names a chunk in the no-file error. */
+  private def writeChunks(dir: java.io.File, frames: Seq[DataFrame],
+      what: String): Unit = {
+    val base = (System.currentTimeMillis() / 1000L) * 1000L
+    frames.zipWithIndex.foreach { case (df, i) =>
+      val tmp = new java.io.File(dir, s"tmp-$i")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+      val part = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+        .find(_.getName.endsWith(".parquet")).getOrElse(
+          throw new IllegalStateException(s"$what $i produced no file"))
+      val dest = new java.io.File(dir, f"chunk-$i%02d.parquet")
+      java.nio.file.Files.move(part.toPath, dest.toPath)
+      rmTree(tmp.getPath)
+      dest.setLastModified(base + i * 2000L)
+    }
   }
 
   private def splitStream(spark: SparkSession, dir: String, parts: Int,
@@ -294,10 +303,8 @@ object Sources {
     val src = new java.io.File(dir, "events.parquet")
     val fp = s"${src.length()}-${src.lastModified()}"
     val out = new java.io.File(s"$shmRoot/graft-events-split-$key-$parts$mode-$fp")
-    def chunkFiles(d: java.io.File): Array[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-    if (out.isDirectory && chunkFiles(out).length == parts)
+    if (out.isDirectory && Option(out.listFiles()).getOrElse(Array.empty)
+        .count(_.getName.endsWith(".parquet")) == parts)
       return out.getPath
     // sweep stale-fingerprint siblings: each driver-side regeneration
     // changes fp, and without this the tmpfs would keep a full events
@@ -336,21 +343,7 @@ object Sources {
           tsUs > lo && tsUs <= hi }.toSeq
       } else
         (0 until parts).map(i => pmod(col("event_id"), lit(parts.toLong)) === i)
-    val base = (System.currentTimeMillis() / 1000L) * 1000L
-    chunkPreds.zipWithIndex.foreach { case (pred, i) =>
-      val tmp = new java.io.File(build, s"c$i")
-      raw.filter(pred)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-      val part = chunkFiles(tmp).headOption.getOrElse(
-        throw new IllegalStateException(s"split chunk $i produced no file " +
-          "— empty chunk predicate?"))
-      val dest = new java.io.File(build, f"chunk-$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      rmTree(tmp.getPath)
-      // file-source processing order = modification time; pin it
-      dest.setLastModified(base + i * 2000L)
-      ()
-    }
+    writeChunks(build, chunkPreds.map(p => raw.filter(p)), "split chunk")
     if (!build.renameTo(out))
       throw new IllegalStateException(s"could not move $build to $out")
     out.getPath

@@ -3,9 +3,38 @@ package graft
 import graft.operators.Bpe
 import org.apache.spark.sql.functions._
 
-/** BPE merge induction (Bpe.merges / applyMerge). */
+/** BPE merge induction and encoding (Bpe.merges / applyMerges / encode*). */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Per-rule reference: rules in order, each one greedy left-to-right
+    * non-overlapping scan over the whole symbol array. */
+  private def refWalk(syms: Seq[String],
+      rules: Seq[(String, String)]): Seq[String] =
+    rules.foldLeft(syms) { case (s, (l, r)) =>
+      val out = Seq.newBuilder[String]
+      var j = 0
+      while (j < s.length) {
+        if (j + 1 < s.length && s(j) == l && s(j + 1) == r) {
+          out += l + r; j += 2
+        } else { out += s(j); j += 1 }
+      }
+      out.result()
+    }
+
+  /** [[refWalk]] over whitespace words (lower-cased, split by code
+    * point), concatenated per document in word order. */
+  private def refEncode(docs: Seq[(Long, String)],
+      rules: Seq[(String, String)]): Seq[(Long, Seq[String])] =
+    docs.map { case (id, text) =>
+      id -> text.trim.toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty)
+        .flatMap(w => refWalk(
+          w.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp))),
+          rules))
+    }.sortBy(_._1)
+
+  private def encoded(df: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[String])] =
+    df.orderBy("doc_id").as[(Long, Seq[String])].collect().toSeq
 
   test("applyMerge: greedy left-to-right, overlapping pairs don't chain") {
     val df = Seq(
@@ -15,7 +44,7 @@ class BpeSpec extends SparkSpec {
       Seq("a", "b"),                 // no (a,a) pair: unchanged
       Seq("x")                       // singleton: unchanged
     ).toDF("syms")
-    val r = df.select(Bpe.applyMerge(col("syms"), "a", "a").as("m"))
+    val r = df.select(Bpe.applyMerges(col("syms"), Seq(Seq(("a", "a")))).as("m"))
       .as[Seq[String]].collect().toSeq
     assert(r === Seq(
       Seq("aa", "a"), Seq("aa", "aa"), Seq("b", "aa"),
@@ -25,7 +54,7 @@ class BpeSpec extends SparkSpec {
   test("applyMerge: boundary-exact — a symbol merely ENDING in lhs " +
     "does not match") {
     val df = Seq(Seq("xa", "b"), Seq("a", "b")).toDF("syms")
-    val r = df.select(Bpe.applyMerge(col("syms"), "a", "b").as("m"))
+    val r = df.select(Bpe.applyMerges(col("syms"), Seq(Seq(("a", "b")))).as("m"))
       .as[Seq[String]].collect().toSeq
     assert(r === Seq(Seq("xa", "b"), Seq("ab")))
   }
@@ -74,8 +103,7 @@ class BpeSpec extends SparkSpec {
     assert(bat.map(_._2) === (1L to 6L))  // one merge per batch
   }
 
-  test("applyMergeSet on triple-disjoint rules equals sequential " +
-    "per-rule application, in any rule order") {
+  test("applyMerges: a triple-disjoint layer equals per-rule layers in any order") {
     val rules = Seq(("a", "b"), ("c", "d"), ("x", "y"))
     val df = Seq(
       Seq("a", "b", "c", "d", "a", "b"),
@@ -83,14 +111,14 @@ class BpeSpec extends SparkSpec {
       Seq("x", "y", "x", "y", "x"),     // greedy overlap within one rule
       Seq("q"), Seq.empty[String]
     ).toDF("syms")
-    val setWise = df.select(Bpe.applyMergeSet(col("syms"), rules).as("m"))
+    val setWise = df.select(Bpe.applyMerges(col("syms"), Seq(rules)).as("m"))
       .as[Seq[String]].collect().toSeq
-    val seqWise = df.select(rules.foldLeft(col("syms")) {
-        case (c, (l, r)) => Bpe.applyMerge(c, l, r) }.as("m"))
+    val seqWise = df.select(
+        Bpe.applyMerges(col("syms"), rules.map(Seq(_))).as("m"))
       .as[Seq[String]].collect().toSeq
     assert(setWise === seqWise)
     val reversed = df.select(
-        Bpe.applyMergeSet(col("syms"), rules.reverse).as("m"))
+        Bpe.applyMerges(col("syms"), Seq(rules.reverse)).as("m"))
       .as[Seq[String]].collect().toSeq
     assert(setWise === reversed)
     assert(setWise.head === Seq("ab", "cd", "ab"))
@@ -119,12 +147,11 @@ class BpeSpec extends SparkSpec {
     val docs = Seq((1L, "abab ab"), (2L, ""), (3L, "ba"), (4L, "x abab"))
       .toDF("doc_id", "text")
     val rules = Seq(("a", "b"), ("ab", "ab"))
-    val t = Bpe.encodeTable(docs, rules).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    val e = Bpe.encode(docs, rules).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    assert(t === e)
-    assert(t.head._2 === Seq("abab", "ab"))
+    // "abab": (a,b) -> [ab, ab], then (ab,ab) cascades -> [abab]
+    val expected = Seq((1L, Seq("abab", "ab")), (2L, Seq.empty[String]),
+      (3L, Seq("b", "a")), (4L, Seq("x", "abab")))
+    assert(encoded(Bpe.encodeTable(docs, rules)) === expected)
+    assert(encoded(Bpe.encode(docs, rules)) === expected)
   }
 
   test("encodeTable: rule order is sequential — a later rule cannot " +
@@ -139,7 +166,7 @@ class BpeSpec extends SparkSpec {
     val e = Bpe.encode(docs, rules)
       .as[(Long, Seq[String])].head()._2
     assert(t === Seq("ab", "c"))
-    assert(t === e)
+    assert(e === Seq("ab", "c"))
     // reversed order DOES cascade: (a,b) -> [ab, c], then (ab,c) -> [abc]
     assert(Bpe.encodeTable(docs, rules.reverse)
       .as[(Long, Seq[String])].head()._2 === Seq("abc"))
@@ -147,59 +174,102 @@ class BpeSpec extends SparkSpec {
 
   test("encodeTable equals encode under LEARNED merges on a real corpus " +
     "slice; partition-invariant") {
-    val docs = Seq(
+    val corpus = Seq(
       (1L, "spark spark shark park lower flower"),
       (2L, "spar spars park hark tower power"),
-      (3L, "lower flower tower power spark")).toDF("doc_id", "text")
-    // encode's nested-fold tree grows ~4x PER MERGE (each applyMerge
-    // level references syms several times), so the fold tier's practical
-    // ceiling is a handful of merges — 5 here; the large-table case below
-    // compares against encodeBatches, whose depth is per-BATCH
+      (3L, "lower flower tower power spark"))
+    val docs = corpus.toDF("doc_id", "text")
     val learned = Bpe.merges(docs, rounds = 5).orderBy("round")
       .select(col("lhs"), col("rhs"))
       .as[(String, String)].collect().toSeq
-    val e = Bpe.encode(docs, learned).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    val t = Bpe.encodeTable(docs, learned).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    assert(t === e)
-    val t7 = Bpe.encodeTable(docs.repartition(7), learned).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    assert(t7 === e)
+    val ref = refEncode(corpus, learned)
+    assert(encoded(Bpe.encode(docs, learned)) === ref)
+    assert(encoded(Bpe.encodeTable(docs, learned)) === ref)
+    assert(encoded(Bpe.encodeTable(docs.repartition(7), learned)) === ref)
   }
 
   test("encodeTable equals encodeBatches on a LARGE learned table (the " +
     "merge-count regime the fold tiers cannot reach)") {
-    val docs = Seq(
+    val corpus = Seq(
       (1L, "international internationalization nation nationalize"),
       (2L, "internal internet interstellar station relation"),
       (3L, "the then there these those than that this"),
       (4L, "rational rationale ration national notion motion"))
-      .toDF("doc_id", "text")
+    val docs = corpus.toDF("doc_id", "text")
     val led = Bpe.mergesBatched(docs, batches = 4, batchSize = 8,
       window = 48).orderBy("merge_idx")
       .as[(Long, Long, String, String, Long, Long)].collect().toSeq
     assert(led.size >= 20, s"fixture learned only ${led.size} merges")
     val batches = led.groupBy(_._2).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._1).map(r => (r._3, r._4)))
-    val b = Bpe.encodeBatches(docs, batches).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    val t = Bpe.encodeTable(docs, batches.flatten).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    assert(t === b)
+    // one layer per batch == the flat list rule by rule
+    val ref = refEncode(corpus, batches.flatten)
+    assert(encoded(Bpe.encodeBatches(docs, batches)) === ref)
+    assert(encoded(Bpe.encodeTable(docs, batches.flatten)) === ref)
   }
 
   test("encodeBatches equals encode on the flat merge list when batches " +
     "are triple-disjoint") {
     val docs = Seq((1L, "abab cdcd ab"), (2L, ""), (3L, "dcba")).toDF("doc_id", "text")
     val batches = Seq(Seq(("a", "b"), ("c", "d")), Seq(("ab", "ab")))
-    val flat = batches.flatten
-    val a = Bpe.encodeBatches(docs, batches).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    val b = Bpe.encode(docs, flat).orderBy("doc_id")
-      .as[(Long, Seq[String])].collect().toSeq
-    assert(a === b)
-    assert(a.head._2 === Seq("abab", "cd", "cd", "ab"))
+    val expected = Seq((1L, Seq("abab", "cd", "cd", "ab")),
+      (2L, Seq.empty[String]), (3L, Seq("d", "c", "b", "a")))
+    assert(encoded(Bpe.encodeBatches(docs, batches)) === expected)
+    assert(encoded(Bpe.encode(docs, batches.flatten)) === expected)
+  }
+
+  test("every encoder splits words by code point: an astral symbol " +
+    "survives whole and merges like any other") {
+    // U+1F600 is one code point but two UTF-16 units
+    val emoji = new String(Character.toChars(0x1F600))
+    val text = s"a${emoji}b a$emoji"
+    val docs = Seq((1L, text)).toDF("doc_id", "text")
+    val rules = Seq(("a", emoji))
+    val expected = Seq((1L, Seq(s"a$emoji", "b", s"a$emoji")))
+    val outs = Seq(
+      "encode" -> Bpe.encode(docs, rules),
+      "encodeBatches" -> Bpe.encodeBatches(docs, Seq(rules)),
+      "encodeTable" -> Bpe.encodeTable(docs, rules),
+      "encodeTableBytes" -> Bpe.encodeTableBytes(docs, rules,
+        alphabet = Set("a", "b", emoji)))
+    outs.foreach { case (name, df) =>
+      val got = encoded(df)
+      assert(got.head._2.mkString === text.replace(" ", ""),
+        s"$name: symbols must spell the words losslessly, got $got")
+      assert(got === expected, name)
+    }
+  }
+
+  test("encode with 1,200 single-rule layers plans as ONE MergeFold and " +
+    "matches the per-rule reference walk") {
+    val rnd = new scala.util.Random(42)
+    val corpus = (1 to 12).map { d =>
+      d.toLong -> Seq.fill(6)(
+        Seq.fill(1 + rnd.nextInt(10))("abcd"(rnd.nextInt(4))).mkString)
+        .mkString(" ")
+    }
+    // rules alternate between pairs adjacent in the current reference
+    // segmentation (they fire, and build cascades) and random pairs over
+    // every symbol seen so far (mostly no-ops, some order-sensitive)
+    val words = corpus.flatMap(_._2.split(" ")).distinct
+    var segs: Seq[Seq[String]] = words.map(w => w.map(_.toString).toSeq)
+    val pool = scala.collection.mutable.ArrayBuffer("a", "b", "c", "d")
+    val rules = (0 until 1200).map { k =>
+      val adj = segs.flatMap(s => s.zip(s.drop(1)))
+      val rule =
+        if (k % 2 == 0 && adj.nonEmpty) adj(rnd.nextInt(adj.length))
+        else (pool(rnd.nextInt(pool.length)), pool(rnd.nextInt(pool.length)))
+      segs = segs.map(s => refWalk(s, Seq(rule)))
+      pool += rule._1 + rule._2
+      rule
+    }
+    val docs = corpus.toDF("doc_id", "text")
+    val enc = Bpe.encode(docs, rules)
+    val folds = enc.queryExecution.analyzed.flatMap(_.expressions
+      .flatMap(_.collect { case m: graft.expressions.MergeFold => m }))
+    assert(folds.size === 1, s"expected one MergeFold node, got ${folds.size}")
+    assert(folds.head.layers.size === 1200)
+    assert(encoded(enc) === refEncode(corpus, rules))
   }
 
   test("pipe-containing words: the r18 MergeFold kernel compares whole " +
@@ -236,7 +306,7 @@ class BpeSpec extends SparkSpec {
       Seq("b", "a")             // rhs-first probe misses: unchanged
     ).toDF("syms")
     val r = df.select(
-        Bpe.applyMergeSet(col("syms"), Seq(("a", "b"), ("x", "b"))).as("m"))
+        Bpe.applyMerges(col("syms"), Seq(Seq(("a", "b"), ("x", "b")))).as("m"))
       .as[Seq[String]].collect().toSeq
     assert(r === Seq(
       Seq("x", "ab"), Seq("xb"), Seq("ab", "b"), Seq("b", "a")))

@@ -225,6 +225,45 @@ class ExpressionsSpec extends SparkSpec {
     assert(pairs(w).map(_._3).sum + 1 === w.length)
   }
 
+  test("graft_merge_fold: a 3-layer stack gives identical rows under " +
+    "CODEGEN_ONLY and NO_CODEGEN") {
+    val layers = Seq(
+      Seq(("a", "a"), ("x", "b"), ("c", "b")), // rhs "b" shared by two rules
+      Seq(("aa", "aa"), ("|", "q")),           // a literal pipe is a symbol
+      Seq(("aaaa", "a"), ("xb", "|")))
+    val rows = Seq(
+      1 -> Seq("a", "a", "a", "a", "a"),      // self-pair run, cascades
+      2 -> Seq("x", "b", "c", "b", "|", "q"),
+      3 -> Seq("x", "b", "|"),
+      4 -> Seq("a", "a", "a"),
+      5 -> Seq.empty[String],
+      6 -> Seq("|"),
+      7 -> Seq("c", "b", "b"))
+    val expected = Seq(
+      1 -> Seq("aaaaa"), 2 -> Seq("xb", "cb", "|q"), 3 -> Seq("xb|"),
+      4 -> Seq("aa", "a"), 5 -> Seq.empty[String], 6 -> Seq("|"),
+      7 -> Seq("cb", "b"))
+    // repartition: a projection straight over a local relation would be
+    // evaluated by the optimizer (interpreted), never by generated code
+    def run(kvs: (String, String)*): (Seq[(Int, Seq[String])], String) =
+      Sessions.withConf(spark, kvs: _*) {
+        val df = rows.toDF("id", "syms").repartition(2)
+          .select(col("id"),
+            graft.operators.Bpe.applyMerges(col("syms"), layers).as("m"))
+        val got = df.collect().toSeq.map(r => (r.getInt(0), r.getSeq[String](1)))
+        (got.sortBy(_._1), df.queryExecution.executedPlan.toString)
+      }
+    val (compiled, compiledPlan) =
+      run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val (interpreted, interpretedPlan) =
+      run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")
+    assert(compiledPlan.matches("(?s).*\\*\\(\\d+\\) Project.*"), compiledPlan)
+    assert(!interpretedPlan.contains("*("), interpretedPlan)
+    assert(compiled === interpreted)
+    assert(compiled === expected)
+  }
+
   test("graft_cosine callable from plain SQL with implicit casts") {
     val r = spark.sql(
       "SELECT graft_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c").as[Double].head()
