@@ -52,8 +52,8 @@ object AbDrift {
       System.gc()
     }
 
-    // j1 gate body with a chosen state partition count (the gate itself
-    // is byte-identical except for the statePartitions argument)
+    // j1 gate body with a chosen state partition count (the gate builds
+    // the same plan; only the statePartitions argument differs)
     def j1(statePartitions: Int): Long = {
       val ev = graft.streaming.Sources.eventsStream(spark, sfDir)
       val views = ev.filter(col("event_type") === "view")
@@ -61,7 +61,7 @@ object AbDrift {
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
       graft.streaming.StreamRunner.collect(
-        graft.streaming.WindowedStreams.intervalJoin(
+        graft.operators.Joins.intervalJoin(
           views, clicks, "v_user", "c_user", "v_ts", "c_ts",
           lowerSec = 0L, upperSec = 600L),
         statePartitions = statePartitions)
@@ -434,7 +434,7 @@ object AbDrift {
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
         graft.streaming.StreamRunner.collect(
-          graft.streaming.WindowedStreams.intervalJoin(
+          graft.operators.Joins.intervalJoin(
               views, clicks, "v_user", "c_user", "v_ts", "c_ts",
               lowerSec = 0L, upperSec = 600L)
             .groupBy(window(col("v_ts"), "3600 seconds"))

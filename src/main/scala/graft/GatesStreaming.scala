@@ -18,6 +18,14 @@ private[graft] object GatesStreaming {
   import GateSupport._
   import TmpDirs._
 
+  /** The view and click legs of an event stream, as the interval-join
+    * gates (j1, j7, j7b, chained join -> agg) pair them. */
+  private def viewsClicks(ev: DataFrame): (DataFrame, DataFrame) = (
+    ev.filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("ts").as("v_ts")),
+    ev.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts")))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── J14 streaming twin: temporal enrich as a STREAM-STATIC join —
@@ -634,11 +642,11 @@ private[graft] object GatesStreaming {
     }),
 
 
-    // ── A9 streaming twin: the same hopping windows through real
+    // ── A9 streaming twin: the a9 operator itself through real
     // Structured Streaming state (complete mode — every window emits)
     "stream_a9_sliding_window" -> ((s, dir) =>
       graft.streaming.StreamRunner.collect(
-        graft.streaming.WindowedStreams.slidingVisitorStats(
+        Stats.slidingVisitorStats(
           graft.streaming.Sources.eventsStream(s, dir)),
         outputMode = "complete")
         .orderBy(col("stt"), col("event_type"))),
@@ -707,13 +715,13 @@ private[graft] object GatesStreaming {
     // ── Dedup: incremental ingestion through REAL Structured Streaming —
     // the incoming slice arrives as a stream and probes the static history
     // index with stream-static joins only (text rides the probe, so no
-    // stream-stream join is needed); same oracle as the batch twin since
-    // every emission happens at arrival
+    // stream-stream join is needed); same operator and oracle as
+    // dedup_incremental since every emission happens at arrival
     "stream_dedup_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val history = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
       graft.streaming.StreamRunner.collect(
-        Dedup.incrementalNearDupsStreamable(
+        Dedup.incrementalNearDups(
           graft.streaming.Sources.documentsStream(s, dir)
             .filter(pmod(col("doc_id"), lit(5L)) === 0L),
           history, Dedup.minhashBandIndex(history)))
@@ -1303,12 +1311,9 @@ private[graft] object GatesStreaming {
     // exactly that delayed cutoff.
     "stream_chained_join_agg" -> ((s, dir) => {
       val ev = graft.streaming.Sources.eventsStreamSplit(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+      val (views, clicks) = viewsClicks(ev)
       graft.streaming.StreamRunner.collect(
-        graft.streaming.WindowedStreams.intervalJoin(
+        Joins.intervalJoin(
             views, clicks, "v_user", "c_user", "v_ts", "c_ts",
             lowerSec = 0L, upperSec = 600L)
           .groupBy(window(col("v_ts"), "3600 seconds"))
@@ -1324,12 +1329,9 @@ private[graft] object GatesStreaming {
     // 600s per user), watermark-bounded state
     "stream_j1_interval_join" -> ((s, dir) => {
       val ev = graft.streaming.Sources.eventsStream(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+      val (views, clicks) = viewsClicks(ev)
       graft.streaming.StreamRunner.collect(
-        graft.streaming.WindowedStreams.intervalJoin(
+        Joins.intervalJoin(
           views, clicks, "v_user", "c_user", "v_ts", "c_ts",
           lowerSec = 0L, upperSec = 600L),
         // 4 state stores x partitions x batches of pure commit I/O for
@@ -1348,12 +1350,9 @@ private[graft] object GatesStreaming {
     // click max event time), which the oracle's cutoff mirrors.
     "stream_j7_interval_left" -> ((s, dir) => {
       val ev = graft.streaming.Sources.eventsStream(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+      val (views, clicks) = viewsClicks(ev)
       graft.streaming.StreamRunner.collect(
-        graft.streaming.WindowedStreams.intervalJoin(
+        Joins.intervalJoin(
           views, clicks, "v_user", "c_user", "v_ts", "c_ts",
           lowerSec = 0L, upperSec = 600L, joinType = "leftOuter"),
         statePartitions = 2)
@@ -1375,12 +1374,9 @@ private[graft] object GatesStreaming {
     // precision (EventTimeStats floors µs→ms).
     "stream_j7b_interval_full" -> ((s, dir) => {
       val ev = graft.streaming.Sources.eventsStream(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+      val (views, clicks) = viewsClicks(ev)
       graft.streaming.StreamRunner.collect(
-        graft.streaming.WindowedStreams.intervalJoin(
+        Joins.intervalJoin(
           views, clicks, "v_user", "c_user", "v_ts", "c_ts",
           lowerSec = 0L, upperSec = 600L, joinType = "fullOuter"),
         statePartitions = 2)

@@ -20,8 +20,10 @@ object DwsStats {
 
   /** VisitorStats (dws/VisitorStatsApp.java): shape page-views (pv + sv on
     * session entry + dur_sum), unique visits (uv) and bounces (uj) into the
-    * 4-key cube cell, union, 10s window. Batch+streaming: pass streaming
-    * inputs and aggregate with graft.streaming.WindowedStreams instead. */
+    * 4-key cube cell, union, 10s window. Shaping is row-local, so it runs
+    * unchanged on streaming inputs; [[visitorStats]] aggregates the shaped
+    * rows (an epoch-floor group with no watermark, so on a stream only the
+    * complete or update output mode applies). */
   def shapeVisitor(pages: DataFrame, uniques: DataFrame, jumps: DataFrame): DataFrame = {
     def keys(df: DataFrame) = df.select(
       col("common.vc").as("vc"), col("common.ch").as("ch"),

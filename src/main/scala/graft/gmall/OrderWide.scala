@@ -1,6 +1,7 @@
 package graft.gmall
 
 import graft.functions.TimeFns
+import graft.operators.Joins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,6 +21,10 @@ import org.apache.spark.sql.functions._
   * throws (DimAsyncFunction.java:47-49), which is its acknowledged
   * liveness bug, not the spec.
   *
+  * J1 and J2 are one body each for batch and streaming: both run
+  * [[graft.operators.Joins.intervalJoin]], whose watermark is a no-op on
+  * batch plans.
+  *
   * Chaining note (SURVEY.md §7.3): OrderWide feeds PaymentWide through a
   * sink boundary (the dwm_order_wide topic) in the reference; in streaming
   * the same boundary applies (one stream-stream join per query), which is
@@ -36,45 +41,22 @@ object OrderWide {
       .withColumn("create_ts_t",
         to_timestamp(col("create_time"), "yyyy-MM-dd HH:mm:ss"))
 
-  /** J1: the interval join producing the wide order. */
+  /** J1: the interval join producing the wide order. On streams the
+    * watermark bounds join state (band + watermark, exactly Flink's
+    * interval-join retention). */
   def join(orderInfo: DataFrame, orderDetail: DataFrame,
-      bandSec: Long = 5L): DataFrame = {
-    val oi = withCreateTs(orderInfo)
-      .withColumnRenamed("id", "order_id")
-      .withColumnRenamed("create_time", "order_create_time")
-      .withColumnRenamed("create_ts_t", "oi_ts")
-    val od = withCreateTs(orderDetail)
-      .withColumnRenamed("id", "detail_id")
-      .withColumnRenamed("create_time", "detail_create_time")
-      .select(col("detail_id"), col("order_id").as("od_order_id"), col("sku_id"),
-        col("order_price"), col("sku_num"), col("sku_name"),
-        col("split_total_amount"), col("create_ts_t").as("od_ts"))
-    oi.join(od,
-      col("order_id") === col("od_order_id") &&
-        col("od_ts") >= col("oi_ts") - expr(s"INTERVAL $bandSec SECONDS") &&
-        col("od_ts") <= col("oi_ts") + expr(s"INTERVAL $bandSec SECONDS"))
-      .drop("od_order_id")
-  }
-
-  /** J1 streaming: same join with watermarks (state bounded by band +
-    * watermark, exactly Flink's interval-join retention). */
-  def joinStream(orderInfo: DataFrame, orderDetail: DataFrame,
       bandSec: Long = 5L, watermark: String = "5 seconds"): DataFrame = {
     val oi = withCreateTs(orderInfo)
       .withColumnRenamed("id", "order_id")
       .withColumnRenamed("create_time", "order_create_time")
       .withColumnRenamed("create_ts_t", "oi_ts")
-      .withWatermark("oi_ts", watermark)
     val od = withCreateTs(orderDetail)
       .withColumnRenamed("id", "detail_id")
       .select(col("detail_id"), col("order_id").as("od_order_id"), col("sku_id"),
         col("order_price"), col("sku_num"), col("sku_name"),
         col("split_total_amount"), col("create_ts_t").as("od_ts"))
-      .withWatermark("od_ts", watermark)
-    oi.join(od,
-      col("order_id") === col("od_order_id") &&
-        col("od_ts") >= col("oi_ts") - expr(s"INTERVAL $bandSec SECONDS") &&
-        col("od_ts") <= col("oi_ts") + expr(s"INTERVAL $bandSec SECONDS"))
+    Joins.intervalJoin(oi, od, "order_id", "od_order_id", "oi_ts", "od_ts",
+      bandSec, bandSec, watermark)
       .drop("od_order_id")
   }
 
@@ -106,12 +88,13 @@ object OrderWide {
         col("id").as("category3_id"), col("name").as("category3_name"))),
         Seq("category3_id"), "left")
 
-  /** J2 streaming: the PaymentWide join with watermarks on both sides —
-    * the second hop of the reference's chained deployment. `orderWide`
-    * here is the stream READ BACK from the dwm_order_wide sink boundary
-    * (Spark allows one stream-stream join per query, same constraint the
-    * reference solves with the intermediate Kafka topic). */
-  def paymentWideStream(paymentInfo: DataFrame, orderWide: DataFrame,
+  /** J2: PaymentInfo ⋈ OrderWide with the asymmetric band
+    * ow.ts ∈ [pay.ts - 15s, pay.ts] (payment follows order). In
+    * streaming, `orderWide` is the stream READ BACK from the
+    * dwm_order_wide sink boundary (Spark allows one stream-stream join
+    * per query, the constraint the reference solves with the
+    * intermediate Kafka topic). */
+  def paymentWide(paymentInfo: DataFrame, orderWide: DataFrame,
       lagSec: Long = 15L, watermark: String = "15 seconds"): DataFrame = {
     val pay = withCreateTs(paymentInfo)
       .withColumnRenamed("id", "payment_id")
@@ -121,30 +104,8 @@ object OrderWide {
       .select(col("payment_id"), col("order_id").as("pay_order_id"),
         col("payment_type"), col("payment_amount"),
         col("payment_create_time"), col("pay_ts"))
-      .withWatermark("pay_ts", watermark)
-    pay.join(orderWide.withWatermark("oi_ts", watermark),
-      col("pay_order_id") === orderWide("order_id") &&
-        col("oi_ts") >= col("pay_ts") - expr(s"INTERVAL $lagSec SECONDS") &&
-        col("oi_ts") <= col("pay_ts"))
-      .drop("pay_order_id")
-  }
-
-  /** J2: PaymentInfo ⋈ OrderWide with the asymmetric band
-    * ow.ts ∈ [pay.ts - 15s, pay.ts] (payment follows order). */
-  def paymentWide(paymentInfo: DataFrame, orderWide: DataFrame,
-      lagSec: Long = 15L): DataFrame = {
-    val pay = withCreateTs(paymentInfo)
-      .withColumnRenamed("id", "payment_id")
-      .withColumnRenamed("create_time", "payment_create_time")
-      .withColumnRenamed("create_ts_t", "pay_ts")
-      .withColumnRenamed("total_amount", "payment_amount")
-      .select(col("payment_id"), col("order_id").as("pay_order_id"),
-        col("payment_type"), col("payment_amount"),
-        col("payment_create_time"), col("pay_ts"))
-    pay.join(orderWide,
-      col("pay_order_id") === orderWide("order_id") &&
-        col("oi_ts") >= col("pay_ts") - expr(s"INTERVAL $lagSec SECONDS") &&
-        col("oi_ts") <= col("pay_ts"))
+    Joins.intervalJoin(pay, orderWide, "pay_order_id", "order_id",
+      "pay_ts", "oi_ts", lowerSec = lagSec, upperSec = 0L, watermark = watermark)
       .drop("pay_order_id")
   }
 }

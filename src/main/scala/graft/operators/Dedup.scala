@@ -162,16 +162,42 @@ object Dedup {
     * for exact verification. Ingesting 1 TB into a 100 TB corpus costs
     * O(new batch) + O(index probe), not O(corpus). Intra-batch dups are
     * the standard [[minhashLsh]] pass over the batch alone.
+    *
+    * One body for batch and streaming `incoming`: its text rides THROUGH
+    * the band-explode and index probe, so verification needs only
+    * stream-static joins (probe → index, candidate → history shingles) —
+    * no stream-stream join and no stream/batch union. Text rides the
+    * explode ×bands, which is right when the incoming batch is small
+    * relative to history (the ingestion case — the index probe broadcasts
+    * or buckets). `dropDuplicates` collapses multi-band collisions; its
+    * key carries the text (which doc_a determines) so that a batch plan
+    * dedups in one hash aggregate instead of a sort-based `first(text)`.
+    * In a real long-running stream use `dropDuplicatesWithinWatermark` so
+    * that state stays bounded.
     * (ref behavior: gmall has no dedup; this is the LLM-pipeline suite.) */
   def incrementalNearDups(incoming: DataFrame, history: DataFrame,
       historyIndex: DataFrame, shingleLen: Int = 3, numPerms: Int = 64,
       bands: Int = 16, minJaccard: Double = 0.5): DataFrame = {
-    val probe = minhashBandIndex(incoming, shingleLen, numPerms, bands)
-    val cand = probe.as("n")
-      .join(historyIndex.as("h"), Seq("band", "key"))
-      .select(col("n.doc_id").as("doc_a"), col("h.doc_id").as("doc_b"))
-      .distinct()
-    verifyJaccard(incoming.unionByName(history), cand, shingleLen)
+    val probe = incoming
+      .select(col("doc_id").as("doc_a"), col("text").as("__text_a"),
+        explode(call_function("graft_minhash_bands_p",
+          col("text"), lit(shingleLen), lit(numPerms), lit(bands))).as("b"))
+      .select(col("doc_a"), col("__text_a"),
+        col("b.band").as("band"), col("b.key").as("key"))
+    val histSh = history.select(col("doc_id").as("doc_b"),
+      array_distinct(call_function("graft_shingles",
+        col("text"), lit(shingleLen))).as("sh_b"))
+    probe
+      .join(historyIndex.select(col("doc_id").as("doc_b"),
+        col("band"), col("key")), Seq("band", "key"))
+      .dropDuplicates("doc_a", "doc_b", "__text_a")
+      .join(histSh, "doc_b")
+      .withColumn("__sh_a", array_distinct(call_function("graft_shingles",
+        col("__text_a"), lit(shingleLen))))
+      .withColumn("inter", size(array_intersect(col("__sh_a"), col("sh_b"))))
+      .withColumn("uni", size(col("__sh_a")) + size(col("sh_b")) - col("inter"))
+      .select(col("doc_a"), col("doc_b"),
+        (col("inter").cast("double") / col("uni")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
   }
 
@@ -192,47 +218,6 @@ object Dedup {
       tsCol: String = "ts", delay: String = "1 hour"): DataFrame =
     stream.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keys)
-
-  /** Stream-safe twin of [[incrementalNearDups]]: the incoming side keeps
-    * its text THROUGH the band-explode and index probe, so verification
-    * needs only stream-static joins (probe → index, candidate → history
-    * shingles) — no stream-stream join, no stream/batch union, and it
-    * runs unchanged as a batch plan (DedupSpec pins batch parity with
-    * [[incrementalNearDups]]).
-    *
-    * Trade-off vs the batch path: text rides the explode ×bands, so this
-    * shape is right when the incoming batch is small relative to history
-    * (the ingestion case — the index probe broadcasts or buckets); a
-    * huge backfill should use the batch pair-then-rejoin path instead.
-    * `dropDuplicates` collapses multi-band collisions; in a real
-    * long-running stream use `dropDuplicatesWithinWatermark` so that
-    * state stays bounded. */
-  def incrementalNearDupsStreamable(incoming: DataFrame,
-      history: DataFrame, historyIndex: DataFrame, shingleLen: Int = 3,
-      numPerms: Int = 64, bands: Int = 16,
-      minJaccard: Double = 0.5): DataFrame = {
-    val probe = incoming
-      .select(col("doc_id").as("doc_a"), col("text").as("__text_a"),
-        explode(call_function("graft_minhash_bands_p",
-          col("text"), lit(shingleLen), lit(numPerms), lit(bands))).as("b"))
-      .select(col("doc_a"), col("__text_a"),
-        col("b.band").as("band"), col("b.key").as("key"))
-    val histSh = history.select(col("doc_id").as("doc_b"),
-      array_distinct(call_function("graft_shingles",
-        col("text"), lit(shingleLen))).as("sh_b"))
-    probe
-      .join(historyIndex.select(col("doc_id").as("doc_b"),
-        col("band"), col("key")), Seq("band", "key"))
-      .dropDuplicates("doc_a", "doc_b")
-      .join(histSh, "doc_b")
-      .withColumn("__sh_a", array_distinct(call_function("graft_shingles",
-        col("__text_a"), lit(shingleLen))))
-      .withColumn("inter", size(array_intersect(col("__sh_a"), col("sh_b"))))
-      .withColumn("uni", size(col("__sh_a")) + size(col("sh_b")) - col("inter"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("inter").cast("double") / col("uni")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-  }
 
   /** Exact shingle-set Jaccard for given candidate pairs (joins the pair
     * list against per-doc shingle sets twice; join strategy left to

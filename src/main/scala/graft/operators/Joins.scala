@@ -4,13 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Join surface of the reference (SURVEY.md §2.4), batch shapes.
+/** Join surface of the reference (SURVEY.md §2.4).
   *
   *  - J1/J2 interval joins (dwm/OrderWideApp.java:87-97,
-  *    dwm/PaymentWideApp.java:86-96): equi key + event-time band. In batch
-  *    the band is a residual predicate on a hash join (equi key carries the
-  *    shuffle); in streaming (graft.streaming) the same expression runs as a
-  *    watermarked stream-stream join.
+  *    dwm/PaymentWideApp.java:86-96): equi key + event-time band, one body
+  *    for both execution modes. In batch the band is a residual predicate
+  *    on a hash join (equi key carries the shuffle); on streaming inputs
+  *    the same plan runs as a watermarked stream-stream join.
   *  - J3 dimension enrichment (func/DimAsyncFunction.java + call sites):
   *    the reference's per-record async Phoenix/Redis lookups collapse into
   *    broadcast hash joins — no network round-trips, no cache, and the fact
@@ -22,17 +22,28 @@ import org.apache.spark.sql.functions._
   */
 object Joins {
 
-  /** J1: equi + symmetric time band [-lower, +upper] around the left ts. */
+  /** J1: equi key + time band — right.ts in [left.ts - lowerSec,
+    * left.ts + upperSec]. Both sides are watermarked by `watermark`: on a
+    * batch plan the optimizer drops `EventTimeWatermark`, so batch callers
+    * get the plain band join; on streams an inner join emits as soon as
+    * both sides arrive and the watermark only bounds join state retention
+    * (Flink's interval-join cleanup), while outer joins null-pad an
+    * unmatched row once the watermark passes its band. */
   def intervalJoin(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTs: String, rightTs: String,
-      lowerSec: Long, upperSec: Long): DataFrame =
-    left.join(
-      right,
-      left(leftKey) === right(rightKey) &&
-        right(rightTs) >= left(leftTs) - expr(s"INTERVAL $lowerSec SECONDS") &&
-        right(rightTs) <= left(leftTs) + expr(s"INTERVAL $upperSec SECONDS"))
+      lowerSec: Long, upperSec: Long,
+      watermark: String = "0 seconds",
+      joinType: String = "inner"): DataFrame = {
+    val l = left.withWatermark(leftTs, watermark)
+    val r = right.withWatermark(rightTs, watermark)
+    l.join(r,
+      l(leftKey) === r(rightKey) &&
+        r(rightTs) >= l(leftTs) - expr(s"INTERVAL $lowerSec SECONDS") &&
+        r(rightTs) <= l(leftTs) + expr(s"INTERVAL $upperSec SECONDS"),
+      joinType)
+  }
 
   /** J3: broadcast-enrich a fact with several small dims (left joins —
     * the reference's lookup-failure drop is a bug, not a spec). */

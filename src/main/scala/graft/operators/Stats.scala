@@ -113,18 +113,25 @@ object Stats {
 
   /** Sliding (hopping) windows: each event lands in window/slide
     * overlapping windows — Spark's `window(ts, win, slide)` expands rows
-    * BEFORE the aggregation, so shuffle volume multiplies by the overlap
-    * factor. At 100 TB keep slide ≥ window/4 (or aggregate per-slide
-    * tumbling panes first and roll panes up into windows — the pane trick
-    * — when a fine slide over a wide window is genuinely needed). */
+    * BEFORE the aggregation, so shuffle volume (and, on a stream, state)
+    * multiplies by the overlap factor. At 100 TB keep slide ≥ window/4 (or
+    * aggregate per-slide tumbling panes first and roll panes up into
+    * windows — the pane trick — when a fine slide over a wide window is
+    * genuinely needed).
+    *
+    * One body for batch and streaming: the watermark is dropped from batch
+    * plans, and on a stream it closes a window once it passes the window
+    * END. `uv` is `size(collect_set)` because streaming rejects
+    * COUNT(DISTINCT); both are the exact bigint distinct count. */
   def slidingVisitorStats(events: DataFrame, windowSec: Int = 60,
-      slideSec: Int = 30): DataFrame =
+      slideSec: Int = 30, watermark: String = "2 seconds"): DataFrame =
     events
+      .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), s"$windowSec seconds", s"$slideSec seconds"),
         col("event_type"))
       .agg(
         count(lit(1)).as("pv"),
-        count_distinct(col("user_id")).as("uv"),
+        size(collect_set(col("user_id"))).cast("long").as("uv"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("dur_sum"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),

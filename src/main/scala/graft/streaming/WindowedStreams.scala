@@ -13,6 +13,14 @@ import org.apache.spark.sql.functions._
   * (dws/ProductStatsApp.java:212-222) with memory bounded per window/key.
   * `approx_count_distinct` (HLL) is the 100 TB path — constant memory,
   * associative merges.
+  *
+  * Only operators whose streaming plan differs from the batch one live
+  * here: `window()` grouping where the batch twin floors epochs, chained
+  * and session windows. Operators that differ only by `withWatermark` have
+  * ONE body that watermarks unconditionally (the optimizer drops the node
+  * from batch plans): the interval join is
+  * [[graft.operators.Joins.intervalJoin]] and sliding windows are
+  * [[graft.operators.Stats.slidingVisitorStats]].
   */
 object WindowedStreams {
 
@@ -62,43 +70,6 @@ object WindowedStreams {
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
         date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
         col("event_type"), col("ct"), col("amount"), col("user_ct"))
-
-  /** A2 streaming: visitor cube cell — window x type x cohort. */
-  def visitorStats(events: DataFrame, windowSec: Int = 60,
-      watermark: String = "14 seconds"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(
-        window(col("ts"), s"$windowSec seconds"),
-        col("event_type"),
-        pmod(col("user_id"), lit(4L)).as("cohort"))
-      .agg(
-        count(lit(1)).as("pv"),
-        size(collect_set(col("user_id"))).cast("long").as("uv"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("dur_sum"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
-        col("event_type"), col("cohort"), col("pv"), col("uv"), col("dur_sum"))
-
-  /** Sliding (hopping) streaming windows: each event feeds window/slide
-    * overlapping window states; watermark closes a window when it passes
-    * the window END (the latest-ending window an event touches keeps its
-    * state alive the longest). Same 100 TB caveat as the batch twin:
-    * shuffle and state multiply by the overlap factor. */
-  def slidingVisitorStats(events: DataFrame, windowSec: Int = 60,
-      slideSec: Int = 30, watermark: String = "2 seconds"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), s"$windowSec seconds", s"$slideSec seconds"),
-        col("event_type"))
-      .agg(
-        count(lit(1)).as("pv"),
-        size(collect_set(col("user_id"))).cast("long").as("uv"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("dur_sum"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
-        date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
-        col("event_type"), col("pv"), col("uv"), col("dur_sum"))
 
   /** A3 streaming (dws/KeywordStatsApp.java): tokenizer UDTF analogue —
     * explode(tokens) is the LATERAL TABLE(SplitFunction) shape — then a
@@ -155,22 +126,4 @@ object WindowedStreams {
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), unix_micros(col("w.start")).as("stt_us"),
         col("n_events"))
-
-  /** J1 streaming (dwm/OrderWideApp.java:87-97): watermarked stream-stream
-    * interval join — right.ts in [left.ts - lowerSec, left.ts + upperSec].
-    * Inner join: rows emit as soon as both sides arrive; the watermark only
-    * bounds join state retention (exactly Flink's interval-join cleanup). */
-  def intervalJoin(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTs: String, rightTs: String,
-      lowerSec: Long, upperSec: Long,
-      watermark: String = "0 seconds",
-      joinType: String = "inner"): DataFrame =
-    left.withWatermark(leftTs, watermark).join(
-      right.withWatermark(rightTs, watermark),
-      col(leftKey) === col(rightKey) &&
-        col(rightTs) >= col(leftTs) - expr(s"INTERVAL $lowerSec SECONDS") &&
-        col(rightTs) <= col(leftTs) + expr(s"INTERVAL $upperSec SECONDS"),
-      joinType)
 }

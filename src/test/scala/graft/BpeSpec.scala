@@ -188,8 +188,7 @@ class BpeSpec extends SparkSpec {
     assert(encoded(Bpe.encodeTable(docs.repartition(7), learned)) === ref)
   }
 
-  test("encodeTable equals encodeBatches on a LARGE learned table (the " +
-    "merge-count regime the fold tiers cannot reach)") {
+  test("encodeTable equals encodeBatches on a LARGE learned table") {
     val corpus = Seq(
       (1L, "international internationalization nation nationalize"),
       (2L, "internal internet interstellar station relation"),

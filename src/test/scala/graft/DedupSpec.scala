@@ -53,19 +53,27 @@ class DedupSpec extends SparkSpec {
     assert(inc.forall { case (a, b) => a % 5 == 0 && b % 5 != 0 })
   }
 
-  test("streamable incremental dedup == batch incremental dedup (pair for pair)") {
+  test("incremental dedup jaccard == verifyJaccard of the cross pairs") {
+    // every (doc_a, doc_b, jaccard) the one incremental body emits equals
+    // the exact verification of the full batch run's incoming×history pairs
     val documents = Tables.documents(spark, "/root/testdata/sf0.001")
     val incoming = documents.filter(pmod(col("doc_id"), lit(5L)) === 0L)
     val history = documents.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
-    val idx = Dedup.minhashBandIndex(history)
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_a", "doc_b", "jaccard")
         .as[(Long, Long, Double)].collect().toSet
-    val batch = collect(Dedup.incrementalNearDups(incoming, history, idx))
-    val streamShape = collect(
-      Dedup.incrementalNearDupsStreamable(incoming, history, idx))
-    assert(streamShape === batch)
-    assert(streamShape.nonEmpty)
+    val inc = collect(Dedup.incrementalNearDups(incoming, history,
+      Dedup.minhashBandIndex(history)))
+    val cross = Dedup.minhashLsh(documents, numPerms = 64, bands = 16,
+        maxBucket = 1000000)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq.collect {
+        case (a, b) if a % 5 == 0 && b % 5 != 0 => (a, b)
+        case (a, b) if b % 5 == 0 && a % 5 != 0 => (b, a)
+      }
+    val verified = collect(Dedup.verifyJaccard(documents,
+      cross.toDF("doc_a", "doc_b"), shingleLen = 3))
+    assert(inc === verified)
+    assert(inc.nonEmpty)
   }
 
   test("ngram jaccard scores the exact dup at 1.0") {

@@ -69,7 +69,7 @@ class GmallStreamingSpec extends SparkSpec {
     // hop 1: stream-stream interval join -> parquet sink boundary
     val oiS = spark.readStream.schema(orderInfo.schema).parquet(oiDir)
     val odS = spark.readStream.schema(orderDetail.schema).parquet(odDir)
-    val wide = OrderWide.joinStream(oiS, odS)
+    val wide = OrderWide.join(oiS, odS)
     val q1 = wide.writeStream
       .format("parquet").option("path", wideDir)
       .option("checkpointLocation", s"$root/ckpt1")
@@ -81,7 +81,7 @@ class GmallStreamingSpec extends SparkSpec {
     val wideS = spark.readStream.schema(wideBatch.schema).parquet(wideDir)
     val payS = spark.readStream.schema(payment.schema).parquet(payDir)
     val out = graft.streaming.StreamRunner.collect(
-      OrderWide.paymentWideStream(payS, wideS))
+      OrderWide.paymentWide(payS, wideS))
     val got = out.select("payment_id", "order_id", "sku_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(got === Set((5000L, 100L, 7L)))

@@ -1,9 +1,11 @@
 package graft
 
-import graft.operators.Sessionize
+import graft.gmall.OrderWide
+import graft.operators.{Joins, Sessionize}
 import graft.streaming.StatefulStreams
 import graft.streaming.StatefulStreams.Event
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, LogicalPlan}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -134,7 +136,7 @@ class StreamingParitySpec extends SparkSpec {
       Seq(ev(4, 300, 500), ev(5, 999, 500, "click")),
       Seq(ev(6, 300, 600), ev(7, 999, 600, "click"))))(df => {
       val (v, c) = split(df)
-      graft.streaming.WindowedStreams.intervalJoin(
+      Joins.intervalJoin(
         v, c, "v_user", "c_user", "v_ts", "c_ts",
         lowerSec = 0L, upperSec = 60L, joinType = "leftOuter")
     }).select(col("v_id"), col("c_ts").isNull.as("unmatched"))
@@ -143,6 +145,93 @@ class StreamingParitySpec extends SparkSpec {
     // watermarks passed it -> null-padded; view 4's [500, 560] closed by
     // watermark 600; view 6 still open -> pending
     assert(out === Set((1L, false), (2L, true), (4L, true)))
+  }
+
+  private def viewsClicks(df: DataFrame): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions._
+    (df.filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("ts").as("v_ts")),
+     df.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts")))
+  }
+
+  private def hasWatermark(plan: LogicalPlan): Boolean =
+    plan.collectFirst { case w: EventTimeWatermark => w }.nonEmpty
+
+  test("intervalJoin on batch inputs: the optimizer drops every watermark") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def join(df: DataFrame) = {
+      val (v, c) = viewsClicks(df)
+      Joins.intervalJoin(v, c, "v_user", "c_user", "v_ts", "c_ts",
+        0L, 60L, watermark = "5 seconds")
+    }
+    // the body watermarks both sides: a stream keeps the node ...
+    implicit val sqlCtx = spark.sqlContext
+    assert(hasWatermark(join(MemoryStream[Event].toDF()).queryExecution.analyzed))
+    // ... and a batch plan never does
+    val j = join(Seq(ev(1, 1, 10), ev(2, 1, 20, "click")).toDF())
+    assert(!hasWatermark(j.queryExecution.optimizedPlan))
+    assert(j.count() === 1L)
+    def t(sec: Int) = f"2021-01-01 10:00:$sec%02d"
+    val orderInfo = Seq((100L, 1L, t(10))).toDF("id", "user_id", "create_time")
+    val orderDetail = Seq((1000L, 100L, 7L, t(12)))
+      .toDF("id", "order_id", "sku_id", "create_time")
+      .withColumn("order_price", lit(new java.math.BigDecimal("9.99")))
+      .withColumn("sku_num", lit(1L))
+      .withColumn("sku_name", lit("sku"))
+      .withColumn("split_total_amount", lit(new java.math.BigDecimal("9.99")))
+    val payment = Seq((5000L, 100L, "alipay", t(20)))
+      .toDF("id", "order_id", "payment_type", "create_time")
+      .withColumn("total_amount", lit(new java.math.BigDecimal("9.99")))
+    val wide = OrderWide.join(orderInfo, orderDetail)
+    val paid = OrderWide.paymentWide(payment, wide)
+    Seq(wide, paid).foreach(df =>
+      assert(!hasWatermark(df.queryExecution.optimizedPlan)))
+    assert(paid.select("payment_id", "order_id", "sku_id")
+      .as[(Long, Long, Long)].collect().toSeq === Seq((5000L, 100L, 7L)))
+  }
+
+  test("intervalJoin on a DATE band runs as a batch plan") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // j1's shape: DATE event times, a band in days given in seconds
+    val d = java.sql.Date.valueOf(_: String)
+    val orders = Seq((1L, d("1995-01-01")), (2L, d("1995-06-01")))
+      .toDF("o_key", "o_date")
+    val items = Seq((1L, d("1995-01-20")), (1L, d("1995-03-01")),
+      (2L, d("1995-06-01")), (3L, d("1995-01-01")))
+      .toDF("l_key", "l_date")
+    val out = Joins.intervalJoin(orders, items, "o_key", "l_key",
+      "o_date", "l_date", lowerSec = 0L, upperSec = 30L * 86400L)
+      .select(col("o_key"), col("l_date").cast("string"))
+      .as[(Long, String)].collect().toSet
+    assert(out === Set((1L, "1995-01-20"), (2L, "1995-06-01")))
+  }
+
+  test("intervalJoin: batch == stream to the final watermark (inner, left)") {
+    import spark.implicits._
+    val batches = Seq(
+      Seq(ev(1, 1, 10), ev(2, 2, 15), ev(3, 1, 20, "click")),
+      Seq(ev(4, 1, 50, "click"), ev(5, 3, 100)),
+      Seq(ev(6, 3, 200, "click"), ev(7, 2, 300, "click")),
+      // both branch watermarks pass every band: all pending rows close
+      Seq(ev(8, 9, 10000), ev(9, 9, 10000, "click")))
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    Seq("inner", "leftOuter").foreach { joinType =>
+      def join(df: DataFrame) = {
+        val (v, c) = viewsClicks(df)
+        Joins.intervalJoin(v, c, "v_user", "c_user", "v_ts", "c_ts",
+          0L, 60L, joinType = joinType)
+      }
+      val batch = sorted(join(batches.flatten.toDF()))
+      val streamed = sorted(runBatches(batches)(join))
+      assert(streamed === batch, joinType)
+      // user 1's view pairs with both clicks and user 9's pair matches;
+      // the views of users 2 and 3 only null-pad
+      val expected = if (joinType == "inner") 3 else 5
+      assert(batch.length === expected, joinType)
+    }
   }
 
   test("T4 session_window: sessions merge across batches, close on watermark") {
@@ -228,7 +317,7 @@ class StreamingParitySpec extends SparkSpec {
     val clicks = ev2.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
     val name = s"parity_joinagg_${System.nanoTime()}"
-    val q = graft.streaming.WindowedStreams.intervalJoin(
+    val q = Joins.intervalJoin(
         views, clicks, "v_user", "c_user", "v_ts", "c_ts", 0L, 600L)
       .groupBy(window(col("v_ts"), "3600 seconds"))
       .agg(count(lit(1)).as("pair_ct"))
