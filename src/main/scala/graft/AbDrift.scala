@@ -29,7 +29,6 @@ object AbDrift {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val trials = sys.env.getOrElse("SPARK_GRAFT_AB_TRIALS", "5").toInt
     val spark = Sessions.tuned("local[32]", "32")
-    import graft.operators.Similarity
 
     // SPARK_GRAFT_AB_STAGES=1: print per-stage wall times — attribute an
     // arm's cost to its stages instead of guessing from plan shape.
@@ -51,37 +50,6 @@ object AbDrift {
       spark.catalog.clearCache()
       System.gc()
     }
-
-    // j1 gate body with a chosen state partition count (the gate builds
-    // the same plan; only the statePartitions argument differs)
-    def j1(statePartitions: Int): Long = {
-      val ev = graft.streaming.Sources.eventsStream(spark, sfDir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      graft.streaming.StreamRunner.collect(
-        graft.operators.Joins.intervalJoin(
-          views, clicks, "v_user", "c_user", "v_ts", "c_ts",
-          lowerSec = 0L, upperSec = 600L),
-        statePartitions = statePartitions)
-        .groupBy(col("v_user").as("user_id"))
-        .agg(count(lit(1)).as("pair_ct"))
-        .count()
-    }
-
-    def twsUv(statePartitions: Int, changelog: Boolean): Long =
-      Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled" -> changelog.toString) {
-        graft.streaming.StreamRunner.collect(
-          graft.streaming.TwsStreams.uvDedup(
-            graft.streaming.Sources.eventsStreamSplit(spark, sfDir)
-              .withWatermark("ts", "0 seconds")),
-          statePartitions = statePartitions)
-          .count()
-      }
 
     // session-6 arms: the 217-gate bench put text_bpe_encode at 10.12 s
     // (3.0-3.1 in every earlier artifact) and sim_topk_pq at 6.38 (band
@@ -428,11 +396,8 @@ object AbDrift {
       "ch_agg_rocks" -> (() => rocksCl(chainedAgg(2))),
       "single_agg_sp2" -> (() => singleAgg(2)),
       "ch_join_sp1" -> (() => {
-        val ev = graft.streaming.Sources.eventsStreamSplit(spark, sfDir)
-        val views = ev.filter(col("event_type") === "view")
-          .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+        val (views, clicks) = GatesStreaming.viewsClicks(
+          graft.streaming.Sources.eventsStreamSplit(spark, sfDir))
         graft.streaming.StreamRunner.collect(
           graft.operators.Joins.intervalJoin(
               views, clicks, "v_user", "c_user", "v_ts", "c_ts",
@@ -492,8 +457,6 @@ object AbDrift {
     val arms: Seq[(String, () => Long)] = armNames.map(n =>
       n -> customArms.getOrElse(n,
         () => { Sessions.force(SparkEntry.queries(n)(spark, sfDir)); 0L }))
-    // retired earlier-r12 helpers kept compilable for arm re-activation
-    locally { val _ = (j1 _, twsUv _, Similarity) }
 
     // untimed warmup: compile every arm's plan once so trial 1 isn't
     // charged first-touch JIT (the exact artifact this harness de-noises)

@@ -8,31 +8,14 @@ import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared helpers for the Gates* registry families: numeric casts, the
-  * RocksDB-provider wrapper, memoized pair scans, CEP pattern definitions,
-  * and reusable oracle-SQL fragments.
+/** Shared helpers for the Gates* registry families: numeric casts,
+  * memoized pair scans, CEP pattern definitions, and reusable oracle-SQL
+  * fragments.
   */
 private[graft] object GateSupport {
 
   private[graft] def dec(c: String): org.apache.spark.sql.Column =
     col(c).cast("decimal(18,2)")
-
-  /** Runs `body` with the RocksDB state-store provider set, restoring the
-    * previous provider after. The big-state posture for the *_rocksdb /
-    * *_tws gates (transformWithState requires this provider); `body` must
-    * MATERIALIZE its result under the conf (`localCheckpoint(true)`) —
-    * a lazy DataFrame would re-plan after the conf is restored. */
-  private[graft] def withRocksDb(s: SparkSession)(
-      body: => DataFrame): DataFrame =
-    Sessions.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      // changelog checkpointing: each commit ships the batch's changelog
-      // instead of a full snapshot (snapshots move to background
-      // maintenance) — the production posture for frequent small commits,
-      // and measured faster here too (AbDrift r12: tws_uv_changelog 2.33 s
-      // vs 2.60 s median without)
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")(body.localCheckpoint(true))
 
   /** The dedup_semantic* gates' shared verdict block: materializes the
     * dedup result once (three aggregations read it) and reduces it to the

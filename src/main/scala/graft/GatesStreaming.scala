@@ -20,11 +20,67 @@ private[graft] object GatesStreaming {
 
   /** The view and click legs of an event stream, as the interval-join
     * gates (j1, j7, j7b, chained join -> agg) pair them. */
-  private def viewsClicks(ev: DataFrame): (DataFrame, DataFrame) = (
+  private[graft] def viewsClicks(ev: DataFrame): (DataFrame, DataFrame) = (
     ev.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts")),
     ev.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts")))
+
+  /** T2 streaming: per-key last-date ValueState dedup. Also the body of
+    * the provider variant `stream_t2_uv_rocksdb` and the API variant
+    * `stream_t2_uv_tws`: transformWithState is the one keyed-state API and
+    * runs on the RocksDB provider, so both are this plan. Their names stay
+    * so per-gate timings remain comparable across bench artifacts. */
+  private val uvDedupGate: (SparkSession, String) => DataFrame = (s, dir) =>
+    graft.streaming.StreamRunner.collect(
+      graft.streaming.TwsStreams.uvDedup(
+        graft.streaming.Sources.eventsStreamSplit(s, dir)),
+      // RocksDB pays a per-store-instance open/commit premium; the
+      // 1.5k-row state wants width 2, not 8 (AbDrift r12 tws arms)
+      statePartitions = 2)
+      .select(col("user_id"), col("dt"), col("event_id"))
+      .orderBy(col("user_id"), col("dt"))
+
+  private val uvDedupOracleSql =
+    """WITH f AS (SELECT user_id,
+      |    strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS dt, event_id,
+      |    row_number() OVER (PARTITION BY user_id, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d')
+      |                       ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
+      |  FROM events)
+      |SELECT user_id, dt, event_id FROM f WHERE rn = 1 ORDER BY user_id, dt""".stripMargin
+
+  /** T3 streaming: CEP bounce via an event-time timer. Keys whose final
+    * event is within gapSec of the final watermark stay pending (live-
+    * stream semantics); the oracle applies the same watermark cutoff.
+    * Also the body of the API variant `stream_t3_bounce_tws`, kept under
+    * its name like the T2 variants. Both decision
+    * arms fire across the 4-batch split source: data-path bounces
+    * (successor too late) and timer-path bounces (watermark passes
+    * pending+gap mid-stream or at the flush). */
+  private val bounceGate: (SparkSession, String) => DataFrame = (s, dir) =>
+    graft.streaming.StreamRunner.collect(
+      graft.streaming.TwsStreams.bounces(
+        graft.streaming.Sources.eventsStreamSplit(s, dir)
+          .withWatermark("ts", "0 seconds"),
+        gapSec = 1800L),
+      statePartitions = 2)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("bounce_ct"))
+      .orderBy(col("user_id"))
+
+  // (b) event-time timeout: watermark (ms, = floor(max_us/1000) with 0s
+  // delay) passed ts + gap. Trailing events inside the horizon stay
+  // pending — mirrored here by the mu cutoff.
+  private val bounceOracleSql =
+    """WITH f AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+      |mx AS (SELECT max(us) AS mu FROM f),
+      |g AS (SELECT user_id, us,
+      |    lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS nxt
+      |  FROM f)
+      |SELECT user_id, COUNT(*) AS bounce_ct FROM g, mx
+      |WHERE (nxt IS NOT NULL AND nxt - us > 1800000000)
+      |   OR (nxt IS NULL AND (us + 1800000000)//1000 < mu//1000)
+      |GROUP BY user_id ORDER BY user_id""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -652,9 +708,9 @@ private[graft] object GatesStreaming {
         .orderBy(col("stt"), col("event_type"))),
 
 
-    // ── CEP streaming: the same pattern through flatMapGroupsWithState
-    // with event-time timeouts; open windows at the final watermark stay
-    // pending (same cutoff rule as every stream_* gate)
+    // ── CEP streaming: the same pattern through transformWithState with
+    // one event-time timer per key; open windows at the final watermark
+    // stay pending (same cutoff rule as every stream_* gate)
     "stream_cep_funnel" -> ((s, dir) =>
       graft.streaming.StreamRunner.collect(
         graft.streaming.Cep.run(
@@ -759,10 +815,10 @@ private[graft] object GatesStreaming {
     // construction (see Sources.eventsStreamSplit), so each gate keeps
     // its oracle.
 
-    // ── T1 streaming: flatMapGroupsWithState first-visit flag
+    // ── T1 streaming: transformWithState first-visit flag
     "stream_t1_new_old" -> ((s, dir) =>
       graft.streaming.StreamRunner.collect(
-        graft.streaming.StatefulStreams.newOldFlag(
+        graft.streaming.TwsStreams.newOldFlag(
           graft.streaming.Sources.eventsStreamSplit(s, dir)),
         // 1.5k per-user flags: tiny state, width 2
         statePartitions = 2)
@@ -771,14 +827,7 @@ private[graft] object GatesStreaming {
         .orderBy(col("is_new"))),
 
 
-    // ── T2 streaming: per-key last-date ValueState dedup
-    "stream_t2_uv_dedup" -> ((s, dir) =>
-      graft.streaming.StreamRunner.collect(
-        graft.streaming.StatefulStreams.uvDedup(
-          graft.streaming.Sources.eventsStreamSplit(s, dir)),
-        statePartitions = 2)
-        .select(col("user_id"), col("dt"), col("event_id"))
-        .orderBy(col("user_id"), col("dt"))),
+    "stream_t2_uv_dedup" -> uvDedupGate,
 
 
     // ── T2 streaming under PATHOLOGICAL KEY SKEW (r13 verdict task 6):
@@ -801,7 +850,7 @@ private[graft] object GatesStreaming {
       val stage = s"$shmRoot/graft-hotkey-${System.nanoTime()}"
       try {
         graft.streaming.StreamRunner.collect(
-          graft.streaming.StatefulStreams.uvDedup(
+          graft.streaming.TwsStreams.uvDedup(
             graft.streaming.Sources.stagedChunkStream(s, chunks, Some(stage))),
           statePartitions = 2)
           .select(col("user_id"), col("dt"), col("event_id"))
@@ -856,23 +905,27 @@ private[graft] object GatesStreaming {
     // (debug a wedged key, audit state before a migration, verify a TTL
     // policy actually evicted) without replaying the stream. The gate
     // runs T2's uvDedup to completion, then reads its per-user
-    // ValueState back: state holds the LAST deduped date per user, which
-    // is exactly max(date) per user — an offline SQL truth, so the
-    // oracle checks the state CONTENT, not just its shape.
+    // "lastDt" ValueState back (`stateVarName` picks one of a
+    // transformWithState operator's named variables): state holds the
+    // LAST deduped date per user, which is exactly max(date) per user —
+    // an offline SQL truth, so the oracle checks the state CONTENT, not
+    // just its shape.
     "stream_state_reader" -> ((s, dir) => {
       val ckpt = s"$shmRoot/graft-srckpt-${System.nanoTime()}"
       val sink = s"graft_sr_${System.nanoTime()}"
-      try Sessions.withConf(s, "spark.sql.shuffle.partitions" -> "2") {
-        val q = graft.streaming.StatefulStreams.uvDedup(
-          graft.streaming.Sources.eventsStreamSplit(s, dir))
+      val stream = graft.streaming.TwsStreams.uvDedup(
+        graft.streaming.Sources.eventsStreamSplit(s, dir))
+      try Sessions.withConf(s, ("spark.sql.shuffle.partitions" -> "2") +:
+          graft.streaming.StreamRunner.stateConf(stream): _*) {
+        val q = stream
           .writeStream.format("memory").queryName(sink)
           .outputMode("append").option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.format("statestore").load(ckpt)
+        s.read.format("statestore").option("stateVarName", "lastDt").load(ckpt)
           .select(col("key.value").as("user_id"),
-            col("value.groupState.value").as("last_dt"))
+            col("value.value").as("last_dt"))
           .orderBy(col("user_id"))
           .localCheckpoint(true)
       } finally {
@@ -882,43 +935,8 @@ private[graft] object GatesStreaming {
     }),
 
 
-    // ── T2 streaming under the RocksDB state store: byte-identical
-    // semantics to stream_t2_uv_dedup (same oracle), run with the
-    // big-state provider a production deployment uses once state
-    // outgrows the executor heap — provider-independence proven through
-    // the DuckDB gate, not just a spec.
-    "stream_t2_uv_rocksdb" -> ((s, dir) => {
-      withRocksDb(s) {
-        graft.streaming.StreamRunner.collect(
-          graft.streaming.StatefulStreams.uvDedup(
-            graft.streaming.Sources.eventsStreamSplit(s, dir)),
-          // RocksDB pays a per-store-instance open/commit premium; the
-          // 1.5k-row state wants width 2, not 8 (AbDrift r12 tws arms)
-          statePartitions = 2)
-          .select(col("user_id"), col("dt"), col("event_id"))
-          .orderBy(col("user_id"), col("dt"))
-      }
-    }),
-
-
-    // ── T2 through Spark 4's transformWithState (the arbitrary-state
-    // API succeeding FMGWS): named ValueState WITH the reference's 24h
-    // TTL attached for real, vs the SAME oracle as stream_t2_uv_dedup.
-    // The API requires RocksDB state stores, so the provider wraps the
-    // run exactly like the rocksdb twin above — this gate is therefore
-    // API-independence evidence (FMGWS vs tws) on top of that gate's
-    // provider-independence.
-    "stream_t2_uv_tws" -> ((s, dir) => {
-      withRocksDb(s) {
-        graft.streaming.StreamRunner.collect(
-          graft.streaming.TwsStreams.uvDedup(
-            graft.streaming.Sources.eventsStreamSplit(s, dir)
-              .withWatermark("ts", "0 seconds")),
-          statePartitions = 2)
-          .select(col("user_id"), col("dt"), col("event_id"))
-          .orderBy(col("user_id"), col("dt"))
-      }
-    }),
+    "stream_t2_uv_rocksdb" -> uvDedupGate,
+    "stream_t2_uv_tws" -> uvDedupGate,
 
 
     // ── T5 streaming: the token-bucket rate limiter through the REAL
@@ -930,65 +948,41 @@ private[graft] object GatesStreaming {
     // (acc, n) pair per key; the final per-key snapshot must equal the
     // batch fold BITWISE (same IEEE sequence via the ts-contiguous
     // composite order), so the array tier's oracle applies verbatim.
-    "stream_a25_ema" -> ((s, dir) => {
-      withRocksDb(s) {
-        graft.streaming.StreamRunner.collect(
-          graft.streaming.TwsStreams.ema(
-            graft.streaming.Sources.eventsStreamSplit(s, dir)
-              .withWatermark("ts", "0 seconds"),
-            e => e.user_id, alpha = 0.2),
-          statePartitions = 2)
-          .groupBy(col("k"))
-          .agg(max(col("n")).as("n_events"),
-            expr("max_by(ema, n)").as("ema"))
-          .select(col("k").as("user_id"), col("n_events"), col("ema"))
-          .orderBy(col("user_id"))
-      }
-    }),
+    "stream_a25_ema" -> ((s, dir) =>
+      graft.streaming.StreamRunner.collect(
+        graft.streaming.TwsStreams.ema(
+          graft.streaming.Sources.eventsStreamSplit(s, dir)
+            .withWatermark("ts", "0 seconds"),
+          e => e.user_id, alpha = 0.2),
+        statePartitions = 2)
+        .groupBy(col("k"))
+        .agg(max(col("n")).as("n_events"),
+          expr("max_by(ema, n)").as("ema"))
+        .select(col("k").as("user_id"), col("n_events"), col("ema"))
+        .orderBy(col("user_id"))),
 
 
-    "stream_t5_rate_limit" -> ((s, dir) => {
-      withRocksDb(s) {
-        graft.streaming.StreamRunner.collect(
-          graft.streaming.TwsStreams.rateLimit(
-            graft.streaming.Sources.eventsStreamSplit(s, dir)
-              .filter(col("event_id") % 37 === 0)
-              .withWatermark("ts", "0 seconds"),
-            e => e.user_id % 2,
-            capacity = 5, refillPerTick = 1, tickSeconds = 86400L),
-          statePartitions = 2)
-          .groupBy(col("k"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("accepted"), 1L).otherwise(0L)).as("n_acc"),
-            sum(when(col("accepted"), 0L).otherwise(1L)).as("n_rej"),
-            sum(when(col("accepted"), col("event_id")).otherwise(0L))
-              .as("acc_sum"),
-            sum(when(col("accepted"), 0L).otherwise(col("event_id")))
-              .as("rej_sum"))
-          .orderBy(col("k"))
-      }
-    }),
+    "stream_t5_rate_limit" -> ((s, dir) =>
+      graft.streaming.StreamRunner.collect(
+        graft.streaming.TwsStreams.rateLimit(
+          graft.streaming.Sources.eventsStreamSplit(s, dir)
+            .filter(col("event_id") % 37 === 0)
+            .withWatermark("ts", "0 seconds"),
+          e => e.user_id % 2,
+          capacity = 5, refillPerTick = 1, tickSeconds = 86400L),
+        statePartitions = 2)
+        .groupBy(col("k"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("accepted"), 1L).otherwise(0L)).as("n_acc"),
+          sum(when(col("accepted"), 0L).otherwise(1L)).as("n_rej"),
+          sum(when(col("accepted"), col("event_id")).otherwise(0L))
+            .as("acc_sum"),
+          sum(when(col("accepted"), 0L).otherwise(col("event_id")))
+            .as("rej_sum"))
+        .orderBy(col("k"))),
 
 
-    // ── T3 through transformWithState: the bounce timeout as a REAL
-    // registered event-time timer (registerTimer/handleExpiredTimer —
-    // the reference's CEP within() side-output), vs the SAME oracle as
-    // stream_t3_bounce. Both decision arms fire across the 4-batch split
-    // source: data-path bounces (successor too late) and timer-path
-    // bounces (watermark passes pending+gap mid-stream or at the flush).
-    "stream_t3_bounce_tws" -> ((s, dir) => {
-      withRocksDb(s) {
-        graft.streaming.StreamRunner.collect(
-          graft.streaming.TwsStreams.bounces(
-            graft.streaming.Sources.eventsStreamSplit(s, dir)
-              .withWatermark("ts", "0 seconds"),
-            gapSec = 1800L),
-          statePartitions = 2)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("bounce_ct"))
-          .orderBy(col("user_id"))
-      }
-    }),
+    "stream_t3_bounce_tws" -> bounceGate,
 
 
     // ── T6's session variant through transformWithState: merge-on-arrival
@@ -997,17 +991,14 @@ private[graft] object GatesStreaming {
     // vs the SAME oracle. The timer registers the end's ms-floor WITHOUT
     // the bounce twin's +1: session_window's emission cutoff is inclusive
     // (end_ms <= watermark_ms), exactly tws timers' own expiry compare.
-    "stream_t4_session_tws" -> ((s, dir) => {
-      withRocksDb(s) {
-        graft.streaming.StreamRunner.collect(
-          graft.streaming.TwsStreams.sessionStats(
-            graft.streaming.Sources.eventsStreamSplit(s, dir)
-              .withWatermark("ts", "0 seconds"),
-            gapSec = 1800L),
-          statePartitions = 2)
-          .orderBy(col("user_id"), col("stt_us"))
-      }
-    }),
+    "stream_t4_session_tws" -> ((s, dir) =>
+      graft.streaming.StreamRunner.collect(
+        graft.streaming.TwsStreams.sessionStats(
+          graft.streaming.Sources.eventsStreamSplit(s, dir)
+            .withWatermark("ts", "0 seconds"),
+          gapSec = 1800L),
+        statePartitions = 2)
+        .orderBy(col("user_id"), col("stt_us"))),
 
 
     // ── T8 as an ORACLE gate (spec-only until r10): checkpoint resume
@@ -1022,7 +1013,7 @@ private[graft] object GatesStreaming {
       graft.streaming.StreamRunner.collectResumed(
         graft.streaming.Sources.eventsSplitChunks(s, dir, parts = 4),
         splitAt = 2, statePartitions = 2)(stageDir =>
-        graft.streaming.StatefulStreams.uvDedup(
+        graft.streaming.TwsStreams.uvDedup(
           graft.streaming.Sources.eventsStreamStaged(s, stageDir)))
         .select(col("user_id"), col("dt"), col("event_id"))
         .orderBy(col("user_id"), col("dt"))),
@@ -1104,7 +1095,8 @@ private[graft] object GatesStreaming {
 
     // ── Engine-native streaming dedup: dropDuplicates runs as the
     // dedicated StreamingDeduplicate physical operator (state = seen
-    // keys), distinct from the FMGWS path stream_t2 exercises. Emitting
+    // keys), distinct from the transformWithState path stream_t2
+    // exercises. Emitting
     // only the key columns makes "first arrival wins" deterministic;
     // unbounded key state is the documented cost (the watermarked
     // variant evicts, but its drop guarantee is then time-bounded —
@@ -1138,19 +1130,7 @@ private[graft] object GatesStreaming {
         .orderBy(col("user_id"), col("event_type"))),
 
 
-    // ── T3 streaming: CEP bounce via event-time timeout. Keys whose final
-    // event is within gapSec of the final watermark stay pending (live-
-    // stream semantics); the oracle applies the same watermark cutoff.
-    "stream_t3_bounce" -> ((s, dir) =>
-      graft.streaming.StreamRunner.collect(
-        graft.streaming.StatefulStreams.bounces(
-          graft.streaming.Sources.eventsStreamSplit(s, dir)
-            .withWatermark("ts", "0 seconds"),
-          gapSec = 1800L),
-        statePartitions = 2)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("bounce_ct"))
-        .orderBy(col("user_id"))),
+    "stream_t3_bounce" -> bounceGate,
 
 
     // ── T7 streaming: LATE-DATA DROP as an oracle gate (spec-only until
@@ -1185,7 +1165,7 @@ private[graft] object GatesStreaming {
 
 
     // ── A1 streaming under HOT-GROUP SKEW (the windowed-agg half of
-    // r13 verdict task 6; stream_skew_hotkey covers the FMGWS half):
+    // r13 verdict task 6; stream_skew_hotkey covers the keyed-state half):
     // 50% of events remap onto ONE event_type, so a single (window,
     // type) group carries half of every micro-batch INCLUDING its
     // collect_set(user_id) state — unlike the dedup's one-row-per-key
@@ -1787,13 +1767,7 @@ private[graft] object GatesStreaming {
         |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
 
 
-    "stream_t2_uv_dedup" ->
-      """WITH f AS (SELECT user_id,
-        |    strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS dt, event_id,
-        |    row_number() OVER (PARTITION BY user_id, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d')
-        |                       ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |  FROM events)
-        |SELECT user_id, dt, event_id FROM f WHERE rn = 1 ORDER BY user_id, dt""".stripMargin,
+    "stream_t2_uv_dedup" -> uvDedupOracleSql,
 
 
     // the uniform-twin rule under the deterministic hot-key remap: skew
@@ -1828,23 +1802,8 @@ private[graft] object GatesStreaming {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
 
 
-    "stream_t2_uv_rocksdb" ->
-      """WITH f AS (SELECT user_id,
-        |    strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS dt, event_id,
-        |    row_number() OVER (PARTITION BY user_id, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d')
-        |                       ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |  FROM events)
-        |SELECT user_id, dt, event_id FROM f WHERE rn = 1 ORDER BY user_id, dt""".stripMargin,
-
-
-    // same oracle again: the tws gate changes the state API, never the answer
-    "stream_t2_uv_tws" ->
-      """WITH f AS (SELECT user_id,
-        |    strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS dt, event_id,
-        |    row_number() OVER (PARTITION BY user_id, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d')
-        |                       ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |  FROM events)
-        |SELECT user_id, dt, event_id FROM f WHERE rn = 1 ORDER BY user_id, dt""".stripMargin,
+    "stream_t2_uv_rocksdb" -> uvDedupOracleSql,
+    "stream_t2_uv_tws" -> uvDedupOracleSql,
 
 
     // execution mode must not change admission: the streaming run (keyed
@@ -1854,17 +1813,7 @@ private[graft] object GatesStreaming {
     "stream_a25_ema" -> emaOracleSql,
 
 
-    // same oracle again: timers-and-TTL API twin, identical bounce rule
-    "stream_t3_bounce_tws" ->
-      """WITH f AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |mx AS (SELECT max(us) AS mu FROM f),
-        |g AS (SELECT user_id, us,
-        |    lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS nxt
-        |  FROM f)
-        |SELECT user_id, COUNT(*) AS bounce_ct FROM g, mx
-        |WHERE (nxt IS NOT NULL AND nxt - us > 1800000000)
-        |   OR (nxt IS NULL AND (us + 1800000000)//1000 < mu//1000)
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+    "stream_t3_bounce_tws" -> bounceOracleSql,
 
 
     // same oracle again: the tws session twin changes the state API
@@ -1944,19 +1893,7 @@ private[graft] object GatesStreaming {
 
 
     // Bounce emission = (a) successor observed with gap > 1800s, or
-    // (b) event-time timeout: watermark (ms, = floor(max_us/1000) with 0s
-    // delay) passed ts + gap. Trailing events inside the horizon stay
-    // pending — mirrored here by the mu cutoff.
-    "stream_t3_bounce" ->
-      """WITH f AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |mx AS (SELECT max(us) AS mu FROM f),
-        |g AS (SELECT user_id, us,
-        |    lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS nxt
-        |  FROM f)
-        |SELECT user_id, COUNT(*) AS bounce_ct FROM g, mx
-        |WHERE (nxt IS NOT NULL AND nxt - us > 1800000000)
-        |   OR (nxt IS NULL AND (us + 1800000000)//1000 < mu//1000)
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+    "stream_t3_bounce" -> bounceOracleSql,
 
 
     // T7 late-data drop, replayed explicitly: chunk = event_id mod 4 (the

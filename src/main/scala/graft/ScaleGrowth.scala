@@ -171,7 +171,7 @@ object ScaleGrowth {
     // path — micro-batch scheduling, watermark advance, and STATE-STORE
     // commit cost. Healthy growth: windowed-agg state is keyed by
     // (window × event_type) — bounded, flat across R — so its time should
-    // grow ~R× with input only; FMGWS dedup state is keyed per USER, so
+    // grow ~R× with input only; keyed dedup state is keyed per USER, so
     // its state rows (= output rows here) are the structural counter and
     // must grow R× while per-row cost stays flat.
     "stream_window_products" -> whole { dir =>
@@ -182,12 +182,12 @@ object ScaleGrowth {
     },
     "stream_uv_dedup_state" -> whole { dir =>
       val n = graft.streaming.StreamRunner.collect(
-        graft.streaming.StatefulStreams.uvDedup(synthEventsStream(spark, dir))).count()
-      (n, "FMGWS state rows = distinct users (grows Rx)")
+        graft.streaming.TwsStreams.uvDedup(synthEventsStream(spark, dir))).count()
+      (n, "keyed state rows = distinct users (grows Rx)")
     },
     "stream_uv_hotkey_state" -> whole { dir =>
       // pathological-key twin of stream_uv_dedup_state: 50% of events
-      // collapse onto ONE user. FMGWS state stays one row per distinct
+      // collapse onto ONE user. Keyed state stays one row per distinct
       // key (the hot key is a single row — state does NOT grow with the
       // hot key's event share); the cost it concentrates is the hot
       // key's per-batch group iterator, which one task drains. The delta
@@ -197,7 +197,7 @@ object ScaleGrowth {
           when(pmod(col("event_id"), lit(2L)) === 0, lit(77777L))
             .otherwise(col("user_id") + 100000L))
       val out = graft.streaming.StreamRunner.collect(
-        graft.streaming.StatefulStreams.uvDedup(src))
+        graft.streaming.TwsStreams.uvDedup(src))
         .localCheckpoint(true)
       val n = out.count()
       val hotRows = out.filter(col("user_id") === 77777L).count()
@@ -206,7 +206,7 @@ object ScaleGrowth {
     },
     "stream_agg_hotgroup_state" -> whole { dir =>
       // hot-GROUP twin of stream_window_products: 50% of events collapse
-      // onto ONE event_type. Unlike FMGWS dedup (one state row per key
+      // onto ONE event_type. Unlike keyed dedup (one state row per key
       // regardless of share), the windowed agg's hot (window, type) group
       // carries half of every batch's rows AND its distinct-user
       // collect_set state — so the hot group's state GROWS with the hot
@@ -233,16 +233,13 @@ object ScaleGrowth {
           synthEventsStream(spark, dir), gapSec = 1800L)).count()
       (n, "session-window state rows ~ users x sessions (grows Rx)")
     },
-    // RocksDB twins of the two big-state rows: same computation under
+    // RocksDB twin of the session-window row: same computation under
     // RocksDBStateStoreProvider — the provider a real deployment uses
     // once state outgrows the executor heap. Healthy growth is the same
-    // shape as the HDFS-backed rows (state rows Rx, per-row cost flat);
+    // shape as the HDFS-backed row (state rows Rx, per-row cost flat);
     // the absolute times chart the provider's commit overhead curve.
-    "stream_uv_dedup_rocksdb" -> rocksDb(whole { dir =>
-      val n = graft.streaming.StreamRunner.collect(
-        graft.streaming.StatefulStreams.uvDedup(synthEventsStream(spark, dir))).count()
-      (n, "uvDedup under RocksDB provider (rows grow Rx)")
-    }),
+    // (stream_uv_dedup_state already runs on RocksDB: transformWithState
+    // requires it.)
     "stream_session_rocksdb" -> rocksDb(whole { dir =>
       val n = graft.streaming.StreamRunner.collect(
         graft.streaming.WindowedStreams.sessionStats(

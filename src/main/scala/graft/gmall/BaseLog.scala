@@ -24,7 +24,7 @@ object BaseLog {
 
   /** T1 batch shape (BaseLogApp.java:66-95): a device claiming is_new=1 is
     * rewritten to 0 unless this is its first event ever. Streaming twin:
-    * graft.streaming.StatefulStreams.newOldFlag. */
+    * graft.streaming.TwsStreams.newOldFlag. */
   def fixNewFlag(logs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("common.mid")).orderBy(col("ts"))

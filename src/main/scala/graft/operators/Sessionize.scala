@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Stateful per-key semantics of the reference, batch (oracle) shapes.
-  * The streaming twins live in graft.streaming (flatMapGroupsWithState).
+  * The streaming operators live in graft.streaming.TwsStreams
+  * (transformWithState); these batch shapes are their oracles.
   *
   *  - T1 new/old-visitor flag (dwd/BaseLogApp.java:66-95): first event per
   *    key keeps is_new=1, later events are rewritten to 0.

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
+  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Generalized CEP — the Flink CEP surface the reference programs against
   * (`Pattern.begin(..).next(..).within(..)` + timed-out-partials side
   * output, dwm/UserJumpDetailApp.java:65-96) as one keyed NFA over
-  * `flatMapGroupsWithState`, so a user with a pattern the reference never
+  * `transformWithState`, so a user with a pattern the reference never
   * shipped (different steps, more of them, relaxed contiguity,
   * quantifiers) doesn't have to hand-write a new state machine.
   *
@@ -45,16 +46,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * steps bound that list at O(pattern length); relaxed patterns and
   * unbounded quantifiers are bounded by `maxPartials` (oldest partials
   * force-expire onto the timeout side — the state-blowup guard for hot
-  * keys). One shuffle (the groupByKey), event-time timeouts prune state
-  * by watermark — the same cost model as the hand-written bounce machine.
+  * keys). One shuffle (the groupByKey), one event-time timer per key
+  * prunes state by watermark — the same cost model as the hand-written
+  * bounce machine.
   *
   * Batch/stream parity: both [[run]] and [[runBatch]] drive the SAME
-  * [[advance]] NFA, so the batch twin is the oracle for the streaming
+  * [[advance]] NFA, so the batch path is the oracle for the streaming
   * path by construction (CepSpec pins it; the bounce pattern reproduces
-  * StatefulStreams.bounces exactly).
+  * TwsStreams.bounces exactly).
   */
 object Cep {
-  import StatefulStreams.{micros, sorted, toEvents, Event}
+  import TwsStreams.{micros, sorted, toEvents, Event}
 
   sealed trait Contiguity extends Serializable
   case object Strict extends Contiguity
@@ -265,44 +267,73 @@ object Cep {
     (out.toList, partials)
   }
 
+  /** The keyed state of [[run]]: the live partial branches in one
+    * ValueState, and one event-time timer at the earliest partial's
+    * deadline. The timer registers that deadline's ms-floor +1, like
+    * TwsStreams' bounce timer: tws timers fire once the watermark REACHES
+    * them, while a partial times out only once the watermark PASSES its
+    * deadline (the strict < of [[runBatch]]'s cutoff). A fired timer times
+    * out every partial the watermark passed and re-arms at the survivors'
+    * earliest deadline; the engine deletes the fired timer itself. */
+  private class CepProcessor(pattern: Pattern,
+      partialsEnc: Encoder[List[Partial]])
+      extends StatefulProcessor[Long, Event, CepMatch] {
+    @transient private var live: ValueState[List[Partial]] = _
+    private val withinUs = pattern.withinUs
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      live = getHandle.getValueState[List[Partial]]("partials", partialsEnc,
+        TTLConfig.NONE)
+
+    private def deadlineMs(p: Partial): Long = (p.startUs + withinUs) / 1000L
+
+    private def timerOf(ps: List[Partial]): Option[Long] =
+      if (ps.isEmpty) None else Some(ps.map(deadlineMs).min + 1L)
+
+    /** Store `ps` and move the key's one live timer from `armed` to the
+      * earliest deadline of `ps`. */
+    private def keep(ps: List[Partial], armed: Option[Long]): Unit = {
+      val next = timerOf(ps)
+      if (next != armed) {
+        armed.foreach(getHandle.deleteTimer)
+        next.foreach(getHandle.registerTimer)
+      }
+      if (ps.isEmpty) live.clear() else live.update(ps)
+    }
+
+    private def stored: List[Partial] = if (live.exists()) live.get() else Nil
+
+    override def handleInputRows(uid: Long, rows: Iterator[Event],
+        timerValues: TimerValues): Iterator[CepMatch] = {
+      val prev = stored
+      val (out, partials) = advance(pattern, prev, sorted(rows))
+      keep(partials, timerOf(prev))
+      out.iterator
+    }
+
+    override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[CepMatch] = {
+      val wmMs = timerValues.getCurrentWatermarkInMs()
+      val (expired, alive) = stored.partition(deadlineMs(_) < wmMs)
+      keep(alive, None)
+      expired.filterNot(_.emitted).map(timeoutOf(_, uid)).iterator
+    }
+  }
+
   /** Streaming CEP: requires `withWatermark` on ts upstream (the timeout
     * side fires off the event-time watermark, exactly like
-    * StatefulStreams.bounces). Keys whose partials' windows are still
+    * TwsStreams.bounces). Keys whose partials' windows are still
     * open at the final watermark stay pending — live-stream semantics. */
   def run(events: DataFrame, pattern: Pattern): DataFrame = {
     requireValid(pattern)
     val spark = events.sparkSession
     import spark.implicits._
-    val withinUs = pattern.withinUs
-    toEvents(events)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[Event], state: GroupState[List[Partial]]) =>
-          if (!it.hasNext && state.hasTimedOut) {
-            val wmMs = state.getCurrentWatermarkMs()
-            val (expired, alive) = state.get
-              .partition(p => (p.startUs + withinUs) / 1000L < wmMs)
-            if (alive.isEmpty) state.remove()
-            else {
-              state.update(alive)
-              state.setTimeoutTimestamp(alive.map(p => (p.startUs + withinUs) / 1000L).min)
-            }
-            expired.filterNot(_.emitted).map(timeoutOf(_, uid)).iterator
-          } else {
-            val (out, partials) =
-              advance(pattern, state.getOption.getOrElse(Nil), sorted(it))
-            if (partials.isEmpty) { if (state.exists) state.remove() }
-            else {
-              state.update(partials)
-              state.setTimeoutTimestamp(partials.map(p => (p.startUs + withinUs) / 1000L).min)
-            }
-            out.iterator
-          }
-      }
-      .toDF()
+    TwsStreams.keyed(events,
+      new CepProcessor(pattern, implicitly[Encoder[List[Partial]]]),
+      TimeMode.EventTime())
   }
 
-  /** Batch twin: the same NFA over each key's full history. End-of-data
+  /** Batch path: the same NFA over each key's full history. End-of-data
     * handling for still-open partials: with `cutoffMs = None` (batch
     * truth) every unfinished partial times out; with `Some(wm)` (stream
     * parity) only partials whose deadline the final watermark passed —

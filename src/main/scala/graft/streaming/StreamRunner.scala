@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 import graft.Sessions.withConf
 import graft.TmpDirs.{rmTree, shmRoot}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -29,6 +30,26 @@ object StreamRunner {
     * state volume / executor count instead. */
   val StatePartitions: Int = 8
 
+  /** The state-store conf a transformWithState query runs under: the API
+    * requires the RocksDB provider, and changelog checkpointing makes each
+    * commit ship the batch's changelog instead of a full snapshot
+    * (snapshots move to background maintenance) — the production posture
+    * for frequent small commits, and measured faster here too (AbDrift
+    * r12: tws_uv_changelog 2.33 s vs 2.60 s median without). */
+  private[graft] val RocksDbConf: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** The state-store conf `stream` needs: [[RocksDbConf]] when its plan
+    * holds a transformWithState operator, none otherwise (other stateful
+    * operators keep the session's provider). */
+  private[graft] def stateConf(stream: DataFrame): Seq[(String, String)] =
+    if (stream.queryExecution.logical.exists(_.isInstanceOf[TransformWithState]))
+      RocksDbConf
+    else Nil
+
   /** A fresh throwaway dir on tmpfs: these are bounded-run checkpoints,
     * and state-store commits are pure file-I/O overhead on them (a durable
     * store is only right for a real long-running deployment, which goes
@@ -39,7 +60,8 @@ object StreamRunner {
   /** The one bounded-run loop every entry point shares: `sink` sets up
     * the writer (memory sink or a `foreachBatch` body), the query runs
     * with Trigger.AvailableNow to termination with `statePartitions` as
-    * its shuffle/state width, and a fresh checkpoint is swept on exit,
+    * its shuffle/state width and [[stateConf]] as its state-store conf,
+    * and a fresh checkpoint is swept on exit,
     * success or failure (unswept, a long bench session leaves thousands
     * of committed-offset dirs on tmpfs). A `sharedCkpt` is left in place
     * for its owner to sweep. */
@@ -48,7 +70,8 @@ object StreamRunner {
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
     val ckpt = sharedCkpt.getOrElse(freshDir("ckpt"))
     try withConf(stream.sparkSession,
-        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
+        ("spark.sql.shuffle.partitions" -> statePartitions.toString) +:
+          stateConf(stream): _*) {
       sink(stream.writeStream)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())

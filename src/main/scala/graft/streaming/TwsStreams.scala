@@ -2,53 +2,112 @@ package graft.streaming
 
 import java.time.Duration
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-/** Twins of the [[StatefulStreams]] operators on Spark 4's
-  * `transformWithState` — the arbitrary-state API that replaces
-  * `flatMapGroupsWithState` (SPARK-46815): named state variables with
-  * per-state TTL, first-class event-time timers (register/delete/list,
-  * fired through `handleExpiredTimer`), and state schema evolution, all
-  * bound to the RocksDB state-store provider.
+/** Keyed-state streaming operators (SURVEY.md §2.6) on Spark 4's
+  * `transformWithState` (SPARK-46815), the engine's one stateful-operator
+  * API and the Spark analogue of the reference's keyed `ValueState` plus
+  * event-time timers: named state variables with per-state TTL,
+  * first-class event-time timers (register/delete/list, fired through
+  * `handleExpiredTimer`), and state schema evolution, all bound to the
+  * RocksDB state-store provider ([[StreamRunner]] sets it for every run
+  * whose plan holds one of these operators).
   *
-  * Why twins exist: the FMGWS originals stay the portable default (they
-  * run under either provider), while these prove the SAME semantics —
-  * against the SAME DuckDB oracles — through the modern API the
-  * reference's keyed `ValueState` + timer machinery actually maps to:
+  * Event order: within one micro-batch a key's rows arrive unordered, so
+  * every processor sorts its batch slice by (ts, event_id) before applying
+  * its state machine. Across micro-batches, Kafka per-partition order plus
+  * the event-time timers give the same guarantees the reference gets from
+  * Flink's keyed streams + watermarks.
   *
-  *  - the reference's 24h state TTL on the UV dedup value state
-  *    (dwm/UniqueVisitApp.java:58-66, StateTtlConfig) is FMGWS-
-  *    inexpressible (the calendar-day compare subsumes it there) but is a
-  *    first-class `TTLConfig` here;
-  *  - the reference's registered event-time timer for the bounce timeout
-  *    (dwm/UserJumpDetailApp.java:56-96, CEP within()) maps to
-  *    `registerTimer`/`handleExpiredTimer` instead of FMGWS's single
-  *    implicit `GroupStateTimeout`.
+  * Processors without a timer (`newOldFlag`, `uvDedup`) run in
+  * `TimeMode.None()`: they need no upstream watermark and never drop a row
+  * as late. Timer processors run in `TimeMode.EventTime()` and need
+  * `withWatermark` on ts upstream. A timer fires at the end of the batch
+  * whose eviction watermark reaches it; a key whose last event is still
+  * inside its window at the final watermark stays pending (exactly Flink's
+  * unfinished-window behavior on a live stream), and the gates' oracles
+  * apply the same final-watermark cutoff to the batch truth.
   *
-  * Equivalence with the FMGWS originals over the ts-contiguous split
-  * source (why the same oracle applies): state transitions are identical;
-  * the only API-level difference is WHEN a timer may fire. A tws timer
-  * registered in batch k fires at the END of batch k if the eviction
-  * watermark already passed it, where FMGWS would fire it in batch k+1
-  * (timed-out groups are only those with no new data). But any later
-  * non-late event e for that key then has ts ≥ watermark > pending+gap,
-  * so the FMGWS data path emits the same pending row on arrival — the
-  * appended output SETS are equal; ordering is normalized by the gates'
-  * final sort. State is O(1) per key in both.
-  *
-  * Scale: transformWithState requires RocksDB state stores (the 10⁸-key
-  * posture SCALE.md argues); the gates set the provider around the run
-  * exactly like `stream_t2_uv_rocksdb`.
+  * Scale: state is O(1) per key (a flag, a date, one pending event) — the
+  * shapes that survive hundreds of millions of keys under RocksDB state
+  * stores. The shuffle is the groupByKey hash exchange, identical to the
+  * reference's keyBy.
   */
 object TwsStreams {
 
-  import StatefulStreams.{DatedEvent, Event, micros, sorted, toEvents}
+  case class Event(
+      event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+      event_type: String, value: Double, props: String)
 
-  /** T2 via transformWithState: first event per key per calendar day.
-    * One named ValueState[String] ("lastDt") holding the last emitted
-    * date.
+  case class FlaggedEvent(
+      event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+      event_type: String, value: Double, props: String, is_new: Int)
+
+  case class DatedEvent(
+      event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+      event_type: String, value: Double, props: String, dt: String)
+
+  private[streaming] def toEvents(df: DataFrame): Dataset[Event] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select("event_id", "ts", "user_id", "event_type", "value", "props").as[Event]
+  }
+
+  /** Microsecond event time (Timestamp.getTime floors to ms — comparing in
+    * ms would disagree with the µs-exact batch oracle on sub-ms gaps). */
+  private[streaming] def micros(t: java.sql.Timestamp): Long =
+    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  private[streaming] def sorted(it: Iterator[Event]): Seq[Event] =
+    it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+
+  /** The one way a keyed-state operator runs: `events` as typed [[Event]]s,
+    * grouped by `keyOf` (the user by default; the groupByKey exchange is
+    * the reference's keyBy), through `processor` in append mode. */
+  private[streaming] def keyed[O <: Product : TypeTag](events: DataFrame,
+      processor: StatefulProcessor[Long, Event, O], timeMode: TimeMode,
+      keyOf: Event => Long = _.user_id): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    toEvents(events)
+      .groupByKey(keyOf)
+      .transformWithState(processor, timeMode, OutputMode.Append())
+      .toDF()
+  }
+
+  /** T1 (dwd/BaseLogApp.java:66-95): the first-ever event per key is
+    * flagged is_new=1; every later event is rewritten to 0. State: one
+    * boolean ("seen"). */
+  private class NewOldFlagProcessor
+      extends StatefulProcessor[Long, Event, FlaggedEvent] {
+    @transient private var seen: ValueState[Boolean] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      seen = getHandle.getValueState[Boolean]("seen", Encoders.scalaBoolean,
+        TTLConfig.NONE)
+
+    override def handleInputRows(key: Long, rows: Iterator[Event],
+        timerValues: TimerValues): Iterator[FlaggedEvent] = {
+      val firstEver = !seen.exists()
+      val out = sorted(rows).zipWithIndex.map { case (e, i) =>
+        FlaggedEvent(e.event_id, e.ts, e.user_id, e.event_type, e.value,
+          e.props, if (firstEver && i == 0) 1 else 0)
+      }
+      seen.update(true)
+      out.iterator
+    }
+  }
+
+  def newOldFlag(events: DataFrame): DataFrame =
+    keyed(events, new NewOldFlagProcessor, TimeMode.None())
+
+  /** T2 (dwm/UniqueVisitApp.java:50-92): emit the first event per key per
+    * calendar day. One named ValueState[String] ("lastDt") holding the
+    * last emitted date, exactly the reference's ValueState<String>.
     *
     * Why the state carries NO TTLConfig here even though the reference
     * attaches a 24h TTL (dwm/UniqueVisitApp.java:58-66): Spark only
@@ -61,7 +120,7 @@ object TwsStreams {
     * harness; `ttlExpiry` below (and TwsSpec) proves the expiry
     * semantics themselves under an explicitly-stopped query instead.
     * Correctness never depended on it: a new day always differs from the
-    * stored date, the same argument StatefulStreams.uvDedup makes. */
+    * stored date, so the calendar-day compare subsumes the 24h TTL. */
   private class UvDedupProcessor
       extends StatefulProcessor[Long, Event, DatedEvent] {
     @transient private var lastDt: ValueState[String] = _
@@ -88,43 +147,42 @@ object TwsStreams {
     }
   }
 
-  def uvDedup(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    toEvents(events)
-      .groupByKey(_.user_id)
-      .transformWithState(new UvDedupProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF()
-  }
+  def uvDedup(events: DataFrame): DataFrame =
+    keyed(events, new UvDedupProcessor, TimeMode.None())
 
-  /** T3 via transformWithState: bounce = entry event with no successor
-    * within `gapUs`, decided either by the next event arriving too late
-    * (data path) or by an EVENT-TIME TIMER at pending+gap firing first
-    * (`handleExpiredTimer` — the reference's CEP timeout side-output).
-    * Exactly one timer is live per key: the previous one is deleted
-    * before the new pending's is registered (tws timers accumulate,
-    * unlike FMGWS's single implicit timeout — a stale timer would fire a
-    * pending that data already resolved). */
+  /** T3 (dwm/UserJumpDetailApp.java:56-96): bounce = entry event with no
+    * successor within `gapUs` — the CEP "entry page followed by another
+    * entry within N seconds, or timeout" pattern as one pending event plus
+    * an event-time timer. It is decided either by the next event arriving
+    * too late (data path, the CEP *matched* branch) or by the EVENT-TIME
+    * TIMER at pending+gap firing first (`handleExpiredTimer` — the CEP
+    * *timed-out* side output, unioned at :96). Exactly one timer is live
+    * per key, the one of the stored pending event: it is deleted before
+    * the new pending's is registered (tws timers accumulate — a stale
+    * timer would fire a pending that data already resolved). */
   private class BounceProcessor(gapUs: Long)
       extends StatefulProcessor[Long, Event, Event] {
     @transient private var pending: ValueState[Event] = _
-    @transient private var timerTs: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       pending = getHandle.getValueState[Event]("pending",
         Encoders.product[Event], TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long]("timerTs",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
+
+    // ms-floor of the deadline, +1 because tws timers expire INCLUSIVELY
+    // (TimerStateImpl's expiry iterator, decompiled: timers with ts <=
+    // eviction watermark fire) while a bounce is STRICT (the watermark
+    // must pass the deadline: the oracle's strict <). Registering
+    // floor(deadline_ms)+1 makes "fires iff wmMs > floor(deadline_ms)"
+    // hold exactly, even if an event ever lands on the ms boundary
+    // (µs-random testdata never does, but the result shouldn't hang on it).
+    private def timerOf(p: Event): Long = (micros(p.ts) + gapUs) / 1000L + 1L
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[Event] = {
-      val evs = sorted(rows)
-      if (evs.isEmpty) return Iterator.empty
       val out = scala.collection.mutable.ArrayBuffer.empty[Event]
-      var p = if (pending.exists()) Some(pending.get()) else None
-      evs.foreach { e =>
+      val prev = if (pending.exists()) Some(pending.get()) else None
+      var p = prev
+      sorted(rows).foreach { e =>
         p.foreach { pp =>
           if (micros(e.ts) - micros(pp.ts) > gapUs) out += pp
         }
@@ -132,19 +190,8 @@ object TwsStreams {
       }
       p.foreach { pp =>
         pending.update(pp)
-        if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-        // ms-floor like the FMGWS original (StatefulStreams.bounces), +1
-        // because tws timers expire INCLUSIVELY (TimerStateImpl's expiry
-        // iterator, decompiled: timers with ts <= eviction watermark
-        // fire) while FMGWS event-time timeouts are STRICT (ts <
-        // watermark). Registering floor(deadline_ms)+1 makes
-        // "fires iff wmMs > floor(deadline_ms)" hold exactly — bit-equal
-        // to the FMGWS arm and the strict-< oracle even if an event ever
-        // lands on the ms boundary (µs-random testdata never does, but
-        // parity shouldn't hang on that).
-        val t = (micros(pp.ts) + gapUs) / 1000L + 1L
-        getHandle.registerTimer(t)
-        timerTs.update(t)
+        prev.foreach(pv => getHandle.deleteTimer(timerOf(pv)))
+        getHandle.registerTimer(timerOf(pp))
       }
       out.iterator
     }
@@ -154,21 +201,13 @@ object TwsStreams {
       if (pending.exists()) {
         val pp = pending.get()
         pending.clear()
-        timerTs.clear()
         Iterator.single(pp)
       } else Iterator.empty
     }
   }
 
-  def bounces(events: DataFrame, gapSec: Long): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    toEvents(events)
-      .groupByKey(_.user_id)
-      .transformWithState(new BounceProcessor(gapSec * 1000000L),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF()
-  }
+  def bounces(events: DataFrame, gapSec: Long): DataFrame =
+    keyed(events, new BounceProcessor(gapSec * 1000000L), TimeMode.EventTime())
 
   /** T6's session variant via transformWithState: one open session per
     * key — (start_us, last_us, n_events) in a ValueState — merged on
@@ -237,15 +276,9 @@ object TwsStreams {
     }
   }
 
-  def sessionStats(events: DataFrame, gapSec: Long): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    toEvents(events)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapSec * 1000000L),
-        TimeMode.EventTime(), OutputMode.Append())
+  def sessionStats(events: DataFrame, gapSec: Long): DataFrame =
+    keyed(events, new SessionProcessor(gapSec * 1000000L), TimeMode.EventTime())
       .toDF("user_id", "stt_us", "n_events")
-  }
 
   /** TTL probe for the spec: per input row, report whether the keyed
     * ValueState (TTL-bound) still existed when the row arrived, then
@@ -272,15 +305,9 @@ object TwsStreams {
     }
   }
 
-  def ttlProbe(events: DataFrame, ttl: Duration): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    toEvents(events)
-      .groupByKey(_.user_id)
-      .transformWithState(new TtlProbeProcessor(ttl),
-        TimeMode.ProcessingTime(), OutputMode.Append())
+  def ttlProbe(events: DataFrame, ttl: Duration): DataFrame =
+    keyed(events, new TtlProbeProcessor(ttl), TimeMode.ProcessingTime())
       .toDF("user_id", "event_id", "had_state")
-  }
 
   case class TokState(tok: Long, lastTick: Long)
   case class Admit(k: Long, event_id: Long, accepted: Boolean)
@@ -366,27 +393,14 @@ object TwsStreams {
     }
   }
 
-  def ema(events: DataFrame, keyOf: StatefulStreams.Event => Long,
-      alpha: Double): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    toEvents(events)
-      .groupByKey(keyOf)
-      .transformWithState(new EmaProcessor(alpha),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF()
-  }
+  def ema(events: DataFrame, keyOf: Event => Long,
+      alpha: Double): DataFrame =
+    keyed(events, new EmaProcessor(alpha), TimeMode.EventTime(), keyOf)
 
-  def rateLimit(events: DataFrame, keyOf: StatefulStreams.Event => Long,
-      capacity: Int, refillPerTick: Int, tickSeconds: Long): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    toEvents(events)
-      .groupByKey(keyOf)
-      .transformWithState(
-        new RateLimitProcessor(capacity.toLong, refillPerTick.toLong,
-          tickSeconds),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF()
-  }
+  def rateLimit(events: DataFrame, keyOf: Event => Long,
+      capacity: Int, refillPerTick: Int, tickSeconds: Long): DataFrame =
+    keyed(events,
+      new RateLimitProcessor(capacity.toLong, refillPerTick.toLong,
+        tickSeconds),
+      TimeMode.EventTime(), keyOf)
 }

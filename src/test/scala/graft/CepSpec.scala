@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Cep, Sources, StatefulStreams, StreamRunner}
+import graft.streaming.{Cep, Sources, StreamRunner, TwsStreams}
 import org.apache.spark.sql.functions._
 
 class CepSpec extends SparkSpec {
@@ -57,11 +57,11 @@ class CepSpec extends SparkSpec {
     assert(stream.filter(_._5).forall(_._4 == 3))
   }
 
-  test("the bounce pattern reproduces StatefulStreams.bounces exactly") {
+  test("the bounce pattern reproduces TwsStreams.bounces exactly") {
     // begin(any).next(any).within(gap): a 1-matched partial that times out
     // IS a bounce (no successor within gap) — the generalized machine must
     // reproduce the hand-written one event for event
-    val anyEvent = (_: StatefulStreams.Event) => true
+    val anyEvent = (_: TwsStreams.Event) => true
     val p = Cep.Pattern.begin("first")(anyEvent).next("second")(anyEvent).within(1800L)
     val viaCep = StreamRunner.collect(
         Cep.run(Sources.eventsStream(spark, dir).withWatermark("ts", "0 seconds"), p))
@@ -69,7 +69,7 @@ class CepSpec extends SparkSpec {
       .select(col("user_id"), col("first_event_id").as("event_id"))
       .as[(Long, Long)].collect().sorted
     val viaBounces = StreamRunner.collect(
-        StatefulStreams.bounces(
+        TwsStreams.bounces(
           Sources.eventsStream(spark, dir).withWatermark("ts", "0 seconds"),
           gapSec = 1800L))
       .select("user_id", "event_id").as[(Long, Long)].collect().sorted
@@ -78,7 +78,7 @@ class CepSpec extends SparkSpec {
   }
 
   test("relaxed contiguity (followedBy) skips non-matching events; strict dies") {
-    def ev(id: Long, sec: Long, t: String) = StatefulStreams.Event(
+    def ev(id: Long, sec: Long, t: String) = TwsStreams.Event(
       id, new java.sql.Timestamp(sec * 1000L), 1L, t, 0.0, "{}")
     val evs = Seq(ev(1, 0, "a"), ev(2, 10, "x"), ev(3, 20, "b")).toDS().toDF()
     val strict = Cep.Pattern.begin("a")(_.event_type == "a")
@@ -96,7 +96,7 @@ class CepSpec extends SparkSpec {
 
   test("streaming hot key: maxPartials bounds state through the real stream path") {
     // 5000 never-completing partials on ONE key (plus organic keys) driven
-    // through the actual flatMapGroupsWithState streaming path. within is
+    // through the actual transformWithState streaming path. within is
     // far beyond the fixture's span, so NO watermark timeout ever fires:
     // without the cap the output would be empty (everything pending).
     // With maxPartials=10 each arrival force-expires the oldest partial
@@ -136,12 +136,12 @@ class CepSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
-    def ev(id: Long, user: Long, sec: Long, t: String) = StatefulStreams.Event(
+    def ev(id: Long, user: Long, sec: Long, t: String) = TwsStreams.Event(
       id, new java.sql.Timestamp(sec * 1000L), user, t, 0.0, "{}")
-    def runBatches(batches: Seq[Seq[StatefulStreams.Event]])(
+    def runBatches(batches: Seq[Seq[TwsStreams.Event]])(
         f: DataFrame => DataFrame): DataFrame = {
       implicit val sqlCtx = spark.sqlContext
-      val ms = MemoryStream[StatefulStreams.Event]
+      val ms = MemoryStream[TwsStreams.Event]
       val name = s"cep_mb_${System.nanoTime()}"
       val q = f(ms.toDF().withWatermark("ts", "0 seconds"))
         .writeStream.format("memory").queryName(name).outputMode("append")
@@ -161,11 +161,11 @@ class CepSpec extends SparkSpec {
     // (batch 3) -> the partial must survive TWO batch boundaries and
     // complete. user 2: view@20, never followed up; the watermark
     // reaching 20+1000 < 2000 (batch 4's event time) must time it out.
-    val out = runBatches(Seq(
+    val out = withRocksDb(runBatches(Seq(
       Seq(ev(1, 1, 10, "view"), ev(2, 2, 20, "view")),
       Seq(ev(3, 1, 50, "click")),
       Seq(ev(4, 1, 90, "purchase")),
-      Seq(ev(5, 3, 2000, "view"))))(df => Cep.run(df, relaxed))
+      Seq(ev(5, 3, 2000, "view"))))(df => Cep.run(df, relaxed)))
       .select("user_id", "first_event_id", "last_event_id", "steps_matched", "matched")
       .as[(Long, Long, Long, Int, Boolean)].collect().sortBy(_._2).toSeq
     assert(out.contains((1L, 1L, 4L, 3, true)),
@@ -178,7 +178,7 @@ class CepSpec extends SparkSpec {
   }
 
   test("times(n) quantifier: n strict repeats, noSkip overlapping starts") {
-    def ev(id: Long, sec: Long, t: String) = StatefulStreams.Event(
+    def ev(id: Long, sec: Long, t: String) = TwsStreams.Event(
       id, new java.sql.Timestamp(sec * 1000L), 1L, t, 0.0, "{}")
     val evs = Seq(ev(1, 0, "a"), ev(2, 10, "a"), ev(3, 20, "a"), ev(4, 30, "b"))
       .toDS().toDF()
@@ -203,7 +203,7 @@ class CepSpec extends SparkSpec {
   }
 
   test("oneOrMore is reluctant: every sub-run of a consecutive run emits; no timeouts") {
-    def ev(id: Long, sec: Long, t: String) = StatefulStreams.Event(
+    def ev(id: Long, sec: Long, t: String) = TwsStreams.Event(
       id, new java.sql.Timestamp(sec * 1000L), 1L, t, 0.0, "{}")
     val evs = Seq(ev(1, 0, "a"), ev(2, 10, "a"), ev(3, 20, "x"), ev(4, 30, "a"))
       .toDS().toDF()
@@ -219,7 +219,7 @@ class CepSpec extends SparkSpec {
 
   test("timesOrMore(2): emits at the minimum then each extension; strict break " +
     "is silent, trailing lone start times out") {
-    def ev(id: Long, sec: Long, t: String) = StatefulStreams.Event(
+    def ev(id: Long, sec: Long, t: String) = TwsStreams.Event(
       id, new java.sql.Timestamp(sec * 1000L), 1L, t, 0.0, "{}")
     val evs = Seq(ev(1, 0, "a"), ev(2, 10, "a"), ev(3, 20, "b"), ev(4, 30, "a"))
       .toDS().toDF()
@@ -235,7 +235,7 @@ class CepSpec extends SparkSpec {
 
   test("optional middle step: skipped when a later step's event arrives first; " +
     "a trailing optional step is rejected") {
-    def ev(id: Long, user: Long, sec: Long, t: String) = StatefulStreams.Event(
+    def ev(id: Long, user: Long, sec: Long, t: String) = TwsStreams.Event(
       id, new java.sql.Timestamp(sec * 1000L), user, t, 0.0, "{}")
     val evs = Seq(
       ev(1, 1, 0, "v"), ev(2, 1, 10, "c"), ev(3, 1, 20, "p"),   // v c p
@@ -262,7 +262,7 @@ class CepSpec extends SparkSpec {
   }
 
   test("optional FIRST step: the pattern may start at the step after it") {
-    def ev(id: Long, sec: Long, t: String) = StatefulStreams.Event(
+    def ev(id: Long, sec: Long, t: String) = TwsStreams.Event(
       id, new java.sql.Timestamp(sec * 1000L), 1L, t, 0.0, "{}")
     val p = Cep.Pattern.begin("a")(_.event_type == "a").optional
       .followedBy("b")(_.event_type == "b").within(100L)
@@ -279,7 +279,7 @@ class CepSpec extends SparkSpec {
   }
 
   test("skipPastLastEvent discards live partials when a match completes") {
-    def ev(id: Long, sec: Long, t: String) = StatefulStreams.Event(
+    def ev(id: Long, sec: Long, t: String) = TwsStreams.Event(
       id, new java.sql.Timestamp(sec * 1000L), 1L, t, 0.0, "{}")
     val evs = Seq(ev(1, 0, "a"), ev(2, 5, "a"), ev(3, 10, "a")).toDS().toDF()
     val base = Cep.Pattern.begin("a")(_.event_type == "a").timesOrMore(2).within(100L)
@@ -332,7 +332,7 @@ class CepSpec extends SparkSpec {
   test("maxPartials force-expires the oldest partials (hot-key state bound)") {
     // begin(any) with relaxed step that never fires: every event opens a
     // partial that lives until the window closes — unbounded without a cap
-    def ev(id: Long) = StatefulStreams.Event(
+    def ev(id: Long) = TwsStreams.Event(
       id, new java.sql.Timestamp(id * 1000L), 1L, "a", 0.0, "{}")
     val evs = (1L to 50L).map(ev).toDS().toDF()
     val p = Cep.Pattern.begin("a")(_.event_type == "a")

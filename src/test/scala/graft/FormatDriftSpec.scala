@@ -100,7 +100,7 @@ class FormatDriftSpec extends SparkSpec {
   test("a stateful stream gate (uvDedup) is shape-invariant") {
     val results = shapes.map { case (name, t) =>
       val out = graft.streaming.StreamRunner.collect(
-        graft.streaming.StatefulStreams.uvDedup(
+        graft.streaming.TwsStreams.uvDedup(
           graft.streaming.Sources.eventsStream(spark, writeFixture(t))))
       name -> out.select(col("user_id"), col("dt"), col("event_id"))
         .orderBy(col("user_id"), col("dt"))

@@ -4,27 +4,45 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Only [[graft.operators.Versioned]] knows where a version's manifest
+/** Source guards over `src/main/scala`.
+  *
+  * Only [[graft.operators.Versioned]] knows where a version's manifest
   * lives: a rename-protocol store commits `_log/v=N`, a CAS store a
   * pointer to `_log/m-<token>`. Library code that opens a manifest
   * builds no `_log/v=$...` path itself; it resolves the directory
-  * through `Versioned.manifestDir`, which serves both protocols. */
+  * through `Versioned.manifestDir`, which serves both protocols.
+  *
+  * `transformWithState` is the one keyed-state streaming API: no library
+  * file names the older `flatMapGroupsWithState` / `mapGroupsWithState`
+  * API or its `GroupState` handle, not even in a comment. */
 class StoreLayoutGuardSpec extends AnyFunSuite {
 
-  test("no library file but Versioned.scala builds a _log/v=$ path") {
+  /** "path:line: text" of every `src/main/scala` line that `hit`s, in
+    * files other than `exempt`. */
+  private def offenders(exempt: String)(hit: String => Boolean): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root missing")
     val walk = Files.walk(root)
-    val offenders = try walk.iterator().asScala
+    try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "Versioned.scala")
+        p.getFileName.toString != exempt)
       .flatMap { (p: Path) =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("_log/v=$") =>
-            s"$p:${i + 1}: ${line.trim}"
+          case (line, i) if hit(line) => s"$p:${i + 1}: ${line.trim}"
         }
       }.toList
     finally walk.close()
-    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no library file but Versioned.scala builds a _log/v=$ path") {
+    val found = offenders("Versioned.scala")(_.contains("_log/v=$"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no library file uses the flatMapGroupsWithState API") {
+    val found = offenders("")(line =>
+      Seq("flatMapGroupsWithState", "mapGroupsWithState", "GroupState")
+        .exists(line.contains))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -2,8 +2,8 @@ package graft
 
 import graft.gmall.OrderWide
 import graft.operators.{Joins, Sessionize}
-import graft.streaming.StatefulStreams
-import graft.streaming.StatefulStreams.Event
+import graft.streaming.TwsStreams
+import graft.streaming.TwsStreams.Event
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, LogicalPlan}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -77,45 +77,34 @@ class StreamingParitySpec extends SparkSpec {
   }
 
   test("T1 new/old flag: only the first-ever event is new, across batches") {
-    val out = runBatches(Seq(
+    val out = withRocksDb(runBatches(Seq(
       Seq(ev(1, 100, 10), ev(2, 100, 20)),
-      Seq(ev(3, 100, 30), ev(4, 200, 40))))(StatefulStreams.newOldFlag)
+      Seq(ev(3, 100, 30), ev(4, 200, 40))))(TwsStreams.newOldFlag))
       .collect().map(r => (r.getAs[Long]("event_id"), r.getAs[Int]("is_new"))).toMap
     assert(out === Map(1L -> 1, 2L -> 0, 3L -> 0, 4L -> 1))
   }
 
   test("T2 uv dedup: first event per user-day survives, state spans batches") {
     val day = 86400L
-    val out = runBatches(Seq(
+    val out = withRocksDb(runBatches(Seq(
       Seq(ev(1, 100, 10), ev(2, 100, 20)),            // day 0: keep 1
       Seq(ev(3, 100, 30)),                            // day 0 again: drop
       Seq(ev(4, 100, day + 5), ev(5, 200, day + 6)))  // day 1: keep both
-    )(StatefulStreams.uvDedup)
+    )(TwsStreams.uvDedup))
       .collect().map(_.getAs[Long]("event_id")).toSet
     assert(out === Set(1L, 4L, 5L))
   }
 
   test("T3 bounce: successor-gap match emits; watermark timeout emits; pending stays") {
-    val out = runBatches(Seq(
+    val out = withRocksDb(runBatches(Seq(
       Seq(ev(1, 100, 0), ev(2, 100, 10)),   // gap 10s < 60: ev1 not a bounce
       Seq(ev(3, 100, 200)),                 // gap 190s > 60: ev2 bounces on arrival
       Seq(ev(4, 200, 500)),                 // watermark -> 500: ev3 times out (200+60<500)
       Seq(ev(5, 300, 501))))(df =>
-      StatefulStreams.bounces(df.withWatermark("ts", "0 seconds"), gapSec = 60L))
+      TwsStreams.bounces(df.withWatermark("ts", "0 seconds"), gapSec = 60L)))
       .collect().map(_.getAs[Long]("event_id")).toSet
     // ev4 (ts 500) + 60 > watermark 501 and ev5 is trailing: both stay pending
     assert(out === Set(2L, 3L))
-  }
-
-  test("stateful ops run under the RocksDB state store (the big-state path)") {
-    Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val out = runBatches(Seq(
-        Seq(ev(1, 100, 10), ev(2, 100, 20)),
-        Seq(ev(3, 100, 30), ev(4, 200, 40))))(StatefulStreams.newOldFlag)
-        .collect().map(r => (r.getAs[Long]("event_id"), r.getAs[Int]("is_new"))).toMap
-      assert(out === Map(1L -> 1, 2L -> 0, 3L -> 0, 4L -> 1))
-    }
   }
 
   test("stream-stream LEFT OUTER interval join: matches emit on arrival, " +
@@ -298,7 +287,8 @@ class StreamingParitySpec extends SparkSpec {
     val events = Seq(
       ev(1, 1, 100), ev(2, 1, 200), ev(3, 1, 86400 + 100),
       ev(4, 2, 50), ev(5, 2, 60), ev(6, 3, 999))
-    val streamed = runBatches(events.grouped(2).toSeq)(StatefulStreams.uvDedup)
+    val streamed = withRocksDb(
+        runBatches(events.grouped(2).toSeq)(TwsStreams.uvDedup))
       .select("event_id").as[Long].collect().toSet
     val batch = Sessionize.uvDedup(events.toDF())
       .select("event_id").as[Long].collect().toSet

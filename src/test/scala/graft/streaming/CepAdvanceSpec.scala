@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.streaming.StatefulStreams.Event
+import graft.streaming.TwsStreams.Event
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed

@@ -67,21 +67,21 @@ class MultiBatchSpec extends SparkSpec {
     try {
       def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
         df.collect().map(_.toString).toSet
-      // T2 dedup — FMGWS ValueState across batches
+      // T2 dedup — keyed ValueState across batches
       val uvSingle = rows(StreamRunner.collect(
-        StatefulStreams.uvDedup(Sources.eventsStream(spark, dir)))
+        TwsStreams.uvDedup(Sources.eventsStream(spark, dir)))
         .select("user_id", "dt", "event_id"))
       val uvSplit = rows(StreamRunner.collect(
-        StatefulStreams.uvDedup(Sources.eventsStreamSplit(spark, dir)))
+        TwsStreams.uvDedup(Sources.eventsStreamSplit(spark, dir)))
         .select("user_id", "dt", "event_id"))
       assert(uvSplit == uvSingle)
       // T3 bounces — event-time timeouts now fire MID-stream
       val bSingle = rows(StreamRunner.collect(
-        StatefulStreams.bounces(Sources.eventsStream(spark, dir)
+        TwsStreams.bounces(Sources.eventsStream(spark, dir)
           .withWatermark("ts", "0 seconds"), gapSec = 1800L))
         .select("user_id", "event_id"))
       val bSplit = rows(StreamRunner.collect(
-        StatefulStreams.bounces(Sources.eventsStreamSplit(spark, dir)
+        TwsStreams.bounces(Sources.eventsStreamSplit(spark, dir)
           .withWatermark("ts", "0 seconds"), gapSec = 1800L))
         .select("user_id", "event_id"))
       assert(bSplit == bSingle)
