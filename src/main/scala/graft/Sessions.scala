@@ -23,9 +23,21 @@ import org.apache.spark.sql.SparkSession
   *     the compiling thread's class loader too, and each streaming query
   *     runs its tasks under a cloned session's loader, so a stream's
   *     task-side classes still compile once per query.)
+  *   - 2 MB Tungsten pages (`spark.buffer.pageSize`). Spark's default is
+  *     execution memory / cores / 16 rounded up to a power of two: 16 MB in
+  *     a 3 GB local[4] JVM, 64 MB in an 8 GB one. A string-keyed broadcast
+  *     relation (`UnsafeHashedRelation`) takes one whole page for its hash
+  *     map when the driver builds it and again when each task deserializes
+  *     it, and the deserialized copy stays in the block manager until the
+  *     broadcast is cleaned, so a 15-row config table pinned 16 MB per copy
+  *     and young GCs promoted it. Sort and hash-aggregate tasks also take a
+  *     whole page each. Records larger than a page still get a page of
+  *     their own size. The ceiling: a task addresses 8,192 pages, so
+  *     8,192 × 2 MB = 16 GB per task.
   *
-  * Both codegen settings are STATIC confs: they take effect only when this
-  * call builds the JVM's first session, before anything has been
+  * The codegen settings and the page size are STATIC confs: they take
+  * effect only when this call builds the JVM's first session (the page
+  * size when it builds the SparkContext), before anything has been
   * code-generated. That holds for every entry point (`SparkSpec`, `Bench`,
   * `Verify`, perfbench); a session created earlier by other code keeps its
   * own values and `getOrCreate` silently returns it.
@@ -61,6 +73,9 @@ object Sessions {
       // compiles went 263 → 237-239 on the chain and 187 → 179 on
       // store+corpus.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // one page per broadcast hash map, sort or aggregation buffer: see
+      // the scaladoc for the measured cost of the 16-64 MB default
+      .config("spark.buffer.pageSize", "2m")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.ui.enabled", "false")

@@ -288,6 +288,19 @@ object Versioned {
       StructField("mx", LongType),
       StructField("bloom", BinaryType)))))))
 
+  /** The schema of every tombstone file [[deleteKeysDv]] writes: the
+    * data file, the PHYSICAL key column and the stringified key. Tombstone
+    * reads name it, so none of them runs a parquet schema-inference job. */
+  private val TombstoneSchema: StructType = StructType(Seq(
+    StructField("file", StringType),
+    StructField("key_col", StringType),
+    StructField("key", StringType)))
+
+  /** The tombstone rows under `dvPaths`. */
+  private def readTombstones(spark: SparkSession,
+      dvPaths: Seq[String]): DataFrame =
+    spark.read.schema(TombstoneSchema).parquet(dvPaths.map(Manifest.unglob): _*)
+
   /** Per-file Bloom sizing CEILING for stats-carrying manifests (the
     * k16 file-skipping tier): sketches size to each (file, part)
     * group's ACTUAL distinct count ([[graft.functions.BloomAgg
@@ -407,7 +420,7 @@ object Versioned {
       dvPaths: Seq[String], nameOf: String => String): DataFrame =
     if (dvPaths.isEmpty) rows
     else {
-      val tomb = spark.read.parquet(dvPaths.map(Manifest.unglob): _*)
+      val tomb = readTombstones(spark, dvPaths)
       val keyCols = tomb.select(col("key_col")).distinct()
         .collect().map(_.getString(0))
       val tagged = rows.withColumn("__f", input_file_name())
@@ -562,9 +575,12 @@ object Versioned {
   /** Open version `v`'s manifest under its committed
     * `_manifest_schema.json`: the bounded-metadata rows are decoded
     * DRIVER-LOCALLY ([[ManifestLocal]]) and answered as a LocalRelation
-    * — every downstream collect/filter/distinct over the manifest then
-    * runs job-free in the optimizer, deleting one driver-scheduled Spark
-    * job from every store open (a path hit hundreds of times per bench).
+    * — a downstream collect, or a filter/projection then collect, over
+    * the manifest runs job-free in the optimizer, deleting one
+    * driver-scheduled Spark job from every store open (a path hit
+    * hundreds of times per bench). An aggregate (a `distinct`, a
+    * `groupBy`) is not folded into the LocalRelation and still runs
+    * jobs: collect the rows and aggregate on the driver instead.
     * Any decode surprise falls back to the distributed reader, with the
     * explicit sidecar schema (no inference job). Underscore-prefixed
     * sidecars are invisible to the parquet scan itself. */
@@ -933,11 +949,13 @@ object Versioned {
     val sch = readSchema(dir, v)
     val m = mapping(sch)
     val mDf = readManifest(spark, dir, v)
+    // the manifest is a LocalRelation: its (file, part) rows reach the
+    // driver without a job, where a distinct() over it would run two
+    val fileParts = mDf.select(col("file"), col("part")).collect()
+      .map(r => (r.getString(0), r.getString(1)))
     val affected = keys.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSet
-    val touched = mDf
-      .filter(col("part").isin(affected.toSeq: _*))
-      .select(col("file")).distinct().collect().map(_.getString(0)).toSet
+    val touched = fileParts.collect { case (f, p) if affected(p) => f }.toSet
     // same contract as merge: keys must live under the partition values
     // the `keys` frame claims, or the pruned scan never sees them and
     // the erase "succeeds" while the rows survive — the silent failure
@@ -946,9 +964,7 @@ object Versioned {
     // the UNTOUCHED files' live key column (key-column-pruned scan,
     // proportional to table keys — run it on the audit schedule).
     if (checkKeyMoves) {
-      val all = mDf.select(col("file")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val untouched = (all -- touched).toIndexedSeq
+      val untouched = (fileParts.map(_._1).toSet -- touched).toIndexedSeq
       if (untouched.nonEmpty) {
         val stray = applyDv(spark, readFiles(spark, untouched, sch),
             dvPathsOf(mDf, Some(untouched.toSet)), logicalNameOf(sch))
@@ -985,7 +1001,7 @@ object Versioned {
         col(keyCol).cast("string").as("key"))
     val dvPath = s"$dir/dv/v=$next-${System.nanoTime()}"
     tomb.coalesce(1).write.mode("errorifexists").parquet(dvPath)
-    val dvFiles = spark.read.parquet(dvPath)
+    val dvFiles = readTombstones(spark, Seq(dvPath))
       .select(col("file")).distinct().collect().map(_.getString(0)).toSet
     if (dvFiles.isEmpty) { // keys absent from the live rows: no-op
       TmpDirs.rmTree(dvPath)
@@ -1060,8 +1076,7 @@ object Versioned {
     // the cheap half of the decision.
     val dvPaths = dvPathsOf(mDf, Some(dvd))
     val tombCounts: Map[String, Long] =
-      spark.read.parquet(dvPaths.map(Manifest.unglob): _*)
-        .select(col("file"), col("key_col"), col("key")).distinct()
+      readTombstones(spark, dvPaths).distinct()
         .groupBy(col("file")).agg(count(lit(1)).as("n"))
         .collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1448,10 +1463,10 @@ object Versioned {
     val phys = sch.fields.find(_.name == name).map(physName).getOrElse(name)
     val dvs = dvPathsOf(mDf)
     if (dvs.nonEmpty) {
-      // unglob like every other DV read (applyDv, recluster): manifest
+      // unglob like every other DV read (readTombstones): manifest
       // paths are raw strings, and glob metacharacters or spaces in the
       // store path would otherwise make this guard throw path-not-found
-      val dvKeyCols = spark.read.parquet(dvs.map(Manifest.unglob): _*)
+      val dvKeyCols = readTombstones(spark, dvs)
         .select(col("key_col")).distinct()
         .collect().map(_.getString(0)).toSet
       require(!dvKeyCols.contains(phys),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -147,8 +147,14 @@ object Sinks {
           case _ => pruned.withColumn("__v", lit(Long.MinValue))
         }
         versioned.withColumn("__src", lit(0))
-      } catch { case _: Exception => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], incoming.schema) }
+      } catch {
+        // only a missing table, or one without data files, is empty: an
+        // unreadable one (a corrupt footer) fails the upsert instead of
+        // being overwritten with the incoming rows alone
+        case e: AnalysisException
+            if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")(e.getCondition) =>
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], incoming.schema)
+      }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol)).orderBy(col("__v").desc, col("__src").desc)
     val merged = existing.unionByName(incoming)

@@ -146,7 +146,7 @@ class CepSpec extends SparkSpec {
       val q = f(ms.toDF().withWatermark("ts", "0 seconds"))
         .writeStream.format("memory").queryName(name).outputMode("append")
         .option("checkpointLocation",
-          s"${System.getProperty("java.io.tmpdir")}/graft-test-$name")
+          testCheckpoint(name))
         .trigger(Trigger.ProcessingTime(0))
         .start()
       batches.foreach { b => ms.addData(b); q.processAllAvailable() }

@@ -162,6 +162,34 @@ class SinksSpec extends SparkSpec {
     assert(got === (1L to 150L).toArray) // each row exactly once
   }
 
+  test("dim upsert fails on an unreadable stored table and leaves it as it was") {
+    import scala.jdk.CollectionConverters._
+    val path = Files.createTempDirectory("graft-dimc").toString + "/dim"
+    Seq((1L, "a")).toDF("id", "name").coalesce(1).write.parquet(path)
+    def files(): Seq[java.nio.file.Path] = Files.list(java.nio.file.Paths.get(path))
+      .iterator().asScala.toSeq
+    val data = files().filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(data.size === 1)
+    // garbage of the same length, no checksum file: the footer is unreadable
+    files().filter(_.getFileName.toString.endsWith(".crc")).foreach(Files.delete)
+    val garbage = Array.fill[Byte](Files.size(data.head).toInt)(7)
+    Files.write(data.head, garbage)
+    intercept[Exception] {
+      Sinks.upsertBatch(Seq((2L, "b")).toDF("id", "name"), path, "id")
+    }
+    assert(files().filter(_.getFileName.toString.endsWith(".parquet")) === data)
+    assert(Files.readAllBytes(data.head).sameElements(garbage))
+  }
+
+  test("dim upsert treats a path with no data files as an empty table") {
+    val path = Files.createTempDirectory("graft-dime").toString + "/dim"
+    Files.createDirectories(java.nio.file.Paths.get(path))
+    Files.createFile(java.nio.file.Paths.get(path, "_SUCCESS"))
+    Sinks.upsertBatch(Seq((1L, "a")).toDF("id", "name"), path, "id")
+    val r = spark.read.parquet(path).as[(Long, String)].collect().toMap
+    assert(r === Map(1L -> "a"))
+  }
+
   test("dim upsert is idempotent under batch replay (foreachBatch retry)") {
     val path = Files.createTempDirectory("graft-dimr").toString + "/dim"
     val b = Seq((1L, "x"), (2L, "y")).toDF("id", "name")

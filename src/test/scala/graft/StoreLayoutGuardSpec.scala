@@ -14,25 +14,33 @@ import scala.jdk.CollectionConverters._
   *
   * `transformWithState` is the one keyed-state streaming API: no library
   * file names the older `flatMapGroupsWithState` / `mapGroupsWithState`
-  * API or its `GroupState` handle, not even in a comment. */
+  * API or its `GroupState` handle, not even in a comment.
+  *
+  * No library path infers a JSON schema: a `read.json(` without an
+  * explicit `.schema(` in its reader chain runs a full extra decode of
+  * its input, plus a Spark job, just to find the columns. */
 class StoreLayoutGuardSpec extends AnyFunSuite {
 
-  /** "path:line: text" of every `src/main/scala` line that `hit`s, in
-    * files other than `exempt`. */
-  private def offenders(exempt: String)(hit: String => Boolean): List[String] = {
+  /** Every `src/main/scala` file other than `exempt`, with its lines. */
+  private def sources(exempt: String): List[(Path, Seq[String])] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root missing")
     val walk = Files.walk(root)
     try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala") &&
         p.getFileName.toString != exempt)
-      .flatMap { (p: Path) =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if hit(line) => s"$p:${i + 1}: ${line.trim}"
-        }
-      }.toList
+      .map(p => p -> Files.readAllLines(p).asScala.toSeq).toList
     finally walk.close()
   }
+
+  /** "path:line: text" of every `src/main/scala` line that `hit`s, in
+    * files other than `exempt`. */
+  private def offenders(exempt: String)(hit: String => Boolean): List[String] =
+    sources(exempt).flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if hit(line) => s"$p:${i + 1}: ${line.trim}"
+      }
+    }
 
   test("no library file but Versioned.scala builds a _log/v=$ path") {
     val found = offenders("Versioned.scala")(_.contains("_log/v=$"))
@@ -43,6 +51,24 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
     val found = offenders("")(line =>
       Seq("flatMapGroupsWithState", "mapGroupsWithState", "GroupState")
         .exists(line.contains))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no library file reads JSON without an explicit schema") {
+    // `read` then only option/options/format/schema calls (arguments
+    // nested at most one level deep, across lines) up to `.json(`
+    val arg = """(?:[^()]|\([^()]*\))*"""
+    val chain = ("""\bread((?:\s*\.\s*(?:option|options|format|schema)\(""" +
+      arg + """\))*)\s*\.\s*json\(""").r
+    val found = sources("").flatMap { case (p, lines) =>
+      val text = lines.mkString("\n")
+      chain.findAllMatchIn(text)
+        .filterNot(_.group(1).contains("schema("))
+        .map { m =>
+          val line = text.substring(0, m.start).count(_ == '\n')
+          s"$p:${line + 1}: ${lines(line).trim}"
+        }
+    }
     assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -32,7 +32,7 @@ class StreamingParitySpec extends SparkSpec {
     val q = f(ms.toDF())
       .writeStream.format("memory").queryName(name).outputMode("append")
       .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-test-$name")
+        testCheckpoint(name))
       .trigger(Trigger.ProcessingTime(0))
       .start()
     batches.foreach { b => ms.addData(b); q.processAllAvailable() }
@@ -56,7 +56,7 @@ class StreamingParitySpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-test-scd2-${System.nanoTime()}")
+        testCheckpoint(s"scd2-${System.nanoTime()}"))
       .trigger(Trigger.ProcessingTime(0))
       .start()
     // batch 1: A@10, A@30 (the A@30 row is "unchanged" — compaction
@@ -313,7 +313,7 @@ class StreamingParitySpec extends SparkSpec {
       .agg(count(lit(1)).as("pair_ct"))
       .writeStream.format("memory").queryName(name).outputMode("append")
       .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-test-$name")
+        testCheckpoint(name))
       .trigger(Trigger.ProcessingTime(0))
       .start()
     def feed(evs: Event*): Long = {
@@ -341,7 +341,7 @@ class StreamingParitySpec extends SparkSpec {
         ms.toDF(), fineSec = 10, coarseSec = 60)
       .writeStream.format("memory").queryName(name).outputMode("append")
       .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-test-$name")
+        testCheckpoint(name))
       .trigger(Trigger.ProcessingTime(0))
       .start()
     // coarse window [0,60): events at 5,15,25 across two batches; the

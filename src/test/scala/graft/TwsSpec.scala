@@ -51,7 +51,7 @@ class TwsSpec extends SparkSpec {
     val name = s"tws_${System.nanoTime()}"
     val q = f(ms.toDF())
       .writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", ckpt.getOrElse(tmpCkpt(name)))
+      .option("checkpointLocation", ckpt.getOrElse(testCheckpoint(name)))
       .trigger(Trigger.ProcessingTime(triggerMs))
       .start()
     val barriers: Seq[Long] =
@@ -72,9 +72,6 @@ class TwsSpec extends SparkSpec {
     spark.table(name)
   }
 
-  private def tmpCkpt(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-test-$name"
-
   /** Two query lifecycles over one MemoryStream and ONE checkpoint: the
     * first feeds `first` and stops, a fresh query resumes from the
     * checkpoint and feeds `second`. Returns the rows of both lifecycles
@@ -86,7 +83,7 @@ class TwsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val ms = MemoryStream[Event]
-    val ckpt = tmpCkpt(s"tws_resume_${System.nanoTime()}")
+    val ckpt = testCheckpoint(s"tws_resume_${System.nanoTime()}")
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
     def lifecycle(batches: Seq[Seq[Event]]): Unit = {
       val q = f(ms.toDF()).writeStream
@@ -249,7 +246,7 @@ class TwsSpec extends SparkSpec {
   }
 
   test("the statestore source reads a tws ValueState by stateVarName") {
-    val ckpt = tmpCkpt(s"tws_state_${System.nanoTime()}")
+    val ckpt = testCheckpoint(s"tws_state_${System.nanoTime()}")
     val lastDt = try withRocksDb {
       runBatches(fixture, ckpt = Some(ckpt))(TwsStreams.uvDedup).count()
       spark.read.format("statestore").option("stateVarName", "lastDt")
