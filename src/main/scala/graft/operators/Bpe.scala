@@ -8,15 +8,14 @@ import org.apache.spark.sql.functions._
   * arXiv:1508.07909) — the tokenizer-vocabulary learning step of a
   * training-data pipeline, distributed Spark-first.
   *
-  * Shape: the corpus is scanned ONCE to build the word-count vocabulary
-  * (one shuffle on word); every merge round after that runs on the
-  * VOCABULARY table — vocabulary-sized (≪ corpus), cached, linear
-  * lineage. Per round: adjacent symbol pairs explode scan-side over the
-  * cached vocab, one weighted-count aggregate picks the argmax pair
-  * (ties: count desc, then lexicographic), and the merge applies as a
-  * pure per-row fold. The only driver reads are one row per round (the
-  * winning pair) — the bounded-metadata pattern, same as k-means
-  * centroids.
+  * Shape: every induction entry point runs [[PairLedger.induce]]. The
+  * corpus is scanned ONCE to build the word-count vocabulary (one
+  * shuffle on word) and its adjacent-pair table; every merge round after
+  * that runs on the VOCABULARY table — vocabulary-sized (≪ corpus),
+  * checkpointed, linear lineage. The argmax pair (ties: count desc, then
+  * lexicographic) is ranked driver-side from the maintained pair table,
+  * and each round is one fused apply-and-delta scan — bounded driver
+  * metadata, the same pattern as k-means centroids.
   *
   * Merge application is a left-to-right greedy fold over the symbol
   * array, tracking the accumulated TAIL symbol: if the tail equals
@@ -48,19 +47,6 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  /** Free a prior generation's `localCheckpoint` storage — without
-    * this, peak executor storage grows one vocabulary copy per round
-    * until the ContextCleaner happens to collect the dropped references.
-    * Precise (frees exactly the wrapped RDD): see [[CheckpointUtil]]. */
-  private def freeCheckpoint(df: DataFrame): Unit = CheckpointUtil.free(df)
-
-  /** Adjacent symbol pairs of a symbol array, as (a, b) structs. */
-  private def adjPairs(syms: Column): Column =
-    when(size(syms) < 2, array().cast("array<struct<a:string,b:string>>"))
-      .otherwise(transform(sequence(lit(1), size(syms) - 1),
-        i => struct(element_at(syms, i).as("a"),
-          element_at(syms, i + 1).as("b"))))
-
   /** Apply a stack of merge-rule layers to a symbol array: layers in
     * order, each one greedy left-to-right pass, all inside ONE
     * [[graft.expressions.MergeFold]] node — one hash probe per adjacent
@@ -83,111 +69,68 @@ object Bpe {
       GraftColumnBridge.expression(syms), stack))
   }
 
-  /** Learn `rounds` BPE merges over the corpus. Returns one row per
-    * round: (round, lhs, rhs, ct, syms_after) where `ct` is the
-    * corpus-weighted frequency of the merged pair and `syms_after` the
-    * corpus-weighted total symbol count after applying it (strictly
-    * decreasing by `ct` each round — the compression ledger).
+  /** Learn `rounds` BPE merges over the corpus, one per round: each
+    * round merges the adjacent pair with the highest corpus-weighted
+    * count (ties: a, then b, binary string order). Returns one row per
+    * learned merge: (round, lhs, rhs, ct, syms_after), where `ct` is the
+    * pair's naive adjacent count (a run "aaa" holds two (a,a) pairs) and
+    * `syms_after` the corpus-weighted symbol total after the greedy fold
+    * applies it. `ct` and the fall in `syms_after` differ only on
+    * self-pair runs, where the fold merges ⌊run/2⌋ per run.
     *
-    * Eager (like trainCentroids): each round materializes the argmax
-    * pair — one driver row per round. Each generation is
-    * `localCheckpoint`ed (vocabulary-sized, eager): rolling the vocab
-    * forward under plain `persist` keeps the whole merge lineage in
-    * the logical plan, and re-canonicalizing that growing tree for cache
-    * substitution every round made induction QUADRATIC in rounds
-    * (measured at sf0.1: 8 rounds 4 s, 16 rounds 55 s); the checkpoint
-    * truncates the plan to a constant-depth scan per round. */
+    * This is [[PairLedger.induce]] at one merge per batch: the
+    * [[mergesBatched]] loop whose every batch is its argmax alone. */
   def merges(documents: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1, 64], got $rounds")
     val spark = documents.sparkSession
     import spark.implicits._
-
-    var vocab = documents
-      .select(explode(TextFns.tokensWs(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("wct"))
-      .select(col("word"), col("wct"), codePoints(col("word")).as("syms"))
-      .localCheckpoint(true)
-
-    val ledger = Seq.newBuilder[(Long, String, String, Long, Long)]
-    for (r <- 1 to rounds) {
-      val top = vocab
-        .select(col("wct"), explode(adjPairs(col("syms"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("wct")).as("ct"))
-        .orderBy(col("ct").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.nonEmpty) {
-        val (lhs, rhs, ct) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        val prev = vocab
-        vocab = vocab
-          .select(col("word"), col("wct"),
-            applyMerges(col("syms"), Seq(Seq((lhs, rhs)))).as("syms"))
-          .localCheckpoint(true)
-        freeCheckpoint(prev) // next generation is materialized; hold 2, not O(rounds)
-        val symsAfter = vocab
-          .agg(sum(col("wct") * size(col("syms"))).cast("long")).as[Long].head()
-        ledger += ((r.toLong, lhs, rhs, ct, symsAfter))
-      }
-    }
-    freeCheckpoint(vocab)
-    ledger.result().toDF("round", "lhs", "rhs", "ct", "syms_after")
+    PairLedger.induce(words(documents), "Bpe.merges", PairLedger.Frequency,
+      batches = rounds, batchSize = 1).merges
+      .map(m => (m.batch, m.lhs, m.rhs, m.ct, m.symsAfter))
+      .toDF("round", "lhs", "rhs", "ct", "syms_after")
   }
 
   /** Batched BPE merge induction — the rounds-dimension scale path.
     *
-    * [[merges]] runs one driver-coordinated round per merge; real
-    * tokenizers need 10³–10⁵ merges, where per-round job-scheduling
+    * Real tokenizers need 10³–10⁵ merges, where per-round job-scheduling
     * latency (~1 s on a busy cluster) dominates the vocabulary-sized
     * work. This variant learns up to `batchSize` merges per round:
     *
-    *   1. count every adjacent pair of the current vocabulary;
-    *   2. take the top-`window` candidate pairs ordered by
-    *      (ct DESC, a, b) — bounded driver metadata, `window` rows;
-    *   3. greedily select candidates whose TRIPLE sets {lhs, rhs,
+    *   1. rank the adjacent pairs of the current vocabulary by
+    *      (ct DESC, a, b) and take the top `window` — bounded driver
+    *      metadata, `window` rows;
+    *   2. greedily select candidates whose TRIPLE sets {lhs, rhs,
     *      lhs+rhs} are pairwise disjoint, stopping at `batchSize`.
     *      Disjointness makes the snapshot counts exact at application
     *      time (merging one selected pair can neither create nor
     *      destroy occurrences of another) and merges non-cascading, so
     *      the batch applies as ONE layer ([[applyMerges]]) in any
     *      order. SELF-PAIRS (lhs == rhs) select with RUN-AWARE
-    *      attribution (r16): their naive snapshot count includes
-    *      overlapping occurrences while the greedy fold merges exactly
-    *      ⌊run/2⌋ per run (word "aaa" under (a,a): naive ct = 2 but
-    *      symbols drop by 1), so the pair scan counts runs, not just
-    *      adjacencies, and each candidate carries BOTH its naive count
-    *      (the ranking key — sequential BPE's argmax order) and its
-    *      greedy-mergeable count `mct` (= Σ wct·⌊run/2⌋ for self-pairs,
-    *      = ct for distinct pairs, whose occurrences cannot
-    *      self-overlap). The ledger and the conservation `require`
-    *      subtract `mct` — the symbols the fold actually removes. A
-    *      corpus whose dominant pair is a character run (whitespace
-    *      runs under byte-level chunk units — exactly the large-tier
-    *      feed) now learns run merges instead of silently diverging
-    *      from sequential BPE, which always could;
-    *   4. apply + materialize once per round, not once per merge.
+    *      attribution: their naive count includes overlapping
+    *      occurrences while the greedy fold merges exactly ⌊run/2⌋ per
+    *      run (word "aaa" under (a,a): naive ct = 2 but symbols drop by
+    *      1), so each candidate carries BOTH its naive count (the
+    *      ranking key) and its greedy-mergeable count `mct`
+    *      (= Σ wct·⌊run/2⌋ for self-pairs, = ct for distinct pairs,
+    *      whose occurrences cannot self-overlap);
+    *   3. apply the batch in one fused apply-and-delta scan.
     *
-    * The first merge of every round is exactly sequential BPE's argmax;
+    * The first merge of every round is exactly the sequential argmax;
     * later in-batch picks are the standard batched approximation (a
     * sequential learner could prefer a pair the batch's earlier merges
-    * just created). `batchSize = 1` reduces to [[merges]] exactly.
+    * just created).
     *
     * Ledger: one row per LEARNED MERGE — (merge_idx, batch, lhs, rhs,
-    * ct, syms_after), `syms_after` the running corpus symbol total
-    * (strictly decreasing by each merge's ct; disjointness makes the
-    * per-merge attribution exact, and the measured post-batch total is
-    * asserted equal to the derived one every round).
+    * ct, syms_after), `ct` the greedy-mergeable count `mct` and
+    * `syms_after` the running corpus symbol total (strictly decreasing
+    * by each merge's ct; disjointness makes the per-merge attribution
+    * exact, and the measured post-batch total is asserted equal to the
+    * derived one every round).
     *
-    * The loop itself is [[PairLedger.induce]] (shared with
-    * [[WordPiece.learnVocabBatched]]) under the frequency ranking: the
-    * candidate window is ranked from a driver-maintained pair table and
-    * each round is one fused apply-and-delta scan (a per-round full
-    * rescan when the table is over budget). */
+    * The loop is [[PairLedger.induce]] under the frequency ranking. */
   def mergesBatched(documents: DataFrame, batches: Int, batchSize: Int,
       window: Int = 0): DataFrame =
-    mergesBatchedUnits(
-      documents.select(explode(TextFns.tokensWs(col("text"))).as("unit")),
-      batches, batchSize, window)
+    mergesBatchedUnits(words(documents), batches, batchSize, window)
 
   /** [[mergesBatched]] over CALLER-CHOSEN symbol sequences — one row per
     * `unit` string (duplicates weight the counts), symbols = the unit's
@@ -200,19 +143,18 @@ object Bpe {
     * '|' (object-doc precondition). */
   def mergesBatchedUnits(units: DataFrame, batches: Int, batchSize: Int,
       window: Int = 0): DataFrame = {
-    require(batches >= 1 && batches <= 4096,
-      s"batches must be in [1, 4096], got $batches")
-    require(batchSize >= 1 && batchSize <= 256,
-      s"batchSize must be in [1, 256], got $batchSize")
-    val win = if (window > 0) window else math.max(4 * batchSize, 16)
-    require(win >= batchSize, s"window $win must be >= batchSize $batchSize")
     val spark = units.sparkSession
     import spark.implicits._
     PairLedger.induce(units, "Bpe.mergesBatched", PairLedger.Frequency,
-      batches, batchSize, win).merges
-      .map(m => (m.idx, m.batch, m.lhs, m.rhs, m.ct, m.symsAfter))
+      batches, batchSize, window).merges
+      .map(m => (m.idx, m.batch, m.lhs, m.rhs, m.mct, m.symsAfter))
       .toDF("merge_idx", "batch", "lhs", "rhs", "ct", "syms_after")
   }
+
+  /** The whitespace-lowered words of `documents.text`, one `unit` row
+    * per occurrence. */
+  private def words(documents: DataFrame): DataFrame =
+    documents.select(explode(TextFns.tokensWs(col("text"))).as("unit"))
 
   /** Segment the corpus with an ordered merge list (the output of
     * [[merges]]): every document becomes its BPE symbol sequence, words

@@ -163,26 +163,32 @@ object Dedup {
     * O(new batch) + O(index probe), not O(corpus). Intra-batch dups are
     * the standard [[minhashLsh]] pass over the batch alone.
     *
-    * One body for batch and streaming `incoming`: its text rides THROUGH
-    * the band-explode and index probe, so verification needs only
+    * One body for batch and streaming `incoming`: each incoming doc's
+    * shingle set is computed ONCE, below the band explode, and rides
+    * THROUGH the explode and index probe, so verification needs only
     * stream-static joins (probe → index, candidate → history shingles) —
-    * no stream-stream join and no stream/batch union. Text rides the
+    * no stream-stream join and no stream/batch union. The set rides the
     * explode ×bands, which is right when the incoming batch is small
     * relative to history (the ingestion case — the index probe broadcasts
     * or buckets). `dropDuplicates` collapses multi-band collisions; its
-    * key carries the text (which doc_a determines) so that a batch plan
-    * dedups in one hash aggregate instead of a sort-based `first(text)`.
+    * key carries the set (which doc_a determines) so that a batch plan
+    * dedups in one hash aggregate instead of a sort-based `first(sh_a)`.
     * In a real long-running stream use `dropDuplicatesWithinWatermark` so
     * that state stays bounded.
     * (ref behavior: gmall has no dedup; this is the LLM-pipeline suite.) */
   def incrementalNearDups(incoming: DataFrame, history: DataFrame,
       historyIndex: DataFrame, shingleLen: Int = 3, numPerms: Int = 64,
       bands: Int = 16, minJaccard: Double = 0.5): DataFrame = {
+    // shingled in its own projection: a projection holding the explode
+    // would evaluate its other columns per exploded row
     val probe = incoming
-      .select(col("doc_id").as("doc_a"), col("text").as("__text_a"),
+      .select(col("doc_id").as("doc_a"), col("text"),
+        array_distinct(call_function("graft_shingles",
+          col("text"), lit(shingleLen))).as("sh_a"))
+      .select(col("doc_a"), col("sh_a"),
         explode(call_function("graft_minhash_bands_p",
           col("text"), lit(shingleLen), lit(numPerms), lit(bands))).as("b"))
-      .select(col("doc_a"), col("__text_a"),
+      .select(col("doc_a"), col("sh_a"),
         col("b.band").as("band"), col("b.key").as("key"))
     val histSh = history.select(col("doc_id").as("doc_b"),
       array_distinct(call_function("graft_shingles",
@@ -190,12 +196,10 @@ object Dedup {
     probe
       .join(historyIndex.select(col("doc_id").as("doc_b"),
         col("band"), col("key")), Seq("band", "key"))
-      .dropDuplicates("doc_a", "doc_b", "__text_a")
+      .dropDuplicates("doc_a", "doc_b", "sh_a")
       .join(histSh, "doc_b")
-      .withColumn("__sh_a", array_distinct(call_function("graft_shingles",
-        col("__text_a"), lit(shingleLen))))
-      .withColumn("inter", size(array_intersect(col("__sh_a"), col("sh_b"))))
-      .withColumn("uni", size(col("__sh_a")) + size(col("sh_b")) - col("inter"))
+      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("uni", size(col("sh_a")) + size(col("sh_b")) - col("inter"))
       .select(col("doc_a"), col("doc_b"),
         (col("inter").cast("double") / col("uni")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)

@@ -18,15 +18,16 @@ import org.apache.spark.sql.types._
   * downstream `.collect()`/`.filter()` over it then runs job-free
   * inside the optimizer, with zero call-site changes.
   *
-  * TRUST BOUNDARY: every commit writes the `_manifest_schema.json`
-  * sidecar ([[Versioned.ManifestSchema]]) and [[Versioned]] refuses a
-  * version without it, so the rows always decode against the exact
-  * Spark schema the commit pinned. Any decode surprise (unsupported
-  * type, missing column, corrupt file) falls back to the distributed
-  * reader under that same schema rather than failing the open: this is
-  * a fast path, never a second source of truth, and ManifestLocalSpec
-  * pins row-for-row agreement between the two paths on stats/dv/
-  * evolution manifests. */
+  * TRUST BOUNDARY: every commit casts its manifest to the constant
+  * [[Versioned.ManifestSchema]] and writes it as the
+  * `_manifest_schema.json` sidecar, and [[Versioned]] refuses a version
+  * without it, so the rows always decode against the exact Spark schema
+  * the commit pinned. It is the ONLY manifest reader: a manifest that
+  * does not decode (an unsupported type, a corrupt file — only a
+  * foreign or damaged log can hold one) fails the open loudly, naming
+  * the manifest directory and the version, exactly as a missing sidecar
+  * does. ManifestLocalSpec pins row-for-row agreement with Spark's
+  * distributed parquet read on stats/dv/evolution manifests. */
 private[graft] object ManifestLocal {
 
   import org.apache.parquet.example.data.Group
@@ -36,10 +37,11 @@ private[graft] object ManifestLocal {
   import org.apache.parquet.io.ColumnIOFactory
   import org.apache.parquet.schema.{GroupType, Type}
 
-  /** Read every data row of the manifest directory's parquet part
-    * files, decoded to `schema` (the sidecar schema). None on ANY
-    * surprise — the caller falls back to the distributed read. */
-  def readRows(dir: String, schema: StructType): Option[Seq[Row]] =
+  /** Read every data row of version `v`'s manifest directory `dir`
+    * (its parquet part files), decoded to `schema` (the sidecar schema).
+    * Any decode failure raises an `IllegalStateException` naming `dir`
+    * and `v`. */
+  def readRows(dir: String, v: Long, schema: StructType): Seq[Row] =
     try {
       val parts = Option(new java.io.File(dir).listFiles())
         .getOrElse(Array.empty[java.io.File])
@@ -69,9 +71,11 @@ private[graft] object ManifestLocal {
           }
         } finally reader.close()
       }
-      Some(out.result())
+      out.result()
     } catch {
-      case scala.util.control.NonFatal(_) => None
+      case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+        s"Versioned: version $v manifest ($dir) does not decode under its " +
+          s"committed _manifest_schema.json — the log is damaged: $e", e)
     }
 
   /** One parquet record group → Spark Row under the target struct.

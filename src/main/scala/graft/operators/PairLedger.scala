@@ -2,11 +2,13 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
-/** The one batched merge-induction driver, [[induce]], behind
-  * [[Bpe.mergesBatchedUnits]] (frequency ranking) and
-  * [[WordPiece.learnVocabBatched]] (likelihood ranking), and its
-  * driver-maintained adjacent-pair count table — the r19
-  * incremental-pair-count optimization's bookkeeping half.
+/** The one merge-induction driver, [[induce]], behind every induction
+  * entry point — [[Bpe.merges]] and [[Bpe.mergesBatchedUnits]]
+  * (frequency ranking), [[WordPiece.learnVocab]] and
+  * [[WordPiece.learnVocabBatched]] (likelihood ranking); the sequential
+  * two are `induce` at one merge per batch — and its driver-maintained
+  * adjacent-pair count table, the r19 incremental-pair-count
+  * optimization's bookkeeping half.
   *
   * The table holds one entry per DISTINCT adjacent symbol pair of the
   * current vocabulary generation, with both counting views (naive `ct`,
@@ -403,11 +405,14 @@ private[graft] object PairLedger {
     }
   }
 
-  /** One learned merge: `ct` is the greedy-mergeable count the fold
-    * removes, `score` the selection-time ranking score, `symsAfter` the
-    * running corpus symbol total. */
+  /** One learned merge: `ct` is the naive adjacent-pair count it was
+    * ranked by (the sequential ledgers' count), `mct` the
+    * greedy-mergeable count the fold removes (the batched ledgers'
+    * count; they differ only on self-pair runs), `score` the
+    * selection-time ranking score, `symsAfter` the running corpus symbol
+    * total. */
   final case class Merge(idx: Long, batch: Long, lhs: String, rhs: String,
-      ct: Long, score: Double, symsAfter: Long)
+      ct: Long, mct: Long, score: Double, symsAfter: Long)
 
   /** [[induce]]'s ledger, and whether the pair table was over budget
     * (every round's candidates then came from a full rescan). */
@@ -426,16 +431,19 @@ private[graft] object PairLedger {
     // only pairs and counts) — carrying it through every per-round
     // checkpoint generation would be dead weight in block storage
     .select(col("wct"), Bpe.codePoints(col("word")).as("syms"))
-    // constant-depth plan per round (see Bpe.merges); LAZY: the init
-    // scan's full-corpus aggregation is the materializing action, so
-    // the checkpoint write rides that job instead of owning one
+    // checkpointed so every round plans over a constant-depth scan, not
+    // the growing merge lineage; LAZY: the init scan's full-corpus
+    // aggregation is the materializing action, so the checkpoint write
+    // rides that job instead of owning one
     .localCheckpoint(false)
 
   /** Batched merge induction over `units` — up to `batchSize` merges
     * per round for `batches` rounds, candidates ranked by `ranking` from
-    * a top-`win` window, greedily selected TRIPLE-disjoint (see
+    * a top-`window` window, greedily selected TRIPLE-disjoint (see
     * [[Bpe.mergesBatched]] for why that keeps the batch exact).
-    * `caller` prefixes every invariant message.
+    * `window` 0 means max(4 · batchSize, 16). `caller` prefixes every
+    * argument and invariant message. At `batchSize` 1 each round learns
+    * exactly the ranking's argmax pair: sequential induction.
     *
     * Round shape (r19): while the distinct-pair table fits `budget`,
     * candidates are ranked from the driver-maintained [[Table]] (built
@@ -463,8 +471,15 @@ private[graft] object PairLedger {
     * fold made re-applied layers expensive — the native kernel
     * re-applies a layer in O(symbols) hash probes). */
   def induce(units: DataFrame, caller: String, ranking: Ranking,
-      batches: Int, batchSize: Int, win: Int,
+      batches: Int, batchSize: Int, window: Int = 0,
       budget: Int = DefaultBudget): Induced = {
+    require(batches >= 1 && batches <= 4096,
+      s"$caller: batches must be in [1, 4096], got $batches")
+    require(batchSize >= 1 && batchSize <= 256,
+      s"$caller: batchSize must be in [1, 256], got $batchSize")
+    val win = if (window > 0) window else math.max(4 * batchSize, 16)
+    require(win >= batchSize,
+      s"$caller: window $win must be >= batchSize $batchSize")
     var vocab = unitVocab(units)
     // ONE init job: the complete aggregated pair table (driver-side,
     // budget-guarded) plus the corpus word/symbol totals as observe
@@ -538,13 +553,13 @@ private[graft] object PairLedger {
       // degenerates to {a, aa}, so the same check keeps attribution
       // exact in-batch. Scores are taken at selection, before any
       // ranking state moves.
-      val sel = Vector.newBuilder[(String, String, Long, Double)]
+      val sel = Vector.newBuilder[(String, String, Long, Long, Double)]
       var taken = 0
       var used = Set.empty[String]
       for (e <- cands if taken < batchSize) {
         val triple = Set(e.a, e.b, e.a + e.b)
         if ((triple & used).isEmpty) {
-          sel += ((e.a, e.b, e.mct, ranking.score(e)))
+          sel += ((e.a, e.b, e.ct, e.mct, ranking.score(e)))
           used ++= triple; taken += 1
         }
       }
@@ -559,11 +574,11 @@ private[graft] object PairLedger {
           (t, deltaRows, post)
         }
         var running = total
-        for ((l, r, mct, score) <- chosen) {
+        for ((l, r, ct, mct, score) <- chosen) {
           idx += 1
           running -= mct
           ranking.merged(l, r, mct)
-          merges += Merge(idx, b.toLong, l, r, mct, score, running)
+          merges += Merge(idx, b.toLong, l, r, ct, mct, score, running)
         }
         // … and LEAVING it: this batch's application, verified now (a
         // rescan verifies it one round later, entering the next batch)

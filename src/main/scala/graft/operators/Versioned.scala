@@ -581,18 +581,14 @@ object Versioned {
     * hundreds of times per bench). An aggregate (a `distinct`, a
     * `groupBy`) is not folded into the LocalRelation and still runs
     * jobs: collect the rows and aggregate on the driver instead.
-    * Any decode surprise falls back to the distributed reader, with the
-    * explicit sidecar schema (no inference job). Underscore-prefixed
-    * sidecars are invisible to the parquet scan itself. */
+    * A manifest that does not decode fails loudly, naming the version
+    * (see [[ManifestLocal]]'s trust boundary). */
   private def readManifest(spark: SparkSession, dir: String,
       v: Long): DataFrame = {
     val md = manifestDir(dir, v)
     val sch = readStructSidecar(md, v, "_manifest_schema.json")
-    ManifestLocal.readRows(md, sch) match {
-      case Some(rows) => spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), sch)
-      case None => spark.read.schema(sch).parquet(md)
-    }
+    spark.createDataFrame(
+      java.util.Arrays.asList(ManifestLocal.readRows(md, v, sch): _*), sch)
   }
 
   /** The snapshot SCHEMA lives in the log, not in data-file footers —
@@ -1274,8 +1270,7 @@ object Versioned {
     val sch = readSchema(dir, v)
     val prevMap = mapping(sch)
     val mDf = readManifest(spark, dir, v)
-    val files = mDf.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toIndexedSeq
+    val (files, dvPaths) = filesAndDvs(mDf)
     require(files.nonEmpty,
       s"Versioned.recluster: $dir has no data files at v$v")
     val physSch = physicalSchema(sch)
@@ -1287,7 +1282,7 @@ object Versioned {
     val idx = call_function(fn, (lit(bits) +: physDims): _*)
     val scan = applyDv(spark,
       spark.read.schema(physSch).parquet(files.map(Manifest.unglob): _*),
-      dvPathsOf(mDf, Some(files.toSet)), identity)
+      dvPaths, identity)
     val dataPath = newDataDir(dir, next)
     scan
       .withColumn("__cidx", idx)
@@ -1382,8 +1377,9 @@ object Versioned {
     val sch = readSchema(dir, v)
     val m = mapping(sch)
     val mDf = readManifest(spark, dir, v)
-    val files = mDf.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toIndexedSeq
+    val fd = mDf.select(col("file"), col("dv"))
+    val fdRows = fd.collect()
+    val files = fdRows.map(_.getString(0)).distinct.toIndexedSeq
     val physPart = m.getOrElse(partCol, partCol)
     val fresh =
       if (files.isEmpty) mDf // all-deletes tail: nothing to describe
@@ -1398,10 +1394,11 @@ object Versioned {
         // without the prior rows' dv arrays would resurrect tombstoned
         // rows (the recomputed envelopes still cover deleted keys — a
         // valid over-approximation; the dv is the correctness bit)
-        val dvd = mDf.filter(col("dv").isNotNull)
-          .select(col("file"), col("dv")).distinct()
+        val dvd = fdRows.filter(!_.isNullAt(1)).distinct
         if (dvd.isEmpty) stats
-        else stats.drop("dv").join(dvd, Seq("file"), "left")
+        else stats.drop("dv").join(spark.createDataFrame(
+          java.util.Arrays.asList(dvd.toIndexedSeq: _*), fd.schema),
+          Seq("file"), "left")
       }
     commitManifest(spark, dir, next, fresh, sch)
     next
@@ -1521,7 +1518,7 @@ object Versioned {
     // tombstoned rows as "D" (a compaction-style rewrite stays invisible
     // exactly as before: rewritten-but-unchanged rows drop out)
     def manifestEntries(v: Long): Map[String, Seq[String]] =
-      readManifest(spark, dir, v).select(col("file"), col("dv")).distinct()
+      readManifest(spark, dir, v).select(col("file"), col("dv"))
         .collect().map { r =>
           val dv = if (r.isNullAt(1)) Seq.empty[String]
             else r.getSeq[String](1).toIndexedSeq
@@ -1830,7 +1827,7 @@ object Versioned {
       vs: Seq[Long]): Set[String] =
     vs.flatMap { v =>
       readManifest(spark, dir, v)
-        .select(col("file")).distinct()
+        .select(col("file"))
         .collect().map(r => new java.io.File(
           new org.apache.hadoop.fs.Path(
             new java.net.URI(r.getString(0))).toUri.getPath).getCanonicalPath)

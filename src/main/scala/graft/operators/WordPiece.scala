@@ -27,10 +27,10 @@ import org.apache.spark.sql.functions._
   * aggregate, and exactly replayable in SQL (the oracle derives the same
   * vocab from the same corpus, so gate equality pins derivation AND
   * encode). Likelihood-scored iterative training (true WordPiece
-  * induction, [[learnVocabBatched]]) is the [[Bpe.mergesBatched]] loop —
-  * [[PairLedger.induce]] — with a different argmax; the closed-form
-  * vocab is the scale-honest default — a single pass where iterative
-  * training costs a driver round per merge. */
+  * induction, [[learnVocab]] and [[learnVocabBatched]]) is the
+  * [[Bpe.mergesBatched]] loop — [[PairLedger.induce]] — with a different
+  * argmax; the closed-form vocab is the scale-honest default — a single
+  * pass where iterative training costs a driver round per batch. */
 object WordPiece {
 
   private def distinctUnits(units: DataFrame): DataFrame =
@@ -101,69 +101,30 @@ object WordPiece {
     * bit-identical in any engine; ties break on (a, b) ascending. (The
     * denominator is multiplied IN DOUBLE, never as a long product: a
     * 100 TB corpus has per-symbol counts above ~3e9 whose long product
-    * would silently wrap.) The returned `score` is truncate6'd (the
-    * repo's portable-double convention).
+    * would silently wrap.)
     *
-    * Per round: one pair scan (native run-pairs kernel), one symbol
-    * count, one broadcast-joined argmax — driver-coordinated like
-    * [[Bpe.merges]]; [[learnVocabBatched]] is the rounds-dimension scale
-    * path ([[PairLedger.induce]] with the likelihood argmax). Ledger:
-    * (round, lhs, rhs, ct, score, syms_after). */
+    * This is [[PairLedger.induce]] at one merge per batch under
+    * [[PairLedger.Likelihood]]: the [[learnVocabBatched]] loop whose
+    * every batch is its argmax alone. Ledger: (round, lhs, rhs, ct,
+    * score, syms_after) — `ct` the naive adjacent count the score was
+    * computed from, `score` truncate6'd (the repo's portable-double
+    * convention), `syms_after` the corpus symbol total after the greedy
+    * fold applies the merge. */
   def learnVocab(units: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 64,
       s"WordPiece.learnVocab: rounds in [1, 64], got $rounds")
     val spark = units.sparkSession
     import spark.implicits._
-    var vocab = units
-      .filter(length(col("unit")) > 0)
-      .groupBy(col("unit").as("word")).agg(count(lit(1)).as("wct"))
-      .select(col("word"), col("wct"), Bpe.codePoints(col("word")).as("syms"))
-      .localCheckpoint(true)
-    val ledger = Seq.newBuilder[(Long, String, String, Long, Double, Long)]
-    for (r <- 1 to rounds) {
-      val symCt = vocab
-        .select(col("wct"), explode(col("syms")).as("sym"))
-        .groupBy(col("sym")).agg(sum(col("wct")).as("c"))
-      val top = vocab
-        .select(col("wct"),
-          explode(call_function("graft_run_pairs", col("syms"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("wct") * col("p.ct")).as("ct"))
-        .join(broadcast(symCt.withColumnRenamed("sym", "a")
-          .withColumnRenamed("c", "ca")), Seq("a"))
-        .join(broadcast(symCt.withColumnRenamed("sym", "b")
-          .withColumnRenamed("c", "cb")), Seq("b"))
-        .withColumn("score",
-          col("ct").cast("double") /
-            (col("ca").cast("double") * col("cb").cast("double")))
-        .orderBy(col("score").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.nonEmpty) {
-        val row = top(0)
-        val (lhs, rhs, ct, score) = (row.getAs[String]("a"),
-          row.getAs[String]("b"), row.getAs[Long]("ct"),
-          row.getAs[Double]("score"))
-        val prev = vocab
-        vocab = vocab
-          .select(col("word"), col("wct"),
-            Bpe.applyMerges(col("syms"), Seq(Seq((lhs, rhs)))).as("syms"))
-          .localCheckpoint(true)
-        CheckpointUtil.free(prev)
-        val symsAfter = vocab
-          .agg(sum(col("wct") * size(col("syms"))).cast("long")).as[Long].head()
-        ledger += ((r.toLong, lhs, rhs, ct,
-          math.floor(score * 1e6) / 1e6, symsAfter))
-      }
-    }
-    CheckpointUtil.free(vocab)
-    ledger.result()
+    PairLedger.induce(units, "WordPiece.learnVocab",
+      new PairLedger.Likelihood, batches = rounds, batchSize = 1).merges
+      .map(m => (m.batch, m.lhs, m.rhs, m.ct,
+        math.floor(m.score * 1e6) / 1e6, m.symsAfter))
       .toDF("round", "lhs", "rhs", "ct", "score", "syms_after")
   }
 
   /** BATCHED likelihood-scored WordPiece training — the rounds-dimension
     * scale path: [[PairLedger.induce]], the [[Bpe.mergesBatched]] loop,
-    * ranked by [[PairLedger.Likelihood]] instead of frequency.
-    * [[learnVocab]] runs one driver-coordinated round per merge; real
+    * ranked by [[PairLedger.Likelihood]] instead of frequency. Real
     * vocabularies need 10³–10⁵ pieces, where per-round scheduling
     * latency dominates. Per round, the top-`window` candidates by
     * (`ct / (ct_a · ct_b)` DESC, a, b) are greedily selected whose
@@ -177,31 +138,20 @@ object WordPiece {
     * the greedy-mergeable count `mct` (= Σ wct·⌊run/2⌋ for self-pairs,
     * = ct for distinct pairs) — the symbols the fold actually removes.
     *
-    * The first pick of every round is exactly sequential WordPiece's
-    * argmax; later in-batch picks are the standard batched approximation.
-    * `batchSize = 1` reduces to [[learnVocab]] exactly (modulo the
-    * derived-vs-measured syms_after, asserted equal by the conservation
-    * checks).
+    * The first pick of every round is exactly the sequential argmax;
+    * later in-batch picks are the standard batched approximation.
     *
     * Ledger: one row per LEARNED MERGE — (merge_idx, batch, lhs, rhs,
     * ct, score, syms_after): `ct` the greedy-mergeable count the fold
-    * removes, `score` the selection-time likelihood score truncate6'd
-    * (the repo's portable-double convention), `syms_after` the running
-    * corpus symbol total. */
+    * removes, `score` the selection-time likelihood score truncate6'd,
+    * `syms_after` the running corpus symbol total. */
   def learnVocabBatched(units: DataFrame, batches: Int, batchSize: Int,
       window: Int = 0): DataFrame = {
-    require(batches >= 1 && batches <= 4096,
-      s"WordPiece.learnVocabBatched: batches in [1, 4096], got $batches")
-    require(batchSize >= 1 && batchSize <= 256,
-      s"WordPiece.learnVocabBatched: batchSize in [1, 256], got $batchSize")
-    val win = if (window > 0) window else math.max(4 * batchSize, 16)
-    require(win >= batchSize,
-      s"WordPiece.learnVocabBatched: window $win must be >= batchSize $batchSize")
     val spark = units.sparkSession
     import spark.implicits._
     PairLedger.induce(units, "WordPiece.learnVocabBatched",
-      new PairLedger.Likelihood, batches, batchSize, win).merges
-      .map(m => (m.idx, m.batch, m.lhs, m.rhs, m.ct,
+      new PairLedger.Likelihood, batches, batchSize, window).merges
+      .map(m => (m.idx, m.batch, m.lhs, m.rhs, m.mct,
         math.floor(m.score * 1e6) / 1e6, m.symsAfter))
       .toDF("merge_idx", "batch", "lhs", "rhs", "ct", "score", "syms_after")
   }

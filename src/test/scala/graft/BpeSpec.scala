@@ -33,6 +33,49 @@ class BpeSpec extends SparkSpec {
           rules))
     }.sortBy(_._1)
 
+  private def cps(w: String): Seq[String] =
+    w.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp)))
+
+  private def wordsOf(docs: Seq[String]): Seq[String] =
+    docs.flatMap(_.trim.toLowerCase.split("\\s+")).filter(_.nonEmpty)
+
+  /** Sequential reference induction over `units`, on the driver: word
+    * counts, naive adjacent-pair counts, the argmax pair by
+    * (ct DESC, a, b) — or, `likelihood`, by the IEEE score
+    * ct / (ct_a · ct_b) DESC, then (a, b) — and the greedy fold
+    * ([[refWalk]]). One row per learned merge: (round, lhs, rhs, naive
+    * ct, score truncate6'd, syms_after). ASCII fixtures only: ties
+    * compare strings in JVM order. */
+  private def refInduce(units: Seq[String], rounds: Int,
+      likelihood: Boolean): Seq[(Long, String, String, Long, Double, Long)] = {
+    var words = units.filter(_.nonEmpty).groupBy(identity).toSeq
+      .map { case (w, ws) => (cps(w), ws.size.toLong) }
+    val out = Seq.newBuilder[(Long, String, String, Long, Double, Long)]
+    for (r <- 1 to rounds) {
+      val pairs = words.flatMap { case (s, c) =>
+        s.sliding(2).collect { case Seq(a, b) => ((a, b), c) } }
+        .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      val symCt = words.flatMap { case (s, c) => s.map(_ -> c) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      def score(p: ((String, String), Long)): Double =
+        if (likelihood) p._2.toDouble /
+          (symCt(p._1._1).toDouble * symCt(p._1._2).toDouble)
+        else p._2.toDouble
+      val ranked = pairs.sortWith { (x, y) =>
+        val d = java.lang.Double.compare(score(y), score(x))
+        if (d != 0) d < 0
+        else if (x._1._1 != y._1._1) x._1._1 < y._1._1
+        else x._1._2 < y._1._2
+      }
+      ranked.headOption.foreach { case p @ ((a, b), ct) =>
+        words = words.map { case (s, c) => (refWalk(s, Seq((a, b))), c) }
+        out += ((r.toLong, a, b, ct, math.floor(score(p) * 1e6) / 1e6,
+          words.map { case (s, c) => s.size * c }.sum))
+      }
+    }
+    out.result()
+  }
+
   private def encoded(df: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[String])] =
     df.orderBy("doc_id").as[(Long, Seq[String])].collect().toSeq
 
@@ -91,16 +134,45 @@ class BpeSpec extends SparkSpec {
   }
 
   test("mergesBatched with batchSize=1 is exactly sequential merges") {
-    val docs = Seq(
-      (1L, "spark spark shark park"), (2L, "spar spars park hark"),
-      (3L, "lower flower tower power")).toDF("doc_id", "text")
+    val texts = Seq("spark spark shark park", "spar spars park hark",
+      "lower flower tower power")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val ref = refInduce(wordsOf(texts), rounds = 6, likelihood = false)
+      .map(r => (r._1, r._2, r._3, r._4, r._6))
+    assert(ref.size === 6)
     val seq = Bpe.merges(docs, rounds = 6).orderBy("round")
       .as[(Long, String, String, Long, Long)].collect().toSeq
+    assert(seq === ref)
     val bat = Bpe.mergesBatched(docs, batches = 6, batchSize = 1)
       .orderBy("merge_idx")
       .as[(Long, Long, String, String, Long, Long)].collect().toSeq
-    assert(bat.map(r => (r._1, r._3, r._4, r._5, r._6)) === seq)
+    // no self-pair runs in this corpus: the batched ledger's
+    // greedy-mergeable count equals the naive count
+    assert(bat.map(r => (r._1, r._3, r._4, r._5, r._6)) === ref)
     assert(bat.map(_._2) === (1L to 6L))  // one merge per batch
+  }
+
+  test("self-pair runs: merges records the naive count, mergesBatched the " +
+    "fold's") {
+    import graft.operators.WordPiece
+    // "aaaa"×2 + "aaa" + "baab": (a,a) naive ct = 2·3 + 2 + 1 = 9, the
+    // fold merges ⌊run/2⌋ per run = 2·2 + 1 + 1 = 6 of 15 symbols
+    val text = "aaaa aaaa aaa baab"
+    val docs = Seq((1L, text)).toDF("doc_id", "text")
+    val seq = Bpe.merges(docs, rounds = 4).orderBy("round")
+      .as[(Long, String, String, Long, Long)].collect().toSeq
+    assert(seq.head === ((1L, "a", "a", 9L, 9L)))
+    val ref = refInduce(wordsOf(Seq(text)), rounds = 4, likelihood = false)
+    assert(seq === ref.map(r => (r._1, r._2, r._3, r._4, r._6)))
+    val bat = Bpe.mergesBatched(docs, batches = 1, batchSize = 1)
+      .as[(Long, Long, String, String, Long, Long)].collect().toSeq
+    assert(bat === Seq((1L, 1L, "a", "a", 6L, 9L)))
+    val units = wordsOf(Seq(text)).toDF("unit")
+    val wp = WordPiece.learnVocab(units, rounds = 4).orderBy("round")
+      .as[(Long, String, String, Long, Double, Long)].collect().toSeq
+    assert(wp === refInduce(wordsOf(Seq(text)), rounds = 4,
+      likelihood = true))
   }
 
   test("applyMerges: a triple-disjoint layer equals per-rule layers in any order") {
@@ -382,18 +454,20 @@ class BpeSpec extends SparkSpec {
   test("learnVocabBatched with batchSize=1 is exactly sequential " +
     "learnVocab: same picks, same scores, same symbol ledger") {
     import graft.operators.WordPiece
-    val units = Seq("spark", "spark", "shark", "park", "spar", "spars",
+    val words = Seq("spark", "spark", "shark", "park", "spar", "spars",
       "lower", "flower", "tower", "power", "ab", "ab", "ab", "cd")
-      .toDF("unit")
+    val units = words.toDF("unit")
+    val ref = refInduce(words, rounds = 6, likelihood = true)
+    assert(ref.size === 6)
     val seqLed = WordPiece.learnVocab(units, rounds = 6).orderBy("round")
       .as[(Long, String, String, Long, Double, Long)].collect().toSeq
+    assert(seqLed === ref)
     val bat = WordPiece.learnVocabBatched(units, batches = 6, batchSize = 1)
       .orderBy("merge_idx")
       .as[(Long, Long, String, String, Long, Double, Long)].collect().toSeq
     // sequential records the naive pair count, batched the greedy-
-    // mergeable count — identical off self-pairs (none in this corpus);
-    // syms_after: measured (sequential) vs derived (batched) must agree
-    assert(bat.map(r => (r._1, r._3, r._4, r._5, r._6, r._7)) === seqLed)
+    // mergeable count — identical off self-pairs (none in this corpus)
+    assert(bat.map(r => (r._1, r._3, r._4, r._5, r._6, r._7)) === ref)
     assert(bat.map(_._2) === (1L to 6L)) // one merge per batch
   }
 

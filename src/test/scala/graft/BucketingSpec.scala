@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Bucketing = the at-rest co-location strategy for repeated big-big
   * joins: both sides pre-hashed into the same bucket layout on the join
@@ -13,7 +12,7 @@ class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed tables co-locate the join: no shuffle exchange on either side") {
-    val root = Files.createTempDirectory("graft-bucket").toString
+    val root = testDir("graft-bucket")
     val left = (1 to 10000).map(i => (i.toLong % 500, i.toLong)).toDF("k", "lv")
     val right = (1 to 5000).map(i => (i.toLong % 500, s"r$i")).toDF("k", "rv")
     spark.sql("DROP TABLE IF EXISTS graft_bl")
@@ -36,7 +35,7 @@ class BucketingSpec extends SparkSpec {
 
   test("Bucketing.writeBucketed + bucketedJoin: exchange-free merge join, " +
       "result equals the plain join, catalog + files swept") {
-    val root = Files.createTempDirectory("graft-bucket-op").toString
+    val root = testDir("graft-bucket-op")
     val left = (1 to 8000).map(i => (i.toLong % 300, i.toLong)).toDF("lk", "lv")
     val right = (1 to 4000).map(i => (i.toLong % 300, i * 2L)).toDF("rk", "rv")
     try {
@@ -61,7 +60,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("bucket pruning: an equality filter on the bucket key reads 1/N buckets") {
-    val root = Files.createTempDirectory("graft-bucket2").toString
+    val root = testDir("graft-bucket2")
     spark.sql("DROP TABLE IF EXISTS graft_bp")
     (1 to 10000).map(i => (i.toLong, i.toString)).toDF("k", "v")
       .write.bucketBy(8, "k").option("path", s"$root/bp").saveAsTable("graft_bp")

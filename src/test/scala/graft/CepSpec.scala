@@ -103,8 +103,8 @@ class CepSpec extends SparkSpec {
     // beyond 10 — so the stream must emit exactly the 4990 OLDEST starts,
     // in watermark (start-time) order, and the batch twin must agree.
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft-cep-hot").toString
-    val rawDir = Files.createTempDirectory("graft-cep-hot-raw").toString
+    val root = testDir("graft-cep-hot")
+    val rawDir = testDir("graft-cep-hot-raw")
     val hot = (1L to 5000L).map(i => (i, i * 1000000000L, 777L, "a", 0.0, "{}"))
     val organic = (1L to 50L).map(i =>
       (5000L + i, i * 97L * 1000000000L, i, "x", 0.0, "{}"))

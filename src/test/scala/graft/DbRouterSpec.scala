@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** `DbRouter.writeBatch` routes each envelope once: one decode of the
   * input, dim tables identical to the JSON-inference path it replaced,
@@ -50,7 +49,7 @@ class DbRouterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
 
   test("writeBatch writes the dim tables JSON inference would, with the same kafka rows") {
-    val root = Files.createTempDirectory("graft-dbrouter").toString
+    val root = testDir("graft-dbrouter")
     val kafka = DbRouter.writeBatch(routed(lines.toDF("value")), s"$root/dims")
       .localCheckpoint(true)
     // the reference: each routed table's pruned payloads through
@@ -82,7 +81,7 @@ class DbRouterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("writeBatch decodes each envelope once, however many dim tables it writes") {
-    val root = Files.createTempDirectory("graft-dbrouter-once").toString
+    val root = testDir("graft-dbrouter-once")
     val decodes = spark.sparkContext.longAccumulator("dbrouter-decodes")
     val tap = udf { (v: String) => decodes.add(1L); v }.asNondeterministic()
     val values = lines.toDF("value").select(tap(col("value")).as("value"))

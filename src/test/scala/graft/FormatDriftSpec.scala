@@ -27,7 +27,7 @@ class FormatDriftSpec extends SparkSpec {
     (5L, baseUs + 7200000000L,  11L, "view",  5.0, """{"k":"e"}"""))
 
   private def writeFixture(tsType: DataType): String = {
-    val dir = Files.createTempDirectory("graft-drift-").toFile
+    val dir = new java.io.File(testDir("graft-drift-"))
     dir.deleteOnExit()
     val schema = StructType(Seq(
       StructField("event_id", LongType),

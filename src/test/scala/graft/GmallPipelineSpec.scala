@@ -2,7 +2,6 @@ package graft
 
 import graft.gmall._
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** End-to-end DWD→DWM→DWS→ADS over hand-written gmall fixtures: raw JSON
   * log lines and CDC envelopes in, GMV out — the full layer chain of the
@@ -51,7 +50,7 @@ class GmallPipelineSpec extends SparkSpec {
   }
 
   test("DbRouter: delete filter, config routing, column pruning, dim upsert") {
-    val dimRoot = Files.createTempDirectory("graft-gmall-dim").toString
+    val dimRoot = testDir("graft-gmall-dim")
     val envelopes = graft.streaming.Sources.cdcDecode(cdcLines.toDF("value"))
     val routed = DbRouter.route(envelopes, config)
     assert(routed.count() === 3) // delete dropped (create→insert applied)
@@ -158,7 +157,7 @@ class GmallPipelineSpec extends SparkSpec {
   }
 
   test("published serving store partition-prunes the dated gmv query") {
-    val path = java.nio.file.Files.createTempDirectory("graft-serving").toString + "/product_stats"
+    val path = testDir("graft-serving") + "/product_stats"
     val stats = Seq(
       ("2020-12-15 02:40:00", java.math.BigDecimal.valueOf(99.50)),
       ("2020-12-15 03:00:00", java.math.BigDecimal.valueOf(0.50)),

@@ -39,8 +39,7 @@ class GmallStreamingSpec extends SparkSpec {
   test("J1->J2 chained streaming through a sink boundary (dwm_order_wide)") {
     import graft.gmall.OrderWide
     import org.apache.spark.sql.streaming.Trigger
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-chain").toString
+        val root = testDir("graft-chain")
     val wideDir = s"$root/dwm_order_wide"
 
     // raw inputs as parquet (standing in for the dwd_* Kafka topics)

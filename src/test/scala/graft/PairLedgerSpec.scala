@@ -226,7 +226,7 @@ class PairLedgerSpec extends SparkSpec {
     val fb = atBudgets(
       docs.select(explode(TextFns.tokensWs(col("text"))).as("unit")),
       "Bpe.mergesBatched", () => PairLedger.Frequency, 5, 4, 24)
-      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.ct, m.symsAfter))
+      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.mct, m.symsAfter))
     assert(inc.nonEmpty && inc === fb)
   }
 
@@ -241,7 +241,7 @@ class PairLedgerSpec extends SparkSpec {
       window = 16).orderBy("merge_idx").collect().toSeq.map(_.toSeq)
     val fb = atBudgets(units, "Bpe.mergesBatched",
       () => PairLedger.Frequency, 6, 3, 16)
-      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.ct, m.symsAfter))
+      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.mct, m.symsAfter))
     assert(inc.nonEmpty && inc === fb)
   }
 
@@ -255,8 +255,24 @@ class PairLedgerSpec extends SparkSpec {
       window = 16).orderBy("merge_idx").collect().toSeq.map(_.toSeq)
     val fb = atBudgets(units, "WordPiece.learnVocabBatched",
       () => new PairLedger.Likelihood, 5, 3, 16)
-      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.ct,
+      .map(m => Seq(m.idx, m.batch, m.lhs, m.rhs, m.mct,
         math.floor(m.score * 1e6) / 1e6, m.symsAfter))
     assert(inc.nonEmpty && inc === fb)
+  }
+
+  test("induce owns the batched argument checks, caller-prefixed") {
+    val docs = Seq((1L, "ab ab")).toDF("doc_id", "text")
+    def msg(body: => Any): String =
+      intercept[IllegalArgumentException](body).getMessage
+    assert(msg(Bpe.mergesBatched(docs, batches = 0, batchSize = 1)) ===
+      "requirement failed: Bpe.mergesBatched: batches must be in " +
+        "[1, 4096], got 0")
+    assert(msg(WordPiece.learnVocabBatched(docs.select(col("text")
+      .as("unit")), batches = 1, batchSize = 300)) ===
+      "requirement failed: WordPiece.learnVocabBatched: batchSize must " +
+        "be in [1, 256], got 300")
+    assert(msg(Bpe.mergesBatched(docs, batches = 1, batchSize = 8,
+      window = 4)) === "requirement failed: Bpe.mergesBatched: window 4 " +
+        "must be >= batchSize 8")
   }
 }

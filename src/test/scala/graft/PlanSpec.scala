@@ -260,6 +260,9 @@ class PlanSpec extends SparkSpec {
     // pair keys) so a hot (band,key) bucket can't multiply verify work
     assert(p.contains("HashAggregate") || p.contains("ObjectHashAggregate"),
       p.take(1500))
+    // each side shingles once: history in its shingle-set projection,
+    // incoming below the band explode
+    assert("graft_shingles".r.findAllIn(p).size <= 2, p)
   }
 
   test("k7_scd2_history: change-detect lag and interval lead share ONE " +

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -10,7 +9,7 @@ class SimilaritySpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
 
   test("persisted IVF index returns the same neighbors as the in-memory path") {
-    val path = Files.createTempDirectory("graft-ivf").toString + "/index"
+    val path = testDir("graft-ivf") + "/index"
     val centroids = Similarity.trainCentroids(emb, k = 8, iters = 1)
       .localCheckpoint(true) // pin: both paths must use identical centroids
     val queries = emb.filter(col("vec_id") < 3)
@@ -28,7 +27,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("appendIvfIndex writes ONLY the delta (base files untouched) and " +
     "search equals a one-shot rebuild") {
-    val path = Files.createTempDirectory("graft-ivf-app").toString + "/index"
+    val path = testDir("graft-ivf-app") + "/index"
     val centroids = Similarity.trainCentroids(
       emb.filter(pmod(col("vec_id"), lit(3L)) =!= 0), k = 8, iters = 1)
       .localCheckpoint(true)
@@ -67,7 +66,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF-PQ: indexed search == in-memory composition; the at-rest index " +
     "stores m-byte codes per cell, never raw vectors") {
-    val path = Files.createTempDirectory("graft-ivfpq").toString + "/index"
+    val path = testDir("graft-ivfpq") + "/index"
     val centroids = Similarity.trainCentroids(emb, k = 8, iters = 1)
       .localCheckpoint(true) // pin: both paths must see identical quantizers
     val cb = Similarity.trainPqCodebooks(emb, m = 8, k = 16, iters = 1,
@@ -98,8 +97,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("rebuildIvfIndex retrains on the index's own rows and relays out; " +
     "search over the rebuild == one-shot with the returned centroids") {
-    val p1 = Files.createTempDirectory("graft-ivf-rb").toString + "/index"
-    val p2 = Files.createTempDirectory("graft-ivf-rb").toString + "/index2"
+    val p1 = testDir("graft-ivf-rb") + "/index"
+    val p2 = testDir("graft-ivf-rb") + "/index2"
     val base = emb.filter(pmod(col("vec_id"), lit(3L)) =!= 0)
     val delta = emb.filter(pmod(col("vec_id"), lit(3L)) === 0)
     val c1 = Similarity.trainCentroids(base, k = 8, iters = 1)
@@ -189,7 +188,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("index scan is pruned to the probed cluster partitions") {
-    val path = Files.createTempDirectory("graft-ivf2").toString + "/index"
+    val path = testDir("graft-ivf2") + "/index"
     val centroids = Similarity.trainCentroids(emb, k = 8, iters = 1)
       .localCheckpoint(true)
     Similarity.buildIvfIndex(emb, centroids, path)

@@ -8,7 +8,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("dim upsert: latest row per key wins, table auto-created (K4/K5)") {
-    val path = Files.createTempDirectory("graft-dim").toString + "/dim"
+    val path = testDir("graft-dim") + "/dim"
     val b1 = Seq((1L, "alice"), (2L, "bob")).toDF("id", "name")
     Sinks.upsertBatch(b1, path, "id")
     val b2 = Seq((2L, "robert"), (3L, "carol")).toDF("id", "name")
@@ -18,7 +18,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("dim upsert: versionCol decides the winner within AND across batches (K4)") {
-    val path = Files.createTempDirectory("graft-dimv").toString + "/dim"
+    val path = testDir("graft-dimv") + "/dim"
     // same key twice in one batch, higher version listed first — arrival
     // order must NOT matter, only the version column
     val b = Seq((1L, "newer", 20L), (1L, "older", 10L), (2L, "only", 5L))
@@ -38,7 +38,7 @@ class SinksSpec extends SparkSpec {
 
   test("bucketed dim upsert rewrites only the touched buckets (K4 at scale)") {
     import scala.jdk.CollectionConverters._
-    val path = Files.createTempDirectory("graft-dimb").toString + "/dim"
+    val path = testDir("graft-dimb") + "/dim"
     val b1 = (1L to 64L).map(i => (i, s"v$i", 1L)).toDF("id", "name", "ver")
     Sinks.upsertBatch(b1, path, "id", Some("ver"), buckets = 8)
     def bucketFiles(): Map[String, Map[String, Long]] =
@@ -68,7 +68,7 @@ class SinksSpec extends SparkSpec {
   test("CDC initial mode: snapshot + incremental + replay converges to batch truth (S3)") {
     import graft.streaming.Sources
     import org.apache.spark.sql.types._
-    val path = Files.createTempDirectory("graft-cdc").toString + "/dim"
+    val path = testDir("graft-cdc") + "/dim"
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("name", StringType), StructField("ver", LongType)))
     // snapshot at version 10
@@ -102,7 +102,7 @@ class SinksSpec extends SparkSpec {
     import graft.streaming.Sources
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.types._
-    val root = Files.createTempDirectory("graft-cdc2").toString
+    val root = testDir("graft-cdc2")
     val path = s"$root/dim"
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("name", StringType), StructField("ver", LongType)))
@@ -135,7 +135,7 @@ class SinksSpec extends SparkSpec {
   test("T8 exactly-once: restart from checkpoint processes each input once") {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    val root = Files.createTempDirectory("graft-eo").toString
+    val root = testDir("graft-eo")
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     val schema = StructType(Seq(StructField("id", LongType)))
 
@@ -164,7 +164,7 @@ class SinksSpec extends SparkSpec {
 
   test("dim upsert fails on an unreadable stored table and leaves it as it was") {
     import scala.jdk.CollectionConverters._
-    val path = Files.createTempDirectory("graft-dimc").toString + "/dim"
+    val path = testDir("graft-dimc") + "/dim"
     Seq((1L, "a")).toDF("id", "name").coalesce(1).write.parquet(path)
     def files(): Seq[java.nio.file.Path] = Files.list(java.nio.file.Paths.get(path))
       .iterator().asScala.toSeq
@@ -182,7 +182,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("dim upsert treats a path with no data files as an empty table") {
-    val path = Files.createTempDirectory("graft-dime").toString + "/dim"
+    val path = testDir("graft-dime") + "/dim"
     Files.createDirectories(java.nio.file.Paths.get(path))
     Files.createFile(java.nio.file.Paths.get(path, "_SUCCESS"))
     Sinks.upsertBatch(Seq((1L, "a")).toDF("id", "name"), path, "id")
@@ -191,7 +191,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("dim upsert is idempotent under batch replay (foreachBatch retry)") {
-    val path = Files.createTempDirectory("graft-dimr").toString + "/dim"
+    val path = testDir("graft-dimr") + "/dim"
     val b = Seq((1L, "x"), (2L, "y")).toDF("id", "name")
     Sinks.upsertBatch(b, path, "id")
     Sinks.upsertBatch(b, path, "id") // replay of the same micro-batch
@@ -203,7 +203,7 @@ class SinksSpec extends SparkSpec {
     import graft.gmall.DbRouter
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    val root = Files.createTempDirectory("graft-j5").toString
+    val root = testDir("graft-j5")
     val in = s"$root/in"; val cfgDir = s"$root/cfg"; val outDir = s"$root/out"
 
     def writeCfg(rows: Seq[(String, String, String, String, String, String)]): Unit =
@@ -266,7 +266,7 @@ class SinksSpec extends SparkSpec {
       "a static overwrite would have deleted the rest") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-backfill").toString
+    val root = testDir("graft-backfill")
     val init = Seq(("a", 1L, 10L), ("a", 2L, 20L), ("b", 3L, 30L),
       ("c", 4L, 40L)).toDF("p", "k", "v")
     init.write.mode("overwrite").partitionBy("p").parquet(root)

@@ -26,6 +26,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
+  /** A fresh directory `java.io.tmpdir/<prefix><random>` for a spec's
+    * files, deleted with the checkpoints when the suite ends. */
+  def testDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    checkpoints.add(dir)
+    dir
+  }
+
   override protected def afterAll(): Unit =
     try super.afterAll()
     finally { checkpoints.forEach(d => SparkSpec.ended.add(d)); SparkSpec.sweep() }

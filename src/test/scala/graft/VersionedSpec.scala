@@ -1506,4 +1506,32 @@ class VersionedSpec extends SparkSpec {
     val falsePos = (5000L until 6000L).count(tiny.mightContainLong)
     assert(falsePos < 50, s"tiny sketch claimed $falsePos/1000 absent keys")
   }
+
+  test("recover on a clean 3-version store runs no Spark job") {
+    val dir = tmpDir("recover-jobs")
+    val jobs = new JobListener
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val base = spark.range(0, 200)
+        .select(col("id").as("k"), pmod(col("id"), lit(4L)).as("bucket"))
+      Versioned.init(spark, dir, "bucket", base)
+      Versioned.merge(spark, dir, "bucket", "k",
+        base.filter(col("k") % 9 === 0).withColumn("op", lit("U")))
+      Versioned.deleteKeysDv(spark, dir, "bucket", "k",
+        base.filter(col("k") % 7 === 0))
+      assert(Versioned.versions(dir) === Seq(1L, 2L, 3L))
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      jobs.tag = "recover"
+      assert(Versioned.recover(spark, dir).isEmpty)
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      jobs.tag = null
+      // every manifest answer is a driver-local LocalRelation collect
+      assert(jobs.jobs.isEmpty, jobs.jobs.map(_.site).mkString("; "))
+      assert(Versioned.read(spark, dir).count() ===
+        base.filter(col("k") % 7 =!= 0).count())
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      rm(dir)
+    }
+  }
 }

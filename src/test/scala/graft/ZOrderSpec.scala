@@ -127,7 +127,7 @@ class ZOrderSpec extends SparkSpec {
     val grid = (for (x <- 0 until 64; y <- 0 until 64)
       yield (x.toLong, y.toLong)).toDF("x", "y")
     def envelopes(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val root = java.nio.file.Files.createTempDirectory("graft-zorder").toFile
+      val root = new java.io.File(testDir("graft-zorder"))
       try {
         df.write.mode("overwrite").parquet(root.toString)
         val files = root.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -227,7 +227,7 @@ class ZOrderSpec extends SparkSpec {
     val grid = (for (x <- 0 until 64; y <- 0 until 64)
       yield (x.toLong, y.toLong)).toDF("x", "y")
     def envelopes(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val root = java.nio.file.Files.createTempDirectory("graft-hilb").toFile
+      val root = new java.io.File(testDir("graft-hilb"))
       try {
         df.write.mode("overwrite").parquet(root.toString)
         val files = root.listFiles().filter(_.getName.endsWith(".parquet"))
