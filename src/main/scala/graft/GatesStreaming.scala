@@ -82,6 +82,80 @@ private[graft] object GatesStreaming {
       |   OR (nxt IS NULL AND (us + 1800000000)//1000 < mu//1000)
       |GROUP BY user_id ORDER BY user_id""".stripMargin
 
+  /** The change-feed gates' store rows: `orders` keyed by `k` with its
+    * price, in 8 buckets of `k`. */
+  private def cdfBase(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
+        pmod(col("o_orderkey"), lit(8L)).as("bucket"))
+
+  /** The change-feed gates' three merge sources over [[cdfBase]]: each
+    * updates and deletes in its own buckets, the first two also insert
+    * fresh keys. */
+  private def cdfMerges(base: DataFrame): Seq[DataFrame] = Seq(
+    base.filter(col("bucket") === 2 && col("k") % 3 === 0)
+      .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
+      .withColumn("op", lit("U"))
+      .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
+        .withColumn("op", lit("D")))
+      .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
+        .withColumn("k", col("k") + 80000000L)
+        .withColumn("op", lit("I"))),
+    base.filter(col("bucket") === 2 && col("k") % 3 === 0)
+      .withColumn("op", lit("D"))
+      .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
+        .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
+        .withColumn("op", lit("U")))
+      .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
+        .withColumn("k", col("k") + 90000000L)
+        .withColumn("op", lit("I"))),
+    base.filter(col("bucket") === 1 && col("k") % 4 === 0)
+      .withColumn("price", (col("price") * 7).cast("decimal(18,2)"))
+      .withColumn("op", lit("U"))
+      .unionByName(base.filter(col("bucket") === 3 && col("k") % 7 === 2)
+        .withColumn("op", lit("D"))))
+
+  /** Seed a change-feed consumer's serving state at `out`: per-bucket
+    * row count and price sum of `store`'s v1. */
+  private def cdfSeed(s: SparkSession, store: String, out: String): Unit =
+    Versioned.read(s, store, 1L)
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("price")).cast("decimal(30,2)").as("ps"))
+      .write.parquet(out)
+
+  /** Fold one change-feed interval into the serving state: the state at
+    * `prev` plus `cdf`'s signed per-bucket delta (+1 for I/U_post, -1
+    * for D/U_pre: updates cancel in the count and move the sum by
+    * exactly new-old), written to `out`. */
+  private def cdfFold(s: SparkSession, cdf: DataFrame, prev: String,
+      out: String): Unit = {
+    val sign = when(col("op").isin("I", "U_post"), 1L).otherwise(-1L)
+    val delta = cdf.groupBy(col("bucket"))
+      .agg(sum(sign).as("dc"),
+        sum(sign * col("price")).cast("decimal(30,2)").as("dps"))
+    s.read.parquet(prev)
+      .join(delta, Seq("bucket"), "full_outer")
+      .select(col("bucket"),
+        (coalesce(col("cnt"), lit(0L)) + coalesce(col("dc"), lit(0L)))
+          .as("cnt"),
+        (coalesce(col("ps"), lit(0).cast("decimal(30,2)")) +
+          coalesce(col("dps"), lit(0).cast("decimal(30,2)")))
+          .cast("decimal(30,2)").as("ps"))
+      .write.parquet(out)
+  }
+
+  /** A change-feed gate's result: the serving state at `path` with its
+    * fold count, materialized before the gate sweeps its stores. */
+  private def cdfResult(s: SparkSession, path: String, nTicks: Long,
+      extra: org.apache.spark.sql.Column*): DataFrame =
+    s.read.parquet(path)
+      .select(Seq(col("bucket"), col("cnt"),
+        col("ps").cast("double").as("price_sum"),
+        lit(nTicks).as("n_ticks")) ++ extra: _*)
+      .orderBy(col("bucket"))
+      .localCheckpoint(true)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── J14 streaming twin: temporal enrich as a STREAM-STATIC join —
@@ -146,58 +220,24 @@ private[graft] object GatesStreaming {
     // the history WITHOUT recompute: each micro-batch carries one
     // version tick, reads that interval's CDF WITH pre-images
     // (Versioned.changesWithPreImages — churned-partition files only),
-    // reduces it to a signed per-bucket delta (+1 for I/U_post, -1 for
-    // D/U_pre: updates cancel in the count and move the sum by exactly
-    // new-old), and folds it into the parquet state store. Addition
-    // commutes, so batch order is irrelevant — the at-scale posture
-    // where CDF intervals arrive from a queue. Oracle = full recompute
-    // of the final snapshot: equality proves incremental == recompute.
+    // reduces it to a signed per-bucket delta and folds it into the
+    // parquet state store ([[cdfFold]]). Addition commutes, so batch
+    // order is irrelevant — the at-scale posture where CDF intervals
+    // arrive from a queue. Oracle = full recompute of the final
+    // snapshot: equality proves incremental == recompute.
     "stream_k21_cdf" -> ((s, dir) => {
-      import graft.operators.Versioned
       val root = shmRoot
       val uniq = System.nanoTime()
       val store = s"$root/graft-cdfstream-$uniq"
       val ticks = s"$root/graft-cdfticks-$uniq"
       val state = s"$root/graft-cdfstate-$uniq"
       try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
+        val base = cdfBase(s, dir)
         Versioned.init(s, store, "bucket", base)
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, store, "bucket", "k", b1)
-        val b2 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("op", lit("D"))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-            .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("U")))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, store, "bucket", "k", b2)
-        val b3 =
-          base.filter(col("bucket") === 1 && col("k") % 4 === 0)
-            .withColumn("price", (col("price") * 7).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 3 && col("k") % 7 === 2)
-            .withColumn("op", lit("D")))
-        Versioned.merge(s, store, "bucket", "k", b3)
+        cdfMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
         // serving state seeded from v1 (the one-time build, k12 pattern)
         import s.implicits._
-        Versioned.read(s, store, 1L)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("price")).cast("decimal(30,2)").as("ps"))
-          .write.parquet(s"$state/s0")
+        cdfSeed(s, store, s"$state/s0")
         // one tick file per CDF interval -> one micro-batch each
         Seq(2L, 3L, 4L).foreach(v =>
           Seq(v).toDF("tick").coalesce(1).write.mode("append").parquet(ticks))
@@ -211,147 +251,56 @@ private[graft] object GatesStreaming {
         graft.streaming.StreamRunner.runForeachBatch(stream) { (b, _) =>
           b.select(col("tick")).collect().map(_.getLong(0)).foreach { v =>
             val n = nTicks.incrementAndGet()
-            val cdf = Versioned.changesWithPreImages(s, store, v - 1, v, "k")
-            val sign = when(col("op").isin("I", "U_post"), 1L).otherwise(-1L)
-            val delta = cdf.groupBy(col("bucket"))
-              .agg(sum(sign).as("dc"),
-                sum(sign * col("price")).cast("decimal(30,2)").as("dps"))
-            val st = s.read.parquet(cur.get())
-            st.join(delta, Seq("bucket"), "full_outer")
-              .select(col("bucket"),
-                (coalesce(col("cnt"), lit(0L)) + coalesce(col("dc"), lit(0L)))
-                  .as("cnt"),
-                (coalesce(col("ps"), lit(0).cast("decimal(30,2)")) +
-                  coalesce(col("dps"), lit(0).cast("decimal(30,2)")))
-                  .cast("decimal(30,2)").as("ps"))
-              .write.parquet(s"$state/s$n")
+            cdfFold(s, Versioned.changesWithPreImages(s, store, v - 1, v, "k"),
+              cur.get(), s"$state/s$n")
             cur.set(s"$state/s$n")
           }
         }
-        s.read.parquet(cur.get())
-          .select(col("bucket"), col("cnt"),
-            col("ps").cast("double").as("price_sum"),
-            lit(nTicks.get()).as("n_ticks"))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the stores sweep
+        cdfResult(s, cur.get(), nTicks.get())
       } finally { rmTree(store); rmTree(ticks); rmTree(state) }
     }),
 
 
     // ── K22 streaming twin: the TRANSACTION LOG ITSELF as the stream —
     // stream_k21_cdf stages version ticks; here the consumer TAILS the
-    // store's _log with a plain file source (manifest parquet files,
-    // maxFilesPerTrigger=1 ⇒ one commit per micro-batch), derives each
-    // batch's version from the arriving file paths, and folds that
-    // interval's pre-image CDF into the serving store. This is the
-    // Delta-CDF-reader discovery shape end-to-end: no side channel, the
-    // committed log is the streamable source, and a consumer attaching
-    // later replays history in commit order. Same signed-delta fold and
-    // the same full-recompute oracle as the tick twin (shared val);
-    // within-batch version sets sort ascending and deltas commute, so
-    // batch boundaries are irrelevant.
+    // store's commit pointers through ChangeFeed.run
+    // (maxFilesPerTrigger=1 ⇒ one commit per micro-batch), which maps
+    // each batch's arriving pointer to its version and hands over that
+    // interval's pre-image CDF, folded into the serving store. This is
+    // the Delta-CDF-reader discovery shape end-to-end: no side channel,
+    // the committed log is the streamable source, and a consumer
+    // attaching later replays history in commit order. Same
+    // signed-delta fold and the same full-recompute oracle as the tick
+    // twin (shared val).
     "stream_k22_cdf_tail" -> ((s, dir) => {
-      import graft.operators.Versioned
       val root = shmRoot
       val uniq = System.nanoTime()
       val store = s"$root/graft-cdftail-$uniq"
       val state = s"$root/graft-cdftailst-$uniq"
+      val ckpt = s"$root/graft-cdftailck-$uniq"
       try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
+        val base = cdfBase(s, dir)
         Versioned.init(s, store, "bucket", base)
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, store, "bucket", "k", b1)
-        val b2 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("op", lit("D"))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-            .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("U")))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, store, "bucket", "k", b2)
-        val b3 =
-          base.filter(col("bucket") === 1 && col("k") % 4 === 0)
-            .withColumn("price", (col("price") * 7).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 3 && col("k") % 7 === 2)
-            .withColumn("op", lit("D")))
-        Versioned.merge(s, store, "bucket", "k", b3)
+        cdfMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
         // consumer attaches AFTER v1 (its state is seeded from v1, the
         // one-time build) and tails the log for everything later
-        import s.implicits._
-        Versioned.read(s, store, 1L)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("price")).cast("decimal(30,2)").as("ps"))
-          .write.parquet(s"$state/s0")
-        val cur = new java.util.concurrent.atomic.AtomicReference(s"$state/s0")
-        val done = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-        done.add(1L) // v1 is the seed, not a delta
+        cdfSeed(s, store, s"$state/v1")
         val n = new java.util.concurrent.atomic.AtomicLong(0L)
-        // tail the log: each manifest's parquet file(s) arrive as stream
-        // rows carrying their path via the hidden _metadata column
-        val manifestSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("file",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("part",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("rows",
-            org.apache.spark.sql.types.LongType)))
-        val tail = s.readStream.schema(manifestSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$store/_log/*")
-          .select(col("_metadata.file_path").as("path"))
-        graft.streaming.StreamRunner.runForeachBatch(tail) { (b, _) =>
-          val vs = b.select(col("path")).collect()
-            .flatMap(r => "/v=(\\d+)/".r.findFirstMatchIn(r.getString(0))
-              .map(_.group(1).toLong))
-            .distinct.sorted.filterNot(done.contains)
-          vs.foreach { v =>
-            done.add(v)
-            val step = n.incrementAndGet()
-            val cdf = Versioned.changesWithPreImages(s, store, v - 1, v, "k")
-            val sign = when(col("op").isin("I", "U_post"), 1L).otherwise(-1L)
-            val delta = cdf.groupBy(col("bucket"))
-              .agg(sum(sign).as("dc"),
-                sum(sign * col("price")).cast("decimal(30,2)").as("dps"))
-            s.read.parquet(cur.get())
-              .join(delta, Seq("bucket"), "full_outer")
-              .select(col("bucket"),
-                (coalesce(col("cnt"), lit(0L)) + coalesce(col("dc"), lit(0L)))
-                  .as("cnt"),
-                (coalesce(col("ps"), lit(0).cast("decimal(30,2)")) +
-                  coalesce(col("dps"), lit(0).cast("decimal(30,2)")))
-                  .cast("decimal(30,2)").as("ps"))
-              .write.parquet(s"$state/s$step")
-            cur.set(s"$state/s$step")
-          }
+        graft.streaming.ChangeFeed.run(s, store, "k", ckpt,
+            startingVersion = 1L, maxFilesPerTrigger = 1) {
+          (cdf, fromV, toV, _) =>
+            n.incrementAndGet()
+            cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
         }
-        s.read.parquet(cur.get())
-          .select(col("bucket"), col("cnt"),
-            col("ps").cast("double").as("price_sum"),
-            lit(n.get()).as("n_ticks"))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the stores sweep
-      } finally { rmTree(store); rmTree(state) }
+        cdfResult(s, s"$state/v${Versioned.latest(store)}", n.get())
+      } finally { rmTree(store); rmTree(state); rmTree(ckpt) }
     }),
 
 
     // ── K25 streaming twin: KILL-AND-RESUME over the reusable
-    // change-feed source (r15 verdict task 2). stream_k21/k22 hand-roll
-    // tick staging / log tailing with an AtomicReference state pointer —
-    // neither survives a restart. streaming.ChangeFeed is the extracted
+    // change-feed source (r15 verdict task 2). stream_k21 hand-rolls
+    // tick staging with an AtomicReference state pointer, which does
+    // not survive a restart. streaming.ChangeFeed is the extracted
     // first-class entry point: version-as-offset via the file source's
     // own checkpointed offsets, one contiguous CDF interval per
     // micro-batch. The gate runs TWO lifecycles over ONE durable
@@ -367,51 +316,18 @@ private[graft] object GatesStreaming {
     // store listing each fold — no in-memory pointer survives, exactly
     // like a restarted consumer.
     "stream_k25_cdf_resume" -> ((s, dir) => {
-      import graft.operators.Versioned
       val root = shmRoot
       val uniq = System.nanoTime()
       val store = s"$root/graft-cdfresume-$uniq"
       val state = s"$root/graft-cdfresumest-$uniq"
       val ckpt = s"$root/graft-cdfresumeck-$uniq"
       try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
+        val base = cdfBase(s, dir)
         Versioned.init(s, store, "bucket", base)
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, store, "bucket", "k", b1)
-        val b2 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("op", lit("D"))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-            .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("U")))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, store, "bucket", "k", b2)
-        val b3 =
-          base.filter(col("bucket") === 1 && col("k") % 4 === 0)
-            .withColumn("price", (col("price") * 7).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 3 && col("k") % 7 === 2)
-            .withColumn("op", lit("D")))
-        Versioned.merge(s, store, "bucket", "k", b3)
+        cdfMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
         // serving state seeded from v1; state dir per applied interval's
         // toV — the restart-safe anchor a resumed consumer re-derives
-        Versioned.read(s, store, 1L)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("price")).cast("decimal(30,2)").as("ps"))
-          .write.parquet(s"$state/v1")
+        cdfSeed(s, store, s"$state/v1")
         def applied(): Seq[Long] =
           Option(new java.io.File(state).listFiles())
             .getOrElse(Array.empty).filter(_.isDirectory)
@@ -425,19 +341,7 @@ private[graft] object GatesStreaming {
             // idempotence arm — skip, let the batch commit this time
             sawRedelivery.set(true)
           } else {
-            val sign = when(col("op").isin("I", "U_post"), 1L).otherwise(-1L)
-            val delta = cdf.groupBy(col("bucket"))
-              .agg(sum(sign).as("dc"),
-                sum(sign * col("price")).cast("decimal(30,2)").as("dps"))
-            s.read.parquet(s"$state/v$fromV")
-              .join(delta, Seq("bucket"), "full_outer")
-              .select(col("bucket"),
-                (coalesce(col("cnt"), lit(0L)) + coalesce(col("dc"), lit(0L)))
-                  .as("cnt"),
-                (coalesce(col("ps"), lit(0).cast("decimal(30,2)")) +
-                  coalesce(col("dps"), lit(0).cast("decimal(30,2)")))
-                  .cast("decimal(30,2)").as("ps"))
-              .write.parquet(s"$state/v$toV")
+            cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
             // the worst-ordered crash: state written, offsets not
             if (toV == 3L && crashArmed.getAndSet(false))
               throw new RuntimeException(
@@ -461,48 +365,30 @@ private[graft] object GatesStreaming {
           "the uncommitted v3 batch must be redelivered on resume")
         require(applied() == Seq(1L, 2L, 3L, 4L),
           s"resume must complete the log exactly once: ${applied()}")
-        s.read.parquet(s"$state/v${applied().max}")
-          .select(col("bucket"), col("cnt"),
-            col("ps").cast("double").as("price_sum"),
-            lit(applied().size - 1).cast("long").as("n_ticks"))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the stores sweep
+        cdfResult(s, s"$state/v${applied().max}", applied().size - 1L)
       } finally { rmTree(store); rmTree(state); rmTree(ckpt) }
     }),
 
 
-    // ── K27: change feed ACROSS A COMPACTION, over a CAS-protocol store
-    // (r16 verdict tasks 5+6). v3 is a compact: every packed file is
-    // rewritten with ZERO logical changes, and the consumer's v3 interval
-    // must emit ZERO rows (changesImpl's key-diff drops rewritten-but-
-    // unchanged rows) — a phantom row would both bump phantom_rows and
-    // move the final aggregate off the full recompute. The store commits
-    // via put-if-absent pointers (no directory rename anywhere), so the
-    // feed also proves the CAS tail: the stream follows `_log/*.ptr`
-    // instead of manifest dirs. An explicit straddle probe pins that an
-    // interval SPANNING the compact (v2→v4) equals the v3→v4 one.
+    // ── K27: change feed ACROSS A COMPACTION (r16 verdict tasks 5+6).
+    // v3 is a compact: every packed file is rewritten with ZERO logical
+    // changes, and the consumer's v3 interval must emit ZERO rows
+    // (changesImpl's key-diff drops rewritten-but-unchanged rows) — a
+    // phantom row would both bump phantom_rows and move the final
+    // aggregate off the full recompute. An explicit straddle probe pins
+    // that an interval SPANNING the compact (v2→v4) equals the v3→v4
+    // one.
     "stream_k27_cdf_compact" -> ((s, dir) => {
-      import graft.operators.Versioned
       val root = shmRoot
       val uniq = System.nanoTime()
       val store = s"$root/graft-cdfcompact-$uniq"
       val state = s"$root/graft-cdfcompactst-$uniq"
       val ckpt = s"$root/graft-cdfcompactck-$uniq"
       try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, store, "bucket", base, commitProtocol = "cas")
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, store, "bucket", "k", b1)
+        val base = cdfBase(s, dir)
+        val merges = cdfMerges(base)
+        Versioned.init(s, store, "bucket", base)
+        Versioned.merge(s, store, "bucket", "k", merges(0))
         val total = Versioned.read(s, store, 2L).count()
         // v3: the logical no-op — bins sized so multiple files pack
         val v3 = Versioned.compact(s, store, "bucket",
@@ -515,52 +401,22 @@ private[graft] object GatesStreaming {
         require((mFiles(2L) -- mFiles(3L)).nonEmpty &&
           (mFiles(3L) -- mFiles(2L)).nonEmpty,
           "the compact must actually rewrite files or the boundary is fake")
-        val b2 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("op", lit("D"))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-            .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("U")))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, store, "bucket", "k", b2)
+        Versioned.merge(s, store, "bucket", "k", merges(1))
         // straddle probe: an interval SPANNING the compact equals the
         // post-compact one — the rewrite contributes nothing
         val straddle = Versioned.changes(s, store, 2L, 4L, "k").count()
         val postOnly = Versioned.changes(s, store, 3L, 4L, "k").count()
         require(straddle == postOnly,
           s"compact must be CDF-invisible: straddle=$straddle post=$postOnly")
-        Versioned.read(s, store, 1L)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("price")).cast("decimal(30,2)").as("ps"))
-          .write.parquet(s"$state/v1")
+        cdfSeed(s, store, s"$state/v1")
         val phantom = new java.util.concurrent.atomic.AtomicLong(0L)
         graft.streaming.ChangeFeed.run(s, store, "k", ckpt) {
           (cdf, fromV, toV, _) =>
             if (toV == 3L) phantom.addAndGet(cdf.count())
-            val sign = when(col("op").isin("I", "U_post"), 1L).otherwise(-1L)
-            val delta = cdf.groupBy(col("bucket"))
-              .agg(sum(sign).as("dc"),
-                sum(sign * col("price")).cast("decimal(30,2)").as("dps"))
-            s.read.parquet(s"$state/v$fromV")
-              .join(delta, Seq("bucket"), "full_outer")
-              .select(col("bucket"),
-                (coalesce(col("cnt"), lit(0L)) + coalesce(col("dc"), lit(0L)))
-                  .as("cnt"),
-                (coalesce(col("ps"), lit(0).cast("decimal(30,2)")) +
-                  coalesce(col("dps"), lit(0).cast("decimal(30,2)")))
-                  .cast("decimal(30,2)").as("ps"))
-              .write.parquet(s"$state/v$toV")
+            cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
         }
-        s.read.parquet(s"$state/v4")
-          .select(col("bucket"), col("cnt"),
-            col("ps").cast("double").as("price_sum"),
-            lit(3L).as("n_ticks"),
-            lit(phantom.get()).as("phantom_rows"))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the stores sweep
+        cdfResult(s, s"$state/v4", 3L,
+          lit(phantom.get()).as("phantom_rows"))
       } finally { rmTree(store); rmTree(state); rmTree(ckpt) }
     }),
 
@@ -577,16 +433,13 @@ private[graft] object GatesStreaming {
     // the batch recompute. A direct same-batchId replay after the run
     // pins the no-op once more (replay_noop).
     "stream_k31_idempotent_sink" -> ((s, dir) => {
-      import graft.operators.Versioned
       val root = shmRoot
       val uniq = System.nanoTime()
       val store = s"$root/graft-txnsink-$uniq"
       val stage = s"$root/graft-txnsinkstg-$uniq"
       val ckpt = s"$root/graft-txnsinkck-$uniq"
       try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
+        val base = cdfBase(s, dir)
         Versioned.init(s, store, "bucket", base)
         val c0 = base.filter(col("k") % 3 === 0)
           .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))

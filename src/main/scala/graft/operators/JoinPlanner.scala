@@ -42,15 +42,28 @@ object JoinPlanner {
     * another (using-column join; both sides keep their column name). */
   case class Edge(a: String, aCol: String, b: String, bCol: String)
 
-  /** The order actually chosen by the last [[plan]] call (table names,
-    * build order) — exposed so specs can pin the decision, not just the
-    * result. */
-  @volatile private[graft] var lastOrder: Seq[String] = Nil
-
   private def estimate(rowsA: Long, ndvA: Long, rowsB: Long, ndvB: Long): Double =
     rowsA.toDouble * rowsB.toDouble / math.max(1L, math.max(ndvA, ndvB)).toDouble
 
+  /** The join order [[plan]] builds (table names, build order) — a pure
+    * function of the stats, so specs can pin the decision, not just the
+    * result. */
+  def order(rels: Seq[Rel], edges: Seq[Edge]): Seq[String] = {
+    val (seed, steps) = greedy(rels, edges)
+    seed.name +: steps.map(_._2.name)
+  }
+
   def plan(rels: Seq[Rel], edges: Seq[Edge]): DataFrame = {
+    val (seed, steps) = greedy(rels, edges)
+    steps.foldLeft(seed.df) { case (tree, (edge, next)) =>
+      tree.join(next.df, tree(edge.aCol) === next.df(edge.bCol))
+    }
+  }
+
+  /** Greedy left-deep ordering: the seed relation, then each joined
+    * relation with the edge that joins it (oriented tree side first). */
+  private def greedy(rels: Seq[Rel],
+      edges: Seq[Edge]): (Rel, Seq[(Edge, Rel)]) = {
     require(rels.nonEmpty, "plan needs at least one relation")
     val byName = rels.map(r => r.name -> r).toMap
     require(byName.size == rels.size, "duplicate relation names")
@@ -64,12 +77,11 @@ object JoinPlanner {
     // cheapest connected expansion
     val seed = rels.minBy(r => (r.rows, r.name))
     var joined = Set(seed.name)
-    var tree = seed.df
     var treeRows = seed.rows.toDouble
     // NDVs of the current tree: a join key keeps min(ndv, treeRows)-ish;
     // we keep it simple and carry each base table's NDVs forward — the
     // planner only compares candidates, and the estimate error is shared
-    var order = Seq(seed.name)
+    var steps = Vector.empty[(Edge, Rel)]
     while (joined.size < rels.size) {
       val candidates = edges.flatMap { e =>
         if (joined.contains(e.a) && !joined.contains(e.b))
@@ -86,11 +98,9 @@ object JoinPlanner {
           (estimate(treeRows.toLong, tNdv, nxt.rows, nxt.ndv(nCol)), nxt.name)
       }
       treeRows = estimate(treeRows.toLong, treeNdv, next.rows, next.ndv(nextColName))
-      tree = tree.join(next.df, tree(edge.aCol) === next.df(edge.bCol))
       joined += next.name
-      order :+= next.name
+      steps :+= ((edge, next))
     }
-    lastOrder = order
-    tree
+    (seed, steps)
   }
 }

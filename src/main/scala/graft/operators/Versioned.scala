@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
   * IllegalStateException (callers that treated the race as ISE keep
   * working) but is its own type so [[Versioned.mergeRetry]] retries
   * NOTHING else — a stopped SparkContext, a broken invariant, or an
-  * environmental rename failure must surface on attempt 1, not after
+  * environmental filesystem failure must surface on attempt 1, not after
   * five sleeps mislabeled "contention exceeds the retry budget". */
 final class ConcurrentCommitException(msg: String, cause: Throwable)
   extends IllegalStateException(msg, cause)
@@ -28,8 +28,8 @@ final class ConcurrentCommitException(msg: String, cause: Throwable)
   *     by later merges). The token is writer-unique, so concurrent
   *     attempts never mix files; manifests reference files by absolute
   *     path, so the dir name carries no read semantics.
-  *   - `_log/v=N/…parquet` — version N's manifest, one row per (data
-  *     file, partition value) it serves, in the ONE manifest schema
+  *   - `_log/m-<token>/…parquet` — a manifest, one row per (data file,
+  *     partition value) its snapshot serves, in the ONE manifest schema
   *     [[ManifestSchema]]: `file`, `part`, `rows`, `dv` (the file's
   *     tombstone paths; NULL = none) and `stats` (physical column name
   *     -> `struct<mn, mx, bloom>`; NULL = no stats). Beside it, three
@@ -40,16 +40,19 @@ final class ConcurrentCommitException(msg: String, cause: Throwable)
   *     an idempotent writer's commit adds `_txn.json`. A snapshot IS
   *     its manifest's file set; untouched files are carried into the
   *     next manifest BY REFERENCE, so a merge writes only churned
-  *     partitions' rows plus one tiny manifest. The manifest dir is
-  *     staged and RENAMED into place atomically — the single commit
-  *     point: of N racing writers exactly one commits version N, the
-  *     rest throw and retry against the new latest (optimistic
-  *     concurrency, the Delta log-store contract on a local FS).
-  *     A `cas`-protocol store ([[init]] opt-in, for object stores where
-  *     rename is a non-atomic copy) instead keeps the staged dir at its
-  *     final name `_log/m-<token>` and commits by atomically CREATING
-  *     the pointer file `_log/v=N.ptr` — put-if-absent, the S3/GCS
-  *     conditional-write contract ([[commitPointerCas]]).
+  *     partitions' rows plus one tiny manifest. The token is
+  *     writer-unique and the dir is written at this final name, never
+  *     renamed.
+  *   - `_log/v=N.ptr` — version N's commit: a pointer file whose one
+  *     line names its manifest dir, created put-if-absent — the single
+  *     commit point ([[commitManifest]]): of N racing writers exactly
+  *     one creates version N's pointer, the rest throw and retry
+  *     against the new latest (optimistic concurrency, the Delta
+  *     log-store contract). The protocol needs no atomic rename, so it
+  *     holds unchanged where a rename is a non-atomic copy (S3/GCS
+  *     conditional writes).
+  *   - `_log/_txns-*.tsv` — the txn facts of vacuumed versions
+  *     ([[vacuum]]).
   *
   * `read(dir, v)` plans from the manifest (file-count-sized, like every
   * index probe here) and scans exactly that snapshot's files — old
@@ -67,68 +70,70 @@ object Versioned {
 
   private def logRoot(dir: String) = s"$dir/_log"
 
-  /** Store-level commit-protocol marker under the log (a committed
-    * property of the store, written once by [[claimStore]]): absent =
-    * `rename` (atomic directory rename — POSIX/HDFS), present = `cas`
-    * (put-if-absent pointer commit — the object-store posture, where
-    * rename is a non-atomic copy and the Delta LogStore contract
-    * applies). */
-  private val CasMarker = "_commit_protocol.json"
+  /** Version `v`'s commit pointer. */
+  private def pointer(dir: String, v: Long) = s"${logRoot(dir)}/v=$v.ptr"
 
-  private[graft] def casMode(dir: String): Boolean =
-    new java.io.File(logRoot(dir), CasMarker).isFile
+  /** The glob of every commit pointer under `dir`'s log: one file per
+    * committed version, the unit a change-feed tail streams
+    * ([[graft.streaming.ChangeFeed]]). */
+  private[graft] def pointerGlob(dir: String): String =
+    s"${logRoot(dir)}/v=*.ptr"
 
-  /** Resolve version `v`'s committed manifest DIRECTORY. Rename-mode
-    * stores commit the directory at `_log/v=N` itself; CAS-mode stores
-    * commit a pointer FILE `_log/v=N.ptr` whose one-line content names
-    * the writer-unique, never-renamed staged dir `_log/m-<token>`. Every
-    * read path resolves through here, so the two protocols share one
-    * read stack. */
-  private[graft] def manifestDir(dir: String, v: Long): String = {
-    val direct = new java.io.File(s"${logRoot(dir)}/v=$v")
-    if (direct.isDirectory) direct.getPath
-    else {
-      val ptr = new java.io.File(s"${logRoot(dir)}/v=$v.ptr")
-      require(ptr.isFile,
-        s"Versioned: version $v is not committed under $dir " +
-          "(neither a manifest dir nor a pointer file)")
-      val tok = new String(java.nio.file.Files.readAllBytes(ptr.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      require(tok.nonEmpty && !tok.contains("/") && !tok.contains(".."),
-        s"Versioned: corrupt pointer for v=$v under $dir: '$tok'")
-      s"${logRoot(dir)}/$tok"
+  private val PointerName = """v=(\d+)\.ptr""".r
+
+  /** The version a commit pointer at `path` (a bare name or a full path
+    * or URI) commits; None for any other file. Only the basename is
+    * parsed, so a store rooted under `.../v=3/...` never resolves to
+    * that constant. */
+  private[graft] def pointerVersion(path: String): Option[Long] =
+    path.substring(path.lastIndexOf('/') + 1) match {
+      case PointerName(n) => Some(n.toLong)
+      case _ => None
     }
+
+  /** Resolve version `v`'s committed manifest DIRECTORY: the pointer
+    * file `_log/v=N.ptr` names the writer-unique staged dir
+    * `_log/m-<token>`. Every read path resolves through here. */
+  private[graft] def manifestDir(dir: String, v: Long): String = {
+    val ptr = new java.io.File(pointer(dir, v))
+    require(ptr.isFile,
+      s"Versioned: version $v is not committed under $dir (no pointer file)")
+    val tok = new String(java.nio.file.Files.readAllBytes(ptr.toPath),
+      java.nio.charset.StandardCharsets.UTF_8).trim
+    require(tok.nonEmpty && !tok.contains("/") && !tok.contains(".."),
+      s"Versioned: corrupt pointer for v=$v under $dir: '$tok'")
+    s"${logRoot(dir)}/$tok"
   }
 
   /** WRITER-UNIQUE data dir for an attempted commit of version `v`. The
     * token makes concurrent writers collision-free on the data side
     * (two racing merges never mix files in one dir — manifests reference
     * files by absolute path, so the dir name carries no read semantics);
-    * the COMMIT POINT is the atomic manifest rename in
-    * [[commitManifest]], and a losing attempt's data dir becomes an
-    * unreferenced orphan that [[recover]]/[[vacuum]] reclaims. */
+    * the COMMIT POINT is the pointer create in [[commitManifest]], and a
+    * losing attempt's data dir becomes an unreferenced orphan that
+    * [[recover]]/[[vacuum]] reclaims. */
   private def newDataDir(dir: String, v: Long) =
     s"$dir/data/v=$v-${System.nanoTime()}"
 
-  /** Commit version `v`: the manifest (plus the committed `_schema.json`
-    * sidecar) is written to a temp dir inside the log and RENAMED into
-    * place atomically — the Delta-style single commit point. Exactly one
-    * of N racing writers wins the rename; losers get a loud
-    * IllegalStateException and retry against the new latest (their data
-    * dirs are token-unique orphans, reclaimed by maintenance). Local-FS
-    * rename is atomic; an object-store deployment would slot a log-store
-    * CAS here, exactly like Delta's LogStore abstraction. */
+  /** Commit version `v`: the manifest and its sidecars are written to a
+    * writer-unique staged dir `_log/m-<token>` at its FINAL location,
+    * then the commit point is the atomic creation of the pointer file
+    * `_log/v=N.ptr` (content: the token), which exactly one racing
+    * writer wins. The local-FS form of a conditional PUT is a hard-link
+    * create — atomic, content fully visible at link time,
+    * `FileAlreadyExistsException` when the name is taken; an
+    * object-store deployment maps this one call to
+    * `PUT if-none-match:*` with identical semantics. A loser reclaims
+    * its staging and throws [[ConcurrentCommitException]], to retry
+    * against the new latest; its data dir is a token-unique orphan that
+    * [[recover]] reclaims. Any other failure (permissions, quota, a link
+    * across devices) is environmental: it is rethrown as itself and the
+    * staging is kept for diagnosis. */
   private def commitManifest(spark: SparkSession, dir: String, v: Long,
       manifest: DataFrame, schema: StructType,
       txn: Option[(String, Long)] = None): Unit = {
-    val cas = casMode(dir)
-    // CAS staging dirs are FINAL locations (never renamed — on an object
-    // store a dir "rename" is a non-atomic copy); rename-mode staging
-    // dirs move to _log/v=N at commit. Both are writer-unique.
-    val stagedName =
-      if (cas) s"m-$v-${System.nanoTime()}-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      else s".tmp-v=$v-${System.nanoTime()}"
+    val stagedName = s"m-$v-${System.nanoTime()}-" +
+      java.util.UUID.randomUUID().toString.take(8)
     val tmp = s"${logRoot(dir)}/$stagedName"
     // every commit writes the ONE manifest schema, whatever produced the
     // rows (a carried manifest, a stats scan, a dv rewrite)
@@ -143,7 +148,7 @@ object Versioned {
     // per probe (the data sidecar above serves the same role for
     // snapshot scans)
     writeSidecar(tmp, "_manifest_schema.json", ManifestSchema.json)
-    // commit wall-time rides the atomic rename with everything else —
+    // commit wall-time rides the pointer commit with everything else —
     // the TIMESTAMP AS OF resolution source ([[readAsOf]])
     writeSidecar(tmp, "_commit.json",
       s"""{"version": $v, "ts_millis": ${System.currentTimeMillis()}}""")
@@ -165,79 +170,22 @@ object Versioned {
       writeSidecar(tmp, "_txn.json",
         s"""{"app_id": "$app", "txn_version": $tv}""")
     }
-    if (cas) { commitPointerCas(dir, v, stagedName); return }
-    val src = java.nio.file.Paths.get(tmp)
-    val dst = java.nio.file.Paths.get(s"${logRoot(dir)}/v=$v")
-    try {
-      java.nio.file.Files.move(src, dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
-    } catch {
-      // Only a LOST RACE becomes ConcurrentCommitException: the two
-      // destination-occupied exception types, or any other filesystem
-      // failure where the destination verifiably exists (someone
-      // committed it). Environmental failures — AccessDenied,
-      // AtomicMoveNotSupported on a non-atomic mount, cross-device —
-      // leave dst absent and RETHROW as themselves, staging dir kept
-      // for diagnosis (recover() reclaims `.tmp-v=*` later). Calling a
-      // permission error "committed by a concurrent writer" would send
-      // mergeRetry into five doomed retries masking the real cause.
-      case e: java.nio.file.FileSystemException =>
-        if (!lostRace(e, dst)) throw e
-        TmpDirs.rmTree(tmp)
-        throw new ConcurrentCommitException(
-          s"Versioned: version $v was committed by a concurrent writer — " +
-            "re-read latest() and retry the operation", e)
-    }
-  }
-
-  /** PUT-IF-ABSENT pointer commit — the object-store protocol (r16
-    * verdict task 5). The staged manifest dir `_log/m-<token>` is fully
-    * written at its FINAL location; the commit point is the atomic
-    * creation of the pointer file `_log/v=N.ptr` (content: the token),
-    * which exactly one racing writer wins. The local-FS simulation of a
-    * conditional PUT is a hard-link create — atomic, content fully
-    * visible at link time, `FileAlreadyExistsException` when the name is
-    * taken; a real object-store deployment maps this one call to
-    * `PUT if-none-match:*` (S3/GCS conditional write) with identical
-    * semantics. Losers' staged dirs are unreferenced orphans that
-    * [[recover]] reclaims. NOTHING here relies on rename atomicity. */
-  private def commitPointerCas(dir: String, v: Long,
-      stagedName: String): Unit = {
     val ptrTmp = java.nio.file.Paths.get(s"${logRoot(dir)}/.ptr-$stagedName")
     java.nio.file.Files.write(ptrTmp,
       stagedName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val dst = java.nio.file.Paths.get(s"${logRoot(dir)}/v=$v.ptr")
     try {
-      java.nio.file.Files.createLink(dst, ptrTmp)
-      java.nio.file.Files.deleteIfExists(ptrTmp)
-      ()
+      java.nio.file.Files.createLink(
+        java.nio.file.Paths.get(pointer(dir, v)), ptrTmp)
+      java.nio.file.Files.delete(ptrTmp)
     } catch {
       case e: java.nio.file.FileAlreadyExistsException =>
-        // lost the race — reclaim this attempt's staging eagerly (the
-        // data dir stays an orphan for recover, same as rename mode)
-        TmpDirs.rmTree(s"${logRoot(dir)}/$stagedName")
+        TmpDirs.rmTree(tmp)
         java.nio.file.Files.deleteIfExists(ptrTmp)
         throw new ConcurrentCommitException(
           s"Versioned: version $v was committed by a concurrent writer " +
             "(pointer already present) — re-read latest() and retry", e)
-      // any other failure is environmental (permissions, quota, link
-      // across devices): rethrow as itself, staging kept for diagnosis
     }
   }
-
-  /** The commit-race CLASSIFIER behind [[commitManifest]]'s catch,
-    * extracted so VersionedSpec can pin the discrimination table
-    * directly: the two destination-occupied exception types are races
-    * by definition; any OTHER filesystem failure is a race only if the
-    * destination verifiably exists (someone committed it). Everything
-    * else — AccessDenied, AtomicMoveNotSupported on a non-atomic
-    * mount, a missing parent — is environmental and must NOT retry. */
-  private[graft] def lostRace(e: java.nio.file.FileSystemException,
-      dst: java.nio.file.Path): Boolean =
-    e.isInstanceOf[java.nio.file.FileAlreadyExistsException] ||
-      e.isInstanceOf[java.nio.file.DirectoryNotEmptyException] ||
-      java.nio.file.Files.exists(dst)
 
   /** Column-mapping key: a logical column's PHYSICAL (on-disk) name,
     * carried as StructField metadata inside the committed sidecar schema
@@ -318,13 +266,8 @@ object Versioned {
   def versions(dir: String): Seq[Long] =
     Option(new java.io.File(logRoot(dir)).listFiles())
       .getOrElse(Array.empty)
-      .collect {
-        case f if f.isDirectory && f.getName.startsWith("v=") =>
-          f.getName.stripPrefix("v=").toLong
-        case f if f.isFile && f.getName.startsWith("v=") &&
-            f.getName.endsWith(".ptr") =>
-          f.getName.stripPrefix("v=").stripSuffix(".ptr").toLong
-      }.distinct.sorted.toIndexedSeq
+      .flatMap(f => if (f.isFile) pointerVersion(f.getName) else None)
+      .sorted.toIndexedSeq
 
   def latest(dir: String): Long = {
     val vs = versions(dir)
@@ -500,18 +443,6 @@ object Versioned {
       .write.partitionBy(PartDir).mode("errorifexists")
       .parquet(path)
 
-  /** Claim `dir` for a new store's version 1 under `commitProtocol` — the
-    * one check-and-mark [[init]] and [[shallowClone]] share. The protocol
-    * is a committed property of the store: `rename` leaves no marker,
-    * `cas` writes [[CasMarker]] before the first commit. */
-  private def claimStore(dir: String, commitProtocol: String): Unit = {
-    require(versions(dir).isEmpty, s"Versioned: $dir already initialized")
-    require(commitProtocol == "rename" || commitProtocol == "cas",
-      s"Versioned: unknown commitProtocol '$commitProtocol'")
-    if (commitProtocol == "cas")
-      writeSidecar(logRoot(dir), CasMarker, """{"protocol": "cas"}""")
-  }
-
   /** Create version 1 from `df`. `statsCol` opts the store into
     * stats-carrying manifests: every commit's manifest rows then carry
     * the per-(file, part) min/max envelope + Bloom sketch of that column
@@ -523,21 +454,14 @@ object Versioned {
     * collected by the SAME single narrow scan, and a probe on ANY of
     * them prunes. Pass the SAME stats columns to every subsequent
     * [[merge]]/[[compact]] — a commit without them carries NULL stats
-    * for its fresh files (correct, unprunable).
-    *
-    * `commitProtocol` is a committed property of the store: `rename`
-    * (default — atomic directory rename, POSIX/HDFS) or `cas`
-    * (put-if-absent pointer commit, the object-store posture where
-    * rename is a non-atomic copy; see [[commitPointerCas]]). Every
-    * later merge/compact/evolution commit follows the store's own
-    * protocol automatically. */
+    * for its fresh files (correct, unprunable). Version 1 commits by
+    * pointer like every later version ([[commitManifest]]). */
   def init(spark: SparkSession, dir: String, partCol: String,
       df: DataFrame, statsCol: Option[String] = None,
-      statsCols: Seq[String] = Nil,
-      commitProtocol: String = "rename"): Long = {
+      statsCols: Seq[String] = Nil): Long = {
     require(!(partCol +: df.columns).contains(PartDir),
       s"Versioned: column name $PartDir is reserved")
-    claimStore(dir, commitProtocol)
+    require(versions(dir).isEmpty, s"Versioned: $dir already initialized")
     val dataPath = newDataDir(dir, 1L)
     writeData(df, dataPath, partCol)
     commitManifest(spark, dir, 1L,
@@ -1344,9 +1268,9 @@ object Versioned {
     * its orphan walk deletes only under `dst/data`, never `src`'s
     * files. Returns the clone's committed version (1). */
   def shallowClone(spark: SparkSession, src: String, dst: String,
-      version: Long = -1L, commitProtocol: String = "rename"): Long = {
+      version: Long = -1L): Long = {
     val v = resolve(src, version)
-    claimStore(dst, commitProtocol)
+    require(versions(dst).isEmpty, s"Versioned: $dst already initialized")
     commitManifest(spark, dst, 1L,
       readManifest(spark, src, v), readSchema(src, v))
     1L
@@ -1579,14 +1503,15 @@ object Versioned {
   }
 
   /** [[merge]] with the optimistic-concurrency RETRY LOOP a contended
-    * writer needs: on losing a commit race (the IllegalStateException
-    * the atomic rename throws), re-run the whole merge against the NEW
-    * latest — correct by construction because [[merge]] re-reads
-    * `latest(dir)` and re-derives its slice on every attempt, so the
-    * retry sees (and preserves) the winner's rows. Source semantics must
-    * be retry-safe the way MERGE sources are: the same upsert applied
-    * against a newer snapshot (our arms are; a read-modify-write source
-    * computed OUTSIDE the merge would need re-derivation by the caller).
+    * writer needs: on losing a commit race (the
+    * [[ConcurrentCommitException]] the pointer create throws), re-run
+    * the whole merge against the NEW latest — correct by construction
+    * because [[merge]] re-reads `latest(dir)` and re-derives its slice
+    * on every attempt, so the retry sees (and preserves) the winner's
+    * rows. Source semantics must be retry-safe the way MERGE sources
+    * are: the same upsert applied against a newer snapshot (our arms
+    * are; a read-modify-write source computed OUTSIDE the merge would
+    * need re-derivation by the caller).
     * `maxAttempts` exhaustion rethrows the last loss. */
   def mergeRetry(spark: SparkSession, dir: String, partCol: String,
       keyCol: String, source: DataFrame, opCol: String = "op",
@@ -1723,13 +1648,14 @@ object Versioned {
       deleteKeysDv(spark, dir, partCol, keyCol, keys))
 
   /** Reclaim CRASHED and LOST-RACE commit attempts: every attempt
-    * writes its data under a token-unique dir and only the atomic
-    * manifest rename commits it, so a writer that died mid-attempt (or
-    * lost the race) leaves a data dir no manifest references — invisible
-    * to reads, never blocking (the next attempt takes a fresh token),
-    * just occupying space. This deletes every data dir with ZERO files
-    * referenced by any committed manifest, plus any stranded `.tmp-v=*`
-    * manifest staging dirs, and returns the removed data-dir names. Run
+    * writes its data under a token-unique dir and only the pointer
+    * create commits it, so a writer that died mid-attempt (or lost the
+    * race) leaves a data dir no manifest references — invisible to
+    * reads, never blocking (the next attempt takes a fresh token), just
+    * occupying space. This deletes every data dir with ZERO files
+    * referenced by any committed manifest, plus the log's stranded
+    * staging (`m-*` manifest dirs no pointer names, `.ptr-*` temp
+    * files), and returns the removed data-dir names. Run
     * it like [[vacuum]] — from the maintenance schedule with writers
     * quiesced; an IN-FLIGHT attempt looks exactly like a crash from
     * here. */
@@ -1742,16 +1668,12 @@ object Versioned {
           f.getName.endsWith(".parquet") && referenced(f.getCanonicalPath)))
       .map(_.getName).sorted.toIndexedSeq
     orphaned.foreach(n => TmpDirs.rmTree(s"$dir/data/$n"))
-    // stranded staging: rename-mode `.tmp-v=*` dirs, CAS-mode `.ptr-*`
-    // temp files, and CAS staged manifest dirs no committed pointer
-    // references (a lost race that crashed before its own cleanup)
     val pointed = versions(dir)
       .map(v => new java.io.File(manifestDir(dir, v)).getName).toSet
     Option(new java.io.File(logRoot(dir)).listFiles())
       .getOrElse(Array.empty)
       .filter { f =>
-        (f.isDirectory && f.getName.startsWith(".tmp-v=")) ||
-          (f.isFile && f.getName.startsWith(".ptr-")) ||
+        (f.isFile && f.getName.startsWith(".ptr-")) ||
           (f.isDirectory && f.getName.startsWith("m-") && !pointed(f.getName))
       }
       .foreach(f => TmpDirs.rmTree(f.getPath))
@@ -1811,12 +1733,12 @@ object Versioned {
       oldRollups.foreach(f => { f.delete(); () })
     }
     drop.foreach { v =>
-      // resolve BEFORE deleting the pointer: a CAS version is a pointer
-      // file + its staged manifest dir, a rename version just the dir
-      TmpDirs.rmTree(manifestDir(dir, v))
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"${logRoot(dir)}/v=$v.ptr"))
-      ()
+      // resolve, then uncommit (pointer first), then reclaim: a crash in
+      // between leaves an unpointed `m-*` dir for [[recover]], never a
+      // pointer to a missing manifest
+      val md = manifestDir(dir, v)
+      java.nio.file.Files.delete(java.nio.file.Paths.get(pointer(dir, v)))
+      TmpDirs.rmTree(md)
     }
     orphans.size
   }

@@ -11,15 +11,17 @@ import org.apache.spark.sql.streaming.Trigger
   * SURVEY §2 S3/S4 — pointed at our own store instead of a database
   * binlog).
   *
-  * Mechanics: a plain file stream source TAILS `store/_log` — each
-  * committed version is exactly one manifest parquet file (the commit
-  * point is that file's atomic rename), so the log IS streamable with no
-  * side channel, and Spark's own file-source offsets make version
-  * delivery EXACTLY-ONCE across restarts: committed batches never
-  * redeliver, the one in-flight batch redelivers with the SAME batchId.
-  * Each micro-batch maps its arriving manifest paths back to version
-  * numbers and hands the consumer ONE change-feed frame for the batch's
-  * contiguous version interval (computed by [[Versioned.changes]] /
+  * Mechanics: a plain file stream source TAILS the store's commit
+  * pointers ([[Versioned.pointerGlob]]) — each committed version is
+  * exactly one pointer file (the commit point is that file's
+  * put-if-absent create), so the log IS streamable with no side
+  * channel, and Spark's own file-source offsets make version delivery
+  * EXACTLY-ONCE across restarts: committed batches never redeliver, the
+  * one in-flight batch redelivers with the SAME batchId. Each
+  * micro-batch maps its arriving pointer paths back to version numbers
+  * ([[Versioned.pointerVersion]]) and hands the consumer ONE
+  * change-feed frame for the batch's contiguous version interval
+  * (computed by [[Versioned.changes]] /
   * [[Versioned.changesWithPreImages]] — churned-partition files only,
   * never the table).
   *
@@ -52,29 +54,13 @@ object ChangeFeed {
       checkpoint: String, startingVersion: Long = 1L,
       withPreImages: Boolean = true, maxFilesPerTrigger: Int = 1)
       (fold: (DataFrame, Long, Long, Long) => Unit): Unit = {
-    // A rename-protocol store's log is one manifest dir per version —
-    // tail its parquet. A CAS-protocol store's commit point is the
-    // pointer FILE `_log/v=N.ptr` (the manifest dir `m-<token>` carries
-    // no version in its path), so there the stream tails the pointer
-    // files as text: same file-source exactly-once offsets, one file per
-    // version either way.
-    val cas = Versioned.casMode(store)
-    // only the path matters; one column keeps the probe scan trivial
-    val probeSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType)))
-    val tail =
-      if (cas)
-        spark.readStream
-          .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-          .text(s"$store/_log/*.ptr")
-          .select(col("_metadata.file_path").as("path"))
-      else spark.readStream.schema(probeSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-        .parquet(s"$store/_log/*")
-        .select(col("_metadata.file_path").as("path"))
+    // only the path matters: it names the version
+    val tail = spark.readStream
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .text(Versioned.pointerGlob(store))
+      .select(col("_metadata.file_path").as("path"))
     // Cross-batch ordering guard: the file source orders by modification
-    // time, which matches commit order except when two manifests land in
+    // time, which matches commit order except when two pointers land in
     // the same mtime tick. Rather than trust mtime, remember the last
     // folded toV and refuse a batch that isn't the next contiguous
     // interval — an inversion fails loudly instead of folding intervals
@@ -118,25 +104,17 @@ object ChangeFeed {
     val q = tail.writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
         val vs = b.select(col("path")).collect()
-          .flatMap { r =>
-            // the LAST v=N segment is the manifest's own (the one
-            // adjacent to _log); a store rooted under .../v=3/... must
-            // not resolve every manifest to that constant version. CAS
-            // pointer files carry the version in their own basename.
-            val rx = if (cas) "/v=(\\d+)\\.ptr$".r else "/v=(\\d+)/".r
-            rx.findAllMatchIn(r.getString(0))
-              .toList.lastOption.map(_.group(1).toLong)
-          }
+          .flatMap(r => Versioned.pointerVersion(r.getString(0)))
           .distinct.sorted.filter(_ > startingVersion)
         if (vs.nonEmpty) {
           val (lo, hi) = (vs.head, vs.last)
-          // one manifest file per version and the source delivers every
+          // one pointer file per version and the source delivers every
           // file exactly once, so a gap inside a batch means the log was
-          // tampered with (or a manifest was vacuumed mid-tail) — the
+          // tampered with (or a version was vacuumed mid-tail) — the
           // interval CDF would silently skip those versions' changes
           require(vs.length.toLong == hi - lo + 1,
             s"ChangeFeed: batch $batchId delivered a non-contiguous " +
-              s"version set $vs under $store/_log — a manifest is " +
+              s"version set $vs under $store — a commit pointer is " +
               "missing; refuse to fold a gapped interval")
           // accept: the next contiguous interval (fresh), or an EXACT
           // redelivery of the last folded interval (the crash window
@@ -147,7 +125,7 @@ object ChangeFeed {
             require(lo == phi + 1 || (lo == plo && hi == phi),
               s"ChangeFeed: batch $batchId delivers v=[$lo,$hi] but the " +
                 s"log already folded through v=[$plo,$phi] — out-of-order " +
-                "or gapped delivery (same-mtime manifests); refuse to fold")
+                "or gapped delivery (same-mtime pointers); refuse to fold")
           }
           val cdf =
             if (withPreImages)

@@ -128,8 +128,17 @@ object Sinks {
     val incoming = (if (bucketed)
         incoming0.withColumn("__bucket", pmod(xxhash64(col(keyCol)), lit(buckets.toLong)))
       else incoming0).withColumn("__src", lit(1))
+    val empty =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], incoming.schema)
+    // a table not created yet is empty: asked of the filesystem, not
+    // learned from a failed read, whose analysis error Spark also hands
+    // to the session's query-execution listeners (ObservationManager's
+    // logs it as an ERROR)
+    val dir = new org.apache.hadoop.fs.Path(path)
     val existing =
-      try {
+      if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+        empty
+      else try {
         val stored0 = spark.read.parquet(path)
         // partition-column inference yields int; align with the long we write
         val stored = if (bucketed) stored0.withColumn("__bucket", col("__bucket").cast("long"))
@@ -148,12 +157,12 @@ object Sinks {
         }
         versioned.withColumn("__src", lit(0))
       } catch {
-        // only a missing table, or one without data files, is empty: an
-        // unreadable one (a corrupt footer) fails the upsert instead of
-        // being overwritten with the incoming rows alone
+        // only a table without data files is empty too: an unreadable one
+        // (a corrupt footer) fails the upsert instead of being overwritten
+        // with the incoming rows alone
         case e: AnalysisException
             if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")(e.getCondition) =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], incoming.schema)
+          empty
       }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol)).orderBy(col("__v").desc, col("__src").desc)

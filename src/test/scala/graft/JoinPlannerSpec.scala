@@ -25,12 +25,13 @@ class JoinPlannerSpec extends SparkSpec {
       Rel("fact", fact, 10000L, Map("fk1" -> 100L, "fk2" -> 10L)),
       mkRel("dim_big", 100, 100, ("d1", "v1")),
       mkRel("dim_small", 10, 10, ("d2", "v2")))
-    val planned = JoinPlanner.plan(rels, Seq(
+    val edges = Seq(
       Edge("fact", "fk1", "dim_big", "d1"),
-      Edge("fact", "fk2", "dim_small", "d2")))
+      Edge("fact", "fk2", "dim_small", "d2"))
+    val planned = JoinPlanner.plan(rels, edges)
     // dim_small (10 rows) seeds; its only edge reaches the fact; dim_big
     // joins last — never fact-first
-    assert(JoinPlanner.lastOrder === Seq("dim_small", "fact", "dim_big"))
+    assert(JoinPlanner.order(rels, edges) === Seq("dim_small", "fact", "dim_big"))
     assert(planned.count() === 10000L)
   }
 

@@ -6,11 +6,15 @@ import scala.jdk.CollectionConverters._
 
 /** Source guards over `src/main/scala`.
   *
-  * Only [[graft.operators.Versioned]] knows where a version's manifest
-  * lives: a rename-protocol store commits `_log/v=N`, a CAS store a
-  * pointer to `_log/m-<token>`. Library code that opens a manifest
-  * builds no `_log/v=$...` path itself; it resolves the directory
-  * through `Versioned.manifestDir`, which serves both protocols.
+  * Only [[graft.operators.Versioned]] knows the store's log layout: a
+  * version commits by the put-if-absent pointer file `_log/v=N.ptr`,
+  * which names its manifest dir `_log/m-<token>`, and there is no other
+  * commit protocol. Library code that opens a manifest builds no
+  * `_log/v=$...` path itself; it resolves the directory through
+  * `Versioned.manifestDir`. No other library file names the pointer
+  * suffix, the manifest-dir prefix or a commit-protocol option;
+  * `ChangeFeed` asks `Versioned` for the pointer glob and for the
+  * version of a pointer path.
   *
   * `transformWithState` is the one keyed-state streaming API: no library
   * file names the older `flatMapGroupsWithState` / `mapGroupsWithState`
@@ -44,6 +48,13 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
 
   test("no library file but Versioned.scala builds a _log/v=$ path") {
     val found = offenders("Versioned.scala")(_.contains("_log/v=$"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no library file but Versioned.scala names the log layout or a " +
+    "commit protocol") {
+    val found = offenders("Versioned.scala")(line =>
+      Seq(".ptr", "m-<", "\"m-", "commitProtocol").exists(line.contains))
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -27,7 +27,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   private def manifestFiles(dir: String, v: Long): Set[String] =
-    spark.read.parquet(s"$dir/_log/v=$v")
+    spark.read.parquet(Versioned.manifestDir(dir, v))
       .select(col("file")).distinct().as[String].collect().toSet
 
   test("merge carries untouched files by reference and writes only the " +
@@ -56,7 +56,7 @@ class VersionedSpec extends SparkSpec {
         "fresh v2 entries must come from v2's own (token-unique) write")
       // only bucket-1 files were replaced
       val replaced = m1 -- m2
-      val partsOfReplaced = spark.read.parquet(s"$dir/_log/v=1")
+      val partsOfReplaced = spark.read.parquet(Versioned.manifestDir(dir, 1L))
         .filter(col("file").isin(replaced.toSeq: _*))
         .select(col("part")).distinct().as[String].collect().toSet
       assert(partsOfReplaced === Set("1"),
@@ -893,23 +893,29 @@ class VersionedSpec extends SparkSpec {
     }
   }
 
-  test("CAS commit protocol: put-if-absent pointer commits — no rename " +
+  test("pointer commits race safely: put-if-absent pointers, no rename " +
     "anywhere, racing writers lose no update, full read stack works") {
-    val dir = tmpDir("cas")
+    val dir = tmpDir("ptr-race")
     try {
       val base = spark.range(0, 80)
         .select(col("id").as("k"), (col("id") * 3).as("v"),
           pmod(col("id"), lit(4L)).as("bucket"))
-      Versioned.init(spark, dir, "bucket", base, commitProtocol = "cas")
+      Versioned.init(spark, dir, "bucket", base)
       def logEntries(): Seq[String] =
         Option(new java.io.File(s"$dir/_log").listFiles())
           .getOrElse(Array.empty).map(_.getName).toIndexedSeq
       // the commit is a pointer FILE; no v=N directory ever exists, so
-      // nothing relied on directory-rename atomicity
+      // nothing relies on directory-rename atomicity
       assert(logEntries().contains("v=1.ptr"))
       assert(!new java.io.File(s"$dir/_log/v=1").exists(),
-        "a CAS store must never materialize a v=N directory")
-      // four contended writers through the SAME retry loop as rename mode
+        "a store must never materialize a v=N directory")
+      // the retry signal is its own type (so mergeRetry retries nothing
+      // else) yet still an ISE for callers that match the race as one
+      val cce = new graft.operators.ConcurrentCommitException("x", null)
+      assert(cce.isInstanceOf[IllegalStateException])
+      assert(!new IllegalStateException("not a race")
+        .isInstanceOf[graft.operators.ConcurrentCommitException])
+      // four contended writers through the mergeRetry loop
       import scala.concurrent._
       import scala.concurrent.duration._
       import ExecutionContext.Implicits.global
@@ -924,10 +930,10 @@ class VersionedSpec extends SparkSpec {
       gate.countDown()
       val landed = Await.result(Future.sequence(writers), 10.minutes)
       assert(landed.sorted === Seq(2L, 3L, 4L, 5L),
-        s"4 contended CAS writers must land 4 distinct versions: $landed")
+        s"4 contended writers must land 4 distinct versions: $landed")
       assert(logEntries().count(_.matches("v=\\d+\\.ptr")) === 5)
       assert(!logEntries().exists(_.matches("v=\\d+")),
-        "no rename-committed manifest dirs may appear in a CAS store")
+        "no v=N manifest dir may appear in the log")
       val latest = Versioned.read(spark, dir)
       assert(latest.count() === 80)
       assert(latest.filter(col("v") >= 7000L).count() === 4L,
@@ -961,6 +967,72 @@ class VersionedSpec extends SparkSpec {
     } finally rm(dir)
   }
 
+  test("a commit stranded before its pointer is invisible and " +
+    "reclaimable: data dir only, + staged manifest, + pointer temp file") {
+    val dir = tmpDir("stranded")
+    try {
+      val base = spark.range(0, 120)
+        .select(col("id").as("k"), (col("id") * 3).as("v"),
+          pmod(col("id"), lit(4L)).as("bucket"))
+      Versioned.init(spark, dir, "bucket", base)
+      def snapshot(): Seq[org.apache.spark.sql.Row] =
+        Versioned.read(spark, dir).orderBy("k").collect().toSeq
+      def logEntries(): Set[String] =
+        Option(new java.io.File(s"$dir/_log").list())
+          .getOrElse(Array.empty[String]).toSet
+      // each round strands one more step of an attempt at latest + 1,
+      // by hand, as a writer killed just before that step leaves it
+      for ((steps, round) <- Seq(1, 2, 3).zipWithIndex) {
+        val committed = Versioned.versions(dir)
+        val latest = Versioned.latest(dir)
+        val rows = snapshot()
+        val logBefore = logEntries()
+        val target = latest + 1
+        val token = s"$target-${System.nanoTime()}-stranded"
+        // step 1: the attempt's data dir, real parquet the manifest
+        // would have named
+        val data = s"$dir/data/v=$token"
+        base.filter(col("bucket") === 1L)
+          .withColumn("v", col("v") + 1000L + round).write.parquet(data)
+        // step 2: its staged manifest dir at its final name, sidecars
+        // included, naming those data files
+        val staged = s"$dir/_log/m-$token"
+        if (steps >= 2) {
+          TmpDirs.leafFiles(data).filter(_.getName.endsWith(".parquet"))
+            .map(f => (f.getCanonicalPath, "1", 1L)).toSeq
+            .toDF("file", "part", "rows").write.parquet(staged)
+          Seq("_schema.json", "_manifest_schema.json", "_commit.json")
+            .foreach(n => java.nio.file.Files.copy(
+              new java.io.File(Versioned.manifestDir(dir, latest), n).toPath,
+              new java.io.File(staged, n).toPath))
+        }
+        // step 3: the pointer's temp file, written but never linked
+        val ptrTmp = new java.io.File(s"$dir/_log/.ptr-m-$token")
+        if (steps >= 3)
+          java.nio.file.Files.write(ptrTmp.toPath, s"m-$token".getBytes)
+        // (1) the log still commits exactly what it did
+        assert(Versioned.versions(dir) === committed, s"steps=$steps")
+        assert(Versioned.latest(dir) === latest, s"steps=$steps")
+        // (2) reads answer the last committed snapshot, row for row
+        assert(snapshot() === rows, s"steps=$steps: read moved")
+        // (3) recover reclaims every stranded piece, and only those
+        val recovered = Versioned.recover(spark, dir)
+        assert(recovered === Seq(s"v=$token"), s"steps=$steps")
+        assert(!new java.io.File(data).exists() &&
+          !new java.io.File(staged).exists() && !ptrTmp.exists(),
+          s"steps=$steps: a stranded piece survived recover")
+        assert(logEntries() === logBefore, s"steps=$steps: log changed")
+        assert(snapshot() === rows, s"steps=$steps: recover moved a read")
+        // (4) the next merge commits latest + 1
+        assert(Versioned.merge(spark, dir, "bucket", "k",
+          Seq((round.toLong * 4 + 1, 5000L + round, 1L, "U"))
+            .toDF("k", "v", "bucket", "op")) === target, s"steps=$steps")
+        assert(Versioned.read(spark, dir)
+          .filter(col("v") === 5000L + round).count() === 1L)
+      }
+    } finally rm(dir)
+  }
+
   test("optimistic concurrency: racing merges get exactly one winner, " +
     "the loser fails loudly, the store stays consistent; recover() " +
     "unblocks a crashed commit") {
@@ -987,7 +1059,7 @@ class VersionedSpec extends SparkSpec {
       val results = Await.result(Future.sequence(Seq(fa, fb)), 5.minutes)
       val winners = results.collect { case Right(v) => v }
       val losers = results.collect { case Left(e) => e }
-      // both read latest=1 and target v=2; the atomic manifest rename
+      // both read latest=1 and target v=2; the put-if-absent pointer
       // admits EXACTLY one — the loser throws the retry-signaling error
       assert(winners === Seq(2L), s"expected one winner, got $results")
       assert(losers.size === 1)
@@ -1026,38 +1098,6 @@ class VersionedSpec extends SparkSpec {
     } finally rm(dir)
   }
 
-  test("lostRace classifier: destination-occupied exceptions are races; " +
-    "environmental failures with an absent destination are not") {
-    val dir = tmpDir("classify")
-    try {
-      new java.io.File(dir).mkdirs()
-      val absent = java.nio.file.Paths.get(s"$dir/nope")
-      val present = java.nio.file.Paths.get(dir)
-      // the two occupied-destination types are races regardless of dst
-      assert(Versioned.lostRace(
-        new java.nio.file.FileAlreadyExistsException(s"$dir/nope"), absent))
-      assert(Versioned.lostRace(
-        new java.nio.file.DirectoryNotEmptyException(s"$dir/nope"), absent))
-      // environmental failures: a race ONLY if dst verifiably exists
-      assert(!Versioned.lostRace(
-        new java.nio.file.AccessDeniedException(s"$dir/nope"), absent),
-        "AccessDenied with absent dst must NOT be treated as a race")
-      assert(!Versioned.lostRace(
-        new java.nio.file.AtomicMoveNotSupportedException(
-          "src", s"$dir/nope", "non-atomic mount"), absent),
-        "AtomicMoveNotSupported must NOT be treated as a race")
-      assert(Versioned.lostRace(
-        new java.nio.file.AccessDeniedException(dir), present),
-        "any failure with the destination committed IS a lost race")
-      // the retry signal is its own type (so mergeRetry retries nothing
-      // else) yet still an ISE for callers that matched the old contract
-      val cce = new graft.operators.ConcurrentCommitException("x", null)
-      assert(cce.isInstanceOf[IllegalStateException])
-      assert(!new IllegalStateException("not a race")
-        .isInstanceOf[graft.operators.ConcurrentCommitException])
-    } finally rm(dir)
-  }
-
   test("mergeRetry retries ONLY the commit race: a permanently-occupied " +
     "target exhausts maxAttempts (one data dir per attempt), budget " +
     "message names the contention, recover() reclaims the attempts; a " +
@@ -1072,12 +1112,12 @@ class VersionedSpec extends SparkSpec {
         Option(new java.io.File(s"$dir/data").listFiles())
           .getOrElse(Array.empty).filter(_.isDirectory)
           .map(_.getName).filter(_.startsWith("v=2-")).toSet
-      // occupy v=2's manifest slot with a regular FILE: versions() skips
-      // it (not a directory), so every attempt re-reads latest=1, targets
-      // v=2, and loses the "race" — rename onto an existing path raises a
-      // FileSystemException with dst present, classified as a lost race
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_log/v=2"), Array[Byte](0))
+      // occupy v=2's pointer slot with a DIRECTORY: versions() skips it
+      // (not a pointer file), so every attempt re-reads latest=1, targets
+      // v=2, and loses the "race" — the pointer link onto the taken name
+      // fails with FileAlreadyExistsException, the one lost-race signal
+      java.nio.file.Files.createDirectory(
+        java.nio.file.Paths.get(s"$dir/_log/v=2.ptr"))
       val src = Seq((1L, 777L, 1L, "U")).toDF("k", "v", "bucket", "op")
       val e = intercept[IllegalStateException] {
         Versioned.mergeRetry(spark, dir, "bucket", "k", src, maxAttempts = 3)
@@ -1101,7 +1141,7 @@ class VersionedSpec extends SparkSpec {
         "a non-race failure must not spin the retry loop")
       // cleanup path: drop the squatter, recover() reclaims the orphans,
       // and the store is writable again
-      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/_log/v=2"))
+      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/_log/v=2.ptr"))
       val recovered = Versioned.recover(spark, dir)
       assert(recovered.count(_.startsWith("v=2-")) === 3)
       assert(Versioned.mergeRetry(spark, dir, "bucket", "k", src) === 2L)
@@ -1146,7 +1186,7 @@ class VersionedSpec extends SparkSpec {
       // stats-less carried ones (correctness over pruning): answer empty
       assert(Versioned.readPoint(spark, dir, "c", 5000L, 2L).count() === 0L)
       // and the fresh files' 2-entry map is really committed
-      val freshStats = spark.read.parquet(s"$dir/_log/v=2")
+      val freshStats = spark.read.parquet(Versioned.manifestDir(dir, 2L))
         .filter(col("file").contains("/data/v=2-"))
         .select(sort_array(map_keys(col("stats"))).as("ks"))
       assert(freshStats.count() > 0)
@@ -1253,8 +1293,10 @@ class VersionedSpec extends SparkSpec {
         b.withColumn("v", col("v") + 2))
       Versioned.merge(spark, dir, "bucket", "k",
         b.withColumn("v", col("v") + 3))
+      val txnManifest = Versioned.manifestDir(dir, 2L)
       Versioned.vacuum(spark, dir, retainFrom = 3L)
-      assert(!new java.io.File(s"$dir/_log/v=2").exists(),
+      assert(!new java.io.File(txnManifest).exists() &&
+        !new java.io.File(s"$dir/_log/v=2.ptr").exists(),
         "the txn-bearing manifest must actually be vacuumed")
       assert(Versioned.txnVersion(dir, "ingest") === Some(7L),
         "the rollup must carry the vacuumed txn fact")

@@ -5,12 +5,12 @@ import graft.operators.Versioned
 import org.apache.spark.sql.functions._
 
 /** The ChangeFeed cross-batch ordering guard (ADVICE r16): the file
-  * source delivers manifests in modification-time order, which matches
+  * source delivers commit pointers in modification-time order, which matches
   * commit order — except when two commits land in the same mtime tick
   * (or a clock skew inverts them). The consumer contract is interval
   * contiguity, so an inverted delivery must FAIL LOUDLY instead of
   * folding intervals out of order. This spec forges the inversion
-  * directly: a 3-version store whose v=2 manifest is backdated NEWER
+  * directly: a 3-version store whose v=2 pointer is dated NEWER
   * than v=3's, so the tail delivers v3 first — the guard must kill the
   * query, not fold v3's delta before v2's. */
 class ChangeFeedGuardSpec extends SparkSpec {
@@ -31,15 +31,10 @@ class ChangeFeedGuardSpec extends SparkSpec {
     go(new java.io.File(p))
   }
 
-  private def setMtime(dir: java.io.File, t: Long): Unit = {
-    def go(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(go)
-      java.nio.file.Files.setLastModifiedTime(f.toPath,
-        java.nio.file.attribute.FileTime.fromMillis(t))
-      ()
-    }
-    go(dir)
+  private def setMtime(f: java.io.File, t: Long): Unit = {
+    java.nio.file.Files.setLastModifiedTime(f.toPath,
+      java.nio.file.attribute.FileTime.fromMillis(t))
+    ()
   }
 
   test("mtime-inverted manifest delivery fails loudly instead of " +
@@ -55,10 +50,10 @@ class ChangeFeedGuardSpec extends SparkSpec {
         Seq((1L, 9001L, 1L, "U")).toDF("k", "v", "bucket", "op"))
       Versioned.merge(spark, dir, "bucket", "k",
         Seq((2L, 9002L, 2L, "U")).toDF("k", "v", "bucket", "op"))
-      // forge the inversion: v=2's manifest files NEWER than v=3's
+      // forge the inversion: v=2's commit pointer NEWER than v=3's
       val now = System.currentTimeMillis()
-      setMtime(new java.io.File(s"$dir/_log/v=3"), now - 120000L)
-      setMtime(new java.io.File(s"$dir/_log/v=2"), now - 30000L)
+      setMtime(new java.io.File(s"$dir/_log/v=3.ptr"), now - 120000L)
+      setMtime(new java.io.File(s"$dir/_log/v=2.ptr"), now - 30000L)
       val folded = scala.collection.mutable.ArrayBuffer.empty[Long]
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         ChangeFeed.run(spark, dir, "k", ckpt, maxFilesPerTrigger = 1) {
