@@ -42,8 +42,9 @@ class VersionedFormatSpec extends SparkSpec {
       s"$op: unexpected log entries ${strayLogEntries(dir)}")
   }
 
-  test("every writer commits the one manifest schema, all three sidecars " +
-    "and a pointer") {
+  // pointer commits are the compare-and-swap protocol, the store's only one
+  test("every writer commits the one manifest schema and all three " +
+    "sidecars (cas)") {
     val root = TmpDirs.shmRoot
     val dir = s"$root/graft-format-${System.nanoTime()}"
     val clone = s"$dir-clone"
