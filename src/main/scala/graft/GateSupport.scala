@@ -5,7 +5,7 @@ import graft.functions.TextFns._
 import graft.functions.VectorFns
 import graft.multimodal.Multimodal
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared helpers for the Gates* registry families: numeric casts,
@@ -14,8 +14,191 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object GateSupport {
 
-  private[graft] def dec(c: String): org.apache.spark.sql.Column =
+  private[graft] def dec(c: String): Column =
     col(c).cast("decimal(18,2)")
+
+  /** A driver-side check as a 1/0 verdict column. */
+  private[graft] def flag(b: Boolean): Column = lit(if (b) 1L else 0L)
+
+  /** A gate's scratch scope: a fresh directory under `shmRoot` named for
+    * the gate is handed to `body`, the body's frame is materialized, and
+    * the directory is swept whether the body returned or threw. One
+    * directory per call, so gates running at once never share one. */
+  private[graft] def withScratch(name: String)(
+      body: String => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(TmpDirs.shmRoot), s"graft-$name-").toString
+    try body(root).localCheckpoint(true)
+    finally TmpDirs.rmTree(root)
+  }
+
+  /** A catalog name unique to the scratch dir `root`, for the tables and
+    * views a gate registers beside it. */
+  private[graft] def scratchName(root: String): String =
+    new java.io.File(root).getName.replaceAll("\\W", "_")
+
+  /** Every parquet file under `root`, canonical path -> length. */
+  private[graft] def dataFiles(root: String): Map[String, Long] =
+    TmpDirs.leafFiles(root).filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getCanonicalPath -> f.length()).toMap
+
+  /** The store gates' rows: `orders` keyed by `k` with its price, in
+    * `buckets` buckets of `k`. */
+  private[graft] def storeBase(s: SparkSession, dir: String,
+      buckets: Long = 8L): DataFrame =
+    Tables.orders(s, dir)
+      .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
+        pmod(col("o_orderkey"), lit(buckets)).as("bucket"))
+
+  /** The store gates' three merge sources over [[storeBase]]: each
+    * updates and deletes in its own buckets, the first two also insert
+    * fresh keys. */
+  private[graft] def storeMerges(base: DataFrame): Seq[DataFrame] = Seq(
+    base.filter(col("bucket") === 2 && col("k") % 3 === 0)
+      .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
+      .withColumn("op", lit("U"))
+      .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
+        .withColumn("op", lit("D")))
+      .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
+        .withColumn("k", col("k") + 80000000L)
+        .withColumn("op", lit("I"))),
+    base.filter(col("bucket") === 2 && col("k") % 3 === 0)
+      .withColumn("op", lit("D"))
+      .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
+        .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
+        .withColumn("op", lit("U")))
+      .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
+        .withColumn("k", col("k") + 90000000L)
+        .withColumn("op", lit("I"))),
+    base.filter(col("bucket") === 1 && col("k") % 4 === 0)
+      .withColumn("price", (col("price") * 7).cast("decimal(18,2)"))
+      .withColumn("op", lit("U"))
+      .unionByName(base.filter(col("bucket") === 3 && col("k") % 7 === 2)
+        .withColumn("op", lit("D"))))
+
+  /** The skipping gates' store at `path`: `raw` (keyed by `k`) in 16
+    * range buckets of `k` as v1, then v2 churns the low-key zone
+    * `k <= max/8` (update %3=0, delete %3=1, insert %3=2 at k+80M into
+    * bucket 99). Manifests carry `statsCols`. Returns the max key. */
+  private[graft] def rangeStore(s: SparkSession, path: String,
+      raw: DataFrame, statsCols: Seq[String]): Long = {
+    val mx = raw.agg(max(col("k"))).head().getLong(0)
+    val low = col("k") <= mx / 8
+    val base = raw.withColumn("bucket",
+      least(floor(col("k") * 16.0 / (mx + 1)).cast("long"), lit(15L)))
+    Versioned.init(s, path, "bucket", base, statsCols = statsCols)
+    val b1 =
+      base.filter(low && col("k") % 3 === 0)
+        .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
+        .withColumn("op", lit("U"))
+      .unionByName(base.filter(low && col("k") % 3 === 1)
+        .withColumn("op", lit("D")))
+      .unionByName(base.filter(low && col("k") % 3 === 2)
+        .withColumn("k", col("k") + 80000000L)
+        .withColumn("bucket", lit(99L))
+        .withColumn("op", lit("I")))
+    Versioned.merge(s, path, "bucket", "k", b1, statsCols = statsCols)
+    mx
+  }
+
+  /** A store snapshot per bucket: row count (named `ct`), price sum and
+    * key sum. */
+  private[graft] def bucketSums(df: DataFrame, ct: String): DataFrame =
+    df.groupBy(col("bucket"))
+      .agg(count(lit(1)).as(ct),
+        sum(col("price")).cast("double").as("price_sum"),
+        sum(col("k")).as("key_sum"))
+
+  /** Each tagged frame's (row count, price sum, key sum) in ONE Spark
+    * job: the frames run as one tagged union, folded per partition and
+    * merged on the driver (a grouped aggregate adds a shuffle stage, a
+    * second job under AQE). Tags are seeded from the list, so a frame
+    * with no rows answers (0, 0.0, 0) like a per-frame aggregate. */
+  private[graft] def probeSums(frames: Seq[(String, DataFrame)])
+      : Map[String, (Long, Double, Long)] = {
+    type Acc = Map[String, (Long, java.math.BigDecimal, Long)]
+    def add(a: (Long, java.math.BigDecimal, Long),
+        b: (Long, java.math.BigDecimal, Long)) =
+      (a._1 + b._1, a._2.add(b._2), a._3 + b._3)
+    val zero = (0L, java.math.BigDecimal.ZERO, 0L)
+    val sums = frames
+      .map { case (tag, df) => df.select(lit(tag), col("price"), col("k")) }
+      .reduce(_ union _).rdd
+      .aggregate(Map.empty: Acc)(
+        (m, r) => m.updated(r.getString(0), add(m.getOrElse(r.getString(0),
+          zero), (1L, r.getDecimal(1), r.getLong(2)))),
+        (a, b) => b.foldLeft(a) { case (m, (t, v)) =>
+          m.updated(t, add(m.getOrElse(t, zero), v)) })
+    frames.map { case (tag, _) =>
+      val (n, ps, ks) = sums.getOrElse(tag, zero)
+      tag -> ((n, ps.doubleValue, ks))
+    }.toMap
+  }
+
+  /** The skipping gates' probe verdict over the store at `path`: per
+    * (version, probe) the pruned read's (n, price_sum, key_sum), with
+    * pruned_ok (planned files a strict subset of the snapshot's) and
+    * equal_ok (the pruned answer equals the full-scan filter's). Every
+    * summary comes from one [[probeSums]] job. A probe is
+    * (label, column, lo, hi); lo == hi reads a point. */
+  private[graft] def probeVerdicts(s: SparkSession, path: String,
+      versions: Seq[Long], probes: Seq[(String, String, Long, Long)])
+      : DataFrame = {
+    val runs = for (v <- versions) yield {
+      val full = Versioned.read(s, path, v)
+      val allFiles = full.inputFiles.length
+      probes.map { case (label, c, lo, hi) =>
+        val pruned =
+          if (lo == hi) Versioned.readPoint(s, path, c, lo, v)
+          else Versioned.readRange(s, path, c, lo, hi, v)
+        (v, label, pruned, full.filter(col(c) >= lo && col(c) <= hi),
+          pruned.inputFiles.length < allFiles)
+      }
+    }
+    val sums = probeSums(runs.flatten.flatMap { case (v, l, got, want, _) =>
+      Seq(s"$v/$l/got" -> got, s"$v/$l/want" -> want) })
+    import s.implicits._
+    runs.flatten.map { case (v, l, _, _, prunedOk) =>
+      val got = sums(s"$v/$l/got")
+      (v, l, got._1, got._2, got._3, if (prunedOk) 1L else 0L,
+        if (got == sums(s"$v/$l/want")) 1L else 0L)
+    }.toDF("version", "probe", "n", "price_sum", "key_sum",
+      "pruned_ok", "equal_ok")
+  }
+
+  /** Oracle replay of [[storeBase]]: the `base` CTE opening a WITH. */
+  private[graft] def storeBaseSql(buckets: Int): String =
+    s"""WITH base AS (SELECT o_orderkey AS k,
+       |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
+       |    o_orderkey % $buckets AS bucket FROM orders)""".stripMargin
+
+  /** Oracle replay of the first [[storeMerges]] source over `base`: the
+    * `v2` CTE. */
+  private[graft] val storeV2Sql: String =
+    """v2 AS (
+      |  SELECT k, price, bucket FROM base
+      |    WHERE NOT (bucket = 5 AND k % 3 = 1)
+      |      AND NOT (bucket = 2 AND k % 3 = 0)
+      |  UNION ALL
+      |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)), bucket FROM base
+      |    WHERE bucket = 2 AND k % 3 = 0
+      |  UNION ALL
+      |  SELECT k + 80000000, price, bucket FROM base
+      |    WHERE bucket = 2 AND k % 3 = 2)""".stripMargin
+
+  /** Oracle replay of the second [[storeMerges]] source over `v2`, as the
+    * CTE `name`. */
+  private[graft] def storeV3Sql(name: String): String =
+    s"""$name AS (
+       |  SELECT k, price, bucket FROM v2
+       |    WHERE NOT (bucket = 2 AND k % 3 = 0)
+       |      AND NOT (bucket = 7 AND k % 5 = 1)
+       |  UNION ALL
+       |  SELECT k, CAST(price * 3 AS DECIMAL(18,2)), bucket FROM base
+       |    WHERE bucket = 7 AND k % 5 = 1
+       |  UNION ALL
+       |  SELECT k + 90000000, price, bucket FROM base
+       |    WHERE bucket = 7 AND k % 5 = 2)""".stripMargin
 
   /** The dedup_semantic* gates' shared verdict block: materializes the
     * dedup result once (three aggregations read it) and reduces it to the
@@ -43,6 +226,16 @@ private[graft] object GateSupport {
         col("minima_kept_ok"), col("some_dropped"))
   }
 
+  /** Harness hook (CurveSf1): drop the memo so a re-timed dedup gate pays
+    * its full pair scan again instead of reading the first trial's rows. */
+  private[graft] def clearNgramPairsMemo(): Unit = ngramPairsMemo.clear()
+
+  private[graft] val MemoMaxPairs = 1 << 22
+  private[graft] val ngramPairsMemo =
+    new java.util.concurrent.ConcurrentHashMap[
+      String, (org.apache.spark.sql.types.StructType,
+               Array[org.apache.spark.sql.Row])]()
+
   /** Per-(application, input-dir) memo of the n-gram near-dup pair set.
     * `dedup_ngram_jaccard`, `dedup_clusters` and `pipe_dedup_survivors`
     * consume the SAME pair set; a real pipeline computes it once and
@@ -59,16 +252,6 @@ private[graft] object GateSupport {
     * bounded scan and the caller gets the lazy DataFrame back — the
     * at-scale posture (persist to storage, not driver memory). Values are
     * exact Rows, so oracle hashes are unchanged. */
-  /** Harness hook (CurveSf1): drop the memo so a re-timed dedup gate pays
-    * its full pair scan again instead of reading the first trial's rows. */
-  private[graft] def clearNgramPairsMemo(): Unit = ngramPairsMemo.clear()
-
-  private[graft] val MemoMaxPairs = 1 << 22
-  private[graft] val ngramPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (org.apache.spark.sql.types.StructType,
-               Array[org.apache.spark.sql.Row])]()
-
   private[graft] def sharedNgramPairs(s: SparkSession, dir: String): DataFrame = {
     val key = s.sparkContext.applicationId + "|" + dir
     val cached = Option(ngramPairsMemo.get(key))
@@ -87,17 +270,23 @@ private[graft] object GateSupport {
     }
   }
 
+  /** The oracles' `toks` CTE (each document's whitespace tokens, the
+    * tokensWs replay) and `sh` CTE (its distinct `n`-token shingles, the
+    * whole token list when shorter); `hint` is "" or " MATERIALIZED". */
+  private[graft] def shingleSql(n: Int, hint: String = ""): String =
+    s"""toks AS$hint (SELECT doc_id,
+       |    list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS t
+       |  FROM documents),
+       |sh AS$hint (SELECT doc_id,
+       |    list_distinct(CASE WHEN len(t) < $n THEN [array_to_string(t, ' ')]
+       |      ELSE [array_to_string(t[i:i+${n - 1}], ' ') for i in range(1, len(t) - ${n - 2})] END) AS s
+       |  FROM toks)""".stripMargin
+
   /** Exhaustive pairwise-Jaccard truth, shared by the inverted-index gate
     * and the prefix-filtered gate: both candidate-generation strategies
     * must land on the identical J >= 0.5 pair set. */
   private[graft] val ngramJaccardOracleSql =
-    """WITH toks AS (SELECT doc_id,
-      |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS t
-      |  FROM documents),
-      |sh AS (SELECT doc_id,
-      |    list_distinct(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-      |      ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
-      |  FROM toks),
+    s"""WITH ${shingleSql(3)},
       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
       |    len(list_intersect(a.s, b.s)) AS i, len(a.s) AS la, len(b.s) AS lb
       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)

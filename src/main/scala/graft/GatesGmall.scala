@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object GatesGmall {
   import GateSupport._
-  import TmpDirs._
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -230,35 +229,25 @@ private[graft] object GatesGmall {
         StructField("c_name", StringType),
         StructField("c_acctbal", DoubleType),
         StructField("version", LongType)))
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val stagePath = s"$root/graft-cdc-stage-$uniq"
-      val routed = graft.streaming.Sources.cdcAfter(
-        graft.operators.LogPipeline.dropDeletes(
-          graft.streaming.Sources.cdcDecode(
-            graft.streaming.Sources.stagedChunkStream(
-              s, Seq(inserts, updates, deletes), Some(stagePath))),
-          typeCol = "type"),
-        "customer", payloadSchema)
-      val dimPath = s"$root/graft-cdc-dim-$uniq"
-      val ckptPath = s"$root/graft-cdc-ckpt-$uniq"
-      // sweep the throwaway dirs even when the query or the dim read
-      // throws — leaked tmpfs copies accumulate across failed trials
-      try {
+      withScratch("cdc_route_upsert") { root =>
+        val (stagePath, dimPath, ckptPath) =
+          (s"$root/stage", s"$root/dim", s"$root/ckpt")
+        val routed = graft.streaming.Sources.cdcAfter(
+          graft.operators.LogPipeline.dropDeletes(
+            graft.streaming.Sources.cdcDecode(
+              graft.streaming.Sources.stagedChunkStream(
+                s, Seq(inserts, updates, deletes), Some(stagePath))),
+            typeCol = "type"),
+          "customer", payloadSchema)
         val q = graft.streaming.Sinks.dimUpsert(routed, dimPath, "c_custkey",
           checkpoint = ckptPath,
           versionCol = Some("version"),
           trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
         q.awaitTermination()
-        // materialize before sweeping the throwaway store + checkpoint —
-        // a lazy result would re-read files this deletes
         s.read.parquet(dimPath)
           .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
             col("version"))
           .orderBy(col("c_custkey"))
-          .localCheckpoint(true)
-      } finally {
-        rmTree(dimPath); rmTree(ckptPath); rmTree(stagePath)
       }
     }),
 
@@ -349,9 +338,7 @@ private[graft] object GatesGmall {
     // key sum THROUGH the store), its column set, and that the store was
     // auto-created (absent before batch 2) — a failed auto-create throws,
     // a mis-rout leaves dim_ct/kafka_ct off by a cohort.
-    "k5_auto_ddl" -> ((s, dir) => {
-      val root = shmRoot
-      val dimRoot = s"$root/graft-k5-dim-${System.nanoTime()}"
+    "k5_auto_ddl" -> ((s, dir) => withScratch("k5_auto_ddl") { dimRoot =>
       def cfg(sinkType: String, sinkTable: String): DataFrame =
         s.createDataFrame(Seq(
           ("customer", "insert", sinkType, sinkTable, "c_custkey",
@@ -362,35 +349,32 @@ private[graft] object GatesGmall {
         df.select(lit("customer").as("tableName"), lit("insert").as("type"),
           to_json(struct(col("c_custkey"), col("c_name"))).as("after"))
       val cust = Tables.customer(s, dir)
-      try {
-        // batch 1: kafka-typed route — rows shape for the dynamic-topic
-        // producer; materialize now so the batch runs BEFORE the flip
-        val b1 = graft.gmall.DbRouter.writeBatch(
-          graft.gmall.DbRouter.route(
-            env(cust.filter(pmod(col("c_custkey"), lit(2L)) === 0)),
-            cfg("kafka", "ods_customer")),
-          dimRoot).localCheckpoint(true)
-        val absentBefore = !new java.io.File(s"$dimRoot/dim_customer").exists()
-        // batch 2: the config flipped sinkType — first hbase write
-        // auto-creates the table from the payload schema
-        graft.gmall.DbRouter.writeBatch(
-          graft.gmall.DbRouter.route(
-            env(cust.filter(pmod(col("c_custkey"), lit(2L)) === 1)),
-            cfg("hbase", "dim_customer")),
-          dimRoot).localCheckpoint(true)
-        val dim = s.read.parquet(s"$dimRoot/dim_customer")
-        // pruneAfter re-emits payload values as JSON strings (Map-typed
-        // round trip), so the auto-created column is string — cast for
-        // the numeric verdict
-        val dimAgg = dim.agg(count(lit(1)).as("dim_ct"),
-            sum(col("c_custkey").cast("long")).as("dim_sum_key"))
-          .withColumn("dim_cols_csv", lit(dim.columns.sorted.mkString(",")))
-        b1.agg(count(lit(1)).as("kafka_ct")).crossJoin(dimAgg)
-          .select(col("kafka_ct"), col("dim_ct"), col("dim_sum_key"),
-            col("dim_cols_csv"),
-            lit(if (absentBefore) 1L else 0L).as("auto_created"))
-          .localCheckpoint(true) // materialize before the finally sweep
-      } finally rmTree(dimRoot)
+      // batch 1: kafka-typed route — rows shape for the dynamic-topic
+      // producer; materialize now so the batch runs BEFORE the flip
+      val b1 = graft.gmall.DbRouter.writeBatch(
+        graft.gmall.DbRouter.route(
+          env(cust.filter(pmod(col("c_custkey"), lit(2L)) === 0)),
+          cfg("kafka", "ods_customer")),
+        dimRoot).localCheckpoint(true)
+      val absentBefore = !new java.io.File(s"$dimRoot/dim_customer").exists()
+      // batch 2: the config flipped sinkType — first hbase write
+      // auto-creates the table from the payload schema
+      graft.gmall.DbRouter.writeBatch(
+        graft.gmall.DbRouter.route(
+          env(cust.filter(pmod(col("c_custkey"), lit(2L)) === 1)),
+          cfg("hbase", "dim_customer")),
+        dimRoot).localCheckpoint(true)
+      val dim = s.read.parquet(s"$dimRoot/dim_customer")
+      // pruneAfter re-emits payload values as JSON strings (Map-typed
+      // round trip), so the auto-created column is string — cast for
+      // the numeric verdict
+      val dimAgg = dim.agg(count(lit(1)).as("dim_ct"),
+          sum(col("c_custkey").cast("long")).as("dim_sum_key"))
+        .withColumn("dim_cols_csv", lit(dim.columns.sorted.mkString(",")))
+      b1.agg(count(lit(1)).as("kafka_ct")).crossJoin(dimAgg)
+        .select(col("kafka_ct"), col("dim_ct"), col("dim_sum_key"),
+          col("dim_cols_csv"),
+          flag(absentBefore).as("auto_created"))
     }),
 
 

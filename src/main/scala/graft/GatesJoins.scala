@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object GatesJoins {
   import GateSupport._
-  import TmpDirs._
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -128,11 +127,9 @@ private[graft] object GatesJoins {
     // per query. Result materialized (localCheckpoint) so the throwaway
     // tables + files can be swept in finally. Oracle: the plain join —
     // layout must not change the answer.
-    "j11_bucketed_join" -> ((s, dir) => {
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val (ltab, rtab) = (s"graft_bkt_li_$uniq", s"graft_bkt_ord_$uniq")
-      val (lpath, rpath) = (s"$root/$ltab", s"$root/$rtab")
+    "j11_bucketed_join" -> ((s, dir) => withScratch("j11_bucketed_join") { root =>
+      val (ltab, rtab) = (s"${scratchName(root)}_li", s"${scratchName(root)}_ord")
+      val (lpath, rpath) = (s"$root/li", s"$root/ord")
       try {
         graft.operators.Bucketing.writeBucketed(
           Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice")),
@@ -147,11 +144,10 @@ private[graft] object GatesJoins {
             sum(col("l_extendedprice").cast("decimal(12,2)"))
               .cast("double").as("revenue"))
           .orderBy(col("o_orderpriority"))
-          .localCheckpoint(true)
+          .localCheckpoint(true) // read the tables before they drop
       } finally {
         graft.operators.Bucketing.drop(s, ltab)
         graft.operators.Bucketing.drop(s, rtab)
-        rmTree(lpath); rmTree(rpath)
       }
     }),
 
@@ -267,27 +263,22 @@ private[graft] object GatesJoins {
     // whose filter keeps 5 days. FileMaintenanceSpec pins the
     // dynamicpruning subquery in the fact scan's partition filters;
     // the oracle pins the answer.
-    "j12_dpp" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-dpp-${System.nanoTime()}"
-      try {
-        Tables.events(s, dir)
-          .withColumn("dt", to_date(col("ts")))
-          .write.mode("overwrite").partitionBy("dt").parquet(path)
-        val fact = s.read.parquet(path)
-        val dim = s.range(0, 30)
-          .select(date_add(lit("2024-01-01").cast("date"),
-            col("id").cast("int")).as("dt"),
-            (col("id") + 1).as("day_no"))
-          .filter(col("day_no") <= 5)
-        fact.join(dim, "dt")
-          .groupBy(date_format(col("dt"), "yyyy-MM-dd").as("dt"),
-            col("event_type"))
-          .agg(count(lit(1)).as("ct"),
-            countDistinct(col("user_id")).as("users"))
-          .orderBy(col("dt"), col("event_type"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "j12_dpp" -> ((s, dir) => withScratch("j12_dpp") { path =>
+      Tables.events(s, dir)
+        .withColumn("dt", to_date(col("ts")))
+        .write.mode("overwrite").partitionBy("dt").parquet(path)
+      val fact = s.read.parquet(path)
+      val dim = s.range(0, 30)
+        .select(date_add(lit("2024-01-01").cast("date"),
+          col("id").cast("int")).as("dt"),
+          (col("id") + 1).as("day_no"))
+        .filter(col("day_no") <= 5)
+      fact.join(dim, "dt")
+        .groupBy(date_format(col("dt"), "yyyy-MM-dd").as("dt"),
+          col("event_type"))
+        .agg(count(lit(1)).as("ct"),
+          countDistinct(col("user_id")).as("users"))
+        .orderBy(col("dt"), col("event_type"))
     }),
 
 
@@ -427,11 +418,9 @@ private[graft] object GatesJoins {
     // ZERO Exchange of any kind before returning rows. Oracle: identical
     // SQL to j19_asof_exec — the layout must not change the answer, so
     // this gate also hash-pins j20 == j19 transitively.
-    "j20_asof_bucketed" -> ((s, dir) => {
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val (ltab, rtab) = (s"graft_asof_l_$uniq", s"graft_asof_r_$uniq")
-      val (lpath, rpath) = (s"$root/$ltab", s"$root/$rtab")
+    "j20_asof_bucketed" -> ((s, dir) => withScratch("j20_asof_bucketed") { root =>
+      val (ltab, rtab) = (s"${scratchName(root)}_l", s"${scratchName(root)}_r")
+      val (lpath, rpath) = (s"$root/l", s"$root/r")
       try {
         val o = Tables.orders(s, dir)
         graft.operators.Bucketing.writeBucketed(
@@ -457,7 +446,6 @@ private[graft] object GatesJoins {
       } finally {
         graft.operators.Bucketing.drop(s, ltab)
         graft.operators.Bucketing.drop(s, rtab)
-        rmTree(lpath); rmTree(rpath)
       }
     })
   )

@@ -5,7 +5,7 @@ import graft.functions.TextFns._
 import graft.functions.VectorFns
 import graft.multimodal.Multimodal
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Lakehouse table maintenance and ingest-edge sources: compaction,
@@ -16,7 +16,67 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object GatesMaintenance {
   import GateSupport._
-  import TmpDirs._
+
+  /** The layout gates' rows: `orders` keyed by `k` with its price and
+    * two 10-bit dims `x` and `y`. */
+  private def xyStore(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .select(col("o_orderkey").as("k"),
+        pmod(col("o_orderkey"), lit(1024L)).as("x"),
+        pmod(expr("o_orderkey div 7"), lit(1024L)).as("y"),
+        dec("o_totalprice").as("price"))
+
+  /** The z-order and Hilbert gates' probes: a point and a range on each
+    * dim, as (label, dim, lo, hi). */
+  private val xyProbes = Seq(
+    ("x_point", "x", 777L, 777L), ("x_range", "x", 128L, 159L),
+    ("y_point", "y", 333L, 333L), ("y_range", "y", 512L, 543L))
+
+  /** The recluster gate's range probes, as (label, dim, lo, hi). */
+  private val reclusterProbes = Seq(
+    ("x_lo", "x", 128L, 159L), ("x_hi", "x", 300L, 363L),
+    ("y_lo", "y", 64L, 127L), ("y_hi", "y", 512L, 543L))
+
+  /** Oracle of a layout gate: every probe replayed over the plain table
+    * (`y` spelled as `yExpr`), with the gate's pinned verdict columns. */
+  private def xyProbeSql(yExpr: String,
+      probes: Seq[(String, String, Long, Long)], pins: String): String = {
+    val rows = probes.zipWithIndex.map {
+      case ((l, c, lo, hi), 0) =>
+        s"  SELECT '$l' AS probe, '$c' AS pcol, $lo AS lo, $hi AS hi"
+      case ((l, c, lo, hi), _) => s"  UNION ALL SELECT '$l', '$c', $lo, $hi"
+    }.mkString("\n")
+    s"""WITH base AS (SELECT o_orderkey AS k,
+       |    o_orderkey % 1024 AS x, $yExpr AS y,
+       |    CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders),
+       |probes AS (
+       |$rows)
+       |SELECT p.probe, CAST(COUNT(s.k) AS BIGINT) AS n,
+       |  CAST(COALESCE(SUM(s.price), 0) AS DOUBLE) AS price_sum,
+       |  CAST(COALESCE(SUM(s.k), 0) AS BIGINT) AS key_sum,
+       |$pins
+       |FROM probes p
+       |LEFT JOIN base s ON
+       |  ((p.pcol = 'x' AND s.x >= p.lo AND s.x <= p.hi)
+       |    OR (p.pcol = 'y' AND s.y >= p.lo AND s.y <= p.hi))
+       |GROUP BY p.probe ORDER BY p.probe""".stripMargin
+  }
+
+  /** The k22/k35 oracle's replay of [[GateSupport.rangeStore]]: `base`,
+    * the max key `mx` and the v2 snapshot. */
+  private val rangeStoreSql: String =
+    """WITH base AS (SELECT o_orderkey AS k,
+      |    CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders),
+      |mxv AS (SELECT MAX(k) AS mx FROM base),
+      |v2 AS (
+      |  SELECT k, price FROM base, mxv
+      |    WHERE NOT (k <= mx//8 AND k % 3 IN (0, 1))
+      |  UNION ALL
+      |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)) FROM base, mxv
+      |    WHERE k <= mx//8 AND k % 3 = 0
+      |  UNION ALL
+      |  SELECT k + 80000000, price FROM base, mxv
+      |    WHERE k <= mx//8 AND k % 3 = 2)""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -49,26 +109,22 @@ private[graft] object GatesMaintenance {
     // days (row-count mismatch), a no-op backfill leaves 01-05 poisoned
     // (hash mismatch). Counting columns only (ct/users) — no double
     // sums ride the store.
-    "k8_partition_backfill" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-backfill-${System.nanoTime()}"
+    "k8_partition_backfill" -> ((s, dir) =>
+        withScratch("k8_partition_backfill") { path =>
       val (dayX, dayY) = ("2024-01-05", "2024-01-09")
-      try {
-        val truth = Tables.events(s, dir)
-          .groupBy(to_date(col("ts")).as("dt"), col("event_type"))
-          .agg(count(lit(1)).as("ct"),
-            countDistinct(col("user_id")).as("users"))
-        val poisoned = truth.withColumn("users",
-          when(col("dt").isin(dayX, dayY), lit(0L)).otherwise(col("users")))
-        poisoned.write.mode("overwrite").partitionBy("dt").parquet(path)
-        graft.streaming.Sinks.overwritePartitions(
-          truth.filter(col("dt") === dayX), path, "dt")
-        s.read.parquet(path)
-          .select(date_format(col("dt"), "yyyy-MM-dd").as("dt"),
-            col("event_type"), col("ct"), col("users"))
-          .orderBy(col("dt"), col("event_type"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+      val truth = Tables.events(s, dir)
+        .groupBy(to_date(col("ts")).as("dt"), col("event_type"))
+        .agg(count(lit(1)).as("ct"),
+          countDistinct(col("user_id")).as("users"))
+      val poisoned = truth.withColumn("users",
+        when(col("dt").isin(dayX, dayY), lit(0L)).otherwise(col("users")))
+      poisoned.write.mode("overwrite").partitionBy("dt").parquet(path)
+      graft.streaming.Sinks.overwritePartitions(
+        truth.filter(col("dt") === dayX), path, "dt")
+      s.read.parquet(path)
+        .select(date_format(col("dt"), "yyyy-MM-dd").as("dt"),
+          col("event_type"), col("ct"), col("users"))
+        .orderBy(col("dt"), col("event_type"))
     }),
 
 
@@ -81,35 +137,26 @@ private[graft] object GatesMaintenance {
     // full (name → size) file map outside bucket 3 before/after and the
     // oracle pins it to 1 — a full-table rewrite (same rows, new files)
     // FAILS this gate even though the row answer matches.
-    "k10_targeted_delete" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-erase-${System.nanoTime()}"
-      def files(): Map[String, Long] =
-        leafFiles(path)
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(f => f.getPath -> f.length()).toMap
-      try {
-        val ev = Tables.events(s, dir)
-          .withColumn("bucket", pmod(col("user_id"), lit(16L)))
-        ev.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        val before = files()
-        val targets = ev
-          .filter(col("bucket") === 3 && col("user_id") % 5 === 0)
-          .select(col("user_id"), col("bucket")).distinct()
-        graft.operators.Erasure.deleteKeys(s, path, "bucket", "user_id",
-          targets)
-        val after = files()
-        def outside(m: Map[String, Long]) =
-          m.filter { case (p, _) => !p.contains("bucket=3") }
-        val untouchedOk = outside(before) == outside(after)
-        s.read.parquet(path)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("ct"),
-            countDistinct(col("user_id")).as("users"))
-          .withColumn("untouched_ok", lit(if (untouchedOk) 1L else 0L))
-          .orderBy(col("event_type"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "k10_targeted_delete" -> ((s, dir) =>
+        withScratch("k10_targeted_delete") { path =>
+      val ev = Tables.events(s, dir)
+        .withColumn("bucket", pmod(col("user_id"), lit(16L)))
+      ev.write.mode("overwrite").partitionBy("bucket").parquet(path)
+      val before = dataFiles(path)
+      val targets = ev
+        .filter(col("bucket") === 3 && col("user_id") % 5 === 0)
+        .select(col("user_id"), col("bucket")).distinct()
+      graft.operators.Erasure.deleteKeys(s, path, "bucket", "user_id",
+        targets)
+      val after = dataFiles(path)
+      def outside(m: Map[String, Long]) =
+        m.filter { case (p, _) => !p.contains("bucket=3") }
+      s.read.parquet(path)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("ct"),
+          countDistinct(col("user_id")).as("users"))
+        .withColumn("untouched_ok", flag(outside(before) == outside(after)))
+        .orderBy(col("event_type"))
     }),
 
 
@@ -122,29 +169,23 @@ private[graft] object GatesMaintenance {
     // Rows must survive byte-exactly — the oracle runs on the ORIGINAL
     // parquet, so a dropped/duplicated row in the rewrite is a hash
     // mismatch; CompactionSpec pins the file-count mechanics.
-    "k9_compaction" -> ((s, dir) => {
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val fragPath = s"$root/graft-frag-$uniq"
-      val compactPath = s"$root/graft-compact-$uniq"
-      try {
-        Tables.orders(s, dir).repartition(48)
-          .write.mode("overwrite").parquet(fragPath)
-        val (bytes, _) =
-          graft.operators.Compaction.dataFileStats(s, fragPath)
-        // target ≈ an eighth of the input ⇒ ~8 even-sized outputs; the
-        // listing above is reused (knownBytes), not repeated
-        graft.operators.Compaction.compact(s, fragPath, compactPath,
-          targetBytes = math.max(1L, bytes / 8), knownBytes = Some(bytes))
-        s.read.parquet(compactPath)
-          .groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("ct"),
-            sum(dec("o_totalprice")).cast("double").as("price_sum"),
-            min(col("o_orderkey")).as("min_key"),
-            max(col("o_orderkey")).as("max_key"))
-          .orderBy(col("o_orderpriority"))
-          .localCheckpoint(true)
-      } finally { rmTree(fragPath); rmTree(compactPath) }
+    "k9_compaction" -> ((s, dir) => withScratch("k9_compaction") { root =>
+      val (fragPath, compactPath) = (s"$root/frag", s"$root/compact")
+      Tables.orders(s, dir).repartition(48)
+        .write.mode("overwrite").parquet(fragPath)
+      val (bytes, _) =
+        graft.operators.Compaction.dataFileStats(s, fragPath)
+      // target ≈ an eighth of the input ⇒ ~8 even-sized outputs; the
+      // listing above is reused (knownBytes), not repeated
+      graft.operators.Compaction.compact(s, fragPath, compactPath,
+        targetBytes = math.max(1L, bytes / 8), knownBytes = Some(bytes))
+      s.read.parquet(compactPath)
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("ct"),
+          sum(dec("o_totalprice")).cast("double").as("price_sum"),
+          min(col("o_orderkey")).as("min_key"),
+          max(col("o_orderkey")).as("max_key"))
+        .orderBy(col("o_orderpriority"))
     }),
 
 
@@ -160,48 +201,39 @@ private[graft] object GatesMaintenance {
     // the price, deletes take every third key of bucket 5, inserts are
     // fresh keys offset by 80M (≡ 0 mod 8, so the partition derivation
     // is exercised, not bypassed).
-    "k11_merge_upsert" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-merge-${System.nanoTime()}"
-      def files(): Map[String, Long] =
-        leafFiles(path)
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(f => f.getPath -> f.length()).toMap
-      try {
-        val ord = Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_custkey"),
-            dec("o_totalprice").as("price"), col("o_orderpriority"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        ord.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        val before = files()
-        val base = ord.filter(col("bucket").isin(2L, 5L))
-        val updates = base
-          .filter(col("bucket") === 2 && col("o_orderkey") % 3 === 0)
-          .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-          .withColumn("op", lit("U"))
-        val deletes = base
-          .filter(col("bucket") === 5 && col("o_orderkey") % 3 === 1)
-          .withColumn("op", lit("D"))
-        val inserts = base
-          .filter(col("bucket") === 2 && col("o_orderkey") % 3 === 2)
-          .withColumn("o_orderkey", col("o_orderkey") + 80000000L)
-          .withColumn("op", lit("I"))
-        Merge.into(s, path, "bucket", "o_orderkey",
-          updates.unionByName(deletes).unionByName(inserts))
-        val after = files()
-        def outside(m: Map[String, Long]) = m.filter { case (p, _) =>
-          !p.contains("bucket=2") && !p.contains("bucket=5") }
-        val untouchedOk = outside(before) == outside(after)
-        s.read.parquet(path)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("ct"),
-            sum(col("price")).cast("double").as("price_sum"),
-            sum(col("o_orderkey")).as("key_sum"),
-            count(when(col("o_orderkey") > 80000000L, 1)).as("inserted_ct"))
-          .withColumn("untouched_ok", lit(if (untouchedOk) 1L else 0L))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "k11_merge_upsert" -> ((s, dir) =>
+        withScratch("k11_merge_upsert") { path =>
+      val ord = Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey"),
+          dec("o_totalprice").as("price"), col("o_orderpriority"),
+          pmod(col("o_orderkey"), lit(8L)).as("bucket"))
+      ord.write.mode("overwrite").partitionBy("bucket").parquet(path)
+      val before = dataFiles(path)
+      val base = ord.filter(col("bucket").isin(2L, 5L))
+      val updates = base
+        .filter(col("bucket") === 2 && col("o_orderkey") % 3 === 0)
+        .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
+        .withColumn("op", lit("U"))
+      val deletes = base
+        .filter(col("bucket") === 5 && col("o_orderkey") % 3 === 1)
+        .withColumn("op", lit("D"))
+      val inserts = base
+        .filter(col("bucket") === 2 && col("o_orderkey") % 3 === 2)
+        .withColumn("o_orderkey", col("o_orderkey") + 80000000L)
+        .withColumn("op", lit("I"))
+      Merge.into(s, path, "bucket", "o_orderkey",
+        updates.unionByName(deletes).unionByName(inserts))
+      val after = dataFiles(path)
+      def outside(m: Map[String, Long]) = m.filter { case (p, _) =>
+        !p.contains("bucket=2") && !p.contains("bucket=5") }
+      s.read.parquet(path)
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).as("ct"),
+          sum(col("price")).cast("double").as("price_sum"),
+          sum(col("o_orderkey")).as("key_sum"),
+          count(when(col("o_orderkey") > 80000000L, 1)).as("inserted_ct"))
+        .withColumn("untouched_ok", flag(outside(before) == outside(after)))
+        .orderBy(col("bucket"))
     }),
 
 
@@ -216,31 +248,27 @@ private[graft] object GatesMaintenance {
     // orders from scratch — equality proves incremental == full
     // recompute; MergeIncrementalSpec pins that the refresh plan's
     // inputFiles never touch the history beyond the one state build.
-    "k12_incremental_agg" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-incragg-${System.nanoTime()}"
-      try {
-        val ord = Tables.orders(s, dir).withColumn("o_date",
-          date_format(col("o_orderdate"), "yyyy-MM-dd"))
-        val cut = "1997-01-01"
-        Incremental.state(ord.filter(col("o_date") < cut),
+    "k12_incremental_agg" -> ((s, dir) =>
+        withScratch("k12_incremental_agg") { path =>
+      val ord = Tables.orders(s, dir).withColumn("o_date",
+        date_format(col("o_orderdate"), "yyyy-MM-dd"))
+      val cut = "1997-01-01"
+      Incremental.state(ord.filter(col("o_date") < cut),
+        Seq("o_orderpriority"), sumCols = Seq("o_totalprice"),
+        minMaxCols = Seq("o_date"))
+        .write.mode("overwrite").parquet(path)
+      val refreshed = Incremental.merge(Seq(
+        s.read.parquet(path),
+        Incremental.state(ord.filter(col("o_date") >= cut),
           Seq("o_orderpriority"), sumCols = Seq("o_totalprice"),
-          minMaxCols = Seq("o_date"))
-          .write.mode("overwrite").parquet(path)
-        val refreshed = Incremental.merge(Seq(
-          s.read.parquet(path),
-          Incremental.state(ord.filter(col("o_date") >= cut),
-            Seq("o_orderpriority"), sumCols = Seq("o_totalprice"),
-            minMaxCols = Seq("o_date"))),
-          Seq("o_orderpriority"))
-        Incremental.finalizeState(refreshed)
-          .select(col("o_orderpriority"), col("cnt"),
-            col("sum_o_totalprice").cast("double").as("price_sum"),
-            col("avg_o_totalprice").as("price_avg"),
-            col("min_o_date").as("dt_min"), col("max_o_date").as("dt_max"))
-          .orderBy(col("o_orderpriority"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+          minMaxCols = Seq("o_date"))),
+        Seq("o_orderpriority"))
+      Incremental.finalizeState(refreshed)
+        .select(col("o_orderpriority"), col("cnt"),
+          col("sum_o_totalprice").cast("double").as("price_sum"),
+          col("avg_o_totalprice").as("price_avg"),
+          col("min_o_date").as("dt_min"), col("max_o_date").as("dt_max"))
+        .orderBy(col("o_orderpriority"))
     }),
 
 
@@ -252,27 +280,22 @@ private[graft] object GatesMaintenance {
     // (driver-side staging is fixture setup, not the operator); the
     // oracle recomputes byte length and md5 from the raw table — length
     // must be BYTES (strlen), not chars, or the zh docs fail the hash.
-    "source_binary_files" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-bin-${System.nanoTime()}"
-      try {
-        new java.io.File(path).mkdirs()
-        Tables.documents(s, dir)
-          .filter(col("doc_id") % 25 === 0)
-          .select(col("doc_id"), col("text")).collect()
-          .foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$path/doc_${r.getLong(0)}.bin"),
-              r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-        s.read.format("binaryFile").load(path)
-          .select(
-            regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1)
-              .cast("long").as("doc_id"),
-            col("length"), md5(col("content")).as("content_md5"))
-          .orderBy(col("doc_id"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "source_binary_files" -> ((s, dir) =>
+        withScratch("source_binary_files") { path =>
+      Tables.documents(s, dir)
+        .filter(col("doc_id") % 25 === 0)
+        .select(col("doc_id"), col("text")).collect()
+        .foreach { r =>
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(s"$path/doc_${r.getLong(0)}.bin"),
+            r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        }
+      s.read.format("binaryFile").load(path)
+        .select(
+          regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1)
+            .cast("long").as("doc_id"),
+          col("length"), md5(col("content")).as("content_md5"))
+        .orderBy(col("doc_id"))
     }),
 
 
@@ -285,33 +308,23 @@ private[graft] object GatesMaintenance {
     // byte-identical (no rewrite happened) and exactly 9 day-values
     // dropped; the oracle recomputes the surviving aggregate from the
     // raw table with the same cutoff.
-    "k13_retention_expire" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-ttl-${System.nanoTime()}"
-      def files(): Map[String, Long] =
-        leafFiles(path)
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(f => f.getPath -> f.length()).toMap
-      try {
-        Tables.events(s, dir)
-          .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
-          .write.mode("overwrite").partitionBy("dt").parquet(path)
-        val before = files()
-        val dropped = Erasure.expirePartitions(s, path, "dt", "2024-01-10")
-        val after = files()
-        val keptUntouched = after == before.filter { case (p, _) =>
-          !dropped.exists(d => p.contains(s"dt=$d")) }
-        s.read.parquet(path)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("ct"),
-            min(col("dt").cast("string")).as("dt_min"),
-            countDistinct(col("dt")).as("days"))
-          .withColumn("kept_untouched",
-            lit(if (keptUntouched) 1L else 0L))
-          .withColumn("dropped_days", lit(dropped.size.toLong))
-          .orderBy(col("event_type"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "k13_retention_expire" -> ((s, dir) =>
+        withScratch("k13_retention_expire") { path =>
+      Tables.events(s, dir)
+        .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
+        .write.mode("overwrite").partitionBy("dt").parquet(path)
+      val before = dataFiles(path)
+      val dropped = Erasure.expirePartitions(s, path, "dt", "2024-01-10")
+      val keptUntouched = dataFiles(path) == before.filter { case (p, _) =>
+        !dropped.exists(d => p.contains(s"dt=$d")) }
+      s.read.parquet(path)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("ct"),
+          min(col("dt").cast("string")).as("dt_min"),
+          countDistinct(col("dt")).as("days"))
+        .withColumn("kept_untouched", flag(keptUntouched))
+        .withColumn("dropped_days", lit(dropped.size.toLong))
+        .orderBy(col("event_type"))
     }),
 
 
@@ -322,35 +335,33 @@ private[graft] object GatesMaintenance {
     // range-correlated buckets so envelopes are tight; pruned_ok pins
     // that planning read a strict subset of files, equal_ok pins that the
     // pruned read's answer equals the full-scan predicate's.
-    "k14_manifest_prune" -> ((s, dir) => {
+    "k14_manifest_prune" -> ((s, dir) =>
+        withScratch("k14_manifest_prune") { path =>
       import graft.operators.Manifest
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"))
       val mxv = ev.agg(max(col("user_id"))).head().getLong(0)
-      val path = s"$shmRoot/graft-manifest-${System.nanoTime()}"
-      try {
-        ev.withColumn("rb", least(
-            floor(col("user_id") * 16.0 / (mxv + 1)).cast("long"), lit(15L)))
-          .repartition(16, col("rb")).drop("rb")
-          .write.mode("overwrite").parquet(path)
-        val manifest = Manifest.build(s, path, "user_id")
-          .localCheckpoint(true) // plan + count read one stable snapshot
-        val total = manifest.count()
-        val hi = mxv / 4
-        val files = Manifest.filesForRange(manifest, 0L, hi)
-        val pruned = Manifest.prunedRead(s, path, files, "user_id", 0L, hi)
-          .agg(count(lit(1)).as("n"),
-            sum(floor(col("value") * 1e6).cast("long")).as("v_fp")).head()
-        val full = ev.filter(col("user_id") >= 0 && col("user_id") <= hi)
-          .agg(count(lit(1)),
-            sum(floor(col("value") * 1e6).cast("long"))).head()
-        import s.implicits._
-        Seq((pruned.getLong(0), pruned.getLong(1),
-          files.size < total && files.nonEmpty,
-          pruned.getLong(0) == full.getLong(0) &&
-            pruned.getLong(1) == full.getLong(1)))
-          .toDF("n", "v_fp", "pruned_ok", "equal_ok")
-      } finally rmTree(path)
+      ev.withColumn("rb", least(
+          floor(col("user_id") * 16.0 / (mxv + 1)).cast("long"), lit(15L)))
+        .repartition(16, col("rb")).drop("rb")
+        .write.mode("overwrite").parquet(path)
+      val manifest = Manifest.build(s, path, "user_id")
+        .localCheckpoint(true) // plan + count read one stable snapshot
+      val total = manifest.count()
+      val hi = mxv / 4
+      val files = Manifest.filesForRange(manifest, 0L, hi)
+      val pruned = Manifest.prunedRead(s, path, files, "user_id", 0L, hi)
+        .agg(count(lit(1)).as("n"),
+          sum(floor(col("value") * 1e6).cast("long")).as("v_fp")).head()
+      val full = ev.filter(col("user_id") >= 0 && col("user_id") <= hi)
+        .agg(count(lit(1)),
+          sum(floor(col("value") * 1e6).cast("long"))).head()
+      import s.implicits._
+      Seq((pruned.getLong(0), pruned.getLong(1),
+        files.size < total && files.nonEmpty,
+        pruned.getLong(0) == full.getLong(0) &&
+          pruned.getLong(1) == full.getLong(1)))
+        .toDF("n", "v_fp", "pruned_ok", "equal_ok")
     }),
 
 
@@ -364,64 +375,31 @@ private[graft] object GatesMaintenance {
     // merges land (history is immutable), v3 is the current state; the
     // immutable_ok verdict additionally pins that no pre-existing data
     // file was rewritten or removed by either merge (path + length).
-    "k17_time_travel" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-ttravel-${System.nanoTime()}"
-      def files(): Map[String, Long] =
-        leafFiles(s"$path/data")
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(f => f.getPath -> f.length()).toMap
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base)
-        val f1 = files()
-        // batch 1: update bucket-2 keys %3=0 (price×2), delete bucket-5
-        // keys %3=1, insert bucket-2 keys %3=2 shifted +80M
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1)
-        val f2 = files()
-        // batch 2: delete the batch-1-updated keys, update bucket-7 keys
-        // %5=1 (price×3), insert bucket-7 keys %5=2 shifted +90M
-        val b2 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("op", lit("D"))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-            .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("U")))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b2)
-        val f3 = files()
-        // append-only: every file of an earlier version survives later
-        // merges byte-identical (path + length)
-        val immutable = f1.forall { case (p, n) => f3.get(p).contains(n) } &&
-          f2.forall { case (p, n) => f3.get(p).contains(n) }
-        val snaps = Seq(1L, 2L, 3L).map { v =>
-          Versioned.read(s, path, v)
-            .groupBy(col("bucket"))
-            .agg(count(lit(1)).as("ct"),
-              sum(col("price")).cast("double").as("price_sum"),
-              sum(col("k")).as("key_sum"))
-            .withColumn("version", lit(v))
-        }
-        snaps.reduce(_ unionByName _)
-          .withColumn("immutable_ok", lit(if (immutable) 1L else 0L))
-          .select(col("version"), col("bucket"), col("ct"),
-            col("price_sum"), col("key_sum"), col("immutable_ok"))
-          .orderBy(col("version"), col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k17_time_travel" -> ((s, dir) => withScratch("k17_time_travel") { path =>
+      val base = storeBase(s, dir)
+      Versioned.init(s, path, "bucket", base)
+      val f1 = dataFiles(s"$path/data")
+      // batch 1: update bucket-2 keys %3=0 (price×2), delete bucket-5
+      // keys %3=1, insert bucket-2 keys %3=2 shifted +80M; batch 2:
+      // delete the batch-1-updated keys, update bucket-7 keys %5=1
+      // (price×3), insert bucket-7 keys %5=2 shifted +90M
+      val Seq(b1, b2, _) = storeMerges(base)
+      Versioned.merge(s, path, "bucket", "k", b1)
+      val f2 = dataFiles(s"$path/data")
+      Versioned.merge(s, path, "bucket", "k", b2)
+      val f3 = dataFiles(s"$path/data")
+      // append-only: every file of an earlier version survives later
+      // merges byte-identical (path + length)
+      val immutable = f1.forall { case (p, n) => f3.get(p).contains(n) } &&
+        f2.forall { case (p, n) => f3.get(p).contains(n) }
+      Seq(1L, 2L, 3L).map { v =>
+        bucketSums(Versioned.read(s, path, v), "ct")
+          .withColumn("version", lit(v))
+      }.reduce(_ unionByName _)
+        .withColumn("immutable_ok", flag(immutable))
+        .select(col("version"), col("bucket"), col("ct"),
+          col("price_sum"), col("key_sum"), col("immutable_ok"))
+        .orderBy(col("version"), col("bucket"))
     }),
 
 
@@ -436,73 +414,39 @@ private[graft] object GatesMaintenance {
     // (3) reading the vacuumed version fails LOUDLY (the silent-empty
     // failure mode is the time-travel bug users hit). Verdicts ride as
     // 1/0 columns; the oracle replays v2/v3 and pins the verdicts true.
-    "k18_vacuum" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-vacuum-${System.nanoTime()}"
-      def dataFiles(): Set[String] =
-        leafFiles(s"$path/data")
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getCanonicalPath).toSet
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base)
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1)
-        val b2 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("op", lit("D"))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-            .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("U")))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b2)
-        def snap(v: Long) = Versioned.read(s, path, v)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("ct"),
-            sum(col("price")).cast("double").as("price_sum"),
-            sum(col("k")).as("key_sum"))
-          .select(lit(v).as("version"), col("bucket"), col("ct"),
-            col("price_sum"), col("key_sum"))
-        val pre = Seq(2L, 3L).map(v => snap(v).localCheckpoint(true))
-          .reduce(_ unionByName _)
-        val preRows = pre.collect().toSet
-        val reachable = Seq(2L, 3L).flatMap { v =>
-          s.read.parquet(Versioned.manifestDir(path, v))
-            .select(col("file")).distinct().collect().map(r =>
-              new java.io.File(new org.apache.hadoop.fs.Path(
-                new java.net.URI(r.getString(0))).toUri.getPath)
-                .getCanonicalPath)
-        }.toSet
-        val before = dataFiles()
-        val deleted = Versioned.vacuum(s, path, retainFrom = 2L)
-        val after = dataFiles()
-        val filesExact = after == reachable && deleted >= 1 &&
-          after.subsetOf(before) && after != before
-        val readFails =
-          try { Versioned.read(s, path, 1L); false }
-          catch { case _: IllegalArgumentException => true }
-        val post = Seq(2L, 3L).map(snap).reduce(_ unionByName _)
-          .localCheckpoint(true)
-        val prePostOk = post.collect().toSet == preRows
-        post
-          .withColumn("files_exact_ok", lit(if (filesExact) 1L else 0L))
-          .withColumn("read_fails_ok", lit(if (readFails) 1L else 0L))
-          .withColumn("pre_post_ok", lit(if (prePostOk) 1L else 0L))
-          .orderBy(col("version"), col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k18_vacuum" -> ((s, dir) => withScratch("k18_vacuum") { path =>
+      val base = storeBase(s, dir)
+      Versioned.init(s, path, "bucket", base)
+      storeMerges(base).take(2)
+        .foreach(b => Versioned.merge(s, path, "bucket", "k", b))
+      def snap(v: Long) = bucketSums(Versioned.read(s, path, v), "ct")
+        .select(lit(v).as("version"), col("bucket"), col("ct"),
+          col("price_sum"), col("key_sum"))
+      val pre = Seq(2L, 3L).map(v => snap(v).localCheckpoint(true))
+        .reduce(_ unionByName _)
+      val preRows = pre.collect().toSet
+      val reachable = Seq(2L, 3L).flatMap { v =>
+        s.read.parquet(Versioned.manifestDir(path, v))
+          .select(col("file")).distinct().collect().map(r =>
+            new java.io.File(new org.apache.hadoop.fs.Path(
+              new java.net.URI(r.getString(0))).toUri.getPath)
+              .getCanonicalPath)
+      }.toSet
+      val before = dataFiles(s"$path/data").keySet
+      val deleted = Versioned.vacuum(s, path, retainFrom = 2L)
+      val after = dataFiles(s"$path/data").keySet
+      val filesExact = after == reachable && deleted >= 1 &&
+        after.subsetOf(before) && after != before
+      val readFails =
+        try { Versioned.read(s, path, 1L); false }
+        catch { case _: IllegalArgumentException => true }
+      val post = Seq(2L, 3L).map(snap).reduce(_ unionByName _)
+        .localCheckpoint(true)
+      post
+        .withColumn("files_exact_ok", flag(filesExact))
+        .withColumn("read_fails_ok", flag(readFails))
+        .withColumn("pre_post_ok", flag(post.collect().toSet == preRows))
+        .orderBy(col("version"), col("bucket"))
     }),
 
 
@@ -516,44 +460,19 @@ private[graft] object GatesMaintenance {
     // update-then-delete must collapse to D, insert-then-keep to I) on
     // the k17 fixture; oracle replays both snapshots and full-outer
     // diffs them (same answer as the file-pruned plan by construction).
-    "k21_change_feed" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-cdf-${System.nanoTime()}"
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base)
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1)
-        val b2 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("op", lit("D"))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-            .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("U")))
-          .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b2)
-        val d23 = Versioned.changes(s, path, 2L, 3L, "k")
-          .withColumn("iv", lit("v2_v3"))
-        val d13 = Versioned.changes(s, path, 1L, 3L, "k")
-          .withColumn("iv", lit("v1_v3"))
-        d23.unionByName(d13)
-          .select(col("iv"), col("op"), col("k"),
-            col("price").cast("double").as("price"), col("bucket"))
-          .orderBy(col("iv"), col("op"), col("k"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k21_change_feed" -> ((s, dir) => withScratch("k21_change_feed") { path =>
+      val base = storeBase(s, dir)
+      Versioned.init(s, path, "bucket", base)
+      storeMerges(base).take(2)
+        .foreach(b => Versioned.merge(s, path, "bucket", "k", b))
+      val d23 = Versioned.changes(s, path, 2L, 3L, "k")
+        .withColumn("iv", lit("v2_v3"))
+      val d13 = Versioned.changes(s, path, 1L, 3L, "k")
+        .withColumn("iv", lit("v1_v3"))
+      d23.unionByName(d13)
+        .select(col("iv"), col("op"), col("k"),
+          col("price").cast("double").as("price"), col("bucket"))
+        .orderBy(col("iv"), col("op"), col("k"))
     }),
 
 
@@ -568,43 +487,29 @@ private[graft] object GatesMaintenance {
     // and PHYSICALLY scans every surviving data file: zero victim keys
     // anywhere on disk (physical_gone_ok), with the latest read's
     // per-bucket aggregates oracle-matched.
-    "k20_erasure_vacuum" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-erasure-${System.nanoTime()}"
-      def survivors(): Seq[String] =
-        leafFiles(s"$path/data")
-          .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base)
-        val victims = base.filter(col("k") % 97 === 0)
-        val nVictims = victims.count()
-        Versioned.merge(s, path, "bucket", "k",
-          victims.withColumn("op", lit("D")))
-        val preVisible = Versioned.read(s, path, 1L)
-          .join(victims.select(col("k")), Seq("k"), "left_semi")
-          .count() == nVictims
-        Versioned.vacuum(s, path, retainFrom = 2L)
-        val physGone = s.read.parquet(survivors(): _*)
-          .join(victims.select(col("k")), Seq("k"), "left_semi")
-          .count() == 0L
-        Versioned.read(s, path, 2L)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("ct"),
-            sum(col("price")).cast("double").as("price_sum"),
-            sum(col("k")).as("key_sum"))
-          .withColumn("erased_ct", lit(nVictims))
-          .withColumn("pre_vacuum_visible_ok",
-            lit(if (preVisible) 1L else 0L))
-          .withColumn("physical_gone_ok", lit(if (physGone) 1L else 0L))
-          .select(col("bucket"), col("ct"), col("price_sum"),
-            col("key_sum"), col("erased_ct"),
-            col("pre_vacuum_visible_ok"), col("physical_gone_ok"))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k20_erasure_vacuum" -> ((s, dir) =>
+        withScratch("k20_erasure_vacuum") { path =>
+      val base = storeBase(s, dir)
+      Versioned.init(s, path, "bucket", base)
+      val victims = base.filter(col("k") % 97 === 0)
+      val nVictims = victims.count()
+      Versioned.merge(s, path, "bucket", "k",
+        victims.withColumn("op", lit("D")))
+      val preVisible = Versioned.read(s, path, 1L)
+        .join(victims.select(col("k")), Seq("k"), "left_semi")
+        .count() == nVictims
+      Versioned.vacuum(s, path, retainFrom = 2L)
+      val physGone = s.read.parquet(dataFiles(s"$path/data").keys.toSeq: _*)
+        .join(victims.select(col("k")), Seq("k"), "left_semi")
+        .count() == 0L
+      bucketSums(Versioned.read(s, path, 2L), "ct")
+        .withColumn("erased_ct", lit(nVictims))
+        .withColumn("pre_vacuum_visible_ok", flag(preVisible))
+        .withColumn("physical_gone_ok", flag(physGone))
+        .select(col("bucket"), col("ct"), col("price_sum"),
+          col("key_sum"), col("erased_ct"),
+          col("pre_vacuum_visible_ok"), col("physical_gone_ok"))
+        .orderBy(col("bucket"))
     }),
 
 
@@ -622,65 +527,21 @@ private[graft] object GatesMaintenance {
     // the oracle replays every probe's values over the replayed
     // snapshots. The miss probe lands outside every envelope — zero
     // files planned, empty answer, no exception.
-    "k22_versioned_skipping" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-vskip-${System.nanoTime()}"
-      try {
-        val raw = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"))
-        val mx = raw.agg(max(col("k"))).head().getLong(0)
-        val cut = mx / 8
-        val base = raw.withColumn("bucket",
-          least(floor(col("k") * 16.0 / (mx + 1)).cast("long"), lit(15L)))
-        Versioned.init(s, path, "bucket", base, statsCol = Some("k"))
-        val b1 =
-          base.filter(col("k") <= cut && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("k") <= cut && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("k") <= cut && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("bucket", lit(99L))
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1, statsCol = Some("k"))
-        val mid = mx / 2
-        val pHit = raw.filter(col("k") >= mid).agg(min(col("k")))
-          .head().getLong(0)
-        val pUpd = raw.filter(col("k") <= cut && col("k") % 3 === 0)
-          .agg(min(col("k"))).head().getLong(0)
-        val pMiss = mx + 123456789L
-        val probes = Seq(
-          ("hit", pHit, pHit), ("miss", pMiss, pMiss),
-          ("range", mid, mid + mx / 8), ("upd", pUpd, pUpd))
-        val rows = Seq(1L, 2L).flatMap { v =>
-          val full = Versioned.read(s, path, v)
-          val allFiles = full.inputFiles.length
-          probes.map { case (label, lo, hi) =>
-            val pruned =
-              if (lo == hi) Versioned.readPoint(s, path, "k", lo, v)
-              else Versioned.readRange(s, path, "k", lo, hi, v)
-            def summarize(df: org.apache.spark.sql.DataFrame) = {
-              val r = df.agg(count(lit(1)),
-                coalesce(sum(col("price")), lit(0).cast("decimal(18,2)"))
-                  .cast("double"),
-                coalesce(sum(col("k")), lit(0L))).head()
-              (r.getLong(0), r.getDouble(1), r.getLong(2))
-            }
-            val got = summarize(pruned)
-            val want = summarize(
-              full.filter(col("k") >= lo && col("k") <= hi))
-            val prunedOk = pruned.inputFiles.length < allFiles
-            ((v, label, got._1, got._2, got._3,
-              if (prunedOk) 1L else 0L, if (got == want) 1L else 0L))
-          }
-        }
-        import s.implicits._
-        rows.toDF("version", "probe", "n", "price_sum", "key_sum",
-          "pruned_ok", "equal_ok")
-          .orderBy(col("version"), col("probe"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k22_versioned_skipping" -> ((s, dir) =>
+        withScratch("k22_versioned_skipping") { path =>
+      val raw = Tables.orders(s, dir)
+        .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"))
+      val mx = rangeStore(s, path, raw, Seq("k"))
+      val (cut, mid) = (mx / 8, mx / 2)
+      val pHit = raw.filter(col("k") >= mid).agg(min(col("k")))
+        .head().getLong(0)
+      val pUpd = raw.filter(col("k") <= cut && col("k") % 3 === 0)
+        .agg(min(col("k"))).head().getLong(0)
+      val pMiss = mx + 123456789L
+      probeVerdicts(s, path, Seq(1L, 2L), Seq(
+          ("hit", "k", pHit, pHit), ("miss", "k", pMiss, pMiss),
+          ("range", "k", mid, mid + mx / 8), ("upd", "k", pUpd, pUpd)))
+        .orderBy(col("version"), col("probe"))
     }),
 
 
@@ -698,65 +559,39 @@ private[graft] object GatesMaintenance {
     // file-for-file the union of the 7 per-key readPoint plans — sketches are
     // deterministic, so amortization changes what a probe costs, never what it
     // reads); the oracle replays both snapshots and aggregates over the batch.
-    "k35_multi_point" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-vmulti-${System.nanoTime()}"
-      try {
-        val raw = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"))
-        val mx = raw.agg(max(col("k"))).head().getLong(0)
-        val cut = mx / 8
-        val base = raw.withColumn("bucket",
-          least(floor(col("k") * 16.0 / (mx + 1)).cast("long"), lit(15L)))
-        Versioned.init(s, path, "bucket", base, statsCol = Some("k"))
-        val b1 =
-          base.filter(col("k") <= cut && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("k") <= cut && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("k") <= cut && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("bucket", lit(99L))
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1, statsCol = Some("k"))
-        def minWhere(c: org.apache.spark.sql.Column): Long =
-          raw.filter(c).agg(min(col("k"))).head().getLong(0)
-        val batch = Seq(
-          minWhere(col("k") >= mx / 2),
-          minWhere(col("k") >= 3L * mx / 4),
-          minWhere(col("k") <= cut && col("k") % 3 === 0),
-          minWhere(col("k") <= cut && col("k") % 3 === 1),
-          minWhere(col("k") <= cut && col("k") % 3 === 2) + 80000000L,
-          mx + 123456789L, mx + 987654321L)
-        val rows = Seq(1L, 2L).map { v =>
-          val full = Versioned.read(s, path, v)
-          val allFiles = full.inputFiles.length
-          val got = Versioned.readPoints(s, path, "k", batch, v)
-          val gotFiles = got.inputFiles.toSet
-          val perKeyFiles = batch.flatMap(k =>
-            Versioned.readPoint(s, path, "k", k, v).inputFiles).toSet
-          def summarize(df: org.apache.spark.sql.DataFrame) = {
-            val r = df.agg(count(lit(1)),
-              coalesce(sum(col("price")), lit(0).cast("decimal(18,2)"))
-                .cast("double"),
-              coalesce(sum(col("k")), lit(0L))).head()
-            (r.getLong(0), r.getDouble(1), r.getLong(2))
-          }
-          val g = summarize(got)
-          val want = summarize(
-            full.filter(col("k").isInCollection(batch)))
-          ((v, g._1, g._2, g._3,
-            if (gotFiles.size < allFiles) 1L else 0L,
-            if (g == want) 1L else 0L,
-            if (gotFiles == perKeyFiles) 1L else 0L))
-        }
-        import s.implicits._
-        rows.toDF("version", "n", "price_sum", "key_sum",
-          "pruned_ok", "equal_ok", "union_ok")
-          .orderBy(col("version"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k35_multi_point" -> ((s, dir) => withScratch("k35_multi_point") { path =>
+      val raw = Tables.orders(s, dir)
+        .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"))
+      val mx = rangeStore(s, path, raw, Seq("k"))
+      val cut = mx / 8
+      def minWhere(c: Column): Long =
+        raw.filter(c).agg(min(col("k"))).head().getLong(0)
+      val batch = Seq(
+        minWhere(col("k") >= mx / 2),
+        minWhere(col("k") >= 3L * mx / 4),
+        minWhere(col("k") <= cut && col("k") % 3 === 0),
+        minWhere(col("k") <= cut && col("k") % 3 === 1),
+        minWhere(col("k") <= cut && col("k") % 3 === 2) + 80000000L,
+        mx + 123456789L, mx + 987654321L)
+      val runs = Seq(1L, 2L).map { v =>
+        val full = Versioned.read(s, path, v)
+        val got = Versioned.readPoints(s, path, "k", batch, v)
+        val gotFiles = got.inputFiles.toSet
+        val perKeyFiles = batch.flatMap(k =>
+          Versioned.readPoint(s, path, "k", k, v).inputFiles).toSet
+        (v, got, full.filter(col("k").isInCollection(batch)),
+          gotFiles.size < full.inputFiles.length, gotFiles == perKeyFiles)
+      }
+      val sums = probeSums(runs.flatMap { case (v, got, want, _, _) =>
+        Seq(s"$v/got" -> got, s"$v/want" -> want) })
+      import s.implicits._
+      runs.map { case (v, _, _, prunedOk, unionOk) =>
+        val g = sums(s"$v/got")
+        (v, g._1, g._2, g._3, if (prunedOk) 1L else 0L,
+          if (g == sums(s"$v/want")) 1L else 0L, if (unionOk) 1L else 0L)
+      }.toDF("version", "n", "price_sum", "key_sum",
+        "pruned_ok", "equal_ok", "union_ok")
+        .orderBy(col("version"))
     }),
 
 
@@ -777,44 +612,24 @@ private[graft] object GatesMaintenance {
     // change feed across the restore emits exactly the inverse of the
     // bad write (revert_rows, oracle-computed); the final snapshot is
     // base + the good merge, as if v2 never happened.
-    "k30_restore" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-restore-${System.nanoTime()}"
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base)
-        val bad =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", bad)
-        val v3 = Versioned.restore(s, path, 1L)
-        require(v3 == 3L, s"restore must commit v3, got $v3")
-        // the restored snapshot IS v1; the bad version stays auditable
-        val revert = Versioned.changes(s, path, 2L, 3L, "k").count()
-        require(Versioned.read(s, path, 2L)
-          .filter(col("k") >= 80000000L).count() > 0,
-          "the bad version must stay readable after restore")
-        val good = base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-          .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-          .withColumn("op", lit("U"))
-        Versioned.merge(s, path, "bucket", "k", good)
-        Versioned.read(s, path)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("price")).cast("double").as("price_sum"),
-            sum(col("k")).as("key_sum"))
-          .withColumn("revert_rows", lit(revert))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k30_restore" -> ((s, dir) => withScratch("k30_restore") { path =>
+      val base = storeBase(s, dir)
+      Versioned.init(s, path, "bucket", base)
+      Versioned.merge(s, path, "bucket", "k", storeMerges(base).head)
+      val v3 = Versioned.restore(s, path, 1L)
+      require(v3 == 3L, s"restore must commit v3, got $v3")
+      // the restored snapshot IS v1; the bad version stays auditable
+      val revert = Versioned.changes(s, path, 2L, 3L, "k").count()
+      require(Versioned.read(s, path, 2L)
+        .filter(col("k") >= 80000000L).count() > 0,
+        "the bad version must stay readable after restore")
+      val good = base.filter(col("bucket") === 7 && col("k") % 5 === 1)
+        .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
+        .withColumn("op", lit("U"))
+      Versioned.merge(s, path, "bucket", "k", good)
+      bucketSums(Versioned.read(s, path), "cnt")
+        .withColumn("revert_rows", lit(revert))
+        .orderBy(col("bucket"))
     }),
 
 
@@ -826,47 +641,33 @@ private[graft] object GatesMaintenance {
     // later merge on one bucket MATERIALIZES that bucket's dv while the
     // others keep answering through theirs. At 100 TB this is the GDPR
     // erase: tombstone file + pruned scan, not a terabyte rewrite.
-    "k29_deletion_vectors" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-dv-${System.nanoTime()}"
-      def files(): Set[String] =
-        leafFiles(s"$path/data")
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getCanonicalPath).toSet
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base, statsCol = Some("k"))
-        val f1 = files()
-        Versioned.deleteKeysDv(s, path, "bucket", "k",
-          base.filter(col("k") % 97 === 0).select(col("k"), col("bucket")))
-        val zeroMove = files() == f1
-        val dRows = Versioned.changes(s, path, 1L, 2L, "k")
-        val dOnly = dRows.agg(
-          count(lit(1)).as("n"),
-          coalesce(sum(when(col("op") === "D", 0L).otherwise(1L)), lit(0L))
-            .as("nonD")).head()
-        val (nD, nonD) = (dOnly.getLong(0), dOnly.getLong(1))
-        // bucket-3 merge materializes its dv; other buckets still answer
-        // through theirs
-        val b1 = base
-          .filter(col("bucket") === 3 && col("k") % 5 === 0 &&
-            col("k") % 97 =!= 0)
-          .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-          .withColumn("op", lit("U"))
-        Versioned.merge(s, path, "bucket", "k", b1, statsCol = Some("k"))
-        Versioned.read(s, path)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("price")).cast("double").as("price_sum"),
-            sum(col("k")).as("key_sum"))
-          .withColumn("zero_move_ok", lit(if (zeroMove) 1L else 0L))
-          .withColumn("d_rows", lit(nD))
-          .withColumn("all_d_ok", lit(if (nonD == 0L) 1L else 0L))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k29_deletion_vectors" -> ((s, dir) =>
+        withScratch("k29_deletion_vectors") { path =>
+      val base = storeBase(s, dir)
+      Versioned.init(s, path, "bucket", base, statsCol = Some("k"))
+      val f1 = dataFiles(s"$path/data")
+      Versioned.deleteKeysDv(s, path, "bucket", "k",
+        base.filter(col("k") % 97 === 0).select(col("k"), col("bucket")))
+      val zeroMove = dataFiles(s"$path/data") == f1
+      val dRows = Versioned.changes(s, path, 1L, 2L, "k")
+      val dOnly = dRows.agg(
+        count(lit(1)).as("n"),
+        coalesce(sum(when(col("op") === "D", 0L).otherwise(1L)), lit(0L))
+          .as("nonD")).head()
+      val (nD, nonD) = (dOnly.getLong(0), dOnly.getLong(1))
+      // bucket-3 merge materializes its dv; other buckets still answer
+      // through theirs
+      val b1 = base
+        .filter(col("bucket") === 3 && col("k") % 5 === 0 &&
+          col("k") % 97 =!= 0)
+        .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
+        .withColumn("op", lit("U"))
+      Versioned.merge(s, path, "bucket", "k", b1, statsCol = Some("k"))
+      bucketSums(Versioned.read(s, path), "cnt")
+        .withColumn("zero_move_ok", flag(zeroMove))
+        .withColumn("d_rows", lit(nD))
+        .withColumn("all_d_ok", flag(nonD == 0L))
+        .orderBy(col("bucket"))
     }),
 
 
@@ -882,66 +683,55 @@ private[graft] object GatesMaintenance {
     // bucket-3 manifest row is a FRESH dv-less file (heavy_clean_ok);
     // light files carried VERBATIM, same paths (light_carried_ok). The
     // oracle replays base minus both delete sets.
-    "k34_dv_materialize" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-dvmat-${System.nanoTime()}"
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base, statsCol = Some("k"))
-        Versioned.deleteKeysDv(s, path, "bucket", "k",
-          base.filter(col("bucket") === 3 && col("k") % 3 === 0)
-            .select(col("k"), col("bucket")))
-        Versioned.deleteKeysDv(s, path, "bucket", "k",
-          base.filter(col("bucket") =!= 3 && col("k") % 499 === 0)
-            .select(col("k"), col("bucket")))
-        val vDv = Versioned.latest(path)
-        def agg(df: org.apache.spark.sql.DataFrame) = df
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("price")).cast("double").as("price_sum"),
-            sum(col("k")).as("key_sum"))
-        val before = agg(Versioned.read(s, path)).collect()
-          .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2),
-            r.getLong(3)))).toMap
-        def mRows(v: Long) = s.read.parquet(Versioned.manifestDir(path, v))
-          .select(col("file"), col("part"),
-            coalesce(size(col("dv")), lit(0)).as("ndv")).collect()
-          .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-        val mBefore = mRows(vDv)
-        val lightBefore = mBefore.filter(r => r._2 != "3").toSet
-        val vMat = Versioned.materializeDvs(s, path, "bucket",
-          threshold = 0.05, statsCol = Some("k"))
-        require(vMat == vDv + 1,
-          s"k34: expected one materialization commit, got $vDv -> $vMat")
-        val mAfter = mRows(vMat)
-        // heavy files (bucket 3) all rewrote to fresh dv-less files
-        val heavyAfter = mAfter.filter(_._2 == "3")
-        val heavyBeforeFiles = mBefore.filter(_._2 == "3").map(_._1).toSet
-        val heavyClean = heavyAfter.nonEmpty && heavyAfter.forall(r =>
-          r._3 == 0 && !heavyBeforeFiles.contains(r._1))
-        // light files carried verbatim: same (file, part, dv-size) rows
-        val lightCarried = mAfter.filter(r => r._2 != "3").toSet == lightBefore
-        // and some DVs must remain (the threshold really was selective)
-        val selective = mAfter.exists(_._3 > 0)
-        val after = agg(Versioned.read(s, path))
-        val matEqualsDv = after.collect()
-          .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2),
-            r.getLong(3)))).toMap == before
-        // a second sweep at the same threshold must be a NO-OP (no
-        // empty maintenance commits pollute history)
-        val noopOk = Versioned.materializeDvs(s, path, "bucket",
-          threshold = 0.05, statsCol = Some("k")) == vMat
-        after
-          .withColumn("mat_equals_dv_ok", lit(if (matEqualsDv) 1L else 0L))
-          .withColumn("selective_ok", lit(if (selective) 1L else 0L))
-          .withColumn("heavy_clean_ok", lit(if (heavyClean) 1L else 0L))
-          .withColumn("light_carried_ok", lit(if (lightCarried) 1L else 0L))
-          .withColumn("noop_ok", lit(if (noopOk) 1L else 0L))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k34_dv_materialize" -> ((s, dir) =>
+        withScratch("k34_dv_materialize") { path =>
+      val base = storeBase(s, dir)
+      Versioned.init(s, path, "bucket", base, statsCol = Some("k"))
+      Versioned.deleteKeysDv(s, path, "bucket", "k",
+        base.filter(col("bucket") === 3 && col("k") % 3 === 0)
+          .select(col("k"), col("bucket")))
+      Versioned.deleteKeysDv(s, path, "bucket", "k",
+        base.filter(col("bucket") =!= 3 && col("k") % 499 === 0)
+          .select(col("k"), col("bucket")))
+      val vDv = Versioned.latest(path)
+      def latestSums() = bucketSums(Versioned.read(s, path), "cnt")
+      def byBucket(df: DataFrame) = df.collect()
+        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2),
+          r.getLong(3)))).toMap
+      val before = byBucket(latestSums())
+      def mRows(v: Long) = s.read.parquet(Versioned.manifestDir(path, v))
+        .select(col("file"), col("part"),
+          coalesce(size(col("dv")), lit(0)).as("ndv")).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+      val mBefore = mRows(vDv)
+      val lightBefore = mBefore.filter(r => r._2 != "3").toSet
+      val vMat = Versioned.materializeDvs(s, path, "bucket",
+        threshold = 0.05, statsCol = Some("k"))
+      require(vMat == vDv + 1,
+        s"k34: expected one materialization commit, got $vDv -> $vMat")
+      val mAfter = mRows(vMat)
+      // heavy files (bucket 3) all rewrote to fresh dv-less files
+      val heavyAfter = mAfter.filter(_._2 == "3")
+      val heavyBeforeFiles = mBefore.filter(_._2 == "3").map(_._1).toSet
+      val heavyClean = heavyAfter.nonEmpty && heavyAfter.forall(r =>
+        r._3 == 0 && !heavyBeforeFiles.contains(r._1))
+      // light files carried verbatim: same (file, part, dv-size) rows
+      val lightCarried = mAfter.filter(r => r._2 != "3").toSet == lightBefore
+      // and some DVs must remain (the threshold really was selective)
+      val selective = mAfter.exists(_._3 > 0)
+      val after = latestSums()
+      val matEqualsDv = byBucket(after) == before
+      // a second sweep at the same threshold must be a NO-OP (no
+      // empty maintenance commits pollute history)
+      val noopOk = Versioned.materializeDvs(s, path, "bucket",
+        threshold = 0.05, statsCol = Some("k")) == vMat
+      after
+        .withColumn("mat_equals_dv_ok", flag(matEqualsDv))
+        .withColumn("selective_ok", flag(selective))
+        .withColumn("heavy_clean_ok", flag(heavyClean))
+        .withColumn("light_carried_ok", flag(lightCarried))
+        .withColumn("noop_ok", flag(noopOk))
+        .orderBy(col("bucket"))
     }),
 
 
@@ -953,112 +743,76 @@ private[graft] object GatesMaintenance {
     // source never sees the write. At 100 TB this is the experiment/fork
     // primitive: paying for divergence, not for the table. The oracle
     // replays both lineages (src = base + b1; clone = src + b2).
-    "k28_shallow_clone" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val uniq = System.nanoTime()
-      val src = s"$shmRoot/graft-clonesrc-$uniq"
-      val dst = s"$shmRoot/graft-clonedst-$uniq"
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, src, "bucket", base)
-        val b1 = base.filter(col("bucket") === 3 && col("k") % 2 === 0)
-          .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
+    "k28_shallow_clone" -> ((s, dir) => withScratch("k28_shallow_clone") { root =>
+      val (src, dst) = (s"$root/src", s"$root/clone")
+      val base = storeBase(s, dir)
+      Versioned.init(s, src, "bucket", base)
+      val b1 = base.filter(col("bucket") === 3 && col("k") % 2 === 0)
+        .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
+        .withColumn("op", lit("U"))
+      Versioned.merge(s, src, "bucket", "k", b1)
+      Versioned.shallowClone(s, src, dst)
+      val zeroCopy = dataFiles(s"$dst/data").isEmpty
+      val b2 =
+        base.filter(col("bucket") === 5 && col("k") % 3 === 0)
+          .withColumn("price", (col("price") * 5).cast("decimal(18,2)"))
           .withColumn("op", lit("U"))
-        Versioned.merge(s, src, "bucket", "k", b1)
-        Versioned.shallowClone(s, src, dst)
-        val dataDir = new java.io.File(s"$dst/data")
-        val zeroCopy = !dataDir.exists() ||
-          Option(dataDir.listFiles()).getOrElse(Array.empty).isEmpty
-        val b2 =
-          base.filter(col("bucket") === 5 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 5).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 1 && col("k") % 4 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("k", col("k") + 70000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, dst, "bucket", "k", b2)
-        def snap(path: String, side: String) =
-          Versioned.read(s, path).groupBy(col("bucket"))
-            .agg(count(lit(1)).as("cnt"),
-              sum(col("price")).cast("double").as("price_sum"),
-              sum(col("k")).as("key_sum"))
-            .withColumn("side", lit(side))
-        snap(src, "src").unionByName(snap(dst, "clone"))
-          .withColumn("zero_copy_ok", lit(if (zeroCopy) 1L else 0L))
-          .select(col("side"), col("bucket"), col("cnt"),
-            col("price_sum"), col("key_sum"), col("zero_copy_ok"))
-          .orderBy(col("side"), col("bucket"))
-          .localCheckpoint(true) // materialize before the stores sweep
-      } finally { rmTree(src); rmTree(dst) }
+        .unionByName(base.filter(col("bucket") === 1 && col("k") % 4 === 1)
+          .withColumn("op", lit("D")))
+        .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
+          .withColumn("k", col("k") + 70000000L)
+          .withColumn("op", lit("I")))
+      Versioned.merge(s, dst, "bucket", "k", b2)
+      def snap(path: String, side: String) =
+        bucketSums(Versioned.read(s, path), "cnt").withColumn("side", lit(side))
+      snap(src, "src").unionByName(snap(dst, "clone"))
+        .withColumn("zero_copy_ok", flag(zeroCopy))
+        .select(col("side"), col("bucket"), col("cnt"),
+          col("price_sum"), col("key_sum"), col("zero_copy_ok"))
+        .orderBy(col("side"), col("bucket"))
     }),
 
 
-    "k23_versioned_compact" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-vcompact-${System.nanoTime()}"
-      def dataFiles(): Set[String] =
-        leafFiles(s"$path/data")
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getCanonicalPath).toSet
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(64L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base, statsCol = Some("k"))
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1, statsCol = Some("k"))
-        def snap(v: Long) = Versioned.read(s, path, v)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("ct"),
-            sum(col("price")).cast("double").as("price_sum"),
-            sum(col("k")).as("key_sum"))
-        def manifestCount(v: Long): Long =
-          s.read.parquet(Versioned.manifestDir(path, v))
-            .select(col("file")).distinct().count()
-        val pre = snap(2L).localCheckpoint(true)
-        val preRows = pre.collect().toSet
-        val total = Versioned.read(s, path, 2L).count()
-        val v3 = Versioned.compact(s, path, "bucket",
-          statsCol = Some("k"), maxGroupRows = math.max(1L, total / 8))
-        val filesDrop = manifestCount(v3) < manifestCount(2L)
-        val latestEqual = snap(v3).collect().toSet == preRows
-        val preIntact = snap(2L).collect().toSet == preRows
-        val reachable = s.read.parquet(Versioned.manifestDir(path, v3))
-          .select(col("file")).distinct().collect().map(r =>
-            new java.io.File(new org.apache.hadoop.fs.Path(
-              new java.net.URI(r.getString(0))).toUri.getPath)
-              .getCanonicalPath).toSet
-        val before = dataFiles()
-        val deleted = Versioned.vacuum(s, path, retainFrom = v3)
-        val after = dataFiles()
-        val vacuumExact = after == reachable && deleted >= 1 &&
-          after.subsetOf(before) && after != before
-        val readFails =
-          try { Versioned.read(s, path, 2L); false }
-          catch { case _: IllegalArgumentException => true }
-        val postVacuum = snap(v3).collect().toSet == preRows
-        snap(v3)
-          .withColumn("files_drop_ok", lit(if (filesDrop) 1L else 0L))
-          .withColumn("latest_equal_ok", lit(if (latestEqual) 1L else 0L))
-          .withColumn("pre_intact_ok", lit(if (preIntact) 1L else 0L))
-          .withColumn("vacuum_exact_ok", lit(if (vacuumExact) 1L else 0L))
-          .withColumn("read_fails_ok", lit(if (readFails) 1L else 0L))
-          .withColumn("post_vacuum_ok", lit(if (postVacuum) 1L else 0L))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k23_versioned_compact" -> ((s, dir) =>
+        withScratch("k23_versioned_compact") { path =>
+      val base = storeBase(s, dir, 64L)
+      Versioned.init(s, path, "bucket", base, statsCol = Some("k"))
+      Versioned.merge(s, path, "bucket", "k", storeMerges(base).head,
+        statsCol = Some("k"))
+      def snap(v: Long) = bucketSums(Versioned.read(s, path, v), "ct")
+      def manifestCount(v: Long): Long =
+        s.read.parquet(Versioned.manifestDir(path, v))
+          .select(col("file")).distinct().count()
+      val pre = snap(2L).localCheckpoint(true)
+      val preRows = pre.collect().toSet
+      val total = Versioned.read(s, path, 2L).count()
+      val v3 = Versioned.compact(s, path, "bucket",
+        statsCol = Some("k"), maxGroupRows = math.max(1L, total / 8))
+      val filesDrop = manifestCount(v3) < manifestCount(2L)
+      val latestEqual = snap(v3).collect().toSet == preRows
+      val preIntact = snap(2L).collect().toSet == preRows
+      val reachable = s.read.parquet(Versioned.manifestDir(path, v3))
+        .select(col("file")).distinct().collect().map(r =>
+          new java.io.File(new org.apache.hadoop.fs.Path(
+            new java.net.URI(r.getString(0))).toUri.getPath)
+            .getCanonicalPath).toSet
+      val before = dataFiles(s"$path/data").keySet
+      val deleted = Versioned.vacuum(s, path, retainFrom = v3)
+      val after = dataFiles(s"$path/data").keySet
+      val vacuumExact = after == reachable && deleted >= 1 &&
+        after.subsetOf(before) && after != before
+      val readFails =
+        try { Versioned.read(s, path, 2L); false }
+        catch { case _: IllegalArgumentException => true }
+      val postVacuum = snap(v3).collect().toSet == preRows
+      snap(v3)
+        .withColumn("files_drop_ok", flag(filesDrop))
+        .withColumn("latest_equal_ok", flag(latestEqual))
+        .withColumn("pre_intact_ok", flag(preIntact))
+        .withColumn("vacuum_exact_ok", flag(vacuumExact))
+        .withColumn("read_fails_ok", flag(readFails))
+        .withColumn("post_vacuum_ok", flag(postVacuum))
+        .orderBy(col("bucket"))
     }),
 
 
@@ -1075,80 +829,36 @@ private[graft] object GatesMaintenance {
     // (planned files a strict subset) and equal_ok (pruned answer ==
     // full-scan filter); manifest_map_ok pins that the committed
     // manifests really carry both columns' stats keyed physically.
-    "k25_multicol_skipping" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-vmulti-${System.nanoTime()}"
-      try {
-        val raw = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
-            dec("o_totalprice").as("price"))
-        val mx = raw.agg(max(col("k"))).head().getLong(0)
-        val cut = mx / 8
-        val base = raw.withColumn("bucket",
-          least(floor(col("k") * 16.0 / (mx + 1)).cast("long"), lit(15L)))
-        Versioned.init(s, path, "bucket", base, statsCols = Seq("k", "c"))
-        val b1 =
-          base.filter(col("k") <= cut && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("k") <= cut && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("k") <= cut && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("bucket", lit(99L))
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1, statsCols = Seq("k", "c"))
-        // the committed manifests carry BOTH columns' stats: every row
-        // of both logs has a 2-entry map keyed {c, k} (fresh AND
-        // carried — no commit in this history is stats-less)
-        val mapOk = Seq(1L, 2L).forall { v =>
-          val keyed = s.read.parquet(Versioned.manifestDir(path, v))
-            .select(sort_array(map_keys(col("stats"))).as("ks"))
-          keyed.count() > 0 &&
-            keyed.filter(col("ks") =!= array(lit("c"), lit("k"))).isEmpty
-        }
-        val mid = mx / 2
-        val pHit = raw.filter(col("k") >= mid)
-          .agg(min(col("k")).cast("long")).head().getLong(0)
-        val c0 = raw.agg(min(col("c")).cast("long")).head().getLong(0)
-        val cMx = raw.agg(max(col("c")).cast("long")).head().getLong(0)
-        // (label, column, lo, hi): k probes prune by envelope under the
-        // k-correlated layout; c probes by c's Bloom (hit reads only
-        // files that might hold c0, miss reads NOTHING)
-        val probes = Seq(
+    "k25_multicol_skipping" -> ((s, dir) =>
+        withScratch("k25_multicol_skipping") { path =>
+      val raw = Tables.orders(s, dir)
+        .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
+          dec("o_totalprice").as("price"))
+      val mx = rangeStore(s, path, raw, Seq("k", "c"))
+      // the committed manifests carry BOTH columns' stats: every row
+      // of both logs has a 2-entry map keyed {c, k} (fresh AND
+      // carried — no commit in this history is stats-less)
+      val mapOk = Seq(1L, 2L).forall { v =>
+        val keyed = s.read.parquet(Versioned.manifestDir(path, v))
+          .select(sort_array(map_keys(col("stats"))).as("ks"))
+        keyed.count() > 0 &&
+          keyed.filter(col("ks") =!= array(lit("c"), lit("k"))).isEmpty
+      }
+      val mid = mx / 2
+      val pHit = raw.filter(col("k") >= mid)
+        .agg(min(col("k")).cast("long")).head().getLong(0)
+      val c0 = raw.agg(min(col("c")).cast("long")).head().getLong(0)
+      val cMx = raw.agg(max(col("c")).cast("long")).head().getLong(0)
+      // k probes prune by envelope under the k-correlated layout; c
+      // probes by c's Bloom (hit reads only files that might hold c0,
+      // miss reads NOTHING)
+      probeVerdicts(s, path, Seq(1L, 2L), Seq(
           ("k_range", "k", mid, mid + mx / 8),
           ("k_point", "k", pHit, pHit),
           ("c_hit", "c", c0, c0),
-          ("c_miss", "c", cMx + 987654321L, cMx + 987654321L))
-        val rows = Seq(1L, 2L).flatMap { v =>
-          val full = Versioned.read(s, path, v)
-          val allFiles = full.inputFiles.length
-          probes.map { case (label, probeCol, lo, hi) =>
-            val pruned =
-              if (lo == hi) Versioned.readPoint(s, path, probeCol, lo, v)
-              else Versioned.readRange(s, path, probeCol, lo, hi, v)
-            def summarize(df: org.apache.spark.sql.DataFrame) = {
-              val r = df.agg(count(lit(1)),
-                coalesce(sum(col("price")), lit(0).cast("decimal(18,2)"))
-                  .cast("double"),
-                coalesce(sum(col("k")), lit(0L))).head()
-              (r.getLong(0), r.getDouble(1), r.getLong(2))
-            }
-            val got = summarize(pruned)
-            val want = summarize(full.filter(
-              col(probeCol) >= lo && col(probeCol) <= hi))
-            val prunedOk = pruned.inputFiles.length < allFiles
-            ((v, label, got._1, got._2, got._3,
-              if (prunedOk) 1L else 0L, if (got == want) 1L else 0L))
-          }
-        }
-        import s.implicits._
-        rows.toDF("version", "probe", "n", "price_sum", "key_sum",
-          "pruned_ok", "equal_ok")
-          .withColumn("manifest_map_ok", lit(if (mapOk) 1L else 0L))
-          .orderBy(col("version"), col("probe"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+          ("c_miss", "c", cMx + 987654321L, cMx + 987654321L)))
+        .withColumn("manifest_map_ok", flag(mapOk))
+        .orderBy(col("version"), col("probe"))
     }),
 
 
@@ -1163,50 +873,16 @@ private[graft] object GatesMaintenance {
     // full-span — ZOrderSpec measures that; here the probes pin it at
     // the store level.) Four probes; per probe pruned_ok (strict file
     // subset) + equal_ok (== full-scan filter), values oracle-replayed.
-    "k26_zorder_multicol" -> ((s, dir) => {
+    "k26_zorder_multicol" -> ((s, dir) =>
+        withScratch("k26_zorder_multicol") { path =>
       import graft.functions.LayoutFns
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-zmulti-${System.nanoTime()}"
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"),
-            pmod(col("o_orderkey"), lit(1024L)).as("x"),
-            pmod(expr("o_orderkey div 7"), lit(1024L)).as("y"),
-            dec("o_totalprice").as("price"))
-        // 10-bit/dim Morton z; top 5 bits partition into ≤32 z-range
-        // tiles — the partition value IS the layout
-        val zb = base.withColumn("zb",
-          shiftright(LayoutFns.zvalue(10, col("x"), col("y")), 15))
-        Versioned.init(s, path, "zb", zb, statsCols = Seq("x", "y"))
-        val full = Versioned.read(s, path)
-        val allFiles = full.inputFiles.length
-        val probes = Seq(
-          ("x_point", "x", 777L, 777L), ("x_range", "x", 128L, 159L),
-          ("y_point", "y", 333L, 333L), ("y_range", "y", 512L, 543L))
-        val rows = probes.map { case (label, probeCol, lo, hi) =>
-          val pruned =
-            if (lo == hi) Versioned.readPoint(s, path, probeCol, lo)
-            else Versioned.readRange(s, path, probeCol, lo, hi)
-          def summarize(df: org.apache.spark.sql.DataFrame) = {
-            val r = df.agg(count(lit(1)),
-              coalesce(sum(col("price")), lit(0).cast("decimal(18,2)"))
-                .cast("double"),
-              coalesce(sum(col("k")), lit(0L))).head()
-            (r.getLong(0), r.getDouble(1), r.getLong(2))
-          }
-          val got = summarize(pruned)
-          val want = summarize(full.filter(
-            col(probeCol) >= lo && col(probeCol) <= hi))
-          val prunedOk = pruned.inputFiles.length < allFiles
-          ((label, got._1, got._2, got._3,
-            if (prunedOk) 1L else 0L, if (got == want) 1L else 0L))
-        }
-        import s.implicits._
-        rows.toDF("probe", "n", "price_sum", "key_sum",
-          "pruned_ok", "equal_ok")
-          .orderBy(col("probe"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+      // 10-bit/dim Morton z; top 5 bits partition into ≤32 z-range
+      // tiles — the partition value IS the layout
+      val zb = xyStore(s, dir).withColumn("zb",
+        shiftright(LayoutFns.zvalue(10, col("x"), col("y")), 15))
+      Versioned.init(s, path, "zb", zb, statsCols = Seq("x", "y"))
+      probeVerdicts(s, path, Seq(1L), xyProbes).drop("version")
+        .orderBy(col("probe"))
     }),
 
 
@@ -1220,48 +896,14 @@ private[graft] object GatesMaintenance {
     // oracle-replayed over the plain table. The hilbert-vs-zorder
     // probed-file ratio is MEASURED in AbDrift (layout quality is a
     // measurement, not an oracle fact — equal tilings can tie).
-    "k32_hilbert_multicol" -> ((s, dir) => {
+    "k32_hilbert_multicol" -> ((s, dir) =>
+        withScratch("k32_hilbert_multicol") { path =>
       import graft.functions.LayoutFns
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-hmulti-${System.nanoTime()}"
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"),
-            pmod(col("o_orderkey"), lit(1024L)).as("x"),
-            pmod(expr("o_orderkey div 7"), lit(1024L)).as("y"),
-            dec("o_totalprice").as("price"))
-        val hb = base.withColumn("hb",
-          shiftright(LayoutFns.hilbert(10, col("x"), col("y")), 15))
-        Versioned.init(s, path, "hb", hb, statsCols = Seq("x", "y"))
-        val full = Versioned.read(s, path)
-        val allFiles = full.inputFiles.length
-        val probes = Seq(
-          ("x_point", "x", 777L, 777L), ("x_range", "x", 128L, 159L),
-          ("y_point", "y", 333L, 333L), ("y_range", "y", 512L, 543L))
-        val rows = probes.map { case (label, probeCol, lo, hi) =>
-          val pruned =
-            if (lo == hi) Versioned.readPoint(s, path, probeCol, lo)
-            else Versioned.readRange(s, path, probeCol, lo, hi)
-          def summarize(df: org.apache.spark.sql.DataFrame) = {
-            val r = df.agg(count(lit(1)),
-              coalesce(sum(col("price")), lit(0).cast("decimal(18,2)"))
-                .cast("double"),
-              coalesce(sum(col("k")), lit(0L))).head()
-            (r.getLong(0), r.getDouble(1), r.getLong(2))
-          }
-          val got = summarize(pruned)
-          val want = summarize(full.filter(
-            col(probeCol) >= lo && col(probeCol) <= hi))
-          val prunedOk = pruned.inputFiles.length < allFiles
-          ((label, got._1, got._2, got._3,
-            if (prunedOk) 1L else 0L, if (got == want) 1L else 0L))
-        }
-        import s.implicits._
-        rows.toDF("probe", "n", "price_sum", "key_sum",
-          "pruned_ok", "equal_ok")
-          .orderBy(col("probe"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+      val hb = xyStore(s, dir).withColumn("hb",
+        shiftright(LayoutFns.hilbert(10, col("x"), col("y")), 15))
+      Versioned.init(s, path, "hb", hb, statsCols = Seq("x", "y"))
+      probeVerdicts(s, path, Seq(1L), xyProbes).drop("version")
+        .orderBy(col("probe"))
     }),
 
 
@@ -1276,63 +918,36 @@ private[graft] object GatesMaintenance {
     // (pruned_after=1) with identical answers, and the change feed
     // across the rewrite emits ZERO rows (cdf_rows — the same key-diff
     // argument as the compact gate: a layout change is a logical no-op).
-    "k33_recluster" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-recluster-${System.nanoTime()}"
-      try {
-        // y mixes fast ((k*31) % 1024) so every ingest bucket spans the
-        // full y range at EVERY scale — the unprunable-before pin must
-        // hold at sf0.001's sparse keys too (k div 7 tops out below the
-        // probe ranges there)
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"),
-            pmod(col("o_orderkey"), lit(1024L)).as("x"),
-            pmod(col("o_orderkey") * 31, lit(1024L)).as("y"),
-            dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base, statsCols = Seq("x", "y"))
-        val probes = Seq(
-          ("x_lo", "x", 128L, 159L), ("x_hi", "x", 300L, 363L),
-          ("y_lo", "y", 64L, 127L), ("y_hi", "y", 512L, 543L))
-        def probedFiles(c: String, lo: Long, hi: Long): Int =
-          Versioned.readRange(s, path, c, lo, hi).inputFiles.length
-        val filesBefore = Versioned.read(s, path).inputFiles.length
-        probes.foreach { case (label, c, lo, hi) =>
-          require(probedFiles(c, lo, hi) == filesBefore,
-            s"k33_recluster: $label must be UNPRUNABLE pre-recluster " +
-              "(full-span envelopes) or the contrast is fake")
-        }
-        val v2 = Versioned.recluster(s, path, "bucket", Seq("x", "y"),
-          bits = 10, tileBits = 5)
-        require(v2 == 2L, s"recluster must commit v2, got $v2")
-        val cdfRows = Versioned.changes(s, path, 1L, 2L, "k").count()
-        val full = Versioned.read(s, path)
-        val filesAfter = full.inputFiles.length
-        require(filesAfter > 1,
-          "k33_recluster: the rewrite must materialize multiple tiles")
-        val rows = probes.map { case (label, c, lo, hi) =>
-          val pruned = Versioned.readRange(s, path, c, lo, hi)
-          def summarize(df: org.apache.spark.sql.DataFrame) = {
-            val r = df.agg(count(lit(1)),
-              coalesce(sum(col("price")), lit(0).cast("decimal(18,2)"))
-                .cast("double"),
-              coalesce(sum(col("k")), lit(0L))).head()
-            (r.getLong(0), r.getDouble(1), r.getLong(2))
-          }
-          val got = summarize(pruned)
-          val want = summarize(full.filter(col(c) >= lo && col(c) <= hi))
-          ((label, got._1, got._2, got._3,
-            0L, // pinned by the pre-recluster require above
-            if (pruned.inputFiles.length < filesAfter) 1L else 0L,
-            if (got == want) 1L else 0L))
-        }
-        import s.implicits._
-        rows.toDF("probe", "n", "price_sum", "key_sum",
-          "pruned_before", "pruned_after", "equal_ok")
-          .withColumn("cdf_rows", lit(cdfRows))
-          .orderBy(col("probe"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k33_recluster" -> ((s, dir) => withScratch("k33_recluster") { path =>
+      // y mixes fast ((k*31) % 1024) so every ingest bucket spans the
+      // full y range at EVERY scale — the unprunable-before pin must
+      // hold at sf0.001's sparse keys too (k div 7 tops out below the
+      // probe ranges there)
+      val base = Tables.orders(s, dir)
+        .select(col("o_orderkey").as("k"),
+          pmod(col("o_orderkey"), lit(1024L)).as("x"),
+          pmod(col("o_orderkey") * 31, lit(1024L)).as("y"),
+          dec("o_totalprice").as("price"),
+          pmod(col("o_orderkey"), lit(8L)).as("bucket"))
+      Versioned.init(s, path, "bucket", base, statsCols = Seq("x", "y"))
+      val filesBefore = Versioned.read(s, path).inputFiles.length
+      reclusterProbes.foreach { case (label, c, lo, hi) =>
+        require(Versioned.readRange(s, path, c, lo, hi).inputFiles.length ==
+          filesBefore, s"k33_recluster: $label must be UNPRUNABLE " +
+            "pre-recluster (full-span envelopes) or the contrast is fake")
+      }
+      val v2 = Versioned.recluster(s, path, "bucket", Seq("x", "y"),
+        bits = 10, tileBits = 5)
+      require(v2 == 2L, s"recluster must commit v2, got $v2")
+      val cdfRows = Versioned.changes(s, path, 1L, 2L, "k").count()
+      require(Versioned.read(s, path).inputFiles.length > 1,
+        "k33_recluster: the rewrite must materialize multiple tiles")
+      probeVerdicts(s, path, Seq(v2), reclusterProbes)
+        .select(col("probe"), col("n"), col("price_sum"), col("key_sum"),
+          lit(0L).as("pruned_before"), // pinned by the require above
+          col("pruned_ok").as("pruned_after"), col("equal_ok"),
+          lit(cdfRows).as("cdf_rows"))
+        .orderBy(col("probe"))
     }),
 
 
@@ -1346,62 +961,42 @@ private[graft] object GatesMaintenance {
     // price; v3/v4: amount — the `cols` column pins the names
     // themselves); a post-rename merge speaks the new logical name while
     // its fresh files keep writing the physical one.
-    "k24_column_rename" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-vrename-${System.nanoTime()}"
-      def files(): Map[String, Long] =
-        leafFiles(s"$path/data")
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(f => f.getPath -> f.length()).toMap
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        Versioned.init(s, path, "bucket", base)
-        val b1 =
-          base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-            .withColumn("op", lit("D")))
-          .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1)
-        val f2 = files()
-        val v3 = Versioned.renameColumn(s, path, "price", "amount")
-        val zeroIo = files() == f2
-        // post-rename merge SPEAKS the new logical name
-        val renamed = base.withColumnRenamed("price", "amount")
-        val b2 =
-          renamed.filter(col("bucket") === 7 && col("k") % 5 === 1)
-            .withColumn("amount", (col("amount") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(renamed.filter(col("bucket") === 7 && col("k") % 5 === 2)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b2)
-        val f4 = files()
-        val immutable = f2.forall { case (p, n) => f4.get(p).contains(n) }
-        val snaps = Seq(1L, 2L, 3L, 4L).map { v =>
-          val r = Versioned.read(s, path, v)
-          val valCol = if (r.columns.contains("amount")) "amount" else "price"
-          r.groupBy(col("bucket"))
-            .agg(count(lit(1)).as("ct"),
-              sum(col(valCol)).cast("double").as("val_sum"),
-              sum(col("k")).as("key_sum"))
-            .withColumn("version", lit(v))
-            .withColumn("cols", lit(r.columns.mkString(",")))
-        }
-        snaps.reduce(_ unionByName _)
-          .withColumn("rename_zero_io_ok", lit(if (zeroIo) 1L else 0L))
-          .withColumn("immutable_ok", lit(if (immutable) 1L else 0L))
-          .select(col("version"), col("bucket"), col("ct"), col("val_sum"),
-            col("key_sum"), col("cols"), col("rename_zero_io_ok"),
-            col("immutable_ok"))
-          .orderBy(col("version"), col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k24_column_rename" -> ((s, dir) => withScratch("k24_column_rename") { path =>
+      val base = storeBase(s, dir)
+      Versioned.init(s, path, "bucket", base)
+      Versioned.merge(s, path, "bucket", "k", storeMerges(base).head)
+      val f2 = dataFiles(s"$path/data")
+      val v3 = Versioned.renameColumn(s, path, "price", "amount")
+      val zeroIo = dataFiles(s"$path/data") == f2
+      // post-rename merge SPEAKS the new logical name
+      val renamed = base.withColumnRenamed("price", "amount")
+      val b2 =
+        renamed.filter(col("bucket") === 7 && col("k") % 5 === 1)
+          .withColumn("amount", (col("amount") * 3).cast("decimal(18,2)"))
+          .withColumn("op", lit("U"))
+        .unionByName(renamed.filter(col("bucket") === 7 && col("k") % 5 === 2)
+          .withColumn("k", col("k") + 90000000L)
+          .withColumn("op", lit("I")))
+      Versioned.merge(s, path, "bucket", "k", b2)
+      val f4 = dataFiles(s"$path/data")
+      val immutable = f2.forall { case (p, n) => f4.get(p).contains(n) }
+      val snaps = Seq(1L, 2L, 3L, 4L).map { v =>
+        val r = Versioned.read(s, path, v)
+        val valCol = if (r.columns.contains("amount")) "amount" else "price"
+        r.groupBy(col("bucket"))
+          .agg(count(lit(1)).as("ct"),
+            sum(col(valCol)).cast("double").as("val_sum"),
+            sum(col("k")).as("key_sum"))
+          .withColumn("version", lit(v))
+          .withColumn("cols", lit(r.columns.mkString(",")))
+      }
+      snaps.reduce(_ unionByName _)
+        .withColumn("rename_zero_io_ok", flag(zeroIo))
+        .withColumn("immutable_ok", flag(immutable))
+        .select(col("version"), col("bucket"), col("ct"), col("val_sum"),
+          col("key_sum"), col("cols"), col("rename_zero_io_ok"),
+          col("immutable_ok"))
+        .orderBy(col("version"), col("bucket"))
     }),
 
 
@@ -1416,71 +1011,61 @@ private[graft] object GatesMaintenance {
     // coalesce — pinned by the b2 update arm), the v3 rewrite slice
     // mixes pre- and post-evolution files and reconciles, and no prior
     // data file is ever rewritten for any of this (immutable_ok).
-    "k19_schema_evolution" -> ((s, dir) => {
-      import graft.operators.Versioned
-      val path = s"$shmRoot/graft-schevo-${System.nanoTime()}"
-      def files(): Map[String, Long] =
-        leafFiles(s"$path/data")
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .map(f => f.getPath -> f.length()).toMap
-      try {
-        val base = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-        val withPrio = Tables.orders(s, dir)
-          .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-            pmod(col("o_orderkey"), lit(8L)).as("bucket"),
-            substring(col("o_orderpriority"), 1, 1).as("prio"))
-        Versioned.init(s, path, "bucket", base)
-        val f1 = files()
-        // batch 1 INTRODUCES prio: update bucket-3 %2=0 (price×2 + prio),
-        // delete bucket-6 %3=0, insert bucket-3 %2=1 shifted +70M
-        val b1 =
-          withPrio.filter(col("bucket") === 3 && col("k") % 2 === 0)
-            .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(withPrio.filter(col("bucket") === 6 && col("k") % 3 === 0)
-            .withColumn("op", lit("D")))
-          .unionByName(withPrio.filter(col("bucket") === 3 && col("k") % 2 === 1)
-            .withColumn("k", col("k") + 70000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b1, mergeSchema = true)
-        // batch 2's source LACKS prio: update bucket-3 %4=0 (price×5 —
-        // those keys HAD prio at v2; replace semantics must null it),
-        // insert bucket-0 %5=0 shifted +90M. Its rewrite slice mixes a
-        // post-evolution file (bucket 3, v2) and a pre-evolution carried
-        // file (bucket 0, v1).
-        val b2 =
-          base.filter(col("bucket") === 3 && col("k") % 4 === 0)
-            .withColumn("price", (col("price") * 5).cast("decimal(18,2)"))
-            .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("bucket") === 0 && col("k") % 5 === 0)
-            .withColumn("k", col("k") + 90000000L)
-            .withColumn("op", lit("I")))
-        Versioned.merge(s, path, "bucket", "k", b2, mergeSchema = true)
-        val f3 = files()
-        val immutable = f1.forall { case (p, n) => f3.get(p).contains(n) }
-        val v1Narrow = !Versioned.read(s, path, 1L).columns.contains("prio")
-        val snaps = Seq(1L, 2L, 3L).map { v =>
-          val r = Versioned.read(s, path, v)
-          val withP = if (r.columns.contains("prio")) r
-            else r.withColumn("prio", lit(null).cast("string"))
-          withP.groupBy(col("bucket"))
-            .agg(count(lit(1)).as("ct"),
-              sum(col("price")).cast("double").as("price_sum"),
-              sum(col("k")).as("key_sum"),
-              count(col("prio")).as("prio_ct"))
-            .withColumn("version", lit(v))
-        }
-        snaps.reduce(_ unionByName _)
-          .withColumn("v1_narrow_ok", lit(if (v1Narrow) 1L else 0L))
-          .withColumn("immutable_ok", lit(if (immutable) 1L else 0L))
-          .select(col("version"), col("bucket"), col("ct"),
-            col("price_sum"), col("key_sum"), col("prio_ct"),
-            col("v1_narrow_ok"), col("immutable_ok"))
-          .orderBy(col("version"), col("bucket"))
-          .localCheckpoint(true) // materialize before the store sweeps
-      } finally rmTree(path)
+    "k19_schema_evolution" -> ((s, dir) =>
+        withScratch("k19_schema_evolution") { path =>
+      val base = storeBase(s, dir)
+      val withPrio = Tables.orders(s, dir)
+        .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
+          pmod(col("o_orderkey"), lit(8L)).as("bucket"),
+          substring(col("o_orderpriority"), 1, 1).as("prio"))
+      Versioned.init(s, path, "bucket", base)
+      val f1 = dataFiles(s"$path/data")
+      // batch 1 INTRODUCES prio: update bucket-3 %2=0 (price×2 + prio),
+      // delete bucket-6 %3=0, insert bucket-3 %2=1 shifted +70M
+      val b1 =
+        withPrio.filter(col("bucket") === 3 && col("k") % 2 === 0)
+          .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
+          .withColumn("op", lit("U"))
+        .unionByName(withPrio.filter(col("bucket") === 6 && col("k") % 3 === 0)
+          .withColumn("op", lit("D")))
+        .unionByName(withPrio.filter(col("bucket") === 3 && col("k") % 2 === 1)
+          .withColumn("k", col("k") + 70000000L)
+          .withColumn("op", lit("I")))
+      Versioned.merge(s, path, "bucket", "k", b1, mergeSchema = true)
+      // batch 2's source LACKS prio: update bucket-3 %4=0 (price×5 —
+      // those keys HAD prio at v2; replace semantics must null it),
+      // insert bucket-0 %5=0 shifted +90M. Its rewrite slice mixes a
+      // post-evolution file (bucket 3, v2) and a pre-evolution carried
+      // file (bucket 0, v1).
+      val b2 =
+        base.filter(col("bucket") === 3 && col("k") % 4 === 0)
+          .withColumn("price", (col("price") * 5).cast("decimal(18,2)"))
+          .withColumn("op", lit("U"))
+        .unionByName(base.filter(col("bucket") === 0 && col("k") % 5 === 0)
+          .withColumn("k", col("k") + 90000000L)
+          .withColumn("op", lit("I")))
+      Versioned.merge(s, path, "bucket", "k", b2, mergeSchema = true)
+      val f3 = dataFiles(s"$path/data")
+      val immutable = f1.forall { case (p, n) => f3.get(p).contains(n) }
+      val v1Narrow = !Versioned.read(s, path, 1L).columns.contains("prio")
+      val snaps = Seq(1L, 2L, 3L).map { v =>
+        val r = Versioned.read(s, path, v)
+        val withP = if (r.columns.contains("prio")) r
+          else r.withColumn("prio", lit(null).cast("string"))
+        withP.groupBy(col("bucket"))
+          .agg(count(lit(1)).as("ct"),
+            sum(col("price")).cast("double").as("price_sum"),
+            sum(col("k")).as("key_sum"),
+            count(col("prio")).as("prio_ct"))
+          .withColumn("version", lit(v))
+      }
+      snaps.reduce(_ unionByName _)
+        .withColumn("v1_narrow_ok", flag(v1Narrow))
+        .withColumn("immutable_ok", flag(immutable))
+        .select(col("version"), col("bucket"), col("ct"),
+          col("price_sum"), col("key_sum"), col("prio_ct"),
+          col("v1_narrow_ok"), col("immutable_ok"))
+        .orderBy(col("version"), col("bucket"))
     }),
 
 
@@ -1495,33 +1080,31 @@ private[graft] object GatesMaintenance {
     // — zero false negatives, the Bloom guarantee), the planned file set
     // a STRICT subset of the files (pruned_ok), and Bloom-planned files
     // ⊆ envelope-planned files (subset_ok).
-    "k16_manifest_bloom" -> ((s, dir) => {
+    "k16_manifest_bloom" -> ((s, dir) =>
+        withScratch("k16_manifest_bloom") { path =>
       import graft.operators.Manifest
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"))
       val keys = Seq(3L, 97L, 211L, 499L, 811L)
-      val path = s"$shmRoot/graft-mbloom-${System.nanoTime()}"
-      try {
-        ev.repartition(16, col("user_id"))
-          .write.mode("overwrite").parquet(path)
-        val manifest = Manifest.buildWithBloom(s, path, "event_id",
-          expectedPerFile = 1L << 13, fpp = 0.01)
-          .localCheckpoint(true) // plan + probes read one stable snapshot
-        val total = manifest.count()
-        val rows = keys.map { k =>
-          val fb = Manifest.filesForPoint(manifest, k)
-          val fe = Manifest.filesForRange(manifest, k, k)
-          val r = Manifest.prunedRead(s, path, fb, "event_id", k, k)
-            .agg(coalesce(count(lit(1)), lit(0L)).as("n"),
-              coalesce(sum(floor(col("value") * 1e6).cast("long")), lit(0L))
-                .as("v_fp")).head()
-          (k, r.getLong(0), r.getLong(1),
-            fb.nonEmpty && fb.size < total, fb.toSet.subsetOf(fe.toSet))
-        }
-        import s.implicits._
-        rows.toDF("k", "n", "v_fp", "pruned_ok", "subset_ok")
-          .orderBy(col("k"))
-      } finally rmTree(path)
+      ev.repartition(16, col("user_id"))
+        .write.mode("overwrite").parquet(path)
+      val manifest = Manifest.buildWithBloom(s, path, "event_id",
+        expectedPerFile = 1L << 13, fpp = 0.01)
+        .localCheckpoint(true) // plan + probes read one stable snapshot
+      val total = manifest.count()
+      val rows = keys.map { k =>
+        val fb = Manifest.filesForPoint(manifest, k)
+        val fe = Manifest.filesForRange(manifest, k, k)
+        val r = Manifest.prunedRead(s, path, fb, "event_id", k, k)
+          .agg(coalesce(count(lit(1)), lit(0L)).as("n"),
+            coalesce(sum(floor(col("value") * 1e6).cast("long")), lit(0L))
+              .as("v_fp")).head()
+        (k, r.getLong(0), r.getLong(1),
+          fb.nonEmpty && fb.size < total, fb.toSet.subsetOf(fe.toSet))
+      }
+      import s.implicits._
+      rows.toDF("k", "n", "v_fp", "pruned_ok", "subset_ok")
+        .orderBy(col("k"))
     }),
 
 
@@ -1551,20 +1134,16 @@ private[graft] object GatesMaintenance {
     // emits shortest-round-trip reprs; the oracle runs on the ORIGINAL
     // parquet, so any quoting/header/type-inference drift in the CSV
     // path is a hash mismatch. Materialized so the tmpfs copy sweeps.
-    "source_csv_roundtrip" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-csv-${System.nanoTime()}"
-      try {
-        val base = Tables.customer(s, dir)
-        base.write.mode("overwrite").option("header", "true").csv(path)
-        s.read.schema(base.schema).option("header", "true").csv(path)
-          .groupBy(col("c_mktsegment"))
-          .agg(count(lit(1)).as("ct"),
-            sum(dec("c_acctbal")).cast("double").as("bal_sum"),
-            countDistinct(col("c_nationkey")).as("nations"))
-          .orderBy(col("c_mktsegment"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "source_csv_roundtrip" -> ((s, dir) =>
+        withScratch("source_csv_roundtrip") { path =>
+      val base = Tables.customer(s, dir)
+      base.write.mode("overwrite").option("header", "true").csv(path)
+      s.read.schema(base.schema).option("header", "true").csv(path)
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("ct"),
+          sum(dec("c_acctbal")).cast("double").as("bal_sum"),
+          countDistinct(col("c_nationkey")).as("nations"))
+        .orderBy(col("c_mktsegment"))
     }),
 
 
@@ -1574,22 +1153,18 @@ private[graft] object GatesMaintenance {
     // read, and the oracle (original parquet) compares exact epoch-µs
     // extrema per event type, so a truncated fraction or a timezone
     // shift fails the hash, not just a spot check.
-    "source_jsonl_roundtrip" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-jsonl-${System.nanoTime()}"
+    "source_jsonl_roundtrip" -> ((s, dir) =>
+        withScratch("source_jsonl_roundtrip") { path =>
       val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-      try {
-        val base = Tables.events(s, dir)
-        base.write.mode("overwrite").option("timestampFormat", fmt).json(path)
-        s.read.schema(base.schema).option("timestampFormat", fmt).json(path)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("ct"),
-            countDistinct(col("user_id")).as("users"),
-            min(unix_micros(col("ts"))).as("min_us"),
-            max(unix_micros(col("ts"))).as("max_us"))
-          .orderBy(col("event_type"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+      val base = Tables.events(s, dir)
+      base.write.mode("overwrite").option("timestampFormat", fmt).json(path)
+      s.read.schema(base.schema).option("timestampFormat", fmt).json(path)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("ct"),
+          countDistinct(col("user_id")).as("users"),
+          min(unix_micros(col("ts"))).as("min_us"),
+          max(unix_micros(col("ts"))).as("max_us"))
+        .orderBy(col("event_type"))
     }),
 
 
@@ -1601,27 +1176,23 @@ private[graft] object GatesMaintenance {
     // carries int64/double/string/timestamp — the full primitive
     // surface). SourceFormatsSpec pins predicate pushdown reaches the
     // ORC scan, same as parquet.
-    "source_orc_roundtrip" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-orc-${System.nanoTime()}"
-      try {
-        val base = Tables.orders(s, dir)
-        base.write.mode("overwrite").orc(path)
-        s.read.schema(base.schema).orc(path)
-          .groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("ct"),
-            sum(dec("o_totalprice")).cast("double").as("price_sum"),
-            // o_orderdate surfaces as TIMESTAMP_NTZ (pyarrow default);
-            // the session tz is pinned UTC, so the cast reinterprets the
-            // wall-clock as the same UTC instant (Tables.normalizeEventTs
-            // contract)
-            min(unix_micros(col("o_orderdate").cast("timestamp")))
-              .as("min_date_us"),
-            max(unix_micros(col("o_orderdate").cast("timestamp")))
-              .as("max_date_us"))
-          .orderBy(col("o_orderpriority"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "source_orc_roundtrip" -> ((s, dir) =>
+        withScratch("source_orc_roundtrip") { path =>
+      val base = Tables.orders(s, dir)
+      base.write.mode("overwrite").orc(path)
+      s.read.schema(base.schema).orc(path)
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("ct"),
+          sum(dec("o_totalprice")).cast("double").as("price_sum"),
+          // o_orderdate surfaces as TIMESTAMP_NTZ (pyarrow default);
+          // the session tz is pinned UTC, so the cast reinterprets the
+          // wall-clock as the same UTC instant (Tables.normalizeEventTs
+          // contract)
+          min(unix_micros(col("o_orderdate").cast("timestamp")))
+            .as("min_date_us"),
+          max(unix_micros(col("o_orderdate").cast("timestamp")))
+            .as("max_date_us"))
+        .orderBy(col("o_orderpriority"))
     }),
 
 
@@ -1631,21 +1202,17 @@ private[graft] object GatesMaintenance {
     // original-parquet oracle. Doubles survive because the writer emits
     // shortest-round-trip reprs (the CSV twin's contract); the string
     // column rides escaping.
-    "source_xml_roundtrip" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-xml-${System.nanoTime()}"
-      try {
-        val base = Tables.customer(s, dir)
-        base.write.mode("overwrite").option("rowTag", "customer").xml(path)
-        s.read.schema(base.schema).option("rowTag", "customer").xml(path)
-          .groupBy(col("c_mktsegment"))
-          .agg(count(lit(1)).as("ct"),
-            sum(dec("c_acctbal")).cast("double").as("bal_sum"),
-            countDistinct(col("c_nationkey")).as("nations"),
-            max(length(col("c_name"))).cast("long").as("max_name_len"))
-          .orderBy(col("c_mktsegment"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "source_xml_roundtrip" -> ((s, dir) =>
+        withScratch("source_xml_roundtrip") { path =>
+      val base = Tables.customer(s, dir)
+      base.write.mode("overwrite").option("rowTag", "customer").xml(path)
+      s.read.schema(base.schema).option("rowTag", "customer").xml(path)
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("ct"),
+          sum(dec("c_acctbal")).cast("double").as("bal_sum"),
+          countDistinct(col("c_nationkey")).as("nations"),
+          max(length(col("c_name"))).cast("long").as("max_name_len"))
+        .orderBy(col("c_mktsegment"))
     }),
 
 
@@ -1657,28 +1224,24 @@ private[graft] object GatesMaintenance {
     // generation 2 = odd WITH priority; the oracle replays the
     // generation rule, so a wrong null-fill or a dropped generation is a
     // hash mismatch.
-    "source_schema_evolution" -> ((s, dir) => {
-      val root = shmRoot
-      val base = s"$root/graft-evo-${System.nanoTime()}"
-      try {
-        val o = Tables.orders(s, dir)
-        o.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .write.mode("overwrite").parquet(s"$base/g1")
-        o.filter(col("o_orderkey") % 2 =!= 0)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            col("o_orderpriority"))
-          .write.mode("overwrite").parquet(s"$base/g2")
-        s.read.option("mergeSchema", "true")
-          .parquet(s"$base/g1", s"$base/g2")
-          .groupBy(coalesce(col("o_orderpriority"), lit("PRE_SCHEMA"))
-            .as("priority"))
-          .agg(count(lit(1)).as("ct"),
-            sum(dec("o_totalprice")).cast("double").as("price_sum"),
-            min(col("o_orderkey")).as("min_key"))
-          .orderBy(col("priority"))
-          .localCheckpoint(true)
-      } finally rmTree(base)
+    "source_schema_evolution" -> ((s, dir) =>
+        withScratch("source_schema_evolution") { base =>
+      val o = Tables.orders(s, dir)
+      o.filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .write.mode("overwrite").parquet(s"$base/g1")
+      o.filter(col("o_orderkey") % 2 =!= 0)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderpriority"))
+        .write.mode("overwrite").parquet(s"$base/g2")
+      s.read.option("mergeSchema", "true")
+        .parquet(s"$base/g1", s"$base/g2")
+        .groupBy(coalesce(col("o_orderpriority"), lit("PRE_SCHEMA"))
+          .as("priority"))
+        .agg(count(lit(1)).as("ct"),
+          sum(dec("o_totalprice")).cast("double").as("price_sum"),
+          min(col("o_orderkey")).as("min_key"))
+        .orderBy(col("priority"))
     }),
 
 
@@ -1690,27 +1253,23 @@ private[graft] object GatesMaintenance {
     // extra storage. Fixture writes two single-file generations with a
     // known key rule; the oracle replays the rule, so a wrong
     // row-to-file attribution is a hash mismatch.
-    "source_file_metadata" -> ((s, dir) => {
-      val root = shmRoot
-      val base = s"$root/graft-meta-${System.nanoTime()}"
-      try {
-        val o = Tables.orders(s, dir)
-        o.filter(col("o_orderkey") % 2 === 0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$base/even")
-        o.filter(col("o_orderkey") % 2 =!= 0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$base/odd")
-        s.read.parquet(s"$base/even", s"$base/odd")
-          .select(col("o_orderkey"), col("o_totalprice"),
-            regexp_extract(col("_metadata.file_path"),
-              "/(even|odd)/", 1).as("gen"))
-          .groupBy(col("gen"))
-          .agg(count(lit(1)).as("ct"),
-            sum(dec("o_totalprice")).cast("double").as("price_sum"),
-            min(col("o_orderkey")).as("min_key"),
-            max(col("o_orderkey")).as("max_key"))
-          .orderBy(col("gen"))
-          .localCheckpoint(true)
-      } finally rmTree(base)
+    "source_file_metadata" -> ((s, dir) =>
+        withScratch("source_file_metadata") { base =>
+      val o = Tables.orders(s, dir)
+      o.filter(col("o_orderkey") % 2 === 0).coalesce(1)
+        .write.mode("overwrite").parquet(s"$base/even")
+      o.filter(col("o_orderkey") % 2 =!= 0).coalesce(1)
+        .write.mode("overwrite").parquet(s"$base/odd")
+      s.read.parquet(s"$base/even", s"$base/odd")
+        .select(col("o_orderkey"), col("o_totalprice"),
+          regexp_extract(col("_metadata.file_path"),
+            "/(even|odd)/", 1).as("gen"))
+        .groupBy(col("gen"))
+        .agg(count(lit(1)).as("ct"),
+          sum(dec("o_totalprice")).cast("double").as("price_sum"),
+          min(col("o_orderkey")).as("min_key"),
+          max(col("o_orderkey")).as("max_key"))
+        .orderBy(col("gen"))
     }),
 
 
@@ -1860,29 +1419,9 @@ private[graft] object GatesMaintenance {
     // v3 = after batch 2 (same MERGE arms in SQL); immutable_ok pinned —
     // time travel answers from the SAME bytes forever
     "k17_time_travel" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
-        |v2 AS (
-        |  SELECT k, price, bucket FROM base
-        |    WHERE NOT (bucket = 5 AND k % 3 = 1)
-        |      AND NOT (bucket = 2 AND k % 3 = 0)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 80000000, price, bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 2),
-        |v3 AS (
-        |  SELECT k, price, bucket FROM v2
-        |    WHERE NOT (bucket = 2 AND k % 3 = 0)
-        |      AND NOT (bucket = 7 AND k % 5 = 1)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 3 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 7 AND k % 5 = 1
-        |  UNION ALL
-        |  SELECT k + 90000000, price, bucket FROM base
-        |    WHERE bucket = 7 AND k % 5 = 2),
+      s"""${storeBaseSql(8)},
+        |$storeV2Sql,
+        |${storeV3Sql("v3")},
         |snaps AS (
         |  SELECT 1 AS version, bucket, COUNT(*) AS ct,
         |    CAST(SUM(price) AS DOUBLE) AS price_sum,
@@ -1901,29 +1440,9 @@ private[graft] object GatesMaintenance {
     // k17's v2/v3 replay (v1 is vacuumed away); the reachable-file,
     // loud-failure, and pre/post verdicts are pinned TRUE
     "k18_vacuum" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
-        |v2 AS (
-        |  SELECT k, price, bucket FROM base
-        |    WHERE NOT (bucket = 5 AND k % 3 = 1)
-        |      AND NOT (bucket = 2 AND k % 3 = 0)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 80000000, price, bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 2),
-        |v3 AS (
-        |  SELECT k, price, bucket FROM v2
-        |    WHERE NOT (bucket = 2 AND k % 3 = 0)
-        |      AND NOT (bucket = 7 AND k % 5 = 1)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 3 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 7 AND k % 5 = 1
-        |  UNION ALL
-        |  SELECT k + 90000000, price, bucket FROM base
-        |    WHERE bucket = 7 AND k % 5 = 2),
+      s"""${storeBaseSql(8)},
+        |$storeV2Sql,
+        |${storeV3Sql("v3")},
         |snaps AS (
         |  SELECT 2 AS version, bucket, COUNT(*) AS ct,
         |    CAST(SUM(price) AS DOUBLE) AS price_sum,
@@ -1941,29 +1460,9 @@ private[graft] object GatesMaintenance {
     // both intervals replayed as snapshot full-outer diffs — identical
     // to the file-pruned plan because shared files are byte-identical
     "k21_change_feed" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
-        |v2 AS (
-        |  SELECT k, price, bucket FROM base
-        |    WHERE NOT (bucket = 5 AND k % 3 = 1)
-        |      AND NOT (bucket = 2 AND k % 3 = 0)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 80000000, price, bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 2),
-        |v3 AS (
-        |  SELECT k, price, bucket FROM v2
-        |    WHERE NOT (bucket = 2 AND k % 3 = 0)
-        |      AND NOT (bucket = 7 AND k % 5 = 1)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 3 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 7 AND k % 5 = 1
-        |  UNION ALL
-        |  SELECT k + 90000000, price, bucket FROM base
-        |    WHERE bucket = 7 AND k % 5 = 2),
+      s"""${storeBaseSql(8)},
+        |$storeV2Sql,
+        |${storeV3Sql("v3")},
         |d AS (
         |  SELECT 'v2_v3' AS iv,
         |    CASE WHEN o.k IS NULL THEN 'I' WHEN n.k IS NULL THEN 'D'
@@ -1989,9 +1488,7 @@ private[graft] object GatesMaintenance {
     // post-erasure latest state per bucket; the pre-vacuum visibility
     // and physical-scan verdicts are pinned true
     "k20_erasure_vacuum" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
+      s"""${storeBaseSql(8)},
         |v2 AS (SELECT * FROM base WHERE k % 97 <> 0)
         |SELECT bucket, COUNT(*) AS ct,
         |  CAST(SUM(price) AS DOUBLE) AS price_sum,
@@ -2007,18 +1504,7 @@ private[graft] object GatesMaintenance {
     // after the low-key-zone merge); the pruning verdicts are pinned —
     // the file-skipping mechanics are in-gate requires on inputFiles
     "k22_versioned_skipping" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders),
-        |mxv AS (SELECT MAX(k) AS mx FROM base),
-        |v2 AS (
-        |  SELECT k, price FROM base, mxv
-        |    WHERE NOT (k <= mx//8 AND k % 3 IN (0, 1))
-        |  UNION ALL
-        |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)) FROM base, mxv
-        |    WHERE k <= mx//8 AND k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 80000000, price FROM base, mxv
-        |    WHERE k <= mx//8 AND k % 3 = 2),
+      s"""$rangeStoreSql,
         |probes AS (
         |  SELECT 'hit' AS probe,
         |    (SELECT MIN(k) FROM base, mxv WHERE k >= mx//2) AS lo,
@@ -2049,18 +1535,7 @@ private[graft] object GatesMaintenance {
     // verdicts (pruned/union-of-per-key-plans) are in-gate requires on
     // inputFiles, replayed as literal 1s
     "k35_multi_point" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders),
-        |mxv AS (SELECT MAX(k) AS mx FROM base),
-        |v2 AS (
-        |  SELECT k, price FROM base, mxv
-        |    WHERE NOT (k <= mx//8 AND k % 3 IN (0, 1))
-        |  UNION ALL
-        |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)) FROM base, mxv
-        |    WHERE k <= mx//8 AND k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 80000000, price FROM base, mxv
-        |    WHERE k <= mx//8 AND k % 3 = 2),
+      s"""$rangeStoreSql,
         |batch AS (
         |  SELECT (SELECT MIN(k) FROM base, mxv WHERE k >= mx//2) AS bk
         |  UNION ALL SELECT
@@ -2092,71 +1567,24 @@ private[graft] object GatesMaintenance {
 
     // z-order × multi-col skipping: layout never changes answers —
     // truth is the plain table probed per dim; pruning is in-gate
-    "k26_zorder_multicol" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    o_orderkey % 1024 AS x, (o_orderkey // 7) % 1024 AS y,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders),
-        |probes AS (
-        |  SELECT 'x_point' AS probe, 'x' AS pcol, 777 AS lo, 777 AS hi
-        |  UNION ALL SELECT 'x_range', 'x', 128, 159
-        |  UNION ALL SELECT 'y_point', 'y', 333, 333
-        |  UNION ALL SELECT 'y_range', 'y', 512, 543)
-        |SELECT p.probe, CAST(COUNT(s.k) AS BIGINT) AS n,
-        |  CAST(COALESCE(SUM(s.price), 0) AS DOUBLE) AS price_sum,
-        |  CAST(COALESCE(SUM(s.k), 0) AS BIGINT) AS key_sum,
-        |  CAST(1 AS BIGINT) AS pruned_ok, CAST(1 AS BIGINT) AS equal_ok
-        |FROM probes p
-        |LEFT JOIN base s ON
-        |  ((p.pcol = 'x' AND s.x >= p.lo AND s.x <= p.hi)
-        |    OR (p.pcol = 'y' AND s.y >= p.lo AND s.y <= p.hi))
-        |GROUP BY p.probe ORDER BY p.probe""".stripMargin,
+    "k26_zorder_multicol" -> xyProbeSql("(o_orderkey // 7) % 1024", xyProbes,
+      "  CAST(1 AS BIGINT) AS pruned_ok, CAST(1 AS BIGINT) AS equal_ok"),
 
     // truth is the plain table filtered per range; pruning verdicts and
     // the layout-is-a-logical-no-op CDF count are in-gate pins replayed
     // as literals
-    "k33_recluster" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    o_orderkey % 1024 AS x, (o_orderkey * 31) % 1024 AS y,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders),
-        |probes AS (
-        |  SELECT 'x_lo' AS probe, 'x' AS pcol, 128 AS lo, 159 AS hi
-        |  UNION ALL SELECT 'x_hi', 'x', 300, 363
-        |  UNION ALL SELECT 'y_lo', 'y', 64, 127
-        |  UNION ALL SELECT 'y_hi', 'y', 512, 543)
-        |SELECT p.probe, CAST(COUNT(s.k) AS BIGINT) AS n,
-        |  CAST(COALESCE(SUM(s.price), 0) AS DOUBLE) AS price_sum,
-        |  CAST(COALESCE(SUM(s.k), 0) AS BIGINT) AS key_sum,
-        |  CAST(0 AS BIGINT) AS pruned_before,
+    "k33_recluster" -> xyProbeSql("(o_orderkey * 31) % 1024",
+      reclusterProbes,
+      """  CAST(0 AS BIGINT) AS pruned_before,
         |  CAST(1 AS BIGINT) AS pruned_after,
         |  CAST(1 AS BIGINT) AS equal_ok,
-        |  CAST(0 AS BIGINT) AS cdf_rows
-        |FROM probes p
-        |LEFT JOIN base s ON
-        |  ((p.pcol = 'x' AND s.x >= p.lo AND s.x <= p.hi)
-        |    OR (p.pcol = 'y' AND s.y >= p.lo AND s.y <= p.hi))
-        |GROUP BY p.probe ORDER BY p.probe""".stripMargin,
+        |  CAST(0 AS BIGINT) AS cdf_rows""".stripMargin),
 
     // same probes, same truth: the clustering key (hilbert vs morton)
     // must never change ANSWERS — only which files a probe opens, which
     // the in-gate pruned_ok pins and AbDrift measures
-    "k32_hilbert_multicol" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    o_orderkey % 1024 AS x, (o_orderkey // 7) % 1024 AS y,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders),
-        |probes AS (
-        |  SELECT 'x_point' AS probe, 'x' AS pcol, 777 AS lo, 777 AS hi
-        |  UNION ALL SELECT 'x_range', 'x', 128, 159
-        |  UNION ALL SELECT 'y_point', 'y', 333, 333
-        |  UNION ALL SELECT 'y_range', 'y', 512, 543)
-        |SELECT p.probe, CAST(COUNT(s.k) AS BIGINT) AS n,
-        |  CAST(COALESCE(SUM(s.price), 0) AS DOUBLE) AS price_sum,
-        |  CAST(COALESCE(SUM(s.k), 0) AS BIGINT) AS key_sum,
-        |  CAST(1 AS BIGINT) AS pruned_ok, CAST(1 AS BIGINT) AS equal_ok
-        |FROM probes p
-        |LEFT JOIN base s ON
-        |  ((p.pcol = 'x' AND s.x >= p.lo AND s.x <= p.hi)
-        |    OR (p.pcol = 'y' AND s.y >= p.lo AND s.y <= p.hi))
-        |GROUP BY p.probe ORDER BY p.probe""".stripMargin,
+    "k32_hilbert_multicol" -> xyProbeSql("(o_orderkey // 7) % 1024", xyProbes,
+      "  CAST(1 AS BIGINT) AS pruned_ok, CAST(1 AS BIGINT) AS equal_ok"),
 
     // multi-column skipping never changes ANSWERS (envelopes/sketches
     // over-approximate, residual filters are exact): truth is the v2
@@ -2211,9 +1639,7 @@ private[graft] object GatesMaintenance {
     // reverted); revert_rows = the inverse of the bad write: its updates
     // revert (U), its deletes reappear (I), its inserts disappear (D)
     "k30_restore" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
+      s"""${storeBaseSql(8)},
         |v4 AS (
         |  SELECT k, price, bucket FROM base
         |    WHERE NOT (bucket = 7 AND k % 5 = 1)
@@ -2234,9 +1660,7 @@ private[graft] object GatesMaintenance {
     // the final snapshot replayed: base minus the k%97 tombstones, with
     // the bucket-3 update applied; d_rows = the tombstoned key count
     "k29_deletion_vectors" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
+      s"""${storeBaseSql(8)},
         |v2 AS (SELECT k, price, bucket FROM base WHERE k % 97 <> 0),
         |v3 AS (
         |  SELECT k, price, bucket FROM v2
@@ -2256,9 +1680,7 @@ private[graft] object GatesMaintenance {
     // the structural facts (selective rewrite, verbatim carry, no-op
     // re-sweep) are pinned in-gate as literal flags
     "k34_dv_materialize" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
+      s"""${storeBaseSql(8)},
         |live AS (SELECT k, price, bucket FROM base
         |  WHERE NOT (bucket = 3 AND k % 3 = 0)
         |    AND NOT (bucket <> 3 AND k % 499 = 0))
@@ -2275,9 +1697,7 @@ private[graft] object GatesMaintenance {
     // both lineages replayed: the fork point is src's v2; the clone's
     // divergence never feeds back
     "k28_shallow_clone" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
+      s"""${storeBaseSql(8)},
         |srcv AS (
         |  SELECT k, price, bucket FROM base
         |    WHERE NOT (bucket = 3 AND k % 2 = 0)
@@ -2308,19 +1728,8 @@ private[graft] object GatesMaintenance {
         |FROM u ORDER BY side, bucket""".stripMargin,
 
     "k23_versioned_compact" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 64 AS bucket FROM orders),
-        |v2 AS (
-        |  SELECT k, price, bucket FROM base
-        |    WHERE NOT (bucket = 2 AND k % 3 = 0)
-        |      AND NOT (bucket = 5 AND k % 3 = 1)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 80000000, price, bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 2)
+      s"""${storeBaseSql(64)},
+        |$storeV2Sql
         |SELECT bucket, COUNT(*) AS ct,
         |  CAST(SUM(price) AS DOUBLE) AS price_sum,
         |  CAST(SUM(k) AS BIGINT) AS key_sum,
@@ -2337,19 +1746,8 @@ private[graft] object GatesMaintenance {
     // name (a rename moves no data — the cols strings pin the names
     // themselves, the zero-IO verdict pins the bytes)
     "k24_column_rename" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
-        |v2 AS (
-        |  SELECT k, price, bucket FROM base
-        |    WHERE NOT (bucket = 5 AND k % 3 = 1)
-        |      AND NOT (bucket = 2 AND k % 3 = 0)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 80000000, price, bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 2),
+      s"""${storeBaseSql(8)},
+        |$storeV2Sql,
         |v4 AS (
         |  SELECT k, price, bucket FROM v2
         |    WHERE NOT (bucket = 7 AND k % 5 = 1)

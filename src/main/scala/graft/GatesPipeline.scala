@@ -16,7 +16,74 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object GatesPipeline {
   import GateSupport._
-  import TmpDirs._
+
+  /** `ann` (query_id, neighbor_id, ...) with both embeddings and their
+    * exact cosine `cos_exact`. */
+  private def withExactCos(emb: DataFrame, ann: DataFrame): DataFrame =
+    ann
+      .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe")), "query_id")
+      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
+      .withColumn("cos_exact",
+        graft.functions.VectorFns.cosine(col("qe"), col("ne")))
+
+  /** The ANN gates' one-sided invariant oracle (their neighbor SETS are
+    * data-learned, so DuckDB cannot re-derive them): per query of
+    * `queries`, the result count, distinct neighbors, distinct ranks in
+    * 1..k, results whose cosine equals the exact pairwise cosine and are
+    * not the query itself, and ranks ordered by (cos desc, neighbor_id
+    * asc). With `recall` = (truth, minHits), a corpus-level floor: at
+    * least minHits of truth's (query, neighbor) pairs come back. */
+  private def topkVerdicts(emb: DataFrame, queries: DataFrame,
+      ann: DataFrame, k: Int, recall: Option[(DataFrame, Double)])
+      : DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id").orderBy("rank")
+    val flagged = withExactCos(emb, ann)
+      .withColumn("prev_cos", lag(col("cos"), 1).over(w))
+      .withColumn("prev_nbr", lag(col("neighbor_id"), 1).over(w))
+      .select(col("query_id"), col("neighbor_id"), col("rank"),
+        (col("cos") === col("cos_exact") &&
+          col("neighbor_id") =!= col("query_id")).as("valid"),
+        (col("prev_cos").isNull || col("prev_cos") > col("cos") ||
+          (col("prev_cos") === col("cos") &&
+            col("prev_nbr") < col("neighbor_id"))).as("ordered"))
+    val counts = Seq("n_results", "n_distinct", "n_ranks", "n_valid",
+      "n_ordered")
+    val perQuery = queries.select(col("vec_id").as("query_id"))
+      .join(flagged.groupBy("query_id").agg(
+        count(lit(1)).as("n_results"),
+        count_distinct(col("neighbor_id")).as("n_distinct"),
+        count_distinct(when(col("rank").between(1, k), col("rank"))).as("n_ranks"),
+        sum(when(col("valid"), 1L).otherwise(0L)).as("n_valid"),
+        sum(when(col("rank") > 1 && col("ordered"), 1L).otherwise(0L)).as("n_ordered")),
+        Seq("query_id"), "left")
+      .select(col("query_id") +:
+        counts.map(c => coalesce(col(c), lit(0L)).as(c)): _*)
+    recall.fold(perQuery) { case (truth, minHits) =>
+      perQuery.crossJoin(truth.select(col("query_id"), col("neighbor_id"))
+        .join(ann.select(col("query_id"), col("neighbor_id")),
+          Seq("query_id", "neighbor_id"))
+        .agg((count(lit(1)) >= lit(minHits)).cast("long")
+          .as("recall_floor_ok")))
+    }.orderBy(col("query_id"))
+  }
+
+  /** The index-maintenance gates' verdict: per query, the result count,
+    * the ranks whose neighbor and cosine match `oneShot`'s, and the
+    * cosines equal to the exact pairwise recompute. */
+  private def parityVerdicts(emb: DataFrame, got: DataFrame,
+      oneShot: DataFrame): DataFrame =
+    withExactCos(emb, got)
+      .join(oneShot.select(col("query_id"), col("rank"),
+        col("neighbor_id").as("nbr1"), col("cos").as("cos1")),
+        Seq("query_id", "rank"))
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("n_results"),
+        sum(when(col("neighbor_id") === col("nbr1") &&
+          col("cos") === col("cos1"), 1L).otherwise(0L)).as("n_match"),
+        sum(when(col("cos") === col("cos_exact"), 1L).otherwise(0L))
+          .as("n_valid"))
+      .orderBy(col("query_id"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -882,21 +949,18 @@ private[graft] object GatesPipeline {
     // never re-shingles history text) and read back before the probe.
     // Same fixture and oracle as dedup_incremental: the disk round-trip
     // must not move the candidate set or any jaccard.
-    "dedup_index_atrest" -> ((s, dir) => {
+    "dedup_index_atrest" -> ((s, dir) =>
+        withScratch("dedup_index_atrest") { path =>
       val docs = Tables.documents(s, dir)
       val incoming = docs.filter(pmod(col("doc_id"), lit(5L)) === 0L)
       val history = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
-      val path = s"$shmRoot/graft-bandidx-${System.nanoTime()}"
-      try {
-        Dedup.minhashBandIndex(history)
-          .write.partitionBy("band").mode("overwrite").parquet(path)
-        val idx = s.read.parquet(path)
-          .select(col("doc_id"),
-            col("band").cast("int").as("band"), col("key"))
-        Dedup.incrementalNearDups(incoming, history, idx)
-          .orderBy(col("doc_a"), col("doc_b"))
-          .localCheckpoint(true) // materialize before the index sweeps
-      } finally rmTree(path)
+      Dedup.minhashBandIndex(history)
+        .write.partitionBy("band").mode("overwrite").parquet(path)
+      val idx = s.read.parquet(path)
+        .select(col("doc_id"),
+          col("band").cast("int").as("band"), col("key"))
+      Dedup.incrementalNearDups(incoming, history, idx)
+        .orderBy(col("doc_a"), col("doc_b"))
     }),
 
 
@@ -1005,44 +1069,8 @@ private[graft] object GatesPipeline {
       val codes = Similarity.pqEncode(emb, cb)
       val pq = Similarity.pqTopKReranked(emb, codes, queries, k = 5, cb,
         shortlist = 50)
-      val exact = pq
-        .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe")), "query_id")
-        .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
-        .withColumn("cos_exact",
-          graft.functions.VectorFns.cosine(col("qe"), col("ne")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy("rank")
-      val flagged = exact
-        .withColumn("prev_cos", lag(col("cos"), 1).over(w))
-        .withColumn("prev_nbr", lag(col("neighbor_id"), 1).over(w))
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          (col("cos") === col("cos_exact") &&
-            col("neighbor_id") =!= col("query_id")).as("valid"),
-          (col("prev_cos").isNull || col("prev_cos") > col("cos") ||
-            (col("prev_cos") === col("cos") &&
-              col("prev_nbr") < col("neighbor_id"))).as("ordered"))
-      val perQuery = queries.select(col("vec_id").as("query_id"))
-        .join(flagged.groupBy("query_id").agg(
-          count(lit(1)).as("n_results"),
-          count_distinct(col("neighbor_id")).as("n_distinct"),
-          count_distinct(when(col("rank").between(1, 5), col("rank"))).as("n_ranks"),
-          sum(when(col("valid"), 1L).otherwise(0L)).as("n_valid"),
-          sum(when(col("rank") > 1 && col("ordered"), 1L).otherwise(0L)).as("n_ordered")),
-          Seq("query_id"), "left")
-      val overlap = Similarity.bruteForceTopK(emb, queries, k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(pq.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .agg((count(lit(1)) >= lit(0.3 * 25)).cast("long").as("recall_floor_ok"))
-      perQuery.crossJoin(overlap)
-        .select(col("query_id"),
-          coalesce(col("n_results"), lit(0L)).as("n_results"),
-          coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-          coalesce(col("n_ranks"), lit(0L)).as("n_ranks"),
-          coalesce(col("n_valid"), lit(0L)).as("n_valid"),
-          coalesce(col("n_ordered"), lit(0L)).as("n_ordered"),
-          col("recall_floor_ok"))
-        .orderBy(col("query_id"))
+      topkVerdicts(emb, queries, pq, 5,
+        Some((Similarity.bruteForceTopK(emb, queries, k = 5), 0.3 * 25)))
     }),
 
 
@@ -1059,58 +1087,18 @@ private[graft] object GatesPipeline {
     // (re-rank fidelity), plus a corpus-level recall floor vs exact
     // brute force so a broken probe path or scrambled codebook
     // hash-fails rather than degrading silently.
-    "sim_topk_ivfpq" -> ((s, dir) => {
+    "sim_topk_ivfpq" -> ((s, dir) => withScratch("sim_topk_ivfpq") { path =>
       val emb = Tables.embeddings(s, dir)
       val queries = emb.filter(col("vec_id") < 5)
       val centroids = Similarity.trainCentroids(emb, k = 16, iters = 2,
         sampleRate = 0.5)
       val cb = Similarity.trainPqCodebooks(emb, m = 8, k = 64, iters = 2,
         sampleRate = 0.5)
-      val path = s"$shmRoot/graft-ivfpq-${System.nanoTime()}"
-      try {
-        Similarity.buildIvfPqIndex(emb, centroids, cb, path)
-        val ivfpq = Similarity.ivfPqTopKIndexed(s, path, emb, queries,
-          k = 5, centroids, cb, nProbe = 4, shortlist = 50)
-        val exact = ivfpq
-          .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe")), "query_id")
-          .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
-          .withColumn("cos_exact",
-            graft.functions.VectorFns.cosine(col("qe"), col("ne")))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id").orderBy("rank")
-        val flagged = exact
-          .withColumn("prev_cos", lag(col("cos"), 1).over(w))
-          .withColumn("prev_nbr", lag(col("neighbor_id"), 1).over(w))
-          .select(col("query_id"), col("neighbor_id"), col("rank"),
-            (col("cos") === col("cos_exact") &&
-              col("neighbor_id") =!= col("query_id")).as("valid"),
-            (col("prev_cos").isNull || col("prev_cos") > col("cos") ||
-              (col("prev_cos") === col("cos") &&
-                col("prev_nbr") < col("neighbor_id"))).as("ordered"))
-        val perQuery = queries.select(col("vec_id").as("query_id"))
-          .join(flagged.groupBy("query_id").agg(
-            count(lit(1)).as("n_results"),
-            count_distinct(col("neighbor_id")).as("n_distinct"),
-            count_distinct(when(col("rank").between(1, 5), col("rank"))).as("n_ranks"),
-            sum(when(col("valid"), 1L).otherwise(0L)).as("n_valid"),
-            sum(when(col("rank") > 1 && col("ordered"), 1L).otherwise(0L)).as("n_ordered")),
-            Seq("query_id"), "left")
-        val overlap = Similarity.bruteForceTopK(emb, queries, k = 5)
-          .select(col("query_id"), col("neighbor_id"))
-          .join(ivfpq.select(col("query_id"), col("neighbor_id")),
-            Seq("query_id", "neighbor_id"))
-          .agg((count(lit(1)) >= lit(0.2 * 25)).cast("long").as("recall_floor_ok"))
-        perQuery.crossJoin(overlap)
-          .select(col("query_id"),
-            coalesce(col("n_results"), lit(0L)).as("n_results"),
-            coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-            coalesce(col("n_ranks"), lit(0L)).as("n_ranks"),
-            coalesce(col("n_valid"), lit(0L)).as("n_valid"),
-            coalesce(col("n_ordered"), lit(0L)).as("n_ordered"),
-            col("recall_floor_ok"))
-          .orderBy(col("query_id"))
-          .localCheckpoint(true) // materialize before the index sweeps
-      } finally rmTree(path)
+      Similarity.buildIvfPqIndex(emb, centroids, cb, path)
+      val ivfpq = Similarity.ivfPqTopKIndexed(s, path, emb, queries,
+        k = 5, centroids, cb, nProbe = 4, shortlist = 50)
+      topkVerdicts(emb, queries, ivfpq, 5,
+        Some((Similarity.bruteForceTopK(emb, queries, k = 5), 0.2 * 25)))
     }),
 
 
@@ -1178,8 +1166,7 @@ private[graft] object GatesPipeline {
       val cb = Await.result(cbF, Duration.Inf)
       val cb16 = Await.result(cb16F, Duration.Inf)
       val (knnTruth, knnDenom) = Await.result(knnTruthF, Duration.Inf)
-      val path = s"$shmRoot/graft-recall-${System.nanoTime()}"
-      try {
+      withScratch("sim_recall_report") { path =>
         val indexF = Future(Similarity.buildIvfPqIndex(emb, centroids, cb,
           path))
         val codesF = Future(Similarity.pqEncode(emb, cb))
@@ -1257,8 +1244,7 @@ private[graft] object GatesPipeline {
         (rows :+ (("knn", nQ, 5L, 50L, 1L)))
           .toDF("method", "n_queries", "k", "floor_pct", "floor_ok")
           .orderBy(col("method"))
-          .localCheckpoint(true) // materialize before the index sweeps
-      } finally rmTree(path)
+      }
     }),
 
 
@@ -1271,42 +1257,21 @@ private[graft] object GatesPipeline {
     // search with the retrained centroids (n_match: neighbor AND cosine
     // per rank), every cosine equal to the exact pairwise recompute
     // (n_valid).
-    "sim_ivf_rebuild" -> ((s, dir) => {
+    "sim_ivf_rebuild" -> ((s, dir) => withScratch("sim_ivf_rebuild") { root =>
       val emb = Tables.embeddings(s, dir)
       val base = emb.filter(pmod(col("vec_id"), lit(3L)) =!= 0)
       val delta = emb.filter(pmod(col("vec_id"), lit(3L)) === 0)
       val queries = emb.filter(col("vec_id") < 5)
       val c1 = Similarity.trainCentroids(base, k = 16, iters = 2,
         sampleRate = 0.5)
-      val p1 = s"$shmRoot/graft-ivf-rb1-${System.nanoTime()}"
-      val p2 = s"$shmRoot/graft-ivf-rb2-${System.nanoTime()}"
-      try {
-        Similarity.buildIvfIndex(base, c1, p1)
-        Similarity.appendIvfIndex(delta, c1, p1)
-        val c2 = Similarity.rebuildIvfIndex(s, p1, p2, k = 16, iters = 2,
-          sampleRate = 0.5)
-        val rebuilt = Similarity.ivfTopKIndexed(s, p2, queries, k = 5,
-          c2, nProbe = 4)
-        val one = Similarity.ivfTopK(emb, queries, k = 5, c2, nProbe = 4)
-          .select(col("query_id"), col("rank"),
-            col("neighbor_id").as("nbr1"), col("cos").as("cos1"))
-        rebuilt
-          .join(emb.select(col("vec_id").as("query_id"),
-            col("embedding").as("qe")), "query_id")
-          .join(emb.select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("ne")), "neighbor_id")
-          .withColumn("cos_exact",
-            graft.functions.VectorFns.cosine(col("qe"), col("ne")))
-          .join(one, Seq("query_id", "rank"))
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_results"),
-            sum(when(col("neighbor_id") === col("nbr1") &&
-              col("cos") === col("cos1"), 1L).otherwise(0L)).as("n_match"),
-            sum(when(col("cos") === col("cos_exact"), 1L).otherwise(0L))
-              .as("n_valid"))
-          .orderBy(col("query_id"))
-          .localCheckpoint(true) // materialize before the index sweeps
-      } finally { rmTree(p1); rmTree(p2) }
+      val (p1, p2) = (s"$root/v1", s"$root/v2")
+      Similarity.buildIvfIndex(base, c1, p1)
+      Similarity.appendIvfIndex(delta, c1, p1)
+      val c2 = Similarity.rebuildIvfIndex(s, p1, p2, k = 16, iters = 2,
+        sampleRate = 0.5)
+      parityVerdicts(emb,
+        Similarity.ivfTopKIndexed(s, p2, queries, k = 5, c2, nProbe = 4),
+        Similarity.ivfTopK(emb, queries, k = 5, c2, nProbe = 4))
     }),
 
 
@@ -1317,40 +1282,19 @@ private[graft] object GatesPipeline {
     // build over base∪delta returns with the same centroids (n_match),
     // with every emitted cosine equal to the exact pairwise recompute
     // (n_valid) — the sim_topk_ivf anchoring pattern.
-    "sim_ivf_append" -> ((s, dir) => {
+    "sim_ivf_append" -> ((s, dir) => withScratch("sim_ivf_append") { path =>
       val emb = Tables.embeddings(s, dir)
       val base = emb.filter(pmod(col("vec_id"), lit(3L)) =!= 0)
       val delta = emb.filter(pmod(col("vec_id"), lit(3L)) === 0)
       val queries = emb.filter(col("vec_id") < 5)
       val centroids = Similarity.trainCentroids(base, k = 16, iters = 2,
         sampleRate = 0.5)
-      val path = s"$shmRoot/graft-ivf-append-${System.nanoTime()}"
-      try {
-        Similarity.buildIvfIndex(base, centroids, path)
-        Similarity.appendIvfIndex(delta, centroids, path)
-        val inc = Similarity.ivfTopKIndexed(s, path, queries, k = 5,
-          centroids, nProbe = 4)
-        val one = Similarity.ivfTopK(emb, queries, k = 5, centroids,
-          nProbe = 4)
-          .select(col("query_id"), col("rank"),
-            col("neighbor_id").as("nbr1"), col("cos").as("cos1"))
-        inc
-          .join(emb.select(col("vec_id").as("query_id"),
-            col("embedding").as("qe")), "query_id")
-          .join(emb.select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("ne")), "neighbor_id")
-          .withColumn("cos_exact",
-            graft.functions.VectorFns.cosine(col("qe"), col("ne")))
-          .join(one, Seq("query_id", "rank"))
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_results"),
-            sum(when(col("neighbor_id") === col("nbr1") &&
-              col("cos") === col("cos1"), 1L).otherwise(0L)).as("n_match"),
-            sum(when(col("cos") === col("cos_exact"), 1L).otherwise(0L))
-              .as("n_valid"))
-          .orderBy(col("query_id"))
-          .localCheckpoint(true) // materialize before the index sweeps
-      } finally rmTree(path)
+      Similarity.buildIvfIndex(base, centroids, path)
+      Similarity.appendIvfIndex(delta, centroids, path)
+      parityVerdicts(emb,
+        Similarity.ivfTopKIndexed(s, path, queries, k = 5,
+          centroids, nProbe = 4),
+        Similarity.ivfTopK(emb, queries, k = 5, centroids, nProbe = 4))
     }),
 
 
@@ -1364,7 +1308,7 @@ private[graft] object GatesPipeline {
     // every emitted cosine equal to the exact pairwise recompute
     // (n_valid), and the base index files BYTE-IDENTICAL after the
     // append (path+length snapshot, base_files_ok).
-    "sim_ivfpq_append" -> ((s, dir) => {
+    "sim_ivfpq_append" -> ((s, dir) => withScratch("sim_ivfpq_append") { path =>
       val emb = Tables.embeddings(s, dir)
       val base = emb.filter(pmod(col("vec_id"), lit(3L)) =!= 0)
       val delta = emb.filter(pmod(col("vec_id"), lit(3L)) === 0)
@@ -1373,42 +1317,18 @@ private[graft] object GatesPipeline {
         sampleRate = 0.5)
       val cb = Similarity.trainPqCodebooks(base, m = 8, k = 64, iters = 2,
         sampleRate = 0.5)
-      val path = s"$shmRoot/graft-ivfpq-append-${System.nanoTime()}"
-      def files(): Map[String, Long] =
-        leafFiles(path)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(f => f.getPath -> f.length()).toMap
-      try {
-        Similarity.buildIvfPqIndex(base, centroids, cb, path)
-        val baseFiles = files()
-        Similarity.appendIvfPqIndex(delta, centroids, cb, path)
-        val after = files()
-        val baseOk = baseFiles.forall { case (p, n) =>
-          after.get(p).contains(n) } && after.size > baseFiles.size
-        val inc = Similarity.ivfPqTopKIndexed(s, path, emb, queries,
-          k = 5, centroids, cb, nProbe = 4, shortlist = 50)
-        val one = Similarity.ivfPqTopK(emb, queries, k = 5, centroids,
-          cb, nProbe = 4, shortlist = 50)
-          .select(col("query_id"), col("rank"),
-            col("neighbor_id").as("nbr1"), col("cos").as("cos1"))
-        inc
-          .join(emb.select(col("vec_id").as("query_id"),
-            col("embedding").as("qe")), "query_id")
-          .join(emb.select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("ne")), "neighbor_id")
-          .withColumn("cos_exact",
-            graft.functions.VectorFns.cosine(col("qe"), col("ne")))
-          .join(one, Seq("query_id", "rank"))
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_results"),
-            sum(when(col("neighbor_id") === col("nbr1") &&
-              col("cos") === col("cos1"), 1L).otherwise(0L)).as("n_match"),
-            sum(when(col("cos") === col("cos_exact"), 1L).otherwise(0L))
-              .as("n_valid"))
-          .withColumn("base_files_ok", lit(if (baseOk) 1L else 0L))
-          .orderBy(col("query_id"))
-          .localCheckpoint(true) // materialize before the index sweeps
-      } finally rmTree(path)
+      Similarity.buildIvfPqIndex(base, centroids, cb, path)
+      val baseFiles = dataFiles(path)
+      Similarity.appendIvfPqIndex(delta, centroids, cb, path)
+      val after = dataFiles(path)
+      val baseOk = baseFiles.forall { case (p, n) =>
+        after.get(p).contains(n) } && after.size > baseFiles.size
+      parityVerdicts(emb,
+        Similarity.ivfPqTopKIndexed(s, path, emb, queries,
+          k = 5, centroids, cb, nProbe = 4, shortlist = 50),
+        Similarity.ivfPqTopK(emb, queries, k = 5, centroids,
+          cb, nProbe = 4, shortlist = 50))
+        .withColumn("base_files_ok", flag(baseOk))
     }),
 
 
@@ -1420,38 +1340,9 @@ private[graft] object GatesPipeline {
       // containment/validity oracle below is identical either way
       val centroids = Similarity.trainCentroids(emb, k = 16, iters = 2,
         sampleRate = 0.5)
-      val ivf = Similarity.ivfTopK(emb, queries, k = 5, centroids, nProbe = 4)
-      val exact = ivf
-        .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe")), "query_id")
-        .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
-        .withColumn("cos_exact",
-          graft.functions.VectorFns.cosine(col("qe"), col("ne")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy("rank")
-      val flagged = exact
-        .withColumn("prev_cos", lag(col("cos"), 1).over(w))
-        .withColumn("prev_nbr", lag(col("neighbor_id"), 1).over(w))
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          (col("cos") === col("cos_exact") &&
-            col("neighbor_id") =!= col("query_id")).as("valid"),
-          (col("prev_cos").isNull || col("prev_cos") > col("cos") ||
-            (col("prev_cos") === col("cos") &&
-              col("prev_nbr") < col("neighbor_id"))).as("ordered"))
-      queries.select(col("vec_id").as("query_id"))
-        .join(flagged.groupBy("query_id").agg(
-          count(lit(1)).as("n_results"),
-          count_distinct(col("neighbor_id")).as("n_distinct"),
-          count_distinct(when(col("rank").between(1, 5), col("rank"))).as("n_ranks"),
-          sum(when(col("valid"), 1L).otherwise(0L)).as("n_valid"),
-          sum(when(col("rank") > 1 && col("ordered"), 1L).otherwise(0L)).as("n_ordered")),
-          Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_results"), lit(0L)).as("n_results"),
-          coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-          coalesce(col("n_ranks"), lit(0L)).as("n_ranks"),
-          coalesce(col("n_valid"), lit(0L)).as("n_valid"),
-          coalesce(col("n_ordered"), lit(0L)).as("n_ordered"))
-        .orderBy(col("query_id"))
+      topkVerdicts(emb, queries,
+        Similarity.ivfTopK(emb, queries, k = 5, centroids, nProbe = 4), 5,
+        None)
     }),
 
 
@@ -1484,45 +1375,10 @@ private[graft] object GatesPipeline {
       val centroids = Similarity.trainCentroids(right, k = 16, iters = 2,
         sampleRate = 0.5)
       val knn = Similarity.knnJoinIvf(left, right, k = 3, centroids, nProbe = 4)
-      val exact = knn
-        .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe")), "query_id")
-        .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne")), "neighbor_id")
-        .withColumn("cos_exact",
-          graft.functions.VectorFns.cosine(col("qe"), col("ne")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy("rank")
-      val flagged = exact
-        .withColumn("prev_cos", lag(col("cos"), 1).over(w))
-        .withColumn("prev_nbr", lag(col("neighbor_id"), 1).over(w))
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          (col("cos") === col("cos_exact")).as("valid"),
-          (col("prev_cos").isNull || col("prev_cos") > col("cos") ||
-            (col("prev_cos") === col("cos") &&
-              col("prev_nbr") < col("neighbor_id"))).as("ordered"))
-      val perQuery = left.select(col("vec_id").as("query_id"))
-        .join(flagged.groupBy("query_id").agg(
-          count(lit(1)).as("n_results"),
-          count_distinct(col("neighbor_id")).as("n_distinct"),
-          count_distinct(when(col("rank").between(1, 3), col("rank"))).as("n_ranks"),
-          sum(when(col("valid"), 1L).otherwise(0L)).as("n_valid"),
-          sum(when(col("rank") > 1 && col("ordered"), 1L).otherwise(0L)).as("n_ordered")),
-          Seq("query_id"), "left")
-      val nQueries = left.count()
-      val overlap = Similarity.knnJoinExact(left, right, k = 3)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(knn.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .agg((count(lit(1)) >= lit(0.3 * 3 * nQueries)).cast("long")
-          .as("recall_floor_ok"))
-      perQuery.crossJoin(overlap)
-        .select(col("query_id"),
-          coalesce(col("n_results"), lit(0L)).as("n_results"),
-          coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-          coalesce(col("n_ranks"), lit(0L)).as("n_ranks"),
-          coalesce(col("n_valid"), lit(0L)).as("n_valid"),
-          coalesce(col("n_ordered"), lit(0L)).as("n_ordered"),
-          col("recall_floor_ok"))
-        .orderBy(col("query_id"))
+      // left and right are disjoint, so the no-self-pair check is vacuous
+      topkVerdicts(emb, left, knn, 3,
+        Some((Similarity.knnJoinExact(left, right, k = 3),
+          0.3 * 3 * left.count())))
     }),
 
 
@@ -1735,56 +1591,69 @@ private[graft] object GatesPipeline {
     """SELECT unnest([text[i:i+127] for i in range(1, length(text)+1, 128)]) AS word
       |    FROM documents WHERE length(text) > 0""".stripMargin
 
+  /** One batched induction round r over s(r-1), shared by
+    * [[bpeBatchSql]] and [[wordPieceBatchSql]]: adjacent-pair counts
+    * (p r); run-aware greedy-mergeable counts for SELF-pairs via
+    * gaps-and-islands (selfm r: i - row_number per (word, sym) groups
+    * consecutive positions into runs, and a run of length L greedily
+    * merges L // 2 pairs — the exact replay of the engine's RLE mct;
+    * distinct pairs cannot self-overlap, so their mct = ct); the
+    * round's ranked window `rankSql`, which defines c r with a, b, rk and
+    * the two carried fields; the recursive greedy triple-disjoint
+    * selection of up to `batchSize` pairs (g r, sel r); and the one-pass
+    * multi-rule fold (s r). */
+  private def batchRoundSql(r: Int, batchSize: Int, rankSql: String,
+      f1: (String, String), f2: (String, String)): String = {
+    val prev = s"s${r - 1}"
+    s"""p$r AS MATERIALIZED (SELECT syms[i] AS a, syms[i+1] AS b,
+       |    CAST(SUM(wct) AS BIGINT) AS ct
+       |  FROM $prev, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
+       |selfm$r AS MATERIALIZED (
+       |  SELECT sym, CAST(SUM(wct * (rl // 2)) AS BIGINT) AS smct FROM (
+       |    SELECT word, ANY_VALUE(wct) AS wct, sym, island,
+       |      COUNT(*) AS rl FROM (
+       |      SELECT word, wct, syms[i] AS sym,
+       |        i - row_number() OVER (PARTITION BY word, syms[i]
+       |          ORDER BY i) AS island
+       |      FROM $prev, UNNEST(range(1, len(syms)+1)) AS u(i))
+       |    GROUP BY word, sym, island)
+       |  WHERE rl >= 2 GROUP BY sym),
+       |$rankSql,
+       |g$r AS (
+       |  SELECT 0 AS rk,
+       |    CAST([] AS STRUCT(a VARCHAR, b VARCHAR, ${f1._1} ${f1._2},
+       |      ${f2._1} ${f2._2})[]) AS sel
+       |  UNION ALL
+       |  SELECT c.rk,
+       |    CASE WHEN len(g.sel) >= $batchSize OR list_has_any(
+       |        [c.a, c.b, c.a || c.b],
+       |        flatten(list_transform(g.sel, s -> [s.a, s.b, s.a || s.b])))
+       |      THEN g.sel
+       |      ELSE list_append(g.sel,
+       |        {'a': c.a, 'b': c.b, '${f1._1}': c.${f1._1}, '${f2._1}': c.${f2._1}}) END
+       |  FROM g$r g JOIN c$r c ON c.rk = g.rk + 1),
+       |sel$r AS MATERIALIZED (SELECT sel FROM g$r ORDER BY rk DESC LIMIT 1),
+       |s$r AS MATERIALIZED (SELECT word, wct,
+       |    CASE WHEN len(syms) <= 1 THEN syms
+       |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
+       |      WHEN len(list_filter(sel$r.sel,
+       |        m -> ends_with('|'||acc, '|'||m.a) AND x = m.b)) > 0
+       |      THEN acc||x ELSE acc||'|'||x END), '|') END AS syms
+       |  FROM $prev CROSS JOIN sel$r)""".stripMargin
+  }
+
   private def bpeBatchSql(batches: Int, batchSize: Int, window: Int,
       encodeTail: Boolean, unitsSql: String = bpeWordUnitsSql): String = {
-    def block(r: Int): String = {
-      val prev = s"s${r - 1}"
-      // selfm$r: run-aware greedy-mergeable counts for SELF-pairs via
-      // gaps-and-islands (i - row_number per (word, sym) groups
-      // consecutive positions into runs; a run of length L greedily
-      // merges L // 2 pairs) — the exact replay of the engine's RLE
-      // mct. Distinct pairs cannot self-overlap: mct = ct.
-      s"""p$r AS MATERIALIZED (SELECT syms[i] AS a, syms[i+1] AS b,
-         |    CAST(SUM(wct) AS BIGINT) AS ct
-         |  FROM $prev, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-         |selfm$r AS MATERIALIZED (
-         |  SELECT sym, CAST(SUM(wct * (rl // 2)) AS BIGINT) AS smct FROM (
-         |    SELECT word, ANY_VALUE(wct) AS wct, sym, island,
-         |      COUNT(*) AS rl FROM (
-         |      SELECT word, wct, syms[i] AS sym,
-         |        i - row_number() OVER (PARTITION BY word, syms[i]
-         |          ORDER BY i) AS island
-         |      FROM $prev, UNNEST(range(1, len(syms)+1)) AS u(i))
-         |    GROUP BY word, sym, island)
-         |  WHERE rl >= 2 GROUP BY sym),
-         |c$r AS MATERIALIZED (SELECT a, b, ct,
+    // the ledger ranks by naive ct, then the window LIMIT; mct is the
+    // greedy-mergeable count (= ct for every non-self pair)
+    def block(r: Int): String = batchRoundSql(r, batchSize,
+      s"""c$r AS MATERIALIZED (SELECT a, b, ct,
          |    CASE WHEN a = b THEN coalesce(sm.smct, 0) ELSE ct END AS mct,
          |    row_number() OVER (ORDER BY ct DESC, a, b) AS rk
          |  FROM (SELECT a, b, ct FROM p$r
          |    ORDER BY ct DESC, a, b LIMIT $window) q
-         |  LEFT JOIN selfm$r sm ON q.a = q.b AND sm.sym = q.a),
-         |g$r AS (
-         |  SELECT 0 AS rk,
-         |    CAST([] AS STRUCT(a VARCHAR, b VARCHAR, ct BIGINT,
-         |      mct BIGINT)[]) AS sel
-         |  UNION ALL
-         |  SELECT c.rk,
-         |    CASE WHEN len(g.sel) >= $batchSize OR list_has_any(
-         |        [c.a, c.b, c.a || c.b],
-         |        flatten(list_transform(g.sel, s -> [s.a, s.b, s.a || s.b])))
-         |      THEN g.sel
-         |      ELSE list_append(g.sel,
-         |        {'a': c.a, 'b': c.b, 'ct': c.ct, 'mct': c.mct}) END
-         |  FROM g$r g JOIN c$r c ON c.rk = g.rk + 1),
-         |sel$r AS MATERIALIZED (SELECT sel FROM g$r ORDER BY rk DESC LIMIT 1),
-         |s$r AS MATERIALIZED (SELECT word, wct,
-         |    CASE WHEN len(syms) <= 1 THEN syms
-         |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-         |      WHEN len(list_filter(sel$r.sel,
-         |        m -> ends_with('|'||acc, '|'||m.a) AND x = m.b)) > 0
-         |      THEN acc||x ELSE acc||'|'||x END), '|') END AS syms
-         |  FROM $prev CROSS JOIN sel$r)""".stripMargin
-    }
+         |  LEFT JOIN selfm$r sm ON q.a = q.b AND sm.sym = q.a)""".stripMargin,
+      "ct" -> "BIGINT", "mct" -> "BIGINT")
     val header =
       s"""WITH RECURSIVE v0 AS MATERIALIZED (
          |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wct FROM (
@@ -1833,6 +1702,62 @@ private[graft] object GatesPipeline {
         |ORDER BY d.doc_id""".stripMargin
     }
   }
+
+  /** Replay of `rounds` sequential single-merge BPE rounds over
+    * whitespace words: per round r, adjacent-pair counts (p r), the
+    * argmax by (ct desc, a, b) (b r) and the greedy fold via list_reduce
+    * (s r) — the same string fold, operand for operand, as
+    * Bpe.applyMerges — and, with `totals`, the symbol total after the
+    * round (n r). The fold's no-'|'-in-corpus precondition is asserted
+    * in s0 via error(). */
+  private def bpeRoundsSql(rounds: Int, totals: Boolean): String = {
+    val header =
+      """WITH v0 AS (
+        |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wct FROM (
+        |    SELECT unnest(list_filter(
+        |      string_split_regex(trim(lower(text)), '\s+'), x -> x <> '')) AS word
+        |    FROM documents)
+        |  GROUP BY word),
+        |s0 AS (SELECT word, wct,
+        |    CASE WHEN contains(word, '|')
+        |      THEN error('bpe fold oracle: pipe-bearing corpus word "' || word
+        |        || '" would diverge from the engine under the |-fold replay')
+        |    ELSE list_transform(range(1, length(word)+1),
+        |      i -> substr(word, i, 1)) END AS syms FROM v0),
+        |""".stripMargin
+    header + (1 to rounds).map { r =>
+      val prev = s"s${r - 1}"
+      val total = if (!totals) "" else
+        s",\nn$r AS (SELECT CAST(SUM(wct*len(syms)) AS BIGINT) AS syms_after FROM s$r)"
+      s"""p$r AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
+         |  FROM $prev, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
+         |b$r AS (SELECT a, b, ct FROM p$r ORDER BY ct DESC, a, b LIMIT 1),
+         |s$r AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
+         |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
+         |      WHEN ends_with('|'||acc, '|'||b$r.a) AND x = b$r.b THEN acc||x
+         |      ELSE acc||'|'||x END), '|') END AS syms
+         |  FROM $prev CROSS JOIN b$r)""".stripMargin + total
+    }.mkString(",\n")
+  }
+
+  /** The pretraining-filter oracles' `pred` CTE (graft_langid's argmax
+    * over the per-language hit counts `lid` carries, ties to the first
+    * listed) and `q` CTE (TextFns.qualityScore's stopword and punctuation
+    * ratios over `tw`). */
+  private val langQualitySql: String =
+    """pred AS (SELECT *, CASE
+      |    WHEN greatest(eh, sh_, fh, dh, zh_) = 0 THEN 'und'
+      |    WHEN zh_ = greatest(eh, sh_, fh, dh, zh_) THEN 'zh'
+      |    WHEN fh = greatest(eh, sh_, fh, dh, zh_) THEN 'fr'
+      |    WHEN sh_ = greatest(eh, sh_, fh, dh, zh_) THEN 'es'
+      |    WHEN eh = greatest(eh, sh_, fh, dh, zh_) THEN 'en'
+      |    ELSE 'de' END AS plang FROM lid),
+      |q AS (SELECT *,
+      |    CASE WHEN n_tok = 0 THEN 0.0
+      |      ELSE CAST(len(list_filter(tw, x -> list_contains(['the','a','an','of','and','to','in','is','it','that'], x))) AS DOUBLE)/n_tok END AS sw,
+      |    CASE WHEN length(text) = 0 THEN 0.0
+      |      ELSE CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE)/length(text) END AS punct
+      |  FROM pred),""".stripMargin
 
   /** Replay of likelihood-scored WordPiece training: per round — naive
     * adjacent-pair counts, per-symbol occurrence counts, the scored
@@ -1902,23 +1827,9 @@ private[graft] object GatesPipeline {
     * truncate6'd. Units: the depth tiers' 128-char chunks. */
   private def wordPieceBatchSql(batches: Int, batchSize: Int,
       window: Int): String = {
-    def block(r: Int): String = {
-      val prev = s"s${r - 1}"
-      s"""p$r AS MATERIALIZED (SELECT syms[i] AS a, syms[i+1] AS b,
-         |    CAST(SUM(wct) AS BIGINT) AS ct
-         |  FROM $prev, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-         |selfm$r AS MATERIALIZED (
-         |  SELECT sym, CAST(SUM(wct * (rl // 2)) AS BIGINT) AS smct FROM (
-         |    SELECT word, ANY_VALUE(wct) AS wct, sym, island,
-         |      COUNT(*) AS rl FROM (
-         |      SELECT word, wct, syms[i] AS sym,
-         |        i - row_number() OVER (PARTITION BY word, syms[i]
-         |          ORDER BY i) AS island
-         |      FROM $prev, UNNEST(range(1, len(syms)+1)) AS u(i))
-         |    GROUP BY word, sym, island)
-         |  WHERE rl >= 2 GROUP BY sym),
-         |y$r AS MATERIALIZED (SELECT s AS sym, CAST(SUM(wct) AS BIGINT) AS c
-         |  FROM (SELECT wct, unnest(syms) AS s FROM $prev) GROUP BY 1),
+    def block(r: Int): String = batchRoundSql(r, batchSize,
+      s"""y$r AS MATERIALIZED (SELECT s AS sym, CAST(SUM(wct) AS BIGINT) AS c
+         |  FROM (SELECT wct, unnest(syms) AS s FROM s${r - 1}) GROUP BY 1),
          |c$r AS MATERIALIZED (SELECT a, b, ct, mct, score,
          |    row_number() OVER (ORDER BY score DESC, a, b) AS rk
          |  FROM (SELECT q.a, q.b, q.ct,
@@ -1930,29 +1841,8 @@ private[graft] object GatesPipeline {
          |    JOIN y$r ca ON ca.sym = q.a
          |    JOIN y$r cb ON cb.sym = q.b
          |    LEFT JOIN selfm$r sm ON q.a = q.b AND sm.sym = q.a)
-         |  ORDER BY score DESC, a, b LIMIT $window),
-         |g$r AS (
-         |  SELECT 0 AS rk,
-         |    CAST([] AS STRUCT(a VARCHAR, b VARCHAR, mct BIGINT,
-         |      score DOUBLE)[]) AS sel
-         |  UNION ALL
-         |  SELECT c.rk,
-         |    CASE WHEN len(g.sel) >= $batchSize OR list_has_any(
-         |        [c.a, c.b, c.a || c.b],
-         |        flatten(list_transform(g.sel, s -> [s.a, s.b, s.a || s.b])))
-         |      THEN g.sel
-         |      ELSE list_append(g.sel,
-         |        {'a': c.a, 'b': c.b, 'mct': c.mct, 'score': c.score}) END
-         |  FROM g$r g JOIN c$r c ON c.rk = g.rk + 1),
-         |sel$r AS MATERIALIZED (SELECT sel FROM g$r ORDER BY rk DESC LIMIT 1),
-         |s$r AS MATERIALIZED (SELECT word, wct,
-         |    CASE WHEN len(syms) <= 1 THEN syms
-         |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-         |      WHEN len(list_filter(sel$r.sel,
-         |        m -> ends_with('|'||acc, '|'||m.a) AND x = m.b)) > 0
-         |      THEN acc||x ELSE acc||'|'||x END), '|') END AS syms
-         |  FROM $prev CROSS JOIN sel$r)""".stripMargin
-    }
+         |  ORDER BY score DESC, a, b LIMIT $window)""".stripMargin,
+      "mct" -> "BIGINT", "score" -> "DOUBLE")
     val header =
       s"""WITH RECURSIVE v0 AS MATERIALIZED (
          |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wct FROM (
@@ -2252,17 +2142,32 @@ private[graft] object GatesPipeline {
        |ORDER BY d.doc_id""".stripMargin
   }
 
-  // shared by dedup_incremental and dedup_index_atrest (the at-rest
-  // index round-trip must not move the candidate set or any jaccard)
-  private val dedupIncrementalSql: String =
+  /** The ngram near-dup pair graph's transitive closure: `reach` holds
+    * every (s, d) pair of documents connected through pairs at Jaccard
+    * >= 0.5 over 3-token shingles — the dedup_clusters labels are
+    * `least(s, MIN(d))` per s. Every CTE the recursion reads is
+    * MATERIALIZED (DuckDB would otherwise re-derive it per step). */
+  private val ngramClosureSql: String =
+    s"""WITH RECURSIVE ${shingleSql(3, " MATERIALIZED")},
+      |p AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |    len(list_intersect(a.s, b.s)) AS i, len(a.s) AS la, len(b.s) AS lb
+      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
+      |pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM p
+      |  WHERE CAST(i AS DOUBLE)/(la + lb - i) >= 0.5),
+      |e AS MATERIALIZED (SELECT doc_a AS s, doc_b AS d FROM pairs
+      |  UNION SELECT doc_b AS s, doc_a AS d FROM pairs),
+      |reach AS (
+      |  SELECT s, d FROM e
+      |  UNION
+      |  SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s)""".stripMargin
+
+  /** Replay of graft_minhash_bands_p: md5-lower-64 % P element hashes,
+    * the identical affine family (constants interpolated), band key =
+    * comma-joined signature slice; banded candidates (a band-key match
+    * narrowed by `candCond`) are verified by exact set Jaccard >= 0.5. */
+  private def minhashJaccardSql(candCond: String): String =
     s"""WITH perms(i, a, b) AS (VALUES ${permValuesSql(64)}),
-        |toks AS (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
-        |  FROM toks),
+        |${shingleSql(3)},
         |hv AS (SELECT doc_id, CAST(md5_number_lower(sv) % 2147483647 AS BIGINT) AS h
         |  FROM (SELECT doc_id, unnest(s) AS sv FROM sh)),
         |mh AS (SELECT doc_id, p.i AS i,
@@ -2273,7 +2178,7 @@ private[graft] object GatesPipeline {
         |  FROM mh GROUP BY doc_id, i // 4),
         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         |  FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
-        |  WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0),
+        |$candCond),
         |p2 AS (SELECT c.doc_a, c.doc_b, len(list_intersect(sa.s, sb.s)) AS i2,
         |    len(sa.s) AS la, len(sb.s) AS lb
         |  FROM cand c JOIN sh sa ON sa.doc_id = c.doc_a
@@ -2281,6 +2186,11 @@ private[graft] object GatesPipeline {
         |SELECT doc_a, doc_b, CAST(i2 AS DOUBLE)/(la + lb - i2) AS jaccard
         |FROM p2 WHERE CAST(i2 AS DOUBLE)/(la + lb - i2) >= 0.5
         |ORDER BY doc_a, doc_b""".stripMargin
+
+  // shared by dedup_incremental and dedup_index_atrest (the at-rest
+  // index round-trip must not move the candidate set or any jaccard)
+  private val dedupIncrementalSql: String =
+    minhashJaccardSql("  WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0")
 
   def oracleSql: Map[String, String] = Map(
 
@@ -2575,61 +2485,13 @@ private[graft] object GatesPipeline {
     // 4 chained rounds: pair-count -> argmax (ct desc, then lexicographic)
     // -> greedy fold via list_reduce -- the same string fold, operand for
     // operand, as Bpe.applyMerges. All counts exact ints.
-    "text_bpe_merges" ->
-      """WITH v0 AS (
-        |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wct FROM (
-        |    SELECT unnest(list_filter(
-        |      string_split_regex(trim(lower(text)), '\s+'), x -> x <> '')) AS word
-        |    FROM documents)
-        |  GROUP BY word),
-        |s0 AS (SELECT word, wct,
-        |    CASE WHEN contains(word, '|')
-        |      THEN error('bpe fold oracle: pipe-bearing corpus word "' || word
-        |        || '" would diverge from the engine under the |-fold replay')
-        |    ELSE list_transform(range(1, length(word)+1),
-        |      i -> substr(word, i, 1)) END AS syms FROM v0),
-        |p1 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
-        |  FROM s0, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-        |b1 AS (SELECT a, b, ct FROM p1 ORDER BY ct DESC, a, b LIMIT 1),
-        |s1 AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
-        |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-        |      WHEN ends_with('|'||acc, '|'||b1.a) AND x = b1.b THEN acc||x
-        |      ELSE acc||'|'||x END), '|') END AS syms
-        |  FROM s0 CROSS JOIN b1),
-        |n1 AS (SELECT CAST(SUM(wct*len(syms)) AS BIGINT) AS syms_after FROM s1),
-        |p2 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
-        |  FROM s1, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-        |b2 AS (SELECT a, b, ct FROM p2 ORDER BY ct DESC, a, b LIMIT 1),
-        |s2 AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
-        |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-        |      WHEN ends_with('|'||acc, '|'||b2.a) AND x = b2.b THEN acc||x
-        |      ELSE acc||'|'||x END), '|') END AS syms
-        |  FROM s1 CROSS JOIN b2),
-        |n2 AS (SELECT CAST(SUM(wct*len(syms)) AS BIGINT) AS syms_after FROM s2),
-        |p3 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
-        |  FROM s2, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-        |b3 AS (SELECT a, b, ct FROM p3 ORDER BY ct DESC, a, b LIMIT 1),
-        |s3 AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
-        |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-        |      WHEN ends_with('|'||acc, '|'||b3.a) AND x = b3.b THEN acc||x
-        |      ELSE acc||'|'||x END), '|') END AS syms
-        |  FROM s2 CROSS JOIN b3),
-        |n3 AS (SELECT CAST(SUM(wct*len(syms)) AS BIGINT) AS syms_after FROM s3),
-        |p4 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
-        |  FROM s3, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-        |b4 AS (SELECT a, b, ct FROM p4 ORDER BY ct DESC, a, b LIMIT 1),
-        |s4 AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
-        |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-        |      WHEN ends_with('|'||acc, '|'||b4.a) AND x = b4.b THEN acc||x
-        |      ELSE acc||'|'||x END), '|') END AS syms
-        |  FROM s3 CROSS JOIN b4),
-        |n4 AS (SELECT CAST(SUM(wct*len(syms)) AS BIGINT) AS syms_after FROM s4)
+    "text_bpe_merges" -> (bpeRoundsSql(4, totals = true) + """
         |SELECT * FROM (
         |  SELECT CAST(1 AS BIGINT) AS round, a AS lhs, b AS rhs, ct, n1.syms_after FROM b1, n1
         |  UNION ALL SELECT 2, a, b, ct, n2.syms_after FROM b2, n2
         |  UNION ALL SELECT 3, a, b, ct, n3.syms_after FROM b3, n3
         |  UNION ALL SELECT 4, a, b, ct, n4.syms_after FROM b4, n4)
-        |ORDER BY round""".stripMargin,
+        |ORDER BY round""".stripMargin),
 
 
     // Same smoothed-bigram arithmetic as LangModel.bigramNll, operand for
@@ -2695,51 +2557,7 @@ private[graft] object GatesPipeline {
     // Same learned 4-merge chain as text_bpe_merges, then segmentation:
     // distinct words pick up their post-merge symbols, documents sum and
     // reassemble in (doc, word-position) order.
-    "text_bpe_encode" ->
-      """WITH v0 AS (
-        |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wct FROM (
-        |    SELECT unnest(list_filter(
-        |      string_split_regex(trim(lower(text)), '\s+'), x -> x <> '')) AS word
-        |    FROM documents)
-        |  GROUP BY word),
-        |s0 AS (SELECT word, wct,
-        |    CASE WHEN contains(word, '|')
-        |      THEN error('bpe fold oracle: pipe-bearing corpus word "' || word
-        |        || '" would diverge from the engine under the |-fold replay')
-        |    ELSE list_transform(range(1, length(word)+1),
-        |      i -> substr(word, i, 1)) END AS syms FROM v0),
-        |p1 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
-        |  FROM s0, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-        |b1 AS (SELECT a, b, ct FROM p1 ORDER BY ct DESC, a, b LIMIT 1),
-        |s1 AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
-        |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-        |      WHEN ends_with('|'||acc, '|'||b1.a) AND x = b1.b THEN acc||x
-        |      ELSE acc||'|'||x END), '|') END AS syms
-        |  FROM s0 CROSS JOIN b1),
-        |p2 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
-        |  FROM s1, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-        |b2 AS (SELECT a, b, ct FROM p2 ORDER BY ct DESC, a, b LIMIT 1),
-        |s2 AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
-        |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-        |      WHEN ends_with('|'||acc, '|'||b2.a) AND x = b2.b THEN acc||x
-        |      ELSE acc||'|'||x END), '|') END AS syms
-        |  FROM s1 CROSS JOIN b2),
-        |p3 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
-        |  FROM s2, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-        |b3 AS (SELECT a, b, ct FROM p3 ORDER BY ct DESC, a, b LIMIT 1),
-        |s3 AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
-        |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-        |      WHEN ends_with('|'||acc, '|'||b3.a) AND x = b3.b THEN acc||x
-        |      ELSE acc||'|'||x END), '|') END AS syms
-        |  FROM s2 CROSS JOIN b3),
-        |p4 AS (SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(wct) AS BIGINT) AS ct
-        |  FROM s3, UNNEST(range(1, len(syms))) AS u(i) GROUP BY 1, 2),
-        |b4 AS (SELECT a, b, ct FROM p4 ORDER BY ct DESC, a, b LIMIT 1),
-        |s4 AS (SELECT word, wct, CASE WHEN len(syms) <= 1 THEN syms
-        |    ELSE string_split(list_reduce(syms, (acc, x) -> CASE
-        |      WHEN ends_with('|'||acc, '|'||b4.a) AND x = b4.b THEN acc||x
-        |      ELSE acc||'|'||x END), '|') END AS syms
-        |  FROM s3 CROSS JOIN b4),
+    "text_bpe_encode" -> (bpeRoundsSql(4, totals = false) + """,
         |t AS (SELECT doc_id, list_filter(
         |    string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS toks
         |  FROM documents),
@@ -2749,7 +2567,7 @@ private[graft] object GatesPipeline {
         |    array_to_string(flatten(list(s4.syms ORDER BY w.pos))[1:3], ' ') AS head
         |  FROM w JOIN s4 ON w.pos_word = s4.word GROUP BY w.doc_id)
         |SELECT d.doc_id, COALESCE(enc.n_bpe, 0) AS n_bpe, COALESCE(enc.head, '') AS head
-        |FROM documents d LEFT JOIN enc ON d.doc_id = enc.doc_id ORDER BY d.doc_id""".stripMargin,
+        |FROM documents d LEFT JOIN enc ON d.doc_id = enc.doc_id ORDER BY d.doc_id""".stripMargin),
 
 
     // Replays the injection and the scrub with RE2 equivalents of the
@@ -2810,7 +2628,7 @@ private[graft] object GatesPipeline {
     // mirrors TextFns.qualityScore + graft_langid + tokensWs + exact-keeper
     // — the same formulas as the text_quality / text_langid oracles
     "pipe_pretrain_filter" ->
-      """WITH toks AS (SELECT doc_id, text, lang,
+      ("""WITH toks AS (SELECT doc_id, text, lang,
         |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS tw,
         |    string_split_regex(lower(text), '[^\p{L}\p{N}]+') AS tr
         |  FROM documents),
@@ -2821,19 +2639,7 @@ private[graft] object GatesPipeline {
         |    len(list_filter(tr, x -> list_contains(['der','die','und','das','ist','nicht','mit','ein'], x))) AS dh,
         |    len(list_filter(tr, x -> list_contains(['的','是','不','我','了','在','人','有'], x))) AS zh_
         |  FROM toks),
-        |pred AS (SELECT *, CASE
-        |    WHEN greatest(eh, sh_, fh, dh, zh_) = 0 THEN 'und'
-        |    WHEN zh_ = greatest(eh, sh_, fh, dh, zh_) THEN 'zh'
-        |    WHEN fh = greatest(eh, sh_, fh, dh, zh_) THEN 'fr'
-        |    WHEN sh_ = greatest(eh, sh_, fh, dh, zh_) THEN 'es'
-        |    WHEN eh = greatest(eh, sh_, fh, dh, zh_) THEN 'en'
-        |    ELSE 'de' END AS plang FROM lid),
-        |q AS (SELECT *,
-        |    CASE WHEN n_tok = 0 THEN 0.0
-        |      ELSE CAST(len(list_filter(tw, x -> list_contains(['the','a','an','of','and','to','in','is','it','that'], x))) AS DOUBLE)/n_tok END AS sw,
-        |    CASE WHEN length(text) = 0 THEN 0.0
-        |      ELSE CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE)/length(text) END AS punct
-        |  FROM pred),
+        |""".stripMargin + langQualitySql + """
         |f AS (SELECT doc_id, text, lang FROM q
         |  WHERE plang = 'en'
         |    AND (0.4*least(length(text)/500.0, 1.0)
@@ -2842,14 +2648,14 @@ private[graft] object GatesPipeline {
         |    AND n_tok BETWEEN 5 AND 100000),
         |k AS (SELECT doc_id, lang,
         |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn FROM f)
-        |SELECT doc_id, lang FROM k WHERE rn = 1 ORDER BY doc_id""".stripMargin,
+        |SELECT doc_id, lang FROM k WHERE rn = 1 ORDER BY doc_id""".stripMargin),
 
 
     // Full-pipeline replay: filter CTEs (pipe_pretrain_filter's formulas
     // with n_chars/tw carried through) feed the decontamination CTEs
     // (pipe_decontaminate's shingle rule) feed the per-lang report.
     "pipe_pretrain_e2e" ->
-      """WITH toks AS (SELECT doc_id, text, lang, n_chars,
+      ("""WITH toks AS (SELECT doc_id, text, lang, n_chars,
         |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS tw,
         |    string_split_regex(lower(text), '[^\p{L}\p{N}]+') AS tr
         |  FROM documents),
@@ -2860,19 +2666,7 @@ private[graft] object GatesPipeline {
         |    len(list_filter(tr, x -> list_contains(['der','die','und','das','ist','nicht','mit','ein'], x))) AS dh,
         |    len(list_filter(tr, x -> list_contains(['的','是','不','我','了','在','人','有'], x))) AS zh_
         |  FROM toks WHERE doc_id % 89 <> 0),
-        |pred AS (SELECT *, CASE
-        |    WHEN greatest(eh, sh_, fh, dh, zh_) = 0 THEN 'und'
-        |    WHEN zh_ = greatest(eh, sh_, fh, dh, zh_) THEN 'zh'
-        |    WHEN fh = greatest(eh, sh_, fh, dh, zh_) THEN 'fr'
-        |    WHEN sh_ = greatest(eh, sh_, fh, dh, zh_) THEN 'es'
-        |    WHEN eh = greatest(eh, sh_, fh, dh, zh_) THEN 'en'
-        |    ELSE 'de' END AS plang FROM lid),
-        |q AS (SELECT *,
-        |    CASE WHEN n_tok = 0 THEN 0.0
-        |      ELSE CAST(len(list_filter(tw, x -> list_contains(['the','a','an','of','and','to','in','is','it','that'], x))) AS DOUBLE)/n_tok END AS sw,
-        |    CASE WHEN length(text) = 0 THEN 0.0
-        |      ELSE CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE)/length(text) END AS punct
-        |  FROM pred),
+        |""".stripMargin + langQualitySql + """
         |f AS (SELECT doc_id, text, lang, n_chars, tw FROM q
         |  WHERE plang = 'en'
         |    AND (0.4*least(length(text)/500.0, 1.0)
@@ -2898,7 +2692,7 @@ private[graft] object GatesPipeline {
         |  LEFT JOIN bad ON ksh.doc_id = bad.doc_id WHERE bad.doc_id IS NULL)
         |SELECT lang, CAST(COUNT(*) AS BIGINT) AS docs_kept,
         |  CAST(SUM(n_chars) AS BIGINT) AS chars_kept
-        |FROM clean GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM clean GROUP BY lang ORDER BY lang""".stripMargin),
 
 
     // Same 8-gram construction Spark-side (graft_shingles) and here
@@ -2933,13 +2727,7 @@ private[graft] object GatesPipeline {
     // pinned constants — subset_ok (no false negatives) and fp_ok
     // (false-drop budget) must both hold.
     "pipe_decontaminate_bloom" ->
-      """WITH toks AS (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 8 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+7], ' ') for i in range(1, len(t) - 6)] END) AS s
-        |  FROM toks),
+      s"""WITH ${shingleSql(8)},
         |ev AS (SELECT DISTINCT unnest(s) AS g FROM sh
         |  WHERE doc_id % 97 = 0 OR doc_id % 101 = 0),
         |tr AS (SELECT * FROM sh WHERE doc_id % 97 <> 0),
@@ -2978,50 +2766,16 @@ private[graft] object GatesPipeline {
 
 
     "dedup_clusters" ->
-      """WITH RECURSIVE toks AS MATERIALIZED (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS MATERIALIZED (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
-        |  FROM toks),
-        |p AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    len(list_intersect(a.s, b.s)) AS i, len(a.s) AS la, len(b.s) AS lb
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-        |pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM p
-        |  WHERE CAST(i AS DOUBLE)/(la + lb - i) >= 0.5),
-        |e AS MATERIALIZED (SELECT doc_a AS s, doc_b AS d FROM pairs
-        |  UNION SELECT doc_b AS s, doc_a AS d FROM pairs),
-        |reach AS (
-        |  SELECT s, d FROM e
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s)
+      (ngramClosureSql + """
         |SELECT s AS doc_id, least(s, MIN(d)) AS cluster_id
-        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin,
+        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin),
 
 
     // same transitive-closure labels as dedup_clusters, then the
     // per-cluster argmax by (length DESC, doc_id) decides survival;
     // unpaired docs (not in the member set) survive by construction
     "dedup_keep_best" ->
-      """WITH RECURSIVE toks AS MATERIALIZED (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS MATERIALIZED (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
-        |  FROM toks),
-        |p AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    len(list_intersect(a.s, b.s)) AS i, len(a.s) AS la, len(b.s) AS lb
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-        |pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM p
-        |  WHERE CAST(i AS DOUBLE)/(la + lb - i) >= 0.5),
-        |e AS MATERIALIZED (SELECT doc_a AS s, doc_b AS d FROM pairs
-        |  UNION SELECT doc_b AS s, doc_a AS d FROM pairs),
-        |reach AS (
-        |  SELECT s, d FROM e
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s),
+      (ngramClosureSql + """,
         |labels AS MATERIALIZED (SELECT s AS doc_id,
         |    least(s, MIN(d)) AS cluster_id FROM reach GROUP BY s),
         |members AS MATERIALIZED (SELECT l.cluster_id, l.doc_id,
@@ -3034,7 +2788,7 @@ private[graft] object GatesPipeline {
         |SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS n_chars
         |FROM documents d
         |WHERE d.doc_id NOT IN (SELECT doc_id FROM drop)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
 
 
     // transitive closure of the ngram near-dup pairs; cluster = min
@@ -3042,24 +2796,7 @@ private[graft] object GatesPipeline {
     // End-to-end survivors: same transitive-closure labels as
     // dedup_clusters, then keep min-id members + unpaired docs.
     "pipe_dedup_survivors" ->
-      """WITH RECURSIVE toks AS MATERIALIZED (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS MATERIALIZED (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
-        |  FROM toks),
-        |p AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    len(list_intersect(a.s, b.s)) AS i, len(a.s) AS la, len(b.s) AS lb
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-        |pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM p
-        |  WHERE CAST(i AS DOUBLE)/(la + lb - i) >= 0.5),
-        |e AS MATERIALIZED (SELECT doc_a AS s, doc_b AS d FROM pairs
-        |  UNION SELECT doc_b AS s, doc_a AS d FROM pairs),
-        |reach AS (
-        |  SELECT s, d FROM e
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s),
+      (ngramClosureSql + """,
         |lbl AS (SELECT s AS doc_id, least(s, MIN(d)) AS cluster_id
         |  FROM reach GROUP BY s),
         |keep AS (SELECT doc.* FROM documents doc LEFT JOIN lbl
@@ -3068,7 +2805,7 @@ private[graft] object GatesPipeline {
         |SELECT lang, CAST(COUNT(*) AS BIGINT) AS docs_kept,
         |  CAST(SUM(n_chars) AS BIGINT) AS chars_kept,
         |  CAST(COUNT(DISTINCT source) AS BIGINT) AS sources
-        |FROM keep GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM keep GROUP BY lang ORDER BY lang""".stripMargin),
 
 
     // Replays the paragraph rule on the same derived fixture: global
@@ -3098,13 +2835,7 @@ private[graft] object GatesPipeline {
     // dup_frac is a single division of exact ints (bit-identical across
     // engines).
     "dedup_span_frac" ->
-      """WITH toks AS (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 8 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+7], ' ') for i in range(1, len(t) - 6)] END) AS s
-        |  FROM toks),
+      s"""WITH ${shingleSql(8)},
         |u AS (SELECT doc_id, unnest(s) AS sv FROM sh),
         |df AS (SELECT sv FROM u GROUP BY sv HAVING COUNT(*) >= 2)
         |SELECT u.doc_id, COUNT(*) AS n_spans,
@@ -3143,24 +2874,7 @@ private[graft] object GatesPipeline {
     // oracle; split assignment replays the md5-low-64 bucket ranges
     // (cuts 8000/9000/10000) on the cluster key.
     "pipe_split_leakage" ->
-      """WITH RECURSIVE toks AS MATERIALIZED (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS MATERIALIZED (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
-        |  FROM toks),
-        |p AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    len(list_intersect(a.s, b.s)) AS i, len(a.s) AS la, len(b.s) AS lb
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-        |pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM p
-        |  WHERE CAST(i AS DOUBLE)/(la + lb - i) >= 0.5),
-        |e AS MATERIALIZED (SELECT doc_a AS s, doc_b AS d FROM pairs
-        |  UNION SELECT doc_b AS s, doc_a AS d FROM pairs),
-        |reach AS (
-        |  SELECT s, d FROM e
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s),
+      (ngramClosureSql + """,
         |lab AS (SELECT s AS doc_id, least(s, MIN(d)) AS cluster_id
         |  FROM reach GROUP BY s),
         |k AS (SELECT d.lang, d.n_chars,
@@ -3169,19 +2883,13 @@ private[graft] object GatesPipeline {
         |SELECT CASE WHEN b < 8000 THEN 'train'
         |            WHEN b < 9000 THEN 'valid' ELSE 'test' END AS split,
         |       lang, COUNT(*) AS docs, CAST(SUM(n_chars) AS BIGINT) AS chars
-        |FROM k GROUP BY split, lang ORDER BY split, lang""".stripMargin,
+        |FROM k GROUP BY split, lang ORDER BY split, lang""".stripMargin),
 
 
     // Both sides' gram sets are distinct per (doc)/(set), so the join's
     // per-(doc,set) row count IS the distinct shared-gram count.
     "pipe_decontaminate_report" ->
-      """WITH toks AS (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 8 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+7], ' ') for i in range(1, len(t) - 6)] END) AS s
-        |  FROM toks),
+      s"""WITH ${shingleSql(8)},
         |ev AS (SELECT DISTINCT eval_set, g FROM (
         |    SELECT 'holdout_a' AS eval_set, unnest(s) AS g FROM sh WHERE doc_id % 97 = 0
         |    UNION ALL
@@ -3194,37 +2902,8 @@ private[graft] object GatesPipeline {
         |ORDER BY tr.doc_id, ev.eval_set""".stripMargin,
 
 
-    // Recomputes graft_minhash_bands_p verbatim: md5-lower-64 % P element
-    // hashes, the identical affine family (constants interpolated below),
-    // band key = comma-joined signature slice, then exact set-jaccard
-    // verification of the banded candidates.
     "dedup_minhash_lsh" ->
-      s"""WITH perms(i, a, b) AS (VALUES ${permValuesSql(64)}),
-        |toks AS (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
-        |  FROM toks),
-        |hv AS (SELECT doc_id, CAST(md5_number_lower(sv) % 2147483647 AS BIGINT) AS h
-        |  FROM (SELECT doc_id, unnest(s) AS sv FROM sh)),
-        |mh AS (SELECT doc_id, p.i AS i,
-        |    MIN((CAST(p.a AS BIGINT) * hv.h + p.b) % 2147483647) AS m
-        |  FROM hv CROSS JOIN perms p GROUP BY doc_id, p.i),
-        |bk AS (SELECT doc_id, i // 4 AS band,
-        |    string_agg(CAST(m AS VARCHAR), ',' ORDER BY i) AS key
-        |  FROM mh GROUP BY doc_id, i // 4),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
-        |    AND a.doc_id < b.doc_id),
-        |p2 AS (SELECT c.doc_a, c.doc_b, len(list_intersect(sa.s, sb.s)) AS i2,
-        |    len(sa.s) AS la, len(sb.s) AS lb
-        |  FROM cand c JOIN sh sa ON sa.doc_id = c.doc_a
-        |    JOIN sh sb ON sb.doc_id = c.doc_b)
-        |SELECT doc_a, doc_b, CAST(i2 AS DOUBLE)/(la + lb - i2) AS jaccard
-        |FROM p2 WHERE CAST(i2 AS DOUBLE)/(la + lb - i2) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
+      minhashJaccardSql("    AND a.doc_id < b.doc_id"),
 
 
     "dedup_incremental" -> dedupIncrementalSql,

@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object GatesStreaming {
   import GateSupport._
-  import TmpDirs._
 
   /** The view and click legs of an event stream, as the interval-join
     * gates (j1, j7, j7b, chained join -> agg) pair them. */
@@ -82,39 +81,6 @@ private[graft] object GatesStreaming {
       |   OR (nxt IS NULL AND (us + 1800000000)//1000 < mu//1000)
       |GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  /** The change-feed gates' store rows: `orders` keyed by `k` with its
-    * price, in 8 buckets of `k`. */
-  private def cdfBase(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .select(col("o_orderkey").as("k"), dec("o_totalprice").as("price"),
-        pmod(col("o_orderkey"), lit(8L)).as("bucket"))
-
-  /** The change-feed gates' three merge sources over [[cdfBase]]: each
-    * updates and deletes in its own buckets, the first two also insert
-    * fresh keys. */
-  private def cdfMerges(base: DataFrame): Seq[DataFrame] = Seq(
-    base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-      .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-      .withColumn("op", lit("U"))
-      .unionByName(base.filter(col("bucket") === 5 && col("k") % 3 === 1)
-        .withColumn("op", lit("D")))
-      .unionByName(base.filter(col("bucket") === 2 && col("k") % 3 === 2)
-        .withColumn("k", col("k") + 80000000L)
-        .withColumn("op", lit("I"))),
-    base.filter(col("bucket") === 2 && col("k") % 3 === 0)
-      .withColumn("op", lit("D"))
-      .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 1)
-        .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-        .withColumn("op", lit("U")))
-      .unionByName(base.filter(col("bucket") === 7 && col("k") % 5 === 2)
-        .withColumn("k", col("k") + 90000000L)
-        .withColumn("op", lit("I"))),
-    base.filter(col("bucket") === 1 && col("k") % 4 === 0)
-      .withColumn("price", (col("price") * 7).cast("decimal(18,2)"))
-      .withColumn("op", lit("U"))
-      .unionByName(base.filter(col("bucket") === 3 && col("k") % 7 === 2)
-        .withColumn("op", lit("D"))))
-
   /** Seed a change-feed consumer's serving state at `out`: per-bucket
     * row count and price sum of `store`'s v1. */
   private def cdfSeed(s: SparkSession, store: String, out: String): Unit =
@@ -146,7 +112,7 @@ private[graft] object GatesStreaming {
   }
 
   /** A change-feed gate's result: the serving state at `path` with its
-    * fold count, materialized before the gate sweeps its stores. */
+    * fold count. */
   private def cdfResult(s: SparkSession, path: String, nTicks: Long,
       extra: org.apache.spark.sql.Column*): DataFrame =
     s.read.parquet(path)
@@ -154,7 +120,6 @@ private[graft] object GatesStreaming {
         col("ps").cast("double").as("price_sum"),
         lit(nTicks).as("n_ticks")) ++ extra: _*)
       .orderBy(col("bucket"))
-      .localCheckpoint(true)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -181,8 +146,7 @@ private[graft] object GatesStreaming {
         col("o_custkey"), col("o_totalprice"),
         col("o_orderdate").cast("timestamp").as("ft"))
       def part(i: Int) = facts.filter(pmod(col("o_custkey"), lit(3L)) === i)
-      val stage = s"$shmRoot/graft-tmpj-${System.nanoTime()}"
-      try {
+      withScratch("stream_j14_temporal") { stage =>
         val stream = graft.streaming.Sources.stagedChunkStream(s,
           Seq(part(0), part(1), part(2)), Some(stage))
         graft.streaming.StreamRunner.collect(
@@ -200,8 +164,7 @@ private[graft] object GatesStreaming {
             sum(col("bal").cast("decimal(18,2)")).cast("double")
               .as("bal_sum"))
           .orderBy(col("version"))
-          .localCheckpoint(true)
-      } finally rmTree(stage)
+      }
     }),
 
 
@@ -225,39 +188,34 @@ private[graft] object GatesStreaming {
     // order is irrelevant — the at-scale posture where CDF intervals
     // arrive from a queue. Oracle = full recompute of the final
     // snapshot: equality proves incremental == recompute.
-    "stream_k21_cdf" -> ((s, dir) => {
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val store = s"$root/graft-cdfstream-$uniq"
-      val ticks = s"$root/graft-cdfticks-$uniq"
-      val state = s"$root/graft-cdfstate-$uniq"
-      try {
-        val base = cdfBase(s, dir)
-        Versioned.init(s, store, "bucket", base)
-        cdfMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
-        // serving state seeded from v1 (the one-time build, k12 pattern)
-        import s.implicits._
-        cdfSeed(s, store, s"$state/s0")
-        // one tick file per CDF interval -> one micro-batch each
-        Seq(2L, 3L, 4L).foreach(v =>
-          Seq(v).toDF("tick").coalesce(1).write.mode("append").parquet(ticks))
-        val cur = new java.util.concurrent.atomic.AtomicReference(s"$state/s0")
-        val nTicks = new java.util.concurrent.atomic.AtomicLong(0L)
-        val stream = s.readStream
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("tick",
-              org.apache.spark.sql.types.LongType))))
-          .option("maxFilesPerTrigger", "1").parquet(ticks)
-        graft.streaming.StreamRunner.runForeachBatch(stream) { (b, _) =>
-          b.select(col("tick")).collect().map(_.getLong(0)).foreach { v =>
-            val n = nTicks.incrementAndGet()
-            cdfFold(s, Versioned.changesWithPreImages(s, store, v - 1, v, "k"),
-              cur.get(), s"$state/s$n")
-            cur.set(s"$state/s$n")
-          }
+    "stream_k21_cdf" -> ((s, dir) => withScratch("stream_k21_cdf") { root =>
+      val (store, ticks, state) =
+        (s"$root/store", s"$root/ticks", s"$root/state")
+      val base = storeBase(s, dir)
+      Versioned.init(s, store, "bucket", base)
+      storeMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
+      // serving state seeded from v1 (the one-time build, k12 pattern)
+      import s.implicits._
+      cdfSeed(s, store, s"$state/s0")
+      // one tick file per CDF interval -> one micro-batch each
+      Seq(2L, 3L, 4L).foreach(v =>
+        Seq(v).toDF("tick").coalesce(1).write.mode("append").parquet(ticks))
+      val cur = new java.util.concurrent.atomic.AtomicReference(s"$state/s0")
+      val nTicks = new java.util.concurrent.atomic.AtomicLong(0L)
+      val stream = s.readStream
+        .schema(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("tick",
+            org.apache.spark.sql.types.LongType))))
+        .option("maxFilesPerTrigger", "1").parquet(ticks)
+      graft.streaming.StreamRunner.runForeachBatch(stream) { (b, _) =>
+        b.select(col("tick")).collect().map(_.getLong(0)).foreach { v =>
+          val n = nTicks.incrementAndGet()
+          cdfFold(s, Versioned.changesWithPreImages(s, store, v - 1, v, "k"),
+            cur.get(), s"$state/s$n")
+          cur.set(s"$state/s$n")
         }
-        cdfResult(s, cur.get(), nTicks.get())
-      } finally { rmTree(store); rmTree(ticks); rmTree(state) }
+      }
+      cdfResult(s, cur.get(), nTicks.get())
     }),
 
 
@@ -272,28 +230,24 @@ private[graft] object GatesStreaming {
     // attaching later replays history in commit order. Same
     // signed-delta fold and the same full-recompute oracle as the tick
     // twin (shared val).
-    "stream_k22_cdf_tail" -> ((s, dir) => {
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val store = s"$root/graft-cdftail-$uniq"
-      val state = s"$root/graft-cdftailst-$uniq"
-      val ckpt = s"$root/graft-cdftailck-$uniq"
-      try {
-        val base = cdfBase(s, dir)
-        Versioned.init(s, store, "bucket", base)
-        cdfMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
-        // consumer attaches AFTER v1 (its state is seeded from v1, the
-        // one-time build) and tails the log for everything later
-        cdfSeed(s, store, s"$state/v1")
-        val n = new java.util.concurrent.atomic.AtomicLong(0L)
-        graft.streaming.ChangeFeed.run(s, store, "k", ckpt,
-            startingVersion = 1L, maxFilesPerTrigger = 1) {
-          (cdf, fromV, toV, _) =>
-            n.incrementAndGet()
-            cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
-        }
-        cdfResult(s, s"$state/v${Versioned.latest(store)}", n.get())
-      } finally { rmTree(store); rmTree(state); rmTree(ckpt) }
+    "stream_k22_cdf_tail" -> ((s, dir) =>
+        withScratch("stream_k22_cdf_tail") { root =>
+      val (store, state, ckpt) =
+        (s"$root/store", s"$root/state", s"$root/ckpt")
+      val base = storeBase(s, dir)
+      Versioned.init(s, store, "bucket", base)
+      storeMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
+      // consumer attaches AFTER v1 (its state is seeded from v1, the
+      // one-time build) and tails the log for everything later
+      cdfSeed(s, store, s"$state/v1")
+      val n = new java.util.concurrent.atomic.AtomicLong(0L)
+      graft.streaming.ChangeFeed.run(s, store, "k", ckpt,
+          startingVersion = 1L, maxFilesPerTrigger = 1) {
+        (cdf, fromV, toV, _) =>
+          n.incrementAndGet()
+          cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
+      }
+      cdfResult(s, s"$state/v${Versioned.latest(store)}", n.get())
     }),
 
 
@@ -315,58 +269,54 @@ private[graft] object GatesStreaming {
     // recompute and hash-mismatches. State is re-anchored from the
     // store listing each fold — no in-memory pointer survives, exactly
     // like a restarted consumer.
-    "stream_k25_cdf_resume" -> ((s, dir) => {
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val store = s"$root/graft-cdfresume-$uniq"
-      val state = s"$root/graft-cdfresumest-$uniq"
-      val ckpt = s"$root/graft-cdfresumeck-$uniq"
-      try {
-        val base = cdfBase(s, dir)
-        Versioned.init(s, store, "bucket", base)
-        cdfMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
-        // serving state seeded from v1; state dir per applied interval's
-        // toV — the restart-safe anchor a resumed consumer re-derives
-        cdfSeed(s, store, s"$state/v1")
-        def applied(): Seq[Long] =
-          Option(new java.io.File(state).listFiles())
-            .getOrElse(Array.empty).filter(_.isDirectory)
-            .map(_.getName.stripPrefix("v").toLong).sorted.toIndexedSeq
-        val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
-        val sawRedelivery = new java.util.concurrent.atomic.AtomicBoolean(false)
-        def fold(cdf: org.apache.spark.sql.DataFrame, fromV: Long,
-            toV: Long, batchId: Long): Unit = {
-          if (new java.io.File(s"$state/v$toV").exists()) {
-            // redelivery of an applied-but-uncommitted interval: the
-            // idempotence arm — skip, let the batch commit this time
-            sawRedelivery.set(true)
-          } else {
-            cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
-            // the worst-ordered crash: state written, offsets not
-            if (toV == 3L && crashArmed.getAndSet(false))
-              throw new RuntimeException(
-                "stream_k25_cdf_resume: injected mid-log crash")
-          }
+    "stream_k25_cdf_resume" -> ((s, dir) =>
+        withScratch("stream_k25_cdf_resume") { root =>
+      val (store, state, ckpt) =
+        (s"$root/store", s"$root/state", s"$root/ckpt")
+      val base = storeBase(s, dir)
+      Versioned.init(s, store, "bucket", base)
+      storeMerges(base).foreach(Versioned.merge(s, store, "bucket", "k", _))
+      // serving state seeded from v1; state dir per applied interval's
+      // toV — the restart-safe anchor a resumed consumer re-derives
+      cdfSeed(s, store, s"$state/v1")
+      def applied(): Seq[Long] =
+        Option(new java.io.File(state).listFiles())
+          .getOrElse(Array.empty).filter(_.isDirectory)
+          .map(_.getName.stripPrefix("v").toLong).sorted.toIndexedSeq
+      val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      val sawRedelivery = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def fold(cdf: org.apache.spark.sql.DataFrame, fromV: Long,
+          toV: Long, batchId: Long): Unit = {
+        if (new java.io.File(s"$state/v$toV").exists()) {
+          // redelivery of an applied-but-uncommitted interval: the
+          // idempotence arm — skip, let the batch commit this time
+          sawRedelivery.set(true)
+        } else {
+          cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
+          // the worst-ordered crash: state written, offsets not
+          if (toV == 3L && crashArmed.getAndSet(false))
+            throw new RuntimeException(
+              "stream_k25_cdf_resume: injected mid-log crash")
         }
-        // lifecycle 1: dies mid-log on the injected crash
-        val crashed =
-          try {
-            graft.streaming.ChangeFeed.run(s, store, "k", ckpt)(fold)
-            false
-          } catch { case _: org.apache.spark.sql.streaming
-              .StreamingQueryException => true }
-        require(crashed,
-          "stream_k25_cdf_resume: the injected crash must kill lifecycle 1")
-        require(applied() == Seq(1L, 2L, 3L),
-          s"lifecycle 1 must die having applied v2 and v3: ${applied()}")
-        // lifecycle 2: a FRESH run over the same durable checkpoint
-        graft.streaming.ChangeFeed.run(s, store, "k", ckpt)(fold)
-        require(sawRedelivery.get(),
-          "the uncommitted v3 batch must be redelivered on resume")
-        require(applied() == Seq(1L, 2L, 3L, 4L),
-          s"resume must complete the log exactly once: ${applied()}")
-        cdfResult(s, s"$state/v${applied().max}", applied().size - 1L)
-      } finally { rmTree(store); rmTree(state); rmTree(ckpt) }
+      }
+      // lifecycle 1: dies mid-log on the injected crash
+      val crashed =
+        try {
+          graft.streaming.ChangeFeed.run(s, store, "k", ckpt)(fold)
+          false
+        } catch { case _: org.apache.spark.sql.streaming
+            .StreamingQueryException => true }
+      require(crashed,
+        "stream_k25_cdf_resume: the injected crash must kill lifecycle 1")
+      require(applied() == Seq(1L, 2L, 3L),
+        s"lifecycle 1 must die having applied v2 and v3: ${applied()}")
+      // lifecycle 2: a FRESH run over the same durable checkpoint
+      graft.streaming.ChangeFeed.run(s, store, "k", ckpt)(fold)
+      require(sawRedelivery.get(),
+        "the uncommitted v3 batch must be redelivered on resume")
+      require(applied() == Seq(1L, 2L, 3L, 4L),
+        s"resume must complete the log exactly once: ${applied()}")
+      cdfResult(s, s"$state/v${applied().max}", applied().size - 1L)
     }),
 
 
@@ -378,46 +328,42 @@ private[graft] object GatesStreaming {
     // aggregate off the full recompute. An explicit straddle probe pins
     // that an interval SPANNING the compact (v2→v4) equals the v3→v4
     // one.
-    "stream_k27_cdf_compact" -> ((s, dir) => {
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val store = s"$root/graft-cdfcompact-$uniq"
-      val state = s"$root/graft-cdfcompactst-$uniq"
-      val ckpt = s"$root/graft-cdfcompactck-$uniq"
-      try {
-        val base = cdfBase(s, dir)
-        val merges = cdfMerges(base)
-        Versioned.init(s, store, "bucket", base)
-        Versioned.merge(s, store, "bucket", "k", merges(0))
-        val total = Versioned.read(s, store, 2L).count()
-        // v3: the logical no-op — bins sized so multiple files pack
-        val v3 = Versioned.compact(s, store, "bucket",
-          maxGroupRows = math.max(1L, total / 4))
-        require(v3 == 3L, s"compact must commit v3, got $v3")
-        def mFiles(v: Long) = s.read.parquet(
-            Versioned.manifestDir(store, v))
-          .select(col("file")).distinct().collect()
-          .map(_.getString(0)).toSet
-        require((mFiles(2L) -- mFiles(3L)).nonEmpty &&
-          (mFiles(3L) -- mFiles(2L)).nonEmpty,
-          "the compact must actually rewrite files or the boundary is fake")
-        Versioned.merge(s, store, "bucket", "k", merges(1))
-        // straddle probe: an interval SPANNING the compact equals the
-        // post-compact one — the rewrite contributes nothing
-        val straddle = Versioned.changes(s, store, 2L, 4L, "k").count()
-        val postOnly = Versioned.changes(s, store, 3L, 4L, "k").count()
-        require(straddle == postOnly,
-          s"compact must be CDF-invisible: straddle=$straddle post=$postOnly")
-        cdfSeed(s, store, s"$state/v1")
-        val phantom = new java.util.concurrent.atomic.AtomicLong(0L)
-        graft.streaming.ChangeFeed.run(s, store, "k", ckpt) {
-          (cdf, fromV, toV, _) =>
-            if (toV == 3L) phantom.addAndGet(cdf.count())
-            cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
-        }
-        cdfResult(s, s"$state/v4", 3L,
-          lit(phantom.get()).as("phantom_rows"))
-      } finally { rmTree(store); rmTree(state); rmTree(ckpt) }
+    "stream_k27_cdf_compact" -> ((s, dir) =>
+        withScratch("stream_k27_cdf_compact") { root =>
+      val (store, state, ckpt) =
+        (s"$root/store", s"$root/state", s"$root/ckpt")
+      val base = storeBase(s, dir)
+      val merges = storeMerges(base)
+      Versioned.init(s, store, "bucket", base)
+      Versioned.merge(s, store, "bucket", "k", merges(0))
+      val total = Versioned.read(s, store, 2L).count()
+      // v3: the logical no-op — bins sized so multiple files pack
+      val v3 = Versioned.compact(s, store, "bucket",
+        maxGroupRows = math.max(1L, total / 4))
+      require(v3 == 3L, s"compact must commit v3, got $v3")
+      def mFiles(v: Long) = s.read.parquet(
+          Versioned.manifestDir(store, v))
+        .select(col("file")).distinct().collect()
+        .map(_.getString(0)).toSet
+      require((mFiles(2L) -- mFiles(3L)).nonEmpty &&
+        (mFiles(3L) -- mFiles(2L)).nonEmpty,
+        "the compact must actually rewrite files or the boundary is fake")
+      Versioned.merge(s, store, "bucket", "k", merges(1))
+      // straddle probe: an interval SPANNING the compact equals the
+      // post-compact one — the rewrite contributes nothing
+      val straddle = Versioned.changes(s, store, 2L, 4L, "k").count()
+      val postOnly = Versioned.changes(s, store, 3L, 4L, "k").count()
+      require(straddle == postOnly,
+        s"compact must be CDF-invisible: straddle=$straddle post=$postOnly")
+      cdfSeed(s, store, s"$state/v1")
+      val phantom = new java.util.concurrent.atomic.AtomicLong(0L)
+      graft.streaming.ChangeFeed.run(s, store, "k", ckpt) {
+        (cdf, fromV, toV, _) =>
+          if (toV == 3L) phantom.addAndGet(cdf.count())
+          cdfFold(s, cdf, s"$state/v$fromV", s"$state/v$toV")
+      }
+      cdfResult(s, s"$state/v4", 3L,
+        lit(phantom.get()).as("phantom_rows"))
     }),
 
 
@@ -432,101 +378,93 @@ private[graft] object GatesStreaming {
     // n_versions AND in the aggregate), and the final snapshot equals
     // the batch recompute. A direct same-batchId replay after the run
     // pins the no-op once more (replay_noop).
-    "stream_k31_idempotent_sink" -> ((s, dir) => {
-      val root = shmRoot
-      val uniq = System.nanoTime()
-      val store = s"$root/graft-txnsink-$uniq"
-      val stage = s"$root/graft-txnsinkstg-$uniq"
-      val ckpt = s"$root/graft-txnsinkck-$uniq"
-      try {
-        val base = cdfBase(s, dir)
-        Versioned.init(s, store, "bucket", base)
-        val c0 = base.filter(col("k") % 3 === 0)
-          .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
-          .withColumn("op", lit("U"))
-        val c1 = base.filter(col("k") % 3 === 1).withColumn("op", lit("D"))
-        val c2 = base.filter(col("k") % 5 === 2)
-          .withColumn("price", (col("price") * 5).cast("decimal(18,2)"))
-          .withColumn("op", lit("U"))
-          .unionByName(base.filter(col("k") % 7 === 3)
-            .withColumn("k", col("k") + 80000000L)
-            .withColumn("bucket", pmod(col("k"), lit(8L)))
-            .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
-            .withColumn("op", lit("I")))
-        val sink = Versioned.upsertSink(s, store, "bucket", "k", "ingest")
-        val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
-        def lifecycle(stream: DataFrame): Boolean = {
-          val q = stream.writeStream
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              sink(b, id)
-              // store committed, offsets NOT — the replay window
-              if (id == 1L && crashArmed.getAndSet(false))
-                throw new RuntimeException("stream_k31: injected crash")
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try { q.awaitTermination(); false }
-          catch { case _: org.apache.spark.sql.streaming
-            .StreamingQueryException => true }
-        }
-        val crashed = lifecycle(graft.streaming.Sources.stagedChunkStream(
-          s, Seq(c0, c1, c2), Some(stage)))
-        require(crashed,
-          "stream_k31: the injected crash must kill lifecycle 1")
-        require(Versioned.latest(store) == 3L,
-          s"lifecycle 1 must die having committed batches 0 and 1 " +
-            s"(init+2): ${Versioned.latest(store)}")
-        val crashed2 = lifecycle(s.readStream.schema(c0.schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage))
-        require(!crashed2, "lifecycle 2 must complete")
-        require(Versioned.latest(store) == 4L,
-          "resume must skip the redelivered batch 1 and commit batch 2 " +
-            s"exactly once: latest=${Versioned.latest(store)}")
-        require(Versioned.txnVersion(store, "ingest").contains(2L),
-          s"txn chain must end at batch 2: " +
-            s"${Versioned.txnVersion(store, "ingest")}")
-        // direct replay of the LAST batch under its batchId: no-op
-        sink(c2, 2L)
-        val replayNoop = if (Versioned.latest(store) == 4L) 1L else 0L
-        Versioned.read(s, store)
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("price")).cast("double").as("price_sum"),
-            count(when(col("k") > 80000000L, 1)).as("inserted_ct"))
-          .withColumn("n_versions", lit(Versioned.latest(store)))
-          .withColumn("replay_noop", lit(replayNoop))
-          .orderBy(col("bucket"))
-          .localCheckpoint(true) // materialize before the stores sweep
-      } finally { rmTree(store); rmTree(stage); rmTree(ckpt) }
+    "stream_k31_idempotent_sink" -> ((s, dir) =>
+        withScratch("stream_k31_idempotent_sink") { root =>
+      val (store, stage, ckpt) =
+        (s"$root/store", s"$root/stage", s"$root/ckpt")
+      val base = storeBase(s, dir)
+      Versioned.init(s, store, "bucket", base)
+      val c0 = base.filter(col("k") % 3 === 0)
+        .withColumn("price", (col("price") * 2).cast("decimal(18,2)"))
+        .withColumn("op", lit("U"))
+      val c1 = base.filter(col("k") % 3 === 1).withColumn("op", lit("D"))
+      val c2 = base.filter(col("k") % 5 === 2)
+        .withColumn("price", (col("price") * 5).cast("decimal(18,2)"))
+        .withColumn("op", lit("U"))
+        .unionByName(base.filter(col("k") % 7 === 3)
+          .withColumn("k", col("k") + 80000000L)
+          .withColumn("bucket", pmod(col("k"), lit(8L)))
+          .withColumn("price", (col("price") * 3).cast("decimal(18,2)"))
+          .withColumn("op", lit("I")))
+      val sink = Versioned.upsertSink(s, store, "bucket", "k", "ingest")
+      val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      def lifecycle(stream: DataFrame): Boolean = {
+        val q = stream.writeStream
+          .foreachBatch { (b: DataFrame, id: Long) =>
+            sink(b, id)
+            // store committed, offsets NOT — the replay window
+            if (id == 1L && crashArmed.getAndSet(false))
+              throw new RuntimeException("stream_k31: injected crash")
+          }
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        try { q.awaitTermination(); false }
+        catch { case _: org.apache.spark.sql.streaming
+          .StreamingQueryException => true }
+      }
+      val crashed = lifecycle(graft.streaming.Sources.stagedChunkStream(
+        s, Seq(c0, c1, c2), Some(stage)))
+      require(crashed,
+        "stream_k31: the injected crash must kill lifecycle 1")
+      require(Versioned.latest(store) == 3L,
+        s"lifecycle 1 must die having committed batches 0 and 1 " +
+          s"(init+2): ${Versioned.latest(store)}")
+      val crashed2 = lifecycle(s.readStream.schema(c0.schema)
+        .option("maxFilesPerTrigger", "1").parquet(stage))
+      require(!crashed2, "lifecycle 2 must complete")
+      require(Versioned.latest(store) == 4L,
+        "resume must skip the redelivered batch 1 and commit batch 2 " +
+          s"exactly once: latest=${Versioned.latest(store)}")
+      require(Versioned.txnVersion(store, "ingest").contains(2L),
+        s"txn chain must end at batch 2: " +
+          s"${Versioned.txnVersion(store, "ingest")}")
+      // direct replay of the LAST batch under its batchId: no-op
+      sink(c2, 2L)
+      val replayNoop = Versioned.latest(store) == 4L
+      Versioned.read(s, store)
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("price")).cast("double").as("price_sum"),
+          count(when(col("k") > 80000000L, 1)).as("inserted_ct"))
+        .withColumn("n_versions", lit(Versioned.latest(store)))
+        .withColumn("replay_noop", flag(replayNoop))
+        .orderBy(col("bucket"))
     }),
 
 
-    "stream_k12_incremental" -> ((s, dir) => {
-      val root = shmRoot
-      val path = s"$root/graft-incrstream-${System.nanoTime()}"
-      try {
-        val stream = graft.streaming.Sources.eventsStreamSplit(s, dir, parts = 3)
-        graft.streaming.StreamRunner.runForeachBatch(stream) { (b, _) =>
-          val bs = Incremental.state(
-            b.select(col("event_type"), col("value"),
-              date_format(col("ts"), "yyyy-MM-dd").as("d")),
-            Seq("event_type"), sumCols = Seq("value"), minMaxCols = Seq("d"))
-          val merged =
-            if (new java.io.File(path).exists())
-              Incremental.merge(Seq(s.read.parquet(path), bs), Seq("event_type"))
-                .localCheckpoint(true) // materialize before self-overwrite
-            else bs
-          merged.write.mode("overwrite").parquet(path)
-        }
-        Incremental.finalizeState(s.read.parquet(path))
-          .select(col("event_type"), col("cnt"),
-            col("sum_value").cast("double").as("value_sum"),
-            col("avg_value").as("value_avg"),
-            col("min_d").as("dt_min"), col("max_d").as("dt_max"))
-          .orderBy(col("event_type"))
-          .localCheckpoint(true)
-      } finally rmTree(path)
+    "stream_k12_incremental" -> ((s, dir) =>
+        withScratch("stream_k12_incremental") { root =>
+      val path = s"$root/state"
+      val stream = graft.streaming.Sources.eventsStreamSplit(s, dir, parts = 3)
+      graft.streaming.StreamRunner.runForeachBatch(stream) { (b, _) =>
+        val bs = Incremental.state(
+          b.select(col("event_type"), col("value"),
+            date_format(col("ts"), "yyyy-MM-dd").as("d")),
+          Seq("event_type"), sumCols = Seq("value"), minMaxCols = Seq("d"))
+        val merged =
+          if (new java.io.File(path).exists())
+            Incremental.merge(Seq(s.read.parquet(path), bs), Seq("event_type"))
+              .localCheckpoint(true) // materialize before self-overwrite
+          else bs
+        merged.write.mode("overwrite").parquet(path)
+      }
+      Incremental.finalizeState(s.read.parquet(path))
+        .select(col("event_type"), col("cnt"),
+          col("sum_value").cast("double").as("value_sum"),
+          col("avg_value").as("value_avg"),
+          col("min_d").as("dt_min"), col("max_d").as("dt_max"))
+        .orderBy(col("event_type"))
     }),
 
 
@@ -700,16 +638,14 @@ private[graft] object GatesStreaming {
           when(pmod(col("event_id"), lit(2L)) === 0, lit(77777L))
             .otherwise(col("user_id") + 100000L))
       }
-      val stage = s"$shmRoot/graft-hotkey-${System.nanoTime()}"
-      try {
+      withScratch("stream_skew_hotkey") { stage =>
         graft.streaming.StreamRunner.collect(
           graft.streaming.TwsStreams.uvDedup(
             graft.streaming.Sources.stagedChunkStream(s, chunks, Some(stage))),
           statePartitions = 2)
           .select(col("user_id"), col("dt"), col("event_id"))
           .orderBy(col("user_id"), col("dt"))
-          .localCheckpoint(true) // materialize before the stage sweeps
-      } finally rmTree(stage)
+      }
     }),
 
 
@@ -730,9 +666,7 @@ private[graft] object GatesStreaming {
     "stream_dedup_replay" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
       def part(i: Int) = ev.filter(pmod(col("event_id"), lit(3L)) === i)
-      val root = shmRoot
-      val stage = s"$root/graft-replay-${System.nanoTime()}"
-      try {
+      withScratch("stream_dedup_replay") { stage =>
         val stream = graft.streaming.Sources.stagedChunkStream(s,
           Seq(part(0), part(1).unionByName(part(0)),
             part(2).unionByName(part(1))),
@@ -747,8 +681,7 @@ private[graft] object GatesStreaming {
             count_distinct(col("event_id")).as("ids"),
             count_distinct(col("user_id")).as("users"))
           .orderBy(col("event_type"))
-          .localCheckpoint(true)
-      } finally rmTree(stage)
+      }
     }),
 
 
@@ -763,9 +696,9 @@ private[graft] object GatesStreaming {
     // LAST deduped date per user, which is exactly max(date) per user —
     // an offline SQL truth, so the oracle checks the state CONTENT, not
     // just its shape.
-    "stream_state_reader" -> ((s, dir) => {
-      val ckpt = s"$shmRoot/graft-srckpt-${System.nanoTime()}"
-      val sink = s"graft_sr_${System.nanoTime()}"
+    "stream_state_reader" -> ((s, dir) =>
+        withScratch("stream_state_reader") { ckpt =>
+      val sink = scratchName(ckpt)
       val stream = graft.streaming.TwsStreams.uvDedup(
         graft.streaming.Sources.eventsStreamSplit(s, dir))
       try Sessions.withConf(s, ("spark.sql.shuffle.partitions" -> "2") +:
@@ -780,11 +713,8 @@ private[graft] object GatesStreaming {
           .select(col("key.value").as("user_id"),
             col("value.value").as("last_dt"))
           .orderBy(col("user_id"))
-          .localCheckpoint(true)
-      } finally {
-        s.catalog.dropTempView(sink)
-        rmTree(ckpt)
-      }
+          .localCheckpoint(true) // read the state inside the conf scope
+      } finally s.catalog.dropTempView(sink)
     }),
 
 
@@ -1030,15 +960,13 @@ private[graft] object GatesStreaming {
           when(pmod(col("event_id"), lit(2L)) === 0, lit("hot_type"))
             .otherwise(col("event_type")))
       }
-      val stage = s"$shmRoot/graft-hotagg-${System.nanoTime()}"
-      try {
+      withScratch("stream_skew_hotagg") { stage =>
         graft.streaming.StreamRunner.collect(
           graft.streaming.WindowedStreams.productStats(
             graft.streaming.Sources.stagedChunkStream(s, chunks, Some(stage))),
           outputMode = "complete")
           .orderBy(col("stt"), col("event_type"))
-          .localCheckpoint(true) // materialize before the stage sweeps
-      } finally rmTree(stage)
+      }
     }),
 
 
@@ -1056,15 +984,13 @@ private[graft] object GatesStreaming {
           when(pmod(col("event_id"), lit(2L)) === 0, lit("hot_type"))
             .otherwise(col("event_type")))
       }
-      val stage = s"$shmRoot/graft-skewsalt-${System.nanoTime()}"
-      try {
+      withScratch("stream_skew_salted") { stage =>
         graft.streaming.StreamRunner.collect(
           graft.streaming.WindowedStreams.productStatsSalted(
             graft.streaming.Sources.stagedChunkStream(s, chunks, Some(stage))),
           statePartitions = 1)
           .orderBy(col("stt"), col("event_type"))
-          .localCheckpoint(true) // materialize before the stage sweeps
-      } finally rmTree(stage)
+      }
     }),
 
 
@@ -1262,44 +1188,46 @@ private[graft] object GatesStreaming {
     })
   )
 
+  /** Session truth, shared by the session_window gate and its
+    * transformWithState twin: a session emits once the final watermark
+    * (ms, 0s delay → floor(max_us/1000)) is at or past its end (last +
+    * 30 min gap). */
+  private val sessionOracleSql =
+    """WITH f AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+      |mx AS (SELECT max(us) AS mu FROM f),
+      |g AS (SELECT user_id, event_id, us,
+      |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
+      |         THEN 1 ELSE 0 END AS nw
+      |  FROM f WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+      |h AS (SELECT user_id, us,
+      |    SUM(nw) OVER (PARTITION BY user_id ORDER BY us, event_id
+      |                  ROWS UNBOUNDED PRECEDING) AS sid
+      |  FROM g),
+      |sess AS (SELECT user_id, sid, MIN(us) AS stt_us, MAX(us) AS last_us,
+      |         COUNT(*) AS n_events
+      |  FROM h GROUP BY user_id, sid)
+      |SELECT user_id, stt_us, n_events FROM sess, mx
+      |WHERE (last_us + 1800000000)//1000 <= mu//1000
+      |ORDER BY user_id, stt_us""".stripMargin
+
   /** Full recompute of the final versioned snapshot (three merge
     * batches replayed over the raw table) — the shared oracle of both
     * CDF consumers. */
   private val cdfRecomputeSql: String =
-    """WITH base AS (SELECT o_orderkey AS k,
-          |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-          |    o_orderkey % 8 AS bucket FROM orders),
-          |v2 AS (
-          |  SELECT k, price, bucket FROM base
-          |    WHERE NOT (bucket = 5 AND k % 3 = 1)
-          |      AND NOT (bucket = 2 AND k % 3 = 0)
-          |  UNION ALL
-          |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)), bucket FROM base
-          |    WHERE bucket = 2 AND k % 3 = 0
-          |  UNION ALL
-          |  SELECT k + 80000000, price, bucket FROM base
-          |    WHERE bucket = 2 AND k % 3 = 2),
-          |v3 AS (
-          |  SELECT k, price, bucket FROM v2
-          |    WHERE NOT (bucket = 2 AND k % 3 = 0)
-          |      AND NOT (bucket = 7 AND k % 5 = 1)
-          |  UNION ALL
-          |  SELECT k, CAST(price * 3 AS DECIMAL(18,2)), bucket FROM base
-          |    WHERE bucket = 7 AND k % 5 = 1
-          |  UNION ALL
-          |  SELECT k + 90000000, price, bucket FROM base
-          |    WHERE bucket = 7 AND k % 5 = 2),
-          |v4 AS (
-          |  SELECT k, price, bucket FROM v3
-          |    WHERE NOT (bucket = 1 AND k % 4 = 0)
-          |      AND NOT (bucket = 3 AND k % 7 = 2)
-          |  UNION ALL
-          |  SELECT k, CAST(price * 7 AS DECIMAL(18,2)), bucket FROM base
-          |    WHERE bucket = 1 AND k % 4 = 0)
-          |SELECT bucket, COUNT(*) AS cnt,
-          |  CAST(SUM(price) AS DOUBLE) AS price_sum,
-          |  CAST(3 AS BIGINT) AS n_ticks
-          |FROM v4 GROUP BY bucket ORDER BY bucket""".stripMargin
+    s"""${storeBaseSql(8)},
+      |$storeV2Sql,
+      |${storeV3Sql("v3")},
+      |v4 AS (
+      |  SELECT k, price, bucket FROM v3
+      |    WHERE NOT (bucket = 1 AND k % 4 = 0)
+      |      AND NOT (bucket = 3 AND k % 7 = 2)
+      |  UNION ALL
+      |  SELECT k, CAST(price * 7 AS DECIMAL(18,2)), bucket FROM base
+      |    WHERE bucket = 1 AND k % 4 = 0)
+      |SELECT bucket, COUNT(*) AS cnt,
+      |  CAST(SUM(price) AS DOUBLE) AS price_sum,
+      |  CAST(3 AS BIGINT) AS n_ticks
+      |FROM v4 GROUP BY bucket ORDER BY bucket""".stripMargin
 
   /** DuckDB oracle SQL, column-name-aligned with `queries`. */
   def oracleSql: Map[String, String] = Map(
@@ -1336,29 +1264,9 @@ private[graft] object GatesStreaming {
     // entirely — phantom rows from the rewrite would break BOTH the
     // phantom_rows column and the aggregate
     "stream_k27_cdf_compact" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
-        |v2 AS (
-        |  SELECT k, price, bucket FROM base
-        |    WHERE NOT (bucket = 5 AND k % 3 = 1)
-        |      AND NOT (bucket = 2 AND k % 3 = 0)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 2 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 80000000, price, bucket FROM base
-        |    WHERE bucket = 2 AND k % 3 = 2),
-        |v4 AS (
-        |  SELECT k, price, bucket FROM v2
-        |    WHERE NOT (bucket = 2 AND k % 3 = 0)
-        |      AND NOT (bucket = 7 AND k % 5 = 1)
-        |  UNION ALL
-        |  SELECT k, CAST(price * 3 AS DECIMAL(18,2)), bucket FROM base
-        |    WHERE bucket = 7 AND k % 5 = 1
-        |  UNION ALL
-        |  SELECT k + 90000000, price, bucket FROM base
-        |    WHERE bucket = 7 AND k % 5 = 2)
+      s"""${storeBaseSql(8)},
+        |$storeV2Sql,
+        |${storeV3Sql("v4")}
         |SELECT bucket, COUNT(*) AS cnt,
         |  CAST(SUM(price) AS DOUBLE) AS price_sum,
         |  CAST(3 AS BIGINT) AS n_ticks, CAST(0 AS BIGINT) AS phantom_rows
@@ -1370,9 +1278,7 @@ private[graft] object GatesStreaming {
     // all be invisible — n_versions pins the log length (init + one
     // version per DISTINCT batch), the aggregate pins the content
     "stream_k31_idempotent_sink" ->
-      """WITH base AS (SELECT o_orderkey AS k,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-        |    o_orderkey % 8 AS bucket FROM orders),
+      s"""${storeBaseSql(8)},
         |fin AS (
         |  SELECT k, bucket,
         |    CASE WHEN k % 5 = 2 THEN CAST(price*5 AS DECIMAL(18,2))
@@ -1560,13 +1466,7 @@ private[graft] object GatesStreaming {
     // so it shares this oracle verbatim.
     "stream_dedup_incremental" ->
       s"""WITH perms(i, a, b) AS (VALUES ${permValuesSql(64)}),
-        |toks AS (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |      ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
-        |  FROM toks),
+        |${shingleSql(3)},
         |hv AS (SELECT doc_id, CAST(md5_number_lower(sv) % 2147483647 AS BIGINT) AS h
         |  FROM (SELECT doc_id, unnest(s) AS sv FROM sh)),
         |mh AS (SELECT doc_id, p.i AS i,
@@ -1672,33 +1572,13 @@ private[graft] object GatesStreaming {
     // same oracle again: the tws session twin changes the state API
     // (ValueState + timer vs the session_window operator), not the answer
     "stream_t4_session_tws" ->
-      """WITH f AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |mx AS (SELECT max(us) AS mu FROM f),
-        |g AS (SELECT user_id, event_id, us,
-        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS nw
-        |  FROM f WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |h AS (SELECT user_id, us,
-        |    SUM(nw) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                  ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM g),
-        |sess AS (SELECT user_id, sid, MIN(us) AS stt_us, MAX(us) AS last_us,
-        |         COUNT(*) AS n_events
-        |  FROM h GROUP BY user_id, sid)
-        |SELECT user_id, stt_us, n_events FROM sess, mx
-        |WHERE (last_us + 1800000000)//1000 <= mu//1000
-        |ORDER BY user_id, stt_us""".stripMargin,
+      sessionOracleSql,
 
 
     // Checkpoint resume re-derives the SINGLE-RUN dedup truth: the union
     // of the two lifecycles must equal it exactly (see the gate comment).
     "stream_t8_checkpoint_resume" ->
-      """WITH f AS (SELECT user_id,
-        |    strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS dt, event_id,
-        |    row_number() OVER (PARTITION BY user_id, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d')
-        |                       ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |  FROM events)
-        |SELECT user_id, dt, event_id FROM f WHERE rn = 1 ORDER BY user_id, dt""".stripMargin,
+      uvDedupOracleSql,
 
 
     "stream_j3_enrich" ->
@@ -1956,22 +1836,7 @@ private[graft] object GatesStreaming {
     // session_window cutoff: a session emits once the final watermark (ms,
     // 0s delay → floor(max_us/1000)) is at or past its end (last + gap)
     "stream_t4_session" ->
-      """WITH f AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |mx AS (SELECT max(us) AS mu FROM f),
-        |g AS (SELECT user_id, event_id, us,
-        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS nw
-        |  FROM f WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |h AS (SELECT user_id, us,
-        |    SUM(nw) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                  ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM g),
-        |sess AS (SELECT user_id, sid, MIN(us) AS stt_us, MAX(us) AS last_us,
-        |         COUNT(*) AS n_events
-        |  FROM h GROUP BY user_id, sid)
-        |SELECT user_id, stt_us, n_events FROM sess, mx
-        |WHERE (last_us + 1800000000)//1000 <= mu//1000
-        |ORDER BY user_id, stt_us""".stripMargin,
+      sessionOracleSql,
 
 
     "stream_a4_sql" ->

@@ -22,9 +22,4 @@ object ExprUtil {
   /** Evaluate `c` once; make it available to `f` as a bound variable. */
   def bind(c: Column)(f: Column => Column): Column =
     element_at(transform(array(c), f), 1)
-
-  /** Two-value form: both evaluated once. */
-  def bind2(a: Column, b: Column)(f: (Column, Column) => Column): Column =
-    element_at(transform(array(struct(a.as("_1"), b.as("_2"))), s =>
-      f(s.getField("_1"), s.getField("_2"))), 1)
 }

@@ -41,13 +41,6 @@ object TextFns {
             i => concat_ws(" ", slice(t, i + 1, lit(n)))))
     }
 
-  /** Character n-grams of the raw string (for language-ID profiles). */
-  def charNgrams(c: Column, n: Int): Column = {
-    val s = lower(c)
-    when(length(s) < n, array(s)).otherwise(
-      transform(sequence(lit(0), length(s) - lit(n)), i => substring(s, lit(1) + i, lit(n))))
-  }
-
   private val Stopwords = Seq("the", "a", "an", "of", "and", "to", "in", "is", "it", "that")
 
   /** Stopword ratio: fraction of tokens that are common English stopwords. */

@@ -40,12 +40,4 @@ object ServingApi {
       .head()
     Option(r.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
   }
-
-  /** The same query via SQL over a registered stats table (the exact
-    * serving path: one filter + sum through Catalyst). */
-  def gmvSql(spark: SparkSession, statsView: String, date: Int): DataFrame =
-    spark.sql(
-      s"""SELECT sum(order_amount) AS order_amount
-         |FROM $statsView
-         |WHERE date_format(to_timestamp(stt), 'yyyyMMdd') = '$date'""".stripMargin)
 }

@@ -41,10 +41,6 @@ object LogPipeline {
     (starts, pages, rest)
   }
 
-  /** P5: keep only the configured columns (sinkColumns CSV semantics). */
-  def pruneColumns(df: DataFrame, sinkColumns: String): DataFrame =
-    df.select(sinkColumns.split(",").toIndexedSeq.map(c => col(c.trim)): _*)
-
   /** P6: derived calendar columns from the event timestamp. */
   def derivedDates(df: DataFrame, tsCol: String = "ts"): DataFrame =
     df

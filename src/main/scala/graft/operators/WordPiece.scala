@@ -81,11 +81,6 @@ object WordPiece {
         array(pieces.map(lit): _*)))
   }
 
-  /** [[encodeUnits]] over whitespace-lowered words of `documents.text`. */
-  def encodeWords(documents: DataFrame, pieces: Seq[String]): DataFrame =
-    encodeUnits(documents
-      .select(explode(TextFns.tokensWs(col("text"))).as("unit")), pieces)
-
   /** LIKELIHOOD-SCORED merge induction — true WordPiece TRAINING (Schuster
     * & Nakajima 2012; the BPE loop with a different argmax): each round
     * merges the adjacent pair maximizing `ct / (ct_a · ct_b)` — the pair

@@ -7,13 +7,10 @@ import org.apache.spark.sql.Row
 
 /** Streaming sink surface (SURVEY.md §2.2).
   *
-  *  - K1 fixed-topic Kafka producer (util/MyKafkaUtil.java:21-23).
-  *  - K2 dynamic-topic producer (util/MyKafkaUtil.java:25-30): Spark's
-  *    kafka sink honors a per-row `topic` column natively.
-  *  - K3 JDBC/ClickHouse batch sink (util/ClickHouseUtil.java:16-54):
-  *    foreachBatch + append; `@TransientSink` column skipping becomes a
-  *    drop. The micro-batch IS the batching unit (the reference's
-  *    batchSize/interval knobs collapse into the trigger).
+  *  - K1 fixed-topic Kafka producer (util/MyKafkaUtil.java:21-23) and
+  *    K2 dynamic-topic producer (util/MyKafkaUtil.java:25-30): the row
+  *    shaping only (Spark's kafka sink honors a per-row `topic` column
+  *    natively); no connector jar ships with this build, so no writer.
   *  - K4/K5 dim upsert with auto-create (func/DimSinkFunction.java:28-72,
   *    TableProcessFunction.java:87-148): merge-by-key overwrite; first
   *    write creates the table (the reference's generated Phoenix DDL —
@@ -27,27 +24,6 @@ object Sinks {
   def kafkaValue(df: DataFrame): DataFrame =
     df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
 
-  /** The EXACT writer configurations K1/K2 emit — extracted so the Kafka
-    * closure spec can pin them without a broker or connector jar
-    * (KafkaClosureSpec): a fixed-topic sink names its topic in the
-    * options; the dynamic sink names NO topic (each row routes by its
-    * own `topic` column — the connector's documented per-row contract). */
-  private[graft] def kafkaSinkConf(servers: String, topic: Option[String],
-      checkpoint: String): (String, Map[String, String]) =
-    ("kafka", Map(
-      "kafka.bootstrap.servers" -> servers,
-      "checkpointLocation" -> checkpoint) ++
-      topic.map("topic" -> _))
-
-  /** K1: write to one Kafka topic. */
-  def toKafka(df: DataFrame, servers: String, topic: String,
-      checkpoint: String): StreamingQuery = {
-    val (fmt, opts) = kafkaSinkConf(servers, Some(topic), checkpoint)
-    opts.foldLeft(kafkaValue(df).writeStream.format(fmt)) {
-        case (w, (k, v)) => w.option(k, v) }
-      .start()
-  }
-
   /** K2 row shaping: per-row topic from `topicCol`, remaining columns
     * JSON-packed into `value` — the KafkaSerializationSchema analogue as a
     * pure function (dwd/BaseDBApp.java:93-98). */
@@ -56,30 +32,6 @@ object Sinks {
       .select(col("topic"),
         to_json(struct(df.columns.toIndexedSeq.filter(_ != topicCol).map(col): _*))
           .as("value"))
-
-  /** K2: dynamic topic — the sink routes each row by its `topic` column. */
-  def toKafkaDynamic(df: DataFrame, servers: String, topicCol: String,
-      checkpoint: String): StreamingQuery = {
-    val (fmt, opts) = kafkaSinkConf(servers, None, checkpoint)
-    opts.foldLeft(dynamicTopicRows(df, topicCol).writeStream.format(fmt)) {
-        case (w, (k, v)) => w.option(k, v) }
-      .start()
-  }
-
-  /** K3: append each micro-batch to a parquet table, dropping transient
-    * (sink-skipped) columns. Works for any JDBC-style store by swapping the
-    * inner writer. */
-  def foreachBatchParquet(df: DataFrame, path: String, checkpoint: String,
-      transientCols: Seq[String] = Nil,
-      trigger: Trigger = Trigger.ProcessingTime("2 seconds")): StreamingQuery =
-    df.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.drop(transientCols: _*).write.mode(SaveMode.Append).parquet(path)
-      }
-      .start()
 
   /** K4/K5: upsert each micro-batch into a keyed dim table stored as
     * parquet: latest row per key wins; table auto-created on first batch.

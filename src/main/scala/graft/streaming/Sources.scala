@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
   *
   *  - S1 Kafka string source (util/MyKafkaUtil.java:32-37): subscribe +
   *    value-as-string.
-  *  - S2 Kafka JSON DDL source (util/MyKafkaUtil.java:40-48): declared
-  *    schema + event-time column + watermark.
+  *  - S2 Kafka JSON DDL source (util/MyKafkaUtil.java:40-48): no entry
+  *    point; `from_json` + `withWatermark` over S1's `value` column is the
+  *    whole recipe.
   *  - S3/S4 CDC envelope source (ods/Flink_CDCWithCustomerSchema_Ods.java:
   *    50-124): Debezium-style {database, tableName, before, after, type}
   *    records, with the reference's create→insert rename. Spark has no
@@ -44,15 +45,6 @@ object Sources {
         col("value").cast("string").as("value"),
         col("topic"), col("partition"), col("offset"), col("timestamp"))
   }
-
-  /** S2: Kafka JSON records with a declared schema, event-time column and
-    * watermark — the Flink SQL DDL-with-WATERMARK analogue. */
-  def kafkaJson(spark: SparkSession, servers: String, topic: String,
-      schema: StructType, tsField: String, watermarkDelay: String): DataFrame =
-    kafkaStrings(spark, servers, topic)
-      .select(from_json(col("value"), schema).as("r"))
-      .select(col("r.*"))
-      .withWatermark(tsField, watermarkDelay)
 
   /** CDC changelog envelope schema (S4). `before`/`after` stay as raw JSON
     * strings because the payload schema differs per source table; per-table

@@ -22,7 +22,13 @@ import scala.jdk.CollectionConverters._
   *
   * No library path infers a JSON schema: a `read.json(` without an
   * explicit `.schema(` in its reader chain runs a full extra decode of
-  * its input, plus a Spark job, just to find the columns. */
+  * its input, plus a Spark job, just to find the columns.
+  *
+  * The gate registry (`Gates*.scala`) keeps one copy of its scratch and
+  * probe idioms, in `GateSupport`: a gate takes its scratch dir from
+  * `withScratch` (named for the gate, materialized, swept on every exit)
+  * and its probe summaries from `probeSums`, so no gate builds a
+  * `System.nanoTime()` path, calls `rmTree(` or defines a `summarize`. */
 class StoreLayoutGuardSpec extends AnyFunSuite {
 
   /** Every `src/main/scala` file other than `exempt`, with its lines. */
@@ -80,6 +86,14 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
           s"$p:${line + 1}: ${lines(line).trim}"
         }
     }
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no gate builds its own scratch scope or probe summary") {
+    val found = offenders("")(line =>
+      Seq("System.nanoTime()", "rmTree(").exists(line.contains) ||
+        line.matches(""".*\bdef summarize\b.*"""))
+      .filter(_.startsWith("src/main/scala/graft/Gates"))
     assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -32,24 +32,6 @@ class KafkaClosureSpec extends SparkSpec {
       "startingOffsets" -> "earliest"))
   }
 
-  test("kafkaSinkConf: K1 names its fixed topic; K2 (dynamic) names NO " +
-    "topic so each row routes by its own topic column") {
-    val (fmt1, fixed) = Sinks.kafkaSinkConf(
-      "b:9092", Some("dwd_page_log"), "/ckpt/a")
-    assert(fmt1 === "kafka")
-    assert(fixed === Map(
-      "kafka.bootstrap.servers" -> "b:9092",
-      "checkpointLocation" -> "/ckpt/a",
-      "topic" -> "dwd_page_log"))
-    val (fmt2, dyn) = Sinks.kafkaSinkConf("b:9092", None, "/ckpt/b")
-    assert(fmt2 === "kafka")
-    assert(!dyn.contains("topic"),
-      "the dynamic sink must not pin a topic option — per-row routing")
-    assert(dyn === Map(
-      "kafka.bootstrap.servers" -> "b:9092",
-      "checkpointLocation" -> "/ckpt/b"))
-  }
-
   test("sink row shaping: kafkaValue packs ALL columns into one JSON " +
     "value; dynamicTopicRows emits exactly (topic, value)") {
     val df = Seq((1L, "a", "t_x"), (2L, "b", "t_y"))
