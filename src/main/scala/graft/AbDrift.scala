@@ -396,12 +396,9 @@ object AbDrift {
       "ch_agg_rocks" -> (() => rocksCl(chainedAgg(2))),
       "single_agg_sp2" -> (() => singleAgg(2)),
       "ch_join_sp1" -> (() => {
-        val (views, clicks) = GatesStreaming.viewsClicks(
-          graft.streaming.Sources.eventsStreamSplit(spark, sfDir))
         graft.streaming.StreamRunner.collect(
-          graft.operators.Joins.intervalJoin(
-              views, clicks, "v_user", "c_user", "v_ts", "c_ts",
-              lowerSec = 0L, upperSec = 600L)
+          GatesStreaming.viewClickJoin(
+              graft.streaming.Sources.eventsStreamSplit(spark, sfDir))
             .groupBy(window(col("v_ts"), "3600 seconds"))
             .agg(count(lit(1)).as("pair_ct")),
           statePartitions = 1).count()

@@ -21,16 +21,28 @@ private[graft] object GateSupport {
   private[graft] def flag(b: Boolean): Column = lit(if (b) 1L else 0L)
 
   /** A gate's scratch scope: a fresh directory under `shmRoot` named for
-    * the gate is handed to `body`, the body's frame is materialized, and
+    * the gate is handed to `body`, the body's frame is materialized
+    * unless it already reads only driver-local rows or checkpoints, and
     * the directory is swept whether the body returned or threw. One
     * directory per call, so gates running at once never share one. */
   private[graft] def withScratch(name: String)(
       body: String => DataFrame): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(TmpDirs.shmRoot), s"graft-$name-").toString
-    try body(root).localCheckpoint(true)
-    finally TmpDirs.rmTree(root)
+    try {
+      val out = body(root)
+      if (materialized(out)) out else out.localCheckpoint(true)
+    } finally TmpDirs.rmTree(root)
   }
+
+  /** True when every leaf of `df`'s plan is a LocalRelation or a
+    * materialized checkpoint: nothing it reads can be swept away. */
+  private def materialized(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }
 
   /** A catalog name unique to the scratch dir `root`, for the tables and
     * views a gate registers beside it. */

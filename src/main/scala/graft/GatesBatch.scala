@@ -17,6 +17,37 @@ import org.apache.spark.sql.functions._
 private[graft] object GatesBatch {
   import GateSupport._
 
+  /** Orders dated in [lo, hi). */
+  private def ordersIn(s: SparkSession, dir: String, lo: String,
+      hi: String): DataFrame =
+    Tables.orders(s, dir)
+      .filter(col("o_orderdate") >= lit(lo).cast("timestamp") &&
+        col("o_orderdate") < lit(hi).cast("timestamp"))
+
+  /** The set gates' inputs: the customer of each 1997 H1 order and of
+    * each 1997 H2 order. */
+  private def halfYearCustomers(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) =
+    (ordersIn(s, dir, "1997-01-01", "1997-07-01").select(col("o_custkey")),
+      ordersIn(s, dir, "1997-07-01", "1998-01-01").select(col("o_custkey")))
+
+  /** Order revenue per (nation, customer). */
+  private def customerRevenue(s: SparkSession, dir: String): DataFrame = {
+    val o = Tables.orders(s, dir)
+    val c = Tables.customer(s, dir)
+    val n = Tables.nation(s, dir)
+    o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
+      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+      .groupBy(col("n_name"), col("o_custkey"))
+      .agg(sum(dec("o_totalprice")).cast("double").as("revenue"))
+  }
+
+  /** [[customerRevenue]]'s ranking window: by revenue within a nation,
+    * ties to the customer key. */
+  private def byNationRevenue =
+    org.apache.spark.sql.expressions.Window
+      .partitionBy(col("n_name")).orderBy(col("revenue").desc, col("o_custkey"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── Flagship: TPC-H Q1 pricing summary (A-class agg, full scan shape)
@@ -97,10 +128,7 @@ private[graft] object GatesBatch {
     // of how many lineitems qualify — the dedup the EXISTS contract
     // requires, with no distinct pass.
     "q4_priority_semi" -> ((s, dir) => {
-      val ord = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-07-01").cast("timestamp"))
-      ord.join(Tables.lineitem(s, dir),
+      ordersIn(s, dir, "1997-01-01", "1997-07-01").join(Tables.lineitem(s, dir),
           col("l_orderkey") === col("o_orderkey") &&
             col("l_shipdate") > col("o_orderdate") + expr("INTERVAL '90' DAY"),
           "left_semi")
@@ -115,10 +143,7 @@ private[graft] object GatesBatch {
     // pair as a direct gate (left_anti otherwise appears only inside the
     // decontaminate / keepCanonical pipelines).
     "q6_priority_anti" -> ((s, dir) => {
-      val ord = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-07-01").cast("timestamp"))
-      ord.join(Tables.lineitem(s, dir),
+      ordersIn(s, dir, "1997-01-01", "1997-07-01").join(Tables.lineitem(s, dir),
           col("l_orderkey") === col("o_orderkey") &&
             col("l_shipdate") <= col("o_orderdate") + expr("INTERVAL '30' DAY"),
           "left_anti")
@@ -1210,16 +1235,8 @@ private[graft] object GatesBatch {
 
     // ── A6: top-N per group (serving-layer ranking)
     "a6_topn_per_group" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val rev = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"), col("o_custkey"))
-        .agg(sum(dec("o_totalprice")).cast("double").as("revenue"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("n_name")).orderBy(col("revenue").desc, col("o_custkey"))
-      rev.withColumn("rnk", row_number().over(w))
+      customerRevenue(s, dir)
+        .withColumn("rnk", row_number().over(byNationRevenue))
         .filter(col("rnk") <= 3)
         .orderBy(col("n_name"), col("rnk"))
     }),
@@ -1488,16 +1505,8 @@ private[graft] object GatesBatch {
     // percent_rank is a single division of small exact ints →
     // bit-identical across engines.
     "a13_rank_suite" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val rev = o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"), col("o_custkey"))
-        .agg(sum(dec("o_totalprice")).cast("double").as("revenue"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("n_name")).orderBy(col("revenue").desc, col("o_custkey"))
-      rev
+      val w = byNationRevenue
+      customerRevenue(s, dir)
         .withColumn("rnk", rank().over(w).cast("long"))
         .withColumn("drnk", dense_rank().over(w).cast("long"))
         .withColumn("prnk", percent_rank().over(w))
@@ -1511,25 +1520,13 @@ private[graft] object GatesBatch {
     // compile to one aggregate + semi/anti join on the full row, one
     // shuffle each. Customers active in both halves of 1997 / only H1.
     "set_intersect" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val h1 = o.filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-07-01").cast("timestamp"))
-        .select(col("o_custkey"))
-      val h2 = o.filter(col("o_orderdate") >= lit("1997-07-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-        .select(col("o_custkey"))
+      val (h1, h2) = halfYearCustomers(s, dir)
       h1.intersect(h2).orderBy(col("o_custkey"))
     }),
 
 
     "set_except" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val h1 = o.filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-07-01").cast("timestamp"))
-        .select(col("o_custkey"))
-      val h2 = o.filter(col("o_orderdate") >= lit("1997-07-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-        .select(col("o_custkey"))
+      val (h1, h2) = halfYearCustomers(s, dir)
       h1.except(h2).orderBy(col("o_custkey"))
     }),
 

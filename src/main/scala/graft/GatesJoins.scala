@@ -17,6 +17,23 @@ import org.apache.spark.sql.functions._
 private[graft] object GatesJoins {
   import GateSupport._
 
+  /** The join gates' answer: row count and revenue per order priority. */
+  private def priorityRevenue(joined: DataFrame): DataFrame =
+    joined.groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("ct"),
+        sum(col("l_extendedprice").cast("decimal(12,2)"))
+          .cast("double").as("revenue"))
+      .orderBy(col("o_orderpriority"))
+
+  /** The graph gates' bounded co-occurrence graph: lineitem's
+    * (orderkey, partkey) mod 300 as canonical edges. */
+  private def modGraph(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Graph.canonicalEdges(
+      Tables.lineitem(s, dir).select(
+        pmod(col("l_orderkey"), lit(300L)).as("s"),
+        pmod(col("l_partkey"), lit(300L)).as("d")),
+      "s", "d")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── J8: salted equi-join — the targeted skew recipe as a direct gate.
@@ -30,12 +47,7 @@ private[graft] object GatesJoins {
         .select(col("l_orderkey"), col("l_extendedprice"))
       val ord = Tables.orders(s, dir)
         .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-      Joins.saltedJoin(li, ord, "l_orderkey", buckets = 8)
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("ct"),
-          sum(col("l_extendedprice").cast("decimal(12,2)"))
-            .cast("double").as("revenue"))
-        .orderBy(col("o_orderpriority"))
+      priorityRevenue(Joins.saltedJoin(li, ord, "l_orderkey", buckets = 8))
     }),
 
 
@@ -80,14 +92,9 @@ private[graft] object GatesJoins {
           col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1997-07-01").cast("timestamp"))
         .select(col("o_orderkey"), col("o_orderpriority"))
-      Joins.bloomPreFilteredJoin(
+      priorityRevenue(Joins.bloomPreFilteredJoin(
           Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice")),
-          build, "l_orderkey", "o_orderkey")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("ct"),
-          sum(col("l_extendedprice").cast("decimal(12,2)"))
-            .cast("double").as("revenue"))
-        .orderBy(col("o_orderpriority"))
+          build, "l_orderkey", "o_orderkey"))
     }),
 
 
@@ -137,13 +144,8 @@ private[graft] object GatesJoins {
         graft.operators.Bucketing.writeBucketed(
           Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderpriority")),
           rtab, rpath, "o_orderkey", numBuckets = 8)
-        graft.operators.Bucketing.bucketedJoin(s, ltab, rtab,
-            "l_orderkey", "o_orderkey")
-          .groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("ct"),
-            sum(col("l_extendedprice").cast("decimal(12,2)"))
-              .cast("double").as("revenue"))
-          .orderBy(col("o_orderpriority"))
+        priorityRevenue(graft.operators.Bucketing.bucketedJoin(s, ltab, rtab,
+            "l_orderkey", "o_orderkey"))
           .localCheckpoint(true) // read the tables before they drop
       } finally {
         graft.operators.Bucketing.drop(s, ltab)
@@ -327,15 +329,9 @@ private[graft] object GatesJoins {
     // base + 85·Σ div 100, all longs, so the oracle replays the SAME
     // arithmetic through three unrolled CTE rounds and summation order
     // cannot matter. Same bounded mod-300 graph as graph_triangles.
-    "graph_pagerank" -> ((s, dir) => {
-      val edges = graft.operators.Graph.canonicalEdges(
-        Tables.lineitem(s, dir).select(
-          pmod(col("l_orderkey"), lit(300L)).as("s"),
-          pmod(col("l_partkey"), lit(300L)).as("d")),
-        "s", "d")
-      graft.operators.Graph.pageRank(edges, iters = 3)
-        .orderBy(col("node"))
-    }),
+    "graph_pagerank" -> ((s, dir) =>
+      graft.operators.Graph.pageRank(modGraph(s, dir), iters = 3)
+        .orderBy(col("node"))),
 
 
     // ── Graph analytics: exact triangle + wedge counts over a derived
@@ -349,14 +345,8 @@ private[graft] object GatesJoins {
     // the operator (GraphSpec pins orientation == naive on random
     // graphs and the K4/star/path shapes). Oracle: DuckDB's literal
     // a<b<c 3-way join plus the closed-form wedge sum.
-    "graph_triangles" -> ((s, dir) => {
-      val edges = graft.operators.Graph.canonicalEdges(
-        Tables.lineitem(s, dir).select(
-          pmod(col("l_orderkey"), lit(300L)).as("s"),
-          pmod(col("l_partkey"), lit(300L)).as("d")),
-        "s", "d")
-      graft.operators.Graph.triangleStats(edges)
-    }),
+    "graph_triangles" -> ((s, dir) =>
+      graft.operators.Graph.triangleStats(modGraph(s, dir))),
 
 
     // ── J18: spatial proximity self-join — all point pairs within ε via
@@ -449,6 +439,22 @@ private[graft] object GatesJoins {
       }
     })
   )
+
+  /** DuckDB's native ASOF LEFT JOIN; the 90-day tolerance is replayed as
+    * a post-join CASE (exact — see the j19 gate comment). */
+  private val asOfOracleSql =
+    """WITH r AS (
+      |  SELECT o_custkey AS ck, o_orderdate AS od,
+      |    MAX(o_totalprice) AS p
+      |  FROM orders GROUP BY 1, 2)
+      |SELECT o1.o_orderkey,
+      |  CASE WHEN epoch_us(o1.o_orderdate) - epoch_us(r.od)
+      |         <= 7776000000000 THEN r.od END AS prev_date,
+      |  CASE WHEN epoch_us(o1.o_orderdate) - epoch_us(r.od)
+      |         <= 7776000000000 THEN r.p END AS prev_price
+      |FROM orders o1 ASOF LEFT JOIN r
+      |  ON o1.o_custkey = r.ck AND o1.o_orderdate > r.od
+      |ORDER BY o1.o_orderkey""".stripMargin
 
   /** DuckDB oracle SQL, column-name-aligned with `queries`. */
   def oracleSql: Map[String, String] = Map(
@@ -648,38 +654,12 @@ private[graft] object GatesJoins {
         |ORDER BY id_a, id_b""".stripMargin,
 
 
-    // DuckDB's native ASOF LEFT JOIN; the 90-day tolerance is replayed as
-    // a post-join CASE (exact — see the j19 gate comment)
-    "j19_asof_exec" ->
-      """WITH r AS (
-        |  SELECT o_custkey AS ck, o_orderdate AS od,
-        |    MAX(o_totalprice) AS p
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT o1.o_orderkey,
-        |  CASE WHEN epoch_us(o1.o_orderdate) - epoch_us(r.od)
-        |         <= 7776000000000 THEN r.od END AS prev_date,
-        |  CASE WHEN epoch_us(o1.o_orderdate) - epoch_us(r.od)
-        |         <= 7776000000000 THEN r.p END AS prev_price
-        |FROM orders o1 ASOF LEFT JOIN r
-        |  ON o1.o_custkey = r.ck AND o1.o_orderdate > r.od
-        |ORDER BY o1.o_orderkey""".stripMargin,
+    "j19_asof_exec" -> asOfOracleSql,
 
 
-    // Same oracle as j19_asof_exec, verbatim: the bucketed layout must
-    // not change the answer (and matching both gates to one oracle pins
-    // j20 == j19 transitively).
-    "j20_asof_bucketed" ->
-      """WITH r AS (
-        |  SELECT o_custkey AS ck, o_orderdate AS od,
-        |    MAX(o_totalprice) AS p
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT o1.o_orderkey,
-        |  CASE WHEN epoch_us(o1.o_orderdate) - epoch_us(r.od)
-        |         <= 7776000000000 THEN r.od END AS prev_date,
-        |  CASE WHEN epoch_us(o1.o_orderdate) - epoch_us(r.od)
-        |         <= 7776000000000 THEN r.p END AS prev_price
-        |FROM orders o1 ASOF LEFT JOIN r
-        |  ON o1.o_custkey = r.ck AND o1.o_orderdate > r.od
-        |ORDER BY o1.o_orderkey""".stripMargin
+    // Same oracle as j19_asof_exec: the bucketed layout must not change
+    // the answer (and matching both gates to one oracle pins j20 == j19
+    // transitively).
+    "j20_asof_bucketed" -> asOfOracleSql
   )
 }

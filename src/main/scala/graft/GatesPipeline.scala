@@ -85,6 +85,37 @@ private[graft] object GatesPipeline {
           .as("n_valid"))
       .orderBy(col("query_id"))
 
+  /** The temperature-sampling gates' answer: per language, the realized
+    * keep threshold (out of 10000) and the docs and chars kept. */
+  private def temperatureKept(s: SparkSession, dir: String,
+      alpha: Double): DataFrame =
+    Sampling.temperatureMixture(
+      Tables.documents(s, dir), col("lang"), col("doc_id"), alpha = alpha)
+      .groupBy(col("lang"))
+      .agg(max(col("__thr")).as("thr"),
+        count(lit(1)).as("docs_kept"),
+        sum(col("n_chars")).as("chars_kept"))
+      .orderBy(col("lang"))
+
+  /** The depth-tier induction gates' units: every non-empty document cut
+    * into 128-char chunks. */
+  private def docChunks(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .filter(length(col("text")) > 0)
+      .select(explode(transform(
+        sequence(lit(1), length(col("text")), lit(128)),
+        i => col("text").substr(i, lit(128)))).as("unit"))
+
+  /** A depth-tier gate's ledger in merge order, required to hold at least
+    * `min` learned merges. */
+  private def deepLedger(gate: String, min: Long, ledger: DataFrame)
+      : DataFrame = {
+    val led = ledger.orderBy(col("merge_idx")).localCheckpoint(true)
+    require(led.count() >= min,
+      s"$gate: learned ${led.count()} merges, need >= $min")
+    led
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── Balanced per-source cap: at most 10 docs per source by portable
@@ -212,26 +243,14 @@ private[graft] object GatesPipeline {
     // T=2) — per-lang keep rates sqrt(n_min/n_lang), md5-hash accept.
     // thr audits the realized rate (out of 10000) per stratum.
     "sample_temperature" -> ((s, dir) =>
-      Sampling.temperatureMixture(
-        Tables.documents(s, dir), col("lang"), col("doc_id"), alpha = 0.5)
-        .groupBy(col("lang"))
-        .agg(max(col("__thr")).as("thr"),
-          count(lit(1)).as("docs_kept"),
-          sum(col("n_chars")).as("chars_kept"))
-        .orderBy(col("lang"))),
+      temperatureKept(s, dir, alpha = 0.5)),
 
 
     // ── Sampling: second certified alpha (0.25 ≡ T=4/3 flattening) — the
     // exponent 0.75 decomposes to sqrt(r)*sqrt(sqrt(r)), every step
     // IEEE-exact, so T≠2 settings don't rest on uncertified libm pow
     "sample_temperature_a25" -> ((s, dir) =>
-      Sampling.temperatureMixture(
-        Tables.documents(s, dir), col("lang"), col("doc_id"), alpha = 0.25)
-        .groupBy(col("lang"))
-        .agg(max(col("__thr")).as("thr"),
-          count(lit(1)).as("docs_kept"),
-          sum(col("n_chars")).as("chars_kept"))
-        .orderBy(col("lang"))),
+      temperatureKept(s, dir, alpha = 0.25)),
 
 
     // ── Embeddings: scalar transform pack (norms, moments, extrema)
@@ -379,19 +398,9 @@ private[graft] object GatesPipeline {
     // >= 256 actually learned, and the oracle replays candidate
     // ranking, greedy selection, fold application, and the ledger for
     // all 36 rounds.
-    "text_bpe_merges_large" -> ((s, dir) => {
-      val units = Tables.documents(s, dir)
-        .filter(length(col("text")) > 0)
-        .select(explode(transform(
-          sequence(lit(1), length(col("text")), lit(128)),
-          i => col("text").substr(i, lit(128)))).as("unit"))
-      val led = Bpe.mergesBatchedUnits(units, batches = 36, batchSize = 8,
-          window = 64)
-        .orderBy(col("merge_idx")).localCheckpoint(true)
-      require(led.count() >= 256,
-        s"text_bpe_merges_large: learned ${led.count()} merges, need >= 256")
-      led
-    }),
+    "text_bpe_merges_large" -> ((s, dir) => deepLedger(
+      "text_bpe_merges_large", 256, Bpe.mergesBatchedUnits(docChunks(s, dir),
+        batches = 36, batchSize = 8, window = 64))),
 
 
     // ── Text: XL-DEPTH BPE induction — the ≥1024-merge regime (r16
@@ -408,19 +417,9 @@ private[graft] object GatesPipeline {
     // up: 32-wide batches plateaued at 942 merges by 56 rounds) — and the
     // in-gate require pins >= 1024 actually learned (measured: 1,057 at
     // sf0.01, 1,064 at sf0.001).
-    "text_bpe_merges_xl" -> ((s, dir) => {
-      val units = Tables.documents(s, dir)
-        .filter(length(col("text")) > 0)
-        .select(explode(transform(
-          sequence(lit(1), length(col("text")), lit(128)),
-          i => col("text").substr(i, lit(128)))).as("unit"))
-      val led = Bpe.mergesBatchedUnits(units, batches = 40, batchSize = 64,
-          window = 768)
-        .orderBy(col("merge_idx")).localCheckpoint(true)
-      require(led.count() >= 1024,
-        s"text_bpe_merges_xl: learned ${led.count()} merges, need >= 1024")
-      led
-    }),
+    "text_bpe_merges_xl" -> ((s, dir) => deepLedger(
+      "text_bpe_merges_xl", 1024, Bpe.mergesBatchedUnits(docChunks(s, dir),
+        batches = 40, batchSize = 64, window = 768))),
 
 
     // ── Text: WORDPIECE greedy subword encode — the OTHER tokenizer
@@ -553,20 +552,9 @@ private[graft] object GatesPipeline {
     // scoring, the (score DESC, a, b) window, greedy selection, fold
     // application, and the telescoping symbol ledger for all rounds.
     // The in-gate require pins >= 256 actually learned.
-    "text_wordpiece_train_large" -> ((s, dir) => {
-      val units = Tables.documents(s, dir)
-        .filter(length(col("text")) > 0)
-        .select(explode(transform(
-          sequence(lit(1), length(col("text")), lit(128)),
-          i => col("text").substr(i, lit(128)))).as("unit"))
-      val led = WordPiece.learnVocabBatched(units, batches = 36,
-          batchSize = 8, window = 64)
-        .orderBy(col("merge_idx")).localCheckpoint(true)
-      require(led.count() >= 256,
-        s"text_wordpiece_train_large: learned ${led.count()} merges, " +
-          "need >= 256")
-      led
-    }),
+    "text_wordpiece_train_large" -> ((s, dir) => deepLedger(
+      "text_wordpiece_train_large", 256, WordPiece.learnVocabBatched(
+        docChunks(s, dir), batches = 36, batchSize = 8, window = 64))),
 
 
     // ── Text: TABLE-DRIVEN BPE ENCODE — the 10³–10⁵-merge tier's API:

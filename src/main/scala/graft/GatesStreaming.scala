@@ -5,7 +5,7 @@ import graft.functions.TextFns._
 import graft.functions.VectorFns
 import graft.multimodal.Multimodal
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming twins: real micro-batch execution of the
@@ -17,13 +17,27 @@ import org.apache.spark.sql.functions._
 private[graft] object GatesStreaming {
   import GateSupport._
 
-  /** The view and click legs of an event stream, as the interval-join
-    * gates (j1, j7, j7b, chained join -> agg) pair them. */
-  private[graft] def viewsClicks(ev: DataFrame): (DataFrame, DataFrame) = (
-    ev.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("v_ts")),
-    ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts")))
+  /** The interval-join gates' (j1, j7, j7b, chained join -> agg) join
+    * of an event stream: each view (v_user, v_ts) with its user's clicks
+    * (c_user, c_ts) in [v_ts, v_ts + 600 s]. */
+  private[graft] def viewClickJoin(ev: DataFrame,
+      joinType: String = "inner"): DataFrame =
+    Joins.intervalJoin(
+      ev.filter(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts").as("v_ts")),
+      ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("ts").as("c_ts")),
+      "v_user", "c_user", "v_ts", "c_ts", lowerSec = 0L, upperSec = 600L,
+      joinType = joinType)
+
+  /** The skew gates' staged input: the canonical event chunks with
+    * column `c` set to `hot` on even event ids and to `cold` on the rest. */
+  private def skewedChunks(s: SparkSession, dir: String, c: String,
+      hot: Column, cold: Column): Seq[DataFrame] =
+    graft.streaming.Sources.eventsSplitChunks(s, dir).map { f =>
+      s.read.parquet(f.getPath).withColumn(c,
+        when(pmod(col("event_id"), lit(2L)) === 0, hot).otherwise(cold))
+    }
 
   /** T2 streaming: per-key last-date ValueState dedup. Also the body of
     * the provider variant `stream_t2_uv_rocksdb` and the API variant
@@ -114,7 +128,7 @@ private[graft] object GatesStreaming {
   /** A change-feed gate's result: the serving state at `path` with its
     * fold count. */
   private def cdfResult(s: SparkSession, path: String, nTicks: Long,
-      extra: org.apache.spark.sql.Column*): DataFrame =
+      extra: Column*): DataFrame =
     s.read.parquet(path)
       .select(Seq(col("bucket"), col("cnt"),
         col("ps").cast("double").as("price_sum"),
@@ -632,21 +646,17 @@ private[graft] object GatesStreaming {
     // carry-over across batch boundaries is exercised under the skew.
     // ScaleGrowth's stream_uv_hotkey_state row quantifies the cost vs
     // the uniform twin; this gate pins the ANSWER doesn't move.
-    "stream_skew_hotkey" -> ((s, dir) => {
-      val chunks = graft.streaming.Sources.eventsSplitChunks(s, dir).map { f =>
-        s.read.parquet(f.getPath).withColumn("user_id",
-          when(pmod(col("event_id"), lit(2L)) === 0, lit(77777L))
-            .otherwise(col("user_id") + 100000L))
-      }
+    "stream_skew_hotkey" -> ((s, dir) =>
       withScratch("stream_skew_hotkey") { stage =>
         graft.streaming.StreamRunner.collect(
           graft.streaming.TwsStreams.uvDedup(
-            graft.streaming.Sources.stagedChunkStream(s, chunks, Some(stage))),
+            graft.streaming.Sources.stagedChunkStream(s, skewedChunks(s, dir,
+              "user_id", lit(77777L), col("user_id") + 100000L),
+              Some(stage))),
           statePartitions = 2)
           .select(col("user_id"), col("dt"), col("event_id"))
           .orderBy(col("user_id"), col("dt"))
-      }
-    }),
+      }),
 
 
     // ── Streaming exact dedup under at-least-once REPLAY: the staged
@@ -954,20 +964,15 @@ private[graft] object GatesStreaming {
     // collect_set(user_id) state — unlike the dedup's one-row-per-key
     // state, a hot windowed group's state GROWS with the hot share.
     // Complete-mode answer must equal the uniform replay of the remap.
-    "stream_skew_hotagg" -> ((s, dir) => {
-      val chunks = graft.streaming.Sources.eventsSplitChunks(s, dir).map { f =>
-        s.read.parquet(f.getPath).withColumn("event_type",
-          when(pmod(col("event_id"), lit(2L)) === 0, lit("hot_type"))
-            .otherwise(col("event_type")))
-      }
+    "stream_skew_hotagg" -> ((s, dir) =>
       withScratch("stream_skew_hotagg") { stage =>
         graft.streaming.StreamRunner.collect(
           graft.streaming.WindowedStreams.productStats(
-            graft.streaming.Sources.stagedChunkStream(s, chunks, Some(stage))),
+            graft.streaming.Sources.stagedChunkStream(s, skewedChunks(s, dir,
+              "event_type", lit("hot_type"), col("event_type")), Some(stage))),
           outputMode = "complete")
           .orderBy(col("stt"), col("event_type"))
-      }
-    }),
+      }),
 
 
     // ── The MITIGATION for the hot windowed group: the same hot-type
@@ -978,20 +983,15 @@ private[graft] object GatesStreaming {
     // per-salt sets are disjoint). Append mode: the oracle applies the
     // watermark cutoff (windows with end <= final wm), same as
     // stream_chained_agg.
-    "stream_skew_salted" -> ((s, dir) => {
-      val chunks = graft.streaming.Sources.eventsSplitChunks(s, dir).map { f =>
-        s.read.parquet(f.getPath).withColumn("event_type",
-          when(pmod(col("event_id"), lit(2L)) === 0, lit("hot_type"))
-            .otherwise(col("event_type")))
-      }
+    "stream_skew_salted" -> ((s, dir) =>
       withScratch("stream_skew_salted") { stage =>
         graft.streaming.StreamRunner.collect(
           graft.streaming.WindowedStreams.productStatsSalted(
-            graft.streaming.Sources.stagedChunkStream(s, chunks, Some(stage))),
+            graft.streaming.Sources.stagedChunkStream(s, skewedChunks(s, dir,
+              "event_type", lit("hot_type"), col("event_type")), Some(stage))),
           statePartitions = 1)
           .orderBy(col("stt"), col("event_type"))
-      }
-    }),
+      }),
 
 
     // ── Chained stateful aggregation (Spark 4 multiple stateful
@@ -1069,12 +1069,8 @@ private[graft] object GatesStreaming {
     // wm is the MIN across the two branch watermarks. The oracle applies
     // exactly that delayed cutoff.
     "stream_chained_join_agg" -> ((s, dir) => {
-      val ev = graft.streaming.Sources.eventsStreamSplit(s, dir)
-      val (views, clicks) = viewsClicks(ev)
       graft.streaming.StreamRunner.collect(
-        Joins.intervalJoin(
-            views, clicks, "v_user", "c_user", "v_ts", "c_ts",
-            lowerSec = 0L, upperSec = 600L)
+        viewClickJoin(graft.streaming.Sources.eventsStreamSplit(s, dir))
           .groupBy(window(col("v_ts"), "3600 seconds"))
           .agg(count(lit(1)).as("pair_ct")),
         statePartitions = 2)
@@ -1087,12 +1083,8 @@ private[graft] object GatesStreaming {
     // ── J1 streaming: stream-stream interval join (view -> click within
     // 600s per user), watermark-bounded state
     "stream_j1_interval_join" -> ((s, dir) => {
-      val ev = graft.streaming.Sources.eventsStream(s, dir)
-      val (views, clicks) = viewsClicks(ev)
       graft.streaming.StreamRunner.collect(
-        Joins.intervalJoin(
-          views, clicks, "v_user", "c_user", "v_ts", "c_ts",
-          lowerSec = 0L, upperSec = 600L),
+        viewClickJoin(graft.streaming.Sources.eventsStream(s, dir)),
         // 4 state stores x partitions x batches of pure commit I/O for
         // ~10 state rows: run narrow (AbDrift r12: j1_sp2 < j1_sp8)
         statePartitions = 2)
@@ -1108,12 +1100,8 @@ private[graft] object GatesStreaming {
     // watermark is the MIN across the two branch watermarks (view max vs
     // click max event time), which the oracle's cutoff mirrors.
     "stream_j7_interval_left" -> ((s, dir) => {
-      val ev = graft.streaming.Sources.eventsStream(s, dir)
-      val (views, clicks) = viewsClicks(ev)
       graft.streaming.StreamRunner.collect(
-        Joins.intervalJoin(
-          views, clicks, "v_user", "c_user", "v_ts", "c_ts",
-          lowerSec = 0L, upperSec = 600L, joinType = "leftOuter"),
+        viewClickJoin(graft.streaming.Sources.eventsStream(s, dir), "leftOuter"),
         statePartitions = 2)
         .groupBy(col("v_user").as("user_id"))
         .agg(count(col("c_ts")).as("pair_ct"),
@@ -1132,12 +1120,8 @@ private[graft] object GatesStreaming {
     // by exactly the join band). The oracle mirrors both cutoffs at ms
     // precision (EventTimeStats floors µs→ms).
     "stream_j7b_interval_full" -> ((s, dir) => {
-      val ev = graft.streaming.Sources.eventsStream(s, dir)
-      val (views, clicks) = viewsClicks(ev)
       graft.streaming.StreamRunner.collect(
-        Joins.intervalJoin(
-          views, clicks, "v_user", "c_user", "v_ts", "c_ts",
-          lowerSec = 0L, upperSec = 600L, joinType = "fullOuter"),
+        viewClickJoin(graft.streaming.Sources.eventsStream(s, dir), "fullOuter"),
         statePartitions = 2)
         .groupBy(coalesce(col("v_user"), col("c_user")).as("user_id"))
         .agg(

@@ -40,6 +40,25 @@ class GateKitSpec extends SparkSpec {
     assert(shmDirs("kit_returns").isEmpty && shmDirs("kit_throws").isEmpty)
   }
 
+  test("withScratch runs no job for a frame that is already materialized") {
+    import spark.implicits._
+    val ckpt = Seq(2L, 1L).toDF("x").localCheckpoint(true)
+    val jobs = new JobListener
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      jobs.tag = "scope"
+      val outs = Seq(
+        withScratch("kit_local") { _ => Seq(2L, 1L).toDF("x") },
+        withScratch("kit_ckpt") { _ => ckpt.orderBy(col("x")) })
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      jobs.tag = null
+      assert(jobs.jobs.isEmpty, jobs.jobs.map(_.site).mkString("; "))
+      outs.foreach(df =>
+        assert(df.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L)))
+    } finally spark.sparkContext.removeSparkListener(jobs)
+  }
+
   /** A 2-version store of 400 keys in 8 buckets with stats on `k`. */
   private def withStore(body: String => Unit): Unit = {
     val dir = testDir("graft-kit-store")
