@@ -238,8 +238,8 @@ private[graft] object GateSupport {
         col("minima_kept_ok"), col("some_dropped"))
   }
 
-  /** Harness hook (CurveSf1): drop the memo so a re-timed dedup gate pays
-    * its full pair scan again instead of reading the first trial's rows. */
+  /** Bench hook (its `dedup_pair_scan` row): drop the memo so the timed
+    * scan pays the full pair scan instead of reading an earlier run's rows. */
   private[graft] def clearNgramPairsMemo(): Unit = ngramPairsMemo.clear()
 
   private[graft] val MemoMaxPairs = 1 << 22

@@ -236,7 +236,7 @@ private[graft] object GatesGmall {
           graft.operators.LogPipeline.dropDeletes(
             graft.streaming.Sources.cdcDecode(
               graft.streaming.Sources.stagedChunkStream(
-                s, Seq(inserts, updates, deletes), Some(stagePath))),
+                s, Seq(inserts, updates, deletes), stagePath)),
             typeCol = "type"),
           "customer", payloadSchema)
         val q = graft.streaming.Sinks.dimUpsert(routed, dimPath, "c_custkey",

@@ -894,7 +894,8 @@ private[graft] object GatesMaintenance {
     // point/range probes on either dim, each pinned pruned_ok (strict
     // file subset) + equal_ok (== full-scan filter), values
     // oracle-replayed over the plain table. The hilbert-vs-zorder
-    // probed-file ratio is MEASURED in AbDrift (layout quality is a
+    // probed-file ratio (23 vs 26 files) is banked in BASELINE.md "r17:
+    // Hilbert vs z-order layout quality" (layout quality is a
     // measurement, not an oracle fact — equal tilings can tie).
     "k32_hilbert_multicol" -> ((s, dir) =>
         withScratch("k32_hilbert_multicol") { path =>
@@ -1582,7 +1583,8 @@ private[graft] object GatesMaintenance {
 
     // same probes, same truth: the clustering key (hilbert vs morton)
     // must never change ANSWERS — only which files a probe opens, which
-    // the in-gate pruned_ok pins and AbDrift measures
+    // the in-gate pruned_ok pins and BASELINE.md "r17: Hilbert vs
+    // z-order layout quality" banks
     "k32_hilbert_multicol" -> xyProbeSql("(o_orderkey // 7) % 1024", xyProbes,
       "  CAST(1 AS BIGINT) AS pruned_ok, CAST(1 AS BIGINT) AS equal_ok"),
 

@@ -1066,8 +1066,9 @@ private[graft] object GatesPipeline {
     // billion-scale layout: the at-rest index stores m-byte PQ codes
     // PARTITIONED BY IVF cell, so a probe of 4/16 cells deserializes a
     // quarter of the files and the files hold codes, not vectors (~32×
-    // smaller scan than the raw IVF index — ScaleGrowth measures the
-    // byte ratio). Search = probe cells → ADC over only probed codes →
+    // smaller scan than the raw IVF index; SCALE.md "Composed IVF-PQ:
+    // probed bytes" banks the measured ratio, 14.1× at 1× and 21.1× at
+    // 10×). Search = probe cells → ADC over only probed codes →
     // exact-cosine re-rank of the shortlist. Same one-sided invariant
     // oracle as sim_topk_pq (both quantizers are data-learned): per
     // query — exactly k results, k distinct neighbors, dense ordered

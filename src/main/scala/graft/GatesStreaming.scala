@@ -49,7 +49,8 @@ private[graft] object GatesStreaming {
       graft.streaming.TwsStreams.uvDedup(
         graft.streaming.Sources.eventsStreamSplit(s, dir)),
       // RocksDB pays a per-store-instance open/commit premium; the
-      // 1.5k-row state wants width 2, not 8 (AbDrift r12 tws arms)
+      // 1.5k-row state wants width 2, not 8 (tws_uv_sp2 2.41 s vs sp8
+      // 2.60 s: BASELINE.md "r11 driver-run drift attribution")
       statePartitions = 2)
       .select(col("user_id"), col("dt"), col("event_id"))
       .orderBy(col("user_id"), col("dt"))
@@ -162,7 +163,7 @@ private[graft] object GatesStreaming {
       def part(i: Int) = facts.filter(pmod(col("o_custkey"), lit(3L)) === i)
       withScratch("stream_j14_temporal") { stage =>
         val stream = graft.streaming.Sources.stagedChunkStream(s,
-          Seq(part(0), part(1), part(2)), Some(stage))
+          Seq(part(0), part(1), part(2)), stage)
         graft.streaming.StreamRunner.collect(
           stream.join(hist,
             stream("o_custkey") === hist("c_custkey") &&
@@ -428,7 +429,7 @@ private[graft] object GatesStreaming {
           .StreamingQueryException => true }
       }
       val crashed = lifecycle(graft.streaming.Sources.stagedChunkStream(
-        s, Seq(c0, c1, c2), Some(stage)))
+        s, Seq(c0, c1, c2), stage))
       require(crashed,
         "stream_k31: the injected crash must kill lifecycle 1")
       require(Versioned.latest(store) == 3L,
@@ -644,15 +645,15 @@ private[graft] object GatesStreaming {
     // draining through one group iterator per micro-batch. Chunks reuse
     // the canonical ts-contiguous split (remapped per chunk), so state
     // carry-over across batch boundaries is exercised under the skew.
-    // ScaleGrowth's stream_uv_hotkey_state row quantifies the cost vs
-    // the uniform twin; this gate pins the ANSWER doesn't move.
+    // SCALE.md "Round-14: streaming hot-key skew" banks the cost vs the
+    // uniform twin; this gate pins the ANSWER doesn't move.
     "stream_skew_hotkey" -> ((s, dir) =>
       withScratch("stream_skew_hotkey") { stage =>
         graft.streaming.StreamRunner.collect(
           graft.streaming.TwsStreams.uvDedup(
             graft.streaming.Sources.stagedChunkStream(s, skewedChunks(s, dir,
               "user_id", lit(77777L), col("user_id") + 100000L),
-              Some(stage))),
+              stage)),
           statePartitions = 2)
           .select(col("user_id"), col("dt"), col("event_id"))
           .orderBy(col("user_id"), col("dt"))
@@ -680,11 +681,12 @@ private[graft] object GatesStreaming {
         val stream = graft.streaming.Sources.stagedChunkStream(s,
           Seq(part(0), part(1).unionByName(part(0)),
             part(2).unionByName(part(1))),
-          Some(stage))
+          stage)
         graft.streaming.StreamRunner.collect(
           graft.operators.Dedup.streamExactDedup(
             stream, Seq("event_id"), "ts", "35 days"),
-          // state is one tiny row per event_id: narrow width (AbDrift r12)
+          // state is one tiny row per event_id: narrow width (BASELINE.md
+          // "r11 driver-run drift attribution")
           statePartitions = 2)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("ct"),
@@ -969,7 +971,7 @@ private[graft] object GatesStreaming {
         graft.streaming.StreamRunner.collect(
           graft.streaming.WindowedStreams.productStats(
             graft.streaming.Sources.stagedChunkStream(s, skewedChunks(s, dir,
-              "event_type", lit("hot_type"), col("event_type")), Some(stage))),
+              "event_type", lit("hot_type"), col("event_type")), stage)),
           outputMode = "complete")
           .orderBy(col("stt"), col("event_type"))
       }),
@@ -988,7 +990,7 @@ private[graft] object GatesStreaming {
         graft.streaming.StreamRunner.collect(
           graft.streaming.WindowedStreams.productStatsSalted(
             graft.streaming.Sources.stagedChunkStream(s, skewedChunks(s, dir,
-              "event_type", lit("hot_type"), col("event_type")), Some(stage))),
+              "event_type", lit("hot_type"), col("event_type")), stage)),
           statePartitions = 1)
           .orderBy(col("stt"), col("event_type"))
       }),
@@ -1005,8 +1007,9 @@ private[graft] object GatesStreaming {
         graft.streaming.WindowedStreams.chainedStats(
           graft.streaming.Sources.eventsStreamSplit(s, dir)),
         // two tiny windowed-agg stores; run narrow (commit I/O dominates;
-        // AbDrift r13: sp1 3.37 s vs sp2 3.60 s vs RocksDB+changelog
-        // 4.25 s median — single store per operator wins for agg chains)
+        // sp1 3.37 s vs sp2 3.60 s vs RocksDB+changelog 4.25 s median —
+        // single store per operator wins for agg chains; BASELINE.md "r13
+        // chained-stream commit attribution")
         statePartitions = 1)
         .orderBy(col("stt"), col("event_type"))),
 
@@ -1027,7 +1030,8 @@ private[graft] object GatesStreaming {
           .dropDuplicatesWithinWatermark("event_id")
           .groupBy(window(col("ts"), "3600 seconds"), col("event_type"))
           .agg(count(lit(1)).as("ct")),
-        // AbDrift r13 agg-chain verdict: sp1 beats sp2 beats RocksDB
+        // agg-chain verdict: sp1 beats sp2 beats RocksDB (BASELINE.md
+        // "r13 chained-stream commit attribution")
         statePartitions = 1)
         .select(unix_micros(col("window.start")).as("stt_us"),
           col("event_type"), col("ct"))
@@ -1052,7 +1056,8 @@ private[graft] object GatesStreaming {
             max_by(col("event_type"),
               concat(lpad(col("ct").cast("string"), 12, "0"),
                 col("event_type"))).as("top_type")),
-        // AbDrift r13 agg-chain verdict: sp1 beats sp2 beats RocksDB
+        // agg-chain verdict: sp1 beats sp2 beats RocksDB (BASELINE.md
+        // "r13 chained-stream commit attribution")
         statePartitions = 1)
         .select(unix_micros(col("w.start")).as("stt_us"),
           col("top_type"), col("top_ct"))
@@ -1086,7 +1091,8 @@ private[graft] object GatesStreaming {
       graft.streaming.StreamRunner.collect(
         viewClickJoin(graft.streaming.Sources.eventsStream(s, dir)),
         // 4 state stores x partitions x batches of pure commit I/O for
-        // ~10 state rows: run narrow (AbDrift r12: j1_sp2 < j1_sp8)
+        // ~10 state rows: run narrow (j1_sp2 2.17 s < j1_sp8 2.40 s:
+        // BASELINE.md "r11 driver-run drift attribution")
         statePartitions = 2)
         .groupBy(col("v_user").as("user_id"))
         .agg(count(lit(1)).as("pair_ct"))

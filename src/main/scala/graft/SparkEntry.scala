@@ -25,10 +25,6 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** Harness hook (CurveSf1): see GateSupport.clearNgramPairsMemo. */
-  private[graft] def clearNgramPairsMemo(): Unit =
-    GateSupport.clearNgramPairsMemo()
-
   /** The full gate registry: six family objects, one map. Keys are
     * disjoint by construction (each gate lives in exactly one family
     * file); RegistrySpec pins disjointness and the query/oracle pairing. */

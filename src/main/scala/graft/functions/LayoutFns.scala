@@ -40,12 +40,4 @@ object LayoutFns {
     * per-file envelopes on every dimension. */
   def hilbert(bits: Int, dims: Column*): Column =
     call_function("graft_hilbert", (lit(bits) +: dims): _*)
-
-  /** [[zorderLayout]] with the Hilbert index as the clustering key. */
-  def hilbertLayout(df: DataFrame, files: Int, bits: Int,
-      dims: Column*): DataFrame =
-    df.withColumn("__h", hilbert(bits, dims: _*))
-      .repartitionByRange(files, col("__h"))
-      .sortWithinPartitions(col("__h"))
-      .drop("__h")
 }

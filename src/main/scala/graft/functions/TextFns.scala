@@ -62,13 +62,6 @@ object TextFns {
       .otherwise(
         (length(c) - length(regexp_replace(c, "[\\p{Punct}]", ""))).cast("double") / length(c))
 
-  /** Mean token length in characters. */
-  def meanTokenLen(c: Column): Column =
-    ExprUtil.bind(tokensWs(c)) { t =>
-      when(size(t) === 0, lit(0.0))
-        .otherwise(aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast("double") / size(t))
-    }
-
   /** Heuristic quality score in [0,1]: rewards mid-length docs, low
     * punctuation, presence of function words — the usual cheap pre-filters
     * a pretraining pipeline applies before expensive model scoring.

@@ -13,27 +13,11 @@ object VectorFns {
 
   /** Native codegen'd expressions (graft.expressions.*, registered by
     * GraftExtensions — every engine session comes from Sessions.tuned).
-    * The *Hof twins below are the pure-builtin formulations, kept for
-    * sessions without the extension and as cross-check oracles in tests;
-    * results are bit-identical (same accumulation order). */
+    * `ExpressionsSpec` pins them bit-identical to the pure-builtin
+    * `aggregate`/`zip_with` formulations (same accumulation order). */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
   def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
   def l2sq(a: Column, b: Column): Column = call_function("graft_l2sq", a, b)
-
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")))
-
-  def cosineHof(a: Column, b: Column): Column = dotHof(a, b) / (norm(a) * norm(b))
-
-  /** Squared L2 distance (HOF form). */
-  def l2sqHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double"); d * d
-    }), lit(0.0), (acc, x) => acc + x)
 
   /** Element-wise sum of two double arrays (for centroid accumulation). */
   def add(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x + y)

@@ -66,12 +66,6 @@ object Dedup {
         min(col("doc_id")).as("keeper_id"),
         count(lit(1)).as("copies"))
 
-  /** Exact dedup, returning surviving rows (keeper rows only). */
-  def exactKeepers(documents: DataFrame): DataFrame = {
-    val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    documents.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-  }
-
   /** Paragraph-level dedup (the CCNet/RefinedWeb pass that runs BELOW
     * document granularity): split each document on `sep`, keep the
     * globally FIRST occurrence of every paragraph — first = min

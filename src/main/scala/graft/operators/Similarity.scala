@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.VectorFns._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
@@ -26,17 +25,6 @@ object Similarity {
     * the bounded TopK aggregator (see [[rankTopK]]) — the scale path. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
     rankTopK(scoreAgainst(corpus, queries), k)
-
-  /** Window-formulation twin of [[bruteForceTopK]] — reference semantics
-    * for the parity spec only. Shuffles and SORTS every scored row per
-    * query; do not use at corpus scale. */
-  private[graft] def bruteForceTopKWindow(corpus: DataFrame, queries: DataFrame,
-      k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scoreAgainst(corpus, queries)
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
 
   private def scoreAgainst(corpus: DataFrame, queries: DataFrame): DataFrame = {
     val q = broadcast(queries.select(

@@ -64,10 +64,11 @@ object TfIdf {
     * once the result is drained, as Bench's hygiene pass does.
     *
     * `persistTf` defaults to SIZE-GATED because the cache write is not
-    * free: an in-JVM interleaved A/B (AbDrift, r10, 7 trials) measured
-    * persist at sf0.1 as a consistent LOSS — median 2.59 s vs 1.75 s
-    * without (every trial slower) — confirming the r9 driver-bench
-    * regression (1.63→2.16 s) was the persist, not load. At small input
+    * free: an in-JVM interleaved A/B (r10, 7 trials; BASELINE.md "r8→r9
+    * drift attribution") measured persist at sf0.1 as a consistent
+    * LOSS — median 2.59 s vs 1.75 s without (every trial slower) —
+    * confirming the r9 driver-bench regression (1.63→2.16 s) was the
+    * persist, not load. At small input
     * the cache write + block-manager bookkeeping cost more than the
     * second tokenization scan they avoid; at corpus scale the second
     * full scan dominates and the cache wins. `None` picks per input via

@@ -306,17 +306,8 @@ object Versioned {
       partCol: String, statsCols: Seq[String],
       dataSchema: Option[StructType] = None): DataFrame = {
     val rd = dataSchema.fold(spark.read)(s0 => spark.read.schema(s0))
-    filePartsOf(rd.parquet(path).drop(PartDir), partCol, statsCols)
-  }
-
-  /** The manifest-row aggregation of [[fileParts]] over an ALREADY-OPEN
-    * frame (physical column names) — shared with [[backfillStats]],
-    * which recomputes stats for files that already belong to a
-    * committed snapshot instead of freshly-written ones. Fresh rows
-    * carry no dv. */
-  private def filePartsOf(df: DataFrame,
-      partCol: String, statsCols: Seq[String]): DataFrame = {
-    val base = df
+    // fresh files carry no dv
+    val base = rd.parquet(path).drop(PartDir)
       .groupBy(input_file_name().as("file"),
         col(partCol).cast("string").as("part"))
     val noDv = lit(null).cast(ArrayType(StringType)).as("dv")
@@ -1274,58 +1265,6 @@ object Versioned {
     commitManifest(spark, dst, 1L,
       readManifest(spark, src, v), readSchema(src, v))
     1L
-  }
-
-  /** BACKFILL stats manifests for the latest snapshot — the write-path
-    * knob behind stats-on-maintenance-only stores (r16 verdict task 1):
-    * a write-heavy path merges with NO stats (each commit's manifest
-    * scan is count-only), and this pass — scheduled with [[compact]] /
-    * [[vacuum]] — commits a NEW version whose manifest carries the full
-    * min/max + Bloom envelope for every `statsCols` column (logical
-    * names) across EVERY file of the snapshot, with zero data movement.
-    * Files already carrying the requested stats are recomputed anyway
-    * (one pass, uniform manifest — the scan is the cost either way and
-    * the envelopes come out identical because data files are immutable).
-    * Point/range reads at the new version prune exactly as if every
-    * commit had carried stats; prior versions keep their own manifests.
-    *
-    * At 100 TB this is one column-pruned scan of the snapshot's stats
-    * columns — strictly cheaper than a compaction rewrite, amortized
-    * across the merges that skipped per-commit stats collection. */
-  def backfillStats(spark: SparkSession, dir: String, partCol: String,
-      statsCols: Seq[String]): Long = {
-    require(statsCols.nonEmpty,
-      "Versioned.backfillStats: no stats columns requested")
-    val v = latest(dir)
-    val next = v + 1
-    val sch = readSchema(dir, v)
-    val m = mapping(sch)
-    val mDf = readManifest(spark, dir, v)
-    val fd = mDf.select(col("file"), col("dv"))
-    val fdRows = fd.collect()
-    val files = fdRows.map(_.getString(0)).distinct.toIndexedSeq
-    val physPart = m.getOrElse(partCol, partCol)
-    val fresh =
-      if (files.isEmpty) mDf // all-deletes tail: nothing to describe
-      else {
-        // raw PHYSICAL read of the snapshot's files (stats describe
-        // physical columns; [[pruneFiles]] probes by physical name)
-        val raw = spark.read.schema(physicalSchema(sch))
-          .parquet(files.map(Manifest.unglob): _*)
-        val stats = filePartsOf(raw, physPart,
-          statsCols.map(c => m.getOrElse(c, c)).distinct)
-        // deletion vectors MUST carry forward: a backfilled manifest
-        // without the prior rows' dv arrays would resurrect tombstoned
-        // rows (the recomputed envelopes still cover deleted keys — a
-        // valid over-approximation; the dv is the correctness bit)
-        val dvd = fdRows.filter(!_.isNullAt(1)).distinct
-        if (dvd.isEmpty) stats
-        else stats.drop("dv").join(spark.createDataFrame(
-          java.util.Arrays.asList(dvd.toIndexedSeq: _*), fd.schema),
-          Seq("file"), "left")
-      }
-    commitManifest(spark, dir, next, fresh, sch)
-    next
   }
 
   /** RENAME a column — a metadata-only commit (the Delta column-mapping

@@ -31,7 +31,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   *    partial). `.skipPastLastEvent` = Flink's SKIP_PAST_LAST_EVENT:
   *    once a match completes, every live partial (all started at or
   *    before the match's last event) is discarded silently and the
-  *    completing event cannot seed a new partial.
+  *    completing event cannot seed a new partial. Flink's SKIP_TO_FIRST
+  *    and SKIP_TO_LAST have no method here: they differ from these two
+  *    only when the engine forks epsilon branches, which this NFA does
+  *    not (next bullet), so any approximation would return wrong match
+  *    sets.
   *  - Deliberate divergence from Flink: the optional chain is
   *    DETERMINISTIC first-match — when an event satisfies an optional
   *    step, the branch takes it and does not also fork a skipped-it
@@ -96,30 +100,6 @@ object Cep {
     def optional: Pattern = mutateLast(_.copy(minReps = 0))
     /** Flink's AfterMatchSkipStrategy.skipPastLastEvent. */
     def skipPastLastEvent: Pattern = copy(skipPast = true)
-    /** Flink's SKIP_TO_FIRST — deliberately UNSUPPORTED, loudly. Its
-      * semantics ("drop partials that started before the first event of
-      * the named sub-pattern of the just-completed match") only
-      * distinguish themselves from noSkip/skipPastLastEvent when the
-      * engine forks epsilon branches, which this NFA deliberately does
-      * not (see the object doc: deterministic first-match optionals).
-      * Silently approximating would return wrong match sets; callers get
-      * an exception instead, with the rationale attached. */
-    def skipToFirst(stepName: String): Pattern =
-      throw new UnsupportedOperationException(
-        s"AfterMatchSkip SKIP_TO_FIRST('$stepName') is not supported: its " +
-          "semantics depend on Flink's epsilon-forking branch model, which " +
-          "this engine deliberately omits (deterministic first-match " +
-          "optionals — see Cep doc + SCALE.md). Use noSkip (default) or " +
-          "skipPastLastEvent.")
-    /** Flink's SKIP_TO_LAST — deliberately UNSUPPORTED, loudly (same
-      * rationale as [[skipToFirst]]). */
-    def skipToLast(stepName: String): Pattern =
-      throw new UnsupportedOperationException(
-        s"AfterMatchSkip SKIP_TO_LAST('$stepName') is not supported: its " +
-          "semantics depend on Flink's epsilon-forking branch model, which " +
-          "this engine deliberately omits (deterministic first-match " +
-          "optionals — see Cep doc + SCALE.md). Use noSkip (default) or " +
-          "skipPastLastEvent.")
     def within(sec: Long): Pattern = copy(withinSec = sec)
     private[Cep] def withinUs: Long = withinSec * 1000000L
   }

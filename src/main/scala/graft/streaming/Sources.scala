@@ -89,28 +89,6 @@ object Sources {
       .select(from_json(col("after"), payloadSchema).as("r"))
       .select(col("r.*"))
 
-  /** S3 initial mode, both phases: apply the snapshot to the dim store
-    * (through the same envelope decode), then start the incremental
-    * envelope stream into the same store. The phase boundary needs no
-    * coordination: Sinks.upsertBatch is (key, version)-idempotent, so
-    * binlog rows already reflected in the snapshot — or re-delivered on
-    * replay — converge instead of regressing. `raw` is the incremental
-    * envelope transport (kafka value strings / file stream / MemoryStream).
-    */
-  def cdcInitialToDim(snapshot: DataFrame, database: String, table: String,
-      raw: DataFrame, payloadSchema: StructType, path: String, keyCol: String,
-      versionCol: String, checkpoint: String,
-      buckets: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val snapRows = cdcAfter(
-      cdcDecode(cdcSnapshotEnvelopes(snapshot, database, table)
-        .select(to_json(struct(col("database"), col("tableName"), col("before"),
-          col("after"), col("type"))).as("value"))),
-      table, payloadSchema)
-    Sinks.upsertBatch(snapRows, path, keyCol, Some(versionCol), buckets)
-    Sinks.dimUpsert(cdcAfter(cdcDecode(raw), table, payloadSchema),
-      path, keyCol, checkpoint, Some(versionCol), buckets = buckets)
-  }
-
   /** Streaming cannot infer a parquet schema, but hard-coding one binds the
     * engine to a single historical physical type of a fixture file (the
     * round-10 break: events regenerated NANOS → TIMESTAMP_MICROS). Instead,
@@ -224,16 +202,16 @@ object Sources {
   }
 
   /** Stage each bounded frame as ONE parquet chunk file (mtime-pinned in
-    * sequence order) in a fresh tmpfs dir, and read them back as a
+    * sequence order) in `stageDir`, which the caller owns and sweeps
+    * (a gate passes its `withScratch` dir), and read them back as a
     * `maxFilesPerTrigger=1` file stream — a deterministic multi-micro-batch
     * bounded stream for envelope/transport fixtures (the CDC gate's binlog
     * stand-in). All frames must share one schema; the file source's
     * mtime ordering makes chunk i exactly micro-batch i. */
   private[graft] def stagedChunkStream(spark: SparkSession,
-      chunks: Seq[DataFrame], stageDir: Option[String] = None): DataFrame = {
+      chunks: Seq[DataFrame], stageDir: String): DataFrame = {
     require(chunks.nonEmpty, "stagedChunkStream needs at least one chunk")
-    val stage = new java.io.File(stageDir.getOrElse(
-      s"$shmRoot/graft-envchunks-${System.nanoTime()}"))
+    val stage = new java.io.File(stageDir)
     stage.mkdirs()
     writeChunks(stage, chunks, "staged chunk")
     spark.readStream
@@ -243,24 +221,33 @@ object Sources {
   }
 
   /** Write each frame as ONE parquet file `dir/chunk-NN.parquet`
-    * (`coalesce(1)`, part file moved out of its temp dir, temp dir
-    * dropped), mtime pinned at `base + i·2 s`: the file source processes
-    * files in modification-time order, so chunk i is exactly
+    * ([[writeOneFile]]), mtime pinned at `base + i·2 s`: the file source
+    * processes files in modification-time order, so chunk i is exactly
     * micro-batch i. `what` names a chunk in the no-file error. */
   private def writeChunks(dir: java.io.File, frames: Seq[DataFrame],
       what: String): Unit = {
     val base = (System.currentTimeMillis() / 1000L) * 1000L
     frames.zipWithIndex.foreach { case (df, i) =>
-      val tmp = new java.io.File(dir, s"tmp-$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-      val part = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-        .find(_.getName.endsWith(".parquet")).getOrElse(
-          throw new IllegalStateException(s"$what $i produced no file"))
       val dest = new java.io.File(dir, f"chunk-$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      rmTree(tmp.getPath)
+      writeOneFile(df, dest, s"$what $i")
       dest.setLastModified(base + i * 2000L)
     }
+  }
+
+  /** Write `df` as the single parquet file `dest` (replacing it):
+    * `coalesce(1)` into a temp dir beside `dest`, part file moved into
+    * place, temp dir dropped. `what` names the frame in the no-file
+    * error. */
+  private[graft] def writeOneFile(df: DataFrame, dest: java.io.File,
+      what: String): Unit = {
+    val tmp = new java.io.File(dest.getParentFile, s".tmp-${dest.getName}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+    val part = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+      .find(_.getName.endsWith(".parquet")).getOrElse(
+        throw new IllegalStateException(s"$what produced no file"))
+    java.nio.file.Files.move(part.toPath, dest.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    rmTree(tmp.getPath)
   }
 
   private def splitStream(spark: SparkSession, dir: String, parts: Int,

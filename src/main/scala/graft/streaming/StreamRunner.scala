@@ -34,8 +34,9 @@ object StreamRunner {
     * requires the RocksDB provider, and changelog checkpointing makes each
     * commit ship the batch's changelog instead of a full snapshot
     * (snapshots move to background maintenance) — the production posture
-    * for frequent small commits, and measured faster here too (AbDrift
-    * r12: tws_uv_changelog 2.33 s vs 2.60 s median without). */
+    * for frequent small commits, and measured faster here too
+    * (tws_uv_changelog 2.33 s vs 2.60 s median without: BASELINE.md "r11
+    * driver-run drift attribution"). */
   private[graft] val RocksDbConf: Seq[(String, String)] = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

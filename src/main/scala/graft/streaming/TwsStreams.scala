@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.time.Duration
-
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
@@ -117,8 +115,8 @@ object TwsStreams {
     * bounded `Trigger.AvailableNow` run never terminates — measured: 101
     * no-data micro-batches and climbing on the 4-chunk gate source. TTL
     * is a live-deployment knob, structurally unusable in a bounded
-    * harness; `ttlExpiry` below (and TwsSpec) proves the expiry
-    * semantics themselves under an explicitly-stopped query instead.
+    * harness; TwsSpec's `TtlProbe` fixture proves the expiry semantics
+    * themselves under an explicitly-stopped query instead.
     * Correctness never depended on it: a new day always differs from the
     * stored date, so the calendar-day compare subsumes the 24h TTL. */
   private class UvDedupProcessor
@@ -279,35 +277,6 @@ object TwsStreams {
   def sessionStats(events: DataFrame, gapSec: Long): DataFrame =
     keyed(events, new SessionProcessor(gapSec * 1000000L), TimeMode.EventTime())
       .toDF("user_id", "stt_us", "n_events")
-
-  /** TTL probe for the spec: per input row, report whether the keyed
-    * ValueState (TTL-bound) still existed when the row arrived, then
-    * refresh it. ProcessingTime mode — the only mode TTL is assignable
-    * in — which is exactly why this lives behind an explicitly-stopped
-    * MemoryStream spec and NOT a gate (see UvDedupProcessor's note: in
-    * this mode a bounded AvailableNow run never terminates). */
-  private class TtlProbeProcessor(ttl: Duration)
-      extends StatefulProcessor[Long, Event, (Long, Long, Boolean)] {
-    @transient private var v: ValueState[String] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      v = getHandle.getValueState[String]("v", Encoders.STRING,
-        TTLConfig(ttl))
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[(Long, Long, Boolean)] = {
-      val out = sorted(rows).map { e =>
-        val had = v.exists()
-        v.update("seen")
-        (key, e.event_id, had)
-      }
-      out.iterator
-    }
-  }
-
-  def ttlProbe(events: DataFrame, ttl: Duration): DataFrame =
-    keyed(events, new TtlProbeProcessor(ttl), TimeMode.ProcessingTime())
-      .toDF("user_id", "event_id", "had_state")
 
   case class TokState(tok: Long, lastTick: Long)
   case class Admit(k: Long, event_id: Long, accepted: Boolean)

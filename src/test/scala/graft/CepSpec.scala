@@ -296,17 +296,6 @@ class CepSpec extends SparkSpec {
       Seq((1L, 2L, 2, true), (3L, 3L, 1, false)))
   }
 
-  test("skipToFirst/skipToLast reject loudly — epsilon-branch semantics are out of scope") {
-    val p = Cep.Pattern.begin("a")(_.event_type == "a")
-      .followedBy("b")(_.event_type == "b")
-    val e1 = intercept[UnsupportedOperationException](p.skipToFirst("b"))
-    assert(e1.getMessage.contains("SKIP_TO_FIRST") &&
-      e1.getMessage.contains("epsilon"))
-    val e2 = intercept[UnsupportedOperationException](p.skipToLast("b"))
-    assert(e2.getMessage.contains("SKIP_TO_LAST") &&
-      e2.getMessage.contains("epsilon"))
-  }
-
   test("quantified patterns: streaming == batch under the final-watermark cutoff") {
     val events = Tables.events(spark, dir)
     val wmMs = events.agg(max(unix_micros(col("ts")))).as[Long].head() / 1000L

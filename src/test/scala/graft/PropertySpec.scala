@@ -28,17 +28,6 @@ class PropertySpec extends SparkSpec {
         .map(_.mkString(" "))))
   } yield texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
 
-  test("exact dedup is idempotent: dedup(dedup(x)) == dedup(x)") {
-    forAll(docGen) { docs =>
-      val df = docs.toDF("doc_id", "text")
-      val once = Dedup.exactKeepers(df)
-      val twice = Dedup.exactKeepers(once)
-      assert(once.count() === twice.count())
-      assert(once.select("doc_id").as[Long].collect().sorted
-        === twice.select("doc_id").as[Long].collect().sorted)
-    }
-  }
-
   test("splits are cluster-atomic for ANY pair graph (no near-dup leakage)") {
     // random pair graphs → clusters → leakageSafeSplits: every connected
     // component must land in exactly one split, whatever the graph shape

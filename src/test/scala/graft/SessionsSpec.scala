@@ -101,7 +101,8 @@ class SessionsSpec extends SparkSpec {
       val out = streaming.StreamRunner.collect(
         streaming.Sources.stagedChunkStream(spark, Seq(
           Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-          Seq((3L, "a")).toDF("id", "v"))).groupBy(col("v")).count(),
+          Seq((3L, "a")).toDF("id", "v")), testDir("graft-envchunks"))
+          .groupBy(col("v")).count(),
         outputMode = "complete", statePartitions = 2)
       org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
       assert(out.orderBy(col("v")).as[(String, Long)].collect().toSeq ===

@@ -128,7 +128,15 @@ class SimilaritySpec extends SparkSpec {
 
   test("TopK aggregator == window row_number top-k (same rows, same order)") {
     val queries = emb.filter(col("vec_id") < 5)
-    val win = Similarity.bruteForceTopKWindow(emb, queries, k = 5)
+    // the reference: score every (query, corpus) pair, self-matches
+    // excluded, and rank per query with a sorted window
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("neighbor_id"))
+    val win = emb.join(broadcast(queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb"))), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        graft.functions.VectorFns.cosine(col("q_emb"), col("embedding")).as("cos"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
       .select("query_id", "rank", "neighbor_id")
       .as[(Long, Int, Long)].collect().sorted
     val agg = Similarity.bruteForceTopK(emb, queries, k = 5)

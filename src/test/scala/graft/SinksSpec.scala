@@ -98,34 +98,6 @@ class SinksSpec extends SparkSpec {
     assert(got === truth)
   }
 
-  test("cdcInitialToDim runs both phases through one store (S3 end-to-end)") {
-    import graft.streaming.Sources
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.types._
-    val root = testDir("graft-cdc2")
-    val path = s"$root/dim"
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType), StructField("ver", LongType)))
-    val snapshot = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "name", "ver")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[String]
-    val q = Sources.cdcInitialToDim(snapshot, "gmall", "dim",
-      mem.toDF().select(col("value")), schema, path, "id", "ver",
-      s"$root/ckpt")
-    try {
-      // snapshot phase applied synchronously before the stream started
-      val afterSnap = spark.read.parquet(path).select("id").as[Long].collect().toSet
-      assert(afterSnap === Set(1L, 2L))
-      mem.addData(
-        """{"database":"gmall","tableName":"dim","before":null,"after":"{\"id\":2,\"name\":\"b2\",\"ver\":2}","type":"update"}""",
-        """{"database":"gmall","tableName":"dim","before":null,"after":"{\"id\":3,\"name\":\"c\",\"ver\":2}","type":"create"}""")
-      q.processAllAvailable()
-      val got = spark.read.parquet(path).select("id", "name").as[(Long, String)]
-        .collect().toMap
-      assert(got === Map(1L -> "a", 2L -> "b2", 3L -> "c"))
-    } finally q.stop()
-  }
-
   test("kafkaValue packs all columns into a JSON value column (K1)") {
     val v = Sinks.kafkaValue(Seq((1L, "x")).toDF("id", "name"))
     assert(v.columns.toSeq === Seq("value"))

@@ -28,7 +28,12 @@ import scala.jdk.CollectionConverters._
   * probe idioms, in `GateSupport`: a gate takes its scratch dir from
   * `withScratch` (named for the gate, materialized, swept on every exit)
   * and its probe summaries from `probeSums`, so no gate builds a
-  * `System.nanoTime()` path, calls `rmTree(` or defines a `summarize`. */
+  * `System.nanoTime()` path, calls `rmTree(` or defines a `summarize`.
+  *
+  * The library has four mains: `Verify` (the correctness dump), `Bench`
+  * (the one timing loop), `ProfGate` (one gate, inspected) and `Synth`
+  * (the R× replica Bench runs over). A new measurement is a gate, a
+  * Bench run or a spec, not another main with its own timing loop. */
 class StoreLayoutGuardSpec extends AnyFunSuite {
 
   /** Every `src/main/scala` file other than `exempt`, with its lines. */
@@ -95,5 +100,15 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
         line.matches(""".*\bdef summarize\b.*"""))
       .filter(_.startsWith("src/main/scala/graft/Gates"))
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no library file but the four harness mains defines a main") {
+    val mains = Set("Bench.scala", "Verify.scala", "ProfGate.scala",
+      "Synth.scala")
+    val found = sources("").collect {
+      case (p, lines) if !mains(p.getFileName.toString) &&
+          lines.exists(_.contains("def main(")) => p.toString
+    }
+    assert(found.isEmpty, found.sorted.mkString("\n"))
   }
 }

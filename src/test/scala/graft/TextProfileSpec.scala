@@ -6,6 +6,14 @@ import org.apache.spark.sql.functions._
 class TextProfileSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Mean token length in characters: the HOF reference for the
+    * profile's `mean_tok_len` field. */
+  private def meanTokenLen(c: org.apache.spark.sql.Column) =
+    graft.functions.ExprUtil.bind(TextFns.tokensWs(c)) { t =>
+      when(size(t) === 0, lit(0.0))
+        .otherwise(aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast("double") / size(t))
+    }
+
   test("single-pass profile is bit-identical to the HOF metric chain") {
     val docs = Seq(
       "The quick brown fox, jumps over the lazy dog! It is a good day.",
@@ -17,7 +25,7 @@ class TextProfileSpec extends SparkSpec {
     val both = docs.select(
       call_function("graft_text_profile", col("text")).as("p"),
       TextFns.tokenCount(col("text")).cast("long").as("h_n"),
-      TextFns.meanTokenLen(col("text")).as("h_mean"),
+      meanTokenLen(col("text")).as("h_mean"),
       TextFns.stopwordRatio(TextFns.tokensWs(col("text"))).as("h_sw"),
       TextFns.punctRatio(col("text")).as("h_punct"),
       TextFns.qualityScore(col("text")).as("h_q")).collect()

@@ -214,13 +214,13 @@ class TwsSpec extends SparkSpec {
       // commits at full speed during the TTL pauses.
       val expired = runBatches(batches, pauseMs = 1000L,
           awaitCounts = Seq(1L, 2L, 4L), triggerMs = 100L)(
-          d => TwsStreams.ttlProbe(d, Duration.ofMillis(300)))
+          d => graft.streaming.TtlProbe(d, Duration.ofMillis(300)))
         .collect().map(r => r.getLong(1) -> r.getBoolean(2)).toMap
       assert(expired == Map(1L -> false, 2L -> false, 3L -> false,
         4L -> true))
       val kept = runBatches(batches,
           awaitCounts = Seq(1L, 2L, 4L), triggerMs = 100L)(
-          d => TwsStreams.ttlProbe(d, Duration.ofHours(1)))
+          d => graft.streaming.TtlProbe(d, Duration.ofHours(1)))
         .collect().map(r => r.getLong(1) -> r.getBoolean(2)).toMap
       assert(kept == Map(1L -> false, 2L -> true, 3L -> true, 4L -> true))
     }

@@ -344,58 +344,6 @@ class VersionedSpec extends SparkSpec {
     } finally rm(dir)
   }
 
-  test("backfillStats: stats-less writes then ONE maintenance commit — " +
-    "probes prune at the new version, answers stay exact, zero data moves") {
-    val dir = tmpDir("backfill")
-    try {
-      val base = spark.range(0, 1600)
-        .select(col("id").as("k"), (col("id") * 7).as("v"),
-          (col("id") / 100).cast("long").as("bucket"))
-      // the write-heavy mode: NO stats collected on any write commit
-      Versioned.init(spark, dir, "bucket", base)
-      val src = base.filter(col("bucket").isin(3L, 11L) && col("k") % 5 === 0)
-        .withColumn("v", col("v") + 1).withColumn("op", lit("U"))
-      Versioned.merge(spark, dir, "bucket", "k", src)
-      // pre-backfill: a point probe has no envelopes — full file list
-      val full2 = Versioned.read(spark, dir, 2L)
-      val pPre = Versioned.readPoint(spark, dir, "k", 777L, 2L)
-      assert(pPre.inputFiles.length === full2.inputFiles.length,
-        "a stats-less store must fall back to the full file list")
-      // the maintenance pass: one commit, BOTH columns get envelopes
-      val dataBefore = manifestFiles(dir, 2L)
-      val v3 = Versioned.backfillStats(spark, dir, "bucket", Seq("k", "v"))
-      assert(v3 === 3L)
-      // zero data movement: v3 references exactly v2's files
-      assert(manifestFiles(dir, 3L) === dataBefore,
-        "backfill must not move or rewrite any data file")
-      val full3 = Versioned.read(spark, dir, 3L)
-      val all3 = full3.inputFiles.toSet
-      val r = Versioned.readRange(spark, dir, "k", 250L, 449L, 3L)
-      assert(r.inputFiles.length === 3, // exactly buckets 2, 3, 4
-        s"range read planned ${r.inputFiles.length} files post-backfill")
-      assert(r.inputFiles.toSet.subsetOf(all3))
-      assert(r.orderBy("k").collect().toSeq ===
-        full3.filter(col("k") >= 250 && col("k") <= 449)
-          .orderBy("k").collect().toSeq)
-      val p = Versioned.readPoint(spark, dir, "k", 777L, 3L)
-      assert(p.inputFiles.length <= 2, "point read should prune post-backfill")
-      assert(p.collect().toSeq ===
-        full3.filter(col("k") === 777).collect().toSeq)
-      // the SECOND backfilled column prunes too (multi-column manifest)
-      val pv = Versioned.readPoint(spark, dir, "v", 770L, 3L)
-      assert(pv.inputFiles.length < full3.inputFiles.length,
-        "the second stats column must also prune")
-      assert(pv.collect().toSeq ===
-        full3.filter(col("v") === 770L).collect().toSeq)
-      // prior versions keep their own (stats-less) manifests untouched
-      val pPost = Versioned.readPoint(spark, dir, "k", 777L, 2L)
-      assert(pPost.inputFiles.length === full2.inputFiles.length)
-      // snapshot content is IDENTICAL across the backfill commit
-      assert(full3.orderBy("k").collect().toSeq ===
-        full2.orderBy("k").collect().toSeq)
-    } finally rm(dir)
-  }
-
   test("compact: packs small files into a committed version; prior " +
     "versions read byte-identically, later merges re-split packed files, " +
     "vacuum reclaims the fragments") {
@@ -604,37 +552,33 @@ class VersionedSpec extends SparkSpec {
         Seq((255L, 2L)).toDF("k", "bucket"))
       assert(Versioned.read(spark, dir, v3).count() === 795L)
       assert(Versioned.changes(spark, dir, 2L, 3L, "k").count() === 1L)
-      // backfillStats must CARRY the dv (else deletes resurrect)
-      val v4 = Versioned.backfillStats(spark, dir, "bucket", Seq("k", "v"))
-      assert(Versioned.read(spark, dir, v4).count() === 795L)
-      assert(Versioned.readPoint(spark, dir, "k", 255L, v4).count() === 0L)
       // a merge touching bucket 2 MATERIALIZES its DVs: deleted keys stay
       // gone, fresh files carry no dv, untouched bucket 7 keeps its dv
-      val v5 = Versioned.merge(spark, dir, "bucket", "k",
+      val v4 = Versioned.merge(spark, dir, "bucket", "k",
         Seq((202L, 99999L, 2L, "U")).toDF("k", "v", "bucket", "op"),
         statsCol = Some("k"))
+      val r4 = Versioned.read(spark, dir, v4)
+      assert(r4.count() === 795L)
+      assert(r4.filter(col("k").isin(201L, 217L, 233L, 255L, 707L))
+        .count() === 0L)
+      assert(r4.filter(col("v") === 99999L).count() === 1L)
+      // compact materializes the rest (bucket 7's dv)
+      val v5 = Versioned.compact(spark, dir, "bucket",
+        statsCol = Some("k"), maxGroupRows = 400L)
       val r5 = Versioned.read(spark, dir, v5)
       assert(r5.count() === 795L)
-      assert(r5.filter(col("k").isin(201L, 217L, 233L, 255L, 707L))
-        .count() === 0L)
-      assert(r5.filter(col("v") === 99999L).count() === 1L)
-      // compact materializes the rest (bucket 7's dv)
-      val v6 = Versioned.compact(spark, dir, "bucket",
-        statsCol = Some("k"), maxGroupRows = 400L)
-      val r6 = Versioned.read(spark, dir, v6)
-      assert(r6.count() === 795L)
-      assert(r6.filter(col("k") === 707L).count() === 0L)
-      val m6 = spark.read.parquet(Versioned.manifestDir(dir, v6))
-      assert(m6.filter(col("dv").isNotNull).count() === 0L,
+      assert(r5.filter(col("k") === 707L).count() === 0L)
+      val m5 = spark.read.parquet(Versioned.manifestDir(dir, v5))
+      assert(m5.filter(col("dv").isNotNull).count() === 0L,
         "a full compact must materialize every deletion vector away")
       // vacuum to the materialized version: dv dirs are all unreferenced
       // now and must be reclaimed; the retained read is unchanged
-      Versioned.vacuum(spark, dir, retainFrom = v6)
+      Versioned.vacuum(spark, dir, retainFrom = v5)
       val dvRoot = new java.io.File(s"$dir/dv")
       assert(!dvRoot.exists() ||
         Option(dvRoot.listFiles()).getOrElse(Array.empty).isEmpty,
         "vacuum must reclaim tombstone dirs no retained manifest references")
-      assert(Versioned.read(spark, dir, v6).count() === 795L)
+      assert(Versioned.read(spark, dir, v5).count() === 795L)
     } finally rm(dir)
   }
 
@@ -850,47 +794,6 @@ class VersionedSpec extends SparkSpec {
         .filter(col("k").isin(5L, 6L)).count() === 0L,
         "clone vacuum must never delete source tombstones")
     } finally { rm(src); rm(dst) }
-  }
-
-  test("backfillStats scan is COLUMN-PRUNED: the snapshot read touches " +
-    "partCol + stats columns only, never the payload") {
-    val dir = tmpDir("backfill-prune")
-    val plans = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = { plans.add(qe.executedPlan.toString); () }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    try {
-      val base = spark.range(0, 400)
-        .select(col("id").as("k"),
-          concat(lit("payload-"), col("id"),
-            lit("x" * 64)).as("fat_payload"),
-          pmod(col("id"), lit(4L)).as("bucket"))
-      Versioned.init(spark, dir, "bucket", base)
-      spark.listenerManager.register(listener)
-      Versioned.backfillStats(spark, dir, "bucket", Seq("k"))
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      // the stats scan over the snapshot's data files: at 100 TB this is
-      // the whole cost of the backfill, so reading the payload column
-      // would turn a narrow maintenance pass into a full-table read
-      val dataScans = plans.asScala
-        .flatMap(_.linesIterator.filter(l =>
-          l.contains("FileScan") && l.contains("/data/v=")))
-      assert(dataScans.nonEmpty, "no data-file scan observed")
-      assert(dataScans.forall(!_.contains("fat_payload")),
-        s"backfill scan must not read the payload:\n${dataScans.mkString("\n")}")
-      assert(dataScans.exists(l => l.contains("k") && l.contains("bucket")),
-        s"backfill scan must read the stats + part columns:\n" +
-          dataScans.mkString("\n"))
-    } finally {
-      spark.listenerManager.unregister(listener)
-      rm(dir)
-    }
   }
 
   test("pointer commits race safely: put-if-absent pointers, no rename " +

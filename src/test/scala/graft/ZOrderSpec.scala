@@ -248,8 +248,12 @@ class ZOrderSpec extends SparkSpec {
     }
     val (zX, zY) = envelopes(
       LayoutFns.zorderLayout(grid, 16, 6, col("x"), col("y")))
-    val (hX, hY) = envelopes(
-      LayoutFns.hilbertLayout(grid, 16, 6, col("x"), col("y")))
+    // zorderLayout's tiling with the Hilbert index as the clustering key
+    val (hX, hY) = envelopes(grid
+      .withColumn("__h", LayoutFns.hilbert(6, col("x"), col("y")))
+      .repartitionByRange(16, col("__h"))
+      .sortWithinPartitions(col("__h"))
+      .drop("__h"))
     // unit-step locality: the Hilbert tiles' total envelope must not be
     // worse than Morton's on either dim (typically strictly better on
     // at least one — banked in BASELINE.md rather than over-pinned here)

@@ -29,7 +29,7 @@ class StagedChunkSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       val out = StreamRunner.collect(
-        Sources.stagedChunkStream(spark, chunks))
+        Sources.stagedChunkStream(spark, chunks, testDir("graft-envchunks")))
       org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
       // union-complete
       assert(out.orderBy(col("id")).as[(Long, String)].collect().toSeq ==
@@ -42,6 +42,6 @@ class StagedChunkSpec extends SparkSpec {
 
   test("empty chunk list is rejected") {
     intercept[IllegalArgumentException](
-      Sources.stagedChunkStream(spark, Seq.empty))
+      Sources.stagedChunkStream(spark, Seq.empty, testDir("graft-envchunks")))
   }
 }

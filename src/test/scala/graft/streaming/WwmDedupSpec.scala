@@ -32,7 +32,7 @@ class WwmDedupSpec extends SparkSpec {
       // A re-arrives after the purge (≥ wm, not late) → re-emitted
       chunk(("A", "2024-01-01 10:05:31")))
     val out = StreamRunner.collect(
-      Sources.stagedChunkStream(spark, chunks)
+      Sources.stagedChunkStream(spark, chunks, testDir("graft-wwm"))
         .withWatermark("ts", "10 seconds")
         .dropDuplicatesWithinWatermark("k")
         .select(col("k")),
@@ -50,9 +50,9 @@ class WwmDedupSpec extends SparkSpec {
       (s"k${rnd.nextInt(40)}", s"2024-01-01 10:${10 + rnd.nextInt(40)}:00"))
     val frames = rows.grouped(100).map(g => chunk(g: _*)).toSeq
     def run(f: DataFrame => DataFrame): Set[String] = {
-      // fresh stage per run — stagedChunkStream names dirs by nanoTime
+      // fresh stage per run
       StreamRunner.collect(
-        f(Sources.stagedChunkStream(spark, frames)
+        f(Sources.stagedChunkStream(spark, frames, testDir("graft-wwm"))
           .withWatermark("ts", "2 hours")),
         statePartitions = 2)
         .select(col("k")).as[String].collect().toSeq.sorted.toSet
